@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.functions.dates import future_dates, proleptic_ordinal
+from datawarehousefinal_spark.materialize import materialized
 from datawarehousefinal_spark.operators.analytics import time_ordered_split
 
 SEED = 42
@@ -191,37 +192,22 @@ def fit_preprocess(
     df: DataFrame,
     exclude: tuple[str, ...] = (),
     output_col: str = "features",
-    persist: bool = True,
 ) -> tuple[PipelineModel, DataFrame]:
     """Fit the M1-M5 pipeline on ``df`` and return (model, transformed df
     with the ``features`` column and intermediates dropped).
 
-    ``persist=True`` (default) marks both the imputed input and the
-    returned feature frame MEMORY_AND_DISK: the pipeline's estimator
-    stages each scan the input, and every downstream consumer (KMeans
-    iterations, CV folds, evaluators) re-scans the output — without a
-    persist each of those passes recomputes the whole upstream plan from
-    the source scan. Persisting iterative-ML inputs is standard Spark ML
-    practice at any scale (MEMORY_AND_DISK spills, never OOMs); pass
-    ``persist=False`` for one-shot transforms.
+    The imputed input is persisted for the fit (each estimator stage
+    scans it) and released before returning. The returned frame is
+    lazy: a consumer that re-scans it (KMeans iterations, CV folds,
+    evaluators) pins it with :func:`materialize.materialized`.
     """
     numeric, categorical = split_feature_types(df, exclude)
     filled = impute_most_frequent(df, categorical)
-    if persist:
-        filled = filled.persist()
-    model = build_preprocessor(numeric, categorical, output_col).fit(filled)
+    with materialized(filled) as pinned:
+        model = build_preprocessor(numeric, categorical, output_col).fit(pinned)
     out = model.transform(filled)
     helpers = [c for c in out.columns if c.startswith("__")]
-    out = out.drop(*helpers)
-    if persist:
-        # materialize the feature frame, then release the intermediate —
-        # otherwise both frames stay pinned for the session lifetime and
-        # repeated fits accumulate dead cache. Callers own `out`'s
-        # lifecycle (unpersist it when done).
-        out = out.persist()
-        out.count()
-        filled.unpersist()
-    return model, out
+    return model, out.drop(*helpers)
 
 
 # ---------------------------------------------------------------------------
@@ -702,8 +688,9 @@ def embedding_tabular_classifier(
     # (each scans it) and released before returning; the returned
     # predictions re-derive features lazily from ``df`` — no cache leak.
     feature_model = Pipeline(stages=stages).fit(df)
-    feats = label_stage.transform(feature_model.transform(df)).persist()
-    try:
+    with materialized(
+        label_stage.transform(feature_model.transform(df))
+    ) as feats:
         input_dim = feats.select("__etc_features").head()["__etc_features"].size
         bottleneck = emb_dim * len(categorical) + len(numeric)
         layers = [input_dim, bottleneck, *hidden, n_classes]
@@ -714,8 +701,6 @@ def embedding_tabular_classifier(
             featuresCol="__etc_features",
             labelCol="label",
         ).fit(feats)
-    finally:
-        feats.unpersist()
     model = PipelineModel(stages=[*feature_model.stages, label_stage, mlp])
     pred = model.transform(df)
     helpers = [c for c in pred.columns if c.startswith("__")]
@@ -795,10 +780,9 @@ def rbf_svc_approx(
     # persist each rescan re-runs the Arrow projection kernel. Released
     # before returning; parallelism=4 overlaps the independent binary
     # fits (each underuses the cluster at post-lift widths).
-    lifted = random_fourier_features(
+    with materialized(random_fourier_features(
         train, features_col, "__rff", n_components, gamma, seed
-    ).persist()
-    try:
+    )) as lifted:
         w = {"weightCol": weight_col} if weight_col else {}
         svc = LinearSVC(
             featuresCol="__rff",
@@ -814,8 +798,6 @@ def rbf_svc_approx(
             parallelism=4,
             **w,
         ).fit(lifted)
-    finally:
-        lifted.unpersist()
 
     def transform_fn(df: DataFrame) -> DataFrame:
         out = ovr.transform(

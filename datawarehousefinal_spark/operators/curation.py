@@ -21,10 +21,13 @@ report is one DataFrame the caller materializes once.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from datawarehousefinal_spark.materialize import materialized
 from datawarehousefinal_spark.operators.dedup import _fan_out, exact_dedup
 from datawarehousefinal_spark.operators.incremental import (
     empty_minhash_store,
@@ -36,6 +39,7 @@ from datawarehousefinal_spark.operators.textstats import (
 )
 
 
+@contextmanager
 def curate_corpus(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -51,10 +55,9 @@ def curate_corpus(
     shingle_width: int = 5,
     val_pct: int = 1,
     seed: int = 42,
-    persist: bool = True,
     near_dup_mode: str = "greedy",
-) -> tuple[DataFrame, DataFrame]:
-    """Run the full curation funnel; returns ``(curated, report)``.
+) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """Run the full curation funnel; yields ``(curated, report)``.
 
     ``near_dup_mode`` picks the near-dup stage's semantics:
 
@@ -77,17 +80,12 @@ def curate_corpus(
     by the banding layer with an explicit error) — lowering ``num_hashes``
     below 16 requires lowering the banding parameters with it.
 
-    With ``persist`` (default), intermediate survivors cache at
-    MEMORY_AND_DISK: each stage's frame feeds both the next stage and the
-    report union, and the near-dup stage scans its input several times.
-    The entries are bounded by the corpus row count (ids + text) and live
-    until session teardown or LRU eviction; long-lived sessions invoking
-    the funnel repeatedly should pass ``persist=False`` and manage
-    caching themselves.
+    A context manager: the rule, exact-dedup and near-dedup survivors
+    are persisted for the block, because each stage's frame feeds both
+    the next stage and the report, and the near-dup stage scans its
+    input several times. They are released on exit, so materialize
+    what you need inside the block.
     """
-    def _maybe_persist(df: DataFrame) -> DataFrame:
-        return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
-
     length_ok = docs.filter(
         (F.length(text_col) >= min_chars) & (F.length(text_col) <= max_chars)
     )
@@ -102,64 +100,66 @@ def curate_corpus(
     rules = scored.filter(F.col("__q") >= min_quality)
     if allowed_langs is not None:
         rules = rules.filter(F.col("lang_pred").isin(allowed_langs))
-    rules = _maybe_persist(rules.drop("__q"))
 
-    exact = _maybe_persist(
-        exact_dedup(rules, text_col, [id_col], keep_count_col=None)
-    )
+    def near_dedup(exact: DataFrame) -> DataFrame:
+        if near_dup_mode == "greedy":
+            near, _delta = incremental_minhash_dedup(
+                exact,
+                empty_minhash_store(exact, id_col, num_hashes),
+                id_col,
+                text_col,
+                threshold=near_dup_threshold,
+                num_hashes=num_hashes,
+                bands=bands,
+                rows_per_band=rows_per_band,
+                shingle_width=shingle_width,
+            )
+            return near
+        if near_dup_mode == "transitive":
+            from datawarehousefinal_spark.operators.dedup import minhash_near_dupes
+            from datawarehousefinal_spark.operators.graph import resolve_duplicates
 
-    if near_dup_mode == "greedy":
-        near, _delta = incremental_minhash_dedup(
-            exact,
-            empty_minhash_store(exact, id_col, num_hashes),
-            id_col,
-            text_col,
-            threshold=near_dup_threshold,
-            num_hashes=num_hashes,
-            bands=bands,
-            rows_per_band=rows_per_band,
-            shingle_width=shingle_width,
-        )
-    elif near_dup_mode == "transitive":
-        from datawarehousefinal_spark.operators.dedup import minhash_near_dupes
-        from datawarehousefinal_spark.operators.graph import resolve_duplicates
-
-        pairs = minhash_near_dupes(
-            exact,
-            id_col,
-            text_col,
-            near_dup_threshold,
-            num_hashes,
-            bands,
-            rows_per_band,
-            shingle_width,
-        ).select("id_a", "id_b")
-        near = resolve_duplicates(exact, pairs, id_col)
-    else:
+            pairs = minhash_near_dupes(
+                exact,
+                id_col,
+                text_col,
+                near_dup_threshold,
+                num_hashes,
+                bands,
+                rows_per_band,
+                shingle_width,
+            ).select("id_a", "id_b")
+            return resolve_duplicates(exact, pairs, id_col)
         raise ValueError(
             f"near_dup_mode must be 'greedy' or 'transitive', got {near_dup_mode!r}"
         )
-    near = _maybe_persist(near)
 
-    bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(100))
-    curated = near.withColumn(
-        "split", F.when(bucket < val_pct, F.lit("val")).otherwise(F.lit("train"))
-    )
-
-    stages = [
-        ("00_input", docs),
-        ("01_length", length_ok),
-        ("02_rules", rules),
-        ("03_exact_dedup", exact),
-        ("04_near_dedup", near),
-    ]
-    report = None
-    for name, frame in stages:
-        row = frame.agg(F.count(F.lit(1)).alias("n_rows")).select(
-            F.lit(name).alias("stage"), "n_rows"
+    with (
+        materialized(rules.drop("__q")) as rules,
+        materialized(
+            exact_dedup(rules, text_col, [id_col], keep_count_col=None)
+        ) as exact,
+        materialized(near_dedup(exact)) as near,
+    ):
+        bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(100))
+        curated = near.withColumn(
+            "split", F.when(bucket < val_pct, F.lit("val")).otherwise(F.lit("train"))
         )
-        report = row if report is None else report.unionByName(row)
-    return curated, report
+
+        stages = [
+            ("00_input", docs),
+            ("01_length", length_ok),
+            ("02_rules", rules),
+            ("03_exact_dedup", exact),
+            ("04_near_dedup", near),
+        ]
+        report = None
+        for name, frame in stages:
+            row = frame.agg(F.count(F.lit(1)).alias("n_rows")).select(
+                F.lit(name).alias("stage"), "n_rows"
+            )
+            report = row if report is None else report.unionByName(row)
+        yield curated, report
 
 
 # ---------------------------------------------------------------------------
@@ -612,13 +612,14 @@ def stratified_split_exact(
     )
 
 
+@contextmanager
 def dsir_importance(
     raw: DataFrame,
     target: DataFrame,
     id_col: str,
     text_col: str,
     n_buckets: int = 4096,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every raw
     document by how much more likely its hashed-n-gram bag is under the
@@ -642,18 +643,10 @@ def dsir_importance(
     :func:`weighted_sample_exact` on ``exp(log_weight)`` or threshold
     on ``log_weight`` directly.
 
-    Persist lifecycle — BOUNDED LEAK, ACCEPTED: the two scoped persists
-    below (``hist``: one row per (doc, hit bucket); ``p_t``: ≤
-    ``n_buckets`` rows) are referenced by the returned lazy plan, so
-    the operator cannot unpersist them itself, and the caller cannot
-    reach them. They stay cached until session end or LRU eviction.
-    This is deliberate: the returned frame must remain a lazy,
-    composable, never-collected plan (materializing per-document
-    weights driver-side to enable an unpersist would be the real
-    scale-killer), and both frames are orders of magnitude smaller
-    than the token stream whose re-explosion they prevent. A long-lived
-    session re-running the face accumulates one bounded pair per run
-    under MEMORY_AND_DISK (evictable, never OOM-fatal).
+    A context manager: the yielded frame is a lazy, composable,
+    never-collected plan over two frames persisted for the block (the
+    per-document histogram and the target distribution) and released
+    on exit, so materialize what you need inside the block.
     """
     from datawarehousefinal_spark.operators.textstats import (
         whitespace_tokens,
@@ -683,54 +676,50 @@ def dsir_importance(
     # distribution, its total, and the scoring aggregate) derives from this
     # compact frame (≤ n_docs × n_buckets rows, in practice ~n_feats/doc),
     # so the token stream is never shuffled and never scanned twice.
-    # SCOPED PERSIST: without it, "derives from" becomes "re-explodes
-    # for" — hist has THREE lazy consumers (the scored main side, the
-    # q_r broadcast build, and q_r's total inside the scalar cross
-    # join), and p_t has two (broadcast build + total), so one action
-    # would re-run the uni+bigram explode of the raw corpus three times
-    # and of the target twice. Same double-consumption class as the r6
-    # repeated_span_report regression; the persisted frames are the
-    # bounded ones (histogram rows / ≤ n_buckets rows), never the token
-    # stream.
-    hist = (
-        feats(raw, with_id=True)
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("n_db"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    q_r = hist.groupBy("bucket").agg(F.sum("n_db").alias("ct_r"))
-    t_feats = feats(target, with_id=False)
-    p_t = (
-        t_feats.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("ct_t"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    totals = p_t.agg(F.sum("ct_t").alias("tot_t")).crossJoin(
-        q_r.agg(F.sum("ct_r").alias("tot_r"))
-    )
-    scored = (
-        hist.join(F.broadcast(p_t), "bucket", "left")
-        .join(F.broadcast(q_r), "bucket", "left")
-        .crossJoin(F.broadcast(totals))
-        .withColumn(
-            "__lw",
-            F.col("n_db").cast("double")
-            * (
-                F.log(
-                    (F.coalesce("ct_t", F.lit(0)) + F.lit(1.0))
-                    / (F.col("tot_t") + F.lit(float(n_buckets)))
-                )
-                - F.log(
-                    (F.coalesce("ct_r", F.lit(0)) + F.lit(1.0))
-                    / (F.col("tot_r") + F.lit(float(n_buckets)))
-                )
-            ),
+    # Pinned for the block: hist has THREE lazy consumers (the scored
+    # main side, the q_r broadcast build, and q_r's total inside the
+    # scalar cross join), and p_t has two (broadcast build + total), so
+    # unpinned one action would re-run the uni+bigram explode of the raw
+    # corpus three times and of the target twice.
+    with (
+        materialized(
+            feats(raw, with_id=True)
+            .groupBy(id_col, "bucket")
+            .agg(F.count(F.lit(1)).alias("n_db"))
+        ) as hist,
+        materialized(
+            feats(target, with_id=False)
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("ct_t"))
+        ) as p_t,
+    ):
+        q_r = hist.groupBy("bucket").agg(F.sum("n_db").alias("ct_r"))
+        totals = p_t.agg(F.sum("ct_t").alias("tot_t")).crossJoin(
+            q_r.agg(F.sum("ct_r").alias("tot_r"))
         )
-    )
-    return scored.groupBy(id_col).agg(
-        F.sum("n_db").alias("n_feats"),
-        F.sum("__lw").alias("log_weight"),
-    )
+        scored = (
+            hist.join(F.broadcast(p_t), "bucket", "left")
+            .join(F.broadcast(q_r), "bucket", "left")
+            .crossJoin(F.broadcast(totals))
+            .withColumn(
+                "__lw",
+                F.col("n_db").cast("double")
+                * (
+                    F.log(
+                        (F.coalesce("ct_t", F.lit(0)) + F.lit(1.0))
+                        / (F.col("tot_t") + F.lit(float(n_buckets)))
+                    )
+                    - F.log(
+                        (F.coalesce("ct_r", F.lit(0)) + F.lit(1.0))
+                        / (F.col("tot_r") + F.lit(float(n_buckets)))
+                    )
+                ),
+            )
+        )
+        yield scored.groupBy(id_col).agg(
+            F.sum("n_db").alias("n_feats"),
+            F.sum("__lw").alias("log_weight"),
+        )
 
 
 def unimax_allocation(

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.functions.textnorm import normalize_text
+from datawarehousefinal_spark.materialize import local_result, materialized
 
 
 def _fan_out(df: DataFrame) -> DataFrame:
@@ -283,50 +284,48 @@ def jaccard_for_pairs(
     # eager checkpoint (pairs are sparse by contract — the whole point
     # of candidate generation) stops the upstream banding pipeline from
     # running twice.
-    pairs = pairs.localCheckpoint(eager=True)
-    ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # The shingle frame feeds THREE consumers (per-doc sizes + both
-    # intersection-join sides); unpersisted, the scan→semi-join→fan-out→
-    # explode subtree replicates per consumer in the plan (4 Generate
-    # nodes — each re-shingling the pruned docs). Scoped persist, same
-    # discipline as _simhash_fp_pairs: the RESULT (one row per candidate
-    # pair — sparse by contract) is eagerly checkpointed before the
-    # finally releases the cache, so nothing downstream re-reads it and
-    # nothing outlives the call. The cached frame is candidate-sized
-    # (~2·|pairs| docs of shingles), never corpus-sized.
-    sh = _fan_out(df.join(ids, id_col, "semi")).select(
-        F.col(id_col), F.explode(char_shingles(text_col, shingle_width)).alias("__sh")
-    ).persist()
-    try:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
-        a = sh.select(F.col(id_col).alias("id_a"), F.col("__sh"))
-        b = sh.select(F.col(id_col).alias("id_b"), F.col("__sh"))
-        inter = (
-            pairs.join(a, "id_a")
-            .join(b, ["id_b", "__sh"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("__c"))
+    with materialized(pairs, checkpoint=True) as pairs:
+        ids = (
+            pairs.select(F.col("id_a").alias(id_col))
+            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
+            .distinct()
         )
-        na = sizes.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
-        nb = sizes.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
-        return (
-            inter.join(na, "id_a")
-            .join(nb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (F.col("__c") / (F.col("__na") + F.col("__nb") - F.col("__c"))).alias(
-                    "jaccard"
-                ),
+        # The shingle frame feeds THREE consumers (per-doc sizes + both
+        # intersection-join sides); unpersisted, the scan→semi-join→
+        # fan-out→explode subtree replicates per consumer in the plan (4
+        # Generate nodes — each re-shingling the pruned docs). The RESULT
+        # (one row per candidate pair — sparse by contract) is a local
+        # result, so nothing downstream re-reads the released cache. The
+        # cached frame is candidate-sized (~2·|pairs| docs of shingles),
+        # never corpus-sized.
+        with materialized(
+            _fan_out(df.join(ids, id_col, "semi")).select(
+                F.col(id_col),
+                F.explode(char_shingles(text_col, shingle_width)).alias("__sh"),
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        sh.unpersist()
+        ) as sh:
+            sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
+            a = sh.select(F.col(id_col).alias("id_a"), F.col("__sh"))
+            b = sh.select(F.col(id_col).alias("id_b"), F.col("__sh"))
+            inter = (
+                pairs.join(a, "id_a")
+                .join(b, ["id_b", "__sh"])
+                .groupBy("id_a", "id_b")
+                .agg(F.count(F.lit(1)).alias("__c"))
+            )
+            na = sizes.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
+            nb = sizes.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
+            return local_result(
+                inter.join(na, "id_a")
+                .join(nb, "id_b")
+                .select(
+                    "id_a",
+                    "id_b",
+                    (
+                        F.col("__c") / (F.col("__na") + F.col("__nb") - F.col("__c"))
+                    ).alias("jaccard"),
+                )
+            )
 
 
 def minhash_near_dupes(
@@ -619,18 +618,19 @@ def simhash_near_dupes(
     # banding, AND both expansion branches — without a persist the
     # full shingle-explode + 22-aggregate fingerprint pass replicates
     # once per consumer (7 scans in the physical plan). Fingerprints are
-    # (id, long) — ~24 bytes/doc, MEMORY_AND_DISK never OOMs.
-    fp = simhash(df, id_col, text_col, shingle_width).persist()
-    return simhash_near_dupes_from_fingerprints(
-        fp,
-        id_col,
-        max_hamming=max_hamming,
-        max_bucket=max_bucket,
-        num_blocks=num_blocks,
-        combo_size=combo_size,
-        exact_pair_cap=exact_pair_cap,
-        max_dropped_frac=max_dropped_frac,
-    )
+    # (id, long) — ~24 bytes/doc, MEMORY_AND_DISK never OOMs. The
+    # pairs are sparse by contract, so they return as a local result.
+    with materialized(simhash(df, id_col, text_col, shingle_width)) as fp:
+        return local_result(simhash_near_dupes_from_fingerprints(
+            fp,
+            id_col,
+            max_hamming=max_hamming,
+            max_bucket=max_bucket,
+            num_blocks=num_blocks,
+            combo_size=combo_size,
+            exact_pair_cap=exact_pair_cap,
+            max_dropped_frac=max_dropped_frac,
+        ))
 
 
 def _resolve_banding(
@@ -689,16 +689,14 @@ def _simhash_fp_pairs(
     keyed = simhash_combo_keys(distinct_fp, num_blocks, combo_size)
     # The counted frame feeds the guard aggregate AND both self-join
     # branches — three scans of the banding window unpersisted (measured
-    # +60% on the registered query). The persist is SCOPED: try/finally
-    # releases it whether the guard raises or the pair frame finishes,
-    # and the pair output is localCheckpoint-ed EAGERLY (it is the
-    # function's result — verified near-dup pairs, orders of magnitude
-    # smaller than the banding entries) so nothing downstream re-reads
-    # the cache after the unpersist.
-    counted = keyed.withColumn(
+    # +60% on the registered query). The persist is scoped: released
+    # whether the guard raises or the pair frame finishes, and the pair
+    # output is a local result (verified near-dup pairs, orders of
+    # magnitude smaller than the banding entries), so nothing downstream
+    # re-reads the cache after the release.
+    with materialized(keyed.withColumn(
         "__n", F.count(F.lit(1)).over(Window.partitionBy("table", "key"))
-    ).persist()
-    try:
+    )) as counted:
         if max_dropped_frac is not None:
             # "No silent caps": measure how much of the banding the skew
             # guard is about to throw away, and fail loudly when it is
@@ -726,7 +724,7 @@ def _simhash_fp_pairs(
         sized = counted.filter(F.col("__n") <= max_bucket)
         a = sized.select(F.col("simhash").alias("__fa"), "table", "key")
         b = sized.select(F.col("simhash").alias("__fb"), "table", "key")
-        return (
+        return local_result(
             a.join(b, ["table", "key"])
             .filter(F.col("__fa") < F.col("__fb"))
             .select(
@@ -739,10 +737,7 @@ def _simhash_fp_pairs(
             # collapses pairs that collided in several combo tables).
             .filter((F.col("hamming") > 0) & (F.col("hamming") <= max_hamming))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-    finally:
-        counted.unpersist()
 
 
 def simhash_near_dupes_from_fingerprints(
@@ -1193,7 +1188,7 @@ def repeated_span_report(
     # xxhash) is CPU-bound — a compact one-file corpus would otherwise
     # run it on one core (measured: the sf0.1 documents scan is a single
     # partition).
-    shingled = (
+    with materialized(
         _fan_out(df.filter(F.col(text_col).isNotNull()))
         .filter(F.size(toks) >= 1)
         .select(F.col(id_col), F.explode(pairs).alias("__s"))
@@ -1202,11 +1197,9 @@ def repeated_span_report(
         # the two consumers' exchanges differ (agg vs join side), so
         # exchange reuse does NOT dedup the explode — unpersisted it
         # computes twice (round-6 bench finding). Scoped persist, same
-        # pattern as _simhash_fp_pairs: released in finally after the
-        # (small, per-span) result is eagerly checkpointed.
-        .persist()
-    )
-    try:
+        # pattern as _simhash_fp_pairs: released once the (small,
+        # per-span) result is a local result.
+    ) as shingled:
         counts = shingled.groupBy("__gh").agg(F.count(F.lit(1)).alias("__cnt"))
         dup = (
             shingled.join(counts, "__gh")
@@ -1222,7 +1215,7 @@ def repeated_span_report(
                 wd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
             ),
         )
-        return islands.groupBy(id_col, "__island").agg(
+        return local_result(islands.groupBy(id_col, "__island").agg(
             F.min("__pos").cast("long").alias("start_tok"),
             (F.max("__pos") + (w - 1)).cast("long").alias("end_tok"),
             (F.max("__pos") + w - F.min("__pos")).cast("long").alias("n_tokens"),
@@ -1234,9 +1227,7 @@ def repeated_span_report(
             "end_tok",
             "n_tokens",
             "n_shingles",
-        ).localCheckpoint(eager=True)
-    finally:
-        shingled.unpersist()
+        ))
 
 
 def prefix_filter_jaccard_pairs(
@@ -1272,75 +1263,74 @@ def prefix_filter_jaccard_pairs(
     Output: id_a, id_b, jaccard — identical contract to the brute-force
     twin, so the same SQL oracle checks both.
     """
-    sh = (
-        _fan_out(df)
-        .select(
+    with materialized(
+        _fan_out(df).select(
             F.col(id_col).alias("__id"),
             F.explode(char_shingles(text_col, shingle_width)).alias("__sh"),
+        ),
+        checkpoint=True,
+    ) as sh:
+        freq = sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df"))
+        w_rank = Window.partitionBy("__id").orderBy("__df", "__sh")
+        w_size = Window.partitionBy("__id")
+        prefix = (
+            sh.join(freq, "__sh")
+            .withColumn("__rn", F.row_number().over(w_rank))
+            .withColumn("__n", F.count(F.lit(1)).over(w_size))
+            .filter(
+                F.col("__rn")
+                <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
+            )
+            # df = 1 prefix shingles can never pair (singleton posting
+            # list) — drop them BEFORE the self-join; on a mostly-unique
+            # shingle universe this removes the bulk of the join input.
+            .filter(F.col("__df") >= 2)
+            .select("__id", "__sh")
         )
-        .localCheckpoint(eager=True)
-    )
-    freq = sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df"))
-    w_rank = Window.partitionBy("__id").orderBy("__df", "__sh")
-    w_size = Window.partitionBy("__id")
-    prefix = (
-        sh.join(freq, "__sh")
-        .withColumn("__rn", F.row_number().over(w_rank))
-        .withColumn("__n", F.count(F.lit(1)).over(w_size))
-        .filter(
-            F.col("__rn")
-            <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-        )
-        # df = 1 prefix shingles can never pair (singleton posting
-        # list) — drop them BEFORE the self-join; on a mostly-unique
-        # shingle universe this removes the bulk of the join input.
-        .filter(F.col("__df") >= 2)
-        .select("__id", "__sh")
-    )
-    cand = (
-        prefix.select(F.col("__id").alias("id_a"), "__sh")
-        .join(prefix.select(F.col("__id").alias("id_b"), "__sh"), "__sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Verification touches only CANDIDATE documents: broadcast their id
-    # set and semi-filter the shingle frame map-side, so the two exact-
-    # intersection joins shuffle |candidate docs| × set size rows, never
-    # the whole corpus.
-    cand_ids = (
-        cand.select(F.col("id_a").alias("__id"))
-        .unionByName(cand.select(F.col("id_b").alias("__id")))
-        .distinct()
-    )
-    sh_cand = sh.join(F.broadcast(cand_ids), "__id", "left_semi")
-    sizes = sh_cand.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    inter = (
-        cand.join(
-            sh_cand.select(F.col("__id").alias("id_a"), "__sh"), "id_a"
-        )
-        .join(
-            sh_cand.select(
-                F.col("__id").alias("__idb"), F.col("__sh").alias("__shb")
-            ),
-            (F.col("id_b") == F.col("__idb"))
-            & (F.col("__sh") == F.col("__shb")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    na = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
-    nb = sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("__c") / (F.col("__na") + F.col("__nb") - F.col("__c"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+        with materialized(
+            prefix.select(F.col("__id").alias("id_a"), "__sh")
+            .join(prefix.select(F.col("__id").alias("id_b"), "__sh"), "__sh")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct(),
+            checkpoint=True,
+        ) as cand:
+            # Verification touches only CANDIDATE documents: broadcast their id
+            # set and semi-filter the shingle frame map-side, so the two exact-
+            # intersection joins shuffle |candidate docs| × set size rows, never
+            # the whole corpus.
+            cand_ids = (
+                cand.select(F.col("id_a").alias("__id"))
+                .unionByName(cand.select(F.col("id_b").alias("__id")))
+                .distinct()
+            )
+            sh_cand = sh.join(F.broadcast(cand_ids), "__id", "left_semi")
+            sizes = sh_cand.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
+            inter = (
+                cand.join(
+                    sh_cand.select(F.col("__id").alias("id_a"), "__sh"), "id_a"
+                )
+                .join(
+                    sh_cand.select(
+                        F.col("__id").alias("__idb"), F.col("__sh").alias("__shb")
+                    ),
+                    (F.col("id_b") == F.col("__idb"))
+                    & (F.col("__sh") == F.col("__shb")),
+                )
+                .groupBy("id_a", "id_b")
+                .agg(F.count(F.lit(1)).alias("__c"))
+            )
+            na = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
+            nb = sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
+            return local_result(
+                inter.join(na, "id_a")
+                .join(nb, "id_b")
+                .select(
+                    "id_a",
+                    "id_b",
+                    (
+                        F.col("__c") / (F.col("__na") + F.col("__nb") - F.col("__c"))
+                    ).alias("jaccard"),
+                )
+                .filter(F.col("jaccard") >= threshold)
+            )

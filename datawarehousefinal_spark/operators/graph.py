@@ -35,9 +35,13 @@ result, the standard discipline for iterative DataFrame algorithms.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from datawarehousefinal_spark.materialize import local_result, materialized, release
 
 
 #: Pair-count bound for the driver-side union-find fast path. 200k pairs
@@ -105,66 +109,59 @@ def connected_components(
     replay — so it is persisted here for the duration of the call
     unless the caller already persisted it (measured on the curation
     funnel: the unpersisted probe+collect replayed the full minhash
-    pipeline twice). Both return paths leave no lineage on ``pairs``:
-    the driver path materializes via collect, the distributed path via
-    ``localCheckpoint``.
+    pipeline twice). Both return paths leave no lineage on ``pairs``
+    and nothing pinned: the driver path rebuilds the collected
+    components, the distributed path returns the converged labels as a
+    local result and releases every round.
     """
-    owned = pairs.storageLevel == StorageLevel.NONE
-    if owned:
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    if small_graph_pairs > 0:
-        probe = pairs.limit(small_graph_pairs + 1).count()
-        if probe <= small_graph_pairs:
-            out = _components_driver(pairs, id_a, id_b)
-            if owned:
-                pairs.unpersist()
-            return out
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    sym = fwd.unionByName(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint()
-    )
-    if owned:
-        # labels is materialized (localCheckpoint) and sym is persisted;
-        # nothing re-reads the raw pair pipeline past this point
-        pairs.unpersist()
-    try:
-        for _ in range(max_iterations):
-            neighbor = (
-                sym.join(labels, sym.dst == labels.id)
-                .select(F.col("src").alias("id"), "component")
+    with materialized(pairs) as pairs:
+        if small_graph_pairs > 0:
+            probe = pairs.limit(small_graph_pairs + 1).count()
+            if probe <= small_graph_pairs:
+                return _components_driver(pairs, id_a, id_b)
+        fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        with materialized(
+            fwd.unionByName(
+                pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
             )
-            new_labels = (
-                labels.unionByName(neighbor)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
-                .localCheckpoint()  # truncate lineage — see module docstring
+        ) as sym:
+            labels = (
+                sym.select(F.col("src").alias("id"))
+                .distinct()
+                .withColumn("component", F.col("id"))
+                .localCheckpoint()
             )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                return labels
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds "
-            f"— the pair graph has a longer diameter than duplicate clusters "
-            f"produce; raise max_iterations or use a pointer-doubling variant."
-        )
-    finally:
-        # Converged labels are localCheckpoint-materialized, so the edge
-        # cache is safe to drop on BOTH exits — including the raise, which
-        # previously stranded it for the session lifetime.
-        sym.unpersist()
+            try:
+                for _ in range(max_iterations):
+                    neighbor = (
+                        sym.join(labels, sym.dst == labels.id)
+                        .select(F.col("src").alias("id"), "component")
+                    )
+                    new_labels = (
+                        labels.unionByName(neighbor)
+                        .groupBy("id")
+                        .agg(F.min("component").alias("component"))
+                        .localCheckpoint()  # truncate lineage — see module docstring
+                    )
+                    changed = (
+                        new_labels.alias("n")
+                        .join(labels.alias("o"), "id")
+                        .filter(F.col("n.component") != F.col("o.component"))
+                        .limit(1)
+                        .count()
+                    )
+                    # the probe materialized the new round: drop the old one
+                    release(labels)
+                    labels = new_labels
+                    if changed == 0:
+                        return local_result(labels)
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iterations} rounds "
+                    f"— the pair graph has a longer diameter than duplicate clusters "
+                    f"produce; raise max_iterations or use a pointer-doubling variant."
+                )
+            finally:
+                release(labels)
 
 
 def connected_components_stars(
@@ -202,89 +199,91 @@ def connected_components_stars(
     # pairs is read twice (edges, then the node universe), and the
     # candidate pipeline feeding it is expensive to replay — persist for
     # the duration unless the caller already did (same rationale as
-    # connected_components). Both consumers localCheckpoint (nodes too —
-    # the small extra job buys releasing the pair cache immediately
-    # instead of holding it until the final read-off join).
-    owned = pairs.storageLevel == StorageLevel.NONE
-    if owned:
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        pairs.select(F.col(id_a).alias("id"))
-        .unionByName(pairs.select(F.col(id_b).alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    if owned:
-        # both consumers are now materialized; the raw pipeline is done
-        pairs.unpersist()
-
-    def _fingerprint(e: DataFrame) -> tuple:
-        # bit_xor folds, not sum: XOR cannot overflow (sum of longs
-        # wraps, which ANSI mode would turn into a throw), and two
-        # independently-seeded hash folds make a false fixpoint on
-        # unequal edge sets practically impossible.
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h1"),
-            F.bit_xor(F.xxhash64("v", "u", F.lit(0x9E3779B9))).alias("h2"),
-        ).first()
-        return (row["n"], row["h1"], row["h2"])
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("__mv"))
-            .select("u", F.least("__mv", "u").alias("m"))
-        )
-        return (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    # connected_components). Both consumers localCheckpoint lazily: the
+    # first fingerprint job materializes edges, the read-off join nodes.
+    with materialized(pairs) as pairs:
+        edges = (
+            pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
+            .localCheckpoint()
         )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        directed = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = directed.groupBy("u").agg(F.min("v").alias("m"))
-        neighbor_edges = (
-            directed.join(mins, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        self_edges = mins.select(F.col("u"), F.col("m").alias("v"))
-        return (
-            neighbor_edges.unionByName(self_edges)
-            .filter(F.col("u") != F.col("v"))
+        nodes = (
+            pairs.select(F.col(id_a).alias("id"))
+            .unionByName(pairs.select(F.col(id_b).alias("id")))
             .distinct()
+            .localCheckpoint()
         )
 
-    fp = _fingerprint(edges)
-    for _ in range(max_iterations):
-        edges = _small_star(_large_star(edges)).localCheckpoint()
-        new_fp = _fingerprint(edges)
-        if new_fp == fp:
-            # Fixpoint: every edge is (member, root). Roots appear only
-            # on the v side; emit them as their own component rows.
-            members = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
-            return nodes.join(members, "id", "left").select(
-                "id", F.coalesce("component", F.col("id")).alias("component")
+        def _fingerprint(e: DataFrame) -> tuple:
+            # bit_xor folds, not sum: XOR cannot overflow (sum of longs
+            # wraps, which ANSI mode would turn into a throw), and two
+            # independently-seeded hash folds make a false fixpoint on
+            # unequal edge sets practically impossible.
+            row = e.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.bit_xor(F.xxhash64("u", "v")).alias("h1"),
+                F.bit_xor(F.xxhash64("v", "u", F.lit(0x9E3779B9))).alias("h2"),
+            ).first()
+            return (row["n"], row["h1"], row["h2"])
+
+        def _large_star(e: DataFrame) -> DataFrame:
+            sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            mins = (
+                sym.groupBy("u")
+                .agg(F.min("v").alias("__mv"))
+                .select("u", F.least("__mv", "u").alias("m"))
             )
-        fp = new_fp
-    raise RuntimeError(
-        f"connected_components_stars did not converge in {max_iterations} "
-        f"rounds — not expected for any graph at this round budget "
-        f"(O(log^2 n)); check for pathological id skew."
-    )
+            return (
+                sym.join(mins, "u")
+                .filter(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .filter(F.col("u") != F.col("v"))
+                .distinct()
+            )
+
+        def _small_star(e: DataFrame) -> DataFrame:
+            directed = e.select(
+                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            )
+            mins = directed.groupBy("u").agg(F.min("v").alias("m"))
+            neighbor_edges = (
+                directed.join(mins, "u")
+                .filter(F.col("v") != F.col("m"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            )
+            self_edges = mins.select(F.col("u"), F.col("m").alias("v"))
+            return (
+                neighbor_edges.unionByName(self_edges)
+                .filter(F.col("u") != F.col("v"))
+                .distinct()
+            )
+
+        try:
+            fp = _fingerprint(edges)
+            for _ in range(max_iterations):
+                new_edges = _small_star(_large_star(edges)).localCheckpoint()
+                new_fp = _fingerprint(new_edges)
+                release(edges)
+                edges = new_edges
+                if new_fp == fp:
+                    # Fixpoint: every edge is (member, root). Roots appear only
+                    # on the v side; emit them as their own component rows.
+                    members = edges.select(
+                        F.col("u").alias("id"), F.col("v").alias("component")
+                    )
+                    return local_result(nodes.join(members, "id", "left").select(
+                        "id", F.coalesce("component", F.col("id")).alias("component")
+                    ))
+                fp = new_fp
+            raise RuntimeError(
+                f"connected_components_stars did not converge in {max_iterations} "
+                f"rounds — not expected for any graph at this round budget "
+                f"(O(log^2 n)); check for pathological id skew."
+            )
+        finally:
+            release(edges)
+            release(nodes)
 
 
 def resolve_duplicates(
@@ -364,9 +363,10 @@ def incremental_components(
     )
 
 
+@contextmanager
 def triangle_count(
     edges: DataFrame, src: str, dst: str
-) -> tuple[DataFrame, DataFrame]:
+) -> Iterator[tuple[DataFrame, DataFrame]]:
     """Exact triangle counting over an undirected simple graph given as
     a pair list (self-loops and duplicate/reversed edges tolerated).
 
@@ -379,82 +379,83 @@ def triangle_count(
     join against the oriented edge set on (b, c) to close triangles.
     All counts are exact integers — merge-order-free, SQL-replayable.
 
-    Returns ``(per_node, totals)``: per-node triangle participation
+    Yields ``(per_node, totals)``: per-node triangle participation
     (node, n_triangles) and a 1-row frame (n_nodes, n_edges,
-    n_triangles). Beyond-reference: graph structure analytics over the
+    n_triangles). A context manager: both are lazy plans over frames
+    checkpointed for the block and released on exit. Beyond-reference: graph structure analytics over the
     near-dup / co-occurrence graphs the dedup stack emits.
     """
     # Materialize the two hot frames: canon feeds degree/orientation/
     # totals, and oriented feeds BOTH wedge sides plus the closing set —
     # without checkpoints the canonicalization re-executes per consumer.
-    canon = (
+    with materialized(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
             F.greatest(F.col(src), F.col(dst)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        canon.select(F.col("u").alias("node"))
-        .unionByName(canon.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    # Orient by (degree, id): a < b iff (deg(a), a) < (deg(b), b).
-    oriented = (
-        canon.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("a"), F.col("v").alias("b")),
-            )
-            .otherwise(
-                F.struct(F.col("v").alias("a"), F.col("u").alias("b"))
-            )
-            .alias("e")
+        .distinct(),
+        checkpoint=True,
+    ) as canon:
+        deg = (
+            canon.select(F.col("u").alias("node"))
+            .unionByName(canon.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
         )
-        .select("e.a", "e.b")
-        .localCheckpoint(eager=True)
-    )
-    wedges = (
-        oriented.alias("e1")
-        .join(oriented.alias("e2"), F.col("e1.a") == F.col("e2.a"))
-        .filter(F.col("e1.b") < F.col("e2.b"))
-        .select(
-            F.col("e1.a").alias("w0"),
-            F.col("e1.b").alias("w1"),
-            F.col("e2.b").alias("w2"),
-        )
-    )
-    closing = oriented.select(
-        F.col("a").alias("c1"), F.col("b").alias("c2")
-    ).unionByName(
-        oriented.select(F.col("b").alias("c1"), F.col("a").alias("c2"))
-    )
-    tris = wedges.join(
-        closing,
-        (F.col("w1") == F.col("c1")) & (F.col("w2") == F.col("c2")),
-        "left_semi",
-    )
-    per_node = (
-        tris.select(F.col("w0").alias("node"))
-        .unionByName(tris.select(F.col("w1").alias("node")))
-        .unionByName(tris.select(F.col("w2").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    totals = canon.agg(
-        F.count(F.lit(1)).alias("n_edges")
-    ).crossJoin(
-        deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-    ).crossJoin(tris.agg(F.count(F.lit(1)).alias("n_triangles")))
-    return per_node, totals
+        du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
+        dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
+        # Orient by (degree, id): a < b iff (deg(a), a) < (deg(b), b).
+        with materialized(
+            canon.join(du, "u")
+            .join(dv, "v")
+            .select(
+                F.when(
+                    (F.col("du") < F.col("dv"))
+                    | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
+                    F.struct(F.col("u").alias("a"), F.col("v").alias("b")),
+                )
+                .otherwise(
+                    F.struct(F.col("v").alias("a"), F.col("u").alias("b"))
+                )
+                .alias("e")
+            )
+            .select("e.a", "e.b"),
+            checkpoint=True,
+        ) as oriented:
+            wedges = (
+                oriented.alias("e1")
+                .join(oriented.alias("e2"), F.col("e1.a") == F.col("e2.a"))
+                .filter(F.col("e1.b") < F.col("e2.b"))
+                .select(
+                    F.col("e1.a").alias("w0"),
+                    F.col("e1.b").alias("w1"),
+                    F.col("e2.b").alias("w2"),
+                )
+            )
+            closing = oriented.select(
+                F.col("a").alias("c1"), F.col("b").alias("c2")
+            ).unionByName(
+                oriented.select(F.col("b").alias("c1"), F.col("a").alias("c2"))
+            )
+            tris = wedges.join(
+                closing,
+                (F.col("w1") == F.col("c1")) & (F.col("w2") == F.col("c2")),
+                "left_semi",
+            )
+            per_node = (
+                tris.select(F.col("w0").alias("node"))
+                .unionByName(tris.select(F.col("w1").alias("node")))
+                .unionByName(tris.select(F.col("w2").alias("node")))
+                .groupBy("node")
+                .agg(F.count(F.lit(1)).alias("n_triangles"))
+            )
+            totals = canon.agg(
+                F.count(F.lit(1)).alias("n_edges")
+            ).crossJoin(
+                deg.agg(F.count(F.lit(1)).alias("n_nodes"))
+            ).crossJoin(tris.agg(F.count(F.lit(1)).alias("n_triangles")))
+            yield per_node, totals
 
 
 def pagerank(
@@ -480,10 +481,11 @@ def pagerank(
 
     Each iteration's rank frame is ``localCheckpoint``-ed to truncate
     lineage (same discipline as :func:`connected_components` — without
-    it the logical plan doubles per round).
+    it the logical plan doubles per round), and the previous round is
+    released once the next is materialized.
 
-    Returns (node, rank); ranks sum to ~1 (dangling mass is
-    redistributed uniformly).
+    Returns (node, rank) as a local result; ranks sum to ~1 (dangling
+    mass is redistributed uniformly).
     """
     w_expr = (
         F.col(weight).cast("double") if weight else F.lit(1.0)
@@ -492,50 +494,63 @@ def pagerank(
     # transition frame both derive from it, and without this the
     # (potentially expensive) upstream edge-building plan executes
     # per derived checkpoint.
-    e = (
+    with materialized(
         edges.select(
             F.col(src).alias("src"), F.col(dst).alias("dst"), w_expr.alias("w")
-        )
-        .filter(F.col("w") > 0)
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    out_w = e.groupBy("src").agg(F.sum("w").alias("w_out"))
-    norm = e.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("w_out")).alias("p")
-    ).localCheckpoint(eager=True)
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    has_out = out_w.select(F.col("src").alias("node"))
-    for _ in range(iterations):
-        contrib = (
-            ranks.join(norm, ranks["node"] == norm["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("in_mass"))
-        )
-        dangling = (
-            ranks.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce("in_mass", F.lit(0.0)) + F.col("d") / n)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+        ).filter(F.col("w") > 0),
+        checkpoint=True,
+    ) as e:
+        out_w = e.groupBy("src").agg(F.sum("w").alias("w_out"))
+        with (
+            materialized(
+                e.select(F.col("src").alias("node"))
+                .unionByName(e.select(F.col("dst").alias("node")))
+                .distinct(),
+                checkpoint=True,
+            ) as nodes,
+            materialized(
+                e.join(out_w, "src").select(
+                    "src", "dst", (F.col("w") / F.col("w_out")).alias("p")
+                ),
+                checkpoint=True,
+            ) as norm,
+        ):
+            n = nodes.count()
+            has_out = out_w.select(F.col("src").alias("node"))
+
+            def step(ranks: DataFrame) -> DataFrame:
+                contrib = (
+                    ranks.join(norm, ranks["node"] == norm["src"])
+                    .groupBy(F.col("dst").alias("node"))
+                    .agg(F.sum(F.col("rank") * F.col("p")).alias("in_mass"))
+                )
+                dangling = (
+                    ranks.join(has_out, "node", "left_anti")
+                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
+                )
+                return (
+                    nodes.join(contrib, "node", "left")
+                    .crossJoin(F.broadcast(dangling))
+                    .select(
+                        "node",
+                        (
+                            F.lit((1.0 - damping) / n)
+                            + F.lit(damping)
+                            * (F.coalesce("in_mass", F.lit(0.0)) + F.col("d") / n)
+                        ).alias("rank"),
+                    )
+                )
+
+            ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+            try:
+                for _ in range(iterations - 1):
+                    new_ranks = step(ranks).localCheckpoint(eager=True)
+                    release(ranks)
+                    ranks = new_ranks
+                # the last round feeds the result's collect directly
+                return local_result(step(ranks) if iterations else ranks)
+            finally:
+                release(ranks)
 
 
 def khop_distances(
@@ -558,29 +573,41 @@ def khop_distances(
     iterations) keeps the result pure deterministic integer arithmetic,
     replayable as unrolled SQL CTEs.
 
-    Output: node, distance (0..max_hops; unreachable nodes absent).
+    Output: node, distance (0..max_hops; unreachable nodes absent), as
+    a local result.
     """
     spark = edges.sparkSession
-    sym = (
+    with materialized(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dist = spark.createDataFrame(
-        [(n, 0) for n in source_nodes], ["node", "distance"]
-    )
-    for _ in range(max_hops):
-        hop = (
-            dist.join(sym, dist["node"] == sym["a"])
-            .select(F.col("b").alias("node"), (F.col("distance") + 1).alias("distance"))
+        .distinct(),
+        checkpoint=True,
+    ) as sym:
+        def hop(dist: DataFrame) -> DataFrame:
+            reached = (
+                dist.join(sym, dist["node"] == sym["a"])
+                .select(
+                    F.col("b").alias("node"),
+                    (F.col("distance") + 1).alias("distance"),
+                )
+            )
+            return (
+                dist.unionByName(reached)
+                .groupBy("node")
+                .agg(F.min("distance").alias("distance"))
+            )
+
+        dist = spark.createDataFrame(
+            [(n, 0) for n in source_nodes], ["node", "distance"]
         )
-        dist = (
-            dist.unionByName(hop)
-            .groupBy("node")
-            .agg(F.min("distance").alias("distance"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
+        try:
+            for _ in range(max_hops - 1):
+                new_dist = hop(dist).localCheckpoint(eager=True)
+                release(dist)
+                dist = new_dist
+            # the last hop feeds the result's collect directly
+            return local_result(hop(dist) if max_hops else dist)
+        finally:
+            release(dist)

@@ -34,13 +34,10 @@ Reference scope: the reference has no dedup at all (SURVEY.md §2.3 J5 is
 an unwired Levenshtein step); this module is beyond-reference scale
 machinery in the same family as :mod:`operators.dedup`.
 
-Persist lifetime: the batch-signature and dropped-id frames persist
-(MEMORY_AND_DISK) because both returned outputs — (survivors, delta) —
-consume them; they are id-only/batch-bounded, and the blocks release via
-the ContextCleaner once the caller drops the returned frames. A caller
-holding many batches' outputs alive in one session should materialize
-(write) each batch's outputs and release the references — the
-foreachBatch sinks in :mod:`streaming.pipeline` already do.
+Persist lifetime: the batch signatures are persisted only for the
+ingest call. The dropped ids and the delta (both bounded by the batch)
+come back as local results, and survivors is a lazy plan over the
+batch, so nothing stays pinned once the call returns.
 """
 
 from __future__ import annotations
@@ -49,9 +46,9 @@ import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from datawarehousefinal_spark.functions.textnorm import normalize_text
+from datawarehousefinal_spark.materialize import local_result, materialized
 from datawarehousefinal_spark.operators.dedup import (
     _auto_combo_size,
     lsh_band_buckets,
@@ -219,73 +216,74 @@ def incremental_minhash_dedup(
     The store never shuffles on anything except its banded keys, and only
     (band, key, id) triples move for candidate generation.
     """
-    bsig = minhash_signature(
+    with materialized(minhash_signature(
         batch, id_col, text_col, num_hashes, shingle_width, hash_mode
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # -- within-batch tier (drop the larger id of each near-dup pair) -----
-    # Candidates come from the canonical banded self-join (shared with the
-    # full-corpus path) so the skew-guard semantics cannot drift.
-    wb_cand = lsh_candidate_pairs(bsig, id_col, bands, rows_per_band, max_bucket)
-    wb_dropped = (
-        wb_cand.join(_side(bsig, id_col, "a", num_hashes), "id_a")
-        .join(_side(bsig, id_col, "b", num_hashes), "id_b")
-        .filter(_est_jaccard(num_hashes) >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-
-    # -- cross tier (drop any batch doc near a store doc) -----------------
-    # Bootstrap short-circuit: with an EMPTY store (the first-ever batch)
-    # the cross tier is a no-op, but its plan still schedules a dozen
-    # stages of banding/joins over zero rows — skip it entirely. The
-    # isEmpty probe is one read-first-row job (instant on the local
-    # bootstrap relation, one footer read on a parquet store).
-    if store_sig.isEmpty():
-        dropped = wb_dropped.persist(StorageLevel.MEMORY_AND_DISK)
-        survivors = batch.join(dropped, id_col, "left_anti")
-        delta = bsig.join(dropped, id_col, "left_anti")
-        return survivors, delta
-
-    # Same banding, batch × store instead of self-join; both sides carry
-    # the max_bucket skew guard so a degenerate band on either side (e.g.
-    # the empty-document signature) cannot quadratically explode.
-    def capped_buckets(sig: DataFrame) -> DataFrame:
-        b = lsh_band_buckets(sig, id_col, bands, rows_per_band)
-        return b.withColumn(
-            "__n", F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
-        ).filter(F.col("__n") <= max_bucket).drop("__n")
-
-    cross_cand = (
-        capped_buckets(bsig).select(F.col(id_col).alias("id_b"), "band", "key")
-        .join(
-            capped_buckets(store_sig).select(
-                F.col(id_col).alias("id_a"), "band", "key"
-            ),
-            ["band", "key"],
+    )) as bsig:
+        # -- within-batch tier (drop the larger id of each near-dup pair) -----
+        # Candidates come from the canonical banded self-join (shared with the
+        # full-corpus path) so the skew-guard semantics cannot drift.
+        wb_cand = lsh_candidate_pairs(bsig, id_col, bands, rows_per_band, max_bucket)
+        wb_dropped = (
+            wb_cand.join(_side(bsig, id_col, "a", num_hashes), "id_a")
+            .join(_side(bsig, id_col, "b", num_hashes), "id_b")
+            .filter(_est_jaccard(num_hashes) >= threshold)
+            .select(F.col("id_b").alias(id_col))
+            .distinct()
         )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    cross_dropped = (
-        cross_cand.join(_side(store_sig, id_col, "a", num_hashes), "id_a")
-        .join(_side(bsig, id_col, "b", num_hashes), "id_b")
-        .filter(_est_jaccard(num_hashes) >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
 
-    # ``dropped`` feeds BOTH anti-joins — without a persist the whole
-    # candidate + verification pipeline executes twice (once per output).
-    # It is an id-only frame bounded by the batch size.
-    dropped = (
-        wb_dropped.unionByName(cross_dropped)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # -- cross tier (drop any batch doc near a store doc) -----------------
+        # Bootstrap short-circuit: with an EMPTY store (the first-ever batch)
+        # the cross tier is a no-op, but its plan still schedules a dozen
+        # stages of banding/joins over zero rows — skip it entirely. The
+        # isEmpty probe is one read-first-row job (instant on the local
+        # bootstrap relation, one footer read on a parquet store).
+        if store_sig.isEmpty():
+            return _split_dropped(batch, bsig, wb_dropped, id_col)
+
+        # Same banding, batch × store instead of self-join; both sides carry
+        # the max_bucket skew guard so a degenerate band on either side (e.g.
+        # the empty-document signature) cannot quadratically explode.
+        def capped_buckets(sig: DataFrame) -> DataFrame:
+            b = lsh_band_buckets(sig, id_col, bands, rows_per_band)
+            return b.withColumn(
+                "__n", F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
+            ).filter(F.col("__n") <= max_bucket).drop("__n")
+
+        cross_cand = (
+            capped_buckets(bsig).select(F.col(id_col).alias("id_b"), "band", "key")
+            .join(
+                capped_buckets(store_sig).select(
+                    F.col(id_col).alias("id_a"), "band", "key"
+                ),
+                ["band", "key"],
+            )
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        cross_dropped = (
+            cross_cand.join(_side(store_sig, id_col, "a", num_hashes), "id_a")
+            .join(_side(bsig, id_col, "b", num_hashes), "id_b")
+            .filter(_est_jaccard(num_hashes) >= threshold)
+            .select(F.col("id_b").alias(id_col))
+            .distinct()
+        )
+
+        return _split_dropped(
+            batch, bsig, wb_dropped.unionByName(cross_dropped).distinct(), id_col
+        )
+
+
+def _split_dropped(
+    batch: DataFrame, sig: DataFrame, dropped: DataFrame, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(survivors, delta)`` of an ingest pass. ``dropped`` feeds both
+    anti-joins and ``delta`` reads the caller's pinned signatures, so
+    both are local results (bounded by the batch size)."""
+    dropped = local_result(dropped)
+    return (
+        batch.join(dropped, id_col, "left_anti"),
+        local_result(sig.join(dropped, id_col, "left_anti")),
     )
-    survivors = batch.join(dropped, id_col, "left_anti")
-    delta = bsig.join(dropped, id_col, "left_anti")
-    return survivors, delta
 
 
 # ---------------------------------------------------------------------------
@@ -349,87 +347,77 @@ def incremental_simhash_dedup(
        fingerprints, verification = one ``bit_count(xor)`` per candidate.
        Only (fingerprint, table, key) triples move.
     """
-    bfp = simhash(batch, id_col, text_col, shingle_width).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # ONE probe job resolves BOTH runtime questions — the bootstrap
-    # short-circuit (is the store empty?) and the auto key width — by
-    # aggregating over the tagged fingerprint union: approx distinct is
-    # duplicate-insensitive so the union sizes exactly like the old
-    # two-branch sizing, and a store-row counter replaces the separate
-    # ``isEmpty()`` action (was: 2 jobs, each re-materializing the
-    # persisted frames; now 1 — the pass still doubles as the cache
-    # populator for both persisted fingerprint frames). Map-side partial
-    # HLLs + a count are all that moves.
-    if combo_size is None:
-        store_tagged = store_fp.select(F.lit(1).alias("__s"), "simhash")
-        sizing = bfp.select(F.lit(0).alias("__s"), "simhash").unionByName(
-            store_tagged
-        )
-        row = sizing.agg(
-            F.approx_count_distinct("simhash").alias("n"),
-            F.sum("__s").alias("ns"),
-        ).first()
-        store_empty = not row["ns"]
-        combo_size = _auto_combo_size(max(row["n"], 1), max_hamming, max_bucket)
-    else:
-        store_empty = store_fp.isEmpty()
-    num_blocks = max_hamming + combo_size
-    b_distinct = bfp.select("simhash").distinct()
-
-    # -- within-batch tier (drop near-dups of smaller-id batch docs) ------
-    # Direct dropped-id formulation (dedup.simhash_dropped_ids): same
-    # banding, same greedy contract, about half the stages of deriving
-    # the set from the pair list (no member×member expansion).
-    # max_dropped_frac=None: the skew check exists to catch FORCED-narrow
-    # keys, and combo_size was just auto-sized for this exact fingerprint
-    # population (16x margin) — re-measuring it here would only add two
-    # eager jobs per ingest.
-    wb_dropped = simhash_dropped_ids(
-        bfp, id_col, max_hamming=max_hamming, max_bucket=max_bucket,
-        combo_size=combo_size, max_dropped_frac=None,
-    )
-    if store_empty:
-        dropped = wb_dropped.persist(StorageLevel.MEMORY_AND_DISK)
-        survivors = batch.join(dropped, id_col, "left_anti")
-        delta = bfp.join(dropped, id_col, "left_anti")
-        return survivors, delta
-
-    s_distinct = store_fp.select("simhash").distinct()
-
-    # -- cross tier (drop any batch doc within range of a store doc) ------
-
-    def capped(fp_distinct: DataFrame, tag: str) -> DataFrame:
-        keyed = simhash_combo_keys(fp_distinct, num_blocks, combo_size)
-        return (
-            keyed.withColumn(
-                "__n", F.count(F.lit(1)).over(Window.partitionBy("table", "key"))
+    with materialized(simhash(batch, id_col, text_col, shingle_width)) as bfp:
+        # ONE probe job resolves BOTH runtime questions — the bootstrap
+        # short-circuit (is the store empty?) and the auto key width — by
+        # aggregating over the tagged fingerprint union: approx distinct is
+        # duplicate-insensitive so the union sizes exactly like the old
+        # two-branch sizing, and a store-row counter replaces the separate
+        # ``isEmpty()`` action (was: 2 jobs, each re-materializing the
+        # persisted frames; now 1 — the pass still doubles as the cache
+        # populator for both persisted fingerprint frames). Map-side partial
+        # HLLs + a count are all that moves.
+        if combo_size is None:
+            store_tagged = store_fp.select(F.lit(1).alias("__s"), "simhash")
+            sizing = bfp.select(F.lit(0).alias("__s"), "simhash").unionByName(
+                store_tagged
             )
-            .filter(F.col("__n") <= max_bucket)
-            .select(F.col("simhash").alias(tag), "table", "key")
-        )
+            row = sizing.agg(
+                F.approx_count_distinct("simhash").alias("n"),
+                F.sum("__s").alias("ns"),
+            ).first()
+            store_empty = not row["ns"]
+            combo_size = _auto_combo_size(max(row["n"], 1), max_hamming, max_bucket)
+        else:
+            store_empty = store_fp.isEmpty()
+        num_blocks = max_hamming + combo_size
+        b_distinct = bfp.select("simhash").distinct()
 
-    matched_fps = (
-        capped(b_distinct, "__bf")
-        .join(capped(s_distinct, "__sf"), ["table", "key"])
-        .filter(
-            F.bit_count(F.expr("__bf ^ __sf")) <= F.lit(max_hamming)
+        # -- within-batch tier (drop near-dups of smaller-id batch docs) ------
+        # Direct dropped-id formulation (dedup.simhash_dropped_ids): same
+        # banding, same greedy contract, about half the stages of deriving
+        # the set from the pair list (no member×member expansion).
+        # max_dropped_frac=None: the skew check exists to catch FORCED-narrow
+        # keys, and combo_size was just auto-sized for this exact fingerprint
+        # population (16x margin) — re-measuring it here would only add two
+        # eager jobs per ingest.
+        wb_dropped = simhash_dropped_ids(
+            bfp, id_col, max_hamming=max_hamming, max_bucket=max_bucket,
+            combo_size=combo_size, max_dropped_frac=None,
         )
-        .select("__bf")
-        .distinct()
-    )
-    cross_dropped = bfp.join(
-        matched_fps, bfp["simhash"] == matched_fps["__bf"]
-    ).select(id_col).distinct()
+        if store_empty:
+            return _split_dropped(batch, bfp, wb_dropped, id_col)
 
-    dropped = (
-        wb_dropped.unionByName(cross_dropped)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    survivors = batch.join(dropped, id_col, "left_anti")
-    delta = bfp.join(dropped, id_col, "left_anti")
-    return survivors, delta
+        s_distinct = store_fp.select("simhash").distinct()
+
+        # -- cross tier (drop any batch doc within range of a store doc) ------
+
+        def capped(fp_distinct: DataFrame, tag: str) -> DataFrame:
+            keyed = simhash_combo_keys(fp_distinct, num_blocks, combo_size)
+            return (
+                keyed.withColumn(
+                    "__n", F.count(F.lit(1)).over(Window.partitionBy("table", "key"))
+                )
+                .filter(F.col("__n") <= max_bucket)
+                .select(F.col("simhash").alias(tag), "table", "key")
+            )
+
+        matched_fps = (
+            capped(b_distinct, "__bf")
+            .join(capped(s_distinct, "__sf"), ["table", "key"])
+            .filter(
+                F.bit_count(F.expr("__bf ^ __sf")) <= F.lit(max_hamming)
+            )
+            .select("__bf")
+            .distinct()
+        )
+        cross_dropped = bfp.join(
+            matched_fps, bfp["simhash"] == matched_fps["__bf"]
+        ).select(id_col).distinct()
+
+        return _split_dropped(
+            batch, bfp, wb_dropped.unionByName(cross_dropped).distinct(), id_col
+        )
 
 
 # ---------------------------------------------------------------------------

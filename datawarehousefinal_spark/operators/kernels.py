@@ -6,13 +6,13 @@ per-document reduction — 64 bit-vote sums, k affine-transform mins — as
 Those are CodegenFallback in Spark: every array element evaluates through
 the interpreted expression walker, so a 1,000-shingle document pays
 ~22×1,000 interpreted adds (simhash) or k×1,000 interpreted mul-mod-mins
-(minhash). Measured on the sf0.1 documents table, the interpreted walk is
-the dominant cost for MINHASH (k independent walks over the array: 5.17 s
-hof vs 1.39 s arrow, k=16 — arrow is the default there), while SIMHASH's
-packed-vote formulation (22 sums in one walk) is already cheap enough
-that the Arrow path's 8-bytes-per-shingle serialization loses (0.63 s hof
-vs 2.31 s arrow — hof stays the default; the arrow kernel is kept for
-long-document corpora where the trade flips).
+(minhash). Measured on the sf0.1 documents table, the Arrow kernels win
+for both: MINHASH's k independent walks over the array cost 5.17 s hof vs
+1.39 s arrow (k=16), and SIMHASH's packed-vote walk (22 sums) costs 1.8 s
+hof vs 0.8 s arrow once the kernel batches its id handling. ``kernel=
+"auto"`` therefore maps to ``"arrow"`` in both ``minhash_signature`` and
+``simhash``; ``"hof"`` stays for deployments that must not run Python
+workers.
 
 These kernels keep the part that defines the SIGNATURE VALUES — shingling
 and the base hash — in the JVM (``char_shingles`` + ``xxhash64``/``md5``,

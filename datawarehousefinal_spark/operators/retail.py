@@ -24,8 +24,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from datawarehousefinal_spark.materialize import local_result, materialized
 
 
 def basket_pairs(
@@ -101,54 +106,55 @@ def basket_lift(
     external oracle as a ``HAVING count(*) <= max_basket`` pre-filter
     on the distinct (basket, item) frame.
 
-    Output: item_a, item_b, n_ab, n_a, n_b, lift, confidence_ab.
+    Output (a local result): item_a, item_b, n_ab, n_a, n_b, lift,
+    confidence_ab.
     """
     # Materialize the capped distinct (basket, item) frame ONCE: three
     # consumers (basket count, item counts, pair self-join) would
     # otherwise each re-run the upstream source join and the size
     # filter. The pre-cap distinct frame is checkpointed too so the
     # size aggregate and the filter probe share one upstream run.
-    items = (
-        baskets.select(basket_col, item_col)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ok = _cap_baskets(items, basket_col, max_basket).localCheckpoint(
-        eager=True
-    )
-    n_baskets = ok.select(basket_col).distinct().count()
-    item_counts = ok.groupBy(item_col).agg(
-        F.count(F.lit(1)).alias("__n_item")
-    )
-    pair_counts = (
-        _pairs_from_items(ok, basket_col, item_col)
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= min_support)
-    )
-    ca = item_counts.select(
-        F.col(item_col).alias("item_a"), F.col("__n_item").alias("n_a")
-    )
-    cb = item_counts.select(
-        F.col(item_col).alias("item_b"), F.col("__n_item").alias("n_b")
-    )
-    return (
-        pair_counts.join(F.broadcast(ca), "item_a")
-        .join(F.broadcast(cb), "item_b")
-        .select(
-            "item_a",
-            "item_b",
-            "n_ab",
-            "n_a",
-            "n_b",
-            (
-                F.lit(float(n_baskets))
-                * F.col("n_ab")
-                / (F.col("n_a") * F.col("n_b"))
-            ).alias("lift"),
-            (F.col("n_ab") / F.col("n_a")).alias("confidence_ab"),
+    with (
+        materialized(
+            baskets.select(basket_col, item_col).distinct(), checkpoint=True
+        ) as items,
+        materialized(
+            _cap_baskets(items, basket_col, max_basket), checkpoint=True
+        ) as ok,
+    ):
+        n_baskets = ok.select(basket_col).distinct().count()
+        item_counts = ok.groupBy(item_col).agg(
+            F.count(F.lit(1)).alias("__n_item")
         )
-    )
+        pair_counts = (
+            _pairs_from_items(ok, basket_col, item_col)
+            .groupBy("item_a", "item_b")
+            .agg(F.count(F.lit(1)).alias("n_ab"))
+            .filter(F.col("n_ab") >= min_support)
+        )
+        ca = item_counts.select(
+            F.col(item_col).alias("item_a"), F.col("__n_item").alias("n_a")
+        )
+        cb = item_counts.select(
+            F.col(item_col).alias("item_b"), F.col("__n_item").alias("n_b")
+        )
+        return local_result(
+            pair_counts.join(F.broadcast(ca), "item_a")
+            .join(F.broadcast(cb), "item_b")
+            .select(
+                "item_a",
+                "item_b",
+                "n_ab",
+                "n_a",
+                "n_b",
+                (
+                    F.lit(float(n_baskets))
+                    * F.col("n_ab")
+                    / (F.col("n_a") * F.col("n_b"))
+                ).alias("lift"),
+                (F.col("n_ab") / F.col("n_a")).alias("confidence_ab"),
+            )
+        )
 
 
 def deterministic_ntile(
@@ -193,13 +199,14 @@ def deterministic_ntile(
     return ranked.withColumn(out_col, bucket).drop("__one", "__rank")
 
 
+@contextmanager
 def rfm_scores(
     orders: DataFrame,
     customer_col: str,
     date_col: str,
     amount_col: str,
     n_buckets: int = 4,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Per-customer RFM scoring: recency (latest order date), frequency
     (order count), monetary (exact decimal revenue sum), each bucketed
     1..k by :func:`deterministic_ntile` with the customer id as the
@@ -209,15 +216,16 @@ def rfm_scores(
     Higher score = better customer on every axis (most recent date,
     highest frequency, highest spend → bucket k).
 
-    Output: customer, recency_date, frequency, monetary, r_score,
-    f_score, m_score.
+    Yields: customer, recency_date, frequency, monetary, r_score,
+    f_score, m_score. A context manager: the yielded frame reads a
+    per-customer checkpoint released on exit.
     """
     # Checkpoint the per-customer aggregate: three metric bucketings
     # each walk the lineage several times (range-boundary sample +
     # window + join-back), and without materialization the orders scan
     # and groupBy re-execute ~9x. One row per customer — distributed,
     # bounded by the dimension size, not the fact table.
-    per_cust = (
+    with materialized(
         orders.groupBy(F.col(customer_col).alias("customer"))
         .agg(
             F.max(F.to_date(date_col)).alias("recency_date"),
@@ -225,20 +233,19 @@ def rfm_scores(
             F.sum(F.col(amount_col).cast("decimal(18,2)"))
             .cast("double")
             .alias("monetary"),
+        ),
+        checkpoint=True,
+    ) as per_cust:
+        n = per_cust.count()
+        scored = deterministic_ntile(
+            per_cust, ["recency_date", "customer"], n_buckets, "r_score", n_rows=n
         )
-        .localCheckpoint(eager=True)
-    )
-    n = per_cust.count()
-    scored = deterministic_ntile(
-        per_cust, ["recency_date", "customer"], n_buckets, "r_score", n_rows=n
-    )
-    scored = deterministic_ntile(
-        scored, ["frequency", "customer"], n_buckets, "f_score", n_rows=n
-    )
-    scored = deterministic_ntile(
-        scored, ["monetary", "customer"], n_buckets, "m_score", n_rows=n
-    )
-    return scored
+        scored = deterministic_ntile(
+            scored, ["frequency", "customer"], n_buckets, "f_score", n_rows=n
+        )
+        yield deterministic_ntile(
+            scored, ["monetary", "customer"], n_buckets, "m_score", n_rows=n
+        )
 
 
 def decile_lift(

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datawarehousefinal_spark.materialize import release
 from datawarehousefinal_spark.operators.dedup import _fan_out, char_shingles
 
 # BPE-ish tokenization: alphabetic runs, single digits, and single
@@ -1001,7 +1002,8 @@ def bpe_learn(
     desc, pair ascending — fully deterministic) and one `replace` map.
     The vocab frame is eagerly localCheckpoint-ed per iteration so
     lineage stays flat across K rounds (same discipline as the
-    connected-components fixpoint). Stops early when the best pair's
+    connected-components fixpoint); each round's checkpoint is released
+    once the next one is materialized. Stops early when the best pair's
     frequency drops below ``min_freq``.
     """
     vocab = (
@@ -1013,42 +1015,44 @@ def bpe_learn(
         .localCheckpoint(eager=True)
     )
     merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
-        syms = F.filter(
-            F.transform(
-                F.split(F.col("e"), _BPE_C),
-                lambda x: F.substring(x, 2, 1_000_000_000),
-            ),
-            lambda x: x != "",
-        )
-        m = F.greatest(F.size(syms) - 1, F.lit(0))
-        pairs = F.zip_with(
-            F.slice(syms, 1, m),
-            F.slice(syms, 2, m),
-            lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-        )
-        best = (
-            vocab.select(F.explode(pairs).alias("p"), "n")
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.desc("cnt"), "a", "b")
-            .first()
-        )
-        if best is None or best["cnt"] < min_freq:
-            break
-        a, b = best["a"], best["b"]
-        merges.append((a, b))
-        nxt = vocab.select(
-            F.replace(
-                F.col("e"),
-                F.lit(_bpe_tok(a) + _bpe_tok(b)),
-                F.lit(_bpe_tok(a + b)),
-            ).alias("e"),
-            "n",
-        ).localCheckpoint(eager=True)
-        vocab.unpersist()
-        vocab = nxt
-    vocab.unpersist()
+    try:
+        for _ in range(num_merges):
+            syms = F.filter(
+                F.transform(
+                    F.split(F.col("e"), _BPE_C),
+                    lambda x: F.substring(x, 2, 1_000_000_000),
+                ),
+                lambda x: x != "",
+            )
+            m = F.greatest(F.size(syms) - 1, F.lit(0))
+            pairs = F.zip_with(
+                F.slice(syms, 1, m),
+                F.slice(syms, 2, m),
+                lambda a, b: F.struct(a.alias("a"), b.alias("b")),
+            )
+            best = (
+                vocab.select(F.explode(pairs).alias("p"), "n")
+                .groupBy("p.a", "p.b")
+                .agg(F.sum("n").alias("cnt"))
+                .orderBy(F.desc("cnt"), "a", "b")
+                .first()
+            )
+            if best is None or best["cnt"] < min_freq:
+                break
+            a, b = best["a"], best["b"]
+            merges.append((a, b))
+            nxt = vocab.select(
+                F.replace(
+                    F.col("e"),
+                    F.lit(_bpe_tok(a) + _bpe_tok(b)),
+                    F.lit(_bpe_tok(a + b)),
+                ).alias("e"),
+                "n",
+            ).localCheckpoint(eager=True)
+            release(vocab)
+            vocab = nxt
+    finally:
+        release(vocab)
     return merges
 
 

@@ -12,12 +12,17 @@ real verification lives in tests/.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.functions.textnorm import _ACCENTED, _PLAIN
+from datawarehousefinal_spark.materialize import local_result, materialized
 from datawarehousefinal_spark.operators import olap
 from datawarehousefinal_spark.sources.testdata import load_table
 
@@ -67,31 +72,22 @@ def _ulp_contract(df: DataFrame, *cols: str, digits: int = 6) -> DataFrame:
     return df.withColumns({c: F.round(F.col(c), digits) for c in cols})
 
 
-def _scratch_path(name: str, sf_dir: str, suffix: str = "") -> str:
-    """Per-CALL scratch location for sink-roundtrip queries.
+@contextmanager
+def _scratch_path(name: str, sf_dir: str, suffix: str = "") -> Iterator[str]:
+    """Per-call scratch location for sink-roundtrip faces, removed when
+    the block exits.
 
-    History of the flake class this kills: fixed shared /tmp paths let
-    concurrent runs interleave an overwrite with a read-back
-    (CORRECTNESS_r05); a pid suffix (r06) was still racy — one process
-    running the same query twice (driver hash pass after a bench pass)
-    re-points the SAME path, and a lazy read-back from the first call
-    then reads the second call's bytes; pid recycling against a crashed
-    run's leftovers has the same effect. ``tempfile.mkdtemp`` is unique
-    per CALL by construction, so no later invocation can ever touch an
-    earlier invocation's files. Pair with :func:`_eager` on the
-    returned aggregate so the result stops depending on /tmp at all.
-    Cleanup at process exit (the driver may collect the lazy parts of a
-    result after the query function returns).
+    ``tempfile.mkdtemp`` makes the directory unique per call, so no
+    other call can touch its files. A face writes and reads back inside
+    the block and returns :func:`local_result`, which no longer reads
+    the files once the directory is gone.
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     base = tempfile.mkdtemp(prefix=f"dwf_{name}_{tag}_")
-    atexit.register(shutil.rmtree, base, True)
-    return f"{base}/data{suffix}"
+    try:
+        yield f"{base}/data{suffix}"
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _money_sum(col: str):
@@ -119,32 +115,6 @@ def _frozen_centroids_df(spark: SparkSession, cents: list[list[float]]) -> DataF
     return spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)], ["__centroid", "__cvec"]
     )
-
-
-def _eager(df: DataFrame) -> DataFrame:
-    """Materialize a (small) result eagerly so it no longer references
-    its scratch input files. Every sink-roundtrip returns a tiny
-    aggregate; ``localCheckpoint(eager=True)`` computes it NOW and pins
-    the rows in block storage, so whatever the driver does between
-    actions (re-collection, a second hash pass, concurrent window
-    execution) can never re-read — or race on — the /tmp scratch."""
-    return df.localCheckpoint(eager=True)
-
-
-def _rebuilt(df: DataFrame) -> DataFrame:
-    """:func:`_eager` taken to its hermetic limit: collect the (tiny)
-    result NOW and recreate it as a literal local-rows DataFrame. The
-    returned frame has NO lineage at all — not to /tmp scratch files
-    (mkdtemp already isolates those), and unlike ``localCheckpoint``
-    not even to executor block storage, whose blocks an executor death
-    or eviction between the driver's hash passes would force to
-    recompute from a scratch dir that may have been mutated since.
-    Values pass through untouched (``collect`` → Arrow/pickle → literal
-    rows under the SAME schema), so this changes bytes never, lineage
-    only. Reserved for sink-roundtrip faces whose results are
-    contract-small (≤ a few dozen rows)."""
-    rows = df.collect()
-    return df.sparkSession.createDataFrame(rows, df.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1376,24 +1346,20 @@ def incremental_minhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The store is scanned several times by the ingest pass (banding +
     # verification sides) and by the identity compare; persist it — in
     # production it would be a parquet table, read, not recomputed.
-    store = minhash_store(
+    with materialized(minhash_store(
         corpus, "doc_id", "text", num_hashes=16, shingle_width=_W
-    ).persist()
-    survivors, delta = incremental_minhash_dedup(
-        batch, store, "doc_id", "text",
-        threshold=0.9, num_hashes=16, shingle_width=_W,
-    )
-    resig = minhash_store(
-        survivors.select("doc_id", "text"),
-        "doc_id", "text", num_hashes=16, shingle_width=_W,
-    )
-    # Materialize the one-row report NOW (zero-lineage), then release
-    # the scoped persist — no cached frame outlives the face.
-    out = _rebuilt(
-        _incr_store_report(corpus, batch, store, survivors, delta, resig)
-    )
-    store.unpersist()
-    return out
+    )) as store:
+        survivors, delta = incremental_minhash_dedup(
+            batch, store, "doc_id", "text",
+            threshold=0.9, num_hashes=16, shingle_width=_W,
+        )
+        resig = minhash_store(
+            survivors.select("doc_id", "text"),
+            "doc_id", "text", num_hashes=16, shingle_width=_W,
+        )
+        return local_result(
+            _incr_store_report(corpus, batch, store, survivors, delta, resig)
+        )
 
 
 @query("incremental_simhash_dedup", oracle=_INCR_STORE_ORACLE)
@@ -1421,18 +1387,19 @@ def incremental_simhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    store = simhash_store(corpus, "doc_id", "text", shingle_width=_W).persist()
-    survivors, delta = incremental_simhash_dedup(
-        batch, store, "doc_id", "text", max_hamming=8, shingle_width=_W,
-    )
-    resig = simhash_store(
-        survivors.select("doc_id", "text"), "doc_id", "text",
-        shingle_width=_W,
-    )
-    out = _rebuilt(
-        _incr_store_report(corpus, batch, store, survivors, delta, resig)
-    )
-    store.unpersist()
+    with materialized(
+        simhash_store(corpus, "doc_id", "text", shingle_width=_W)
+    ) as store:
+        survivors, delta = incremental_simhash_dedup(
+            batch, store, "doc_id", "text", max_hamming=8, shingle_width=_W,
+        )
+        resig = simhash_store(
+            survivors.select("doc_id", "text"), "doc_id", "text",
+            shingle_width=_W,
+        )
+        return local_result(
+            _incr_store_report(corpus, batch, store, survivors, delta, resig)
+        )
     return out
 
 
@@ -1514,10 +1481,10 @@ def corpus_curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datawarehousefinal_spark.operators.curation import curate_corpus
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    _curated, report = curate_corpus(
+    with curate_corpus(
         docs, min_quality=0.1, shingle_width=_W, near_dup_mode="transitive"
-    )
-    return report
+    ) as (_curated, report):
+        return local_result(report)
 
 
 def _training_e2e_oracle() -> str:
@@ -1628,16 +1595,18 @@ def training_pipeline_e2e_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sampled = deterministic_sample(docs, "doc_id", 0.5, seed=11)
-    curated, _report = curate_corpus(
+    with curate_corpus(
         sampled, min_quality=0.1, shingle_width=_W, near_dup_mode="transitive"
-    )
-    tokens = curated.select(
-        "doc_id",
-        F.size(whitespace_tokens("text")).cast("long").alias("n_tokens"),
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":7"))).alias("__h"),
-    )
-    packed = budgeted_chunks(tokens, "doc_id", "n_tokens", 2048, order_cols=["__h"])
-    return chunk_stats(packed, "n_tokens").orderBy("chunk_id")
+    ) as (curated, _report):
+        tokens = curated.select(
+            "doc_id",
+            F.size(whitespace_tokens("text")).cast("long").alias("n_tokens"),
+            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":7"))).alias("__h"),
+        )
+        packed = budgeted_chunks(
+            tokens, "doc_id", "n_tokens", 2048, order_cols=["__h"]
+        )
+        return local_result(chunk_stats(packed, "n_tokens").orderBy("chunk_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -1950,8 +1919,6 @@ def csv_repair_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     5th row ';'-separated (malformed under ','); the permissive scan splits
     them off, repair_rows re-parses them under ';', and the union must
     reproduce the table exactly."""
-    import os
-
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     from datawarehousefinal_spark.sources.readers import (
@@ -1961,23 +1928,21 @@ def csv_repair_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rows = sorted((r[0], r[1]) for r in nation.collect())
-    path = _scratch_path("csv_repair", sf_dir, ".csv")
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write("n_nationkey,n_name\n")
-        for key, name in rows:
-            sep = ";" if key % 5 == 0 else ","
-            fh.write(f"{key}{sep}{name}\n")
     schema = StructType(
         [
             StructField("n_nationkey", IntegerType()),
             StructField("n_name", StringType()),
         ]
     )
-    good, bad = read_csv_with_repair(spark, path, schema)
-    repaired = repair_rows(bad, schema, sep=";")
-    out = _eager(good.unionByName(repaired))
-    good.cached_scan.unpersist()  # eager result no longer reads the scan
-    return out
+    with _scratch_path("csv_repair", sf_dir, ".csv") as path:
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write("n_nationkey,n_name\n")
+            for key, name in rows:
+                sep = ";" if key % 5 == 0 else ","
+                fh.write(f"{key}{sep}{name}\n")
+        with read_csv_with_repair(spark, path, schema) as (good, bad):
+            repaired = repair_rows(bad, schema, sep=";")
+            return local_result(good.unionByName(repaired))
 
 
 @query(
@@ -2150,8 +2115,6 @@ def csv_typed_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     etl_final.ktr:631-907; Datos/preprocessing.py:91-121). The CSV is
     materialized from the nation table, scanned back typed, and must
     hash-match the source."""
-    import os
-
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -2165,19 +2128,19 @@ def csv_typed_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", F.col("n_regionkey").cast("int"), "n_name"
     )
     rows = sorted((r[0], r[1], r[2]) for r in nation.collect())
-    path = _scratch_path("csv_typed", sf_dir, ".csv")
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write("n_nationkey;n_regionkey;n_name\n")
-        for key, rkey, name in rows:
-            fh.write(f"{key};{rkey};{name}\n")
-    schema = StructType(
-        [
-            StructField("n_nationkey", IntegerType()),
-            StructField("n_regionkey", IntegerType()),
-            StructField("n_name", StringType()),
-        ]
-    )
-    return _eager(read_csv_typed(spark, path, schema, sep=";"))
+    with _scratch_path("csv_typed", sf_dir, ".csv") as path:
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write("n_nationkey;n_regionkey;n_name\n")
+            for key, rkey, name in rows:
+                fh.write(f"{key};{rkey};{name}\n")
+        schema = StructType(
+            [
+                StructField("n_nationkey", IntegerType()),
+                StructField("n_regionkey", IntegerType()),
+                StructField("n_name", StringType()),
+            ]
+        )
+        return local_result(read_csv_typed(spark, path, schema, sep=";"))
 
 
 @query(
@@ -2196,8 +2159,6 @@ def encoding_fallback_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec, the per-encoding typed scans union, and the result must
     hash-match the tagged source — a wrong codec anywhere shows up as
     mojibake in the value hash."""
-    import os
-
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     from datawarehousefinal_spark.sources.readers import (
@@ -2206,34 +2167,34 @@ def encoding_fallback_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rows = sorted((r[0], r[1]) for r in nation.collect())
-    base = _scratch_path("enc_fallback", sf_dir)
-    os.makedirs(base, exist_ok=True)
-    files = {
-        0: (os.path.join(base, "even_utf8.csv"), "utf-8"),
-        1: (os.path.join(base, "odd_latin1.csv"), "latin-1"),
-    }
-    handles = {
-        parity: open(path, "w", encoding=enc)
-        for parity, (path, enc) in files.items()
-    }
-    try:
-        for fh in handles.values():
-            fh.write("n_nationkey;n_name_tagged\n")
-        for key, name in rows:
-            handles[key % 2].write(f"{key};{name}ñ\n")
-    finally:
-        for fh in handles.values():
-            fh.close()
-    schema = StructType(
-        [
-            StructField("n_nationkey", IntegerType()),
-            StructField("n_name_tagged", StringType()),
-        ]
-    )
-    df, _chosen = read_csv_encoding_fallback(
-        spark, os.path.join(base, "*.csv"), schema, sep=";"
-    )
-    return _eager(df)
+    with _scratch_path("enc_fallback", sf_dir) as base:
+        os.makedirs(base, exist_ok=True)
+        files = {
+            0: (os.path.join(base, "even_utf8.csv"), "utf-8"),
+            1: (os.path.join(base, "odd_latin1.csv"), "latin-1"),
+        }
+        handles = {
+            parity: open(path, "w", encoding=enc)
+            for parity, (path, enc) in files.items()
+        }
+        try:
+            for fh in handles.values():
+                fh.write("n_nationkey;n_name_tagged\n")
+            for key, name in rows:
+                handles[key % 2].write(f"{key};{name}ñ\n")
+        finally:
+            for fh in handles.values():
+                fh.close()
+        schema = StructType(
+            [
+                StructField("n_nationkey", IntegerType()),
+                StructField("n_name_tagged", StringType()),
+            ]
+        )
+        df, _chosen = read_csv_encoding_fallback(
+            spark, os.path.join(base, "*.csv"), schema, sep=";"
+        )
+        return local_result(df)
 
 
 @query(
@@ -2252,8 +2213,6 @@ def parquet_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning, read back, and hash-match the direct aggregation. partitionBy
     columns come back as the partition directory values (anio survives the
     roundtrip typed via the written string; cast back to int)."""
-    import os
-
     from datawarehousefinal_spark.sources.writers import write_parquet
 
     agg = (
@@ -2265,12 +2224,12 @@ def parquet_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"), _money_sum("o_totalprice").alias("total")
         )
     )
-    path = _scratch_path("pq_sink", sf_dir)
-    write_parquet(agg, path, partition_by=["anio"])
-    out = spark.read.parquet(path)
-    return _eager(out.select(
-        F.col("anio").cast("int"), "o_orderstatus", "n", "total"
-    ))
+    with _scratch_path("pq_sink", sf_dir) as path:
+        write_parquet(agg, path, partition_by=["anio"])
+        out = spark.read.parquet(path)
+        return local_result(out.select(
+            F.col("anio").cast("int"), "o_orderstatus", "n", "total"
+        ))
 
 
 @query(
@@ -2288,19 +2247,17 @@ def zorder_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes nothing for a price band; the z-layout skips ≥30% of files on
     both dimensions). The oracle hash-matches the read-back aggregate
     against the source, proving the layout move is content-preserving."""
-    import os
-
     from datawarehousefinal_spark.sources.layout import zorder_write
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    path = _scratch_path("zorder", sf_dir)
-    zorder_write(orders, path, ["o_custkey", "o_totalprice"], num_files=16)
-    back = spark.read.parquet(path)
-    return _eager(back.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"), _money_sum("o_totalprice").alias("total")
-    ))
+    with _scratch_path("zorder", sf_dir) as path:
+        zorder_write(orders, path, ["o_custkey", "o_totalprice"], num_files=16)
+        back = spark.read.parquet(path)
+        return local_result(back.groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).alias("n"), _money_sum("o_totalprice").alias("total")
+        ))
 
 
 @query(
@@ -2311,8 +2268,6 @@ def zorder_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def csv_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9: CSV sink + typed re-scan (Datos/preprocessing.py:142-143)."""
-    import os
-
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -2328,15 +2283,15 @@ def csv_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    path = _scratch_path("csv_sink", sf_dir)
-    write_csv(agg, path)
-    schema = StructType(
-        [
-            StructField("o_orderstatus", StringType()),
-            StructField("n", LongType()),
-        ]
-    )
-    return _eager(read_csv_typed(spark, path, schema))
+    with _scratch_path("csv_sink", sf_dir) as path:
+        write_csv(agg, path)
+        schema = StructType(
+            [
+                StructField("o_orderstatus", StringType()),
+                StructField("n", LongType()),
+            ]
+        )
+        return local_result(read_csv_typed(spark, path, schema))
 
 
 @query(
@@ -2353,8 +2308,6 @@ def jdbc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's JDBC bounds only split partitions, they never filter rows, so
     out-of-range rows land in the edge partitions). The oracle checks the
     roundtrip end-to-end against DuckDB's own aggregate."""
-    import os
-
     from datawarehousefinal_spark.sources.readers import read_jdbc
     from datawarehousefinal_spark.sources.writers import write_jdbc
 
@@ -2363,31 +2316,47 @@ def jdbc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # pid-scoped path: embedded Derby allows only ONE JVM to boot a
-    # database, so a path shared across concurrent processes (driver
-    # verify + a local pytest run) would fail with XSDB6. Within one
-    # process, repeated runs reuse the same booted database.
-    db = f"/tmp/dwf_derby_{os.getpid()}_{os.path.basename(sf_dir.rstrip('/'))}"
-    url = f"jdbc:derby:{db};create=true"
-    props = {
-        "driver": "org.apache.derby.jdbc.EmbeddedDriver",
-        # Derby maps StringType to CLOB (not hashable/comparable);
-        # pin a plain VARCHAR via the DDL-override option instead.
-        "createTableColumnTypes": "o_orderstatus VARCHAR(4)",
-    }
-    write_jdbc(agg, url, "status_counts", mode="overwrite", properties=props)
-    return _eager(
-        read_jdbc(
-            spark,
-            url,
-            "status_counts",
-            properties={"driver": props["driver"]},
-            partition_column="n",
-            num_partitions=4,
-            lower_bound=0,
-            upper_bound=1_000_000,
+    # The database lives in the call's scratch dir: unique per call, so
+    # no two JVMs ever boot the same Derby database (XSDB6), and removed
+    # with the dir once the database is shut down.
+    with _scratch_path("derby", sf_dir) as db:
+        url = f"jdbc:derby:{db};create=true"
+        props = {
+            "driver": "org.apache.derby.jdbc.EmbeddedDriver",
+            # Derby maps StringType to CLOB (not hashable/comparable);
+            # pin a plain VARCHAR via the DDL-override option instead.
+            "createTableColumnTypes": "o_orderstatus VARCHAR(4)",
+        }
+        write_jdbc(agg, url, "status_counts", mode="overwrite", properties=props)
+        try:
+            return local_result(
+                read_jdbc(
+                    spark,
+                    url,
+                    "status_counts",
+                    properties={"driver": props["driver"]},
+                    partition_column="n",
+                    num_partitions=4,
+                    lower_bound=0,
+                    upper_bound=1_000_000,
+                )
+            )
+        finally:
+            _derby_shutdown(spark, db)
+
+
+def _derby_shutdown(spark: SparkSession, db: str) -> None:
+    """Shut down one embedded Derby database so its files can be removed.
+    Derby reports a clean shutdown as an SQLException with SQLState 08006."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        spark._jvm.java.sql.DriverManager.getConnection(
+            f"jdbc:derby:{db};shutdown=true"
         )
-    )
+    except Py4JJavaError as exc:
+        if exc.java_exception.getSQLState() != "08006":
+            raise
 
 
 @query(
@@ -2400,18 +2369,17 @@ def cache_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3: parquet cache-or-build (machineLearning.py:132-173). First run
     builds + writes snappy parquet; later runs read the cache — either
     path must hash-match the direct aggregation."""
-    import os
-
     from datawarehousefinal_spark.operators.dataset import load_or_build_dataset
 
     orders = load_table(spark, sf_dir, "orders")
     key = os.path.basename(sf_dir.rstrip("/"))
-    return _eager(load_or_build_dataset(
-        spark,
-        _scratch_path("cache", sf_dir),
-        f"status_counts_{key}",
-        lambda: orders.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n")),
-    ))
+    with _scratch_path("cache", sf_dir) as path:
+        return local_result(load_or_build_dataset(
+            spark,
+            path,
+            f"status_counts_{key}",
+            lambda: orders.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n")),
+        ))
 
 
 @query(
@@ -3089,8 +3057,6 @@ def jsonl_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship in. The roundtrip must preserve every value byte-for-byte
     (escaping included), which the oracle checks against the original
     parquet rows."""
-    import os
-
     from datawarehousefinal_spark.sources.readers import read_jsonl
     from datawarehousefinal_spark.sources.writers import write_jsonl
 
@@ -3099,9 +3065,9 @@ def jsonl_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 50 == 0)
         .select("doc_id", "lang", "source", "text")
     )
-    path = _scratch_path("jsonl_sink", sf_dir)
-    write_jsonl(docs, path)
-    return _eager(read_jsonl(spark, path, docs.schema))
+    with _scratch_path("jsonl_sink", sf_dir) as path:
+        write_jsonl(docs, path)
+        return local_result(read_jsonl(spark, path, docs.schema))
 
 
 @query(
@@ -3142,22 +3108,19 @@ def json_repair_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(line)
         .alias("value")
     )
-    path = _scratch_path("json_repair", sf_dir)
-    corrupted.coalesce(4).write.mode("overwrite").text(path)
-
     schema = orders.schema
-    good, bad = read_jsonl_with_repair(spark, path, schema)
-    repaired = repair_json_rows(bad, schema).withColumn(
-        "__repaired", F.lit(1)
-    )
-    full = good.withColumn("__repaired", F.lit(0)).unionByName(repaired)
-    out = _eager(full.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        _money_sum("o_totalprice").alias("total"),
-        F.sum("__repaired").cast("long").alias("n_repaired"),
-    ))
-    good.cached_scan.unpersist()  # eager result no longer reads the scan
-    return out
+    with _scratch_path("json_repair", sf_dir) as path:
+        corrupted.coalesce(4).write.mode("overwrite").text(path)
+        with read_jsonl_with_repair(spark, path, schema) as (good, bad):
+            repaired = repair_json_rows(bad, schema).withColumn(
+                "__repaired", F.lit(1)
+            )
+            full = good.withColumn("__repaired", F.lit(0)).unionByName(repaired)
+            return local_result(full.groupBy("o_orderstatus").agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                _money_sum("o_totalprice").alias("total"),
+                F.sum("__repaired").cast("long").alias("n_repaired"),
+            ))
 
 
 _PACK_BUDGET = 2048
@@ -3403,12 +3366,13 @@ def kmeans_cluster_sizes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value", "event_type"
     )
     _model, feats = fit_preprocess(events)
-    _km, pred = fit_kmeans(feats, k=3)
-    return (
-        pred.groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("cluster")
-    )
+    with materialized(feats) as feats:
+        _km, pred = fit_kmeans(feats, k=3)
+        return local_result(
+            pred.groupBy("cluster")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .orderBy("cluster")
+        )
 
 
 @query(
@@ -3433,8 +3397,6 @@ def feature_cache_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 + count(DISTINCT event_type); n_rows must survive the cache
     write/reload untouched. A dropped row, a dimension drift, or a
     corrupt Vector read breaks the hash."""
-    import os
-
     from pyspark.ml.functions import vector_to_array
 
     from datawarehousefinal_spark.ml.pipelines import (
@@ -3445,12 +3407,12 @@ def feature_cache_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events").select("value", "event_type")
     _model, feats = fit_preprocess(events)
-    path = _scratch_path("feature_cache", sf_dir)
-    write_feature_cache(feats, path)
-    back = read_feature_cache(spark, path)
-    return _eager(back.select(
-        F.size(vector_to_array("features")).alias("feature_dim")
-    ).groupBy("feature_dim").agg(F.count(F.lit(1)).cast("long").alias("n_rows")))
+    with _scratch_path("feature_cache", sf_dir) as path:
+        write_feature_cache(feats, path)
+        back = read_feature_cache(spark, path)
+        return local_result(back.select(
+            F.size(vector_to_array("features")).alias("feature_dim")
+        ).groupBy("feature_dim").agg(F.count(F.lit(1)).cast("long").alias("n_rows")))
 
 
 @query("rf_confusion_matrix")  # no SQL oracle: iterative ensemble training
@@ -3484,10 +3446,11 @@ def rf_confusion_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     _model, feats = fit_preprocess(
         labeled.drop("event_type"), exclude=("label",)
     )
-    weighted = attach_class_weights(feats, "label")
-    rf = classifier_zoo(weight_col="weight")["RandomForest"]
-    pred = rf.fit(weighted).transform(weighted)
-    return confusion_matrix_df(pred)
+    with materialized(feats) as feats:
+        weighted = attach_class_weights(feats, "label")
+        rf = classifier_zoo(weight_col="weight")["RandomForest"]
+        pred = rf.fit(weighted).transform(weighted)
+        return local_result(confusion_matrix_df(pred))
 
 
 @query(
@@ -4236,13 +4199,10 @@ def pca_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events").select("value", "event_type")
     _model, feats = fit_preprocess(events)
-    try:
-        # the returned loadings frame is createDataFrame'd from model
-        # coefficients — independent of feats, so the persist that
-        # fit_preprocess handed over can be released eagerly.
+    with materialized(feats) as feats:
+        # the loadings frame is createDataFrame'd from model
+        # coefficients, independent of feats
         return pca_loadings(feats, k=2)
-    finally:
-        feats.unpersist()
 
 
 @query("cv_grid_search")  # no SQL oracle: iterative CV training
@@ -4271,10 +4231,9 @@ def cv_grid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dayofweek("ts").alias("dow"),
     )
     _enc, labeled = label_encode(events, "event_type", "label")
-    # fit_preprocess returns its output PERSISTED (CV re-scans it per
-    # fold x grid point); the caller owns the unpersist.
+    # CV re-scans the features per fold x grid point: pin them
     _model, feats = fit_preprocess(labeled.drop("event_type"), exclude=("label",))
-    try:
+    with materialized(feats) as feats:
         zoo = classifier_zoo(weight_col=None)
         lr = zoo["LogisticRegression"]
         grid = default_param_grids(zoo)["LogisticRegression"]
@@ -4282,8 +4241,6 @@ def cv_grid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and each individual LR fit underuses the cluster on this data
         # size — overlapping them is the whole point of a CV fleet.
         cv_model = grid_search_cv(feats, lr, grid, folds=3, parallelism=9)
-    finally:
-        feats.unpersist()
     return cv_metrics_table(cv_model, spark)
 
 
@@ -4359,13 +4316,11 @@ def rbf_svc_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _enc, labeled = label_encode(events, "event_type", "label")
     _model, feats = fit_preprocess(labeled.drop("event_type"), exclude=("label",))
-    try:
+    with materialized(feats) as feats:
         _ovr, transform_fn = rbf_svc_approx(
             feats, n_components=64, gamma=0.5, max_iter=30
         )
-        return confusion_matrix_df(transform_fn(feats).localCheckpoint())
-    finally:
-        feats.unpersist()
+        return local_result(confusion_matrix_df(transform_fn(feats)))
 
 
 @query(
@@ -4387,9 +4342,6 @@ def streaming_cube_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     final state must hash-match the direct batch aggregation — the
     streaming face of the incremental_cube_merge proof. State per batch
     is |cells| rows (kilobytes), independent of batch row count."""
-    import os
-    import shutil
-
     from datawarehousefinal_spark.operators.olap import serve_measures
     from datawarehousefinal_spark.streaming.pipeline import (
         foreach_batch_cube_merge,
@@ -4398,30 +4350,29 @@ def streaming_cube_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events").select("event_type", "value")
-    base = _scratch_path("stream_cube", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src, state, ckpt = f"{base}/src", f"{base}/state", f"{base}/ckpt"
-    events.repartition(2).write.parquet(src)
-    stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
-    from datawarehousefinal_spark.streaming.pipeline import (
-        STATE_PARTITIONS_LOCAL,
-        scoped_shuffle_partitions,
-    )
-
-    with scoped_shuffle_partitions(spark, STATE_PARTITIONS_LOCAL):
-        (
-            stream.writeStream.foreachBatch(
-                foreach_batch_cube_merge(state, ["event_type"], "value")
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+    with _scratch_path("stream_cube", sf_dir) as base:
+        src, state, ckpt = f"{base}/src", f"{base}/state", f"{base}/ckpt"
+        events.repartition(2).write.parquet(src)
+        stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
+        from datawarehousefinal_spark.streaming.pipeline import (
+            STATE_PARTITIONS_LOCAL,
+            scoped_shuffle_partitions,
         )
-    # per-micro-batch partial states re-associate the avg — contract
-    return _eager(_ulp_contract(
-        serve_measures(read_cube_state(spark, state)), "promedio_edades"
-    ))
+
+        with scoped_shuffle_partitions(spark, STATE_PARTITIONS_LOCAL):
+            (
+                stream.writeStream.foreachBatch(
+                    foreach_batch_cube_merge(state, ["event_type"], "value")
+                )
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        # per-micro-batch partial states re-associate the avg — contract
+        return local_result(_ulp_contract(
+            serve_measures(read_cube_state(spark, state)), "promedio_edades"
+        ))
 
 
 @query(
@@ -4469,9 +4420,9 @@ def incremental_cube_moments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``serve_moments_exact`` — decimal integer arithmetic plus one
     nonnegative integral division on each side, so NO IEEE double
     reaches the hashed derived measures (min/max pass raw input doubles
-    through order-invariant folds only), and the tiny result is
-    collect-rebuilt (``_rebuilt``) so it carries zero lineage for any
-    later driver pass to re-execute differently."""
+    through order-invariant folds only), and the tiny result is a
+    ``local_result``, so it carries zero lineage for any later driver
+    pass to re-execute differently."""
     from datawarehousefinal_spark.operators.olap import (
         merge_moment_state,
         moment_state,
@@ -4488,7 +4439,7 @@ def incremental_cube_moments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     half_b = orders.filter(F.col("o_orderkey") % 2 == 1)
     state = moment_state(half_a, ["anio", "o_orderstatus"], "o_totalprice")
     delta = moment_state(half_b, ["anio", "o_orderstatus"], "o_totalprice")
-    return _rebuilt(serve_moments_exact(merge_moment_state(state, delta)))
+    return local_result(serve_moments_exact(merge_moment_state(state, delta)))
 
 
 _BM25_ORACLE = """
@@ -4764,19 +4715,22 @@ def compaction_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = _scratch_path("compact_src", sf_dir)
-    orders.repartition(64).write.mode("overwrite").parquet(path)
-    out = compact_parquet(
-        spark, path, target_partitions=4, out_path=_scratch_path("compact_out", sf_dir)
-    )
-    n_files = len(_glob.glob(f"{out}/part-*.parquet"))
-    if n_files > 4:
-        raise RuntimeError(f"compaction left {n_files} files, expected <= 4")
-    return _eager((
-        spark.read.parquet(out)
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"), _money_sum("o_totalprice").alias("total"))
-    ))
+    with (
+        _scratch_path("compact_src", sf_dir) as path,
+        _scratch_path("compact_out", sf_dir) as out_path,
+    ):
+        orders.repartition(64).write.mode("overwrite").parquet(path)
+        out = compact_parquet(
+            spark, path, target_partitions=4, out_path=out_path
+        )
+        n_files = len(_glob.glob(f"{out}/part-*.parquet"))
+        if n_files > 4:
+            raise RuntimeError(f"compaction left {n_files} files, expected <= 4")
+        return local_result((
+            spark.read.parquet(out)
+            .groupBy("o_orderstatus")
+            .agg(F.count(F.lit(1)).alias("n"), _money_sum("o_totalprice").alias("total"))
+        ))
 
 
 @query(
@@ -4797,51 +4751,53 @@ def bucketed_join_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB contract; a runtime guard fails the query if the plan ever
     re-shuffles the join inputs (≤1 Exchange total: the final segment
     aggregation)."""
-    import os as _os
-
     from datawarehousefinal_spark.plans import exchange_count
     from datawarehousefinal_spark.sources.bucketing import (
         read_table,
         write_bucketed,
     )
 
-    pid = _os.getpid()
+    pid = os.getpid()
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    write_bucketed(
-        orders.repartition(8, "o_custkey"),
-        f"b_orders_{pid}",
-        ["o_custkey"],
-        8,
-        sort_cols=["o_custkey"],
-        path=_scratch_path("bucket_orders", sf_dir),
-    )
-    write_bucketed(
-        customer.repartition(8, "c_custkey"),
-        f"b_customer_{pid}",
-        ["c_custkey"],
-        8,
-        sort_cols=["c_custkey"],
-        path=_scratch_path("bucket_customer", sf_dir),
-    )
-    bo = read_table(spark, f"b_orders_{pid}")
-    bc = read_table(spark, f"b_customer_{pid}")
-    joined = bo.join(bc, bo.o_custkey == bc.c_custkey).groupBy(
-        "c_mktsegment"
-    ).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        _money_sum("o_totalprice").alias("revenue"),
-    )
-    n_ex = exchange_count(joined)
-    if n_ex > 1:
-        raise RuntimeError(
-            f"bucketed join re-shuffled: {n_ex} Exchanges (expected <=1)"
+    with (
+        _scratch_path("bucket_orders", sf_dir) as orders_path,
+        _scratch_path("bucket_customer", sf_dir) as customer_path,
+    ):
+        write_bucketed(
+            orders.repartition(8, "o_custkey"),
+            f"b_orders_{pid}",
+            ["o_custkey"],
+            8,
+            sort_cols=["o_custkey"],
+            path=orders_path,
         )
-    return _eager(joined)
+        write_bucketed(
+            customer.repartition(8, "c_custkey"),
+            f"b_customer_{pid}",
+            ["c_custkey"],
+            8,
+            sort_cols=["c_custkey"],
+            path=customer_path,
+        )
+        bo = read_table(spark, f"b_orders_{pid}")
+        bc = read_table(spark, f"b_customer_{pid}")
+        joined = bo.join(bc, bo.o_custkey == bc.c_custkey).groupBy(
+            "c_mktsegment"
+        ).agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            _money_sum("o_totalprice").alias("revenue"),
+        )
+        n_ex = exchange_count(joined)
+        if n_ex > 1:
+            raise RuntimeError(
+                f"bucketed join re-shuffled: {n_ex} Exchanges (expected <=1)"
+            )
+        return local_result(joined)
 
 
 @query(
@@ -4867,9 +4823,9 @@ def partition_overwrite_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFra
     (append would double it; static overwrite would erase the others),
     and a runtime guard requires the partition filter to prune at the
     scan (PartitionFilters, not a post-scan filter). The 5-row result is
-    collect-rebuilt (``_rebuilt``) so the returned frame has zero
-    lineage to the scratch dir or block storage — nothing a later
-    driver hash pass could re-execute against mutated state.
+    a ``local_result``, so the returned frame has zero lineage to the
+    scratch dir — nothing a later driver hash pass could re-execute
+    against mutated state.
 
     SELF-DIAGNOSING (round-10 verdict #2, after three opaque driver
     reds): the face computes the EXPECTED per-partition (n, sum) from
@@ -4887,64 +4843,64 @@ def partition_overwrite_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFra
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    path = _scratch_path("part_overwrite", sf_dir)
-    overwrite_partitions(events, path, ["event_type"])
-    replay = events.filter(F.col("event_type") == "click").select(
-        "event_id",
-        (F.col("user_id") + 1000000).alias("user_id"),
-        "event_type",
-    )
-    overwrite_partitions(replay, path, ["event_type"])
-    back = spark.read.parquet(path)
-    pruned = back.filter(F.col("event_type") == "click")
-    plan = physical_plan(pruned)
-    seg = plan.split("PartitionFilters", 1)
-    if len(seg) < 2 or "event_type" not in seg[1][:120]:
-        raise RuntimeError("partition filter did not prune at the scan")
-    result = _rebuilt(back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("user_id").alias("user_id_sum"),
-    ))
-    # Expected per-partition (n, sum) straight from the source: click
-    # gets the +1e6-per-row correction, every other partition is
-    # untouched. Both aggregates are exact integers.
-    expected = {
-        r["event_type"]: (
-            r["n"],
-            r["s"] + (1000000 * r["n"] if r["event_type"] == "click" else 0),
+    with _scratch_path("part_overwrite", sf_dir) as path:
+        overwrite_partitions(events, path, ["event_type"])
+        replay = events.filter(F.col("event_type") == "click").select(
+            "event_id",
+            (F.col("user_id") + 1000000).alias("user_id"),
+            "event_type",
         )
-        for r in events.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("user_id").alias("s"))
-        .collect()
-    }
-    observed = {
-        r["event_type"]: (r["n"], r["user_id_sum"]) for r in result.collect()
-    }
-    if observed != expected:
-        pre_replay = {
-            et: (n, s - (1000000 * n if et == "click" else 0))
-            for et, (n, s) in expected.items()
+        overwrite_partitions(replay, path, ["event_type"])
+        back = spark.read.parquet(path)
+        pruned = back.filter(F.col("event_type") == "click")
+        plan = physical_plan(pruned)
+        seg = plan.split("PartitionFilters", 1)
+        if len(seg) < 2 or "event_type" not in seg[1][:120]:
+            raise RuntimeError("partition filter did not prune at the scan")
+        result = local_result(back.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("user_id").alias("user_id_sum"),
+        ))
+        # Expected per-partition (n, sum) straight from the source: click
+        # gets the +1e6-per-row correction, every other partition is
+        # untouched. Both aggregates are exact integers.
+        expected = {
+            r["event_type"]: (
+                r["n"],
+                r["s"] + (1000000 * r["n"] if r["event_type"] == "click" else 0),
+            )
+            for r in events.groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("user_id").alias("s"))
+            .collect()
         }
-        modes = []
-        ck_obs, ck_exp = observed.get("click"), expected.get("click")
-        if ck_obs and ck_exp and ck_obs[0] == 2 * ck_exp[0]:
-            modes.append("click rows DOUBLED => overwrite ran as APPEND")
-        missing = sorted(set(expected) - set(observed))
-        if missing:
-            modes.append(
-                f"partitions {missing} MISSING => static TRUNCATE overwrite"
+        observed = {
+            r["event_type"]: (r["n"], r["user_id_sum"]) for r in result.collect()
+        }
+        if observed != expected:
+            pre_replay = {
+                et: (n, s - (1000000 * n if et == "click" else 0))
+                for et, (n, s) in expected.items()
+            }
+            modes = []
+            ck_obs, ck_exp = observed.get("click"), expected.get("click")
+            if ck_obs and ck_exp and ck_obs[0] == 2 * ck_exp[0]:
+                modes.append("click rows DOUBLED => overwrite ran as APPEND")
+            missing = sorted(set(expected) - set(observed))
+            if missing:
+                modes.append(
+                    f"partitions {missing} MISSING => static TRUNCATE overwrite"
+                )
+            if ck_obs and ck_obs == pre_replay.get("click"):
+                modes.append(
+                    "click (n,sum) matches PRE-replay source => replay LOST"
+                )
+            raise RuntimeError(
+                "partition overwrite read-back diverged from source lineage: "
+                + ("; ".join(modes) if modes else "unclassified divergence")
+                + f" | observed={sorted(observed.items())}"
+                + f" expected={sorted(expected.items())}"
             )
-        if ck_obs and ck_obs == pre_replay.get("click"):
-            modes.append(
-                "click (n,sum) matches PRE-replay source => replay LOST"
-            )
-        raise RuntimeError(
-            "partition overwrite read-back diverged from source lineage: "
-            + ("; ".join(modes) if modes else "unclassified divergence")
-            + f" | observed={sorted(observed.items())}"
-            + f" expected={sorted(expected.items())}"
-        )
-    return result
+        return result
 
 
 @query(
@@ -4977,33 +4933,33 @@ def dynamic_partition_pruning_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "value", "event_type"
     )
-    base = _scratch_path("dpp", sf_dir)
-    fact_path, dim_path = f"{base}/fact", f"{base}/dim"
-    events.write.mode("overwrite").partitionBy("event_type").parquet(
-        fact_path
-    )
-    events.select("event_type").distinct().withColumn(
-        "category",
-        F.when(
-            F.col("event_type").isin("click", "view"), "engagement"
-        ).otherwise("other"),
-    ).write.mode("overwrite").parquet(dim_path)
-
-    fact = spark.read.parquet(fact_path)
-    dim = spark.read.parquet(dim_path).filter(
-        F.col("category") == "engagement"
-    )
-    joined = fact.join(dim, "event_type").groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("value").alias("total_value"),
-    )
-    plan = physical_plan(joined)
-    if "dynamicpruning" not in plan.lower():
-        raise RuntimeError(
-            "fact scan is not dynamically pruned (no dynamicpruning "
-            "expression in the plan)"
+    with _scratch_path("dpp", sf_dir) as base:
+        fact_path, dim_path = f"{base}/fact", f"{base}/dim"
+        events.write.mode("overwrite").partitionBy("event_type").parquet(
+            fact_path
         )
-    return _eager(joined)
+        events.select("event_type").distinct().withColumn(
+            "category",
+            F.when(
+                F.col("event_type").isin("click", "view"), "engagement"
+            ).otherwise("other"),
+        ).write.mode("overwrite").parquet(dim_path)
+
+        fact = spark.read.parquet(fact_path)
+        dim = spark.read.parquet(dim_path).filter(
+            F.col("category") == "engagement"
+        )
+        joined = fact.join(dim, "event_type").groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("value").alias("total_value"),
+        )
+        plan = physical_plan(joined)
+        if "dynamicpruning" not in plan.lower():
+            raise RuntimeError(
+                "fact scan is not dynamically pruned (no dynamicpruning "
+                "expression in the plan)"
+            )
+        return local_result(joined)
 
 
 @query(
@@ -5037,8 +4993,6 @@ def streaming_session_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     break only when the gap EXCEEDS 30 minutes — Spark merges windows
     on touching boundaries, so an event at exactly prev + gap still
     joins the session (pinned by the gap-edge test)."""
-    import shutil
-
     from datawarehousefinal_spark.streaming.pipeline import (
         read_parquet_stream,
         run_to_memory,
@@ -5046,20 +5000,19 @@ def streaming_session_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    base = _scratch_path("stream_sessions", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src = f"{base}/src"
-    events.repartition(2).write.parquet(src)
-    stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
-    sessions = session_window_counts(
-        stream, "user_id", "ts", gap="30 minutes", watermark="36500 days"
-    )
-    table = "dwf_stream_session_counts"
-    spark.catalog.dropTempView(table)
-    run_to_memory(sessions, table, "complete")
-    return _eager(spark.table(table).select(
-        "user_id", "session_start", F.col("n_events").cast("long")
-    ))
+    with _scratch_path("stream_sessions", sf_dir) as base:
+        src = f"{base}/src"
+        events.repartition(2).write.parquet(src)
+        stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
+        sessions = session_window_counts(
+            stream, "user_id", "ts", gap="30 minutes", watermark="36500 days"
+        )
+        table = "dwf_stream_session_counts"
+        spark.catalog.dropTempView(table)
+        run_to_memory(sessions, table, "complete")
+        return local_result(spark.table(table).select(
+            "user_id", "session_start", F.col("n_events").cast("long")
+        ))
 
 
 @query(
@@ -5086,8 +5039,6 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the batch interval join DuckDB computes directly. The
     watermark is set beyond the fixture's span so no pair is
     late-dropped; production sets it to the real lateness horizon."""
-    import shutil
-
     from datawarehousefinal_spark.streaming.pipeline import (
         read_parquet_stream,
         run_to_memory,
@@ -5097,28 +5048,27 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    base = _scratch_path("stream_ssjoin", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src = f"{base}/src"
-    events.repartition(2).write.parquet(src)
-    stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
-    views = stream.filter(F.col("event_type") == "view").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    joined = stream_stream_interval_join(
-        views, purchases, "user_id", max_delay="1 hour", watermark="36500 days"
-    )
-    table = "dwf_stream_interval_join"
-    spark.catalog.dropTempView(table)
-    run_to_memory(joined, table, "append")
-    return _eager(spark.table(table).select(
-        F.col("event_id").alias("view_id"),
-        F.col("event_id_r").alias("purchase_id"),
-        "user_id",
-    ))
+    with _scratch_path("stream_ssjoin", sf_dir) as base:
+        src = f"{base}/src"
+        events.repartition(2).write.parquet(src)
+        stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
+        views = stream.filter(F.col("event_type") == "view").select(
+            "event_id", "user_id", "ts"
+        )
+        purchases = stream.filter(F.col("event_type") == "purchase").select(
+            "event_id", "user_id", "ts"
+        )
+        joined = stream_stream_interval_join(
+            views, purchases, "user_id", max_delay="1 hour", watermark="36500 days"
+        )
+        table = "dwf_stream_interval_join"
+        spark.catalog.dropTempView(table)
+        run_to_memory(joined, table, "append")
+        return local_result(spark.table(table).select(
+            F.col("event_id").alias("view_id"),
+            F.col("event_id_r").alias("purchase_id"),
+            "user_id",
+        ))
 
 
 @query(
@@ -5413,8 +5363,6 @@ def orc_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionBy(anio) zlib ORC, read back, hash-match the direct
     aggregation. Partition values come back as directory strings — cast
     anio back to int."""
-    import os
-
     from datawarehousefinal_spark.sources.readers import read_orc
     from datawarehousefinal_spark.sources.writers import write_orc
 
@@ -5423,10 +5371,10 @@ def orc_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("anio"), F.col("o_orderstatus"))
         .agg(F.count(F.lit(1)).alias("n"), _money_sum("o_totalprice").alias("total"))
     )
-    path = _scratch_path("orc_sink", sf_dir)
-    write_orc(agg, path, partition_by=["anio"])
-    out = read_orc(spark, path)
-    return _eager(out.select(F.col("anio").cast("int"), "o_orderstatus", "n", "total"))
+    with _scratch_path("orc_sink", sf_dir) as path:
+        write_orc(agg, path, partition_by=["anio"])
+        out = read_orc(spark, path)
+        return local_result(out.select(F.col("anio").cast("int"), "o_orderstatus", "n", "total"))
 
 
 @query(
@@ -5446,9 +5394,6 @@ def streaming_stateful_totals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals-so-far per key, so the LAST emission per key (max n) is the
     final state — which must hash-match the direct batch aggregation.
     The stateful-operator analog of streaming_cube_counts' proof."""
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
     from datawarehousefinal_spark.streaming.pipeline import (
@@ -5461,23 +5406,22 @@ def streaming_stateful_totals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events").select("event_type", "value")
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = _scratch_path("stream_state", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src = f"{base}/src"
-    events.repartition(2).write.parquet(src)
-    stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
-    table = f"dwf_stateful_totals_{tag}"
-    spark.catalog.dropTempView(table)
-    run_to_memory(stateful_running_totals(stream, "event_type", "value"), table)
-    log = spark.table(table)
-    w = Window.partitionBy("key").orderBy(F.desc("n"))
-    # micro-batch accumulation order re-associates the sum — contract
-    return _eager(_ulp_contract(
-        log.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("key", "n", "total"),
-        "total",
-    ))
+    with _scratch_path("stream_state", sf_dir) as base:
+        src = f"{base}/src"
+        events.repartition(2).write.parquet(src)
+        stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
+        table = f"dwf_stateful_totals_{tag}"
+        spark.catalog.dropTempView(table)
+        run_to_memory(stateful_running_totals(stream, "event_type", "value"), table)
+        log = spark.table(table)
+        w = Window.partitionBy("key").orderBy(F.desc("n"))
+        # micro-batch accumulation order re-associates the sum — contract
+        return local_result(_ulp_contract(
+            log.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .select("key", "n", "total"),
+            "total",
+        ))
 
 
 @query(
@@ -5498,8 +5442,6 @@ def streaming_dedup_daily_counts_q(spark: SparkSession, sf_dir: str) -> DataFram
     every original kept. The watermark is set beyond the fixture's time
     span so no genuine row is late-dropped; at production scale the
     horizon bounds state exactly like the windowed aggregations'."""
-    import shutil
-
     from datawarehousefinal_spark.streaming.pipeline import (
         read_parquet_stream,
         run_to_memory,
@@ -5507,23 +5449,22 @@ def streaming_dedup_daily_counts_q(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     events = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    base = _scratch_path("stream_dedup", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src = f"{base}/src"
-    replays = events.filter(F.col("event_id") % 7 == 0)
-    events.unionByName(replays).repartition(2).write.parquet(src)
-    stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
-    deduped = streaming_dedup(
-        stream, ["event_id"], "ts", watermark="36500 days"
-    )
-    table = "dwf_stream_dedup_counts"
-    spark.catalog.dropTempView(table)
-    run_to_memory(deduped, table, "append")
-    return _eager((
-        spark.table(table)
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    ))
+    with _scratch_path("stream_dedup", sf_dir) as base:
+        src = f"{base}/src"
+        replays = events.filter(F.col("event_id") % 7 == 0)
+        events.unionByName(replays).repartition(2).write.parquet(src)
+        stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
+        deduped = streaming_dedup(
+            stream, ["event_id"], "ts", watermark="36500 days"
+        )
+        table = "dwf_stream_dedup_counts"
+        spark.catalog.dropTempView(table)
+        run_to_memory(deduped, table, "append")
+        return local_result((
+            spark.table(table)
+            .groupBy(F.col("ts").cast("date").alias("day"))
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        ))
 
 
 @query(
@@ -5542,8 +5483,6 @@ def streaming_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     count after availableNow drains the source, which must hash-match
     the batch daily aggregation exactly — the streaming face of
     ``daily_counts``."""
-    import shutil
-
     from datawarehousefinal_spark.streaming.pipeline import (
         read_parquet_stream,
         run_to_memory,
@@ -5551,18 +5490,17 @@ def streaming_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    base = _scratch_path("stream_window", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src = f"{base}/src"
-    events.repartition(2).write.parquet(src)
-    stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
-    counts = windowed_event_counts(stream, "ts", "1 day", "1 day")
-    table = "dwf_stream_window_counts"
-    spark.catalog.dropTempView(table)
-    run_to_memory(counts, table, "complete")
-    return _eager(spark.table(table).select(
-        "fecha", F.col("movement_count").cast("long")
-    ))
+    with _scratch_path("stream_window", sf_dir) as base:
+        src = f"{base}/src"
+        events.repartition(2).write.parquet(src)
+        stream = read_parquet_stream(spark, src, events.schema, max_files_per_trigger=1)
+        counts = windowed_event_counts(stream, "ts", "1 day", "1 day")
+        table = "dwf_stream_window_counts"
+        spark.catalog.dropTempView(table)
+        run_to_memory(counts, table, "complete")
+        return local_result(spark.table(table).select(
+            "fecha", F.col("movement_count").cast("long")
+        ))
 
 
 @query(
@@ -5592,7 +5530,6 @@ def streaming_late_data_drop_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary is unambiguous), leaving the last two open days unemitted
     under the 1-day watermark delay."""
     import datetime as _dt
-    import shutil
 
     from datawarehousefinal_spark.streaming.pipeline import (
         STATE_PARTITIONS_LOCAL,
@@ -5606,30 +5543,29 @@ def streaming_late_data_drop_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.to_date("ts")), F.max(F.to_date("ts"))
     ).first()
     split = mn + (mx - mn) / 2
-    base = _scratch_path("stream_late", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src, out, ck = f"{base}/src", f"{base}/out", f"{base}/ck"
+    with _scratch_path("stream_late", sf_dir) as base:
+        src, out, ck = f"{base}/src", f"{base}/out", f"{base}/ck"
 
-    old_half = events.filter(F.to_date("ts") <= F.lit(split))
-    late_and_recent = events.filter(F.to_date("ts") > F.lit(split)).unionByName(
-        events.filter(F.to_date("ts") <= F.lit(mn + _dt.timedelta(days=3)))
-    )
+        old_half = events.filter(F.to_date("ts") <= F.lit(split))
+        late_and_recent = events.filter(F.to_date("ts") > F.lit(split)).unionByName(
+            events.filter(F.to_date("ts") <= F.lit(mn + _dt.timedelta(days=3)))
+        )
 
-    old_half.coalesce(1).write.mode("append").parquet(src)
-    counts1 = windowed_event_counts(
-        read_parquet_stream(spark, src, old_half.schema), "ts", "1 day", "1 day"
-    )
-    run_to_parquet(counts1, out, ck, state_partitions=STATE_PARTITIONS_LOCAL)
+        old_half.coalesce(1).write.mode("append").parquet(src)
+        counts1 = windowed_event_counts(
+            read_parquet_stream(spark, src, old_half.schema), "ts", "1 day", "1 day"
+        )
+        run_to_parquet(counts1, out, ck, state_partitions=STATE_PARTITIONS_LOCAL)
 
-    late_and_recent.coalesce(1).write.mode("append").parquet(src)
-    counts2 = windowed_event_counts(
-        read_parquet_stream(spark, src, old_half.schema), "ts", "1 day", "1 day"
-    )
-    run_to_parquet(counts2, out, ck, state_partitions=STATE_PARTITIONS_LOCAL)
+        late_and_recent.coalesce(1).write.mode("append").parquet(src)
+        counts2 = windowed_event_counts(
+            read_parquet_stream(spark, src, old_half.schema), "ts", "1 day", "1 day"
+        )
+        run_to_parquet(counts2, out, ck, state_partitions=STATE_PARTITIONS_LOCAL)
 
-    return _eager(spark.read.parquet(out).select(
-        "fecha", F.col("movement_count").cast("long")
-    ))
+        return local_result(spark.read.parquet(out).select(
+            "fecha", F.col("movement_count").cast("long")
+        ))
 
 
 # ---------------------------------------------------------------------------
@@ -6488,9 +6424,9 @@ def shard_export_manifest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    path = _scratch_path("shard_export", sf_dir)
-    write_hash_shards(docs, path, "doc_id", 8, seed=17)
-    return _eager(shard_manifest(spark, path, "doc_id"))
+    with _scratch_path("shard_export", sf_dir) as path:
+        write_hash_shards(docs, path, "doc_id", 8, seed=17)
+        return local_result(shard_manifest(spark, path, "doc_id"))
 
 
 _ENTITY_THRESH = int(0.3 * (1 << 60))  # same arithmetic as sample_hash
@@ -7355,9 +7291,11 @@ def streaming_cdc_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch through a foreachBatch upsert sink with an atomic
     staging-rename snapshot swap. The post-stream snapshot must
     hash-match the batch operator's oracle exactly — streaming and
-    batch MERGE provably share one semantics."""
-    import shutil
+    batch MERGE provably share one semantics.
 
+    It returns a lazy read of its per-call snapshot dir rather than a
+    ``local_result``: the snapshot is the whole orders table, which must
+    not be collected to the driver."""
     from datawarehousefinal_spark.streaming.pipeline import (
         foreach_batch_cdc_apply,
         read_parquet_stream,
@@ -7366,61 +7304,65 @@ def streaming_cdc_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base = _scratch_path("stream_cdc", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    snap, changes_dir, ck = f"{base}/snap", f"{base}/changes", f"{base}/ck"
+    # The snapshot dir outlives the call (see the docstring): the JVM
+    # that reads it deletes it at exit.
+    snap_dir = tempfile.mkdtemp(prefix="dwf_stream_cdc_snap_")
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(snap_dir)
+    jpath.getFileSystem(spark._jsc.hadoopConfiguration()).deleteOnExit(jpath)
+    snap = f"{snap_dir}/snap"
     orders.write.parquet(snap)
-
-    batch_a = (
-        orders.filter(F.col("o_orderkey") % 7 == 0)
-        .select(
-            "o_orderkey",
-            F.lit("U").alias("op"),
-            F.lit(1).alias("seq"),
-            F.lit("U").alias("o_orderstatus"),
-            (F.col("o_totalprice") * 1.1).alias("o_totalprice"),
-        )
-        .unionByName(
-            orders.filter(F.col("o_orderkey") % 11 == 0).select(
+    with _scratch_path("stream_cdc", sf_dir) as base:
+        changes_dir, ck = f"{base}/changes", f"{base}/ck"
+        batch_a = (
+            orders.filter(F.col("o_orderkey") % 7 == 0)
+            .select(
                 "o_orderkey",
-                F.lit("D").alias("op"),
-                F.lit(2).alias("seq"),
-                F.lit(None).cast("string").alias("o_orderstatus"),
-                F.lit(None).cast("double").alias("o_totalprice"),
+                F.lit("U").alias("op"),
+                F.lit(1).alias("seq"),
+                F.lit("U").alias("o_orderstatus"),
+                (F.col("o_totalprice") * 1.1).alias("o_totalprice"),
             )
-        )
-    )
-    batch_b = orders.filter(F.col("o_orderkey") % 13 == 0).select(
-        (F.col("o_orderkey") + 100000000).alias("o_orderkey"),
-        F.lit("I").alias("op"),
-        F.lit(1).alias("seq"),
-        F.lit("N").alias("o_orderstatus"),
-        F.lit(1.0).alias("o_totalprice"),
-    )
-    batch_a.coalesce(1).write.mode("append").parquet(changes_dir)
-    batch_b.coalesce(1).write.mode("append").parquet(changes_dir)
-
-    stream = read_parquet_stream(
-        spark, changes_dir, batch_a.schema, max_files_per_trigger=1
-    )
-    from datawarehousefinal_spark.streaming.pipeline import (
-        STATE_PARTITIONS_LOCAL,
-        scoped_shuffle_partitions,
-    )
-
-    with scoped_shuffle_partitions(spark, STATE_PARTITIONS_LOCAL):
-        (
-            stream.writeStream.foreachBatch(
-                foreach_batch_cdc_apply(
-                    snap, ["o_orderkey"], op_col="op", seq_col="seq"
+            .unionByName(
+                orders.filter(F.col("o_orderkey") % 11 == 0).select(
+                    "o_orderkey",
+                    F.lit("D").alias("op"),
+                    F.lit(2).alias("seq"),
+                    F.lit(None).cast("string").alias("o_orderstatus"),
+                    F.lit(None).cast("double").alias("o_totalprice"),
                 )
             )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
         )
-    return _eager(spark.read.parquet(snap))
+        batch_b = orders.filter(F.col("o_orderkey") % 13 == 0).select(
+            (F.col("o_orderkey") + 100000000).alias("o_orderkey"),
+            F.lit("I").alias("op"),
+            F.lit(1).alias("seq"),
+            F.lit("N").alias("o_orderstatus"),
+            F.lit(1.0).alias("o_totalprice"),
+        )
+        batch_a.coalesce(1).write.mode("append").parquet(changes_dir)
+        batch_b.coalesce(1).write.mode("append").parquet(changes_dir)
+
+        stream = read_parquet_stream(
+            spark, changes_dir, batch_a.schema, max_files_per_trigger=1
+        )
+        from datawarehousefinal_spark.streaming.pipeline import (
+            STATE_PARTITIONS_LOCAL,
+            scoped_shuffle_partitions,
+        )
+
+        with scoped_shuffle_partitions(spark, STATE_PARTITIONS_LOCAL):
+            (
+                stream.writeStream.foreachBatch(
+                    foreach_batch_cdc_apply(
+                        snap, ["o_orderkey"], op_col="op", seq_col="seq"
+                    )
+                )
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+    return spark.read.parquet(snap)
 
 
 @query(
@@ -7618,8 +7560,6 @@ def schema_evolution_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLs. The aggregate proves missing-column semantics end-to-end;
     the oracle emulates the evolution with a CASE over the source view
     (the scratch files are this process's own)."""
-    import shutil
-
     from datawarehousefinal_spark.sources.readers import (
         read_parquet_evolving,
     )
@@ -7627,26 +7567,25 @@ def schema_evolution_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    base = _scratch_path("schema_evo", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    orders.filter(F.col("o_orderkey") % 2 == 0).drop(
-        "o_orderstatus"
-    ).write.parquet(f"{base}/batch_a")
-    orders.filter(F.col("o_orderkey") % 2 != 0).write.parquet(
-        f"{base}/batch_b"
-    )
-    merged = read_parquet_evolving(
-        spark,
-        [f"{base}/batch_a", f"{base}/batch_b"],
-        required={"o_clerk": "string"},
-    )
-    return _eager(merged.groupBy(
-        F.coalesce(F.col("o_orderstatus"), F.lit("<missing>")).alias("status")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        _money_sum("o_totalprice").alias("total"),
-        F.count("o_clerk").cast("long").alias("n_clerk"),
-    ))
+    with _scratch_path("schema_evo", sf_dir) as base:
+        orders.filter(F.col("o_orderkey") % 2 == 0).drop(
+            "o_orderstatus"
+        ).write.parquet(f"{base}/batch_a")
+        orders.filter(F.col("o_orderkey") % 2 != 0).write.parquet(
+            f"{base}/batch_b"
+        )
+        merged = read_parquet_evolving(
+            spark,
+            [f"{base}/batch_a", f"{base}/batch_b"],
+            required={"o_clerk": "string"},
+        )
+        return local_result(merged.groupBy(
+            F.coalesce(F.col("o_orderstatus"), F.lit("<missing>")).alias("status")
+        ).agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            _money_sum("o_totalprice").alias("total"),
+            F.count("o_clerk").cast("long").alias("n_clerk"),
+        ))
 
 
 @query(
@@ -7864,9 +7803,9 @@ def dsir_importance_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     target = docs.filter(F.col("doc_id") % 10 == 0)
-    out = dsir_importance(docs, target, "doc_id", "text", n_buckets=4096)
-    # per-doc log-ratio sum re-associates — serve-boundary contract
-    return _ulp_contract(out, "log_weight")
+    with dsir_importance(docs, target, "doc_id", "text", n_buckets=4096) as out:
+        # per-doc log-ratio sum re-associates — serve-boundary contract
+        return local_result(_ulp_contract(out, "log_weight"))
 
 
 @query(
@@ -7919,38 +7858,38 @@ def dsir_resampled_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source"
     )
     txt = docs.select("doc_id", "text")
-    scores = dsir_importance(
+    with dsir_importance(
         txt, txt.filter(F.col("doc_id") % 10 == 0), "doc_id", "text", 4096
-    )
-    samp = weighted_sample_exact(
-        scores.withColumn("w", F.exp("log_weight")), "doc_id", "w", 200
-    ).select("doc_id")
-    corpus_mix = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs_corpus")
-    )
-    samp_mix = (
-        docs.join(samp, "doc_id").groupBy("source").agg(
-            F.count(F.lit(1)).alias("__n_s")
+    ) as scores:
+        samp = weighted_sample_exact(
+            scores.withColumn("w", F.exp("log_weight")), "doc_id", "w", 200
+        ).select("doc_id")
+        corpus_mix = docs.groupBy("source").agg(
+            F.count(F.lit(1)).alias("n_docs_corpus")
         )
-    )
-    w_all = Window.partitionBy()
-    return (
-        corpus_mix.join(samp_mix, "source", "left")
-        .withColumn("n_docs_sampled", F.coalesce("__n_s", F.lit(0)))
-        .select(
-            "source",
-            "n_docs_corpus",
-            "n_docs_sampled",
-            (
-                F.col("n_docs_corpus").cast("double")
-                / F.sum("n_docs_corpus").over(w_all)
-            ).alias("share_corpus"),
-            (
-                F.col("n_docs_sampled").cast("double")
-                / F.sum("n_docs_sampled").over(w_all)
-            ).alias("share_sampled"),
+        samp_mix = (
+            docs.join(samp, "doc_id").groupBy("source").agg(
+                F.count(F.lit(1)).alias("__n_s")
+            )
         )
-    )
+        w_all = Window.partitionBy()
+        return local_result(
+            corpus_mix.join(samp_mix, "source", "left")
+            .withColumn("n_docs_sampled", F.coalesce("__n_s", F.lit(0)))
+            .select(
+                "source",
+                "n_docs_corpus",
+                "n_docs_sampled",
+                (
+                    F.col("n_docs_corpus").cast("double")
+                    / F.sum("n_docs_corpus").over(w_all)
+                ).alias("share_corpus"),
+                (
+                    F.col("n_docs_sampled").cast("double")
+                    / F.sum("n_docs_sampled").over(w_all)
+                ).alias("share_sampled"),
+            )
+        )
 
 
 @query(
@@ -8010,23 +7949,23 @@ def ppl_bucket_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization each consumer would re-run the floating sums with a
     # different partial-merge order and the equality join-back would
     # silently drop ulp-shifted rows. One row per scored doc — bounded.
-    scores = bigram_lm_perplexity(
+    with materialized(bigram_lm_perplexity(
         model, docs.filter(F.col("doc_id") % 2 == 1), "doc_id", "text"
-    ).persist()
-    qd = quantile_rank_normalize(scores, "ppl", "__q")
-    bucket = (
-        F.when(F.col("__q") < F.lit(1.0 / 3), "head")
-        .when(F.col("__q") < F.lit(2.0 / 3), "middle")
-        .otherwise("tail")
-    )
-    # ppl carries re-associated NLL sums — serve-boundary contract on
-    # the served extremes (bucket membership itself is count-exact)
-    return _ulp_contract(qd.groupBy(bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_bigrams").alias("n_bigrams_total"),
-        F.min("ppl").alias("min_ppl"),
-        F.max("ppl").alias("max_ppl"),
-    ), "min_ppl", "max_ppl")
+    )) as scores:
+        qd = quantile_rank_normalize(scores, "ppl", "__q")
+        bucket = (
+            F.when(F.col("__q") < F.lit(1.0 / 3), "head")
+            .when(F.col("__q") < F.lit(2.0 / 3), "middle")
+            .otherwise("tail")
+        )
+        # ppl carries re-associated NLL sums — serve-boundary contract on
+        # the served extremes (bucket membership itself is count-exact)
+        return local_result(_ulp_contract(qd.groupBy(bucket.alias("bucket")).agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_bigrams").alias("n_bigrams_total"),
+            F.min("ppl").alias("min_ppl"),
+            F.max("ppl").alias("max_ppl"),
+        ), "min_ppl", "max_ppl"))
 
 
 # Frozen BPE tokenizer model — the frozen_ann.py model-registry split:
@@ -8528,8 +8467,6 @@ def streaming_dim_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state store), then watermark-bounded daily counts per market
     segment. Complete mode after availableNow drains must hash-match
     the batch join+aggregate exactly."""
-    import shutil
-
     from datawarehousefinal_spark.streaming.pipeline import (
         read_parquet_stream,
         run_to_memory,
@@ -8542,20 +8479,19 @@ def streaming_dim_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    base = _scratch_path("stream_enrich", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src = f"{base}/src"
-    events.repartition(2).write.parquet(src)
-    stream = read_parquet_stream(
-        spark, src, events.schema, max_files_per_trigger=1
-    )
-    counts = stream_static_enrich(
-        stream, customer, "user_id", "c_mktsegment", "ts", "1 day", "1 day"
-    )
-    table = "dwf_stream_dim_enrich"
-    spark.catalog.dropTempView(table)
-    run_to_memory(counts, table, "complete")
-    return _eager(spark.table(table))
+    with _scratch_path("stream_enrich", sf_dir) as base:
+        src = f"{base}/src"
+        events.repartition(2).write.parquet(src)
+        stream = read_parquet_stream(
+            spark, src, events.schema, max_files_per_trigger=1
+        )
+        counts = stream_static_enrich(
+            stream, customer, "user_id", "c_mktsegment", "ts", "1 day", "1 day"
+        )
+        table = "dwf_stream_dim_enrich"
+        spark.catalog.dropTempView(table)
+        run_to_memory(counts, table, "complete")
+        return local_result(spark.table(table))
 
 
 def _ann_recall_oracle() -> str:

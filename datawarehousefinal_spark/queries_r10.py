@@ -1635,9 +1635,9 @@ def xml_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources.write_xml/read_xml say so loudly — so the face roundtrips
     an AGGREGATE (contract-small), never the fact table."""
     from datawarehousefinal_spark.queries import (
-        _eager,
         _money_sum,
         _scratch_path,
+        local_result,
     )
     from datawarehousefinal_spark.sources.readers import read_xml
     from datawarehousefinal_spark.sources.writers import write_xml
@@ -1652,15 +1652,15 @@ def xml_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             _money_sum("o_totalprice").alias("total"),
         )
     )
-    path = _scratch_path("xml_sink", sf_dir)
-    write_xml(agg, path, row_tag="cell", root_tag="cube")
-    out = read_xml(
-        spark,
-        path,
-        row_tag="cell",
-        schema="anio INT, o_orderpriority STRING, n BIGINT, total DOUBLE",
-    )
-    return _eager(out.select("anio", "o_orderpriority", "n", "total"))
+    with _scratch_path("xml_sink", sf_dir) as path:
+        write_xml(agg, path, row_tag="cell", root_tag="cube")
+        out = read_xml(
+            spark,
+            path,
+            row_tag="cell",
+            schema="anio INT, o_orderpriority STRING, n BIGINT, total DOUBLE",
+        )
+        return local_result(out.select("anio", "o_orderpriority", "n", "total"))
 
 
 @query(

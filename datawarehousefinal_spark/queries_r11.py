@@ -322,25 +322,26 @@ def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_aggregate,
         mdx_query_navigated,
     )
-    from datawarehousefinal_spark.queries import _rebuilt, _scratch_path
+    from datawarehousefinal_spark.queries import _scratch_path, local_result
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)
-    rollup = materialize_aggregate(
-        cube,
-        ["Fecha.Mes", "Cliente.Segmento"],
-        path=_scratch_path("mdx_aggnav", sf_dir),
-        name="agg_mes_segmento",
-    )
-    # finer decoy (kept in-memory): also covers the query — the
-    # navigator must still pick the smaller month-grain table
-    decoy = materialize_aggregate(
-        cube, ["Fecha.Dia", "Cliente.Segmento"], name="agg_dia_segmento"
-    )
-    out = mdx_query_navigated(
-        cube, _MDX_MONTH_STATEMENT, [decoy, rollup]
-    )
-    return _rebuilt(out)
+    with _scratch_path("mdx_aggnav", sf_dir) as path:
+        rollup = materialize_aggregate(
+            cube,
+            ["Fecha.Mes", "Cliente.Segmento"],
+            path=path,
+            name="agg_mes_segmento",
+        )
+        # finer decoy (kept in-memory): also covers the query — the
+        # navigator must still pick the smaller month-grain table
+        decoy = materialize_aggregate(
+            cube, ["Fecha.Dia", "Cliente.Segmento"], name="agg_dia_segmento"
+        )
+        out = mdx_query_navigated(
+            cube, _MDX_MONTH_STATEMENT, [decoy, rollup]
+        )
+        return local_result(out)
 
 
 @query(

@@ -491,37 +491,38 @@ def mdx_navigator_partition_pruned_q(
     equality proves the route+prune returned the exact fact-path
     answer. At 100 TB this compounds the two layout levers: the rollup
     collapses the fact to cells, the partitioning makes a diced read
-    touch only the diced cells' files. Result is ``_rebuilt`` so the
-    driver's hash pass never re-reads the scratch rollup."""
+    touch only the diced cells' files. Result is a ``local_result`` so
+    the driver's hash pass never re-reads the scratch rollup."""
     from datawarehousefinal_spark.operators.aggnav import (
         materialize_aggregate,
         mdx_query_navigated,
     )
     from datawarehousefinal_spark.plans.audit import physical_plan
-    from datawarehousefinal_spark.queries import _rebuilt, _scratch_path
+    from datawarehousefinal_spark.queries import _scratch_path, local_result
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)
-    agg = materialize_aggregate(
-        cube,
-        ["Fecha.Anio", "Persona.Nacionalidad"],
-        path=_scratch_path("agg_nav_part", sf_dir),
-        partition_by="Fecha.Anio",
-    )
-    out = mdx_query_navigated(cube, _MDX_NAV_PRUNED_STATEMENT, [agg])
-    plan = physical_plan(out)
-    # bracket-scoped check: "anio" must appear INSIDE the
-    # PartitionFilters list itself — a substring scan past the bracket
-    # would false-pass on an empty list followed by
-    # PushedFilters/ReadSchema text that also mentions the column
-    import re as _re
-
-    pf = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    if pf is None or "anio" not in pf.group(1):
-        raise RuntimeError(
-            "year dice did not prune the partitioned rollup at the scan"
+    with _scratch_path("agg_nav_part", sf_dir) as path:
+        agg = materialize_aggregate(
+            cube,
+            ["Fecha.Anio", "Persona.Nacionalidad"],
+            path=path,
+            partition_by="Fecha.Anio",
         )
-    return _rebuilt(out)
+        out = mdx_query_navigated(cube, _MDX_NAV_PRUNED_STATEMENT, [agg])
+        plan = physical_plan(out)
+        # bracket-scoped check: "anio" must appear INSIDE the
+        # PartitionFilters list itself — a substring scan past the bracket
+        # would false-pass on an empty list followed by
+        # PushedFilters/ReadSchema text that also mentions the column
+        import re as _re
+
+        pf = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        if pf is None or "anio" not in pf.group(1):
+            raise RuntimeError(
+                "year dice did not prune the partitioned rollup at the scan"
+            )
+        return local_result(out)
 
 
 # ---------------------------------------------------------------------------

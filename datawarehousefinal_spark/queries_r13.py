@@ -89,33 +89,34 @@ def advisor_materialized_route_q(
     story — ONE advisor pass (a single wide count-distinct aggregate
     over the star) + one materialization shuffle per pick buys every
     future dashboard query a kilobyte rollup read instead of a fact
-    scan. Result is ``_rebuilt`` so the driver's hash pass never
+    scan. Result is a ``local_result`` so the driver's hash pass never
     re-reads the scratch rollups."""
     from datawarehousefinal_spark.operators.aggnav import (
         materialize_recommended,
     )
     from datawarehousefinal_spark.operators.mdx import mdx_query
     from datawarehousefinal_spark.plans.audit import physical_plan
-    from datawarehousefinal_spark.queries import _rebuilt, _scratch_path
+    from datawarehousefinal_spark.queries import _scratch_path, local_result
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)
-    tables = materialize_recommended(
-        cube,
-        _ADVISOR_ROUTE_WORKLOAD,
-        max_tables=2,
-        path_prefix=_scratch_path("advisor_route", sf_dir),
-    )
-    if not tables:
-        raise RuntimeError("advisor recommended nothing for the workload")
-    out = mdx_query(cube, _ADVISOR_ROUTE_WORKLOAD[0])
-    plan = physical_plan(out)
-    if "parquet" not in plan.lower():
-        raise RuntimeError(
-            "front-door query did not route to the materialized "
-            "recommendation — the face would silently prove nothing"
+    with _scratch_path("advisor_route", sf_dir) as path:
+        tables = materialize_recommended(
+            cube,
+            _ADVISOR_ROUTE_WORKLOAD,
+            max_tables=2,
+            path_prefix=path,
         )
-    return _rebuilt(out)
+        if not tables:
+            raise RuntimeError("advisor recommended nothing for the workload")
+        out = mdx_query(cube, _ADVISOR_ROUTE_WORKLOAD[0])
+        plan = physical_plan(out)
+        if "parquet" not in plan.lower():
+            raise RuntimeError(
+                "front-door query did not route to the materialized "
+                "recommendation — the face would silently prove nothing"
+            )
+        return local_result(out)
 
 
 # ---------------------------------------------------------------------------

@@ -301,18 +301,19 @@ def rfm_segment_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition ntile() window; the oracle replays the identical
     ``1 + (rank-1)*4 DIV n`` integer formula. Monetary re-accumulates
     in decimal at both levels so no double sum touches the hash."""
+    from datawarehousefinal_spark.materialize import local_result
     from datawarehousefinal_spark.operators.retail import rfm_scores
 
     orders = load_table(spark, sf_dir, "orders")
-    scored = rfm_scores(
+    with rfm_scores(
         orders, "o_custkey", "o_orderdate", "o_totalprice", n_buckets=4
-    )
-    return scored.groupBy("r_score", "f_score", "m_score").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.col("monetary").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_monetary"),
-    )
+    ) as scored:
+        return local_result(scored.groupBy("r_score", "f_score", "m_score").agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum(F.col("monetary").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total_monetary"),
+        ))
 
 
 # ---------------------------------------------------------------------------
@@ -410,6 +411,7 @@ def supplier_triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-law graphs at 100 TB); the oracle counts the same triangles
     by the id-ordered 3-join identity, which agrees because each
     undirected triangle is counted exactly once by both."""
+    from datawarehousefinal_spark.materialize import local_result
     from datawarehousefinal_spark.operators.graph import triangle_count
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -423,8 +425,8 @@ def supplier_triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_co"))
         .filter(F.col("n_co") >= 4)
     )
-    _per_node, totals = triangle_count(edges, "u", "v")
-    return totals.select("n_nodes", "n_edges", "n_triangles")
+    with triangle_count(edges, "u", "v") as (_per_node, totals):
+        return local_result(totals.select("n_nodes", "n_edges", "n_triangles"))
 
 
 # ---------------------------------------------------------------------------
@@ -684,9 +686,7 @@ def streaming_sliding_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Watermark far beyond the fixture span so no genuine row drops; at
     production scale the horizon bounds state to window/slide rows per
     key."""
-    import shutil
-
-    from datawarehousefinal_spark.queries import _eager, _scratch_path
+    from datawarehousefinal_spark.queries import _scratch_path, local_result
     from datawarehousefinal_spark.streaming.pipeline import (
         read_parquet_stream,
         run_to_memory,
@@ -694,24 +694,23 @@ def streaming_sliding_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    base = _scratch_path("stream_sliding", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    src = f"{base}/src"
-    events.repartition(2).write.parquet(src)
-    stream = read_parquet_stream(
-        spark, src, events.schema, max_files_per_trigger=1
-    )
-    counts = sliding_window_counts(
-        stream, "ts", "2 days", "1 day", watermark="36500 days"
-    )
-    table = "dwf_stream_sliding_counts"
-    spark.catalog.dropTempView(table)
-    run_to_memory(counts, table, "complete")
-    return _eager(
-        spark.table(table).select(
-            "w_start", "w_end", F.col("n_events").cast("long")
+    with _scratch_path("stream_sliding", sf_dir) as base:
+        src = f"{base}/src"
+        events.repartition(2).write.parquet(src)
+        stream = read_parquet_stream(
+            spark, src, events.schema, max_files_per_trigger=1
         )
-    )
+        counts = sliding_window_counts(
+            stream, "ts", "2 days", "1 day", watermark="36500 days"
+        )
+        table = "dwf_stream_sliding_counts"
+        spark.catalog.dropTempView(table)
+        run_to_memory(counts, table, "complete")
+        return local_result(
+            spark.table(table).select(
+                "w_start", "w_end", F.col("n_events").cast("long")
+            )
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -11,11 +11,31 @@ per-file options are explicit.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from datawarehousefinal_spark.materialize import materialized
+
 _CORRUPT_COL = "_corrupt_record"
+
+
+@contextmanager
+def _corrupt_split(scan: DataFrame) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """``(good_rows, corrupt_raw_lines)`` of a PERMISSIVE scan with a
+    corrupt-record column, valid inside the block. Spark disallows
+    filtering on the corrupt column of an uncached scan, so the scan is
+    persisted for the block and released on exit."""
+    with materialized(scan) as df:
+        yield (
+            df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL),
+            df.filter(F.col(_CORRUPT_COL).isNotNull()).select(
+                F.col(_CORRUPT_COL).alias("raw_line")
+            ),
+        )
 
 
 def read_csv_typed(
@@ -44,6 +64,7 @@ def read_csv_typed(
     )
 
 
+@contextmanager
 def read_csv_with_repair(
     spark: SparkSession,
     path: str | list[str],
@@ -51,22 +72,18 @@ def read_csv_with_repair(
     sep: str = ",",
     encoding: str = "UTF-8",
     header: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+) -> Iterator[tuple[DataFrame, DataFrame]]:
     """S3: permissive scan that splits off malformed rows for repair.
 
     The reference's ``rowFixer`` re-parses rows whose field count differs
     from the header (Datos/preprocessing.py:152-187). Distributed version:
-    read PERMISSIVE with a corrupt-record column; return
+    read PERMISSIVE with a corrupt-record column and yield
     ``(good_rows, corrupt_raw_lines)``. Callers can re-parse the corrupt
     lines with ``from_csv`` under a different dialect and union back.
 
-    Cache lifetime: the permissive scan must be cached (Spark disallows
-    filtering on the corrupt column of an uncached scan) and BOTH
-    returned frames read through it, so this function cannot unpersist
-    it. The caller owns it — both frames expose the shared scan as
-    ``.cached_scan``; call ``good.cached_scan.unpersist()`` once the
-    good/bad split is materialized, or a long-lived session strands the
-    cached blocks in the block manager.
+    A context manager: both frames read one cached scan, which is
+    released when the block exits, so materialize what you need inside
+    it (``with read_csv_with_repair(...) as (good, bad): ...``).
     """
     schema_with_corrupt = StructType(
         list(schema.fields) + [StructField(_CORRUPT_COL, StringType(), True)]
@@ -80,15 +97,8 @@ def read_csv_with_repair(
         .option("columnNameOfCorruptRecord", _CORRUPT_COL)
         .csv(path)
     )
-    # Spark requires caching before filtering on the corrupt-record column.
-    df = df.cache()
-    good = df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
-    bad = df.filter(F.col(_CORRUPT_COL).isNotNull()).select(
-        F.col(_CORRUPT_COL).alias("raw_line")
-    )
-    good.cached_scan = df
-    bad.cached_scan = df
-    return good, bad
+    with _corrupt_split(df) as split:
+        yield split
 
 
 def repair_rows(bad: DataFrame, schema: StructType, sep: str = ",") -> DataFrame:
@@ -222,21 +232,17 @@ def read_jsonl(
     return spark.read.schema(schema).json(path)
 
 
+@contextmanager
 def read_jsonl_with_repair(
     spark: SparkSession, path: str | list[str], schema: StructType
-) -> tuple[DataFrame, DataFrame]:
+) -> Iterator[tuple[DataFrame, DataFrame]]:
     """The JSONL twin of :func:`read_csv_with_repair` (S3's rowFixer
     contract for the other line-delimited format): PERMISSIVE scan with
-    a corrupt-record column; returns ``(good_rows, corrupt_raw_lines)``
+    a corrupt-record column; yields ``(good_rows, corrupt_raw_lines)``
     so callers can re-parse the corrupt lines under a repair rule
     (:func:`repair_json_rows`) and union back — instead of FAILFAST
     killing a 100 TB job for one bad line or DROPMALFORMED silently
-    losing rows.
-
-    Cache lifetime: same contract as :func:`read_csv_with_repair` — the
-    caller owns the shared cached scan (exposed on both frames as
-    ``.cached_scan``); unpersist it once the split is materialized, or
-    repeated calls in a long-lived session strand cached blocks."""
+    losing rows. Same block-scoped cached scan as the CSV variant."""
     schema_with_corrupt = StructType(
         list(schema.fields) + [StructField(_CORRUPT_COL, StringType(), True)]
     )
@@ -246,16 +252,8 @@ def read_jsonl_with_repair(
         .option("columnNameOfCorruptRecord", _CORRUPT_COL)
         .json(path)
     )
-    # same caching requirement as the CSV variant: Spark disallows
-    # filtering on the corrupt column of an uncached permissive scan
-    df = df.cache()
-    good = df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
-    bad = df.filter(F.col(_CORRUPT_COL).isNotNull()).select(
-        F.col(_CORRUPT_COL).alias("raw_line")
-    )
-    good.cached_scan = df
-    bad.cached_scan = df
-    return good, bad
+    with _corrupt_split(df) as split:
+        yield split
 
 
 def repair_json_rows(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from datawarehousefinal_spark.materialize import materialized
 from datawarehousefinal_spark.session import scoped_shuffle_partitions
 
 
@@ -378,8 +379,7 @@ def foreach_batch_incremental_dedup(
         # persisted survivors (their hashes are unique by construction,
         # so exact_store over them equals the operator's delta) instead
         # of from _delta, whose lineage would re-run the pipeline.
-        survivors = survivors.persist()
-        try:
+        with materialized(survivors) as survivors:
             # Survivors before delta: a crash between the writes leaves
             # the store missing this batch's hashes, so the replay
             # re-appends the same survivors — at-least-once on the
@@ -392,8 +392,6 @@ def foreach_batch_incremental_dedup(
             exact_store(survivors, text_col).write.mode("append").parquet(
                 store_path
             )
-        finally:
-            survivors.unpersist()
 
     return _dedup
 

@@ -19,29 +19,36 @@ def _docs(spark, sf_dir):
 
 def test_funnel_counts_monotone_and_consistent(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    curated, report = curate_corpus(
+    with curate_corpus(
         docs, min_chars=20, min_quality=0.1, shingle_width=W
-    )
-    rows = {r["stage"]: r["n_rows"] for r in report.collect()}
+    ) as (curated, report):
+        rows = {r["stage"]: r["n_rows"] for r in report.collect()}
+        n_curated = curated.count()
     assert list(rows) == [
         "00_input", "01_length", "02_rules", "03_exact_dedup", "04_near_dedup"
     ]
     ordered = [rows[k] for k in sorted(rows)]
     assert ordered == sorted(ordered, reverse=True)  # funnel never grows
     assert rows["00_input"] == docs.count()
-    assert curated.count() == rows["04_near_dedup"]
+    assert n_curated == rows["04_near_dedup"]
     # the near-dup stage must actually fire on this fixture (planted dups)
     assert rows["04_near_dedup"] < rows["03_exact_dedup"]
 
 
 def test_split_deterministic_and_disjoint(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    c1, _ = curate_corpus(docs, min_quality=0.1, shingle_width=W, val_pct=10)
-    c2, _ = curate_corpus(docs, min_quality=0.1, shingle_width=W, val_pct=10)
-    s1 = {(r["doc_id"], r["split"]) for r in c1.select("doc_id", "split").collect()}
-    s2 = {(r["doc_id"], r["split"]) for r in c2.select("doc_id", "split").collect()}
+    def assignment():
+        with curate_corpus(
+            docs, min_quality=0.1, shingle_width=W, val_pct=10
+        ) as (curated, _):
+            return {
+                (r["doc_id"], r["split"])
+                for r in curated.select("doc_id", "split").collect()
+            }
+
+    s1, s2 = assignment(), assignment()
     assert s1 == s2  # seeded hash bucket: same assignment every run
-    splits = {r["split"] for r in c1.select("split").distinct().collect()}
+    splits = {split for _, split in s1}
     assert splits <= {"train", "val"} and "train" in splits
 
 
@@ -53,20 +60,21 @@ def test_lang_filter_drops_disallowed(spark):
         ],
         ["doc_id", "text"],
     )
-    curated, _ = curate_corpus(
+    with curate_corpus(
         df, min_chars=5, min_quality=0.0, allowed_langs=["en"],
         shingle_width=5,
-    )
-    assert [r["doc_id"] for r in curated.collect()] == [1]
-    assert curated.collect()[0]["lang_pred"] == "en"
+    ) as (curated, _):
+        rows = curated.collect()
+    assert [r["doc_id"] for r in rows] == [1]
+    assert rows[0]["lang_pred"] == "en"
 
 
 def test_curation_plan_not_quadratic(spark, sf_dir):
     from datawarehousefinal_spark.plans.audit import assert_no_cartesian
 
     docs = _docs(spark, sf_dir)
-    curated, _ = curate_corpus(docs, min_quality=0.1, shingle_width=W)
-    assert_no_cartesian(curated)
+    with curate_corpus(docs, min_quality=0.1, shingle_width=W) as (curated, _):
+        assert_no_cartesian(curated)
 
 
 def test_deterministic_sample_nested_and_stable(spark):
@@ -167,14 +175,16 @@ def test_funnel_transitive_mode_merges_chains(spark):
         (4, "completely different content here entirely about spark"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    common = dict(
-        min_chars=5, min_quality=0.0, near_dup_threshold=0.9, persist=False
-    )
-    trans, _ = curate_corpus(docs, near_dup_mode="transitive", **common)
-    t_ids = sorted(r["doc_id"] for r in trans.collect())
+    def survivors(mode):
+        with curate_corpus(
+            docs, min_chars=5, min_quality=0.0, near_dup_threshold=0.9,
+            near_dup_mode=mode,
+        ) as (curated, _):
+            return sorted(r["doc_id"] for r in curated.collect())
+
+    t_ids = survivors("transitive")
     assert t_ids == [1, 4]  # whole chain collapses to its min id
-    greedy, _ = curate_corpus(docs, near_dup_mode="greedy", **common)
-    g_ids = sorted(r["doc_id"] for r in greedy.collect())
+    g_ids = survivors("greedy")
     assert 1 in g_ids and 4 in g_ids and 2 not in g_ids
     assert set(t_ids) <= set(g_ids)  # transitive is never weaker
 
@@ -378,8 +388,8 @@ def test_dsir_importance_prefers_target_like_docs(spark):
              for i in range(10)]
     raw = spark.createDataFrame(cooking + legal, "doc_id long, text string")
     target = spark.createDataFrame(cooking[:5], "doc_id long, text string")
-    out = {r["doc_id"]: r["log_weight"]
-           for r in dsir_importance(raw, target, "doc_id", "text").collect()}
+    with dsir_importance(raw, target, "doc_id", "text") as scores:
+        out = {r["doc_id"]: r["log_weight"] for r in scores.collect()}
     assert len(out) == 20
     # every cooking doc outranks every legal doc
     assert min(out[i] for i, _ in cooking) > max(out[i] for i, _ in legal)
@@ -392,8 +402,8 @@ def test_dsir_importance_feature_counts(spark):
         [(1, "a b c"), (2, "a"), (3, "")], "doc_id long, text string"
     )
     target = raw.filter("doc_id = 1")
-    out = {r["doc_id"]: r["n_feats"]
-           for r in dsir_importance(raw, target, "doc_id", "text").collect()}
+    with dsir_importance(raw, target, "doc_id", "text") as scores:
+        out = {r["doc_id"]: r["n_feats"] for r in scores.collect()}
     # 3 unigrams + 2 bigrams; 1 unigram; empty docs carry no features
     assert out == {1: 5, 2: 1}
 

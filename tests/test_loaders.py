@@ -275,10 +275,10 @@ def test_read_jsonl_with_repair_and_reparse(spark, tmp_path):
     ]
     p = tmp_path / "in.jsonl"
     p.write_text("\n".join(lines) + "\n")
-    good, bad = read_jsonl_with_repair(spark, str(p), schema)
-    assert {r["k"] for r in good.collect()} == {1, 3}
-    assert bad.count() == 2
-    rep = repair_json_rows(bad, schema).collect()
+    with read_jsonl_with_repair(spark, str(p), schema) as (good, bad):
+        assert {r["k"] for r in good.collect()} == {1, 3}
+        assert bad.count() == 2
+        rep = repair_json_rows(bad, schema).collect()
     by_k = {r["k"]: r["v"] for r in rep}
     assert by_k.get(2) == "b"
     # the unrepairable line parses to an all-NULL row, never disappears

@@ -76,7 +76,8 @@ def test_rfm_scores_known_input(spark):
         (4, "2024-01-01", 10.0),
     ]
     df = spark.createDataFrame(rows, ["cust", "dt", "amt"])
-    out = {r["customer"]: r for r in rfm_scores(df, "cust", "dt", "amt").collect()}
+    with rfm_scores(df, "cust", "dt", "amt") as scored:
+        out = {r["customer"]: r for r in scored.collect()}
     assert out[1]["r_score"] == 4 and out[1]["m_score"] == 4
     assert out[4]["r_score"] == 1 and out[4]["m_score"] == 1
     assert out[1]["monetary"] == pytest.approx(900.0)
@@ -106,10 +107,10 @@ def test_triangle_count_known_graph(spark):
         (4, 5), (5, 4), (2, 1), (1, 1),
     ]
     df = spark.createDataFrame(edges, ["s", "d"])
-    per_node, totals = triangle_count(df, "s", "d")
-    t = totals.collect()[0]
+    with triangle_count(df, "s", "d") as (per_node, totals):
+        t = totals.collect()[0]
+        pn = {r["node"]: r["n_triangles"] for r in per_node.collect()}
     assert t["n_nodes"] == 5 and t["n_edges"] == 7 and t["n_triangles"] == 4
-    pn = {r["node"]: r["n_triangles"] for r in per_node.collect()}
     assert pn == {1: 3, 2: 3, 3: 3, 4: 3}  # each K4 vertex in 3 triangles
 
 
