@@ -18,7 +18,11 @@ def local_result(df: DataFrame) -> DataFrame:
     The rows never leave the JVM (``collectAsList`` feeds
     ``createDataFrame`` under the same schema), so values and types are
     untouched. Reserved for small results: the rows live in the driver.
+    A frame that optimizes to a local relation already is returned as
+    it is, without a job.
     """
+    if _is_local(df):
+        return df
     spark = df.sparkSession
     jdf = df._jdf
     return DataFrame(
@@ -27,25 +31,29 @@ def local_result(df: DataFrame) -> DataFrame:
     )
 
 
-def release(df: DataFrame) -> None:
-    """Free what pins ``df``: its Dataset cache entry, or the blocks of
-    the local checkpoint it reads. A no-op for a frame that is neither.
+def _is_local(df: DataFrame) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Free what pins each frame: its Dataset cache entry, or the blocks
+    of the local checkpoint it reads. A no-op for ``None`` and for a
+    frame that is neither.
 
     ``DataFrame.unpersist`` alone does not free a local checkpoint: the
     blocks belong to the RDD under the checkpoint's ``LogicalRDD`` and
     would stay until a JVM GC lets the ContextCleaner run.
     """
-    if df.storageLevel != StorageLevel.NONE:
-        df.unpersist()
-        return
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
-
-
-def _is_local(df: DataFrame) -> bool:
-    plan = df._jdf.queryExecution().optimizedPlan()
-    return plan.getClass().getSimpleName() == "LocalRelation"
+    for df in dfs:
+        if df is None:
+            continue
+        if df.storageLevel != StorageLevel.NONE:
+            df.unpersist()
+            continue
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
 
 
 @contextmanager

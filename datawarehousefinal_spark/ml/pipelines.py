@@ -26,6 +26,8 @@ model coefficients and scan metrics (O(k) scalars, not data).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from typing import Any
 
 from pyspark.ml import Pipeline, PipelineModel
@@ -188,26 +190,28 @@ def build_preprocessor(
     return Pipeline(stages=stages)
 
 
+@contextmanager
 def fit_preprocess(
     df: DataFrame,
     exclude: tuple[str, ...] = (),
     output_col: str = "features",
-) -> tuple[PipelineModel, DataFrame]:
-    """Fit the M1-M5 pipeline on ``df`` and return (model, transformed df
+) -> Iterator[tuple[PipelineModel, DataFrame]]:
+    """Fit the M1-M5 pipeline on ``df`` and yield (model, transformed df
     with the ``features`` column and intermediates dropped).
 
-    The imputed input is persisted for the fit (each estimator stage
-    scans it) and released before returning. The returned frame is
-    lazy: a consumer that re-scans it (KMeans iterations, CV folds,
-    evaluators) pins it with :func:`materialize.materialized`.
+    A context manager. The imputed input is persisted for the fit (each
+    estimator stage scans it); the features are transformed from that
+    cache and persisted too, because every consumer (KMeans iterations,
+    CV folds, evaluators) re-scans them. Both are released on exit.
     """
     numeric, categorical = split_feature_types(df, exclude)
-    filled = impute_most_frequent(df, categorical)
-    with materialized(filled) as pinned:
-        model = build_preprocessor(numeric, categorical, output_col).fit(pinned)
-    out = model.transform(filled)
-    helpers = [c for c in out.columns if c.startswith("__")]
-    return model, out.drop(*helpers)
+    with materialized(impute_most_frequent(df, categorical)) as filled:
+        model = build_preprocessor(numeric, categorical, output_col).fit(filled)
+        out = model.transform(filled)
+        helpers = [c for c in out.columns if c.startswith("__")]
+        with materialized(out.drop(*helpers)) as feats:
+            feats.count()
+            yield model, feats
 
 
 # ---------------------------------------------------------------------------

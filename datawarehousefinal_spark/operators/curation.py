@@ -101,9 +101,10 @@ def curate_corpus(
     if allowed_langs is not None:
         rules = rules.filter(F.col("lang_pred").isin(allowed_langs))
 
-    def near_dedup(exact: DataFrame) -> DataFrame:
+    @contextmanager
+    def near_dedup(exact: DataFrame) -> Iterator[DataFrame]:
         if near_dup_mode == "greedy":
-            near, _delta = incremental_minhash_dedup(
+            with incremental_minhash_dedup(
                 exact,
                 empty_minhash_store(exact, id_col, num_hashes),
                 id_col,
@@ -113,9 +114,9 @@ def curate_corpus(
                 bands=bands,
                 rows_per_band=rows_per_band,
                 shingle_width=shingle_width,
-            )
-            return near
-        if near_dup_mode == "transitive":
+            ) as (near, _delta):
+                yield near
+        elif near_dup_mode == "transitive":
             from datawarehousefinal_spark.operators.dedup import minhash_near_dupes
             from datawarehousefinal_spark.operators.graph import resolve_duplicates
 
@@ -129,17 +130,20 @@ def curate_corpus(
                 rows_per_band,
                 shingle_width,
             ).select("id_a", "id_b")
-            return resolve_duplicates(exact, pairs, id_col)
-        raise ValueError(
-            f"near_dup_mode must be 'greedy' or 'transitive', got {near_dup_mode!r}"
-        )
+            with resolve_duplicates(exact, pairs, id_col) as near:
+                yield near
+        else:
+            raise ValueError(
+                f"near_dup_mode must be 'greedy' or 'transitive', got {near_dup_mode!r}"
+            )
 
     with (
         materialized(rules.drop("__q")) as rules,
         materialized(
             exact_dedup(rules, text_col, [id_col], keep_count_col=None)
         ) as exact,
-        materialized(near_dedup(exact)) as near,
+        near_dedup(exact) as near,
+        materialized(near) as near,
     ):
         bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(100))
         curated = near.withColumn(
@@ -404,6 +408,7 @@ def token_budget_sample(
     )
 
 
+@contextmanager
 def leakage_safe_split(
     docs: DataFrame,
     id_col: str,
@@ -411,7 +416,7 @@ def leakage_safe_split(
     train_frac: float = 0.8,
     seed: int = 42,
     split_col: str = "split",
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Near-dup-aware train/eval split: every member of a near-duplicate
     cluster lands on the SAME side, killing the classic eval-leakage bug
     (a test doc whose near-copy sits in train). ``pairs`` is any
@@ -422,25 +427,26 @@ def leakage_safe_split(
 
     Cost: the components iteration runs over the PAIR list only (the
     removed fraction); the corpus itself sees one left join against the
-    small component map and a map-only hash filter.
+    small component map and a map-only hash filter. Yields the split.
     """
     from datawarehousefinal_spark.operators.graph import connected_components
 
-    comp = connected_components(pairs.select("id_a", "id_b")).select(
-        F.col("id").alias(id_col), F.col("component").alias("__root")
-    )
     threshold = int(train_frac * _HASH_SPACE)
     root = F.coalesce(F.col("__root"), F.col(id_col))
-    return (
-        docs.join(comp, id_col, "left")
-        .withColumn(
-            split_col,
-            F.when(
-                sample_hash(root, seed) < F.lit(threshold), F.lit("train")
-            ).otherwise(F.lit("eval")),
+    with connected_components(pairs.select("id_a", "id_b")) as comp:
+        roots = comp.select(
+            F.col("id").alias(id_col), F.col("component").alias("__root")
         )
-        .drop("__root")
-    )
+        yield (
+            docs.join(roots, id_col, "left")
+            .withColumn(
+                split_col,
+                F.when(
+                    sample_hash(root, seed) < F.lit(threshold), F.lit("train")
+                ).otherwise(F.lit("eval")),
+            )
+            .drop("__root")
+        )
 
 
 def length_band_rebalance(

@@ -31,6 +31,11 @@ doubles per iteration (every round references the last), so analysis
 cost grows exponentially and the plan string alone reaches gigabytes by
 round ~25 — checkpointing truncates the lineage to the materialized
 result, the standard discipline for iterative DataFrame algorithms.
+
+Operators whose result is as large as their input (component maps,
+ranks, distances, triangle counts) are context managers: they yield a
+frame over their last checkpoint and release it on exit, so the result
+never has to be collected to the driver and nothing outlives the block.
 """
 
 from __future__ import annotations
@@ -75,25 +80,23 @@ def _components_driver(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     out = [(n, find(n)) for n in parent]
-    id_type = pairs.schema[id_a].dataType
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [StructField("id", id_type), StructField("component", id_type)]
-    )
-    return pairs.sparkSession.createDataFrame(out, schema)
+    schema = pairs.select(
+        F.col(id_a).alias("id"), F.col(id_a).alias("component")
+    ).schema
+    return local_result(pairs.sparkSession.createDataFrame(out, schema))
 
 
+@contextmanager
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 25,
     small_graph_pairs: int = _SMALL_GRAPH_PAIRS,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Components of the undirected graph given by ``pairs``.
 
-    Output: ``(id, component)`` for every node appearing in ``pairs``,
+    Yields ``(id, component)`` for every node appearing in ``pairs``,
     where ``component`` is the minimum id in the node's component —
     deterministic, engine-portable. Nodes with no edges are absent (the
     caller's frame is the universe; absent = its own singleton).
@@ -106,70 +109,74 @@ def connected_components(
     ``pairs`` is consumed at least twice (the size probe, then either
     the driver collect or the symmetrized edge build), and candidate
     pipelines feeding it (LSH banding + verification) are expensive to
-    replay — so it is persisted here for the duration of the call
+    replay — so it is persisted while the components are computed
     unless the caller already persisted it (measured on the curation
     funnel: the unpersisted probe+collect replayed the full minhash
-    pipeline twice). Both return paths leave no lineage on ``pairs``
-    and nothing pinned: the driver path rebuilds the collected
-    components, the distributed path returns the converged labels as a
-    local result and releases every round.
+    pipeline twice). The driver path yields a local relation, the
+    distributed path the converged labels' checkpoint.
     """
-    with materialized(pairs) as pairs:
-        if small_graph_pairs > 0:
-            probe = pairs.limit(small_graph_pairs + 1).count()
-            if probe <= small_graph_pairs:
-                return _components_driver(pairs, id_a, id_b)
-        fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        with materialized(
-            fwd.unionByName(
-                pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-            )
-        ) as sym:
-            labels = (
-                sym.select(F.col("src").alias("id"))
-                .distinct()
-                .withColumn("component", F.col("id"))
-                .localCheckpoint()
-            )
-            try:
-                for _ in range(max_iterations):
-                    neighbor = (
-                        sym.join(labels, sym.dst == labels.id)
-                        .select(F.col("src").alias("id"), "component")
+    comp = None
+    try:
+        with materialized(pairs) as pairs:
+            if small_graph_pairs > 0 and (
+                pairs.limit(small_graph_pairs + 1).count() <= small_graph_pairs
+            ):
+                comp = _components_driver(pairs, id_a, id_b)
+            else:
+                fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+                with materialized(
+                    fwd.unionByName(
+                        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
                     )
-                    new_labels = (
-                        labels.unionByName(neighbor)
-                        .groupBy("id")
-                        .agg(F.min("component").alias("component"))
-                        .localCheckpoint()  # truncate lineage — see module docstring
+                ) as sym:
+                    comp = (
+                        sym.select(F.col("src").alias("id"))
+                        .distinct()
+                        .withColumn("component", F.col("id"))
+                        .localCheckpoint()
                     )
-                    changed = (
-                        new_labels.alias("n")
-                        .join(labels.alias("o"), "id")
-                        .filter(F.col("n.component") != F.col("o.component"))
-                        .limit(1)
-                        .count()
-                    )
-                    # the probe materialized the new round: drop the old one
-                    release(labels)
-                    labels = new_labels
-                    if changed == 0:
-                        return local_result(labels)
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_iterations} rounds "
-                    f"— the pair graph has a longer diameter than duplicate clusters "
-                    f"produce; raise max_iterations or use a pointer-doubling variant."
-                )
-            finally:
-                release(labels)
+                    for _ in range(max_iterations):
+                        neighbor = (
+                            sym.join(comp, sym.dst == comp.id)
+                            .select(F.col("src").alias("id"), "component")
+                        )
+                        new_labels = (
+                            comp.unionByName(neighbor)
+                            .groupBy("id")
+                            .agg(F.min("component").alias("component"))
+                            .localCheckpoint()  # truncate lineage — see module docstring
+                        )
+                        changed = (
+                            new_labels.alias("n")
+                            .join(comp.alias("o"), "id")
+                            .filter(F.col("n.component") != F.col("o.component"))
+                            .limit(1)
+                            .count()
+                        )
+                        # the checkpoint materialized the new round: drop the old one
+                        release(comp)
+                        comp = new_labels
+                        if changed == 0:
+                            break
+                    else:
+                        raise RuntimeError(
+                            f"connected_components did not converge in {max_iterations} "
+                            f"rounds — the pair graph has a longer diameter than duplicate "
+                            f"clusters produce; raise max_iterations or use a "
+                            f"pointer-doubling variant."
+                        )
+        yield comp
+    finally:
+        release(comp)
 
 
+@contextmanager
 def connected_components_stars(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 50,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Components via alternating large-star / small-star contraction —
     the O(log² n)-round alternative :func:`connected_components`'s
     docstring names for ADVERSARIAL graph shapes (a diameter-d graph
@@ -192,100 +199,96 @@ def connected_components_stars(
     full diff); the fixpoint is a forest of depth-1 stars rooted at
     each component's minimum id — read off directly.
 
-    Output: ``(id, component)`` for every node in ``pairs`` (component
+    Yields ``(id, component)`` for every node in ``pairs`` (component
     = min id of the component), identical contract to
     :func:`connected_components`.
     """
-    # pairs is read twice (edges, then the node universe), and the
-    # candidate pipeline feeding it is expensive to replay — persist for
-    # the duration unless the caller already did (same rationale as
-    # connected_components). Both consumers localCheckpoint lazily: the
-    # first fingerprint job materializes edges, the read-off join nodes.
-    with materialized(pairs) as pairs:
-        edges = (
-            pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+    def _fingerprint(e: DataFrame) -> tuple:
+        # bit_xor folds, not sum: XOR cannot overflow (sum of longs
+        # wraps, which ANSI mode would turn into a throw), and two
+        # independently-seeded hash folds make a false fixpoint on
+        # unequal edge sets practically impossible.
+        row = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64("u", "v")).alias("h1"),
+            F.bit_xor(F.xxhash64("v", "u", F.lit(0x9E3779B9))).alias("h2"),
+        ).first()
+        return (row["n"], row["h1"], row["h2"])
+
+    def _large_star(e: DataFrame) -> DataFrame:
+        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = (
+            sym.groupBy("u")
+            .agg(F.min("v").alias("__mv"))
+            .select("u", F.least("__mv", "u").alias("m"))
+        )
+        return (
+            sym.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
-        nodes = (
-            pairs.select(F.col(id_a).alias("id"))
-            .unionByName(pairs.select(F.col(id_b).alias("id")))
+
+    def _small_star(e: DataFrame) -> DataFrame:
+        directed = e.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        )
+        mins = directed.groupBy("u").agg(F.min("v").alias("m"))
+        neighbor_edges = (
+            directed.join(mins, "u")
+            .filter(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        self_edges = mins.select(F.col("u"), F.col("m").alias("v"))
+        return (
+            neighbor_edges.unionByName(self_edges)
+            .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
 
-        def _fingerprint(e: DataFrame) -> tuple:
-            # bit_xor folds, not sum: XOR cannot overflow (sum of longs
-            # wraps, which ANSI mode would turn into a throw), and two
-            # independently-seeded hash folds make a false fixpoint on
-            # unequal edge sets practically impossible.
-            row = e.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("u", "v")).alias("h1"),
-                F.bit_xor(F.xxhash64("v", "u", F.lit(0x9E3779B9))).alias("h2"),
-            ).first()
-            return (row["n"], row["h1"], row["h2"])
-
-        def _large_star(e: DataFrame) -> DataFrame:
-            sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            mins = (
-                sym.groupBy("u")
-                .agg(F.min("v").alias("__mv"))
-                .select("u", F.least("__mv", "u").alias("m"))
-            )
-            return (
-                sym.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    # pairs feeds both checkpoints: persist it until both have read it
+    edges = nodes = None
+    try:
+        with materialized(pairs) as pairs:
+            edges = (
+                pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
                 .filter(F.col("u") != F.col("v"))
                 .distinct()
+                .localCheckpoint()
             )
-
-        def _small_star(e: DataFrame) -> DataFrame:
-            directed = e.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            mins = directed.groupBy("u").agg(F.min("v").alias("m"))
-            neighbor_edges = (
-                directed.join(mins, "u")
-                .filter(F.col("v") != F.col("m"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            self_edges = mins.select(F.col("u"), F.col("m").alias("v"))
-            return (
-                neighbor_edges.unionByName(self_edges)
-                .filter(F.col("u") != F.col("v"))
+            nodes = (
+                pairs.select(F.col(id_a).alias("id"))
+                .unionByName(pairs.select(F.col(id_b).alias("id")))
                 .distinct()
+                .localCheckpoint()
             )
-
-        try:
-            fp = _fingerprint(edges)
-            for _ in range(max_iterations):
-                new_edges = _small_star(_large_star(edges)).localCheckpoint()
-                new_fp = _fingerprint(new_edges)
-                release(edges)
-                edges = new_edges
-                if new_fp == fp:
-                    # Fixpoint: every edge is (member, root). Roots appear only
-                    # on the v side; emit them as their own component rows.
-                    members = edges.select(
-                        F.col("u").alias("id"), F.col("v").alias("component")
-                    )
-                    return local_result(nodes.join(members, "id", "left").select(
-                        "id", F.coalesce("component", F.col("id")).alias("component")
-                    ))
-                fp = new_fp
+        fp = _fingerprint(edges)
+        for _ in range(max_iterations):
+            new_edges = _small_star(_large_star(edges)).localCheckpoint()
+            new_fp = _fingerprint(new_edges)
+            release(edges)
+            edges = new_edges
+            if new_fp == fp:
+                break
+            fp = new_fp
+        else:
             raise RuntimeError(
                 f"connected_components_stars did not converge in {max_iterations} "
                 f"rounds — not expected for any graph at this round budget "
                 f"(O(log^2 n)); check for pathological id skew."
             )
-        finally:
-            release(edges)
-            release(nodes)
+        # Fixpoint: every edge is (member, root). Roots appear only on
+        # the v side; emit them as their own component rows.
+        members = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
+        yield nodes.join(members, "id", "left").select(
+            "id", F.coalesce("component", F.col("id")).alias("component")
+        )
+    finally:
+        release(edges, nodes)
 
 
+@contextmanager
 def resolve_duplicates(
     df: DataFrame,
     pairs: DataFrame,
@@ -293,7 +296,7 @@ def resolve_duplicates(
     id_a: str = "id_a",
     id_b: str = "id_b",
     component_col: str | None = None,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Keep exactly one survivor per duplicate cluster: the component
     representative (minimum id — keep-first semantics on the id order).
 
@@ -303,27 +306,28 @@ def resolve_duplicates(
     Pass ``component_col`` to keep the cluster id on survivors (e.g. to
     count cluster sizes downstream).
     """
-    comp = connected_components(pairs, id_a, id_b)
-    losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    out = df.join(losers, id_col, "left_anti")
-    if component_col is not None:
-        reps = comp.filter(F.col("id") == F.col("component")).select(
-            F.col("id").alias(id_col), F.col("component").alias(component_col)
+    with connected_components(pairs, id_a, id_b) as comp:
+        losers = comp.filter(F.col("id") != F.col("component")).select(
+            F.col("id").alias(id_col)
         )
-        out = out.join(reps, id_col, "left").withColumn(
-            component_col, F.coalesce(component_col, F.col(id_col))
-        )
-    return out
+        out = df.join(losers, id_col, "left_anti")
+        if component_col is not None:
+            reps = comp.filter(F.col("id") == F.col("component")).select(
+                F.col("id").alias(id_col), F.col("component").alias(component_col)
+            )
+            out = out.join(reps, id_col, "left").withColumn(
+                component_col, F.coalesce(component_col, F.col(id_col))
+            )
+        yield out
 
 
+@contextmanager
 def incremental_components(
     assignments: DataFrame,
     new_pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Incremental component maintenance: fold a batch of NEW edges into
     an existing ``(id, component)`` assignment without re-reading the
     historical edge set — the store-update step of a production near-dup
@@ -337,7 +341,7 @@ def incremental_components(
     ``merge(assign(E₁), E₂) ≡ assign(E₁ ∪ E₂)`` exactly (pinned by the
     append-equals-rebuild test and the oracle's full-history closure).
 
-    Output: the same ``(id, component)`` contract, min-id labels.
+    Yields the same ``(id, component)`` contract, min-id labels.
     """
     star_edges = assignments.select(
         F.col("id").alias(id_a), F.col("component").alias(id_b)
@@ -348,7 +352,6 @@ def incremental_components(
             F.col(id_b).cast(star_edges.schema[id_b].dataType),
         )
     )
-    comp = connected_components(merged, id_a, id_b)
     # components() omits edgeless nodes — previously-assigned singleton
     # representatives and isolated batch nodes must survive the merge as
     # their own components, or the store would forget them
@@ -358,9 +361,10 @@ def incremental_components(
         .unionByName(new_pairs.select(F.col(id_b).alias("id")))
         .distinct()
     )
-    return universe.join(comp, "id", "left").withColumn(
-        "component", F.coalesce("component", F.col("id"))
-    )
+    with connected_components(merged, id_a, id_b) as comp:
+        yield universe.join(comp, "id", "left").withColumn(
+            "component", F.coalesce("component", F.col("id"))
+        )
 
 
 @contextmanager
@@ -381,8 +385,7 @@ def triangle_count(
 
     Yields ``(per_node, totals)``: per-node triangle participation
     (node, n_triangles) and a 1-row frame (n_nodes, n_edges,
-    n_triangles). A context manager: both are lazy plans over frames
-    checkpointed for the block and released on exit. Beyond-reference: graph structure analytics over the
+    n_triangles). Beyond-reference: graph structure analytics over the
     near-dup / co-occurrence graphs the dedup stack emits.
     """
     # Materialize the two hot frames: canon feeds degree/orientation/
@@ -458,6 +461,7 @@ def triangle_count(
             yield per_node, totals
 
 
+@contextmanager
 def pagerank(
     edges: DataFrame,
     src: str,
@@ -465,7 +469,7 @@ def pagerank(
     weight: str | None = None,
     iterations: int = 3,
     damping: float = 0.85,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Fixed-iteration weighted PageRank over an edge list — the
     canonical iterative-join workload (link/influence analysis over the
     co-occurrence and near-dup graphs this engine builds).
@@ -484,9 +488,11 @@ def pagerank(
     it the logical plan doubles per round), and the previous round is
     released once the next is materialized.
 
-    Returns (node, rank) as a local result; ranks sum to ~1 (dangling
-    mass is redistributed uniformly).
+    Yields (node, rank); ranks sum to ~1 (dangling mass is
+    redistributed uniformly).
     """
+    if iterations < 1:
+        raise ValueError(f"pagerank needs iterations >= 1, got {iterations}")
     w_expr = (
         F.col(weight).cast("double") if weight else F.lit(1.0)
     )
@@ -494,72 +500,73 @@ def pagerank(
     # transition frame both derive from it, and without this the
     # (potentially expensive) upstream edge-building plan executes
     # per derived checkpoint.
-    with materialized(
-        edges.select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"), w_expr.alias("w")
-        ).filter(F.col("w") > 0),
-        checkpoint=True,
-    ) as e:
-        out_w = e.groupBy("src").agg(F.sum("w").alias("w_out"))
-        with (
-            materialized(
-                e.select(F.col("src").alias("node"))
-                .unionByName(e.select(F.col("dst").alias("node")))
-                .distinct(),
-                checkpoint=True,
-            ) as nodes,
-            materialized(
-                e.join(out_w, "src").select(
-                    "src", "dst", (F.col("w") / F.col("w_out")).alias("p")
-                ),
-                checkpoint=True,
-            ) as norm,
-        ):
-            n = nodes.count()
-            has_out = out_w.select(F.col("src").alias("node"))
+    ranks = None
+    try:
+        with materialized(
+            edges.select(
+                F.col(src).alias("src"), F.col(dst).alias("dst"), w_expr.alias("w")
+            ).filter(F.col("w") > 0),
+            checkpoint=True,
+        ) as e:
+            out_w = e.groupBy("src").agg(F.sum("w").alias("w_out"))
+            with (
+                materialized(
+                    e.select(F.col("src").alias("node"))
+                    .unionByName(e.select(F.col("dst").alias("node")))
+                    .distinct(),
+                    checkpoint=True,
+                ) as nodes,
+                materialized(
+                    e.join(out_w, "src").select(
+                        "src", "dst", (F.col("w") / F.col("w_out")).alias("p")
+                    ),
+                    checkpoint=True,
+                ) as norm,
+            ):
+                n = nodes.count()
+                has_out = out_w.select(F.col("src").alias("node"))
 
-            def step(ranks: DataFrame) -> DataFrame:
-                contrib = (
-                    ranks.join(norm, ranks["node"] == norm["src"])
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.sum(F.col("rank") * F.col("p")).alias("in_mass"))
-                )
-                dangling = (
-                    ranks.join(has_out, "node", "left_anti")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
-                )
-                return (
-                    nodes.join(contrib, "node", "left")
-                    .crossJoin(F.broadcast(dangling))
-                    .select(
-                        "node",
-                        (
-                            F.lit((1.0 - damping) / n)
-                            + F.lit(damping)
-                            * (F.coalesce("in_mass", F.lit(0.0)) + F.col("d") / n)
-                        ).alias("rank"),
+                def step(ranks: DataFrame) -> DataFrame:
+                    contrib = (
+                        ranks.join(norm, ranks["node"] == norm["src"])
+                        .groupBy(F.col("dst").alias("node"))
+                        .agg(F.sum(F.col("rank") * F.col("p")).alias("in_mass"))
                     )
-                )
+                    dangling = (
+                        ranks.join(has_out, "node", "left_anti")
+                        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
+                    )
+                    return (
+                        nodes.join(contrib, "node", "left")
+                        .crossJoin(F.broadcast(dangling))
+                        .select(
+                            "node",
+                            (
+                                F.lit((1.0 - damping) / n)
+                                + F.lit(damping)
+                                * (F.coalesce("in_mass", F.lit(0.0)) + F.col("d") / n)
+                            ).alias("rank"),
+                        )
+                    )
 
-            ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-            try:
-                for _ in range(iterations - 1):
+                ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+                for _ in range(iterations):
                     new_ranks = step(ranks).localCheckpoint(eager=True)
                     release(ranks)
                     ranks = new_ranks
-                # the last round feeds the result's collect directly
-                return local_result(step(ranks) if iterations else ranks)
-            finally:
-                release(ranks)
+        yield ranks  # the last round reads no released checkpoint
+    finally:
+        release(ranks)
 
 
+@contextmanager
 def khop_distances(
     edges: DataFrame,
     src: str,
     dst: str,
     source_nodes: list,
     max_hops: int = 3,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Unweighted BFS distances from a seed set, bounded at ``max_hops``
     — reachability/blast-radius analysis over the engine's graphs
     ("which nations are within k trade hops", "which docs link to this
@@ -573,41 +580,36 @@ def khop_distances(
     iterations) keeps the result pure deterministic integer arithmetic,
     replayable as unrolled SQL CTEs.
 
-    Output: node, distance (0..max_hops; unreachable nodes absent), as
-    a local result.
+    Yields node, distance (0..max_hops; unreachable nodes absent).
     """
-    spark = edges.sparkSession
-    with materialized(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .distinct(),
-        checkpoint=True,
-    ) as sym:
-        def hop(dist: DataFrame) -> DataFrame:
-            reached = (
-                dist.join(sym, dist["node"] == sym["a"])
-                .select(
-                    F.col("b").alias("node"),
-                    (F.col("distance") + 1).alias("distance"),
+    dist = edges.sparkSession.createDataFrame(
+        [(n, 0) for n in source_nodes], ["node", "distance"]
+    )
+    try:
+        with materialized(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .unionByName(
+                edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+            )
+            .distinct(),
+            checkpoint=True,
+        ) as sym:
+            for _ in range(max_hops):
+                reached = (
+                    dist.join(sym, dist["node"] == sym["a"])
+                    .select(
+                        F.col("b").alias("node"),
+                        (F.col("distance") + 1).alias("distance"),
+                    )
                 )
-            )
-            return (
-                dist.unionByName(reached)
-                .groupBy("node")
-                .agg(F.min("distance").alias("distance"))
-            )
-
-        dist = spark.createDataFrame(
-            [(n, 0) for n in source_nodes], ["node", "distance"]
-        )
-        try:
-            for _ in range(max_hops - 1):
-                new_dist = hop(dist).localCheckpoint(eager=True)
+                new_dist = (
+                    dist.unionByName(reached)
+                    .groupBy("node")
+                    .agg(F.min("distance").alias("distance"))
+                    .localCheckpoint(eager=True)
+                )
                 release(dist)
                 dist = new_dist
-            # the last hop feeds the result's collect directly
-            return local_result(hop(dist) if max_hops else dist)
-        finally:
-            release(dist)
+        yield dist
+    finally:
+        release(dist)

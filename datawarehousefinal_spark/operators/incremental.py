@@ -34,21 +34,24 @@ Reference scope: the reference has no dedup at all (SURVEY.md §2.3 J5 is
 an unwired Levenshtein step); this module is beyond-reference scale
 machinery in the same family as :mod:`operators.dedup`.
 
-Persist lifetime: the batch signatures are persisted only for the
-ingest call. The dropped ids and the delta (both bounded by the batch)
-come back as local results, and survivors is a lazy plan over the
-batch, so nothing stays pinned once the call returns.
+Persist lifetime: the near-dup ingest operators are context managers.
+The batch signatures and the dropped ids stay persisted for the block,
+``(survivors, delta)`` are lazy plans over them, and both are released
+on exit, so nothing stays pinned and nothing is collected to the driver.
+Write or collect what you need inside the block.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.functions.textnorm import normalize_text
-from datawarehousefinal_spark.materialize import local_result, materialized
+from datawarehousefinal_spark.materialize import materialized
 from datawarehousefinal_spark.operators.dedup import (
     _auto_combo_size,
     lsh_band_buckets,
@@ -180,6 +183,7 @@ def _side(sig: DataFrame, id_col: str, tag: str, num_hashes: int) -> DataFrame:
     )
 
 
+@contextmanager
 def incremental_minhash_dedup(
     batch: DataFrame,
     store_sig: DataFrame,
@@ -192,10 +196,10 @@ def incremental_minhash_dedup(
     shingle_width: int = 5,
     hash_mode: str = "xxhash64",
     max_bucket: int = 1000,
-) -> tuple[DataFrame, DataFrame]:
+) -> Iterator[tuple[DataFrame, DataFrame]]:
     """Near-dup-dedup a batch against a MinHash signature store.
 
-    Returns ``(survivors, delta)``: batch rows that are near-dups of no
+    Yields ``(survivors, delta)``: batch rows that are near-dups of no
     store document and no smaller-id batch document (estimated Jaccard ≥
     ``threshold`` through banded-LSH candidates), and the survivors'
     signature rows to append to the store.
@@ -237,53 +241,42 @@ def incremental_minhash_dedup(
         # stages of banding/joins over zero rows — skip it entirely. The
         # isEmpty probe is one read-first-row job (instant on the local
         # bootstrap relation, one footer read on a parquet store).
-        if store_sig.isEmpty():
-            return _split_dropped(batch, bsig, wb_dropped, id_col)
+        if not store_sig.isEmpty():
+            # Same banding, batch × store instead of self-join; both sides carry
+            # the max_bucket skew guard so a degenerate band on either side (e.g.
+            # the empty-document signature) cannot quadratically explode.
+            def capped_buckets(sig: DataFrame) -> DataFrame:
+                b = lsh_band_buckets(sig, id_col, bands, rows_per_band)
+                return b.withColumn(
+                    "__n", F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
+                ).filter(F.col("__n") <= max_bucket).drop("__n")
 
-        # Same banding, batch × store instead of self-join; both sides carry
-        # the max_bucket skew guard so a degenerate band on either side (e.g.
-        # the empty-document signature) cannot quadratically explode.
-        def capped_buckets(sig: DataFrame) -> DataFrame:
-            b = lsh_band_buckets(sig, id_col, bands, rows_per_band)
-            return b.withColumn(
-                "__n", F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
-            ).filter(F.col("__n") <= max_bucket).drop("__n")
-
-        cross_cand = (
-            capped_buckets(bsig).select(F.col(id_col).alias("id_b"), "band", "key")
-            .join(
-                capped_buckets(store_sig).select(
-                    F.col(id_col).alias("id_a"), "band", "key"
-                ),
-                ["band", "key"],
+            cross_cand = (
+                capped_buckets(bsig).select(F.col(id_col).alias("id_b"), "band", "key")
+                .join(
+                    capped_buckets(store_sig).select(
+                        F.col(id_col).alias("id_a"), "band", "key"
+                    ),
+                    ["band", "key"],
+                )
+                .select("id_a", "id_b")
+                .distinct()
             )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        cross_dropped = (
-            cross_cand.join(_side(store_sig, id_col, "a", num_hashes), "id_a")
-            .join(_side(bsig, id_col, "b", num_hashes), "id_b")
-            .filter(_est_jaccard(num_hashes) >= threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-        )
+            cross_dropped = (
+                cross_cand.join(_side(store_sig, id_col, "a", num_hashes), "id_a")
+                .join(_side(bsig, id_col, "b", num_hashes), "id_b")
+                .filter(_est_jaccard(num_hashes) >= threshold)
+                .select(F.col("id_b").alias(id_col))
+                .distinct()
+            )
 
-        return _split_dropped(
-            batch, bsig, wb_dropped.unionByName(cross_dropped).distinct(), id_col
-        )
-
-
-def _split_dropped(
-    batch: DataFrame, sig: DataFrame, dropped: DataFrame, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """``(survivors, delta)`` of an ingest pass. ``dropped`` feeds both
-    anti-joins and ``delta`` reads the caller's pinned signatures, so
-    both are local results (bounded by the batch size)."""
-    dropped = local_result(dropped)
-    return (
-        batch.join(dropped, id_col, "left_anti"),
-        local_result(sig.join(dropped, id_col, "left_anti")),
-    )
+            wb_dropped = wb_dropped.unionByName(cross_dropped).distinct()
+        # dropped ids feed both anti-joins: persist them for the block
+        with materialized(wb_dropped) as dropped:
+            yield (
+                batch.join(dropped, id_col, "left_anti"),
+                bsig.join(dropped, id_col, "left_anti"),
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -312,6 +305,7 @@ def empty_simhash_store(df: DataFrame, id_col: str) -> DataFrame:
     return df.sparkSession.createDataFrame([], schema)
 
 
+@contextmanager
 def incremental_simhash_dedup(
     batch: DataFrame,
     store_fp: DataFrame,
@@ -321,10 +315,10 @@ def incremental_simhash_dedup(
     shingle_width: int = 5,
     combo_size: int | None = None,
     max_bucket: int = 1000,
-) -> tuple[DataFrame, DataFrame]:
+) -> Iterator[tuple[DataFrame, DataFrame]]:
     """Near-dup-dedup a batch against a SimHash fingerprint store.
 
-    Returns ``(survivors, delta)`` with the same greedy contract as
+    Yields ``(survivors, delta)`` with the same greedy contract as
     :func:`incremental_minhash_dedup`: a batch doc is dropped when its
     fingerprint is within ``max_hamming`` bits of any store fingerprint
     or of any smaller-id batch doc; ``delta`` is the survivors'
@@ -385,39 +379,41 @@ def incremental_simhash_dedup(
             bfp, id_col, max_hamming=max_hamming, max_bucket=max_bucket,
             combo_size=combo_size, max_dropped_frac=None,
         )
-        if store_empty:
-            return _split_dropped(batch, bfp, wb_dropped, id_col)
-
-        s_distinct = store_fp.select("simhash").distinct()
 
         # -- cross tier (drop any batch doc within range of a store doc) ------
+        if not store_empty:
+            s_distinct = store_fp.select("simhash").distinct()
 
-        def capped(fp_distinct: DataFrame, tag: str) -> DataFrame:
-            keyed = simhash_combo_keys(fp_distinct, num_blocks, combo_size)
-            return (
-                keyed.withColumn(
-                    "__n", F.count(F.lit(1)).over(Window.partitionBy("table", "key"))
+            def capped(fp_distinct: DataFrame, tag: str) -> DataFrame:
+                keyed = simhash_combo_keys(fp_distinct, num_blocks, combo_size)
+                return (
+                    keyed.withColumn(
+                        "__n", F.count(F.lit(1)).over(Window.partitionBy("table", "key"))
+                    )
+                    .filter(F.col("__n") <= max_bucket)
+                    .select(F.col("simhash").alias(tag), "table", "key")
                 )
-                .filter(F.col("__n") <= max_bucket)
-                .select(F.col("simhash").alias(tag), "table", "key")
-            )
 
-        matched_fps = (
-            capped(b_distinct, "__bf")
-            .join(capped(s_distinct, "__sf"), ["table", "key"])
-            .filter(
-                F.bit_count(F.expr("__bf ^ __sf")) <= F.lit(max_hamming)
+            matched_fps = (
+                capped(b_distinct, "__bf")
+                .join(capped(s_distinct, "__sf"), ["table", "key"])
+                .filter(
+                    F.bit_count(F.expr("__bf ^ __sf")) <= F.lit(max_hamming)
+                )
+                .select("__bf")
+                .distinct()
             )
-            .select("__bf")
-            .distinct()
-        )
-        cross_dropped = bfp.join(
-            matched_fps, bfp["simhash"] == matched_fps["__bf"]
-        ).select(id_col).distinct()
+            cross_dropped = bfp.join(
+                matched_fps, bfp["simhash"] == matched_fps["__bf"]
+            ).select(id_col).distinct()
 
-        return _split_dropped(
-            batch, bfp, wb_dropped.unionByName(cross_dropped).distinct(), id_col
-        )
+            wb_dropped = wb_dropped.unionByName(cross_dropped).distinct()
+        # dropped ids feed both anti-joins: persist them for the block
+        with materialized(wb_dropped) as dropped:
+            yield (
+                batch.join(dropped, id_col, "left_anti"),
+                bfp.join(dropped, id_col, "left_anti"),
+            )
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from datawarehousefinal_spark.materialize import local_result, materialized
+from datawarehousefinal_spark.materialize import materialized
 
 
 def basket_pairs(
@@ -82,13 +82,14 @@ def _pairs_from_items(
     return a.join(b, basket_col).filter(F.col("item_a") < F.col("item_b"))
 
 
+@contextmanager
 def basket_lift(
     baskets: DataFrame,
     basket_col: str,
     item_col: str,
     min_support: int = 2,
     max_basket: int = 200,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Pairwise association metrics over baskets: support counts,
     confidence and lift per co-occurring item pair.
 
@@ -106,8 +107,8 @@ def basket_lift(
     external oracle as a ``HAVING count(*) <= max_basket`` pre-filter
     on the distinct (basket, item) frame.
 
-    Output (a local result): item_a, item_b, n_ab, n_a, n_b, lift,
-    confidence_ab.
+    Yields item_a, item_b, n_ab, n_a, n_b, lift, confidence_ab, lazy
+    over the basket checkpoints, which are released on exit.
     """
     # Materialize the capped distinct (basket, item) frame ONCE: three
     # consumers (basket count, item counts, pair self-join) would
@@ -138,7 +139,7 @@ def basket_lift(
         cb = item_counts.select(
             F.col(item_col).alias("item_b"), F.col("__n_item").alias("n_b")
         )
-        return local_result(
+        yield (
             pair_counts.join(F.broadcast(ca), "item_a")
             .join(F.broadcast(cb), "item_b")
             .select(

@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
@@ -869,8 +870,10 @@ def incremental_components_merge_q(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("c_custkey").alias("id_a"),
         (F.col("c_custkey") + 6).alias("id_b"),
     )
-    assignments = connected_components(e1)
-    return incremental_components(assignments, e2)
+    with connected_components(e1) as assignments, incremental_components(
+        assignments, e2
+    ) as merged:
+        return local_result(merged)
 
 
 @query(
@@ -931,10 +934,12 @@ def entity_resolution_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ents = base.unionByName(twins)
     pairs = fuzzy_pairs_blocked(ents, "id", "name", max_distance=1)
-    comp = connected_components(pairs)
-    return comp.groupBy(F.col("component").alias("canonical_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_members")
-    )
+    with connected_components(pairs) as comp:
+        return local_result(
+            comp.groupBy(F.col("component").alias("canonical_id")).agg(
+                F.count(F.lit(1)).cast("long").alias("n_members")
+            )
+        )
 
 
 @query(
@@ -1091,10 +1096,10 @@ def near_dup_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_near_dupes(
         docs, "doc_id", "text", 0.9, 16, 8, 2, _W, "xxhash64"
     ).select("id_a", "id_b")
-    comp = connected_components(pairs)
-    return comp.select(
-        F.col("id").alias("doc_id"), F.col("component").cast("long")
-    )
+    with connected_components(pairs) as comp:
+        return local_result(comp.select(
+            F.col("id").alias("doc_id"), F.col("component").cast("long")
+        ))
 
 
 @query(
@@ -1131,10 +1136,10 @@ def near_dup_components_stars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_near_dupes(
         docs, "doc_id", "text", 0.9, 16, 8, 2, _W, "xxhash64"
     ).select("id_a", "id_b")
-    comp = connected_components_stars(pairs)
-    return comp.select(
-        F.col("id").alias("doc_id"), F.col("component").cast("long")
-    )
+    with connected_components_stars(pairs) as comp:
+        return local_result(comp.select(
+            F.col("id").alias("doc_id"), F.col("component").cast("long")
+        ))
 
 
 @query("minhash_lsh_pairs", oracle=_JACCARD_PAIRS_SQL)
@@ -1348,11 +1353,10 @@ def incremental_minhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production it would be a parquet table, read, not recomputed.
     with materialized(minhash_store(
         corpus, "doc_id", "text", num_hashes=16, shingle_width=_W
-    )) as store:
-        survivors, delta = incremental_minhash_dedup(
-            batch, store, "doc_id", "text",
-            threshold=0.9, num_hashes=16, shingle_width=_W,
-        )
+    )) as store, incremental_minhash_dedup(
+        batch, store, "doc_id", "text",
+        threshold=0.9, num_hashes=16, shingle_width=_W,
+    ) as (survivors, delta):
         resig = minhash_store(
             survivors.select("doc_id", "text"),
             "doc_id", "text", num_hashes=16, shingle_width=_W,
@@ -1389,10 +1393,9 @@ def incremental_simhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     with materialized(
         simhash_store(corpus, "doc_id", "text", shingle_width=_W)
-    ) as store:
-        survivors, delta = incremental_simhash_dedup(
-            batch, store, "doc_id", "text", max_hamming=8, shingle_width=_W,
-        )
+    ) as store, incremental_simhash_dedup(
+        batch, store, "doc_id", "text", max_hamming=8, shingle_width=_W,
+    ) as (survivors, delta):
         resig = simhash_store(
             survivors.select("doc_id", "text"), "doc_id", "text",
             shingle_width=_W,
@@ -1400,7 +1403,6 @@ def incremental_simhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return local_result(
             _incr_store_report(corpus, batch, store, survivors, delta, resig)
         )
-    return out
 
 
 def _curation_funnel_oracle() -> str:
@@ -2316,47 +2318,37 @@ def jdbc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # The database lives in the call's scratch dir: unique per call, so
-    # no two JVMs ever boot the same Derby database (XSDB6), and removed
-    # with the dir once the database is shut down.
-    with _scratch_path("derby", sf_dir) as db:
-        url = f"jdbc:derby:{db};create=true"
-        props = {
-            "driver": "org.apache.derby.jdbc.EmbeddedDriver",
-            # Derby maps StringType to CLOB (not hashable/comparable);
-            # pin a plain VARCHAR via the DDL-override option instead.
-            "createTableColumnTypes": "o_orderstatus VARCHAR(4)",
-        }
-        write_jdbc(agg, url, "status_counts", mode="overwrite", properties=props)
-        try:
-            return local_result(
-                read_jdbc(
-                    spark,
-                    url,
-                    "status_counts",
-                    properties={"driver": props["driver"]},
-                    partition_column="n",
-                    num_partitions=4,
-                    lower_bound=0,
-                    upper_bound=1_000_000,
-                )
-            )
-        finally:
-            _derby_shutdown(spark, db)
-
-
-def _derby_shutdown(spark: SparkSession, db: str) -> None:
-    """Shut down one embedded Derby database so its files can be removed.
-    Derby reports a clean shutdown as an SQLException with SQLState 08006."""
-    from py4j.protocol import Py4JJavaError
-
+    # One in-memory Derby database per JVM, one table per call, dropped on
+    # return: nothing reaches the disk and no two JVMs share a database dir
+    # (XSDB6); creating a database per call costs ~0.25 s CPU (4-core x86).
+    url = "jdbc:derby:memory:dwf_jdbc;create=true"
+    table = f"status_counts_{uuid.uuid4().hex}"
+    props = {
+        "driver": "org.apache.derby.jdbc.EmbeddedDriver",
+        # Derby maps StringType to CLOB (not hashable/comparable);
+        # pin a plain VARCHAR via the DDL-override option instead.
+        "createTableColumnTypes": "o_orderstatus VARCHAR(4)",
+    }
+    write_jdbc(agg, url, table, mode="overwrite", properties=props)
     try:
-        spark._jvm.java.sql.DriverManager.getConnection(
-            f"jdbc:derby:{db};shutdown=true"
+        return local_result(
+            read_jdbc(
+                spark,
+                url,
+                table,
+                properties={"driver": props["driver"]},
+                partition_column="n",
+                num_partitions=4,
+                lower_bound=0,
+                upper_bound=1_000_000,
+            )
         )
-    except Py4JJavaError as exc:
-        if exc.java_exception.getSQLState() != "08006":
-            raise
+    finally:
+        conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+        try:
+            conn.createStatement().execute(f"DROP TABLE {table}")
+        finally:
+            conn.close()
 
 
 @query(
@@ -3365,8 +3357,7 @@ def kmeans_cluster_sizes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "value", "event_type"
     )
-    _model, feats = fit_preprocess(events)
-    with materialized(feats) as feats:
+    with fit_preprocess(events) as (_model, feats):
         _km, pred = fit_kmeans(feats, k=3)
         return local_result(
             pred.groupBy("cluster")
@@ -3406,9 +3397,9 @@ def feature_cache_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events").select("value", "event_type")
-    _model, feats = fit_preprocess(events)
     with _scratch_path("feature_cache", sf_dir) as path:
-        write_feature_cache(feats, path)
+        with fit_preprocess(events) as (_model, feats):
+            write_feature_cache(feats, path)
         back = read_feature_cache(spark, path)
         return local_result(back.select(
             F.size(vector_to_array("features")).alias("feature_dim")
@@ -3443,10 +3434,9 @@ def rf_confusion_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     _enc, labeled = label_encode(events, "event_type", "label")
-    _model, feats = fit_preprocess(
+    with fit_preprocess(
         labeled.drop("event_type"), exclude=("label",)
-    )
-    with materialized(feats) as feats:
+    ) as (_model, feats):
         weighted = attach_class_weights(feats, "label")
         rf = classifier_zoo(weight_col="weight")["RandomForest"]
         pred = rf.fit(weighted).transform(weighted)
@@ -4198,8 +4188,7 @@ def pca_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datawarehousefinal_spark.ml.pipelines import fit_preprocess, pca_loadings
 
     events = load_table(spark, sf_dir, "events").select("value", "event_type")
-    _model, feats = fit_preprocess(events)
-    with materialized(feats) as feats:
+    with fit_preprocess(events) as (_model, feats):
         # the loadings frame is createDataFrame'd from model
         # coefficients, independent of feats
         return pca_loadings(feats, k=2)
@@ -4232,8 +4221,9 @@ def cv_grid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _enc, labeled = label_encode(events, "event_type", "label")
     # CV re-scans the features per fold x grid point: pin them
-    _model, feats = fit_preprocess(labeled.drop("event_type"), exclude=("label",))
-    with materialized(feats) as feats:
+    with fit_preprocess(
+        labeled.drop("event_type"), exclude=("label",)
+    ) as (_model, feats):
         zoo = classifier_zoo(weight_col=None)
         lr = zoo["LogisticRegression"]
         grid = default_param_grids(zoo)["LogisticRegression"]
@@ -4315,8 +4305,9 @@ def rbf_svc_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(4)  # size partitions to the sample (see above)
     )
     _enc, labeled = label_encode(events, "event_type", "label")
-    _model, feats = fit_preprocess(labeled.drop("event_type"), exclude=("label",))
-    with materialized(feats) as feats:
+    with fit_preprocess(
+        labeled.drop("event_type"), exclude=("label",)
+    ) as (_model, feats):
         _ovr, transform_fn = rbf_svc_approx(
             feats, n_components=64, gamma=0.5, max_iter=30
         )
@@ -6097,10 +6088,10 @@ def leakage_safe_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_near_dupes(
         docs, "doc_id", "text", 0.9, 16, 8, 2, _W, "xxhash64"
     ).select("id_a", "id_b")
-    out = leakage_safe_split(
+    with leakage_safe_split(
         docs.select("doc_id"), "doc_id", pairs, train_frac=0.8, seed=42
-    )
-    return out.select("doc_id", "split")
+    ) as out:
+        return local_result(out.select("doc_id", "split"))
 
 
 @query(
@@ -6172,13 +6163,13 @@ def dedup_survivors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_near_dupes(
         docs, "doc_id", "text", 0.9, 16, 8, 2, _W, "xxhash64"
     ).select("id_a", "id_b")
-    comp = connected_components(pairs)
-    losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias("doc_id")
-    )
-    return docs.join(losers, "doc_id", "left_anti").select(
-        "doc_id", "lang", "source"
-    )
+    with connected_components(pairs) as comp:
+        losers = comp.filter(F.col("id") != F.col("component")).select(
+            F.col("id").alias("doc_id")
+        )
+        return local_result(docs.join(losers, "doc_id", "left_anti").select(
+            "doc_id", "lang", "source"
+        ))
 
 
 @query(

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
 from datawarehousefinal_spark.sources.testdata import load_table
 from datawarehousefinal_spark.queries_r9 import (
@@ -1634,11 +1635,7 @@ def xml_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an export/ingest format — the docstrings on
     sources.write_xml/read_xml say so loudly — so the face roundtrips
     an AGGREGATE (contract-small), never the fact table."""
-    from datawarehousefinal_spark.queries import (
-        _money_sum,
-        _scratch_path,
-        local_result,
-    )
+    from datawarehousefinal_spark.queries import _money_sum, _scratch_path
     from datawarehousefinal_spark.sources.readers import read_xml
     from datawarehousefinal_spark.sources.writers import write_xml
 

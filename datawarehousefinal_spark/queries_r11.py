@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
 
 # ---------------------------------------------------------------------------
@@ -322,7 +323,7 @@ def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_aggregate,
         mdx_query_navigated,
     )
-    from datawarehousefinal_spark.queries import _scratch_path, local_result
+    from datawarehousefinal_spark.queries import _scratch_path
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
 
 # ---------------------------------------------------------------------------
@@ -498,7 +499,7 @@ def mdx_navigator_partition_pruned_q(
         mdx_query_navigated,
     )
     from datawarehousefinal_spark.plans.audit import physical_plan
-    from datawarehousefinal_spark.queries import _scratch_path, local_result
+    from datawarehousefinal_spark.queries import _scratch_path
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)

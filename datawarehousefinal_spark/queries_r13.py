@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
 
 # ---------------------------------------------------------------------------
@@ -96,7 +97,7 @@ def advisor_materialized_route_q(
     )
     from datawarehousefinal_spark.operators.mdx import mdx_query
     from datawarehousefinal_spark.plans.audit import physical_plan
-    from datawarehousefinal_spark.queries import _scratch_path, local_result
+    from datawarehousefinal_spark.queries import _scratch_path
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
 from datawarehousefinal_spark.sources.testdata import load_table
 
@@ -245,11 +246,10 @@ def basket_lift_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"]).select(
         F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item")
     )
-    return (
-        basket_lift(baskets, "basket", "item", min_support=2)
-        .orderBy(F.desc("lift"), "item_a", "item_b")
-        .limit(20)
-    )
+    with basket_lift(baskets, "basket", "item", min_support=2) as lift:
+        return local_result(
+            lift.orderBy(F.desc("lift"), "item_a", "item_b").limit(20)
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -301,7 +301,6 @@ def rfm_segment_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition ntile() window; the oracle replays the identical
     ``1 + (rank-1)*4 DIV n`` integer formula. Monetary re-accumulates
     in decimal at both levels so no double sum touches the hash."""
-    from datawarehousefinal_spark.materialize import local_result
     from datawarehousefinal_spark.operators.retail import rfm_scores
 
     orders = load_table(spark, sf_dir, "orders")
@@ -411,7 +410,6 @@ def supplier_triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-law graphs at 100 TB); the oracle counts the same triangles
     by the id-ordered 3-join identity, which agrees because each
     undirected triangle is counted exactly once by both."""
-    from datawarehousefinal_spark.materialize import local_result
     from datawarehousefinal_spark.operators.graph import triangle_count
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -521,18 +519,18 @@ def nation_trade_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
-    ranks = pagerank(edges, "src", "dst", weight="w", iterations=3)
     from datawarehousefinal_spark.queries import _ulp_contract
 
-    out = (
-        ranks.join(
-            F.broadcast(nation), ranks["node"] == nation["n_nationkey"]
+    with pagerank(edges, "src", "dst", weight="w", iterations=3) as ranks:
+        out = (
+            ranks.join(
+                F.broadcast(nation), ranks["node"] == nation["n_nationkey"]
+            )
+            .select(F.col("n_name").alias("nation"), "rank")
+            .orderBy("nation")
         )
-        .select(F.col("n_name").alias("nation"), "rank")
-        .orderBy("nation")
-    )
-    # per-iteration in-mass sums re-associate — serve-boundary contract
-    return _ulp_contract(out, "rank")
+        # per-iteration in-mass sums re-associate — serve-boundary contract
+        return local_result(_ulp_contract(out, "rank"))
 
 
 # ---------------------------------------------------------------------------
@@ -686,7 +684,7 @@ def streaming_sliding_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Watermark far beyond the fixture span so no genuine row drops; at
     production scale the horizon bounds state to window/slide rows per
     key."""
-    from datawarehousefinal_spark.queries import _scratch_path, local_result
+    from datawarehousefinal_spark.queries import _scratch_path
     from datawarehousefinal_spark.streaming.pipeline import (
         read_parquet_stream,
         run_to_memory,
@@ -1492,12 +1490,12 @@ def trade_khop_distances_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
         .distinct()
     )
-    dist = khop_distances(edges, "a", "b", [0], max_hops=3)
-    return (
-        dist.join(F.broadcast(nation), dist["node"] == nation["n_nationkey"])
-        .select(F.col("n_name").alias("nation"), "distance")
-        .orderBy("nation")
-    )
+    with khop_distances(edges, "a", "b", [0], max_hops=3) as dist:
+        return local_result(
+            dist.join(F.broadcast(nation), dist["node"] == nation["n_nationkey"])
+            .select(F.col("n_name").alias("nation"), "distance")
+            .orderBy("nation")
+        )
 
 
 _FK_EDGES = [

@@ -303,8 +303,8 @@ def test_leakage_safe_split_keeps_clusters_together(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
     )
-    out = {r["doc_id"]: r["split"] for r in
-           leakage_safe_split(docs, "doc_id", pairs).collect()}
+    with leakage_safe_split(docs, "doc_id", pairs) as split:
+        out = {r["doc_id"]: r["split"] for r in split.collect()}
     assert len(out) == 20
     assert out[1] == out[2] == out[3]
     assert out[7] == out[8]

@@ -12,8 +12,9 @@ from datawarehousefinal_spark.operators.graph import (
 )
 
 
-def _comp(df):
-    return {r["id"]: r["component"] for r in df.collect()}
+def _comp(components):
+    with components as df:
+        return {r["id"]: r["component"] for r in df.collect()}
 
 
 def test_transitive_closure_merges_chains(spark):
@@ -51,7 +52,7 @@ def test_nonconvergence_raises_loudly(spark):
         [(i, i + 1) for i in range(30)], ["id_a", "id_b"]
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iterations=2, small_graph_pairs=0)
+        _comp(connected_components(chain, max_iterations=2, small_graph_pairs=0))
     # and converges fine when allowed to run
     comp = _comp(
         connected_components(chain, max_iterations=40, small_graph_pairs=0)
@@ -80,8 +81,10 @@ def test_resolve_duplicates_keeps_one_per_cluster(spark):
     pairs = spark.createDataFrame(
         [(1, 4), (4, 7), (2, 5)], ["id_a", "id_b"]  # {1,4,7} and {2,5}
     )
-    out = resolve_duplicates(docs, pairs, "doc_id", component_col="cluster")
-    rows = {r["doc_id"]: r["cluster"] for r in out.collect()}
+    with resolve_duplicates(
+        docs, pairs, "doc_id", component_col="cluster"
+    ) as out:
+        rows = {r["doc_id"]: r["cluster"] for r in out.collect()}
     assert sorted(rows) == [0, 1, 2, 3, 6, 8, 9]  # 4,7,5 dropped
     assert rows[1] == 1 and rows[2] == 2          # reps keep their cluster id
     assert rows[0] == 0 and rows[9] == 9          # singletons untouched
@@ -99,9 +102,7 @@ def test_stars_matches_propagation_on_random_graph(spark):
     edges = [(rng.randrange(150), rng.randrange(150)) for _ in range(120)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    a = {(r["id"], r["component"]) for r in connected_components(df).collect()}
-    b = {(r["id"], r["component"]) for r in connected_components_stars(df).collect()}
-    assert a == b
+    assert _comp(connected_components(df)) == _comp(connected_components_stars(df))
 
 
 def test_stars_converges_on_high_diameter_chain(spark):
@@ -113,9 +114,9 @@ def test_stars_converges_on_high_diameter_chain(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(300)], ["id_a", "id_b"]
     )
-    out = connected_components_stars(chain).collect()
+    out = _comp(connected_components_stars(chain))
     assert len(out) == 301
-    assert {r["component"] for r in out} == {0}
+    assert set(out.values()) == {0}
 
 
 def test_incremental_components_append_equals_rebuild(spark):
@@ -130,11 +131,9 @@ def test_incremental_components_append_equals_rebuild(spark):
     e2 = spark.createDataFrame(
         [(2, 3), (20, 21)], ["id_a", "id_b"]  # bridges {1,2}-{3,4}; new cluster
     )
-    assign1 = connected_components(e1)
-    merged = incremental_components(assign1, e2)
-    rebuilt = connected_components(e1.unionByName(e2))
-    m = {r["id"]: r["component"] for r in merged.collect()}
-    rb = {r["id"]: r["component"] for r in rebuilt.collect()}
+    with connected_components(e1) as assign1:
+        m = _comp(incremental_components(assign1, e2))
+    rb = _comp(connected_components(e1.unionByName(e2)))
     assert m == rb
     assert m[4] == 1  # the bridge united the two old clusters
 
@@ -150,6 +149,22 @@ def test_incremental_components_keeps_singleton_representatives(spark):
         [(1, 1), (2, 1), (7, 7)], ["id", "component"]
     )
     batch = spark.createDataFrame([(2, 3)], ["id_a", "id_b"])
-    out = {r["id"]: r["component"]
-           for r in incremental_components(assign, batch).collect()}
+    out = _comp(incremental_components(assign, batch))
     assert out == {1: 1, 2: 1, 3: 1, 7: 7}
+
+
+def test_components_release_their_checkpoints(spark):
+    """The distributed path and the star contraction yield frames over
+    local checkpoints; leaving the block frees every one of them."""
+    from datawarehousefinal_spark.operators.graph import connected_components_stars
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], ["id_a", "id_b"]
+    )
+    with connected_components(chain, small_graph_pairs=0) as comp:
+        assert comp.count() == 13
+        assert set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    assert set(_comp(connected_components_stars(chain)).values()) == {0}
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()

@@ -84,24 +84,24 @@ def test_incremental_minhash_contract(spark, sf_dir):
     # Bootstrap: dedup the corpus itself against an EMPTY store (the store
     # contract requires an already-deduplicated corpus; batch 0 creates it).
     empty = minhash_store(corpus, "doc_id", "text", K, W).limit(0)
-    _, store = incremental_minhash_dedup(
+    with incremental_minhash_dedup(
         corpus, empty, "doc_id", "text",
         threshold=0.9, num_hashes=K, shingle_width=W,
-    )
-    survivors, delta = incremental_minhash_dedup(
+    ) as (_, store), incremental_minhash_dedup(
         batch, store, "doc_id", "text",
         threshold=0.9, num_hashes=K, shingle_width=W,
-    )
-
-    surv_ids = {r["doc_id"] for r in survivors.select("doc_id").collect()}
+    ) as (survivors, delta):
+        surv_ids = {r["doc_id"] for r in survivors.select("doc_id").collect()}
+        delta_ids = {r["doc_id"] for r in delta.select("doc_id").collect()}
+        # the grown store: store ∪ delta signatures
+        sigs = store.unionByName(delta).toPandas().set_index("doc_id")
     batch_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
     dropped = batch_ids - surv_ids
     assert dropped, "fixture's planted near-dup clusters should span the split"
-    assert {r["doc_id"] for r in delta.select("doc_id").collect()} == surv_ids
+    assert delta_ids == surv_ids
 
     # Brute-force estimated Jaccard over ALL signature pairs of the grown
     # store: no surviving pair may reach the threshold.
-    sigs = store.unionByName(delta).toPandas().set_index("doc_id")
     cols = [f"h{j}" for j in range(K)]
     ids = list(sigs.index)
     for i, a in enumerate(ids):
@@ -126,33 +126,31 @@ def test_incremental_minhash_idempotent(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     corpus, batch = _split_halves(docs)
     store = minhash_store(corpus, "doc_id", "text", K, W)
-    survivors, delta = incremental_minhash_dedup(
-        batch, store, "doc_id", "text",
-        threshold=0.9, num_hashes=K, shingle_width=W,
-    )
-    grown = store.unionByName(delta)
     # Re-ingesting duplicate COPIES of the already-ingested batch (new ids,
     # same text) must drop every one of them against the grown store.
     copies = batch.withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    again, delta2 = incremental_minhash_dedup(
-        copies, grown, "doc_id", "text",
+    with incremental_minhash_dedup(
+        batch, store, "doc_id", "text",
         threshold=0.9, num_hashes=K, shingle_width=W,
-    )
-    assert again.count() == 0
-    assert delta2.count() == 0
+    ) as (_, delta), incremental_minhash_dedup(
+        copies, store.unionByName(delta), "doc_id", "text",
+        threshold=0.9, num_hashes=K, shingle_width=W,
+    ) as (again, delta2):
+        assert again.count() == 0
+        assert delta2.count() == 0
 
 
 def test_incremental_minhash_plan_not_quadratic(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     corpus, batch = _split_halves(docs)
     store = minhash_store(corpus, "doc_id", "text", K, W)
-    survivors, _ = incremental_minhash_dedup(
-        batch, store, "doc_id", "text",
-        threshold=0.9, num_hashes=K, shingle_width=W,
-    )
     from datawarehousefinal_spark.plans.audit import assert_no_cartesian
 
-    assert_no_cartesian(survivors)
+    with incremental_minhash_dedup(
+        batch, store, "doc_id", "text",
+        threshold=0.9, num_hashes=K, shingle_width=W,
+    ) as (survivors, _):
+        assert_no_cartesian(survivors)
 
 
 # ---------------------------------------------------------------------------
@@ -173,24 +171,25 @@ def test_incremental_simhash_contract(spark, sf_dir):
     corpus, batch = _split_halves(docs)
     from datawarehousefinal_spark.operators.incremental import empty_simhash_store
 
-    _, store = incremental_simhash_dedup(
+    with incremental_simhash_dedup(
         corpus, empty_simhash_store(corpus, "doc_id"), "doc_id", "text",
         max_hamming=H, shingle_width=W,
-    )
-    survivors, delta = incremental_simhash_dedup(
+    ) as (_, store), incremental_simhash_dedup(
         batch, store, "doc_id", "text", max_hamming=H, shingle_width=W,
-    )
-
-    surv_ids = {r["doc_id"] for r in survivors.select("doc_id").collect()}
+    ) as (survivors, delta):
+        surv_ids = {r["doc_id"] for r in survivors.select("doc_id").collect()}
+        delta_ids = {r["doc_id"] for r in delta.select("doc_id").collect()}
+        grown = {
+            r["doc_id"]: r["simhash"] for r in store.unionByName(delta).collect()
+        }
     batch_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
     dropped = batch_ids - surv_ids
     assert dropped, "planted near-dup clusters should span the split"
-    assert {r["doc_id"] for r in delta.select("doc_id").collect()} == surv_ids
+    assert delta_ids == surv_ids
 
     def ham(a, b):
         return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
 
-    grown = {r["doc_id"]: r["simhash"] for r in store.unionByName(delta).collect()}
     ids = sorted(grown)
     for i, a in enumerate(ids):
         for b in ids[i + 1:]:
@@ -216,17 +215,16 @@ def test_incremental_simhash_idempotent_and_not_quadratic(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     corpus, batch = _split_halves(docs)
     store = simhash_store(corpus, "doc_id", "text", W)
-    survivors, delta = incremental_simhash_dedup(
-        batch, store, "doc_id", "text", max_hamming=8, shingle_width=W,
-    )
-    assert_no_cartesian(survivors)
-    grown = store.unionByName(delta)
     copies = batch.withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    again, delta2 = incremental_simhash_dedup(
-        copies, grown, "doc_id", "text", max_hamming=8, shingle_width=W,
-    )
-    assert again.count() == 0
-    assert delta2.count() == 0
+    with incremental_simhash_dedup(
+        batch, store, "doc_id", "text", max_hamming=8, shingle_width=W,
+    ) as (survivors, delta), incremental_simhash_dedup(
+        copies, store.unionByName(delta), "doc_id", "text",
+        max_hamming=8, shingle_width=W,
+    ) as (again, delta2):
+        assert_no_cartesian(survivors)
+        assert again.count() == 0
+        assert delta2.count() == 0
 
 
 # ---------------------------------------------------------------------------

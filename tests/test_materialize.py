@@ -49,6 +49,8 @@ def test_local_result_round_trips_values_and_schema(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.startswith("LocalTableScan"), plan
     assert _persisted_rdd_ids(spark) == before
+    # a frame that is local already comes back as it is
+    assert local_result(out) is out
 
 
 @pytest.mark.parametrize("checkpoint", [False, True])

@@ -76,85 +76,85 @@ def test_impute_most_frequent(spark):
 
 
 def test_preprocess_shapes_and_nulls(blobs):
-    _model, out = fit_preprocess(blobs, exclude=("id", "label"))
-    assert "features" in out.columns
-    first = out.select("features").first()["features"]
-    # 2 scaled numerics + 3 one-hot slots (3 seen colors, keep-bucket dropped)
-    assert first.size == 5
-    assert out.count() == blobs.count()  # imputation drops nothing
+    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, out):
+        assert "features" in out.columns
+        first = out.select("features").first()["features"]
+        # 2 scaled numerics + 3 one-hot slots (3 seen colors, keep-bucket dropped)
+        assert first.size == 5
+        assert out.count() == blobs.count()  # imputation drops nothing
 
 
 def test_onehot_unknown_is_all_zeros(spark, blobs):
-    model, _ = fit_preprocess(blobs, exclude=("id", "label"))
-    unseen = spark.createDataFrame(
-        [(99, 0.0, 0.0, "magenta", 0)], ["id", "x1", "x2", "color", "label"]
-    )
-    vec = model.transform(unseen).select("features").first()["features"]
-    # the one-hot slots (indices 2..4) must all be zero for an unseen color
-    assert all(vec[i] == 0.0 for i in (2, 3, 4))
+    with fit_preprocess(blobs, exclude=("id", "label")) as (model, _):
+        unseen = spark.createDataFrame(
+            [(99, 0.0, 0.0, "magenta", 0)], ["id", "x1", "x2", "color", "label"]
+        )
+        vec = model.transform(unseen).select("features").first()["features"]
+        # the one-hot slots (indices 2..4) must all be zero for an unseen color
+        assert all(vec[i] == 0.0 for i in (2, 3, 4))
 
 
 def test_kmeans_scan_structupe(blobs):
-    _model, feats = fit_preprocess(blobs, exclude=("id", "label"))
-    scan = kmeans_scan(feats, k_values=range(2, 5))
-    assert [s["k"] for s in scan] == [2, 3, 4]
-    for s in scan:
-        assert -1.0 <= s["silhouette"] <= 1.0
-        assert s["inertia"] >= 0.0
-    # three planted blobs → k=3 silhouette beats k=2
-    by_k = {s["k"]: s["silhouette"] for s in scan}
-    assert by_k[3] > by_k[2]
+    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
+        scan = kmeans_scan(feats, k_values=range(2, 5))
+        assert [s["k"] for s in scan] == [2, 3, 4]
+        for s in scan:
+            assert -1.0 <= s["silhouette"] <= 1.0
+            assert s["inertia"] >= 0.0
+        # three planted blobs → k=3 silhouette beats k=2
+        by_k = {s["k"]: s["silhouette"] for s in scan}
+        assert by_k[3] > by_k[2]
 
 
 def test_fit_kmeans_clusters_nonempty(blobs):
-    _model, feats = fit_preprocess(blobs, exclude=("id", "label"))
-    _km, pred = fit_kmeans(feats, k=3)
-    sizes = {r["cluster"]: r["count"] for r in pred.groupBy("cluster").count().collect()}
-    assert len(sizes) == 3
-    assert all(v > 0 for v in sizes.values())
-    # planted blobs are separable → clusters align with blobs (mean-imputed
-    # rows may drift off their blob, so demand near- not exact purity)
-    purity = (
-        pred.groupBy("label", "cluster").count()
-        .groupBy("label").agg(F.max("count").alias("m"))
-        .agg(F.sum("m")).first()[0]
-    )
-    assert purity >= 0.95 * pred.count()
+    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
+        _km, pred = fit_kmeans(feats, k=3)
+        sizes = {r["cluster"]: r["count"] for r in pred.groupBy("cluster").count().collect()}
+        assert len(sizes) == 3
+        assert all(v > 0 for v in sizes.values())
+        # planted blobs are separable → clusters align with blobs (mean-imputed
+        # rows may drift off their blob, so demand near- not exact purity)
+        purity = (
+            pred.groupBy("label", "cluster").count()
+            .groupBy("label").agg(F.max("count").alias("m"))
+            .agg(F.sum("m")).first()[0]
+        )
+        assert purity >= 0.95 * pred.count()
 
 
 def test_pca_projection(blobs):
-    _model, feats = fit_preprocess(blobs, exclude=("id", "label"))
-    out = pca_project_2d(feats)
-    row = out.select("PC1", "PC2").first()
-    assert math.isfinite(row["PC1"]) and math.isfinite(row["PC2"])
-    assert out.count() == blobs.count()
+    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
+        out = pca_project_2d(feats)
+        row = out.select("PC1", "PC2").first()
+        assert math.isfinite(row["PC1"]) and math.isfinite(row["PC2"])
+        assert out.count() == blobs.count()
 
 
 def test_classifier_zoo_trains_and_separates(blobs):
-    _model, feats = fit_preprocess(blobs, exclude=("id", "label"))
-    weighted = attach_class_weights(feats, "label")
-    zoo = classifier_zoo(weight_col="weight", mlp_layers=[5, 16, 3])
-    assert set(zoo) == {
-        "RandomForest", "LogisticRegression", "SVM", "DeepLearning_MLP"
-    }
-    for name, est in zoo.items():
-        fitted = est.fit(weighted)
-        pred = fitted.transform(weighted)
-        acc = classification_metrics(pred)["accuracy"]
-        assert acc >= 0.9, (name, acc)  # blobs are trivially separable
+    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
+        weighted = attach_class_weights(feats, "label")
+        zoo = classifier_zoo(weight_col="weight", mlp_layers=[5, 16, 3])
+        assert set(zoo) == {
+            "RandomForest", "LogisticRegression", "SVM", "DeepLearning_MLP"
+        }
+        for name, est in zoo.items():
+            fitted = est.fit(weighted)
+            pred = fitted.transform(weighted)
+            acc = classification_metrics(pred)["accuracy"]
+            assert acc >= 0.9, (name, acc)  # blobs are trivially separable
 
 
 def test_grid_search_cv(blobs):
-    _model, feats = fit_preprocess(blobs, exclude=("id", "label"))
-    weighted = attach_class_weights(feats, "label")
-    zoo = classifier_zoo(weight_col="weight")
-    lr = zoo["LogisticRegression"]
-    grids = default_param_grids(zoo)
-    assert len(grids["RandomForest"]) == 6  # 2 numTrees x 3 maxDepth
-    cvm = grid_search_cv(weighted, lr, grids["LogisticRegression"], folds=3)
-    assert len(cvm.avgMetrics) == 3
-    assert max(cvm.avgMetrics) >= 0.9
-    assert cvm.bestModel is not None
+    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
+        weighted = attach_class_weights(feats, "label")
+        zoo = classifier_zoo(weight_col="weight")
+        lr = zoo["LogisticRegression"]
+        grids = default_param_grids(zoo)
+        assert len(grids["RandomForest"]) == 6  # 2 numTrees x 3 maxDepth
+        cvm = grid_search_cv(weighted, lr, grids["LogisticRegression"], folds=3)
+        assert len(cvm.avgMetrics) == 3
+        assert max(cvm.avgMetrics) >= 0.9
+        assert cvm.bestModel is not None
 
 
 def test_metrics_identities(spark):
@@ -171,14 +171,14 @@ def test_metrics_identities(spark):
 
 
 def test_per_class_auc(blobs):
-    _model, feats = fit_preprocess(blobs, exclude=("id", "label"))
-    zoo = classifier_zoo(weight_col=None)
-    pred = zoo["LogisticRegression"].fit(feats).transform(feats)
-    aucs = per_class_auc(pred, "label")
-    assert set(aucs) == {0, 1, 2}
-    for c, auc in aucs.items():
-        assert 0.0 <= auc <= 1.0
-        assert auc >= 0.99  # separable blobs → near-perfect ROC
+    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
+        zoo = classifier_zoo(weight_col=None)
+        pred = zoo["LogisticRegression"].fit(feats).transform(feats)
+        aucs = per_class_auc(pred, "label")
+        assert set(aucs) == {0, 1, 2}
+        for c, auc in aucs.items():
+            assert 0.0 <= auc <= 1.0
+            assert auc >= 0.99  # separable blobs → near-perfect ROC
 
 
 def test_regression_forecast_structupe(spark):
@@ -236,10 +236,9 @@ def test_feature_cache_roundtrip(spark, blobs, tmp_path):
         write_feature_cache,
     )
 
-    _model, feats = fit_preprocess(blobs, exclude=("id", "label"))
     path = str(tmp_path / "feature_cache")
-    write_feature_cache(feats, path, keep_cols=("id", "label"))
-    feats.unpersist()
+    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
+        write_feature_cache(feats, path, keep_cols=("id", "label"))
 
     reloaded = read_feature_cache(spark, path)
     assert set(reloaded.columns) == {"id", "label", "features"}

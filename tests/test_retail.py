@@ -26,10 +26,8 @@ def test_basket_lift_exact_values(spark):
         (4, "b"),
     ]
     df = spark.createDataFrame(rows, ["basket", "item"])
-    out = {
-        (r["item_a"], r["item_b"]): r
-        for r in basket_lift(df, "basket", "item", min_support=1).collect()
-    }
+    with basket_lift(df, "basket", "item", min_support=1) as lift:
+        out = {(r["item_a"], r["item_b"]): r for r in lift.collect()}
     ab = out[("a", "b")]
     assert ab["n_ab"] == 2 and ab["n_a"] == 3 and ab["n_b"] == 3
     # lift = 4 * 2 / (3*3)
@@ -118,8 +116,8 @@ def test_pagerank_matches_reference_math(spark):
     # 3-node graph: 1->2, 2->3, 3->1 (cycle) + dangling node 4 via 1->4
     edges = [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (1, 4, 1.0)]
     df = spark.createDataFrame(edges, ["s", "d", "w"])
-    out = {r["node"]: r["rank"] for r in
-           pagerank(df, "s", "d", weight="w", iterations=3).collect()}
+    with pagerank(df, "s", "d", weight="w", iterations=3) as ranks:
+        out = {r["node"]: r["rank"] for r in ranks.collect()}
     # replay the same fixed-point arithmetic in plain python
     n = 4
     ranks = {i: 1.0 / n for i in range(1, 5)}
@@ -181,8 +179,8 @@ def test_khop_distances_known_graph(spark):
     # path 1-2-3-4-5 plus isolated 9; seeds {1}
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (9, 9)]
     df = spark.createDataFrame(edges, ["s", "d"])
-    out = {r["node"]: r["distance"] for r in
-           khop_distances(df, "s", "d", [1], max_hops=3).collect()}
+    with khop_distances(df, "s", "d", [1], max_hops=3) as dist:
+        out = {r["node"]: r["distance"] for r in dist.collect()}
     assert out == {1: 0, 2: 1, 3: 2, 4: 3}  # 5 beyond horizon, 9 unreachable
 
 
