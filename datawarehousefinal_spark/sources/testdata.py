@@ -5,7 +5,10 @@ One parquet file per table under ``/root/testdata/sf{0.001,0.01,0.1}``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -25,6 +28,47 @@ TABLES = (
 # relative to the facts orders/lineitem).
 DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 
+# Session confs that change how Parquet physical types map to Spark types,
+# so a schema inferred under one setting is wrong under another.
+_PARQUET_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_schemas: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers each file's schema once.
+
+    Inference runs a one-task job to read the footer on every call; a read
+    with a known schema runs none. Only the ``StructType`` is kept, never
+    the frame, so every call still builds a fresh relation with new
+    attribute ids (a self-join of two loads of one table keeps working).
+    The key is the file's identity and the confs read at call time, so an
+    overwritten file or a changed conf infers again.
+    """
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        key = None  # not cached: Spark raises its own PATH_NOT_FOUND below
+    else:
+        key = (
+            os.path.realpath(path),
+            st.st_mtime_ns,
+            st.st_size,
+            st.st_ino,
+            tuple(spark.conf.get(c) for c in _PARQUET_TYPE_CONFS),
+        )
+    schema = _schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _schemas[key] = df.schema
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # events.parquet's ts column has shipped in two physical layouts across
@@ -43,7 +87,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # fixtures (zone-independent epoch micros). Pin UTC here, not just
         # in our session factory, so both layouts agree on any session.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         from pyspark.sql import functions as F

@@ -8,15 +8,16 @@ from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.plans import exchange_count, physical_plan
 from datawarehousefinal_spark.sources.bucketing import read_table, write_bucketed
+from datawarehousefinal_spark.sources.testdata import load_table
 
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark, sf_dir, tmp_path_factory):
     d = tmp_path_factory.mktemp("bucketed")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
     write_bucketed(
@@ -64,8 +65,8 @@ def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed_tables):
         )
         .collect()[0]
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     plain = (
         orders.join(
             lineitem, orders.o_orderkey == lineitem.l_orderkey

@@ -7,12 +7,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.operators.curation import curate_corpus
+from datawarehousefinal_spark.sources.testdata import load_table
 
 W = 14  # shingle width tuned for the synthetic corpus (see queries.py)
 
 
 def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -195,7 +196,7 @@ def test_funnel_transitive_mode_merges_chains(spark):
 
 
 def _docs_wl(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars"
     )
 

@@ -14,12 +14,13 @@ from datawarehousefinal_spark.operators.dedup import (
     simhash,
     simhash_near_dupes,
 )
+from datawarehousefinal_spark.sources.testdata import load_table
 
 W = 14  # shingle width tuned for the synthetic corpus (see queries.py)
 
 
 def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return load_table(spark, sf_dir, "documents")
 
 
 def _pair_set(df):
@@ -237,7 +238,7 @@ def test_ngram_coverage_shapes_agree(spark, sf_dir):
     join shape exists for boilerplate-gram skew; semantics are one)."""
     from datawarehousefinal_spark.operators.dedup import ngram_coverage
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     a = sorted(map(tuple, ngram_coverage(docs, "doc_id", "text", via="window").collect()))
     b = sorted(map(tuple, ngram_coverage(docs, "doc_id", "text", via="join").collect()))
     assert a == b and len(a) > 0
@@ -252,7 +253,7 @@ def test_ngram_coverage_auto_shape_switch(spark, sf_dir):
     window task — and the chosen shape shows in the physical plan."""
     from datawarehousefinal_spark.operators.dedup import ngram_coverage
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()

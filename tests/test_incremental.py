@@ -12,13 +12,14 @@ from datawarehousefinal_spark.operators.incremental import (
     incremental_minhash_dedup,
     minhash_store,
 )
+from datawarehousefinal_spark.sources.testdata import load_table
 
 W = 14  # shingle width tuned for the synthetic corpus (see queries.py)
 K = 16  # signature slots used throughout the tests
 
 
 def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return load_table(spark, sf_dir, "documents")
 
 
 # ---------------------------------------------------------------------------

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.sources.readers import read_jdbc
+from datawarehousefinal_spark.sources.testdata import load_table
 from datawarehousefinal_spark.sources.writers import write_jdbc
 
 PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
@@ -23,7 +24,7 @@ def derby_url(tmp_path_factory):
 
 def _orders_slice(spark, sf_dir, n=500):
     return (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .orderBy("o_orderkey")
         .limit(n)

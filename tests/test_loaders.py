@@ -11,9 +11,14 @@ from __future__ import annotations
 
 import pytest
 
-from datawarehousefinal_spark.sources.testdata import load_table
+from datawarehousefinal_spark.sources.testdata import (
+    TABLES,
+    _read_parquet,
+    load_table,
+)
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 
 @pytest.fixture
@@ -29,6 +34,95 @@ def test_load_events_without_engine_conf(vanilla_conf, sf_dir):
     df = load_table(spark, sf_dir, "events")
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert df.count() > 0
+
+
+def test_load_events_without_engine_conf_warm_cache(vanilla_conf, sf_dir):
+    """The same driver case after an earlier load cached the events schema:
+    the conf is gone again when ``load_table`` is next called."""
+    spark = vanilla_conf
+    load_table(spark, sf_dir, "events")
+    spark.conf.unset(NANOS_CONF)
+    df = load_table(spark, sf_dir, "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert df.count() > 0
+
+
+def _jobs_during(spark, fn) -> int:
+    """Run ``fn`` and return how many Spark jobs it started."""
+    sc = spark.sparkContext
+    group = "load-table-jobs"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_load_runs_no_job(spark, sf_dir):
+    """Only the first read of a fixture file infers its schema (a one-task
+    footer job); later reads run no job and see the same schema and rows
+    as a fresh inferred read."""
+    for name in TABLES:
+        load_table(spark, sf_dir, name)
+        assert _jobs_during(spark, lambda: load_table(spark, sf_dir, name)) == 0, name
+        path = f"{sf_dir}/{name}.parquet"
+        warm = _read_parquet(spark, path)
+        fresh = spark.read.parquet(path)
+        assert warm.schema.json() == fresh.schema.json(), name
+        assert warm.exceptAll(fresh).count() == 0, name
+        assert fresh.exceptAll(warm).count() == 0, name
+
+
+def test_warm_loads_self_join(spark, sf_dir):
+    """The cache holds a schema, not a frame: two loads of one table are
+    distinct relations, so a self-join resolves both sides."""
+    a = load_table(spark, sf_dir, "nation")
+    b = load_table(spark, sf_dir, "nation")
+    pairs = a.join(b, a["n_regionkey"] == b["n_regionkey"]).select(
+        a["n_nationkey"], b["n_nationkey"]
+    )
+    n = a.count()
+    assert n < pairs.count() < n * n
+
+
+def test_schema_cache_follows_the_file(spark, sf_dir, tmp_path):
+    """A file overwritten at the same path is inferred again."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.copy(f"{sf_dir}/region.parquet", tmp_path / "region.parquet")
+    before = load_table(spark, str(tmp_path), "region")
+    assert "r_name" in before.columns
+    pq.write_table(
+        pa.table({"other": pa.array([1, 2, 3], pa.int32())}),
+        tmp_path / "region.parquet",
+    )
+    after = load_table(spark, str(tmp_path), "region")
+    assert after.dtypes == [("other", "int")]
+    assert sorted(r["other"] for r in after.collect()) == [1, 2, 3]
+
+
+def test_schema_cache_follows_the_confs(spark, sf_dir):
+    """The raw ``ts`` type of events follows inferTimestampNTZ on every read,
+    warm or not; ``load_table`` serves a session-zone timestamp either way."""
+    path = f"{sf_dir}/events.parquet"
+    saved = spark.conf.get(NTZ_CONF)
+    try:
+        for enabled, raw in (
+            ("true", "timestamp_ntz"),
+            ("false", "timestamp"),
+            ("true", "timestamp_ntz"),
+        ):
+            spark.conf.set(NTZ_CONF, enabled)
+            assert dict(_read_parquet(spark, path).dtypes)["ts"] == raw
+            assert dict(load_table(spark, sf_dir, "events").dtypes)["ts"] == "timestamp"
+    finally:
+        spark.conf.set(NTZ_CONF, saved)
 
 
 def test_events_micros_match_duckdb(spark, oracle_sf_dir):

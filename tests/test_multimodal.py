@@ -18,6 +18,7 @@ from datawarehousefinal_spark.operators.multimodal import (
     resize_nearest,
     sample_frames,
 )
+from datawarehousefinal_spark.sources.testdata import load_table
 
 
 def _image_row(media_id: int, arr: np.ndarray, kind: str = "image", n_frames: int = 1):
@@ -107,7 +108,7 @@ def test_sample_frames(spark):
 
 
 def test_media_from_documents_schema(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     media = media_from_documents(docs)
     assert [f.name for f in media.schema.fields] == [
         "media_id", "kind", "payload", "meta"

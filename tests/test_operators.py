@@ -14,6 +14,7 @@ from datawarehousefinal_spark.operators.surrogate import (
     build_dimension,
     merge_dimension,
 )
+from datawarehousefinal_spark.sources.testdata import load_table
 
 
 def test_merge_dimension_null_keys_are_stable(spark):
@@ -134,7 +135,7 @@ def test_stratified_split_ratios_and_partition(spark):
 def test_seeded_sample_exact_deterministic(spark, sf_dir):
     from datawarehousefinal_spark.operators.dataset import seeded_sample_exact
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     a = [r[0] for r in seeded_sample_exact(orders, 50).collect()]
     b = [r[0] for r in seeded_sample_exact(orders, 50).collect()]
     assert len(a) == 50

@@ -76,8 +76,9 @@ def test_snapshot_diff_scoped_compare_cols(spark):
 def test_snapshot_diff_plan_single_join_no_bnlj(spark, sf_dir):
     from datawarehousefinal_spark.operators.profile import snapshot_diff
     from datawarehousefinal_spark.plans.audit import physical_plan
+    from datawarehousefinal_spark.sources.testdata import load_table
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     plan = physical_plan(snapshot_diff(o, o.limit(10), ["o_orderkey"]))

@@ -9,14 +9,15 @@ from datawarehousefinal_spark.operators.prunejoin import (
     bloom_prune,
     bloom_prune_join,
 )
+from datawarehousefinal_spark.sources.testdata import load_table
 
 
 def _fact_keys(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
     keys = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_orderkey", "o_orderpriority")
     )

@@ -12,6 +12,7 @@ from datawarehousefinal_spark.operators.similarity import (
     cosine_topk,
     ivf_topk,
 )
+from datawarehousefinal_spark.sources.testdata import load_table
 
 
 def _clustered_vectors(spark, n_clusters=8, per_cluster=40, dim=16, seed=7):
@@ -236,7 +237,7 @@ def test_ivf_index_append_matches_quantizer_assignment(spark, sf_dir):
         ivf_topk,
     )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     id_col = emb.columns[0]
     vec_col = [c for c in emb.columns if c != id_col][0]
     assigned, centroids = build_ivf_index(emb, id_col, vec_col, num_partitions=4)

@@ -12,10 +12,11 @@ from datawarehousefinal_spark.operators.sketches import (
     kll_build_store,
     kll_quantiles,
 )
+from datawarehousefinal_spark.sources.testdata import load_table
 
 
 def _events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    return load_table(spark, sf_dir, "events").select(
         "user_id", "value", F.to_date("ts").alias("day")
     )
 

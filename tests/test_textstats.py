@@ -13,6 +13,7 @@ from datawarehousefinal_spark.operators.textstats import (
     quality_score,
     top_terms,
 )
+from datawarehousefinal_spark.sources.testdata import load_table
 
 
 def test_doc_stats_handcrafted(spark):
@@ -143,7 +144,6 @@ def test_chunk_documents_overlap_semantics(spark):
 def test_chunk_documents_is_shuffle_free(spark, sf_dir):
     from datawarehousefinal_spark.operators.textstats import chunk_documents
     from datawarehousefinal_spark.plans.audit import assert_max_shuffles
-    from datawarehousefinal_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     assert_max_shuffles(chunk_documents(docs, "doc_id", "text"), 0)
@@ -158,7 +158,7 @@ def test_bm25_index_path_matches_adhoc(spark, sf_dir):
         bm25_topk_from_index,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     terms = ["hash", "join", "broadcast"]
     adhoc = [
         (r["doc_id"], round(r["score"], 9))
@@ -190,7 +190,7 @@ def test_bm25_index_append_equals_rebuild(spark, sf_dir):
         bm25_topk_from_index,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     base = docs.filter(F.col("doc_id") % 3 != 0)
@@ -412,7 +412,7 @@ def test_bpe_frozen_model_matches_retrained(spark, sf_dir):
     from datawarehousefinal_spark.operators.textstats import bpe_learn
     from datawarehousefinal_spark.queries import _BPE_MERGES
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     assert bpe_learn(docs, "text", num_merges=16) == _BPE_MERGES
