@@ -494,12 +494,14 @@ def per_class_auc(
 
 def _date_features(df: DataFrame, date_col: str) -> DataFrame:
     """ordinal_date / month / day feature block
-    (machineLearning.py:603-605, 633-635)."""
+    (machineLearning.py:603-605, 633-635), as doubles: given other
+    types, VectorAssembler casts them into columns named after its
+    random uid, and every call then compiles new code."""
     return df.withColumns(
         {
-            "ordinal_date": proleptic_ordinal(date_col),
-            "month": F.month(date_col).cast("int"),
-            "day": F.dayofmonth(date_col).cast("int"),
+            "ordinal_date": proleptic_ordinal(date_col).cast("double"),
+            "month": F.month(date_col).cast("double"),
+            "day": F.dayofmonth(date_col).cast("double"),
         }
     )
 

@@ -13,7 +13,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the test harness (local[$SPARK_GRAFT_CPUS], 128 GiB).
+# Defaults sized for one local JVM: local[$SPARK_GRAFT_CPUS] with a 16g
+# driver unless SPARK_GRAFT_DRIVER_MEM says otherwise (see get_spark).
 # On a real cluster the same conf names apply; only master/memory change.
 _DEFAULT_CONF: dict[str, str] = {
     # Adaptive query execution: runtime re-plan, skew-join splitting, and
@@ -47,6 +48,26 @@ _DEFAULT_CONF: dict[str, str] = {
     # Whole-stage codegen on (default, but explicit: the hot path must stay
     # inside generated JVM code, not Python).
     "spark.sql.codegen.wholeStage": "true",
+    # Compile each generated class once per JVM. Spark caches compiled
+    # classes in one JVM-wide LRU keyed by their full source and class
+    # loader, so in local mode a whole-stage stage is compiled twice, for
+    # the driver's loader and for the executor's. The default cache holds
+    # 100 classes; the 9 etl_star benchmark faces need 136 at sf0.01, so
+    # every pass recompiled 66-109 of them with Janino and the JIT compiled
+    # them again. Calling every registered face twice at sf0.01 compiles
+    # 3,458 distinct classes, which fit in 4096. A static conf: it sizes
+    # the cache when the JVM first generates code. Cost at that full fill
+    # on a 4-core host: Metaspace 293 MB and code cache 164 MB, against
+    # 268 and 143 MB with the default cache, and 158 and 47 MB after the
+    # etl_star faces alone. Only compiled code is cached, never rows or
+    # plans, so no result can go stale.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # AQE numbers whole-stage stages in planning order, so with the ID in
+    # the class name the same stage could get a new name, and so a new
+    # class, on a repeat call: over the registry called twice, 216 classes
+    # in 35 faces recompiled on the second call with the ID, 48 in 13
+    # faces without it. A runtime SQL conf.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
