@@ -9,9 +9,11 @@ a training-data pipeline at 100 TB needs corpus-level dedup. Design rules:
   buckets on a content hash, MinHash on banded signature keys, SimHash on
   16-bit fingerprint chunks, n-gram Jaccard on shared shingles. The only
   shuffle over document rows is on those bucket keys.
-- **Stay JVM-side.** Shingling is a higher-order function (``transform`` on
-  a ``sequence``), hashing is ``xxhash64``/``md5``/``sha2`` — all codegen;
-  no Python UDFs anywhere.
+- **Signature values come from the JVM.** Shingling (``transform`` on a
+  ``sequence``) and hashing (``xxhash64``/``md5``/``sha2``) are Spark
+  expressions; only the per-document reduction of MinHash and SimHash
+  signatures runs in Python, as one Arrow-batched numpy kernel
+  (:mod:`operators.kernels`). No row-at-a-time Python UDF anywhere.
 - **Skew-guarded.** A shingle or bucket shared by half the corpus would
   quadratically explode its bucket; ``max_bucket`` drops pathological
   buckets (a standard LSH trade: an over-full bucket carries almost no
@@ -26,7 +28,6 @@ deterministic across runs — LSH here has no run-to-run randomness.
 from __future__ import annotations
 
 import re
-from functools import reduce
 from itertools import combinations
 
 from pyspark.sql import Column, DataFrame, Window
@@ -137,30 +138,16 @@ def minhash_signature(
     num_hashes: int = 16,
     shingle_width: int = 5,
     hash_mode: str = "xxhash64",
-    kernel: str = "auto",
 ) -> DataFrame:
     """Per-document MinHash signature: columns ``h0..h{k-1}``.
 
-    MAP-ONLY: shingling, base hashing, and the ``k`` affine-transform mins
-    all run as higher-order array expressions inside one row — no explode,
-    no shuffle, no aggregation hash map. (The classic explode +
-    map-side-combined ``min`` groupBy computes the same mins but
-    materializes |shingles| rows per document and pays a shuffle of k mins
-    per doc; per-row ``array_min(transform(...))`` is the same arithmetic
-    with zero data movement.) Values are identical to the two-stage build:
-    same base hash, same seeded affine family.
-
-    ``kernel``: ``'hof'`` keeps the k mins as JVM higher-order
-    expressions (CodegenFallback — interpreted per array element, k
-    mul-mod-min walks per shingle); ``'arrow'`` ships the base-hash ARRAY
-    (computed by the same JVM expressions, so signature values cannot
-    drift) through one Arrow-batched numpy ``minimum.reduceat`` (see
-    :mod:`operators.kernels` — bit-identical, parity-tested); ``'auto'``
-    picks arrow — measured 3.7× faster on the sf0.1 documents table
-    (5.17 s → 1.39 s, k=16) and the gap widens with k. At fixture scale
-    (sf0.001) hof wins by ~0.2 s of Python-worker spin-up, a one-time
-    session cost; auto still picks arrow because every corpus this
-    operator exists for is the large case.
+    MAP-ONLY: no explode, no shuffle, no aggregation hash map. The JVM
+    computes each document's shingle set and the base-hash array (the
+    values that define the signature); one Arrow-batched numpy kernel
+    (:func:`operators.kernels.minhash_reduce_arrow`) reduces that array to
+    the ``k`` affine-transform mins. Values are identical to the classic
+    two-stage build (explode + ``min`` groupBy): same base hash, same
+    seeded affine family.
 
     NULL texts produce no signature row. This is a DELIBERATE behavior
     change from the earlier explode formulation, which emitted one row for
@@ -170,9 +157,8 @@ def minhash_signature(
     degenerate NULL-doc signature rows; rebuild or filter them before
     comparing against newly built signatures.
     """
-    if kernel not in ("auto", "hof", "arrow"):
-        raise ValueError(f"kernel must be 'auto', 'hof' or 'arrow', got {kernel!r}")
-    params = _affine_params(num_hashes)
+    from datawarehousefinal_spark.operators.kernels import minhash_reduce_arrow
+
     base = _fan_out(df.filter(F.col(text_col).isNotNull())).select(
         id_col,
         F.transform(
@@ -180,23 +166,8 @@ def minhash_signature(
             lambda s: _base_hash(s, hash_mode),
         ).alias("__bh"),
     )
-    if kernel in ("auto", "arrow"):
-        from datawarehousefinal_spark.operators.kernels import minhash_reduce_arrow
-
-        return minhash_reduce_arrow(base, id_col, params, _MERSENNE31)
-    # Separate projection on purpose: CollapseProject declines to inline a
-    # non-cheap producer expression referenced k times, so __bh's hash
-    # array is computed once per row, not once per h_j.
-    return base.select(
-        id_col,
-        *[
-            F.array_min(
-                F.transform(
-                    "__bh", lambda b: (F.lit(a) * b + F.lit(c)) % _MERSENNE31
-                )
-            ).alias(f"h{j}")
-            for j, (a, c) in enumerate(params)
-        ],
+    return minhash_reduce_arrow(
+        base, id_col, _affine_params(num_hashes), _MERSENNE31
     )
 
 
@@ -412,103 +383,37 @@ def ngram_jaccard_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-# Vote sums are packed into 21-bit fields, 3 per long: 22 aggregate buffers
-# instead of 64, and the shuffle carries 22 longs + 1 count per document.
-# A field counts set-bits for one position, so it overflows only past
-# 2^21-1 (= a document with > 2M distinct shingles, i.e. multi-MB of text
-# at width 5) — cap documents upstream before that.
-_FIELD_BITS = 21
-_FIELDS_PER_LONG = 64 // _FIELD_BITS  # 3
-_NUM_PACKED = -(-64 // _FIELDS_PER_LONG)  # 22
-
-
 def simhash(
     df: DataFrame,
     id_col: str,
     text_col: str,
     shingle_width: int = 5,
-    kernel: str = "auto",
 ) -> DataFrame:
     """64-bit SimHash fingerprint per document.
 
     Classic Charikar construction: each shingle's xxhash64 votes ±1 on each
     of the 64 bit positions; the fingerprint sets bits with positive vote
     sums. Positive vote sum on bit i ⟺ more than half the shingles have
-    bit i set, so it suffices to sum the 0/1 bits and compare against the
-    shingle count — which lets the 64 per-bit sums pack into
-    ``_NUM_PACKED`` long fields.
+    bit i set, so it suffices to count the set bits and compare against
+    the shingle count.
 
-    MAP-ONLY: the packed vote sums are per-row ``aggregate`` higher-order
-    expressions over the shingle-hash array — no explode, no shuffle, no
-    groupBy (the explode + map-side-combined-sum formulation computes the
-    same sums with |shingles| materialized rows per document and a
-    shuffle). NULL texts produce no fingerprint row (explicit filter — see
-    the note on ``minhash_signatures`` about the deliberate NULL-handling
-    change vs the old explode formulation).
-
-    ``kernel``: ``'arrow'`` (and ``'auto'``) ships the xxhash64 ARRAY
-    (same JVM hash expressions, so fingerprints cannot drift) through
-    one Arrow-batched numpy ``unpackbits`` + ``add.reduceat`` vote count
-    (see :mod:`operators.kernels` — bit-identical, parity-tested).
-    Round-7 re-measurement on the sf0.1 documents table (warm, 32
-    cores): arrow 0.8 s vs hof 1.8 s at BOTH shingle widths 5 and 14 —
-    the per-shingle Arrow ship cost amortizes against the hof path's
-    22 interpreted aggregate walks per row, and the gap widens with
-    document length (an earlier round measured the reverse before the
-    kernel batched its id handling; the parity test keeps both paths
-    honest). ``'hof'`` stays JVM-only — zero Python in the plan — for
-    deployments that must not run Python workers.
+    MAP-ONLY: no explode, no shuffle, no groupBy. The JVM computes each
+    document's shingle set and its xxhash64 array (the values that define
+    the fingerprint); one Arrow-batched numpy kernel
+    (:func:`operators.kernels.simhash_reduce_arrow`) counts the bit votes.
+    NULL texts produce no fingerprint row (explicit filter — see the note
+    on :func:`minhash_signature` about the deliberate NULL-handling change
+    vs the old explode formulation).
     """
-    if kernel not in ("auto", "hof", "arrow"):
-        raise ValueError(f"kernel must be 'auto', 'hof' or 'arrow', got {kernel!r}")
-    if kernel == "auto":
-        kernel = "arrow"
+    from datawarehousefinal_spark.operators.kernels import simhash_reduce_arrow
+
     base = _fan_out(df.filter(F.col(text_col).isNotNull())).select(
         F.col(id_col),
         F.transform(
             char_shingles(text_col, shingle_width), lambda s: F.xxhash64(s)
         ).alias("__hs"),
     )
-    if kernel == "arrow":
-        from datawarehousefinal_spark.operators.kernels import simhash_reduce_arrow
-
-        return simhash_reduce_arrow(base, id_col)
-
-    def packed_sum(k: int) -> Column:
-        def add_fields(acc: Column, h: Column) -> Column:
-            fields = []
-            for j in range(_FIELDS_PER_LONG):
-                i = k * _FIELDS_PER_LONG + j
-                if i >= 64:
-                    break
-                bit = F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1))
-                fields.append(
-                    F.shiftleft(bit, j * _FIELD_BITS) if j else bit.cast("long")
-                )
-            return acc + reduce(lambda x, y: x + y, fields)
-
-        return F.aggregate(
-            "__hs", F.lit(0).cast("long"), add_fields
-        ).alias(f"p{k}")
-
-    summed = base.select(
-        F.col(id_col),
-        F.size("__hs").cast("long").alias("__n"),
-        *[packed_sum(k) for k in range(_NUM_PACKED)],
-    )
-
-    def bit_set(i: int) -> Column:
-        k, j = divmod(i, _FIELDS_PER_LONG)
-        ones = F.shiftrightunsigned(f"p{k}", j * _FIELD_BITS).bitwiseAND(
-            F.lit((1 << _FIELD_BITS) - 1)
-        )
-        # vote sum = ones - (n - ones) > 0  ⟺  2*ones > n
-        return F.when(
-            ones * 2 > F.col("__n"), F.expr(f"shiftleft(1L, {i})")
-        ).otherwise(F.lit(0).cast("long"))
-
-    fingerprint = reduce(lambda acc, i: acc.bitwiseOR(bit_set(i)), range(64), F.lit(0).cast("long"))
-    return summed.select(F.col(id_col), fingerprint.alias("simhash"))
+    return simhash_reduce_arrow(base, id_col)
 
 
 def _block_bounds(num_blocks: int) -> list[tuple[int, int]]:
@@ -616,7 +521,7 @@ def simhash_near_dupes(
     """
     # The fingerprint frame feeds the hamming-0 tiers, the distinct-fp
     # banding, AND both expansion branches — without a persist the
-    # full shingle-explode + 22-aggregate fingerprint pass replicates
+    # full shingle + Arrow vote-count fingerprint pass replicates
     # once per consumer (7 scans in the physical plan). Fingerprints are
     # (id, long) — ~24 bytes/doc, MEMORY_AND_DISK never OOMs. The
     # pairs are sparse by contract, so they return as a local result.

@@ -1,39 +1,32 @@
 """Arrow reduction kernels for the signature builds in :mod:`operators.dedup`.
 
-The HOF signature builds (``simhash``, ``minhash_signature``) express the
-per-document reduction — 64 bit-vote sums, k affine-transform mins — as
-``aggregate`` / ``array_min(transform(...))`` higher-order expressions.
-Those are CodegenFallback in Spark: every array element evaluates through
-the interpreted expression walker, so a 1,000-shingle document pays
-~22×1,000 interpreted adds (simhash) or k×1,000 interpreted mul-mod-mins
-(minhash). Measured on the sf0.1 documents table, the Arrow kernels win
-for both: MINHASH's k independent walks over the array cost 5.17 s hof vs
-1.39 s arrow (k=16), and SIMHASH's packed-vote walk (22 sums) costs 1.8 s
-hof vs 0.8 s arrow once the kernel batches its id handling. ``kernel=
-"auto"`` therefore maps to ``"arrow"`` in both ``minhash_signature`` and
-``simhash``; ``"hof"`` stays for deployments that must not run Python
-workers.
+``simhash`` and ``minhash_signature`` compute each document's shingle set
+and its per-shingle hash array in the JVM (``char_shingles`` +
+``xxhash64``/``md5``), so the values that define a signature never leave
+Spark's expressions. Only the commutative per-document reduction over that
+array runs here, as one Arrow-batched ``mapInPandas`` per operator.
+Contract:
 
-These kernels keep the part that defines the SIGNATURE VALUES — shingling
-and the base hash — in the JVM (``char_shingles`` + ``xxhash64``/``md5``,
-whole-stage codegen, exactly the expressions the HOF path uses) and move
-only the commutative reduction over the hash array into one Arrow-batched
-``mapInPandas``: numpy ``unpackbits`` + ``add.reduceat`` for the simhash
-bit votes, ``minimum.reduceat`` for the minhash mins. Signatures are
-bit-identical to the HOF path:
+- **simhash vote rule.** Bit i of the fingerprint is set iff
+  ``2 * ones_i > n``, where ``ones_i`` counts the document's shingle
+  hashes with bit i set (``(h >> i) & 1``) and ``n`` is its shingle count
+  — Charikar's "positive ±1 vote sum". A tie (``2 * ones_i == n``) leaves
+  the bit clear.
+- **minhash int64 exactness.** ``h_j = min over b of (a_j·b + c_j) mod p``
+  with ``p = 2^31 - 1`` and ``a_j, c_j, b < p``, so every product is below
+  ``2^62 + 2^31`` and numpy int64 arithmetic is exact: no overflow, no
+  float rounding.
+- **Chunking.** A batch is reduced in row slices of at most
+  ``_CHUNK_SHINGLES`` flattened shingles (the simhash bit matrix costs 64
+  bytes a shingle), except that a slice always holds at least one
+  document, so one huge document still reduces, alone. Slicing never
+  splits a document, so the result does not depend on it.
+- Every input row has at least one shingle (``char_shingles`` maps a short
+  text to itself; NULL texts are filtered upstream), so ``reduceat``
+  offsets are strictly increasing. An empty batch yields nothing.
 
-- simhash: vote rule ``2*ones > n`` over the same xxhash64 values;
-- minhash: ``(a·b + c) mod (2^31-1)`` with ``a, c, b < 2^31``, so every
-  product fits in int64 — numpy int64 arithmetic is exact, no overflow.
-
-Parity is asserted per-row in tests/test_kernels.py, and the oracle story
-is unchanged: DuckDB reproduces the md5 hash_mode signatures regardless of
-which engine-side kernel reduced them.
-
-This is the same design as the similarity module's matmul kernel
-(similarity.py ``_cosine_scores_arrow``): Arrow is the documented correct
-tool when the per-row arithmetic is heavy and vectorizable; everything
-row-shaped stays codegen.
+tests/test_kernels.py checks both kernels row for row against plain
+Python references over the hash arrays the JVM computes.
 
 Reference scope: beyond-reference scale machinery (the reference has no
 dedup; SURVEY.md §2.3 J5 is an unwired Levenshtein step).
@@ -79,15 +72,12 @@ def _flat_hashes(series: pd.Series) -> tuple[np.ndarray, np.ndarray]:
 
 def simhash_reduce_arrow(base: DataFrame, id_col: str) -> DataFrame:
     """Reduce a ``(id_col, __hs: array<long>)`` frame of per-shingle
-    xxhash64 values to ``(id_col, simhash)`` — the Arrow twin of the
-    packed-vote HOF reduction in :func:`dedup.simhash`.
+    xxhash64 values to ``(id_col, simhash)``.
 
     Per chunk: ``unpackbits`` (bitorder='little', matching ``(h >> i) & 1``)
     turns the flat hash vector into an (n_shingles, 64) 0/1 matrix, one
     ``add.reduceat`` sums votes per document, and the fingerprint sets bit
-    i where ``2*ones_i > n_shingles`` — the exact HOF vote rule.
-    ``char_shingles`` guarantees every document ≥ 1 shingle, so reduceat
-    offsets are strictly increasing (asserted)."""
+    i where ``2*ones_i > n_shingles``."""
     out_schema = StructType(
         [base.schema[id_col], StructField("simhash", LongType())]
     )
@@ -123,13 +113,10 @@ def minhash_reduce_arrow(
     base: DataFrame, id_col: str, params: list[tuple[int, int]], prime: int
 ) -> DataFrame:
     """Reduce a ``(id_col, __bh: array<long>)`` frame of base shingle
-    hashes (already in ``[0, prime)``) to minhash columns ``h0..h{k-1}`` —
-    the Arrow twin of the ``array_min(transform(...))`` HOF reduction in
-    :func:`dedup.minhash_signature`.
-
+    hashes (already in ``[0, prime)``) to minhash columns ``h0..h{k-1}``,
+    ``h_j = min((a_j*b + c_j) % prime)`` for ``params[j] = (a_j, c_j)``.
     ``a, c < prime < 2^31`` and ``b < prime``, so ``a*b + c < 2^62 + 2^31``
-    fits int64: numpy arithmetic is exact and the signatures are
-    bit-identical to the JVM affine transforms."""
+    fits int64: numpy arithmetic is exact."""
     out_schema = StructType(
         [base.schema[id_col]]
         + [StructField(f"h{j}", LongType()) for j in range(len(params))]

@@ -5,11 +5,11 @@ Beyond-reference scale operators (SURVEY.md §7 P7): the reference has no
 vector search; a training-data pipeline needs nearest-neighbor retrieval
 over an embedding column. Two tiers, mirroring FAISS's Flat vs IVF-Flat:
 
-- :func:`cosine_topk` — exact brute force. Scores every (query, corpus)
-  pair with a JVM-side higher-order-function dot product (``zip_with`` +
-  ``aggregate`` — no Python UDF, no data leaves codegen). The query set
-  broadcasts; the corpus never shuffles until the final per-query top-k
-  window over Q×N scored rows. This is the ground truth and is the right
+- :func:`cosine_topk` — exact brute force. The small query set is
+  collected once and each corpus batch is scored against all of it in one
+  Arrow-batched BLAS matmul, which keeps only its local top-k per query;
+  the corpus never shuffles, and the final per-query top-k window sees
+  ~partitions × Q × k rows. This is the ground truth and is the right
   plan whenever |queries| is small.
 - :func:`build_ivf_index` / :func:`ivf_topk` — the 100 TB path. A KMeans
   coarse quantizer assigns every corpus vector to a centroid partition
@@ -36,8 +36,9 @@ def as_double_array(col: Column | str) -> Column:
 
 
 def dot_product(a: Column, b: Column) -> Column:
-    """Elementwise product + fold — whole-stage-codegen higher-order
-    functions, no UDF."""
+    """Elementwise product + fold as higher-order functions — no UDF,
+    but CodegenFallback (interpreted per element), so it suits the small
+    or candidate-sized inputs it scores here."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -49,13 +50,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot_product(a, a))
 
 
-# HOF dot products are CodegenFallback (interpreted per element); the Arrow
-# matmul kernel runs at BLAS speed. Below this dimension the Python-worker
-# round trip costs more than interpretation saves; at or above it the matmul
-# wins and the gap widens with dim (measured ~2x at dim 64 on the fixtures).
-ARROW_KERNEL_MIN_DIM = 32
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -63,76 +57,22 @@ def cosine_topk(
     vec_col: str,
     k: int = 5,
     exclude_self: bool = True,
-    kernel: str = "auto",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: for each query vector the ``k`` most similar
     corpus vectors.
 
-    ``queries`` must be small (it broadcasts / collects); ``corpus`` can
-    be arbitrary size — it is scanned once and scored in place.
-
-    ``kernel`` picks the scoring path:
-
-    - ``'hof'``: JVM-side ``zip_with``/``aggregate`` dot products; the
-      Q×N scored rows shuffle (on query id) for the top-k window. Zero
-      Python anywhere in the plan.
-    - ``'arrow'``: the query matrix is collected to the driver (small by
-      contract — same bound the broadcast already imposes) and shipped as
-      a closure literal; one Arrow-batched ``mapInPandas`` scores each
-      corpus batch against ALL queries in a single BLAS matmul and emits
-      only its LOCAL top-k per query, so the final window sees
-      ~partitions × Q × k candidate rows instead of Q × N — at scale this
-      removes the dominant shuffle entirely, on top of the kernel speedup.
-    - ``'auto'`` (default): ``'arrow'`` when the vector dimension is ≥
-      ``ARROW_KERNEL_MIN_DIM``, else ``'hof'``. Pass ``dim`` when the
-      caller knows it (a fixed-dim embedding column) — then kernel
-      choice costs NO job. Without ``dim``, the queries are collected
-      once (small by contract) and handed to the arrow kernel, so the
-      choice still adds no job beyond the collect the arrow path needs
-      anyway (round-6 bench finding: the old one-row ``first()`` probe
-      added a job to every call).
-
-    Both kernels compute in double and produce identical rankings (modulo
-    last-ulp summation-order ties — far below the oracle's 6-significant-
-    digit comparison).
+    ``queries`` must be small: building the plan collects them to the
+    driver (the one job this call starts), and they ship to the workers as
+    a closure literal. ``corpus`` can be arbitrary size — it is scanned
+    once and scored in place. One Arrow-batched ``mapInPandas`` scores
+    each corpus batch against ALL queries in a single BLAS matmul and
+    emits only its LOCAL top-k per query, so the final window sees
+    ~partitions × Q × k candidate rows instead of Q × N.
 
     Output: ``query_id, neighbor_id, cosine`` (double), ``k`` rows per
     query, ties broken on neighbor id.
     """
-    if kernel not in ("auto", "hof", "arrow"):
-        raise ValueError(f"kernel must be 'auto', 'hof' or 'arrow', got {kernel!r}")
-    qrows = None
-    if kernel == "auto":
-        if dim is None:
-            # One collect (queries are small by contract) decides the
-            # kernel AND feeds the arrow path — never a probe-only job.
-            qrows = queries.select(
-                F.col(id_col), as_double_array(vec_col).alias("__qv")
-            ).collect()
-            dim = len(qrows[0]["__qv"]) if qrows else 0
-        kernel = "arrow" if dim >= ARROW_KERNEL_MIN_DIM else "hof"
-
-    if kernel == "arrow":
-        scored = _cosine_scores_arrow(
-            corpus, queries, id_col, vec_col, k, exclude_self, qrows=qrows
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_array(vec_col).alias("__cv"),
-        ).withColumn("__cn", l2_norm(F.col("__cv")))
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double_array(vec_col).alias("__qv"),
-        ).withColumn("__qn", l2_norm(F.col("__qv")))
-        scored = c.crossJoin(F.broadcast(q)).withColumn(
-            "cosine",
-            dot_product(F.col("__cv"), F.col("__qv"))
-            / (F.col("__cn") * F.col("__qn")),
-        )
-        if exclude_self:
-            scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = _cosine_scores_arrow(corpus, queries, id_col, vec_col, k, exclude_self)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
         scored.withColumn("__rn", F.row_number().over(w))
@@ -148,22 +88,17 @@ def _cosine_scores_arrow(
     vec_col: str,
     k: int,
     exclude_self: bool,
-    qrows=None,
 ) -> DataFrame:
     """Arrow kernel for :func:`cosine_topk`: per-batch BLAS matmul +
     LOCAL top-k, returning the candidate frame (query_id, neighbor_id,
     cosine) for the global top-k window. Local top-k is sound because a
-    global top-k row is necessarily a top-k row of its own batch.
-    ``qrows`` lets the caller pass already-collected query rows
-    (id, __qv) so kernel auto-selection and scoring share one collect."""
+    global top-k row is necessarily a top-k row of its own batch."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    if qrows is None:
-        qrows = (
-            queries.select(F.col(id_col), as_double_array(vec_col).alias("__qv"))
-            .collect()
-        )
+    qrows = queries.select(
+        F.col(id_col), as_double_array(vec_col).alias("__qv")
+    ).collect()
     id_type = corpus.schema[id_col].dataType
     out_schema = StructType(
         [
@@ -295,7 +230,6 @@ def hyperplane_lsh_near_dupes(
     rows_per_band: int = 8,
     max_bucket: int = 1000,
     seed: int = 42,
-    signature: str = "auto",
 ) -> DataFrame:
     """Embedding-cosine near-dup at scale: random-hyperplane (SimHash-for-
     angles, Charikar 2002) LSH blocking + exact cosine verification.
@@ -324,62 +258,33 @@ def hyperplane_lsh_near_dupes(
     verification happens on the candidate set alone. This is the same
     shape as ``minhash_lsh_pairs``.
 
-    ``signature`` picks the sign-bit kernel: ``'hof'`` stays JVM-side with
-    higher-order-function dot products — zero Python in the plan, but HOFs
-    are CodegenFallback (interpreted per element), so the kernel costs
-    O(num_bits × dim) interpreted ops per vector. ``'arrow'`` computes all
-    bits in one Arrow-batched numpy matmul (``mapInPandas``) — pays Python
-    worker startup but runs the kernel at BLAS speed; measured ~2× faster
-    warm on the 2k-vector fixture and the gap widens with corpus size.
-    ``'auto'`` (default) picks ``'arrow'`` at ``dim >=
-    ARROW_KERNEL_MIN_DIM``, else ``'hof'``. Both produce identical bits
-    (parity test); candidate generation and verification are unaffected.
+    The sign bits of a batch come from one Arrow-batched numpy matmul
+    (``mapInPandas``), so the kernel runs at BLAS speed.
 
     Output: ``id_a, id_b, cosine`` (id_a < id_b).
     """
     import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-    if signature == "auto":
-        signature = "arrow" if dim >= ARROW_KERNEL_MIN_DIM else "hof"
     planes = np.random.RandomState(seed).normal(size=(num_bits, dim))
     vecs = corpus.select(
         F.col(id_col), as_double_array(vec_col).alias("__v")
     ).withColumn("__n", l2_norm(F.col("__v")))
-    if signature == "hof":
-        H = F.array(
-            *[F.array(*[F.lit(float(x)) for x in row]) for row in planes]
-        )
-        sig = vecs.withColumn(
-            "__bits",
-            F.transform(
-                H, lambda h: (dot_product(F.col("__v"), h) >= 0).cast("int")
-            ),
-        )
-    elif signature == "arrow":
-        import pandas as pd
-        from pyspark.sql.types import (
-            ArrayType,
-            IntegerType,
-            StructField,
-            StructType,
-        )
+    out_schema = StructType(
+        list(vecs.schema.fields)
+        + [StructField("__bits", ArrayType(IntegerType()))]
+    )
 
-        in_fields = vecs.schema.fields
-        out_schema = StructType(
-            list(in_fields) + [StructField("__bits", ArrayType(IntegerType()))]
-        )
+    def gen(batches):
+        for pdf in batches:
+            M = np.stack(pdf["__v"].values).astype(np.float64)
+            bits = (M @ planes.T >= 0).astype(np.int32)
+            pdf = pdf.copy()
+            pdf["__bits"] = list(bits)
+            yield pdf
 
-        def gen(batches):
-            for pdf in batches:
-                M = np.stack(pdf["__v"].values).astype(np.float64)
-                bits = (M @ planes.T >= 0).astype(np.int32)
-                pdf = pdf.copy()
-                pdf["__bits"] = list(bits)
-                yield pdf
-
-        sig = vecs.mapInPandas(gen, out_schema)
-    else:
-        raise ValueError(f"signature must be 'hof' or 'arrow', got {signature!r}")
+    sig = vecs.mapInPandas(gen, out_schema)
     num_bands = num_bits // rows_per_band
     entries = []
     for bnd in range(num_bands):
@@ -751,7 +656,6 @@ def knn_label_propagation(
     vec_col: str,
     label_col: str,
     k: int = 5,
-    dim: int | None = None,
 ) -> DataFrame:
     """Semi-supervised auto-labeling: each unlabeled vector takes the
     majority label among its ``k`` nearest labeled neighbors by exact
@@ -778,7 +682,7 @@ def knn_label_propagation(
     (long)`` — one row per unlabeled vector.
     """
     nbrs = cosine_topk(
-        labeled, unlabeled, id_col, vec_col, k=k, exclude_self=False, dim=dim
+        labeled, unlabeled, id_col, vec_col, k=k, exclude_self=False
     )
     votes = (
         labeled.select(

@@ -2460,15 +2460,14 @@ def media_byte_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-5 for 10 query vectors over the whole
-    embeddings table — the ANN ground-truth path. ``dim=64`` is the
-    embeddings-table contract (TESTDATA.md), so kernel auto-selection
-    costs no probe job (round-6 bench regression fix)."""
+    embeddings table — the ANN ground-truth path. The operator's one job
+    while the plan is built is the collect of the 10 query vectors."""
     from datawarehousefinal_spark.operators.similarity import cosine_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    out = cosine_topk(emb, queries, "vec_id", "embedding", k=5, dim=64)
-    # dot-product accumulation order differs across kernels — contract
+    out = cosine_topk(emb, queries, "vec_id", "embedding", k=5)
+    # BLAS and DuckDB sum the dot product in different orders: contract
     return _ulp_contract(out, "cosine")
 
 
@@ -2744,17 +2743,15 @@ def embedding_lsh_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py: near-dup pairs (cosine >= ~0.95) recall
     ~1-1.6e-8 and 100% precision by construction; far-below-threshold
     borderline pairs are pruned by design (near-dup detector, not range
-    search). Uses the Arrow matmul signature kernel — one BLAS matmul
-    per batch vs num_bits × dim interpreted HOF ops per vector (~2.5×
-    faster warm at 2k vectors, and the gap widens with corpus size);
-    bit-parity with the 'hof' kernel is asserted in tests."""
+    search). The sign bits come from one Arrow-batched BLAS matmul per
+    batch; the operator runs no job while the plan is built."""
     from datawarehousefinal_spark.operators.similarity import (
         hyperplane_lsh_near_dupes,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     return hyperplane_lsh_near_dupes(
-        emb, "vec_id", "embedding", dim=64, threshold=0.45, signature="arrow"
+        emb, "vec_id", "embedding", dim=64, threshold=0.45
     )
 
 
@@ -4157,13 +4154,20 @@ def simhash_near_dupes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the brute-force Jaccard oracle (round-6 ask: this operator is fully
     deterministic xxhash arithmetic, so it deserves a hash gate, not a
     rows-only check). Candidate recall is GUARANTEED for hamming <= 8
-    (combo_size <= num_blocks - max_hamming pigeonhole; the fixture's
-    planted near-dups measure hamming <= 7, and the J>=0.9 truth set is
-    caught 28/28 at sf0.001, 25/25 at sf0.01), so the verified output
-    equals the exact-Jaccard pair set. combo_size auto-scales with the
-    distinct-fingerprint count (Manku-style sizing), and the max_bucket
-    skew guard is loud. tests/test_dedup.py additionally asserts full
-    recall on the raw hamming-pair surface."""
+    (combo_size <= num_blocks - max_hamming pigeonhole), so the verified
+    output is exactly the J >= 0.9 pairs whose fingerprints lie within
+    hamming 8: always a subset of the exact-Jaccard pair set, and equal
+    to it only while every J >= 0.9 pair is within hamming 8. That holds
+    at sf0.001 (28/28) and sf0.01 (25/25). At sf0.1 it does not: 3 of the
+    254 J >= 0.9 pairs lie at hamming 9-11 ((170, 3680) J 0.929 h 11,
+    (1103, 2466) J 0.905 h 9, (3765, 4331) J 0.951 h 9), so the face
+    returns 251 pairs. SimHash distance only approximates Jaccard; a
+    wider max_hamming trades candidates for that recall.
+    combo_size auto-scales with the distinct-fingerprint count
+    (Manku-style sizing), and the max_bucket skew guard is loud.
+    tests/test_dedup.py asserts full recall on the raw hamming-pair
+    surface, and at sf0.1 that every missed pair lies beyond hamming
+    8."""
     from datawarehousefinal_spark.operators.dedup import (
         jaccard_for_pairs,
         simhash_near_dupes,
@@ -8218,8 +8222,7 @@ def knn_label_propagation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled neighbors by exact cosine (votes DESC, smaller label on
     ties — integer-only tie-break, so the hash is float-order-immune;
     the float influence is the neighbor RANKING, the same contract
-    cosine_topk already proves). dim=64 is the embeddings contract
-    (TESTDATA.md), so kernel choice costs no probe job."""
+    cosine_topk already proves)."""
     from datawarehousefinal_spark.operators.similarity import (
         knn_label_propagation,
     )
@@ -8228,7 +8231,7 @@ def knn_label_propagation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlabeled = emb.filter(F.col("vec_id") % 20 == 0).drop("label")
     labeled = emb.filter(F.col("vec_id") % 20 != 0)
     return knn_label_propagation(
-        labeled, unlabeled, "vec_id", "embedding", "label", k=5, dim=64
+        labeled, unlabeled, "vec_id", "embedding", "label", k=5
     )
 
 
@@ -8539,7 +8542,7 @@ def ann_recall_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = ivf_topk(
         assigned, centroids, queries_df, "vec_id", "embedding", k=5, nprobe=4
     ).select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
-    exact = cosine_topk(emb, queries_df, "vec_id", "embedding", k=5, dim=64)
+    exact = cosine_topk(emb, queries_df, "vec_id", "embedding", k=5)
     return (
         exact.join(approx, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")

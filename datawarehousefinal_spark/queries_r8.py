@@ -895,7 +895,7 @@ def hard_negative_mining_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    cand = cosine_topk(emb, queries, "vec_id", "embedding", k=50, dim=64)
+    cand = cosine_topk(emb, queries, "vec_id", "embedding", k=50)
     # Labels for the QUERY side come from the queries frame (bounded by
     # contract); the corpus-label lookup joins with the Q×50 candidate
     # frame broadcast, so the corpus never shuffles here either.

@@ -9,6 +9,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+# The scale bench.py times: the sf0.1 set beside the oracle fixture.
+SF_DIR_BENCH = os.path.join(os.path.dirname(SF_DIR_ORACLE), "sf0.1")
 
 # ---------------------------------------------------------------------------
 # Deep-sweep gate. The full suite outgrew the round driver's pytest window
@@ -68,3 +70,8 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def oracle_sf_dir() -> str:
     return SF_DIR_ORACLE
+
+
+@pytest.fixture(scope="session")
+def bench_sf_dir() -> str:
+    return SF_DIR_BENCH

@@ -440,3 +440,32 @@ def test_prefix_filter_matches_brute_force(spark):
     assert len(fast) >= 5  # the planted dups must be found
     for k in brute:
         assert fast[k] == brute[k], k
+
+
+def test_simhash_near_dupes_sf01_misses_only_beyond_max_hamming(
+    spark, bench_sf_dir
+):
+    """The registered face checks SimHash candidates against exact Jaccard,
+    so it returns the J >= 0.9 pairs within its max_hamming=8. At sf0.1 its
+    exact-Jaccard oracle has 254 pairs and the face 251: the face's pairs
+    are all true pairs, and each pair it misses has fingerprints more than
+    8 bits apart, out of reach by construction rather than lost."""
+    import __spark_entry__ as entrymod
+    from datawarehousefinal_spark.queries import _W
+    from tests.oracle_harness import duckdb_connect
+
+    face = _pair_set(entrymod.queries()["simhash_near_dupes"](spark, bench_sf_dir))
+    oracle_sql = entrymod.oracle_sql()["simhash_near_dupes"]
+    oracle = {
+        (a, b)
+        for a, b, _ in duckdb_connect(bench_sf_dir).execute(oracle_sql).fetchall()
+    }
+    assert face <= oracle
+    missed = oracle - face
+    ids = {i for pair in missed for i in pair}
+    docs = _docs(spark, bench_sf_dir).filter(F.col("doc_id").isin(list(ids)))
+    fps = {r["doc_id"]: r["simhash"] for r in simhash(docs, "doc_id", "text", _W).collect()}
+    far = {
+        (a, b): bin((fps[a] ^ fps[b]) & (2**64 - 1)).count("1") for a, b in missed
+    }
+    assert all(h > 8 for h in far.values()), far

@@ -1,17 +1,23 @@
-"""Arrow signature-kernel parity (operators/kernels.py) and the direct
-dropped-id simhash formulation (dedup.simhash_dropped_ids).
+"""Arrow signature kernels (operators/kernels.py) checked row for row
+against plain Python references, and the direct dropped-id simhash
+formulation (dedup.simhash_dropped_ids).
 
-The kernels keep shingling + base hashing in the JVM and move only the
-per-document reduction into Arrow numpy, so signatures must be
-BIT-IDENTICAL to the HOF path — asserted row-for-row here, including the
-short-text (whole-text shingle) and NULL-text (no row) edges.
+The kernels keep shingling + base hashing in the JVM and reduce only the
+per-document hash array in Arrow numpy, so each reference here reads the
+same JVM-computed hash arrays and reduces them with the textbook rule.
+The edge rows cover a short text (whole-text shingle), a NULL text (no
+row), repeated shingles, and a two-shingle text whose votes tie.
 """
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.operators.dedup import (
+    _base_hash,
+    char_shingles,
     minhash_signature,
     simhash,
     simhash_dropped_ids,
@@ -20,45 +26,74 @@ from datawarehousefinal_spark.operators.dedup import (
 from datawarehousefinal_spark.plans.audit import physical_plan
 from datawarehousefinal_spark.sources.testdata import load_table
 
+_P = (1 << 31) - 1
+
 
 def _docs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     edge = spark.createDataFrame(
-        [(900001, "ab"), (900002, None), (900003, "aaaaaa")],
+        [(900001, "ab"), (900002, None), (900003, "aaaaaa"), (900004, "abcdef")],
         "doc_id long, text string",
     )
     return docs.unionByName(edge)
 
 
-def test_minhash_arrow_parity_both_hash_modes(spark, sf_dir):
+def _hash_arrays(df, hash_expr) -> dict:
+    """doc_id -> the JVM's per-shingle hash array (width 5)."""
+    rows = df.filter(F.col("text").isNotNull()).select(
+        "doc_id", F.transform(char_shingles("text", 5), hash_expr).alias("hs")
+    )
+    return {r["doc_id"]: r["hs"] for r in rows.collect()}
+
+
+def _minhash_reference(bh: list[int], k: int) -> list[int]:
+    """The seeded universal-hash family over 2^31-1, spelled out."""
+    rng = random.Random(42)
+    params = [(rng.randrange(1, _P), rng.randrange(0, _P)) for _ in range(k)]
+    return [min((a * b + c) % _P for b in bh) for a, c in params]
+
+
+def _simhash_reference(hs: list[int]) -> int:
+    """Charikar vote: bit i set iff more than half the shingles set it."""
+    fp = 0
+    for i in range(64):
+        ones = sum(((h & (2**64 - 1)) >> i) & 1 for h in hs)
+        if 2 * ones > len(hs):
+            fp |= 1 << i
+    return fp - (1 << 64) if fp >= 1 << 63 else fp
+
+
+def test_minhash_matches_python_reference_both_hash_modes(spark, sf_dir):
     p = _docs(spark, sf_dir)
     for mode in ("xxhash64", "md5"):
-        arrow = minhash_signature(
-            p, "doc_id", "text", 16, 5, mode, kernel="arrow"
-        ).orderBy("doc_id").collect()
-        hof = minhash_signature(
-            p, "doc_id", "text", 16, 5, mode, kernel="hof"
-        ).orderBy("doc_id").collect()
-        assert arrow == hof
-        assert len(arrow) > 0
-        # NULL text produces no signature row on either kernel
-        assert all(r["doc_id"] != 900002 for r in arrow)
+        base = _hash_arrays(p, lambda s: _base_hash(s, mode))
+        got = {
+            r["doc_id"]: [r[f"h{j}"] for j in range(16)]
+            for r in minhash_signature(p, "doc_id", "text", 16, 5, mode).collect()
+        }
+        assert got == {d: _minhash_reference(bh, 16) for d, bh in base.items()}, mode
+        assert 900002 not in got  # NULL text: no row
+        assert len(base[900003]) == 1  # repeated shingles count once
 
 
-def test_simhash_arrow_parity(spark, sf_dir):
+def test_simhash_matches_python_votes(spark, sf_dir):
     p = _docs(spark, sf_dir)
-    arrow = simhash(p, "doc_id", "text", 5, kernel="arrow").orderBy("doc_id").collect()
-    hof = simhash(p, "doc_id", "text", 5, kernel="hof").orderBy("doc_id").collect()
-    assert arrow == hof
-    assert len(arrow) > 0
+    hs = _hash_arrays(p, lambda s: F.xxhash64(s))
+    got = {r["doc_id"]: r["simhash"] for r in simhash(p, "doc_id", "text", 5).collect()}
+    assert got == {d: _simhash_reference(h) for d, h in hs.items()}
+    assert 900002 not in got
+    assert len(hs[900004]) == 2  # a two-shingle doc ties on ~half its bits
 
 
-def test_auto_kernels_are_arrow(spark, sf_dir):
-    """Defaults follow the measurements documented in the docstrings:
-    BOTH minhash and simhash auto → Arrow (round-7 re-measurement:
-    arrow 0.8 s vs hof 1.8 s for simhash at sf0.1, both shingle
-    widths), and both are Arrow-batched MapInPandas, never
-    row-at-a-time Python."""
+def test_signature_kernels_handle_empty_input(spark):
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    assert minhash_signature(empty, "doc_id", "text", 16, 5).collect() == []
+    assert simhash(empty, "doc_id", "text", 5).collect() == []
+
+
+def test_signature_kernels_are_arrow_batched(spark, sf_dir):
+    """Both signature builds reduce in one Arrow-batched MapInPandas,
+    never in row-at-a-time Python."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     mh = physical_plan(minhash_signature(docs, "doc_id", "text", 16, 5))
     assert "MapInPandas" in mh
@@ -66,9 +101,6 @@ def test_auto_kernels_are_arrow(spark, sf_dir):
     sh = physical_plan(simhash(docs, "doc_id", "text", 5))
     assert "MapInPandas" in sh
     assert "BatchEvalPython" not in sh
-    # the JVM-only escape hatch stays available
-    sh_hof = physical_plan(simhash(docs, "doc_id", "text", 5, kernel="hof"))
-    assert "MapInPandas" not in sh_hof
 
 
 def test_simhash_dropped_ids_matches_pair_derivation(spark, sf_dir):

@@ -9,6 +9,8 @@ before calling ``load_table`` so that dependency can never silently return.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from datawarehousefinal_spark.sources.testdata import (
@@ -48,9 +50,11 @@ def test_load_events_without_engine_conf_warm_cache(vanilla_conf, sf_dir):
 
 
 def _jobs_during(spark, fn) -> int:
-    """Run ``fn`` and return how many Spark jobs it started."""
+    """Run ``fn`` and return how many Spark jobs it started. Each call
+    gets its own job group, because the tracker keeps a group's finished
+    jobs."""
     sc = spark.sparkContext
-    group = "load-table-jobs"
+    group = f"jobs-during-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "count the jobs of one call")
     try:
         fn()

@@ -62,27 +62,14 @@ def test_exact_dedup_single_shuffle(spark, sf_dir):
 
 
 def test_cosine_topk_arrow_kernel_plan(spark, sf_dir):
-    """At dim 64 the auto kernel picks the Arrow matmul path: one
-    MapInPandas (vectorized, Arrow-batched — NOT a row-at-a-time Python
-    UDF) that emits only per-partition top-k candidates, so the top-k
-    window shuffles ~partitions x Q x k rows instead of Q x N."""
+    """The Arrow matmul kernel: one MapInPandas (vectorized,
+    Arrow-batched — NOT a row-at-a-time Python UDF) that emits only
+    per-partition top-k candidates, so the top-k window shuffles
+    ~partitions x Q x k rows instead of Q x N."""
     df = _q(spark, sf_dir, "cosine_topk")
     plan = physical_plan(df)
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
-    assert "MapInPandas" in plan  # Arrow kernel auto-selected at dim 64
-    assert_max_shuffles(df, 2)
-
-
-def test_cosine_topk_hof_kernel_stays_jvm(spark, sf_dir):
-    """The 'hof' kernel remains fully JVM-side for narrow vectors."""
-    from datawarehousefinal_spark.operators.similarity import cosine_topk
-    from datawarehousefinal_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(emb.vec_id < 10)
-    df = cosine_topk(emb, queries, "vec_id", "embedding", k=5, kernel="hof")
-    assert_no_python_udf(df)
-    assert "MapInPandas" not in physical_plan(df)
+    assert "MapInPandas" in plan
     assert_max_shuffles(df, 2)
 
 

@@ -13,6 +13,7 @@ from datawarehousefinal_spark.operators.similarity import (
     ivf_topk,
 )
 from datawarehousefinal_spark.sources.testdata import load_table
+from tests.test_loaders import _jobs_during
 
 
 def _clustered_vectors(spark, n_clusters=8, per_cluster=40, dim=16, seed=7):
@@ -153,26 +154,52 @@ def test_hyperplane_lsh_plan_bucketed(spark):
     assert_no_python_udf(lsh)
 
 
-def test_hyperplane_signature_strategies_agree(spark):
+def test_hyperplane_lsh_matches_exact_truth_at_dims_16_and_64(spark):
+    """The Arrow sign-bit kernel at a narrow and a wide dimension: the
+    verified pairs are the planted truth, scored as the exact-cosine
+    ground truth scores them."""
+    from datawarehousefinal_spark.operators.similarity import (
+        embedding_pairs_exact,
+        hyperplane_lsh_near_dupes,
+    )
+
+    for dim in (16, 64):
+        corpus, truth = _near_dup_corpus(spark, dim=dim)
+        exact = {
+            (r["id_a"], r["id_b"]): r["cosine"]
+            for r in embedding_pairs_exact(
+                corpus, "vec_id", "embedding", 0.95
+            ).collect()
+        }
+        got = {
+            (r["id_a"], r["id_b"]): r["cosine"]
+            for r in hyperplane_lsh_near_dupes(
+                corpus, "vec_id", "embedding", dim=dim, threshold=0.95
+            ).collect()
+        }
+        assert set(got) == set(exact) == truth, dim
+        assert got == exact, dim
+
+
+def test_plan_builds_run_no_probe_job(spark, sf_dir):
+    """Building cosine_topk starts exactly one job, the collect of the
+    queries; building hyperplane_lsh_near_dupes starts none."""
     from datawarehousefinal_spark.operators.similarity import (
         hyperplane_lsh_near_dupes,
     )
 
-    corpus, truth = _near_dup_corpus(spark)
-    hof = {
-        (r["id_a"], r["id_b"])
-        for r in hyperplane_lsh_near_dupes(
-            corpus, "vec_id", "embedding", dim=16, threshold=0.95
-        ).collect()
-    }
-    arrow = {
-        (r["id_a"], r["id_b"])
-        for r in hyperplane_lsh_near_dupes(
-            corpus, "vec_id", "embedding", dim=16, threshold=0.95,
-            signature="arrow",
-        ).collect()
-    }
-    assert hof == arrow == truth
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 10)
+    assert _jobs_during(
+        spark,
+        lambda: cosine_topk(emb, queries, "vec_id", "embedding", k=5),
+    ) == 1
+    assert _jobs_during(
+        spark,
+        lambda: hyperplane_lsh_near_dupes(
+            emb, "vec_id", "embedding", dim=64, threshold=0.45
+        ),
+    ) == 0
 
 
 def test_knn_classify_recovers_cluster_labels(spark):
@@ -208,23 +235,68 @@ def test_knn_classify_tie_breaks_to_smallest_label(spark):
     assert pred.collect()[0]["pred_label"] == 3
 
 
-def test_cosine_topk_kernels_agree(spark):
-    """The Arrow matmul kernel and the JVM HOF kernel return identical
-    top-k sets and scores (modulo last-ulp summation order)."""
-    corpus = _clustered_vectors(spark, dim=40)  # >= ARROW_KERNEL_MIN_DIM
-    queries = corpus.filter(F.col("vec_id") < 5)
+def _numpy_topk(corpus_rows, query_rows, k, exclude_self):
+    """Per-query reference: every corpus vector scored by exact cosine,
+    ordered by (-cosine, neighbor_id), first ``k`` kept."""
+    import numpy as np
 
-    def canon(df):
-        return sorted(
-            (r["query_id"], r["neighbor_id"], round(r["cosine"], 9))
-            for r in df.collect()
-        )
+    out = {}
+    for qid, qv in query_rows:
+        q = np.asarray(qv, dtype=np.float64)
+        scored = []
+        for nid, cv in corpus_rows:
+            if exclude_self and nid == qid:
+                continue
+            c = np.asarray(cv, dtype=np.float64)
+            scored.append(
+                (-float(c @ q / (np.linalg.norm(c) * np.linalg.norm(q))), nid)
+            )
+        out[qid] = [(nid, -neg) for neg, nid in sorted(scored)[:k]]
+    return out
 
-    hof = canon(cosine_topk(corpus, queries, "vec_id", "embedding", 5, kernel="hof"))
-    arw = canon(cosine_topk(corpus, queries, "vec_id", "embedding", 5, kernel="arrow"))
-    auto = canon(cosine_topk(corpus, queries, "vec_id", "embedding", 5))
-    assert hof == arw == auto
-    assert len(hof) == 5 * 5
+
+def _topk_lists(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(r["query_id"], []).append((r["neighbor_id"], r["cosine"]))
+    return {q: sorted(v, key=lambda t: (-t[1], t[0])) for q, v in out.items()}
+
+
+def _assert_topk_matches_reference(corpus, queries, k, exclude_self):
+    def rows(df):
+        return [(r["vec_id"], r["embedding"]) for r in df.collect()]
+
+    want = _numpy_topk(rows(corpus), rows(queries), k, exclude_self)
+    got = _topk_lists(
+        cosine_topk(corpus, queries, "vec_id", "embedding", k, exclude_self)
+    )
+    assert set(got) == set(want)
+    for q in want:
+        assert [n for n, _ in got[q]] == [n for n, _ in want[q]], q
+        for (_, a), (_, b) in zip(got[q], want[q]):
+            assert abs(a - b) < 1e-12, q
+
+
+def test_cosine_topk_matches_numpy_reference(spark, sf_dir):
+    """The Arrow matmul kernel against a per-row numpy top-k, on the
+    fixture embeddings (dim 64), on clustered dim-16 vectors, and on small
+    integer vectors with three copies each, whose cosines tie exactly, so
+    k cuts through tie groups that only the neighbor-id order settles."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    _assert_topk_matches_reference(emb, emb.filter(F.col("vec_id") < 10), 5, True)
+    clustered = _clustered_vectors(spark)
+    _assert_topk_matches_reference(
+        clustered, clustered.filter(F.col("vec_id") < 5), 5, True
+    )
+    rng = random.Random(3)
+    base = [[rng.randint(-3, 3) for _ in range(8)] for _ in range(30)]
+    rows = [(3 * i + c, [float(x) for x in v]) for i, v in enumerate(base) for c in range(3)]
+    ties = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = ties.filter(F.col("vec_id") % 7 == 0)
+    for k, exclude_self in ((4, True), (4, False), (8, True)):
+        _assert_topk_matches_reference(ties, queries, k, exclude_self)
+    empty = ties.filter(F.lit(False))
+    assert cosine_topk(ties, empty, "vec_id", "embedding", 5).collect() == []
 
 
 def test_ivf_index_append_matches_quantizer_assignment(spark, sf_dir):
