@@ -147,6 +147,11 @@ BNLJ_ALLOWED = {
     # the cumulative histogram and the 1-row argmax — bounded
     # scalar-broadcast by construction.
     "ks_drift_report",
+    # kll_quantile_store: the 1-row p50/p95/p99 readout of the merged KLL
+    # sketch (a global aggregate, keys=[]) crossJoined onto the events
+    # for the exact-rank check — bounded scalar-broadcast (verified at
+    # sf0.01 and sf0.1: the one BNLJ is `BuildRight, Cross`).
+    "kll_quantile_store",
 }
 
 
