@@ -49,6 +49,7 @@ from pyspark.ml.feature import (
     PCA,
     Imputer,
     OneHotEncoder,
+    SQLTransformer,
     StandardScaler,
     StringIndexer,
     VectorAssembler,
@@ -131,6 +132,25 @@ def impute_most_frequent(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.na.fill({c: modes[c] for c in cols if modes[c] is not None})
 
 
+def _impute_numeric(numeric: list[str]) -> list[Any]:
+    """Stages that mean-impute ``numeric`` and assemble it into
+    ``__num_raw``. The Imputer keeps each column's type, so an int column
+    is filled with its truncated mean; the filled columns then reach the
+    assembler as doubles, because given other types it casts them into
+    columns named after its random uid, and every call then compiles new
+    code."""
+    imputed = [f"__imp_{c}" for c in numeric]
+    doubles = [f"__dbl_{c}" for c in numeric]
+    casts = ", ".join(
+        f"CAST(`{i}` AS DOUBLE) AS `{d}`" for i, d in zip(imputed, doubles)
+    )
+    return [
+        Imputer(strategy="mean", inputCols=numeric, outputCols=imputed),
+        SQLTransformer(statement=f"SELECT *, {casts} FROM __THIS__"),
+        VectorAssembler(inputCols=doubles, outputCol="__num_raw"),
+    ]
+
+
 def build_preprocessor(
     numeric: list[str],
     categorical: list[str],
@@ -155,13 +175,7 @@ def build_preprocessor(
     stages: list[Any] = []
     assemble_inputs: list[str] = []
     if numeric:
-        imputed = [f"__imp_{c}" for c in numeric]
-        stages.append(
-            Imputer(strategy="mean", inputCols=numeric, outputCols=imputed)
-        )
-        stages.append(
-            VectorAssembler(inputCols=imputed, outputCol="__num_raw")
-        )
+        stages += _impute_numeric(numeric)
         if scale_numeric:
             stages.append(
                 StandardScaler(
@@ -661,11 +675,7 @@ def embedding_tabular_classifier(
     stages: list[Any] = []
     assemble: list[str] = []
     if numeric:
-        imputed = [f"__imp_{c}" for c in numeric]
-        stages.append(
-            Imputer(strategy="mean", inputCols=numeric, outputCols=imputed)
-        )
-        stages.append(VectorAssembler(inputCols=imputed, outputCol="__num_raw"))
+        stages += _impute_numeric(numeric)
         stages.append(
             StandardScaler(
                 inputCol="__num_raw",

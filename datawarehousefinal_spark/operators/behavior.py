@@ -18,7 +18,7 @@ Scale shapes:
   distinct, tiny at any scale.
 
 Both are pure codegen and exactly SQL-replayable (oracled in
-queries.py). Period arithmetic uses integer epoch-days / 7 so both
+queries/retail.py). Period arithmetic uses integer epoch-days / 7 so both
 engines agree on week boundaries (no locale-dependent ``weekofyear``).
 
 Reference scope: beyond-reference analytics in the A-section family

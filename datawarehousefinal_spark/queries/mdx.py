@@ -1,47 +1,889 @@
-"""Round-12 query faces.
-
-The round-11 verdict's time-intelligence direction (next-round item #5)
-plus the advisor's PARALLELPERIOD-context finding: month-over-month —
-the most common BI time-intel gesture after year-over-year (the
-reference's Fecha hierarchy exists precisely for month-grain analysis,
-Schema_Trabajo_Final.xml:2-13) — and the shifted-dice cube-context
-semantics (Mondrian evaluates a PARALLELPERIOD tuple against the CUBE,
-not the axis selection, so a YoY member over a single diced year still
-finds the prior year).
-
-- ``mdx_parallelperiod_mom`` — month-over-month with calendar wrap:
-  ``PARALLELPERIOD([Fecha].[Mes], 1)`` shifts an (anio, mes) cell to
-  the previous month, January wrapping into the prior year's December.
-  Spark side: the shift linearizes to ``anio*12 + (mes-1) - 1`` on the
-  aggregate self-join (operators/mdx.py — made computable by the
-  cube's declared ``period_lengths={"Fecha.Mes": 12}``); the oracle
-  spells the same wrap as a CASE join key.
-- ``mdx_parallelperiod_yoy_diced`` — YoY with the SHIFTED level diced:
-  rows ``{[Fecha].[Anio].[1997]}`` shows one year, but its growth
-  column still subtracts 1996 — the translator re-aggregates the
-  shifted-period context WITHOUT the dice on the shifted columns
-  (all other filters kept: the segment slicer applies to 1996 too).
-
-Registered into the same ``QUERIES``/``ORACLES`` registry as
-:mod:`datawarehousefinal_spark.queries` (imported from its tail, before
-the driver-window reorder — these land after the frozen round-12 window
-and enter the rotation next round).
-
-Hash-stability discipline (module contract, same as queries_r8..r11):
-counts are exact BIGINT, differences of counts are exact BIGINT —
-nothing to round at the serve boundary.
+"""MDX front door: Mondrian client query text translated onto the cube
+plans, plus the aggregate advisor.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
+from datawarehousefinal_spark.queries._shared import _scratch_path
+from datawarehousefinal_spark.sources.testdata import load_table
 
-# ---------------------------------------------------------------------------
-# MDX time intelligence: PARALLELPERIOD below the hierarchy top
-# ---------------------------------------------------------------------------
+
+_MDX_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       ON COLUMNS,
+       NON EMPTY CROSSJOIN(
+         {[Fecha].[Anio].Members},
+         {[Persona].[Nacionalidad].[NATION_1],
+          [Persona].[Nacionalidad].[NATION_2]}
+       ) ON ROWS
+FROM [Movimientos]
+WHERE ([Cliente].[Segmento].[BUILDING])
+"""
+
+
+def _movimientos_cube(spark: SparkSession, sf_dir: str):
+    """The reference's cube declaration, Spark-side: the Movimientos
+    cube over the orders star (Schema_Trabajo_Final.xml:56-91 mapped to
+    the fixture: Fecha from o_orderdate, Persona.Nacionalidad through
+    customer→nation, Cliente.Segmento from c_mktsegment; measures =
+    count(fk) "Cantidad Movimientos" + avg "Promedio Medida")."""
+    from datawarehousefinal_spark.operators.mdx import CubeDef
+
+    def star_builder():
+        orders = load_table(spark, sf_dir, "orders")
+        customer = load_table(spark, sf_dir, "customer")
+        nation = load_table(spark, sf_dir, "nation")
+        return (
+            orders.join(
+                F.broadcast(customer),
+                orders["o_custkey"] == customer["c_custkey"],
+                "left",
+            )
+            .join(
+                F.broadcast(nation),
+                customer["c_nationkey"] == nation["n_nationkey"],
+                "left",
+            )
+            .select(
+                F.year("o_orderdate").alias("anio"),
+                F.month("o_orderdate").alias("mes"),
+                F.dayofmonth("o_orderdate").alias("dia"),
+                F.col("n_name").alias("nacionalidad"),
+                F.col("c_mktsegment").alias("segmento"),
+                "o_custkey",
+                "o_totalprice",
+            )
+        )
+
+    return CubeDef(
+        name="Movimientos",
+        star_builder=star_builder,
+        levels={
+            "Fecha.Anio": "anio",
+            "Fecha.Mes": "mes",
+            "Fecha.Dia": "dia",
+            "Persona.Nacionalidad": "nacionalidad",
+            "Cliente.Segmento": "segmento",
+        },
+        # Mondrian hierarchy order (Schema_Trabajo_Final.xml:2-13):
+        # a Mes member is keyed (anio, mes), a Dia member (anio, mes,
+        # dia) — the ancestor chain a client drilling the Fecha
+        # hierarchy expects.
+        hierarchies={"Fecha": ["Anio", "Mes", "Dia"]},
+        # Mes cycles 1..12 under Anio — what makes a below-top
+        # PARALLELPERIOD (month-over-month) shift computable. Dia is
+        # ragged (days-per-month) and deliberately declares nothing.
+        period_lengths={"Fecha.Mes": 12},
+        measures={
+            "Cantidad Movimientos": (
+                "count", "o_custkey", "cantidad_movimientos",
+            ),
+            "Promedio Medida": ("avg", "o_totalprice", "promedio_medida"),
+        },
+    )
+
+
+@query(
+    "mdx_cube_query",
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           n.n_name AS nacionalidad,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+    WHERE c.c_mktsegment = 'BUILDING'
+      AND n.n_name IN ('NATION_1', 'NATION_2')
+    GROUP BY 1, 2
+    """,
+)
+def mdx_cube_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MDX FRONT DOOR (operators/mdx.py): the exact query text a
+    Mondrian BI client would send — measures on COLUMNS, a CROSSJOIN of
+    a level drilldown and an explicit member dice on ROWS, a slicer in
+    WHERE — parsed and translated onto the same star/groupBy plan the
+    hand-written cube faces use. Closes SURVEY §3.3's re-expression:
+    the Mondrian surface is now served at the query-language level, not
+    just the operator level (Schema_Trabajo_Final.xml:56-91; the
+    round-9 verdict's last missing item). The oracle is the equivalent
+    SQL — hash equality proves the translation, member/slicer
+    semantics included. 100 TB shape: identical to the cube faces —
+    slicer and member filters reach the scans through the broadcast
+    star, one shuffle on the grouping keys."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_STATEMENT)
+
+
+_MDX_ROLLUP_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       ON COLUMNS,
+       CROSSJOIN(
+         {[Fecha].[(All)], [Fecha].[Anio].Members},
+         {[Persona].[Nacionalidad].[(All)],
+          [Persona].[Nacionalidad].Members}
+       ) ON ROWS
+FROM [Movimientos]
+"""
+
+
+@query(
+    "mdx_rollup_query",
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           n.n_name AS nacionalidad,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+    GROUP BY GROUPING SETS (
+      (year(o.o_orderdate), n.n_name),
+      (year(o.o_orderdate)),
+      (n.n_name),
+      ()
+    )
+    """,
+    # subtotal cells re-associate the avg across engines — contract
+    round_cols=("promedio_medida",),
+)
+def mdx_rollup_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MDX front door's hasAll direction: every reference hierarchy
+    declares ``hasAll="true"`` (Schema_Trabajo_Final.xml:3,16,30,38,46),
+    and this face queries those grand-total members THROUGH THE QUERY
+    LANGUAGE — a crossjoin of two {(All), Level.Members} sets, which
+    the translator expands to the 2×2 grouping-set lattice (leaf
+    cells, both one-dim subtotals, grand total) executed as ONE
+    Expand + HashAggregate pass (operators/mdx.py). The oracle is the
+    equivalent GROUPING SETS SQL — hash equality proves the lattice
+    expansion, NULL-member convention included."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_ROLLUP_STATEMENT)
+
+
+_MDX_ENVIOS_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       ON COLUMNS,
+       NON EMPTY CROSSJOIN(
+         {[Fecha].[Anio].Members},
+         {[Proveedor].[Nacion].Members}
+       ) ON ROWS
+FROM [Envios]
+WHERE ([Pieza].[Marca].[Brand#1], [Pieza].[Marca].[Brand#2])
+"""
+
+
+def _envios_cube(spark: SparkSession, sf_dir: str):
+    """The reference's SECOND cube (Schema_Trabajo_Final.xml declares
+    two structurally-identical cubes, Emigrantes + Inmigrantes, over
+    different fact tables): Envios over the lineitem star — Fecha from
+    l_shipdate, Proveedor.Nacion through supplier→nation, Pieza.Marca
+    from part — with the same count + avg measure pair. Proves the
+    front door is cube-generic, not a hard-coded translation of one
+    star."""
+    from datawarehousefinal_spark.operators.mdx import CubeDef
+
+    def star_builder():
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey", "l_suppkey",
+            "l_shipdate", "l_quantity",
+        )
+        part = load_table(spark, sf_dir, "part").select(
+            "p_partkey", "p_brand"
+        )
+        supp = load_table(spark, sf_dir, "supplier").select(
+            "s_suppkey", "s_nationkey"
+        )
+        nation = load_table(spark, sf_dir, "nation").select(
+            "n_nationkey", "n_name"
+        )
+        return (
+            li.join(
+                F.broadcast(part),
+                li["l_partkey"] == part["p_partkey"],
+                "left",
+            )
+            .join(
+                F.broadcast(supp),
+                li["l_suppkey"] == supp["s_suppkey"],
+                "left",
+            )
+            .join(
+                F.broadcast(nation),
+                supp["s_nationkey"] == nation["n_nationkey"],
+                "left",
+            )
+            .select(
+                F.year("l_shipdate").alias("anio"),
+                F.month("l_shipdate").alias("mes"),
+                F.dayofmonth("l_shipdate").alias("dia"),
+                F.col("p_brand").alias("marca"),
+                F.col("n_name").alias("nacion"),
+                "l_orderkey",
+                "l_quantity",
+            )
+        )
+
+    return CubeDef(
+        name="Envios",
+        star_builder=star_builder,
+        levels={
+            "Fecha.Anio": "anio",
+            "Fecha.Mes": "mes",
+            "Fecha.Dia": "dia",
+            "Pieza.Marca": "marca",
+            "Proveedor.Nacion": "nacion",
+        },
+        hierarchies={"Fecha": ["Anio", "Mes", "Dia"]},
+        period_lengths={"Fecha.Mes": 12},
+        measures={
+            "Cantidad Movimientos": (
+                "count", "l_orderkey", "cantidad_movimientos",
+            ),
+            "Promedio Medida": ("avg", "l_quantity", "promedio_medida"),
+        },
+    )
+
+
+@query(
+    "mdx_second_cube_query",
+    oracle="""
+    SELECT CAST(year(l.l_shipdate) AS INTEGER) AS anio,
+           n.n_name AS nacion,
+           count(l.l_orderkey) AS cantidad_movimientos,
+           avg(l.l_quantity) AS promedio_medida
+    FROM lineitem l
+    LEFT JOIN part p ON l.l_partkey = p.p_partkey
+    LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    LEFT JOIN nation n ON s.s_nationkey = n.n_nationkey
+    WHERE p.p_brand IN ('Brand#1', 'Brand#2')
+    GROUP BY 1, 2
+    """,
+)
+def mdx_second_cube_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MDX front door's SECOND cube — the reference schema declares
+    two cubes over different fact tables, and this face queries the
+    lineitem-fact Envios cube through the same parser/translator
+    (operators/mdx.py) with a multi-member slicer, proving the front
+    door is declaration-driven: a new CubeDef is the entire cost of
+    serving a new cube. Same plan shape as every cube face: slicer and
+    dims broadcast, one shuffle on the grouping keys."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_envios_cube(spark, sf_dir), _MDX_ENVIOS_STATEMENT)
+
+
+_MDX_MONTH_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       ON COLUMNS,
+       NON EMPTY {[Fecha].[Mes].Members} ON ROWS
+FROM [Movimientos]
+WHERE ([Cliente].[Segmento].[BUILDING])
+"""
+
+
+@query(
+    "mdx_month_drilldown",
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           CAST(month(o.o_orderdate) AS INTEGER) AS mes,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment = 'BUILDING'
+    GROUP BY 1, 2
+    """,
+)
+def mdx_month_drilldown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MDX month drilldown with HIERARCHY-AWARE member keys (round-10
+    verdict #5): ``[Fecha].[Mes].Members`` on the Movimientos cube
+    groups by the ancestor chain (anio, mes) — the Mondrian semantics
+    of drilling one level below year on the reference's 3-deep Fecha
+    hierarchy (Schema_Trabajo_Final.xml:2-13) — never by the bare
+    month column, which would merge same-named months across years.
+    The oracle is the equivalent multi-column SQL; hash equality
+    proves the chain expansion, slicer included. 100 TB shape:
+    identical to every cube face — the slicer pushes through the
+    broadcast star, one shuffle on (anio, mes), map-side partial
+    aggregation."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(
+        _movimientos_cube(spark, sf_dir), _MDX_MONTH_STATEMENT
+    )
+
+
+_MDX_DAY_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
+       NON EMPTY {[Fecha].[Dia].Members} ON ROWS
+FROM [Envios]
+WHERE ([Pieza].[Marca].[Brand#1])
+"""
+
+
+@query(
+    "mdx_day_drilldown",
+    oracle="""
+    SELECT CAST(year(l.l_shipdate) AS INTEGER) AS anio,
+           CAST(month(l.l_shipdate) AS INTEGER) AS mes,
+           CAST(day(l.l_shipdate) AS INTEGER) AS dia,
+           count(l.l_orderkey) AS cantidad_movimientos
+    FROM lineitem l
+    LEFT JOIN part p ON l.l_partkey = p.p_partkey
+    WHERE p.p_brand = 'Brand#1'
+    GROUP BY 1, 2, 3
+    """,
+)
+def mdx_day_drilldown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full 3-level Fecha climb (round-10 verdict stretch #7):
+    ``[Fecha].[Dia].Members`` on the SECOND (lineitem-fact Envios)
+    cube groups by the complete ancestor chain (anio, mes, dia),
+    proving ``CubeDef.level_chain`` is depth-generic and
+    cube-generic — day grain is the leaf of the reference's Mondrian
+    time dimension (Schema_Trabajo_Final.xml:2-13). Count-only
+    measure: the day-grain hash is pure exact integers. Same scale
+    shape: slicer through the broadcast star, one shuffle on the
+    chain."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_envios_cube(spark, sf_dir), _MDX_DAY_STATEMENT)
+
+
+_MDX_CALC_STATEMENT = """
+WITH MEMBER [Measures].[Medida Total] AS
+     '[Measures].[Promedio Medida] * [Measures].[Cantidad Movimientos]'
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Medida Total]}
+       ON COLUMNS,
+       {[Fecha].[Anio].Members} ON ROWS
+FROM [Movimientos]
+WHERE ([Cliente].[Segmento].[BUILDING])
+"""
+
+
+@query(
+    "mdx_calculated_member",
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) * count(o.o_custkey) AS medida_total
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment = 'BUILDING'
+    GROUP BY 1
+    """,
+)
+def mdx_calculated_member_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``WITH MEMBER`` calculated measures through the MDX front door
+    (operators/mdx.py): the classic Mondrian quoted-expression syntax
+    defines ``[Medida Total] = [Promedio Medida] * [Cantidad
+    Movimientos]`` and the translator evaluates it AFTER aggregation
+    (solve-order-0) as a post-agg projection — exactly one aggregation
+    pass, the calculation never re-scans the fact. The oracle computes
+    the identical ``avg * count`` formula so both engines share the
+    same double rounding story (hash at 6 significant digits). 100 TB
+    shape: unchanged from every cube face — slicer through the
+    broadcast star, one shuffle on anio, plus a zero-cost projection."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_CALC_STATEMENT)
+
+
+_MDX_TOPCOUNT_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
+       TOPCOUNT({[Pieza].[Marca].Members}, 5,
+                [Measures].[Cantidad Movimientos]) ON ROWS
+FROM [Envios]
+"""
+
+
+@query(
+    "mdx_topcount",
+    oracle="""
+    SELECT p.p_brand AS marca,
+           count(l.l_orderkey) AS cantidad_movimientos
+    FROM lineitem l
+    LEFT JOIN part p ON l.l_partkey = p.p_partkey
+    GROUP BY 1
+    ORDER BY cantidad_movimientos DESC, marca
+    LIMIT 5
+    """,
+)
+def mdx_topcount_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``TOPCOUNT`` on the rows axis: the 5 brands ranking highest by
+    the count measure on the lineitem-fact Envios cube, ties broken by
+    the grouping column ascending so both engines pick the same cut
+    (documented divergence from Mondrian's unspecified tie order; the
+    ranking measure is an exact BIGINT count, so the comparison itself
+    can never diverge). Plan: one shuffle to the brand aggregate, then
+    a TakeOrderedAndProject over brand-count-many rows — at 100 TB the
+    top-n never sorts the fact, only the (tiny) aggregate."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_envios_cube(spark, sf_dir), _MDX_TOPCOUNT_STATEMENT)
+
+
+_MDX_FILTER_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       ON COLUMNS,
+       FILTER({[Persona].[Nacionalidad].Members},
+              [Measures].[Cantidad Movimientos] > 600) ON ROWS
+FROM [Movimientos]
+"""
+
+
+@query(
+    "mdx_filter_having",
+    oracle="""
+    SELECT n.n_name AS nacionalidad,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+    GROUP BY 1
+    HAVING count(o.o_custkey) > 600
+    """,
+    # fact-path avg re-associates at sf0.01's multi-split scan — contract
+    round_cols=("promedio_medida",),
+)
+def mdx_filter_having_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``FILTER`` on the rows axis is a post-aggregation HAVING: keep
+    the nationality members whose movement count exceeds a threshold.
+    The condition compares an exact BIGINT count with an integer
+    literal — engine-identical, no boundary rounding can flip a row in
+    or out. Plan: the HAVING filters group-count-many rows after the
+    single aggregation shuffle; at 100 TB it never touches the fact a
+    second time."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_FILTER_STATEMENT)
+
+
+_MDX_CHILDREN_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
+       {[Fecha].[Anio].[1997].Children} ON ROWS
+FROM [Movimientos]
+WHERE ([Cliente].[Segmento].[MACHINERY])
+"""
+
+
+@query(
+    "mdx_children_drilldown",
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           CAST(month(o.o_orderdate) AS INTEGER) AS mes,
+           count(o.o_custkey) AS cantidad_movimientos
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment = 'MACHINERY'
+      AND year(o.o_orderdate) = 1997
+    GROUP BY 1, 2
+    """,
+)
+def mdx_children_drilldown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``[member].Children`` — THE drill-down gesture of every OLAP
+    client: expanding year 1997 yields its months, keyed by the full
+    (anio, mes) ancestor chain and diced to the parent member. The
+    member literal ``[1997]`` is coerced to an exact integer predicate
+    against the INT level column (never a string-vs-int engine cast).
+    Plan: the parent dice applies at the scan edge BEFORE aggregation
+    (a Filter directly over the fact scan — on a date-partitioned
+    fact it becomes partition pruning, so drilling into one year
+    reads one year)."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(
+        _movimientos_cube(spark, sf_dir), _MDX_CHILDREN_STATEMENT
+    )
+
+
+@query(
+    "mdx_aggregate_navigator",
+    # avg via the rollup's EXACT decimal sum-state: the oracle mirrors
+    # the serve contract (one exact decimal sum → one correctly-rounded
+    # double → one division) so the hash is partitioning-independent —
+    # plain avg() sums doubles in scan order, which differs from any
+    # re-associated sum by an ulp (the r12 incremental-rollup red).
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           CAST(month(o.o_orderdate) AS INTEGER) AS mes,
+           count(o.o_custkey) AS cantidad_movimientos,
+           CAST(sum(CAST(o.o_totalprice AS DECIMAL(20,4))) AS DOUBLE)
+             / count(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment = 'BUILDING'
+    GROUP BY 1, 2
+    """,
+)
+def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AGGREGATE TABLES + NAVIGATOR (operators/aggnav.py) — Mondrian's
+    production answer to big facts (its ``<AggName>`` declarations, the
+    natural companion of the reference's cube schema,
+    Schema_Trabajo_Final.xml:56-91), Spark-first: the month-grain
+    rollup of the Movimientos star is materialized ONCE to parquet with
+    MERGEABLE measure states (count cells, and sum+count pairs so avg
+    re-folds as sum/count — never an average of averages), and the
+    month-drilldown MDX statement is answered from that rollup. Two
+    tables are offered; the navigator must route to the SMALLER
+    covering grain (month, 3 columns) over the finer day-grain decoy
+    (4 columns). The oracle aggregates the raw fact directly — hash
+    equality proves the rollup path is LOSSLESS, so routing is a pure
+    optimization. 100 TB story: a (anio, mes, segmento) rollup of a
+    100 TB fact is a few thousand rows; every dashboard drill at or
+    above month grain reads kilobytes, and materialization costs one
+    map-side-combined shuffle, amortized over every routed query."""
+    from datawarehousefinal_spark.operators.aggnav import (
+        materialize_aggregate,
+        mdx_query_navigated,
+    )
+
+    cube = _movimientos_cube(spark, sf_dir)
+    with _scratch_path("mdx_aggnav", sf_dir) as path:
+        rollup = materialize_aggregate(
+            cube,
+            ["Fecha.Mes", "Cliente.Segmento"],
+            path=path,
+            name="agg_mes_segmento",
+        )
+        # finer decoy (kept in-memory): also covers the query — the
+        # navigator must still pick the smaller month-grain table
+        decoy = materialize_aggregate(
+            cube, ["Fecha.Dia", "Cliente.Segmento"], name="agg_dia_segmento"
+        )
+        out = mdx_query_navigated(
+            cube, _MDX_MONTH_STATEMENT, [decoy, rollup]
+        )
+        return local_result(out)
+
+
+@query(
+    "incremental_aggregate_rollup",
+    # avg serve contract = exact decimal sum → double → divide (see
+    # mdx_aggregate_navigator): this face's merged rollup re-associates
+    # the sum (even-day half + odd-day half), which under double
+    # addition differed from the oracle's scan-order avg() by one ulp
+    # in 49/79 cells — the r12 driver red. Decimal states make
+    # merge ≡ rebuild bit-identical, not approximately hashed.
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           CAST(month(o.o_orderdate) AS INTEGER) AS mes,
+           count(o.o_custkey) AS cantidad_movimientos,
+           CAST(sum(CAST(o.o_totalprice AS DECIMAL(20,4))) AS DOUBLE)
+             / count(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment = 'BUILDING'
+    GROUP BY 1, 2
+    """,
+)
+def incremental_aggregate_rollup_q(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """INCREMENTAL rollup maintenance (operators/aggnav.py:
+    ingest_into_aggregate) — the streaming-OLAP ingest pattern: the
+    month-grain aggregate table is materialized from the even-day half
+    of the star, then the odd-day half arrives as a batch and FOLDS
+    into the existing cells (states are commutative monoids: counts
+    and sums re-sum — so the same (anio, mes, segmento) cell
+    accumulates contributions from both halves; the fact is never
+    re-read). The month-drilldown MDX statement is answered from the
+    merged table — routed explicitly, loud if the navigator were to
+    fall back — and the oracle aggregates the FULL raw fact: hash
+    equality IS merge≡rebuild at the query level. 100 TB: ingest cost
+    is O(batch + touched cells); in production the merged cells land
+    as a MERGE INTO / partition overwrite on the lakehouse rollup."""
+    from datawarehousefinal_spark.operators.aggnav import (
+        choose_aggregate,
+        ingest_into_aggregate,
+        materialize_aggregate,
+        reagg_expr,
+    )
+    from datawarehousefinal_spark.operators.mdx import (
+        execute_select,
+        parse_mdx,
+    )
+
+    cube = _movimientos_cube(spark, sf_dir)
+    star = cube.star_builder()
+    base = star.filter(F.col("dia") % 2 == 0)
+    delta = star.filter(F.col("dia") % 2 == 1)
+    rollup = materialize_aggregate(
+        cube,
+        ["Fecha.Mes", "Cliente.Segmento"],
+        source=base,
+        name="agg_mes_segmento",
+    )
+    merged = ingest_into_aggregate(cube, rollup, delta)
+    sel = parse_mdx(_MDX_MONTH_STATEMENT, cube)
+    chosen = choose_aggregate(cube, sel, [merged])
+    if chosen is None:
+        raise RuntimeError(
+            "navigator failed to route to the merged rollup — the face "
+            "would silently prove nothing"
+        )
+    return execute_select(
+        sel, cube, chosen.table, lambda m: reagg_expr(cube, m)
+    )
+
+
+_MDX_BOTTOMCOUNT_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
+       BOTTOMCOUNT({[Pieza].[Marca].Members}, 5,
+                   [Measures].[Cantidad Movimientos]) ON ROWS
+FROM [Envios]
+"""
+
+
+@query(
+    "mdx_bottomcount",
+    oracle="""
+    SELECT p.p_brand AS marca,
+           count(l.l_orderkey) AS cantidad_movimientos
+    FROM lineitem l
+    LEFT JOIN part p ON l.l_partkey = p.p_partkey
+    GROUP BY 1
+    ORDER BY cantidad_movimientos ASC, marca
+    LIMIT 5
+    """,
+)
+def mdx_bottomcount_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``BOTTOMCOUNT`` — TOPCOUNT's ascending twin (the "worst
+    performers" dashboard gesture): the 5 brands ranking LOWEST by the
+    count measure on the lineitem-fact Envios cube, same deterministic
+    grouping-column tie-break as TopCount. One Mondrian divergence is
+    documented at the operator (operators/mdx.py module docstring):
+    Mondrian ranks EMPTY cells first unless NON EMPTY intervenes; this
+    translator's aggregate never materializes empty cells, so
+    BottomCount here ranks only existing members — the NON-EMPTY
+    reading, which is the one an analyst wants. Plan: one shuffle to
+    the brand aggregate, then a TakeOrderedAndProject (ascending) over
+    brand-count-many rows — the fact is never sorted."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_envios_cube(spark, sf_dir), _MDX_BOTTOMCOUNT_STATEMENT)
+
+
+_MDX_ORDER_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       ON COLUMNS,
+       ORDER(FILTER({[Persona].[Nacionalidad].Members},
+                    [Measures].[Cantidad Movimientos] > 600),
+             [Measures].[Promedio Medida], BDESC) ON ROWS
+FROM [Movimientos]
+"""
+
+
+@query(
+    "mdx_order_members",
+    oracle="""
+    SELECT n.n_name AS nacionalidad,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+    GROUP BY 1
+    HAVING count(o.o_custkey) > 600
+    """,
+    # fact-path avg re-associates at sf0.01's multi-split scan — contract
+    round_cols=("promedio_medida",),
+)
+def mdx_order_members_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ORDER`` over a ``FILTER`` — the everyday BI axis sort
+    ("members above threshold, best average first"), proving wrapper
+    NESTING executes innermost-first (HAVING, then sort). ORDER is a
+    pure presentation sort of the aggregated cells (it never changes
+    the SET), so the oracle pins the set + values while the driver's
+    order-insensitive hash ignores row order BY DESIGN; the sort
+    itself — BDESC with the grouping-column tie-break — is pinned by
+    tests/test_mdx.py::test_mdx_order_sorts_rows. The B-variants
+    coincide with plain ASC/DESC here because a wrapped axis is always
+    single-grain (mixed-grain wrapping raises). Plan: the sort runs
+    over group-count-many aggregated rows after the single shuffle —
+    at 100 TB ordering a dashboard axis costs nothing."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_ORDER_STATEMENT)
+
+
+_MDX_NAMED_SET_STATEMENT = """
+WITH SET [Segmentos Clave] AS
+     '{[Cliente].[Segmento].[BUILDING], [Cliente].[Segmento].[MACHINERY]}'
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       ON COLUMNS,
+       CROSSJOIN({[Fecha].[Anio].Members}, [Segmentos Clave]) ON ROWS
+FROM [Movimientos]
+"""
+
+
+@query(
+    "mdx_named_set_crossjoin",
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           c.c_mktsegment AS segmento,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
+    GROUP BY 1, 2
+    """,
+)
+def mdx_named_set_crossjoin_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``WITH SET`` named sets — the reusable-selection idiom of every
+    saved BI report: the segment set is declared once and referenced by
+    name inside a CROSSJOIN branch. The reference splices the declared
+    set's AST at parse time, so the translated plan — member dice
+    BEFORE aggregation, one shuffle on (anio, segmento) — is
+    hash-identical to writing the set inline; the oracle proves exactly
+    that against the raw star. Unknown and twice-declared names raise;
+    wrapper functions inside a set body raise (rows-axis-only)."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(
+        _movimientos_cube(spark, sf_dir), _MDX_NAMED_SET_STATEMENT
+    )
+
+
+_MDX_HEAD_TAIL_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
+       TAIL(HEAD({[Fecha].[Anio].Members}, 4), 2) ON ROWS
+FROM [Movimientos]
+"""
+
+
+@query(
+    "mdx_head_tail_years",
+    oracle="""
+    WITH per AS (
+      SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+             count(o.o_custkey) AS cantidad_movimientos
+      FROM orders o
+      GROUP BY 1
+    )
+    SELECT anio, cantidad_movimientos
+    FROM per ORDER BY anio LIMIT 2 OFFSET 2
+    """,
+)
+def mdx_head_tail_years_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``HEAD``/``TAIL`` natural-order cuts, NESTED (innermost-first:
+    Head takes the first 4 years in member order, Tail keeps that
+    prefix's last 2 — i.e. years 3-4, the classic windowing gesture
+    over a member axis). Natural member order for value-keyed levels
+    is the grouping key ascending, so both engines agree exactly and
+    the oracle is LIMIT/OFFSET over the ordered year aggregate. Plan:
+    each cut is a TakeOrderedAndProject over year-count-many aggregated
+    rows — the fact is never sorted."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(
+        _movimientos_cube(spark, sf_dir), _MDX_HEAD_TAIL_STATEMENT
+    )
+
+
+_MDX_YOY_STATEMENT = """
+WITH MEMBER [Measures].[Crecimiento Anual] AS
+     '[Measures].[Cantidad Movimientos] -
+      ([Measures].[Cantidad Movimientos], PARALLELPERIOD([Fecha].[Anio], 1))'
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Crecimiento Anual]}
+       ON COLUMNS,
+       {[Fecha].[Mes].Members} ON ROWS
+FROM [Movimientos]
+WHERE ([Cliente].[Segmento].[BUILDING])
+"""
+
+
+@query(
+    "mdx_parallelperiod_yoy",
+    oracle="""
+    WITH per AS (
+      SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+             CAST(month(o.o_orderdate) AS INTEGER) AS mes,
+             count(o.o_custkey) AS cantidad_movimientos
+      FROM orders o
+      LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+      WHERE c.c_mktsegment = 'BUILDING'
+      GROUP BY 1, 2
+    )
+    SELECT a.anio, a.mes, a.cantidad_movimientos,
+           a.cantidad_movimientos - b.cantidad_movimientos
+             AS crecimiento_anual
+    FROM per a
+    LEFT JOIN per b ON b.anio = a.anio - 1 AND b.mes = a.mes
+    """,
+)
+def mdx_parallelperiod_yoy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PARALLELPERIOD — time intelligence through the MDX front door:
+    the year-over-year movement change per (anio, mes) cell, the
+    calculated member subtracting the measure at the SAME month one
+    year earlier (``([Measures].[X], PARALLELPERIOD([Fecha].[Anio],
+    1))``). Executes as ONE aggregation of the slicer-filtered star
+    plus a LEFT self-join of the month-grain AGGREGATE on (anio-1,
+    mes) — cell×cell, never a second fact scan; first-year cells have
+    no prior period, so the YoY column is NULL there on both engines
+    (MDX empty-cell ≡ SQL NULL arithmetic — exact BIGINT counts
+    otherwise, nothing to round). 100 TB: the self-join touches
+    months×segments-many rows, kilobytes; at that scale time
+    intelligence is free once the cube cells exist."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_YOY_STATEMENT)
+
+
+_MDX_SUBSELECT_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       ON COLUMNS,
+       {[Fecha].[Anio].Members} ON ROWS
+FROM (SELECT {[Cliente].[Segmento].[BUILDING],
+              [Cliente].[Segmento].[MACHINERY]} ON COLUMNS
+      FROM (SELECT {[Persona].[Nacionalidad].[PERU],
+                    [Persona].[Nacionalidad].[CHINA],
+                    [Persona].[Nacionalidad].[JAPAN]} ON ROWS
+            FROM [Movimientos]))
+"""
+
+
+@query(
+    "mdx_subselect_slice",
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+    WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
+      AND n.n_name IN ('PERU', 'CHINA', 'JAPAN')
+    GROUP BY 1
+    """,
+)
+def mdx_subselect_slice_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sub-selects — the slice-restriction shape Excel-style pivot
+    clients emit instead of slicers: a NESTED ``FROM (SELECT ... FROM
+    (SELECT ... FROM [Movimientos]))`` restricts the cube to two
+    segments AND three nationalities before the outer year query
+    aggregates. Axis placement inside a sub-select is
+    presentation-only (one restriction sits ON COLUMNS, one ON ROWS —
+    both just filter); nesting composes by AND. All restrictions apply
+    BEFORE aggregation — the same visual-totals semantics, and the
+    same scan-edge filter placement, as slicers: at 100 TB both IN
+    filters push through the broadcast star into the fact scan, and
+    the year aggregate shuffles only the surviving slice."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    return mdx_query(
+        _movimientos_cube(spark, sf_dir), _MDX_SUBSELECT_STATEMENT
+    )
+
 
 _MDX_MOM_STATEMENT = """
 WITH MEMBER [Measures].[Crecimiento Mensual] AS
@@ -91,7 +933,6 @@ def mdx_parallelperiod_mom_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     months-many aggregate cells, kilobytes; time intelligence is free
     once the cube cells exist."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_MOM_STATEMENT)
 
@@ -144,16 +985,11 @@ def mdx_parallelperiod_yoy_diced_q(
     case costs one extra scan+agg of the sliced fact — the price of a
     correct answer, and the cells remain broadcastable."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_YOY_DICED_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX time intelligence: PERIODSTODATE (running totals / YTD)
-# ---------------------------------------------------------------------------
 
 _MDX_YTD_STATEMENT = """
 WITH MEMBER [Measures].[Acumulado Anual] AS
@@ -199,7 +1035,6 @@ def mdx_periodstodate_ytd_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate cells, kilobytes — running totals are free once the cube
     cells exist."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_YTD_STATEMENT)
 
@@ -250,16 +1085,11 @@ def mdx_periodstodate_diced_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan+agg of the sliced fact in the diced case, cells stay
     kilobytes."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_YTD_DICED_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX time intelligence: LASTPERIODS (trailing windows / moving averages)
-# ---------------------------------------------------------------------------
 
 _MDX_MOVING_AVG_STATEMENT = """
 WITH MEMBER [Measures].[Movil Trimestral] AS
@@ -310,16 +1140,11 @@ def mdx_lastperiods_moving_avg_q(
     bit-for-bit. 100 TB: months-many cells, kilobytes — rolling
     analytics are free once the cube cells exist."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_MOVING_AVG_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX member ranges and sub-select WHERE
-# ---------------------------------------------------------------------------
 
 _MDX_RANGE_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos],
@@ -354,7 +1179,6 @@ def mdx_member_range_years_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a partitioned fact prunes to four year-partitions before any
     I/O."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_RANGE_STATEMENT)
 
@@ -392,16 +1216,11 @@ def mdx_subselect_where_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters reach the fact scan through the broadcast star; the outer
     year aggregate shuffles only the doubly-restricted slice."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_SUBSELECT_WHERE_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX DRILLTHROUGH
-# ---------------------------------------------------------------------------
 
 _MDX_DRILLTHROUGH_STATEMENT = """
 DRILLTHROUGH
@@ -439,16 +1258,11 @@ def mdx_drillthrough_cell_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     diced year + predicate pushdown do the work; MAXROWS would
     short-circuit the scan via CollectLimit)."""
     from datawarehousefinal_spark.operators.mdx import mdx_drillthrough
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_drillthrough(
         _movimientos_cube(spark, sf_dir), _MDX_DRILLTHROUGH_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# Aggregate navigator over a PARTITIONED rollup (partition pruning proven)
-# ---------------------------------------------------------------------------
 
 _MDX_NAV_PRUNED_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos],
@@ -462,7 +1276,7 @@ FROM [Movimientos]
 @query(
     "mdx_navigator_partition_pruned",
     # avg serve contract = exact decimal sum → double → divide (see
-    # mdx_aggregate_navigator in queries_r11.py): rollup-served avg
+    # mdx_aggregate_navigator): rollup-served avg
     # re-associates the sum across cells, so the oracle mirrors the
     # partitioning-independent exact-decimal formula.
     oracle="""
@@ -499,8 +1313,6 @@ def mdx_navigator_partition_pruned_q(
         mdx_query_navigated,
     )
     from datawarehousefinal_spark.plans.audit import physical_plan
-    from datawarehousefinal_spark.queries import _scratch_path
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)
     with _scratch_path("agg_nav_part", sf_dir) as path:
@@ -525,10 +1337,6 @@ def mdx_navigator_partition_pruned_q(
             )
         return local_result(out)
 
-
-# ---------------------------------------------------------------------------
-# MDX time intelligence: OPENINGPERIOD / CLOSINGPERIOD
-# ---------------------------------------------------------------------------
 
 _MDX_CLOSING_STATEMENT = """
 WITH MEMBER [Measures].[Vs Cierre] AS
@@ -573,16 +1381,11 @@ def mdx_closingperiod_vs_yearend_q(
     DESC)``. Exact BIGINT differences, nothing to round. 100 TB:
     months-many cells, kilobytes."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_CLOSING_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX EXCEPT (set subtraction)
-# ---------------------------------------------------------------------------
 
 _MDX_EXCEPT_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos],
@@ -623,16 +1426,11 @@ def mdx_except_members_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands in the fact scan alongside the slicer; the aggregate shuffles
     only the surviving slice."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_EXCEPT_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX TOPPERCENT (Pareto cut)
-# ---------------------------------------------------------------------------
 
 _MDX_TOPPERCENT_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
@@ -686,16 +1484,11 @@ def mdx_toppercent_pareto_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated cells (25 nations), never the fact — the Pareto cut is
     free once the cube cells exist."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_TOPPERCENT_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX DESCENDANTS (drill past intermediate levels)
-# ---------------------------------------------------------------------------
 
 _MDX_DESCENDANTS_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
@@ -734,16 +1527,11 @@ def mdx_descendants_days_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the fact is date-partitioned), one shuffle at day grain —
     identical to the hand-written drill."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_DESCENDANTS_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX SET slicer (multi-select WHERE)
-# ---------------------------------------------------------------------------
 
 _MDX_SET_SLICER_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos],
@@ -759,13 +1547,15 @@ WHERE {[Fecha].[Anio].[1996]:[Fecha].[Anio].[1997], [Fecha].[Anio].[1999]}
     oracle="""
     SELECT n.n_name AS nacionalidad,
            count(o.o_custkey) AS cantidad_movimientos,
-           round(avg(o.o_totalprice), 6) + 0 AS promedio_medida
+           avg(o.o_totalprice) AS promedio_medida
     FROM orders o
     LEFT JOIN customer c ON o.o_custkey = c.c_custkey
     LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
     WHERE year(o.o_orderdate) IN (1996, 1997, 1999)
     GROUP BY 1
     """,
+    # the unioned years' rows aggregate in engine-specific order — contract
+    round_cols=("promedio_medida",),
 )
 def mdx_set_slicer_years_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SET slicer — the multi-select WHERE pivot clients emit when a
@@ -781,32 +1571,20 @@ def mdx_set_slicer_years_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     loud MdxError. 100 TB: the IN dice reaches the fact scan like any
     slicer — a three-year slice reads three years' partitions."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries import _ulp_contract
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
-    # the unioned years' rows aggregate in engine-specific order — contract
-    return _ulp_contract(
-        mdx_query(
-            _movimientos_cube(spark, sf_dir), _MDX_SET_SLICER_STATEMENT
-        ),
-        "promedio_medida",
+    return mdx_query(
+        _movimientos_cube(spark, sf_dir), _MDX_SET_SLICER_STATEMENT
     )
-
-
-# ---------------------------------------------------------------------------
-# MDX distinct-count measures (Mondrian aggregator="distinct-count")
-# ---------------------------------------------------------------------------
 
 
 def _movimientos_dc_cube(spark: SparkSession, sf_dir: str):
     """The Movimientos cube extended with a Mondrian distinct-count
     measure ("Clientes Distintos" = exact distinct customers). A
-    SEPARATE fixture from queries_r10._movimientos_cube on purpose:
+    SEPARATE fixture from _movimientos_cube on purpose:
     aggregate tables store states for EVERY cube measure, so adding a
     (non-mergeable) distinct-count to the shared cube would change the
     stored state schema of every existing navigator/ingest face."""
     from datawarehousefinal_spark.operators.mdx import CubeDef
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     base = _movimientos_cube(spark, sf_dir)
     return CubeDef(
@@ -870,10 +1648,6 @@ def mdx_distinct_count_measure_q(
     )
 
 
-# ---------------------------------------------------------------------------
-# MDX compound (tuple-set) slicer
-# ---------------------------------------------------------------------------
-
 _MDX_COMPOUND_SLICER_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos],
         [Measures].[Promedio Medida]} ON COLUMNS,
@@ -889,7 +1663,7 @@ WHERE {([Fecha].[Anio].[1996], [Cliente].[Segmento].[BUILDING]),
     oracle="""
     SELECT n.n_name AS nacionalidad,
            count(o.o_custkey) AS cantidad_movimientos,
-           round(avg(o.o_totalprice), 6) + 0 AS promedio_medida
+           avg(o.o_totalprice) AS promedio_medida
     FROM orders o
     LEFT JOIN customer c ON o.o_custkey = c.c_custkey
     LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -897,6 +1671,8 @@ WHERE {([Fecha].[Anio].[1996], [Cliente].[Segmento].[BUILDING]),
        OR (year(o.o_orderdate) = 1997 AND c.c_mktsegment = 'MACHINERY')
     GROUP BY 1
     """,
+    # the OR legs' rows aggregate in engine-specific order — contract
+    round_cols=("promedio_medida",),
 )
 def mdx_compound_slicer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPOUND slicer — ``WHERE {(tuple), (tuple)}``, the shape Excel
@@ -913,21 +1689,11 @@ def mdx_compound_slicer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact scan like any slicer — Parquet row-group stats prune on
     both legs' year ranges."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries import _ulp_contract
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
-    # the OR legs' rows aggregate in engine-specific order — contract
-    return _ulp_contract(
-        mdx_query(
-            _movimientos_cube(spark, sf_dir), _MDX_COMPOUND_SLICER_STATEMENT
-        ),
-        "promedio_medida",
+    return mdx_query(
+        _movimientos_cube(spark, sf_dir), _MDX_COMPOUND_SLICER_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX RANK (league-table calculated member)
-# ---------------------------------------------------------------------------
 
 _MDX_RANK_STATEMENT = """
 WITH MEMBER [Measures].[Puesto] AS
@@ -974,14 +1740,9 @@ def mdx_rank_league_table_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the window sees group-count-many cells, never the fact —
     ranking is free once the cube cells exist."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_RANK_STATEMENT)
 
-
-# ---------------------------------------------------------------------------
-# MDX custom AGGREGATE members (calculated members on dimension levels)
-# ---------------------------------------------------------------------------
 
 _MDX_CUSTOM_GROUP_STATEMENT = """
 WITH MEMBER [Persona].[Nacionalidad].[Bloque Andino] AS
@@ -1032,16 +1793,11 @@ def mdx_custom_group_member_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the remap is a map-side expression on the already-diced slice —
     custom groups cost nothing over the plain dice."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_CUSTOM_GROUP_STATEMENT
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX median measures (exact percentile aggregator)
-# ---------------------------------------------------------------------------
 
 _MDX_MEDIAN_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos],
@@ -1080,7 +1836,6 @@ def mdx_median_measure_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-grain rollups, or accept ±ε from the KLL rollup
     (operators/sketches.py) that merges at any grain."""
     from datawarehousefinal_spark.operators.mdx import CubeDef, mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     base = _movimientos_cube(spark, sf_dir)
     cube = CubeDef(
@@ -1096,10 +1851,6 @@ def mdx_median_measure_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return mdx_query(cube, _MDX_MEDIAN_STATEMENT)
 
-
-# ---------------------------------------------------------------------------
-# Aggregate advisor (greedy view selection over an MDX workload)
-# ---------------------------------------------------------------------------
 
 _ADVISOR_WORKLOAD = [
     """SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
@@ -1155,7 +1906,6 @@ def aggregate_advisor_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datawarehousefinal_spark.operators.aggnav import (
         recommend_aggregates,
     )
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)
     recs = recommend_aggregates(cube, _ADVISOR_WORKLOAD, max_tables=3)
@@ -1167,10 +1917,6 @@ def aggregate_advisor_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grain string, cells bigint, n_covers int",
     )
 
-
-# ---------------------------------------------------------------------------
-# MDX FILTER with boolean conditions
-# ---------------------------------------------------------------------------
 
 _MDX_FILTER_BOOL_STATEMENT = """
 SELECT {[Measures].[Cantidad Movimientos],
@@ -1214,8 +1960,122 @@ def mdx_filter_boolean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-expressions disambiguate by backtracking (pinned by unit
     tests). 100 TB: a HAVING over group-count-many cells — free."""
     from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     return mdx_query(
         _movimientos_cube(spark, sf_dir), _MDX_FILTER_BOOL_STATEMENT
     )
+
+
+_ADVISOR_ROUTE_WORKLOAD = [
+    # the month drilldown a dashboard refreshes constantly ...
+    """
+    SELECT {[Measures].[Cantidad Movimientos],
+            [Measures].[Promedio Medida]} ON COLUMNS,
+           {[Fecha].[Mes].Members} ON ROWS
+    FROM [Movimientos]
+    WHERE ([Cliente].[Segmento].[BUILDING])
+    """,
+    # ... and the coarser year view (covered by the same month pick)
+    """
+    SELECT {[Measures].[Cantidad Movimientos]} ON COLUMNS,
+           {[Fecha].[Anio].Members} ON ROWS
+    FROM [Movimientos]
+    WHERE ([Cliente].[Segmento].[BUILDING])
+    """,
+]
+
+
+@query(
+    "advisor_materialized_route",
+    # avg via the rollup's exact decimal sum-state (see module docstring)
+    oracle="""
+    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
+           CAST(month(o.o_orderdate) AS INTEGER) AS mes,
+           count(o.o_custkey) AS cantidad_movimientos,
+           CAST(sum(CAST(o.o_totalprice AS DECIMAL(20,4))) AS DOUBLE)
+             / count(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment = 'BUILDING'
+    GROUP BY 1, 2
+    """,
+)
+def advisor_materialized_route_q(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The Mondrian AggGen loop end-to-end (aggnav.
+    materialize_recommended): advisor picks → parquet rollups →
+    ``CubeDef.aggregates`` registration → plain front-door
+    ``mdx_query`` answers the workload's month drilldown from the
+    picks. Loud if the route falls back to the fact (the face would
+    silently prove nothing). 100 TB: this is the full BI serving
+    story — ONE advisor pass (a single wide count-distinct aggregate
+    over the star) + one materialization shuffle per pick buys every
+    future dashboard query a kilobyte rollup read instead of a fact
+    scan. Result is a ``local_result`` so the driver's hash pass never
+    re-reads the scratch rollups."""
+    from datawarehousefinal_spark.operators.aggnav import (
+        materialize_recommended,
+    )
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+    from datawarehousefinal_spark.plans.audit import physical_plan
+
+    cube = _movimientos_cube(spark, sf_dir)
+    with _scratch_path("advisor_route", sf_dir) as path:
+        tables = materialize_recommended(
+            cube,
+            _ADVISOR_ROUTE_WORKLOAD,
+            max_tables=2,
+            path_prefix=path,
+        )
+        if not tables:
+            raise RuntimeError("advisor recommended nothing for the workload")
+        out = mdx_query(cube, _ADVISOR_ROUTE_WORKLOAD[0])
+        plan = physical_plan(out)
+        if "parquet" not in plan.lower():
+            raise RuntimeError(
+                "front-door query did not route to the materialized "
+                "recommendation — the face would silently prove nothing"
+            )
+        return local_result(out)
+
+
+_MDX_CLIENT_STATEMENT = """
+SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
+       DIMENSION PROPERTIES MEMBER_UNIQUE_NAME ON COLUMNS,
+       NON EMPTY {[Persona].[Nacionalidad].Members}
+       DIMENSION PROPERTIES MEMBER_CAPTION, MEMBER_UNIQUE_NAME ON ROWS
+FROM [Movimientos]
+WHERE ([Cliente].[Segmento].[MACHINERY])
+"""
+
+
+@query(
+    "mdx_client_shapes",
+    oracle="""
+    SELECT n.n_name AS nacionalidad,
+           count(o.o_custkey) AS cantidad_movimientos,
+           avg(o.o_totalprice) AS promedio_medida
+    FROM orders o
+    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+    WHERE c.c_mktsegment = 'MACHINERY'
+    GROUP BY 1
+    """,
+    # fact-path avg: engines may re-associate the sum — contract
+    round_cols=("promedio_medida",),
+)
+def mdx_client_shapes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact decorated statement a BI client emits — ``NON EMPTY``
+    plus ``DIMENSION PROPERTIES`` on both axes — answered through the
+    plain front door and hash-matched against undecorated SQL: both
+    decorations are documented no-ops (operators/mdx.py — groupBy
+    never fabricates empty cells; intrinsic properties ARE the member
+    key columns), and this face pins that at the driver gate, not
+    only in unit tests. This is the first statement an Excel
+    connection sends after a drag-drop, i.e. the likeliest parse
+    failure a real client would have hit."""
+    from datawarehousefinal_spark.operators.mdx import mdx_query
+
+    out = mdx_query(_movimientos_cube(spark, sf_dir), _MDX_CLIENT_STATEMENT)
+    return out

@@ -1,40 +1,5 @@
-"""Round-10 query faces.
-
-Four waves:
-
-1. The Bloom store's month-grain rollup (completing the sketch-store
-   rollup symmetry with ``hll_rollup``: day filters OR-merged to
-   months, hash-proven against a direct month-grain rebuild), later
-   joined by the CM and KLL day→week climbs.
-2. The classic ad-hoc warehouse battery, part 1 — TPC-H
-   Q3/Q4/Q6/Q7/Q8/Q9/Q10/Q14/Q15/Q19 shapes adapted to the fixture's
-   columns: the questions every star-schema analyst asks next after
-   Q1/Q5 (which shipped in round 8).
-3. Part 2 — the semi/anti-join and scalar-subquery shapes
-   (Q11/Q16/Q17/Q18/Q20/Q21/Q22): LeftSemi/LeftAnti broadcasts,
-   HAVING against global and PER-GROUP scalars (always
-   cross-multiplied into exact decimals), and correlated
-   EXISTS/NOT-EXISTS re-expressed as single-pass aggregates. With
-   ``order_frequency_histogram`` (= Q13) this completes every TPC-H
-   shape the fixture's columns can express.
-4. The MDX front door (operators/mdx.py): Mondrian client query text
-   — members, crossjoins, slicers, hasAll grand totals — translated
-   onto the same cube plans, oracled at the query-language level.
-
-Registered into the same ``QUERIES``/``ORACLES`` registry as
-:mod:`datawarehousefinal_spark.queries` (imported from its tail, before
-the driver-window reorder — these faces land after the frozen round-10
-window and enter the rotation next round). Reference parity: the rollup
-face extends the reference's time-hierarchy aggregation surface
-(Schema_Trabajo_Final.xml:60-68 — the Mondrian time dimension's
-day→month→year climb) to the sketch-store world of the
-beyond-reference LLM-data-pipeline surface.
-
-Hash-stability discipline (module contract, same as queries_r8/r9):
-every double reaching the driver hash is a single division/ln of exact
-integers, raw input values through order-invariant folds, or a positive
-product of those — no cancellation, no transcendental feeding an ORDER
-BY cutoff.
+"""The TPC-H query shapes adapted to the fixture's columns, with decimal-
+exact money.
 """
 
 from __future__ import annotations
@@ -42,145 +7,175 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
 from datawarehousefinal_spark.sources.testdata import load_table
-from datawarehousefinal_spark.queries_r9 import (
-    _BLOOM_K,
-    _BLOOM_M,
-    _BLOOM_PROBE_ABSENT,
-    _BLOOM_PROBE_PRESENT,
-    _BLOOM_SEED,
-    _bloom_probe_sqls,
+
+
+# Shared decimal-exact money expressions. Inputs carry <=2 decimals and
+# fit decimal(12,2); (1 - discount) / (1 + tax) fit decimal(4,2). The
+# products are exact at scale 4/6 on BOTH engines (Spark decimal(17,4) /
+# (22,6); DuckDB (17,4) / (22,6)) — far inside the 38-digit cap, so no
+# precision-loss rounding can diverge; the oracle replays the same casts.
+# (Functions, not module constants: Column construction needs an active
+# SparkContext, and this module imports before any session exists.)
+def _ep():
+    return F.col("l_extendedprice").cast("decimal(12,2)")
+
+
+def _disc_f():
+    return (F.lit(1) - F.col("l_discount")).cast("decimal(4,2)")
+
+
+def _tax_f():
+    return (F.lit(1) + F.col("l_tax")).cast("decimal(4,2)")
+
+
+_EP_SQL = "CAST(l_extendedprice AS DECIMAL(12,2))"
+
+
+_DISC_SQL = "CAST(1 - l_discount AS DECIMAL(4,2))"
+
+
+_TAX_SQL = "CAST(1 + l_tax AS DECIMAL(4,2))"
+
+
+@query(
+    "pricing_summary_report",
+    oracle=f"""
+    SELECT l_returnflag, l_linestatus,
+           CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
+           CAST(sum({_EP_SQL}) AS DOUBLE) AS sum_base_price,
+           CAST(sum({_EP_SQL} * {_DISC_SQL}) AS DOUBLE) AS sum_disc_price,
+           CAST(sum({_EP_SQL} * {_DISC_SQL} * {_TAX_SQL}) AS DOUBLE)
+             AS sum_charge,
+           CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / count(*)
+             AS avg_qty,
+           CAST(sum({_EP_SQL}) AS DOUBLE) / count(*) AS avg_price,
+           CAST(sum(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) / count(*)
+             AS avg_disc,
+           count(*)::BIGINT AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '2000-09-02'
+    GROUP BY 1, 2
+    """,
 )
-
-# ---------------------------------------------------------------------------
-# Bloom store month-grain rollup
-# ---------------------------------------------------------------------------
-
-
-def _bloom_month_oracle() -> str:
-    """Direct month-grain rebuild: the oracle never sees the daily
-    stores, so hash equality proves ``merge(day filters) ≡ bloom(month
-    stream)`` — the same merge≡rebuild contract as the daily face's ALL
-    row, now at the intermediate grain of the time hierarchy. Probe
-    positions are the shared frozen literals."""
-    pa_sql, pb_sql, n_pa, n_pb = _bloom_probe_sqls()
-    js = ", ".join(map(str, range(_BLOOM_K)))
-    return f"""
-    WITH pos AS (
-      SELECT DISTINCT
-             substr(CAST(CAST(ts AS DATE) AS VARCHAR), 1, 7) AS month,
-             ('0x' || substr(md5(user_id::VARCHAR || ':{_BLOOM_SEED}:'
-                                 || u.j::VARCHAR), 1, 15))::BIGINT
-               % {_BLOOM_M} AS p
-      FROM events, unnest([{js}]) AS u(j)
-    ),
-    days AS (
-      -- only days that PRODUCE a daily store row count as merged: the
-      -- store build drops null user_ids, so an all-null day has no
-      -- filter to merge (face/oracle alignment — latent divergence on
-      -- fixtures with nullable user_id)
-      SELECT substr(CAST(CAST(ts AS DATE) AS VARCHAR), 1, 7) AS month,
-             count(DISTINCT CASE WHEN user_id IS NOT NULL
-                                 THEN CAST(ts AS DATE) END)::BIGINT
-               AS n_days_merged
-      FROM events GROUP BY 1
-    ),
-    srv AS (SELECT month, count(*)::BIGINT AS bits_set FROM pos GROUP BY 1),
-    ma AS (
-      SELECT month, count(DISTINCT p)::BIGINT AS hit FROM pos
-      WHERE p IN ({pa_sql}) GROUP BY 1
-    ),
-    mb AS (
-      SELECT month, count(DISTINCT p)::BIGINT AS hit FROM pos
-      WHERE p IN ({pb_sql}) GROUP BY 1
+def pricing_summary_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The TPC-H Q1 pricing summary over the lineitem fixture: one
+    wide aggregate grouped by the 6-combination (returnflag, linestatus)
+    key. The canonical map-side-combine workload — at 100 TB this is a
+    full scan feeding partial aggregates with a 6-row shuffle, the best
+    possible shape; the ship-date filter pushes to the parquet scan.
+    All money sums accumulate in exact decimals (merge-order-invariant)
+    and serve as doubles; averages are one division of exact values."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp")
     )
-    SELECT s.month, d.n_days_merged,
-           coalesce(ma.hit, 0) = {n_pa} AS has_probe_present,
-           coalesce(mb.hit, 0) = {n_pb} AS has_probe_absent,
-           s.bits_set,
-           s.bits_set / {_BLOOM_M}.0 AS fill_ratio,
-           CASE WHEN s.bits_set < {_BLOOM_M}
-                THEN -{_BLOOM_M / _BLOOM_K} * ln(1 - s.bits_set / {_BLOOM_M}.0)
-           END AS distinct_est
-    FROM srv s
-    JOIN days d ON s.month = d.month
-    LEFT JOIN ma ON s.month = ma.month
-    LEFT JOIN mb ON s.month = mb.month
-    """
-
-
-@query("bloom_month_rollup", oracle=_bloom_month_oracle())
-def bloom_month_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Month-grain rollup of the DAILY Bloom membership store — the
-    sketch-store counterpart of the Mondrian time hierarchy's
-    day→month climb, and the missing rollup direction flagged by the
-    round-9 verdict (``bloom_merge`` was exercised day→ALL only; the
-    HLL store already had ``hll_rollup``). The Spark side derives the
-    month filters EXCLUSIVELY by OR-merging the per-day filters
-    (position-set union, sketches.bloom_merge); the oracle rebuilds
-    each month directly from the raw stream — hash equality IS the
-    ``merge(bloom(day₁..dayₙ)) ≡ bloom(month)`` proof at the grain a
-    production rollup job actually materializes. Each month row serves
-    the two frozen-literal membership probes, the merged-day count,
-    fill ratio, and the Swamidass–Baldi estimate.
-
-    100 TB shape: the daily build is the store build (distinct +
-    bounded k-way fan-out, map-side combined); the rollup explodes
-    SKETCH rows only (≤ days × m_bits), never raw data — a year of
-    daily filters rolls up from ~365 × 8k ints regardless of corpus
-    size."""
-    from datawarehousefinal_spark.operators.sketches import (
-        bloom_build_store,
-        bloom_contains_literal,
-        bloom_estimate,
-        bloom_merge,
-        bloom_probe_positions,
+    qty = F.col("l_quantity").cast("decimal(12,2)")
+    return li.groupBy("l_returnflag", "l_linestatus").agg(
+        F.sum(qty).cast("double").alias("sum_qty"),
+        F.sum(_ep()).cast("double").alias("sum_base_price"),
+        F.sum(_ep() * _disc_f()).cast("double").alias("sum_disc_price"),
+        F.sum(_ep() * _disc_f() * _tax_f()).cast("double").alias("sum_charge"),
+        (F.sum(qty).cast("double") / F.count(F.lit(1))).alias("avg_qty"),
+        (F.sum(_ep()).cast("double") / F.count(F.lit(1))).alias("avg_price"),
+        (
+            F.sum(F.col("l_discount").cast("decimal(4,2)")).cast("double")
+            / F.count(F.lit(1))
+        ).alias("avg_disc"),
+        F.count(F.lit(1)).alias("count_order"),
     )
 
-    ev = load_table(spark, sf_dir, "events").select(
-        F.to_date("ts").cast("string").alias("day"), "user_id"
-    ).withColumn("month", F.substring("day", 1, 7))
-    daily = bloom_build_store(
-        ev, ["month", "day"], "user_id", _BLOOM_M, _BLOOM_K, _BLOOM_SEED
-    )
-    n_days = daily.groupBy("month").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days_merged")
-    )
-    monthly = bloom_merge(daily, ["month"]).join(n_days, "month")
-    pa = bloom_probe_positions(
-        _BLOOM_PROBE_PRESENT, _BLOOM_M, _BLOOM_K, _BLOOM_SEED
-    )
-    pb = bloom_probe_positions(
-        _BLOOM_PROBE_ABSENT, _BLOOM_M, _BLOOM_K, _BLOOM_SEED
-    )
-    probed = monthly.select(
-        "month",
-        "n_days_merged",
-        bloom_contains_literal(F.col("bits"), pa).alias(
-            "has_probe_present"
-        ),
-        bloom_contains_literal(F.col("bits"), pb).alias("has_probe_absent"),
-        "bits",
-        "bits_set",
-    )
-    return bloom_estimate(probed, _BLOOM_M, _BLOOM_K)
 
-
-# ---------------------------------------------------------------------------
-# Classic ad-hoc warehouse battery: TPC-H Q3/Q4/Q7/Q8/Q10/Q14/Q15/Q19
-# shapes over the fixture star schema. Shared money discipline with
-# queries_r8: exact-decimal accumulation, doubles only at the serve
-# boundary (or as a single division of exact values).
-# ---------------------------------------------------------------------------
-
-from datawarehousefinal_spark.queries_r8 import (  # noqa: E402
-    _EP_SQL,
-    _DISC_SQL,
-    _ep,
-    _disc_f,
+@query(
+    "regional_supplier_volume",
+    oracle=f"""
+    SELECT n.n_name AS nation,
+           CAST(sum({_EP_SQL} * {_DISC_SQL}) AS DOUBLE) AS revenue,
+           count(*)::BIGINT AS n_lineitems
+    FROM lineitem l
+    JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    JOIN nation n ON s.s_nationkey = n.n_nationkey
+    JOIN region r ON n.n_regionkey = r.r_regionkey
+    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+                   AND c.c_nationkey = s.s_nationkey
+    WHERE r.r_name = 'ASIA'
+      AND o.o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o.o_orderdate <  TIMESTAMP '1998-01-01'
+    GROUP BY 1
+    """,
 )
+def regional_supplier_volume_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The TPC-H Q5 local-supplier-volume join: 6 tables, with the
+    non-equi twist that the CUSTOMER's nation must equal the SUPPLIER's
+    nation. Plan shape for 100 TB: region⋈nation⋈supplier collapses to
+    one small broadcast side that maps each lineitem to its supplier
+    nation with zero shuffle; the fact-to-fact lineitem⋈orders join
+    shuffles on orderkey; customer broadcasts onto the result and the
+    same-nation predicate applies as a post-join filter. Revenue is
+    decimal-exact."""
+    region = load_table(spark, sf_dir, "region").filter(
+        F.col("r_name") == "ASIA"
+    )
+    nation = load_table(spark, sf_dir, "nation")
+    supp = load_table(spark, sf_dir, "supplier")
+    supp_asia = (
+        supp.join(
+            F.broadcast(
+                nation.join(
+                    F.broadcast(region),
+                    nation["n_regionkey"] == region["r_regionkey"],
+                ).select("n_nationkey", "n_name")
+            ),
+            supp["s_nationkey"] == F.col("n_nationkey"),
+        )
+        .select("s_suppkey", "s_nationkey", "n_name")
+    )
+    orders = load_table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
+    ).select("o_orderkey", "o_custkey")
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
+    )
+    return (
+        li.join(F.broadcast(supp_asia), li["l_suppkey"] == F.col("s_suppkey"))
+        .join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .join(cust, orders["o_custkey"] == cust["c_custkey"])
+        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
+        .groupBy(F.col("n_name").alias("nation"))
+        .agg(
+            F.sum(_ep() * _disc_f()).cast("double").alias("revenue"),
+            F.count(F.lit(1)).alias("n_lineitems"),
+        )
+    )
+
+
+@query(
+    "order_frequency_histogram",
+    oracle="""
+    WITH per AS (
+      SELECT o_custkey, count(*)::BIGINT AS n_orders
+      FROM orders GROUP BY 1
+    )
+    SELECT n_orders, count(*)::BIGINT AS n_customers
+    FROM per GROUP BY 1
+    """,
+)
+def order_frequency_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequency-of-frequencies: how many customers placed exactly k
+    orders — the engagement-distribution headline (and the input Good-
+    Turing style estimators read). Two map-side-combined aggregates."""
+    orders = load_table(spark, sf_dir, "orders")
+    per = orders.groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("n_orders")
+    )
+    return per.groupBy("n_orders").agg(
+        F.count(F.lit(1)).alias("n_customers")
+    )
 
 
 @query(
@@ -740,19 +735,6 @@ def discounted_revenue_filtered_q(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# ---------------------------------------------------------------------------
-# Classic warehouse battery, part 2: the semi/anti-join and
-# scalar-subquery shapes (TPC-H Q11/Q16/Q18/Q20/Q21/Q22), adapted to
-# the fixture's columns (no partsupp/commitdate/phone — lateness is
-# measured against the order date, the Q16 complaint list becomes a
-# low-balance supplier blacklist, Q22's "no orders" becomes dormancy
-# after a cutoff since every fixture customer has at least one order).
-# These exercise the plan shapes part 1 doesn't: LeftSemi/LeftAnti
-# broadcasts, HAVING against a global scalar aggregate, and the
-# aggregate reformulation of correlated EXISTS/NOT-EXISTS.
-# ---------------------------------------------------------------------------
-
-
 @query(
     "important_parts_revenue",
     oracle=f"""
@@ -1123,164 +1105,6 @@ def dormant_rich_customers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Sketch-store rollup symmetry, completed: CM and KLL day→week climbs
-# (HLL has hll_rollup, KMV has kmv_merge, Bloom got its month rollup
-# above — these two give every sketch store in the engine the same
-# time-hierarchy direction). Week grain, not month: the events fixture
-# spans exactly one month, so ISO weeks (date_trunc 'week', Monday
-# start on BOTH engines) are the finest grain that still merges
-# multiple daily sketches per group — 5 non-degenerate groups.
-# ---------------------------------------------------------------------------
-
-_CM_HASH_ORACLE = (
-    "('0x' || substr(md5({v}::VARCHAR || ':42:' || {j}::VARCHAR), 1, 15))"
-    "::BIGINT % 256"
-)
-
-
-@query(
-    "cm_week_rollup",
-    oracle=f"""
-    WITH ev AS (
-      SELECT CAST(CAST(date_trunc('week', ts) AS DATE) AS VARCHAR) AS week,
-             user_id
-      FROM events
-    ),
-    cells AS (
-      SELECT week, j,
-             {_CM_HASH_ORACLE.format(v="user_id", j="j")} AS col,
-             count(*)::BIGINT AS cnt
-      FROM ev, unnest(range(0, 4)) AS u(j)
-      GROUP BY 1, 2, 3
-    ),
-    items AS (SELECT DISTINCT week, user_id FROM ev WHERE user_id < 5),
-    fan AS (
-      SELECT i.week, i.user_id, u.j,
-             {_CM_HASH_ORACLE.format(v="i.user_id", j="u.j")} AS col
-      FROM items i, unnest(range(0, 4)) AS u(j)
-    ),
-    est AS (
-      SELECT f.week, f.user_id, min(c.cnt)::BIGINT AS est_n
-      FROM fan f JOIN cells c
-        ON c.week = f.week AND c.j = f.j AND c.col = f.col
-      GROUP BY 1, 2
-    ),
-    ex AS (
-      SELECT week, user_id, count(*)::BIGINT AS exact_n
-      FROM ev WHERE user_id < 5 GROUP BY 1, 2
-    )
-    SELECT e.week, e.user_id, s.est_n, e.exact_n,
-           (s.est_n - e.exact_n)::BIGINT AS overcount
-    FROM ex e JOIN est s ON e.week = s.week AND e.user_id = s.user_id
-    """,
-)
-def cm_week_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-grain rollup of a DAILY Count-Min store — the frequency
-    sketch's day→week climb, completing the time-hierarchy symmetry
-    with ``bloom_month_rollup``/``hll_rollup``. The Spark side builds
-    per-(week, day) sketches and rolls weeks up EXCLUSIVELY by
-    cell-wise summing the daily stores (sketches.cm_rollup — CM merge
-    is exactly linear); the oracle rebuilds each week's cells directly
-    from the raw stream. Hash equality of the served per-(week, user)
-    estimates proves ``rollup(cm(day₁..dayₙ)) ≡ cm(week)`` — and the
-    tracked users' exact counts ride along to exhibit the never-
-    undercount guarantee per week. 100 TB shape: the daily build is
-    one map-side-combined count per (day, j, col); the rollup touches
-    ≤ days × depth × width sketch rows; estimates broadcast the
-    per-week store (≤ 4×256 cells/week)."""
-    from datawarehousefinal_spark.operators.sketches import (
-        cm_build_store,
-        cm_point_estimates,
-        cm_rollup,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.to_date("ts").cast("string").alias("day"), "user_id",
-        F.date_trunc("week", "ts").cast("date").cast("string").alias("week"),
-    )
-    daily = cm_build_store(ev, "user_id", part_cols=["week", "day"])
-    weekly = cm_rollup(daily, ["week"])
-    items = (
-        ev.filter(F.col("user_id") < 5)
-        .select("week", "user_id")
-        .distinct()
-    )
-    est = cm_point_estimates(
-        weekly, items, "user_id", group_cols=["week"]
-    ).select("week", "user_id", F.col("est").alias("est_n"))
-    exact = (
-        ev.filter(F.col("user_id") < 5)
-        .groupBy("week", "user_id")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-    )
-    return exact.join(est, ["week", "user_id"]).select(
-        "week",
-        "user_id",
-        "est_n",
-        "exact_n",
-        (F.col("est_n") - F.col("exact_n")).alias("overcount"),
-    )
-
-
-@query(
-    "kll_week_quantiles",
-    oracle="""
-    SELECT CAST(CAST(date_trunc('week', ts) AS DATE) AS VARCHAR) AS week,
-           count(*)::BIGINT AS n_rows,
-           true AS q50_rank_ok, true AS q95_rank_ok
-    FROM events WHERE value IS NOT NULL
-    GROUP BY 1
-    """,
-)
-def kll_week_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-grain rollup of the DAILY KLL quantile store: per-day
-    sketches of the event value merged to per-week p50/p95 — "last
-    week's p95 latency" without rescanning the week. KLL readouts
-    aren't SQL-replayable (randomized compaction), so the gate verifies
-    the rolled-up store's CONTRACT per week (the kll_quantile_store
-    pattern, now grouped): the exact replayable row count, plus — for
-    each served quantile — that the estimate's EXACT within-week rank
-    lands inside KLL's 5% rank-error envelope. The booleans are
-    computed Spark-side by joining the per-week readouts (a ≤
-    months-sized frame, broadcast) back onto the raw values — fully
-    distributed, no driver collect — and pinned TRUE by the oracle.
-    100 TB shape: the daily build shuffles once on (week, day); the
-    week merge folds ~KB sketches per week; the rank check is
-    gate-only scaffolding the production surface never runs."""
-    from datawarehousefinal_spark.operators.sketches import (
-        kll_build_store,
-        kll_quantiles,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "value", F.to_date("ts").alias("day"),
-        F.date_trunc("week", "ts").cast("date").cast("string").alias("week"),
-    )
-    store = kll_build_store(ev, "value", ["week", "day"])
-    readout = kll_quantiles(store, [0.5, 0.95], group_cols=["week"])
-    vals = ev.filter(F.col("value").isNotNull()).select("week", "value")
-    joined = vals.join(
-        F.broadcast(
-            readout.select(
-                F.col("week").alias("__m"), "q_50", "q_95", "n_rows"
-            )
-        ),
-        F.col("week") == F.col("__m"),
-    )
-    n = F.count(F.lit(1))
-
-    def rank_ok(est_col: str, target: float):
-        rank = F.sum((F.col("value") <= F.col(est_col)).cast("long")) / n
-        return F.abs(rank - F.lit(target)) < F.lit(0.05)
-
-    return joined.groupBy("week").agg(
-        n.cast("long").alias("n_rows"),
-        rank_ok("q_50", 0.5).alias("q50_rank_ok"),
-        rank_ok("q_95", 0.95).alias("q95_rank_ok"),
-    )
-
-
 @query(
     "small_quantity_part_revenue",
     oracle="""
@@ -1451,360 +1275,3 @@ def product_profit_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lineitems"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# MDX front door (the round-9 verdict's last "what's missing" item):
-# the Mondrian query language itself, translated onto the OLAP surface.
-# ---------------------------------------------------------------------------
-
-_MDX_STATEMENT = """
-SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
-       ON COLUMNS,
-       NON EMPTY CROSSJOIN(
-         {[Fecha].[Anio].Members},
-         {[Persona].[Nacionalidad].[NATION_1],
-          [Persona].[Nacionalidad].[NATION_2]}
-       ) ON ROWS
-FROM [Movimientos]
-WHERE ([Cliente].[Segmento].[BUILDING])
-"""
-
-
-def _movimientos_cube(spark: SparkSession, sf_dir: str):
-    """The reference's cube declaration, Spark-side: the Movimientos
-    cube over the orders star (Schema_Trabajo_Final.xml:56-91 mapped to
-    the fixture: Fecha from o_orderdate, Persona.Nacionalidad through
-    customer→nation, Cliente.Segmento from c_mktsegment; measures =
-    count(fk) "Cantidad Movimientos" + avg "Promedio Medida")."""
-    from datawarehousefinal_spark.operators.mdx import CubeDef
-
-    def star_builder():
-        orders = load_table(spark, sf_dir, "orders")
-        customer = load_table(spark, sf_dir, "customer")
-        nation = load_table(spark, sf_dir, "nation")
-        return (
-            orders.join(
-                F.broadcast(customer),
-                orders["o_custkey"] == customer["c_custkey"],
-                "left",
-            )
-            .join(
-                F.broadcast(nation),
-                customer["c_nationkey"] == nation["n_nationkey"],
-                "left",
-            )
-            .select(
-                F.year("o_orderdate").alias("anio"),
-                F.month("o_orderdate").alias("mes"),
-                F.dayofmonth("o_orderdate").alias("dia"),
-                F.col("n_name").alias("nacionalidad"),
-                F.col("c_mktsegment").alias("segmento"),
-                "o_custkey",
-                "o_totalprice",
-            )
-        )
-
-    return CubeDef(
-        name="Movimientos",
-        star_builder=star_builder,
-        levels={
-            "Fecha.Anio": "anio",
-            "Fecha.Mes": "mes",
-            "Fecha.Dia": "dia",
-            "Persona.Nacionalidad": "nacionalidad",
-            "Cliente.Segmento": "segmento",
-        },
-        # Mondrian hierarchy order (Schema_Trabajo_Final.xml:2-13):
-        # a Mes member is keyed (anio, mes), a Dia member (anio, mes,
-        # dia) — the ancestor chain a client drilling the Fecha
-        # hierarchy expects.
-        hierarchies={"Fecha": ["Anio", "Mes", "Dia"]},
-        # Mes cycles 1..12 under Anio — what makes a below-top
-        # PARALLELPERIOD (month-over-month) shift computable. Dia is
-        # ragged (days-per-month) and deliberately declares nothing.
-        period_lengths={"Fecha.Mes": 12},
-        measures={
-            "Cantidad Movimientos": (
-                "count", "o_custkey", "cantidad_movimientos",
-            ),
-            "Promedio Medida": ("avg", "o_totalprice", "promedio_medida"),
-        },
-    )
-
-
-@query(
-    "mdx_cube_query",
-    oracle="""
-    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
-           n.n_name AS nacionalidad,
-           count(o.o_custkey) AS cantidad_movimientos,
-           avg(o.o_totalprice) AS promedio_medida
-    FROM orders o
-    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND n.n_name IN ('NATION_1', 'NATION_2')
-    GROUP BY 1, 2
-    """,
-)
-def mdx_cube_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MDX FRONT DOOR (operators/mdx.py): the exact query text a
-    Mondrian BI client would send — measures on COLUMNS, a CROSSJOIN of
-    a level drilldown and an explicit member dice on ROWS, a slicer in
-    WHERE — parsed and translated onto the same star/groupBy plan the
-    hand-written cube faces use. Closes SURVEY §3.3's re-expression:
-    the Mondrian surface is now served at the query-language level, not
-    just the operator level (Schema_Trabajo_Final.xml:56-91; the
-    round-9 verdict's last missing item). The oracle is the equivalent
-    SQL — hash equality proves the translation, member/slicer
-    semantics included. 100 TB shape: identical to the cube faces —
-    slicer and member filters reach the scans through the broadcast
-    star, one shuffle on the grouping keys."""
-    from datawarehousefinal_spark.operators.mdx import mdx_query
-
-    return mdx_query(_movimientos_cube(spark, sf_dir), _MDX_STATEMENT)
-
-
-_MDX_ROLLUP_STATEMENT = """
-SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
-       ON COLUMNS,
-       CROSSJOIN(
-         {[Fecha].[(All)], [Fecha].[Anio].Members},
-         {[Persona].[Nacionalidad].[(All)],
-          [Persona].[Nacionalidad].Members}
-       ) ON ROWS
-FROM [Movimientos]
-"""
-
-
-@query(
-    "mdx_rollup_query",
-    oracle="""
-    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
-           n.n_name AS nacionalidad,
-           count(o.o_custkey) AS cantidad_movimientos,
-           round(avg(o.o_totalprice), 6) + 0 AS promedio_medida
-    FROM orders o
-    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-    GROUP BY GROUPING SETS (
-      (year(o.o_orderdate), n.n_name),
-      (year(o.o_orderdate)),
-      (n.n_name),
-      ()
-    )
-    """,
-)
-def mdx_rollup_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MDX front door's hasAll direction: every reference hierarchy
-    declares ``hasAll="true"`` (Schema_Trabajo_Final.xml:3,16,30,38,46),
-    and this face queries those grand-total members THROUGH THE QUERY
-    LANGUAGE — a crossjoin of two {(All), Level.Members} sets, which
-    the translator expands to the 2×2 grouping-set lattice (leaf
-    cells, both one-dim subtotals, grand total) executed as ONE
-    Expand + HashAggregate pass (operators/mdx.py). The oracle is the
-    equivalent GROUPING SETS SQL — hash equality proves the lattice
-    expansion, NULL-member convention included."""
-    from datawarehousefinal_spark.operators.mdx import mdx_query
-    from datawarehousefinal_spark.queries import _ulp_contract
-
-    # subtotal cells re-associate the avg across engines — contract
-    return _ulp_contract(
-        mdx_query(_movimientos_cube(spark, sf_dir), _MDX_ROLLUP_STATEMENT),
-        "promedio_medida",
-    )
-
-
-@query(
-    "xml_sink_roundtrip",
-    oracle="""
-    SELECT CAST(year(o_orderdate) AS INTEGER) AS anio,
-           o_orderpriority,
-           count(*) AS n,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM orders GROUP BY 1, 2
-    """,
-)
-def xml_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XML sink/scan roundtrip — the parquet/ORC/CSV/JSONL roundtrip
-    contract on Spark 4's native XML data source (the merged
-    spark-xml), covering the legacy-feed interchange case: aggregate,
-    export as row-tagged XML, read back under an EXPLICIT schema
-    (inference would rescan), hash-match the direct aggregation. XML
-    is an export/ingest format — the docstrings on
-    sources.write_xml/read_xml say so loudly — so the face roundtrips
-    an AGGREGATE (contract-small), never the fact table."""
-    from datawarehousefinal_spark.queries import _money_sum, _scratch_path
-    from datawarehousefinal_spark.sources.readers import read_xml
-    from datawarehousefinal_spark.sources.writers import write_xml
-
-    agg = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(
-            F.year("o_orderdate").alias("anio"), F.col("o_orderpriority")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            _money_sum("o_totalprice").alias("total"),
-        )
-    )
-    with _scratch_path("xml_sink", sf_dir) as path:
-        write_xml(agg, path, row_tag="cell", root_tag="cube")
-        out = read_xml(
-            spark,
-            path,
-            row_tag="cell",
-            schema="anio INT, o_orderpriority STRING, n BIGINT, total DOUBLE",
-        )
-        return local_result(out.select("anio", "o_orderpriority", "n", "total"))
-
-
-@query(
-    "variant_props_histogram",
-    oracle="""
-    SELECT event_type,
-           CAST(json_extract_string(props, '$.k') AS INTEGER) // 10
-             AS k_decile,
-           count(*)::BIGINT AS n_events
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def variant_props_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured analytics through Spark 4's VARIANT type: the
-    events ``props`` JSON is parsed ONCE into the binary variant
-    encoding (``parse_json``) and fields are extracted typed
-    (``variant_get``) — the engine-native path that at 100 TB replaces
-    per-extraction string re-parsing (``get_json_object`` re-tokenizes
-    the JSON text for every field it pulls; the variant parse is paid
-    once and every extraction is a binary offset lookup). Served as a
-    per-(event_type, k-decile) histogram — integer DIV buckets, exact
-    counts — distinct from ``json_props_rollup``'s string-path
-    aggregate face so both JSON strategies stay pinned."""
-    ev = load_table(spark, sf_dir, "events").select("event_type", "props")
-    v = ev.select(
-        "event_type", F.parse_json("props").alias("__v")
-    ).select(
-        "event_type",
-        F.variant_get("__v", "$.k", "int").alias("__k"),
-    )
-    return (
-        v.groupBy(
-            "event_type",
-            F.expr("__k div 10").cast("int").alias("k_decile"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-_MDX_ENVIOS_STATEMENT = """
-SELECT {[Measures].[Cantidad Movimientos], [Measures].[Promedio Medida]}
-       ON COLUMNS,
-       NON EMPTY CROSSJOIN(
-         {[Fecha].[Anio].Members},
-         {[Proveedor].[Nacion].Members}
-       ) ON ROWS
-FROM [Envios]
-WHERE ([Pieza].[Marca].[Brand#1], [Pieza].[Marca].[Brand#2])
-"""
-
-
-def _envios_cube(spark: SparkSession, sf_dir: str):
-    """The reference's SECOND cube (Schema_Trabajo_Final.xml declares
-    two structurally-identical cubes, Emigrantes + Inmigrantes, over
-    different fact tables): Envios over the lineitem star — Fecha from
-    l_shipdate, Proveedor.Nacion through supplier→nation, Pieza.Marca
-    from part — with the same count + avg measure pair. Proves the
-    front door is cube-generic, not a hard-coded translation of one
-    star."""
-    from datawarehousefinal_spark.operators.mdx import CubeDef
-
-    def star_builder():
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_suppkey",
-            "l_shipdate", "l_quantity",
-        )
-        part = load_table(spark, sf_dir, "part").select(
-            "p_partkey", "p_brand"
-        )
-        supp = load_table(spark, sf_dir, "supplier").select(
-            "s_suppkey", "s_nationkey"
-        )
-        nation = load_table(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name"
-        )
-        return (
-            li.join(
-                F.broadcast(part),
-                li["l_partkey"] == part["p_partkey"],
-                "left",
-            )
-            .join(
-                F.broadcast(supp),
-                li["l_suppkey"] == supp["s_suppkey"],
-                "left",
-            )
-            .join(
-                F.broadcast(nation),
-                supp["s_nationkey"] == nation["n_nationkey"],
-                "left",
-            )
-            .select(
-                F.year("l_shipdate").alias("anio"),
-                F.month("l_shipdate").alias("mes"),
-                F.dayofmonth("l_shipdate").alias("dia"),
-                F.col("p_brand").alias("marca"),
-                F.col("n_name").alias("nacion"),
-                "l_orderkey",
-                "l_quantity",
-            )
-        )
-
-    return CubeDef(
-        name="Envios",
-        star_builder=star_builder,
-        levels={
-            "Fecha.Anio": "anio",
-            "Fecha.Mes": "mes",
-            "Fecha.Dia": "dia",
-            "Pieza.Marca": "marca",
-            "Proveedor.Nacion": "nacion",
-        },
-        hierarchies={"Fecha": ["Anio", "Mes", "Dia"]},
-        period_lengths={"Fecha.Mes": 12},
-        measures={
-            "Cantidad Movimientos": (
-                "count", "l_orderkey", "cantidad_movimientos",
-            ),
-            "Promedio Medida": ("avg", "l_quantity", "promedio_medida"),
-        },
-    )
-
-
-@query(
-    "mdx_second_cube_query",
-    oracle="""
-    SELECT CAST(year(l.l_shipdate) AS INTEGER) AS anio,
-           n.n_name AS nacion,
-           count(l.l_orderkey) AS cantidad_movimientos,
-           avg(l.l_quantity) AS promedio_medida
-    FROM lineitem l
-    LEFT JOIN part p ON l.l_partkey = p.p_partkey
-    LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    LEFT JOIN nation n ON s.s_nationkey = n.n_nationkey
-    WHERE p.p_brand IN ('Brand#1', 'Brand#2')
-    GROUP BY 1, 2
-    """,
-)
-def mdx_second_cube_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MDX front door's SECOND cube — the reference schema declares
-    two cubes over different fact tables, and this face queries the
-    lineitem-fact Envios cube through the same parser/translator
-    (operators/mdx.py) with a multi-member slicer, proving the front
-    door is declaration-driven: a new CubeDef is the entire cost of
-    serving a new cube. Same plan shape as every cube face: slicer and
-    dims broadcast, one shuffle on the grouping keys."""
-    from datawarehousefinal_spark.operators.mdx import mdx_query
-
-    return mdx_query(_envios_cube(spark, sf_dir), _MDX_ENVIOS_STATEMENT)

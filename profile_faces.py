@@ -8,12 +8,14 @@ One Spark session (``perfbench/run.py``'s ``session_conf`` with its event
 log) runs every face once cold, in ``--order`` (default: all of
 ``QUERIES``, sorted), then ``--passes`` more times in the same order. Each
 call is ``run.Bench.timed`` under ``setJobGroup(face)``, traced by
-``spans.Tracer``. A record has a ``cold`` section (the face's first call in
-the session) and a ``warm`` section (the fastest later call). Each section
-holds the call's timings, py4j calls and leaks from ``Bench.timed``, the
-self time of each traced layer, the jobs, stages, tasks, shuffle, spill and
-exchanges of ``engine.engine_metrics`` over the call's windows, and three
-JVM deltas: Janino compiles with their mean ms, classes loaded and JIT ms.
+``spans.Tracer``. A record names the face's ``family`` (its module in
+``datawarehousefinal_spark.queries``) and has a ``cold`` section (the
+face's first call in the session) and a ``warm`` section (the fastest
+later call). Each section holds the call's timings, py4j calls and leaks
+from ``Bench.timed``, the self time of each traced layer, the jobs,
+stages, tasks, shuffle, spill and exchanges of ``engine.engine_metrics``
+over the call's windows, and three JVM deltas: Janino compiles with their
+mean ms, classes loaded and JIT ms.
 
 ``--explain DIR`` writes each face's ``explain("formatted")`` to
 ``DIR/<face>.txt`` after the passes. ``--abba OTHER_TREE`` runs the list in
@@ -118,6 +120,7 @@ def uncounting_gc(send, tracer):
 
 def profile(args, faces: list[str], work: str) -> list[dict]:
     """Run ``faces`` cold, then ``args.passes`` times warm; one record each."""
+    from datawarehousefinal_spark import queries as Q
     from datawarehousefinal_spark.session import get_spark
 
     conf = run.session_conf(work, trace=True)
@@ -164,7 +167,8 @@ def profile(args, faces: list[str], work: str) -> list[dict]:
     for i, face in enumerate(faces):
         cold, *warm = calls[i::len(faces)]
         ok = [c for c in warm if "error" not in c]
-        rec = {"face": face, "passes": len(ok)}
+        family = Q.QUERIES[face].__module__.rsplit(".", 1)[-1]
+        rec = {"face": face, "family": family, "passes": len(ok)}
         for name, c in (("cold", cold), ("warm", min(ok, key=lambda c: c["latency_s"])
                                           if ok else warm[0])):
             if "error" in c:
@@ -274,6 +278,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.abba and args.explain:
         ap.error("--explain does not apply to --abba")
 
+    import datawarehousefinal_spark
     from datawarehousefinal_spark import queries as Q
 
     unknown = [f for f in args.faces if f not in Q.QUERIES]
@@ -290,7 +295,8 @@ def main(argv: list[str] | None = None) -> int:
         if args.abba:
             doc = {"order": args.order, "pairs": args.passes, **abba(args, faces, work)}
         else:
-            tree = os.path.dirname(os.path.dirname(os.path.abspath(Q.__file__)))
+            pkg = os.path.abspath(datawarehousefinal_spark.__file__)
+            tree = os.path.dirname(os.path.dirname(pkg))
             os.environ.update(
                 SPARK_LOCAL_DIRS=os.path.join(work, "local"),
                 TMPDIR=os.path.join(work, "tmp"),

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from datawarehousefinal_spark.operators.curation import curate_corpus
 from datawarehousefinal_spark.sources.testdata import load_table
 
-W = 14  # shingle width tuned for the synthetic corpus (see queries.py)
+W = 14  # shingle width tuned for the synthetic corpus (see queries/_shared.py)
 
 
 def _docs(spark, sf_dir):

@@ -16,7 +16,7 @@ from datawarehousefinal_spark.operators.dedup import (
 )
 from datawarehousefinal_spark.sources.testdata import load_table
 
-W = 14  # shingle width tuned for the synthetic corpus (see queries.py)
+W = 14  # shingle width tuned for the synthetic corpus (see queries/_shared.py)
 
 
 def _docs(spark, sf_dir):
@@ -57,7 +57,7 @@ def test_simhash_identical_texts_collide(spark):
 
 
 def test_simhash_recall_on_planted_pairs(spark, sf_dir):
-    """Measured recall at the SHIPPED parameters (queries.py registers
+    """Measured recall at the SHIPPED parameters (queries/dedup.py registers
     max_hamming=8, combo_size=2): every Jaccard-planted pair measures
     hamming <= 7 on this fixture, and block-combination candidate recall is
     guaranteed for hamming <= 8, so recall must be complete."""
@@ -451,7 +451,7 @@ def test_simhash_near_dupes_sf01_misses_only_beyond_max_hamming(
     are all true pairs, and each pair it misses has fingerprints more than
     8 bits apart, out of reach by construction rather than lost."""
     import __spark_entry__ as entrymod
-    from datawarehousefinal_spark.queries import _W
+    from datawarehousefinal_spark.queries._shared import _W
     from tests.oracle_harness import duckdb_connect
 
     face = _pair_set(entrymod.queries()["simhash_near_dupes"](spark, bench_sf_dir))

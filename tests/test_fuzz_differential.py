@@ -26,7 +26,7 @@ from datawarehousefinal_spark.functions.pii import (
 from datawarehousefinal_spark.functions.textnorm import normalize_text
 from datawarehousefinal_spark.operators.contamination import word_ngrams
 from datawarehousefinal_spark.operators.textstats import whitespace_tokens
-from datawarehousefinal_spark.queries import _norm_sql, _TOKS_SQL
+from datawarehousefinal_spark.queries._shared import _norm_sql, _TOKS_SQL
 
 _CHARS = (
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"

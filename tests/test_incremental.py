@@ -14,7 +14,7 @@ from datawarehousefinal_spark.operators.incremental import (
 )
 from datawarehousefinal_spark.sources.testdata import load_table
 
-W = 14  # shingle width tuned for the synthetic corpus (see queries.py)
+W = 14  # shingle width tuned for the synthetic corpus (see queries/_shared.py)
 K = 16  # signature slots used throughout the tests
 
 

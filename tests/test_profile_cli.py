@@ -1,6 +1,6 @@
 """profile_faces.py end to end on the test fixture: a two-face profile, a
-one-pair ABBA run against this same tree, and the refusal of an unknown
-face."""
+Python-worker face run from outside the repo, a one-pair ABBA run against
+this same tree, and the refusal of an unknown face."""
 
 from __future__ import annotations
 
@@ -12,11 +12,12 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CLI = os.path.join(ROOT, "profile_faces.py")
 FACES = ["cube_measures_by_dims", "exact_dedup"]
+FAMILIES = {"cube_measures_by_dims": "cube", "exact_dedup": "dedup"}
 
 
-def cli(sf_dir: str, *args: str) -> subprocess.CompletedProcess:
+def cli(sf_dir: str, *args: str, cwd: str | None = None) -> subprocess.CompletedProcess:
     return subprocess.run([sys.executable, CLI, "--sf", sf_dir, *args],
-                          capture_output=True, text=True, timeout=300)
+                          capture_output=True, text=True, timeout=300, cwd=cwd)
 
 
 def test_profile_records(sf_dir, tmp_path):
@@ -27,6 +28,7 @@ def test_profile_records(sf_dir, tmp_path):
     assert [x["face"] for x in recs] == sorted(FACES, reverse=True)
     for rec in recs:
         assert "error" not in rec, rec
+        assert rec["family"] == FAMILIES[rec["face"]]
         for section in ("cold", "warm"):
             s = rec[section]
             assert s["engine"]["jobs"] >= 1
@@ -38,6 +40,19 @@ def test_profile_records(sf_dir, tmp_path):
         # The session's first call loads the classes later calls reuse.
         assert rec["cold"]["jvm"]["classes_loaded"] > rec["warm"]["jvm"]["classes_loaded"]
     assert sorted(os.listdir(tmp_path)) == ["profile.json"]
+
+
+def test_python_worker_face_outside_the_repo(sf_dir, tmp_path):
+    # image_meta_sniff's mapInPandas body calls operators.multimodal's
+    # sniff_image_dims, so its Python worker imports the package, which it
+    # finds only through the PYTHONPATH the CLI sets to the repo root.
+    out = tmp_path / "profile.json"
+    r = cli(sf_dir, "image_meta_sniff", "--passes", "1", "--out", str(out),
+            cwd=str(tmp_path))
+    assert r.returncode == 0, r.stderr[-2000:]
+    (rec,) = json.loads(out.read_text())["faces"]
+    assert "error" not in rec, rec
+    assert rec["family"] == "multimodal"
 
 
 def test_abba_one_pair(sf_dir, tmp_path):

@@ -39,12 +39,16 @@ def test_generated_code_is_compiled_once(spark, sf_dir):
 
 
 def test_repeat_call_compiles_nothing(spark, sf_dir):
-    # AQE numbers whole-stage codegen stages in planning order, which can
-    # differ between calls: the stage ID must stay out of the class name.
-    _run(spark, sf_dir, "share_of_parent_rollup")
-    before = _compiles(spark)
-    _run(spark, sf_dir, "share_of_parent_rollup")
-    assert _compiles(spark) - before == 0
+    # share_of_parent_rollup: AQE numbers whole-stage codegen stages in
+    # planning order, which can differ between calls, so the stage ID must
+    # stay out of the class name. rf_confusion_matrix: the ML preprocessor
+    # must hand VectorAssembler doubles, or it casts its inputs into
+    # columns named after its random uid.
+    for name in ("share_of_parent_rollup", "rf_confusion_matrix"):
+        _run(spark, sf_dir, name)
+        before = _compiles(spark)
+        _run(spark, sf_dir, name)
+        assert _compiles(spark) - before == 0, name
 
 
 def test_scoped_shuffle_partitions_restores_on_exit(spark):

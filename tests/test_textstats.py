@@ -410,7 +410,7 @@ def test_bpe_apply_consecutive_pairs_and_word_isolation(spark):
 
 def test_bpe_frozen_model_matches_retrained(spark, sf_dir):
     from datawarehousefinal_spark.operators.textstats import bpe_learn
-    from datawarehousefinal_spark.queries import _BPE_MERGES
+    from datawarehousefinal_spark.queries.text import _BPE_MERGES
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
