@@ -43,16 +43,12 @@ def sentinel_to_null(col: Column | str, sentinel: str = SENTINEL_UNSPECIFIED) ->
     return F.when(c == sentinel, F.lit(None)).otherwise(c)
 
 
-def map_literal(col: Column | str, mapping: dict, default: Column | None = None) -> Column:
+def map_literal(col: Column | str, mapping: dict) -> Column:
     """F7: literal-map lookup as a codegen'd `create_map` expression.
-
-    Unmapped values yield NULL (Kettle ValueMapper default) unless a
-    ``default`` column is supplied.
-    """
+    Unmapped values yield NULL (Kettle ValueMapper default)."""
     c = F.col(col) if isinstance(col, str) else col
     m = F.create_map(*[F.lit(x) for x in chain.from_iterable(mapping.items())])
-    looked_up = m[c]
-    return looked_up if default is None else F.coalesce(looked_up, default)
+    return m[c]
 
 
 def spanish_month_number(col: Column | str) -> Column:
@@ -77,19 +73,18 @@ def apply_category_map(
     col: str,
     lookup: DataFrame,
     out_col: str,
-    keep_unmapped: bool = True,
 ) -> DataFrame:
     """F8 phase 2: broadcast-join the lookup onto a (normalized) column.
 
-    ``keep_unmapped=True`` mirrors the reference's behavior of leaving
-    values it can't classify in place (Datos/preprocessing.py:58-62).
-    At any scale the lookup is tiny → broadcast; the big side never moves.
+    Values the lookup can't classify stay in place (normalized), as in
+    the reference (Datos/preprocessing.py:58-62). At any scale the
+    lookup is tiny → broadcast; the big side never moves.
     """
     norm = normalize_text(col).alias("__norm")
     joined = df.withColumn("__norm", norm).join(
         F.broadcast(lookup), F.col("__norm") == lookup["value_norm"], "left"
     )
-    mapped = F.coalesce("category", "__norm") if keep_unmapped else F.col("category")
+    mapped = F.coalesce("category", "__norm")
     return joined.withColumn(out_col, mapped).drop("__norm", "value_norm", "category")
 
 
@@ -99,8 +94,3 @@ def unmapped_report(df: DataFrame, col: str, lookup: DataFrame) -> DataFrame:
     325-327). left_anti join — nothing shuffles but the distinct values."""
     norm_vals = df.select(normalize_text(col).alias("value_norm")).distinct()
     return norm_vals.join(F.broadcast(lookup), "value_norm", "left_anti")
-
-
-def with_provenance(df: DataFrame, value: str, col: str = "source_fact") -> DataFrame:
-    """F15: literal provenance column (machineLearning.py:161)."""
-    return df.withColumn(col, F.lit(value))

@@ -1,14 +1,11 @@
 """PII detection and masking — scalar column functions for corpus
 scrubbing.
 
-The standard pre-training scrub: find and mask emails / IPv4 addresses /
-phone-shaped digit runs before text enters a training corpus. All
-codegen `regexp_*` expressions (no UDFs); patterns avoid lookaround and
-alternation-order tricks so Java regex (Spark) and RE2 (DuckDB) agree —
-the email/IP passes are exactly SQL-replayable and oracle-checked.
-Phone-shaped matching is inherently fuzzier (separator runs), so it
-ships as its own opt-in pass rather than silently joining the
-deterministic two.
+The standard pre-training scrub: find and mask emails and IPv4 addresses
+before text enters a training corpus. All codegen `regexp_*` expressions
+(no UDFs); patterns avoid lookaround and alternation-order tricks so Java
+regex (Spark) and RE2 (DuckDB) agree — both passes are exactly
+SQL-replayable and oracle-checked.
 """
 
 from __future__ import annotations
@@ -26,11 +23,9 @@ EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RE = (
     r"(?<![0-9A-Za-z_])\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}(?![0-9A-Za-z_])"
 )
-PHONE_RE = r"\+?\d[\d().\- ]{6,}\d"
 
 EMAIL_TOKEN = "<EMAIL>"
 IP_TOKEN = "<IP>"
-PHONE_TOKEN = "<PHONE>"
 
 
 def _c(col: Column | str) -> Column:
@@ -50,9 +45,3 @@ def scrub_pii(col: Column | str) -> Column:
     domain can contain digit runs an IP pattern would half-match)."""
     masked = F.regexp_replace(_c(col), EMAIL_RE, EMAIL_TOKEN)
     return F.regexp_replace(masked, IPV4_RE, IP_TOKEN)
-
-
-def scrub_phones(col: Column | str) -> Column:
-    """Opt-in phone-shaped masking. Run AFTER :func:`scrub_pii` so IPs
-    and email local parts are already tokens and cannot half-match."""
-    return F.regexp_replace(_c(col), PHONE_RE, PHONE_TOKEN)

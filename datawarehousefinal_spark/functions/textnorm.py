@@ -4,9 +4,7 @@ The reference normalizes free-text columns before matching and dim
 construction: lowercase + NFD accent strip + whitespace collapse
 (Datos/preprocessing.py:14-21) and Kettle trim/lower steps
 (etl_final.ktr:3158-3162, 3366-3369). All implemented as JVM-side column
-expressions so the hot path stays inside whole-stage codegen; the exact
-Unicode-NFD variant is available as an Arrow-batched pandas UDF behind a
-flag for parity corner cases (SURVEY.md §7.2).
+expressions so the hot path stays inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -15,8 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Spanish-corpus accent map — covers every accented char the reference's
-# data contains (á é í ó ú ü ñ and uppercase). `translate` is codegen'd;
-# the NFD UDF below is the exact-parity fallback.
+# data contains (á é í ó ú ü ñ and uppercase). `translate` is codegen'd.
 _ACCENTED = "áéíóúüñÁÉÍÓÚÜÑàèìòùâêîôûäëïöÀÈÌÒÙÂÊÎÔÛÄËÏÖ"
 _PLAIN = "aeiouunAEIOUUNaeiouaeiouaeioAEIOUAEIOUAEIO"
 
@@ -24,11 +21,6 @@ _PLAIN = "aeiouunAEIOUUNaeiouaeiouaeioAEIOUAEIOUAEIO"
 def lower(col: Column | str) -> Column:
     """F1: lowercase (Kettle lower_upper=lower, etl_final.ktr:3158-3162)."""
     return F.lower(F.col(col) if isinstance(col, str) else col)
-
-
-def trim(col: Column | str) -> Column:
-    """F4: both-side trim (etl_final.ktr:3161,3369)."""
-    return F.trim(F.col(col) if isinstance(col, str) else col)
 
 
 def strip_accents(col: Column | str) -> Column:
@@ -41,32 +33,6 @@ def strip_accents(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.translate(c, _ACCENTED, _PLAIN)
-
-
-def strip_accents_nfd(col: Column | str) -> Column:
-    """F2 exact-parity variant: true Unicode NFD via Arrow-batched pandas
-    UDF. ~10-100× slower than `strip_accents`; only for corpora with
-    combining marks outside the Latin map."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _nfd(s):  # type: ignore[no-untyped-def]
-        import unicodedata
-
-        return s.map(
-            lambda x: (
-                "".join(
-                    ch
-                    for ch in unicodedata.normalize("NFD", x)
-                    if unicodedata.category(ch) != "Mn"
-                )
-                if x is not None
-                else None
-            )
-        )
-
-    return _nfd(F.col(col) if isinstance(col, str) else col)
 
 
 def collapse_whitespace(col: Column | str) -> Column:

@@ -8,12 +8,11 @@ in-process sklearn flow:
   of numerics, unknown-safe one-hot of categoricals, assembled into one
   Spark ML ``Vector`` column (``ColumnTransformer``+``Pipeline``,
   machineLearning.py:287-305, 441-445).
-- **M6/M7** clustering: KMeans k-scan with inertia + silhouette
-  (machineLearning.py:322-370) and PCA-to-2D projection (:392-397).
-- **M8-M10** classification: the reference's four-model zoo with balanced
+- **M6/M7** clustering: the final KMeans fit (machineLearning.py:371-374)
+  and sign-normalized PCA loadings (:392-397).
+- **M8-M10** classification: the reference's model zoo (minus its MLP) with balanced
   class weights (:433-462) and 3-fold grid-search CV (:484-553).
-- **M11** metrics: accuracy/F1/precision/recall, confusion matrix,
-  per-class AUC (:479-481).
+- **M11** metrics: the confusion matrix (:479-481).
 - **M12** regression forecast: daily-count trend extrapolation 365 days
   out (:575-637), plus a closed-form simple-linear-trend variant whose
   output is exactly SQL-expressible (DuckDB ``regr_slope``) for the
@@ -40,8 +39,6 @@ from pyspark.ml.classification import (
 )
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.evaluation import (
-    BinaryClassificationEvaluator,
-    ClusteringEvaluator,
     MulticlassClassificationEvaluator,
     RegressionEvaluator,
 )
@@ -85,25 +82,6 @@ def split_feature_types(
         elif base == "string":
             categorical.append(name)
     return numeric, categorical
-
-
-def drop_ml_id_columns(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """P4 in its ML-layer form: drop surrogate-id/provenance/date-string
-    columns before modeling (machineLearning.py:271-276, 424-428).
-    Delegates to the generic P4 predicate-drop operator."""
-    from datawarehousefinal_spark.operators.dataset import (
-        drop_columns_by_predicate,
-    )
-
-    return drop_columns_by_predicate(
-        df,
-        lambda c: c not in keep
-        and (
-            c.startswith("id_")
-            or c == "source_fact"
-            or c == "dim_fecha_fecha_completa"
-        ),
-    )
 
 
 def label_encode(
@@ -155,7 +133,6 @@ def build_preprocessor(
     numeric: list[str],
     categorical: list[str],
     output_col: str = "features",
-    scale_numeric: bool = True,
 ) -> Pipeline:
     """M1-M5: the reference's ColumnTransformer as a Spark ML Pipeline
     (machineLearning.py:287-305).
@@ -176,18 +153,15 @@ def build_preprocessor(
     assemble_inputs: list[str] = []
     if numeric:
         stages += _impute_numeric(numeric)
-        if scale_numeric:
-            stages.append(
-                StandardScaler(
-                    inputCol="__num_raw",
-                    outputCol="__num_scaled",
-                    withMean=True,
-                    withStd=True,
-                )
+        stages.append(
+            StandardScaler(
+                inputCol="__num_raw",
+                outputCol="__num_scaled",
+                withMean=True,
+                withStd=True,
             )
-            assemble_inputs.append("__num_scaled")
-        else:
-            assemble_inputs.append("__num_raw")
+        )
+        assemble_inputs.append("__num_scaled")
     for c in categorical:
         stages.append(
             StringIndexer(
@@ -232,33 +206,6 @@ def fit_preprocess(
 # M6/M7 — clustering
 # ---------------------------------------------------------------------------
 
-def kmeans_scan(
-    df: DataFrame,
-    features_col: str = "features",
-    k_values: range = range(2, 11),
-    seed: int = SEED,
-) -> list[dict]:
-    """M6: the elbow/silhouette scan (machineLearning.py:334-370): for each
-    k, inertia (``summary.trainingCost`` ≙ sklearn ``inertia_``) and
-    silhouette (``ClusteringEvaluator``, squared-euclidean — sklearn's
-    default metric)."""
-    evaluator = ClusteringEvaluator(
-        featuresCol=features_col, metricName="silhouette"
-    )
-    out = []
-    for k in k_values:
-        model = KMeans(k=k, seed=seed, featuresCol=features_col).fit(df)
-        pred = model.transform(df)
-        out.append(
-            {
-                "k": k,
-                "inertia": model.summary.trainingCost,
-                "silhouette": evaluator.evaluate(pred),
-            }
-        )
-    return out
-
-
 def fit_kmeans(
     df: DataFrame,
     k: int = 3,
@@ -272,18 +219,6 @@ def fit_kmeans(
         k=k, seed=seed, featuresCol=features_col, predictionCol=prediction_col
     ).fit(df)
     return model, model.transform(df)
-
-
-def pca_project_2d(
-    df: DataFrame, features_col: str = "features"
-) -> DataFrame:
-    """M7: PCA to 2 components for visualization
-    (machineLearning.py:392-397). Output adds ``PC1``/``PC2`` doubles."""
-    model = PCA(k=2, inputCol=features_col, outputCol="__pca").fit(df)
-    arr = vector_to_array(F.col("__pca"))
-    return model.transform(df).withColumns(
-        {"PC1": arr[0], "PC2": arr[1]}
-    ).drop("__pca")
 
 
 def pca_loadings(
@@ -330,17 +265,15 @@ def classifier_zoo(
     weight_col: str | None = "weight",
     features_col: str = "features",
     label_col: str = "label",
-    mlp_layers: list[int] | None = None,
 ) -> dict[str, Any]:
-    """M8/M9: the reference's four-model dict (machineLearning.py:457-462)
-    with balanced class weights as ``weightCol`` (its ``class_weight``
-    dict; attach via ``operators.analytics.attach_class_weights``).
+    """M8/M9: the reference's model dict (machineLearning.py:457-462)
+    without its MLP, with balanced class weights as ``weightCol`` (its
+    ``class_weight`` dict; attach via
+    ``operators.analytics.attach_class_weights``).
 
-    Gaps vs sklearn, by design (SURVEY.md §7.5): SVC is linear-only
+    Gap vs sklearn, by design (SURVEY.md §7.5): SVC is linear-only
     (``LinearSVC`` wrapped in ``OneVsRest`` for multiclass — Spark has no
-    RBF kernel), and the MLP takes no weight column (sklearn's
-    ``MLPClassifier`` has no ``class_weight`` either — the reference's MLP
-    is unweighted too, machineLearning.py:461)."""
+    RBF kernel)."""
     w = {"weightCol": weight_col} if weight_col else {}
     svc = LinearSVC(featuresCol=features_col, labelCol=label_col, **w)
     zoo: dict[str, Any] = {
@@ -357,14 +290,6 @@ def classifier_zoo(
             **w,
         ),
     }
-    if mlp_layers:
-        zoo["DeepLearning_MLP"] = MultilayerPerceptronClassifier(
-            seed=SEED,
-            maxIter=100,
-            layers=mlp_layers,
-            featuresCol=features_col,
-            labelCol=label_col,
-        )
     return zoo
 
 
@@ -391,11 +316,6 @@ def default_param_grids(zoo: dict[str, Any]) -> dict[str, list]:
         svc = zoo["SVM"].getClassifier()
         grids["SVM"] = (
             ParamGridBuilder().addGrid(svc.regParam, [10.0, 1.0]).build()
-        )
-    if "DeepLearning_MLP" in zoo:
-        mlp = zoo["DeepLearning_MLP"]
-        grids["DeepLearning_MLP"] = (
-            ParamGridBuilder().addGrid(mlp.stepSize, [0.03, 0.1]).build()
         )
     return grids
 
@@ -445,20 +365,6 @@ def cv_metrics_table(cv_model: Any, spark) -> DataFrame:
 # M11 — metrics
 # ---------------------------------------------------------------------------
 
-def classification_metrics(
-    pred: DataFrame, label_col: str = "label", prediction_col: str = "prediction"
-) -> dict[str, float]:
-    """M11: the headline numbers of sklearn's ``classification_report``
-    (machineLearning.py:479-481)."""
-    out = {}
-    for metric in ("accuracy", "f1", "weightedPrecision", "weightedRecall"):
-        ev = MulticlassClassificationEvaluator(
-            labelCol=label_col, predictionCol=prediction_col, metricName=metric
-        )
-        out[metric] = ev.evaluate(pred)
-    return out
-
-
 def confusion_matrix_df(
     pred: DataFrame, label_col: str = "label", prediction_col: str = "prediction"
 ) -> DataFrame:
@@ -472,34 +378,6 @@ def confusion_matrix_df(
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("label", "prediction")
     )
-
-
-def per_class_auc(
-    pred: DataFrame,
-    label_col: str = "label",
-    raw_col: str = "probability",
-    classes: list[int] | None = None,
-) -> dict[int, float]:
-    """M11: one-vs-rest ROC-AUC per class (sklearn's multiclass
-    ``roc_auc_score``; deeplearning/evaluate.py:43-79). Each class reuses
-    the same predictions frame with a binarized label and that class's
-    probability as the score."""
-    if classes is None:
-        classes = [
-            int(r[0])
-            for r in pred.select(label_col).distinct().orderBy(label_col).collect()
-        ]
-    aucs = {}
-    for c in classes:
-        scored = pred.select(
-            F.when(F.col(label_col) == c, 1.0).otherwise(0.0).alias("bl"),
-            vector_to_array(F.col(raw_col))[c].cast("double").alias("score"),
-        )
-        ev = BinaryClassificationEvaluator(
-            labelCol="bl", rawPredictionCol="score", metricName="areaUnderROC"
-        )
-        aucs[c] = ev.evaluate(scored)
-    return aucs
 
 
 # ---------------------------------------------------------------------------
@@ -775,7 +653,6 @@ def rbf_svc_approx(
     n_components: int = 100,
     gamma: float = 1.0,
     reg_param: float = 0.01,
-    weight_col: str | None = None,
     max_iter: int = 50,
     seed: int = SEED,
 ):
@@ -799,20 +676,17 @@ def rbf_svc_approx(
     with materialized(random_fourier_features(
         train, features_col, "__rff", n_components, gamma, seed
     )) as lifted:
-        w = {"weightCol": weight_col} if weight_col else {}
         svc = LinearSVC(
             featuresCol="__rff",
             labelCol=label_col,
             regParam=reg_param,
             maxIter=max_iter,
-            **w,
         )
         ovr = OneVsRest(
             classifier=svc,
             featuresCol="__rff",
             labelCol=label_col,
             parallelism=4,
-            **w,
         ).fit(lifted)
 
     def transform_fn(df: DataFrame) -> DataFrame:

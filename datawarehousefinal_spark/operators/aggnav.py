@@ -490,9 +490,7 @@ def materialize_recommended(
     workload: list[str],
     *star_args,
     max_tables: int = 3,
-    source: DataFrame | None = None,
     path_prefix: str | None = None,
-    register: bool = True,
 ) -> list[AggTable]:
     """Advisor → materializer → schema registration in ONE gesture —
     the full Mondrian AggGen loop (run the advisor over the workload,
@@ -500,8 +498,8 @@ def materialize_recommended(
     ``<AggName>`` entries so the AggStar matcher routes to them),
     Spark-first: :func:`recommend_aggregates` picks the grains,
     each pick is grouped out of the star with the same mergeable
-    measure states every aggregate table stores, and (by default) the
-    tables are appended to ``cube.aggregates`` so every subsequent
+    measure states every aggregate table stores, and the tables are
+    appended to ``cube.aggregates`` so every subsequent
     front-door ``mdx_query`` on this cube consults the navigator and
     answers the workload from the picks — no caller plumbing.
 
@@ -511,10 +509,8 @@ def materialize_recommended(
     rollup files). Cost: one map-side-combined shuffle of the star per
     pick, bounded by ``max_tables`` — the same cost as answering each
     picked grain's query once, amortized over every routed query."""
-    recs = recommend_aggregates(
-        cube, workload, *star_args, max_tables=max_tables, source=source
-    )
-    star = source if source is not None else cube.star_builder(*star_args)
+    recs = recommend_aggregates(cube, workload, *star_args, max_tables=max_tables)
+    star = cube.star_builder(*star_args)
     states = [s for _a, _n, s in _state_columns(cube)]
     tables: list[AggTable] = []
     for rec in recs:
@@ -526,6 +522,5 @@ def materialize_recommended(
             rollup = rollup.sparkSession.read.parquet(path)
         table = AggTable(name=name, grain=rec.grain, table=rollup)
         tables.append(table)
-        if register:
-            cube.aggregates.append(table)
+        cube.aggregates.append(table)
     return tables

@@ -90,41 +90,9 @@ def time_ordered_split(
     return train, test
 
 
-def distinct_count(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
-    """A9: category cardinality; ``approx=True`` switches to HLL
-    (approx_count_distinct) — the 100 TB default."""
-    agg = F.approx_count_distinct(col) if approx else F.countDistinct(col)
-    return df.agg(agg.alias("n_distinct"))
-
-
-def stratified_split(
-    df: DataFrame,
-    label_col: str,
-    train_fraction: float = 0.8,
-    seed: int = 42,
-    max_labels: int = 10_000,
-) -> tuple[DataFrame, DataFrame]:
-    """C2: stratified train/test split. ``sampleBy`` keeps per-class
-    fractions (approximate, like any distributed stratified sampler); the
-    test side is the anti-join complement on a row id.
-
-    The distinct-label collect is bounded by ``max_labels`` — stratifying
-    on a quasi-unique column is a usage error, caught here instead of
-    OOMing the driver."""
-    with_id = df.withColumn("__rid", F.monotonically_increasing_id())
-    labels = [
-        r[0]
-        for r in with_id.select(label_col).distinct().limit(max_labels + 1).collect()
-    ]
-    if len(labels) > max_labels:
-        raise ValueError(
-            f"stratified_split: {label_col!r} has more than {max_labels} "
-            f"distinct values — not a class label"
-        )
-    fractions = {label: train_fraction for label in labels}
-    train = with_id.stat.sampleBy(label_col, fractions, seed)
-    test = with_id.join(train.select("__rid"), "__rid", "left_anti")
-    return train.drop("__rid"), test.drop("__rid")
+def distinct_count(df: DataFrame, col: str) -> DataFrame:
+    """A9: exact category cardinality."""
+    return df.agg(F.countDistinct(col).alias("n_distinct"))
 
 
 def grouped_ntile(
@@ -429,40 +397,29 @@ def chi2_independence(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
 def collapse_rare_categories(
     df: DataFrame,
     col: str,
-    min_count: int | None = None,
-    min_frac: float | None = None,
+    min_count: int,
     other_label: str = "__OTHER__",
     out_col: str | None = None,
 ) -> DataFrame:
     """Tail-category collapse — the vocabulary-truncation / OOV-bucket
     op every feature pipeline and tokenizer build runs: values of
-    ``col`` seen fewer than ``min_count`` times (or less than
-    ``min_frac`` of all rows) map to ``other_label``; the rest pass
-    through. Bounds downstream cardinality (one-hot widths, vocab
-    tables, per-category aggregates) without dropping rows. NULL
-    categories land in the OOV bucket too (a NULL never matches the
-    keep-list join) — the unknown-safe default.
+    ``col`` seen fewer than ``min_count`` times map to ``other_label``;
+    the rest pass through. Bounds downstream cardinality (one-hot
+    widths, vocab tables, per-category aggregates) without dropping
+    rows. NULL categories land in the OOV bucket too (a NULL never
+    matches the keep-list join) — the unknown-safe default.
 
-    Exactly one of ``min_count`` / ``min_frac``. The per-value count
-    frame is |distinct values| rows — it broadcasts back onto the
-    corpus, which never shuffles (the same bounded-count contract as
-    value_counts); the ``min_frac`` total rides as a window over that
-    small frame, never a second corpus pass.
+    The per-value count frame is |distinct values| rows — it broadcasts
+    back onto the corpus, which never shuffles (the same bounded-count
+    contract as value_counts).
     """
-    if (min_count is None) == (min_frac is None):
-        raise ValueError("pass exactly one of min_count / min_frac")
     out_col = out_col or col
-    counts = df.groupBy(F.col(col).alias("__v")).agg(
-        F.count(F.lit(1)).alias("__c")
+    keep = (
+        df.groupBy(F.col(col).alias("__v"))
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .filter(F.col("__c") >= F.lit(min_count))
+        .select("__v")
     )
-    if min_frac is not None:
-        tot = Window.partitionBy()
-        counts = counts.withColumn(
-            "__keep", F.col("__c") >= F.sum("__c").over(tot) * F.lit(min_frac)
-        )
-    else:
-        counts = counts.withColumn("__keep", F.col("__c") >= F.lit(min_count))
-    keep = counts.filter("__keep").select("__v")
     return (
         df.join(F.broadcast(keep), df[col] == keep["__v"], "left")
         .withColumn(

@@ -1,15 +1,13 @@
 """As-of (point-in-time) join — a custom operator Spark lacks natively.
 
 For each left row, attach the most recent right row with the same key
-whose timestamp is <= (backward) or >= (forward) the left timestamp —
-the standard time-series enrichment (latest snapshot / last-known-value
-join). Semantics match pandas ``merge_asof`` and DuckDB ``ASOF JOIN``
-(the oracle).
+whose timestamp is <= the left timestamp — the standard time-series
+enrichment (latest snapshot / last-known-value join). Semantics match
+pandas ``merge_asof`` and DuckDB ``ASOF JOIN`` (the oracle).
 
 Implementation is pure JVM — union both sides with a tag and carry the
 right row forward with ``last(struct, ignorenulls=True)`` over a per-key
-ordered window (``first`` over the following frame for the forward
-direction):
+ordered window:
 
 - ONE hash shuffle on the key (the same an equi-join would pay), then a
   per-partition sort — no Python, no per-group invocation overhead. A
@@ -21,10 +19,9 @@ direction):
   ``last(..., ignorenulls)`` picks a whole row atomically — per-column
   ``last`` would stitch together values from different right rows
   whenever right columns contain NULLs.
-- Ties: a right row at exactly the left timestamp matches in both
-  directions (closed interval), implemented by ordering the union on
-  (ts, tag) with the right side sorted before (backward) / after
-  (forward) left rows at equal timestamps.
+- Ties: a right row at exactly the left timestamp matches (closed
+  interval), implemented by ordering the union on (ts, tag) with the
+  right side sorted before left rows at equal timestamps.
 
 Skewed keys are the caveat (a hot key's window sorts on one reducer) —
 the same caveat every keyed window has; pre-split hot keys if needed.
@@ -41,9 +38,6 @@ def asof_join(
     right: DataFrame,
     key_cols: list[str],
     ts_col: str,
-    direction: str = "backward",
-    right_value_cols: list[str] | None = None,
-    tolerance=None,
 ) -> DataFrame:
     """As-of join ``left`` to ``right`` on ``key_cols`` at ``ts_col``.
 
@@ -51,19 +45,11 @@ def asof_join(
     NULLs. Right timestamps should be unique per key (with equal
     timestamps "most recent" is ill-defined and engines disagree on the
     tie-break; this implementation picks the last in (ts, input-order)).
-    ``tolerance`` (an INTERVAL-compatible string like ``'7 days'``, or a
-    ``pyspark.sql.Column`` interval) drops matches farther than that from
-    the left timestamp.
 
-    Output schema: every left column, then ``right_value_cols`` (default:
-    every non-key, non-ts right column).
+    Output schema: every left column, then every non-key, non-ts right
+    column.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward/forward, got {direction!r}")
-    if right_value_cols is None:
-        right_value_cols = [
-            c for c in right.columns if c not in key_cols and c != ts_col
-        ]
+    right_value_cols = [c for c in right.columns if c not in key_cols and c != ts_col]
     clash = set(right_value_cols) & set(left.columns)
     if clash:
         raise ValueError(
@@ -71,12 +57,10 @@ def asof_join(
             f"rename before joining"
         )
 
-    # Right rows must sort before left rows at equal ts for backward
-    # (so `last` over the preceding frame sees them), after for forward.
-    left_tag, right_tag = (1, 0) if direction == "backward" else (0, 1)
-    rv = F.struct(
-        F.col(ts_col).alias("__rts"), *[F.col(c) for c in right_value_cols]
-    )
+    # Right rows sort before left rows at equal ts, so `last` over the
+    # preceding frame sees them.
+    left_tag, right_tag = 1, 0
+    rv = F.struct(*[F.col(c) for c in right_value_cols])
     l2 = left.select(
         *key_cols,
         F.col(ts_col).alias("__ts"),
@@ -99,40 +83,13 @@ def asof_join(
     )
     u = l2.unionByName(r2)
 
-    base = Window.partitionBy(*key_cols).orderBy("__ts", "__tag")
-    if direction == "backward":
-        w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        carried = F.last("__rv", ignorenulls=True).over(w)
-    else:
-        w = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        carried = F.first("__rv", ignorenulls=True).over(w)
-
+    w = (
+        Window.partitionBy(*key_cols)
+        .orderBy("__ts", "__tag")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    carried = F.last("__rv", ignorenulls=True).over(w)
     out = u.withColumn("__m", carried).filter(F.col("__tag") == left_tag)
-    if tolerance is not None:
-        tol = (
-            F.expr(f"INTERVAL {tolerance}")
-            if isinstance(tolerance, str)
-            else tolerance
-        )
-        in_range = (
-            (F.col("__ts") - F.col("__m.__rts") <= tol)
-            if direction == "backward"
-            else (F.col("__m.__rts") - F.col("__ts") <= tol)
-        )
-        out = out.withColumn(
-            "__m", F.when(in_range, F.col("__m"))
-        )
     return out.select(
         "__l.*", *[F.col(f"__m.{c}").alias(c) for c in right_value_cols]
     )
-
-
-def latest_snapshot_per_key(
-    right: DataFrame, key_cols: list[str], ts_col: str
-) -> DataFrame:
-    """Helper: collapse a snapshot table to one (latest) row per key —
-    the degenerate as-of join where every left timestamp is 'now'.
-    Delegates to the A7/W3 top-n-per-group operator with n=1."""
-    from datawarehousefinal_spark.operators.analytics import top_n_per_group
-
-    return top_n_per_group(right, key_cols, [F.desc(ts_col)], 1)

@@ -11,10 +11,9 @@ Scale design: the benchmark side is SMALL (benchmarks are megabytes;
 corpora are terabytes), so the gram set is built once, deduplicated, and
 broadcast — the corpus side is a map-only shingling pass plus one
 broadcast semi-join and a per-document groupBy. The corpus is never
-shuffled on anything wider than (doc id, gram key); with ``hash_grams``
-(default) the key is an 8-byte xxhash64 instead of the gram string, which
-is what you want at 100 TB. Pass ``hash_grams=False`` to key on the gram
-text itself — exactly replayable in any SQL engine (the oracle path).
+shuffled on anything wider than (doc id, gram text); keying on the gram
+text makes the report exactly replayable in any SQL engine (the oracle
+path).
 """
 
 from __future__ import annotations
@@ -26,9 +25,7 @@ from datawarehousefinal_spark.operators.dedup import _fan_out
 from datawarehousefinal_spark.operators.textstats import whitespace_tokens
 
 
-def word_ngrams(
-    text_col: Column | str, n: int = 8, hash_grams: bool = True
-) -> Column:
+def word_ngrams(text_col: Column | str, n: int = 8) -> Column:
     """Distinct word ``n``-grams of a text column (array column).
 
     Documents shorter than ``n`` tokens contribute their whole token run
@@ -36,8 +33,7 @@ def word_ngrams(
     map to an EMPTY gram set — without that filter they'd all share the
     single empty-string gram and cross-match every other token-less
     document (e.g. get flagged as contaminated the moment the benchmark
-    set contains one empty-ish row). Grams are space-joined token slices;
-    with ``hash_grams`` each gram is reduced to its xxhash64.
+    set contains one empty-ish row). Grams are space-joined token slices.
     """
     toks = whitespace_tokens(text_col)
     idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
@@ -45,19 +41,15 @@ def word_ngrams(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, F.lit(n)))),
         lambda g: g != F.lit(""),
     )
-    if hash_grams:
-        grams = F.transform(grams, lambda g: F.xxhash64(g))
     return F.array_distinct(grams)
 
 
-def benchmark_grams(
-    bench: DataFrame, text_col: str, n: int = 8, hash_grams: bool = True
-) -> DataFrame:
+def benchmark_grams(bench: DataFrame, text_col: str, n: int = 8) -> DataFrame:
     """The deduplicated gram set of the benchmark corpus — one column
     ``gram``. Build once per benchmark, broadcast everywhere."""
     return (
         bench.filter(F.col(text_col).isNotNull())
-        .select(F.explode(word_ngrams(text_col, n, hash_grams)).alias("gram"))
+        .select(F.explode(word_ngrams(text_col, n)).alias("gram"))
         .distinct()
     )
 
@@ -69,7 +61,6 @@ def contamination_report(
     text_col: str,
     n: int = 8,
     min_hits: int = 1,
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Per-training-document contamination: how many of its distinct word
     ``n``-grams appear in the benchmark gram set.
@@ -93,7 +84,7 @@ def contamination_report(
     grams = (
         _fan_out(train.filter(F.col(text_col).isNotNull()))
         .select(
-            F.col(id_col), F.explode(word_ngrams(text_col, n, hash_grams)).alias("gram")
+            F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("gram")
         )
     )
     return (
@@ -106,22 +97,3 @@ def contamination_report(
         .filter(F.col("n_hits") >= min_hits)
         .select(id_col, "n_grams", "n_hits")
     )
-
-
-def decontaminate(
-    train: DataFrame,
-    bench: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 8,
-    min_hits: int = 1,
-    hash_grams: bool = True,
-) -> DataFrame:
-    """Drop flagged documents: the corpus anti-joined against the
-    contamination report's ids. The report pipeline runs once; the
-    anti-join key is just the id column."""
-    flagged = contamination_report(
-        train, benchmark_grams(bench, text_col, n, hash_grams),
-        id_col, text_col, n, min_hits, hash_grams,
-    ).select(id_col)
-    return train.join(flagged, id_col, "left_anti")

@@ -5,11 +5,11 @@ from this engine's own operators, the way the star-ETL composition
 Stage order is the standard funnel (cheap row-local filters first, the
 expensive pairwise stage last, on the smallest surviving set):
 
-1. rule filters — length bounds, quality score, language allow-list
-   (textstats; all codegen, one pass)
+1. rule filters — length bounds and quality score, with the language
+   prediction attached (textstats; all codegen, one pass)
 2. exact dedup — content-hash keep-first (dedup.exact_dedup)
-3. near-dup dedup — MinHash-LSH greedy pass via the incremental operator
-   against an empty store (incremental.incremental_minhash_dedup)
+3. near-dup dedup — MinHash-LSH candidate pairs resolved to one survivor
+   per connected component (graph.resolve_duplicates)
 4. deterministic train/val split — seeded hash bucket on the id, so the
    assignment is reproducible across runs and engines and never needs a
    stored split table
@@ -29,10 +29,6 @@ from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.materialize import materialized
 from datawarehousefinal_spark.operators.dedup import _fan_out, exact_dedup
-from datawarehousefinal_spark.operators.incremental import (
-    empty_minhash_store,
-    incremental_minhash_dedup,
-)
 from datawarehousefinal_spark.operators.textstats import (
     language_id,
     quality_score,
@@ -47,7 +43,6 @@ def curate_corpus(
     min_chars: int = 20,
     max_chars: int = 1_000_000,
     min_quality: float = 0.3,
-    allowed_langs: list[str] | None = None,
     near_dup_threshold: float = 0.9,
     num_hashes: int = 16,
     bands: int = 8,
@@ -55,21 +50,14 @@ def curate_corpus(
     shingle_width: int = 5,
     val_pct: int = 1,
     seed: int = 42,
-    near_dup_mode: str = "greedy",
 ) -> Iterator[tuple[DataFrame, DataFrame]]:
     """Run the full curation funnel; yields ``(curated, report)``.
 
-    ``near_dup_mode`` picks the near-dup stage's semantics:
-
-    - ``'greedy'`` (default): the incremental signature-store pass —
-      O(batch) at ingest time, the shape a daily pipeline runs, but a
-      greedy drop order (a doc is dropped if it matches any EARLIER
-      survivor; chains A~B~C may keep both A and C).
-    - ``'transitive'``: MinHash candidate pairs resolved through
-      :func:`operators.graph.resolve_duplicates` — connected components
-      over the pair graph, exactly one survivor (min id) per duplicate
-      CLUSTER. The batch-repass choice for a from-scratch curation where
-      chain under-merging matters.
+    The near-dup stage resolves MinHash candidate pairs through
+    :func:`operators.graph.resolve_duplicates` — connected components
+    over the pair graph, exactly one survivor (min id) per duplicate
+    CLUSTER, so a chain A~B~C collapses to one document even when A and
+    C are not near-dups themselves.
 
     ``curated`` is the surviving corpus with two added columns:
     ``lang_pred`` and ``split`` ('train' / 'val' by seeded hash bucket —
@@ -98,44 +86,24 @@ def curate_corpus(
         "__q", quality_score(text_col)
     )
     rules = scored.filter(F.col("__q") >= min_quality)
-    if allowed_langs is not None:
-        rules = rules.filter(F.col("lang_pred").isin(allowed_langs))
 
     @contextmanager
     def near_dedup(exact: DataFrame) -> Iterator[DataFrame]:
-        if near_dup_mode == "greedy":
-            with incremental_minhash_dedup(
-                exact,
-                empty_minhash_store(exact, id_col, num_hashes),
-                id_col,
-                text_col,
-                threshold=near_dup_threshold,
-                num_hashes=num_hashes,
-                bands=bands,
-                rows_per_band=rows_per_band,
-                shingle_width=shingle_width,
-            ) as (near, _delta):
-                yield near
-        elif near_dup_mode == "transitive":
-            from datawarehousefinal_spark.operators.dedup import minhash_near_dupes
-            from datawarehousefinal_spark.operators.graph import resolve_duplicates
+        from datawarehousefinal_spark.operators.dedup import minhash_near_dupes
+        from datawarehousefinal_spark.operators.graph import resolve_duplicates
 
-            pairs = minhash_near_dupes(
-                exact,
-                id_col,
-                text_col,
-                near_dup_threshold,
-                num_hashes,
-                bands,
-                rows_per_band,
-                shingle_width,
-            ).select("id_a", "id_b")
-            with resolve_duplicates(exact, pairs, id_col) as near:
-                yield near
-        else:
-            raise ValueError(
-                f"near_dup_mode must be 'greedy' or 'transitive', got {near_dup_mode!r}"
-            )
+        pairs = minhash_near_dupes(
+            exact,
+            id_col,
+            text_col,
+            near_dup_threshold,
+            num_hashes,
+            bands,
+            rows_per_band,
+            shingle_width,
+        ).select("id_a", "id_b")
+        with resolve_duplicates(exact, pairs, id_col) as near:
+            yield near
 
     with (
         materialized(rules.drop("__q")) as rules,
@@ -823,79 +791,6 @@ def unimax_allocation(
         F.col("cap").cast("double"),
         alloc.cast("double").alias("alloc"),
         (alloc / F.col("n_docs")).cast("double").alias("epochs"),
-    )
-
-
-def contrastive_negative_rings(
-    df: DataFrame,
-    id_col: str,
-    anchor_filter,
-    k: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Deterministic in-batch negative sampling for contrastive /
-    triplet training: every anchor gets ``k`` pseudo-random negatives
-    drawn as RING OFFSETS over the md5-shuffled corpus order — rank
-    ``(r_a + j·stride) mod N`` for ``j = 1..k`` with ``stride =
-    max(N // (k+1), 1)``. The md5 shuffle makes the ring neighbors
-    uniform-random with respect to any real feature, while staying a
-    pure function of (id, seed): the same corpus always yields the
-    same negatives, across runs, engines, and partitionings — the
-    property that makes contrastive batches resumable.
-
-    Scale shape: the global rank comes from the two-phase distributed
-    prefix sum (packing.distributed_cumsum — never a single-partition
-    window); the corpus total rides as a one-row broadcast (the
-    bounded scalar pattern); negatives attach with ONE equi-join on
-    the target rank. No sampling loop, no per-anchor scan.
-
-    ``anchor_filter`` is a Column predicate selecting the anchor rows.
-    Self-collisions (possible only when N ≤ k·stride wraps) are
-    dropped rather than re-drawn — the documented small-N trade.
-
-    Output: ``anchor_id, j (int, 1-based ring slot), neg_id``.
-    """
-    from datawarehousefinal_spark.operators.packing import distributed_cumsum
-
-    if k <= 0:
-        raise ValueError("k must be positive")
-    keyed = df.select(
-        F.col(id_col),
-        F.md5(
-            F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}"))
-        ).alias("__key"),
-    ).withColumn("__one", F.lit(1))
-    ranked = distributed_cumsum(
-        keyed, ["__key", id_col], "__one", out_col="__rk"
-    ).withColumn("__r0", F.col("__rk") - 1)
-    total = ranked.agg(F.count(F.lit(1)).alias("__n"))
-    anchors = (
-        ranked.filter(anchor_filter)
-        .crossJoin(F.broadcast(total))
-        .select(
-            F.col(id_col).alias("anchor_id"),
-            F.col("__r0").alias("__ra"),
-            "__n",
-            F.explode(F.array(*[F.lit(j) for j in range(1, k + 1)])).alias(
-                "j"
-            ),
-        )
-        .withColumn(
-            "__stride",
-            F.greatest(F.floor(F.col("__n") / F.lit(k + 1)), F.lit(1)),
-        )
-        .withColumn(
-            "__target",
-            (F.col("__ra") + F.col("j") * F.col("__stride")) % F.col("__n"),
-        )
-    )
-    pool = ranked.select(
-        F.col("__r0").alias("__target"), F.col(id_col).alias("neg_id")
-    )
-    return (
-        anchors.join(pool, "__target")
-        .filter(F.col("neg_id") != F.col("anchor_id"))
-        .select("anchor_id", F.col("j").cast("int"), "neg_id")
     )
 
 

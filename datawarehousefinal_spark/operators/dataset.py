@@ -2,9 +2,8 @@
 
 The reference denormalizes fact ⟕ all dims with ``<dim>_<col>`` aliased
 columns (build_fact_query, machineLearning.py:101-125), unions the two fact
-datasets with a provenance column (:161-164), caches the result as snappy
-parquet keyed by the fact-table list (:132-173), and samples with a seed
-(:146-147).
+datasets with a provenance column (:161-164), and caches the result as
+snappy parquet keyed by the fact-table list (:132-173).
 """
 
 from __future__ import annotations
@@ -18,7 +17,6 @@ from pyspark.sql import functions as F
 def denormalize(
     fact: DataFrame,
     dims: dict[str, tuple[DataFrame, str]],
-    fact_cols: list[str] | None = None,
 ) -> DataFrame:
     """J1: star denormalization with prefix-aliased dim columns.
 
@@ -27,7 +25,7 @@ def denormalize(
     build_fact_query (machineLearning.py:104-110). All joins broadcast:
     the fact never moves.
     """
-    out = fact if fact_cols is None else fact.select(*fact_cols)
+    out = fact
     for dim_name, (dim, id_col) in dims.items():
         aliased = dim.select(
             id_col,
@@ -87,15 +85,3 @@ def dropna_subset(df: DataFrame, subset: list[str]) -> DataFrame:
 def fillna_zero(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """P9: fill NULLs with 0 (post-one-hot fill, deeplearning.py:77)."""
     return df.na.fill(0) if cols is None else df.na.fill(0, subset=cols)
-
-
-def seeded_sample_exact(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
-    """C1: exact-n seeded sample. Spark's native ``sample`` is by fraction;
-    exact n needs a rand-ordered limit (costs a sort of the surviving
-    partitions — fine for sample-sized outputs, machineLearning.py:146)."""
-    return df.orderBy(F.rand(seed)).limit(n)
-
-
-def seeded_sample_fraction(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """C1 scale path: per-partition Bernoulli sample, no sort, no shuffle."""
-    return df.sample(fraction=fraction, seed=seed)

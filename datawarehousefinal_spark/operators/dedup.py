@@ -74,7 +74,6 @@ def exact_dedup(
     df: DataFrame,
     text_col: str,
     order_cols: list[str],
-    normalize: bool = True,
     keep_count_col: str | None = "n_copies",
 ) -> DataFrame:
     """Exact dedup: one row per distinct (normalized) text, keeping the
@@ -85,8 +84,7 @@ def exact_dedup(
     comparison of full texts across the cluster; only hash + the winning
     row move).
     """
-    content = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
-    keyed = df.withColumn("__key", F.sha2(content, 256))
+    keyed = df.withColumn("__key", F.sha2(normalize_text(F.col(text_col)), 256))
     w = Window.partitionBy("__key")
     ranked = keyed.withColumn(
         "__rn", F.row_number().over(w.orderBy(*order_cols))
@@ -331,7 +329,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     threshold: float = 0.9,
     shingle_width: int = 5,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Brute-force exact Jaccard pairs over documents sharing ≥1 shingle.
 
@@ -339,21 +336,11 @@ def ngram_jaccard_pairs(
     generation joins on shared shingles, which is quadratic within a
     shingle's posting list. Fine at verification scale; at 100 TB use
     ``minhash_near_dupes`` (banded, sub-quadratic) and keep this as the
-    sampled ground-truth checker. ``max_shingle_freq`` optionally drops
-    stop-shingles (posting lists longer than the cap) the way search
-    engines drop stopwords. When the cap is active, BOTH the intersection
-    and the set sizes are computed over the filtered posting list, so the
-    ratio is the exact Jaccard of the capped shingle sets (not a biased
-    mix of filtered numerator over unfiltered denominator).
+    sampled ground-truth checker.
     """
-    sh = _fan_out(df).select(
+    posting = _fan_out(df).select(
         F.col(id_col), F.explode(char_shingles(text_col, shingle_width)).alias("__sh")
     )
-    posting = sh
-    if max_shingle_freq is not None:
-        posting = sh.withColumn(
-            "__f", F.count(F.lit(1)).over(Window.partitionBy("__sh"))
-        ).filter(F.col("__f") <= max_shingle_freq).drop("__f")
     sizes = posting.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
     a = posting.select(F.col(id_col).alias("id_a"), "__sh")
     b = posting.select(F.col(id_col).alias("id_b"), "__sh")
@@ -496,10 +483,7 @@ def simhash_near_dupes(
     max_hamming: int = 3,
     shingle_width: int = 5,
     max_bucket: int = 1000,
-    num_blocks: int | None = None,
-    combo_size: int | None = None,
     exact_pair_cap: int = 100,
-    max_dropped_frac: float | None | str = "auto",
 ) -> DataFrame:
     """Near-dup pairs by SimHash with GUARANTEED candidate recall.
 
@@ -507,15 +491,14 @@ def simhash_near_dupes(
     simhash dedup): split the 64-bit fingerprint into ``num_blocks`` bit
     blocks and key each fingerprint on every ``combo_size``-subset of
     blocks. A pair within hamming ``h`` differs in at most ``h`` blocks,
-    hence agrees on ≥ ``num_blocks - h``; whenever ``combo_size <=
-    num_blocks - max_hamming`` (enforced) some agreeing combo collides, so
-    every within-threshold pair becomes a candidate. Candidates are
-    verified with ``bit_count(xor) <= max_hamming`` — 100% precision.
+    hence agrees on ≥ ``num_blocks - h``; with ``num_blocks = max_hamming
+    + combo_size`` some agreeing combo collides, so every within-threshold
+    pair becomes a candidate. Candidates are verified with
+    ``bit_count(xor) <= max_hamming`` — 100% precision.
 
     Computes fingerprints with :func:`simhash`, then delegates to
     :func:`simhash_near_dupes_from_fingerprints` — see it for the banding
-    semantics, the auto ``combo_size`` ladder, and the loud
-    ``max_dropped_frac`` crowding guard.
+    semantics and the auto ``combo_size`` ladder.
 
     Output: ``id_a, id_b, hamming`` (id_a < id_b).
     """
@@ -531,101 +514,46 @@ def simhash_near_dupes(
             id_col,
             max_hamming=max_hamming,
             max_bucket=max_bucket,
-            num_blocks=num_blocks,
-            combo_size=combo_size,
             exact_pair_cap=exact_pair_cap,
-            max_dropped_frac=max_dropped_frac,
         ))
 
 
-def _resolve_banding(
-    fp: DataFrame,
-    max_hamming: int,
-    max_bucket: int,
-    num_blocks: int | None,
-    combo_size: int | None,
-) -> tuple[int, int]:
-    """Resolve (num_blocks, combo_size) for simhash banding, auto-sizing
-    ``combo_size`` from an HLL distinct-fingerprint estimate when the
-    caller didn't fix it, and enforcing the recall guarantee
-    ``combo_size <= num_blocks - max_hamming``. Returns
-    ``(num_blocks, combo_size, auto_sized)`` — the flag tells callers
-    whether the 16x-headroom auto-sizing ran (which makes the
-    ``max_dropped_frac`` loud-drop guard nearly redundant)."""
-    auto_sized = combo_size is None
-    if combo_size is None:
-        if num_blocks is not None:
-            raise ValueError(
-                "auto combo_size derives num_blocks; pass combo_size "
-                "explicitly when fixing num_blocks"
-            )
-        # Sizing needs the order of magnitude, not the exact count: one
-        # shuffle-free HLL aggregate (partial-combined map-side) instead
-        # of a distinct + count job. fp is persisted by callers that
-        # build it; this pass populates that cache for the banding.
-        n_distinct = fp.agg(
-            F.approx_count_distinct("simhash").alias("n")
-        ).first()["n"]
-        combo_size = _auto_combo_size(max(n_distinct, 1), max_hamming, max_bucket)
-    if num_blocks is None:
-        num_blocks = max_hamming + combo_size
-    if combo_size > num_blocks - max_hamming:
-        raise ValueError(
-            f"recall guarantee needs combo_size <= num_blocks - max_hamming "
-            f"({combo_size} > {num_blocks} - {max_hamming})"
-        )
-    return num_blocks, combo_size, auto_sized
+def _auto_banding(fp: DataFrame, max_hamming: int, max_bucket: int) -> int:
+    """Auto-size ``combo_size`` for simhash banding from an HLL
+    distinct-fingerprint estimate (:func:`_auto_combo_size`)."""
+    # Sizing needs the order of magnitude, not the exact count: one
+    # shuffle-free HLL aggregate (partial-combined map-side) instead
+    # of a distinct + count job. fp is persisted by callers that
+    # build it; this pass populates that cache for the banding.
+    n_distinct = fp.agg(
+        F.approx_count_distinct("simhash").alias("n")
+    ).first()["n"]
+    return _auto_combo_size(max(n_distinct, 1), max_hamming, max_bucket)
 
 
 def _simhash_fp_pairs(
     distinct_fp: DataFrame,
-    num_blocks: int,
     combo_size: int,
     max_hamming: int,
     max_bucket: int,
-    max_dropped_frac: float | None,
 ) -> DataFrame:
     """Banded candidate generation + hamming verification over DISTINCT
     fingerprints: ``(__fa, __fb, hamming)`` with ``__fa < __fb`` and
-    ``0 < hamming <= max_hamming``. Shared by the pair-list path
+    ``0 < hamming <= max_hamming``, banding over ``max_hamming +
+    combo_size`` blocks (the minimum that keeps the recall guarantee).
+    Shared by the pair-list path
     (:func:`simhash_near_dupes_from_fingerprints`) and the direct
     dropped-id path (:func:`simhash_dropped_ids`) so banding semantics —
-    combo keys, skew guard, loud-drop check — cannot drift between them."""
-    keyed = simhash_combo_keys(distinct_fp, num_blocks, combo_size)
-    # The counted frame feeds the guard aggregate AND both self-join
-    # branches — three scans of the banding window unpersisted (measured
-    # +60% on the registered query). The persist is scoped: released
-    # whether the guard raises or the pair frame finishes, and the pair
-    # output is a local result (verified near-dup pairs, orders of
-    # magnitude smaller than the banding entries), so nothing downstream
-    # re-reads the cache after the release.
+    combo keys, skew guard — cannot drift between them."""
+    keyed = simhash_combo_keys(distinct_fp, max_hamming + combo_size, combo_size)
+    # The counted frame feeds both self-join branches — scanned twice
+    # unpersisted. The persist is scoped: the pair output is a local
+    # result (verified near-dup pairs, orders of magnitude smaller than
+    # the banding entries), so nothing downstream re-reads the cache
+    # after the release.
     with materialized(keyed.withColumn(
         "__n", F.count(F.lit(1)).over(Window.partitionBy("table", "key"))
     )) as counted:
-        if max_dropped_frac is not None:
-            # "No silent caps": measure how much of the banding the skew
-            # guard is about to throw away, and fail loudly when it is
-            # material — a quietly-degraded dedup pass is worse than an
-            # error. This aggregate also populates the cache the join
-            # branches read.
-            stats = counted.agg(
-                F.count(F.lit(1)).alias("total"),
-                F.coalesce(
-                    F.sum(F.when(F.col("__n") > max_bucket, 1)), F.lit(0)
-                ).alias("dropped"),
-            ).first()
-            if (
-                stats["total"]
-                and stats["dropped"] / stats["total"] > max_dropped_frac
-            ):
-                raise RuntimeError(
-                    f"simhash banding dropped {stats['dropped']}/{stats['total']} "
-                    f"({stats['dropped'] / stats['total']:.1%}) of combo-key entries to "
-                    f"the max_bucket={max_bucket} skew guard (> max_dropped_frac="
-                    f"{max_dropped_frac:.1%}) — candidate recall would silently "
-                    f"degrade toward the hamming-0 tier. Use a larger combo_size "
-                    f"(auto-scaling picks one: combo_size=None), or raise max_bucket."
-                )
         sized = counted.filter(F.col("__n") <= max_bucket)
         a = sized.select(F.col("simhash").alias("__fa"), "table", "key")
         b = sized.select(F.col("simhash").alias("__fb"), "table", "key")
@@ -650,10 +578,7 @@ def simhash_near_dupes_from_fingerprints(
     id_col: str,
     max_hamming: int = 3,
     max_bucket: int = 1000,
-    num_blocks: int | None = None,
-    combo_size: int | None = None,
     exact_pair_cap: int = 100,
-    max_dropped_frac: float | None | str = "auto",
 ) -> DataFrame:
     """Banding + verification tier over a ``(id_col, simhash)`` frame.
 
@@ -670,42 +595,22 @@ def simhash_near_dupes_from_fingerprints(
     C(n,2) pairs of a million-copy cluster is output no caller wants.
     Cross-fingerprint candidate pairs expand to all member pairs.
 
-    **Key sizing vs corpus size.** ``combo_size=None`` (the default)
-    auto-scales: one cheap count of the distinct fingerprints picks the
-    smallest combo width whose key space keeps expected bucket occupancy
-    16× under ``max_bucket`` (see :func:`_auto_combo_size`). A fixed
-    ``combo_size`` that is too narrow for the corpus — e.g. 2-block keys
-    (~13 bits at ``max_hamming=8``) over millions of distinct
-    fingerprints — would crowd every bucket past ``max_bucket`` and the
-    skew guard would silently degrade recall to the hamming-0 tier.
+    **Key sizing vs corpus size.** ``combo_size`` auto-scales: one cheap
+    count of the distinct fingerprints picks the smallest combo width
+    whose key space keeps expected bucket occupancy 16× under
+    ``max_bucket`` (see :func:`_auto_combo_size`). A fixed ``combo_size``
+    too narrow for the corpus — e.g. 2-block keys (~13 bits at
+    ``max_hamming=8``) over millions of distinct fingerprints — would
+    crowd every bucket past ``max_bucket`` and the skew guard would
+    silently degrade recall to the hamming-0 tier.
 
-    **No silent caps.** ``max_dropped_frac`` makes that failure loud: the
-    fraction of banding entries living in over-``max_bucket`` buckets is
-    measured (one count job over the persisted keyed frame) and a
-    ``RuntimeError`` names the fix (wider combos / higher ``max_bucket``)
-    when it exceeds the threshold. The default ``"auto"`` enforces 5%
-    only when the caller FORCED a combo_size — with auto-scaling the
-    sizing ladder already guarantees 16x bucket headroom, so the guard
-    job is skipped. Pass a float to always enforce, ``None`` to always
-    skip.
-
-    Defaults derive ``num_blocks = max_hamming + combo_size`` (the minimum
+    Banding uses ``num_blocks = max_hamming + combo_size`` (the minimum
     satisfying the guarantee). Key width is ``combo_size`` blocks ≈
     ``combo_size * 64/num_blocks`` bits.
 
     Output: ``id_a, id_b, hamming`` (id_a < id_b).
     """
-    num_blocks, combo_size, auto_sized = _resolve_banding(
-        fp, max_hamming, max_bucket, num_blocks, combo_size
-    )
-    if max_dropped_frac == "auto":
-        # Auto-sizing already targets 16x bucket headroom, so the
-        # loud-drop guard would spend a full aggregate over the banding
-        # to confirm what the sizing ladder just guaranteed; it earns
-        # its job only when the caller FORCED a (possibly too-narrow)
-        # combo_size. Explicit floats always enforce.
-        max_dropped_frac = None if auto_sized else 0.05
-
+    combo_size = _auto_banding(fp, max_hamming, max_bucket)
     # members feeds several plan branches off the caller-persisted fp;
     # the branches re-run only the cheap window over the cached
     # fingerprints (an explicit members persist was measured and bought
@@ -738,12 +643,7 @@ def simhash_near_dupes_from_fingerprints(
 
     # -- cross-fingerprint tier: band DISTINCT fingerprints ---------------
     fp_pairs = _simhash_fp_pairs(
-        members.select("simhash").distinct(),
-        num_blocks,
-        combo_size,
-        max_hamming,
-        max_bucket,
-        max_dropped_frac,
+        members.select("simhash").distinct(), combo_size, max_hamming, max_bucket
     )
     # Cross-fp expansion mirrors the hamming-0 cap: members of groups
     # larger than exact_pair_cap are represented by their rep — otherwise
@@ -771,11 +671,9 @@ def simhash_near_dupes_from_fingerprints(
 def simhash_dropped_ids(
     fp: DataFrame,
     id_col: str,
+    combo_size: int,
     max_hamming: int = 3,
     max_bucket: int = 1000,
-    num_blocks: int | None = None,
-    combo_size: int | None = None,
-    max_dropped_frac: float | None = None,
 ) -> DataFrame:
     """Ids dropped by greedy keep-smallest-id SimHash dedup, computed
     DIRECTLY — without materializing the pair list.
@@ -799,26 +697,18 @@ def simhash_dropped_ids(
     the path :func:`incremental.incremental_simhash_dedup` uses for its
     within-batch tier.
 
-    Banding parameters, auto ``combo_size`` sizing, the ``max_bucket``
-    skew guard, and the ``max_dropped_frac`` loud-drop check are shared
-    with the pair path (same helpers), so recall semantics cannot drift
-    between the two formulations.
+    The caller sizes ``combo_size`` (the incremental path sizes it over
+    batch and store together); banding and the ``max_bucket`` skew guard
+    are shared with the pair path (same helper), so recall semantics
+    cannot drift between the two formulations.
 
     Output: single column ``id_col``.
     """
-    num_blocks, combo_size, _auto = _resolve_banding(
-        fp, max_hamming, max_bucket, num_blocks, combo_size
-    )
     # reps doubles as the distinct-fingerprint set for banding (one row
     # per fingerprint by construction) — no separate .distinct() shuffle.
     reps = fp.groupBy("simhash").agg(F.min(id_col).alias("__m"))
     fp_pairs = _simhash_fp_pairs(
-        reps.select("simhash"),
-        num_blocks,
-        combo_size,
-        max_hamming,
-        max_bucket,
-        max_dropped_frac,
+        reps.select("simhash"), combo_size, max_hamming, max_bucket
     )
     # min neighbor-group rep per fingerprint. Symmetrize with a map-only
     # explode, NOT a self-union: a union would put the whole banding
@@ -882,9 +772,7 @@ def ngram_coverage(
     id_col: str,
     text_col: str,
     n: int = 8,
-    hash_grams: bool = True,
     min_shared: int = 0,
-    via: str = "auto",
     hot_gram_df: int = 100_000,
     probe_fraction: float = 0.01,
 ) -> DataFrame:
@@ -895,22 +783,19 @@ def ngram_coverage(
     STITCHED from many sources because no single pair crosses the
     similarity threshold).
 
-    Shape (``via="window"``): one gram explode (map-side), ONE
-    gram-keyed exchange with the doc-frequency as an unordered count
-    window, one per-doc rollup — measured ~2× faster than the
-    aggregate-plus-join-back formulation (which pays the gram exchange
-    AND a sort-merge join on the same key). ``via="join"`` keeps that
-    join shape for corpora with mega-hot boilerplate grams: AQE splits
-    skewed JOIN partitions but not skewed WINDOW partitions, so a gram
-    shared by half the corpus serializes one window task while the join
-    shape spreads it. ``via="auto"`` (default) picks between them with
-    one cheap probe — :func:`_probe_max_gram_df` on a
-    ``probe_fraction`` hash-sample of documents — switching to the join
-    shape when the estimated max gram doc-frequency reaches
-    ``hot_gram_df`` (the point where one window task would own a
-    partition ``hot_gram_df`` rows deep). Keys are 8-byte xxhash64 by
-    default (``hash_grams=False`` keys on gram text for exact SQL
-    replay — the oracled query path). Documents with no tokens have no
+    Window shape: one gram explode (map-side), ONE gram-keyed exchange
+    with the doc-frequency as an unordered count window, one per-doc
+    rollup — measured ~2× faster than the aggregate-plus-join-back
+    formulation (which pays the gram exchange AND a sort-merge join on
+    the same key). The join shape stays for corpora with mega-hot
+    boilerplate grams: AQE splits skewed JOIN partitions but not skewed
+    WINDOW partitions, so a gram shared by half the corpus serializes
+    one window task while the join shape spreads it. One cheap probe —
+    :func:`_probe_max_gram_df` on a ``probe_fraction`` hash-sample of
+    documents — picks the join shape when the estimated max gram
+    doc-frequency reaches ``hot_gram_df`` (the point where one window
+    task would own a partition ``hot_gram_df`` rows deep). Grams key on
+    their text, for exact SQL replay. Documents with no tokens have no
     grams and are absent (consistent with the contamination operator's
     empty-doc hygiene).
 
@@ -920,19 +805,14 @@ def ngram_coverage(
     """
     from datawarehousefinal_spark.operators.contamination import word_ngrams
 
-    if via not in ("auto", "window", "join"):
-        raise ValueError(f"via must be 'auto', 'window' or 'join', got {via!r}")
     # _fan_out: the word-ngram expression is CPU-bound; a compact
     # one-file corpus would otherwise tokenize on one core (measured
     # 3.7 s -> sub-second at sf0.1 once spread over the cluster).
     grams = _fan_out(df).select(
         F.col(id_col),
-        F.explode(word_ngrams(text_col, n, hash_grams)).alias("gram"),
+        F.explode(word_ngrams(text_col, n)).alias("gram"),
     )
-    if via == "auto":
-        est = _probe_max_gram_df(grams, id_col, probe_fraction)
-        via = "join" if est >= hot_gram_df else "window"
-    if via == "window":
+    if _probe_max_gram_df(grams, id_col, probe_fraction) < hot_gram_df:
         counted = grams.withColumn(
             "__df", F.count(F.lit(1)).over(Window.partitionBy("gram"))
         )

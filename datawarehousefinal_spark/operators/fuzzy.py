@@ -21,7 +21,6 @@ def fuzzy_closest(
     right: DataFrame,
     left_col: str,
     right_col: str,
-    max_distance: int | None = None,
 ) -> DataFrame:
     """J5: per left row, the closest right value by Levenshtein distance.
 
@@ -36,8 +35,6 @@ def fuzzy_closest(
     scored = candidates.withColumn(
         "distance", F.levenshtein(F.col(left_col), F.col(right_col))
     )
-    if max_distance is not None:
-        scored = scored.filter(F.col("distance") <= max_distance)
     w = Window.partitionBy("__rid").orderBy("distance", right_col)
     return (
         scored.withColumn("__rn", F.row_number().over(w))
@@ -81,10 +78,11 @@ def fuzzy_closest_blocked(
     right_col: str,
     max_distance: int,
 ) -> DataFrame:
-    """Big×big scale path for :func:`fuzzy_closest`: identical output
-    contract (closest right value per left ROW, distance ≤
-    ``max_distance``, ties break on match ascending; left rows with no
-    candidate inside the bound are dropped) — but candidate generation is
+    """Big×big scale path for :func:`fuzzy_closest` bounded at
+    ``max_distance``: the same output contract (closest right value per
+    left ROW, ties break on match ascending) over matches within the
+    bound; left rows with no candidate inside it are dropped. Candidate
+    generation is
     a length-band EQUI-JOIN instead of a broadcast nested loop, so
     NEITHER side needs to fit in memory.
 
@@ -99,44 +97,10 @@ def fuzzy_closest_blocked(
     built-in early-exit bound.
 
     Equivalence to the brute-force operator is pinned by a differential
-    test (tests/test_operators.py). At ``max_distance == 1`` the
-    block key is the lossless pigeonhole half-string pair (see
-    :func:`fuzzy_pairs_blocked`) instead of the length band, which keeps
-    blocking content-based on near-uniform-length columns.
+    test (tests/test_operators.py).
     """
     if max_distance < 0:
         raise ValueError("max_distance must be >= 0")
-    if max_distance == 1:
-        lhs = left.withColumn(
-            "__rid", F.monotonically_increasing_id()
-        ).withColumn("__k", F.explode(_half_keys(left_col)))
-        rhs = (
-            right.select(right_col)
-            .distinct()
-            .select(right_col, F.explode(_half_keys(right_col)).alias("__k"))
-        )
-        cand = (
-            lhs.join(rhs, "__k")
-            .drop("__k")
-            .distinct()  # a pair can meet on both half keys
-        )
-        scored = (
-            cand.filter(
-                F.abs(F.length(left_col) - F.length(right_col)) <= 1
-            )
-            .withColumn(
-                "distance",
-                F.levenshtein(F.col(left_col), F.col(right_col), 1),
-            )
-            .filter(F.col("distance") >= 0)
-        )
-        w = Window.partitionBy("__rid").orderBy("distance", right_col)
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__rid")
-            .withColumnRenamed(right_col, "match")
-        )
     w_band = max_distance + 1
     lhs = left.withColumn("__rid", F.monotonically_increasing_id()).withColumn(
         "__band", F.floor(F.length(left_col) / w_band)

@@ -295,7 +295,6 @@ def resolve_duplicates(
     id_col: str,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    component_col: str | None = None,
 ) -> Iterator[DataFrame]:
     """Keep exactly one survivor per duplicate cluster: the component
     representative (minimum id — keep-first semantics on the id order).
@@ -303,22 +302,12 @@ def resolve_duplicates(
     Rows never mentioned in ``pairs`` survive untouched (singleton
     clusters). The anti-join ships only the non-representative id set —
     at scale that is the duplicate mass, which is exactly what must move.
-    Pass ``component_col`` to keep the cluster id on survivors (e.g. to
-    count cluster sizes downstream).
     """
     with connected_components(pairs, id_a, id_b) as comp:
         losers = comp.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias(id_col)
         )
-        out = df.join(losers, id_col, "left_anti")
-        if component_col is not None:
-            reps = comp.filter(F.col("id") == F.col("component")).select(
-                F.col("id").alias(id_col), F.col("component").alias(component_col)
-            )
-            out = out.join(reps, id_col, "left").withColumn(
-                component_col, F.coalesce(component_col, F.col(id_col))
-            )
-        yield out
+        yield df.join(losers, id_col, "left_anti")
 
 
 @contextmanager

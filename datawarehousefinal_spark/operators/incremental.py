@@ -67,25 +67,20 @@ from datawarehousefinal_spark.operators.dedup import (
 _NULL_KEY = "__null__"
 
 
-def content_key(text_col: Column | str, normalize: bool = True) -> Column:
-    """Content hash for exact dedup: sha2-256 of the (normalized) text.
+def content_key(text_col: Column | str) -> Column:
+    """Content hash for exact dedup: sha2-256 of the normalized text.
 
     256 uniform bits — bucketing on it shuffles hash + id only, never
     full texts, and cannot skew.
     """
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    content = normalize_text(c) if normalize else c
-    return F.coalesce(F.sha2(content, 256), F.lit(_NULL_KEY))
+    return F.coalesce(F.sha2(normalize_text(c), 256), F.lit(_NULL_KEY))
 
 
-def exact_store(
-    df: DataFrame, text_col: str, normalize: bool = True
-) -> DataFrame:
+def exact_store(df: DataFrame, text_col: str) -> DataFrame:
     """Build the exact-dedup store for an existing corpus: one row per
     distinct content hash (column ``content_hash``)."""
-    return df.select(
-        content_key(text_col, normalize).alias("content_hash")
-    ).distinct()
+    return df.select(content_key(text_col).alias("content_hash")).distinct()
 
 
 def incremental_exact_dedup(
@@ -93,7 +88,6 @@ def incremental_exact_dedup(
     store: DataFrame,
     text_col: str,
     order_cols: list[str],
-    normalize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Exact-dedup a batch against a content-hash store.
 
@@ -107,7 +101,7 @@ def incremental_exact_dedup(
     broadcast when the store fits, shuffled-hash/SMJ beyond that; either
     way corpus text is never touched.
     """
-    keyed = batch.withColumn("__key", content_key(text_col, normalize))
+    keyed = batch.withColumn("__key", content_key(text_col))
     w = Window.partitionBy("__key").orderBy(*order_cols)
     firsts = (
         keyed.withColumn("__rn", F.row_number().over(w))
@@ -140,27 +134,6 @@ def minhash_store(
     return minhash_signature(
         df, id_col, text_col, num_hashes, shingle_width, hash_mode
     )
-
-
-def empty_minhash_store(
-    df: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """A zero-row signature store with the correct schema — the bootstrap
-    input for deduplicating a corpus that has no store yet.
-
-    Built straight from a schema literal, NOT by signing the corpus and
-    ``limit(0)``-ing the result: the latter drags the whole
-    shingle-explode pipeline into the lineage (and ``_fan_out``'s
-    partition-count probe can eagerly execute upstream stages under AQE)
-    just to produce an empty frame.
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        [df.schema[id_col]]
-        + [StructField(f"h{j}", LongType()) for j in range(num_hashes)]
-    )
-    return df.sparkSession.createDataFrame([], schema)
 
 
 def _est_jaccard(num_hashes: int) -> Column:
@@ -295,16 +268,6 @@ def simhash_store(
     return simhash(df, id_col, text_col, shingle_width)
 
 
-def empty_simhash_store(df: DataFrame, id_col: str) -> DataFrame:
-    """Zero-row SimHash store with the correct schema (bootstrap input) —
-    a schema literal for the same lineage reasons as
-    :func:`empty_minhash_store`."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType([df.schema[id_col], StructField("simhash", LongType())])
-    return df.sparkSession.createDataFrame([], schema)
-
-
 @contextmanager
 def incremental_simhash_dedup(
     batch: DataFrame,
@@ -313,7 +276,6 @@ def incremental_simhash_dedup(
     text_col: str,
     max_hamming: int = 3,
     shingle_width: int = 5,
-    combo_size: int | None = None,
     max_bucket: int = 1000,
 ) -> Iterator[tuple[DataFrame, DataFrame]]:
     """Near-dup-dedup a batch against a SimHash fingerprint store.
@@ -351,19 +313,16 @@ def incremental_simhash_dedup(
         # persisted frames; now 1 — the pass still doubles as the cache
         # populator for both persisted fingerprint frames). Map-side partial
         # HLLs + a count are all that moves.
-        if combo_size is None:
-            store_tagged = store_fp.select(F.lit(1).alias("__s"), "simhash")
-            sizing = bfp.select(F.lit(0).alias("__s"), "simhash").unionByName(
-                store_tagged
-            )
-            row = sizing.agg(
-                F.approx_count_distinct("simhash").alias("n"),
-                F.sum("__s").alias("ns"),
-            ).first()
-            store_empty = not row["ns"]
-            combo_size = _auto_combo_size(max(row["n"], 1), max_hamming, max_bucket)
-        else:
-            store_empty = store_fp.isEmpty()
+        store_tagged = store_fp.select(F.lit(1).alias("__s"), "simhash")
+        sizing = bfp.select(F.lit(0).alias("__s"), "simhash").unionByName(
+            store_tagged
+        )
+        row = sizing.agg(
+            F.approx_count_distinct("simhash").alias("n"),
+            F.sum("__s").alias("ns"),
+        ).first()
+        store_empty = not row["ns"]
+        combo_size = _auto_combo_size(max(row["n"], 1), max_hamming, max_bucket)
         num_blocks = max_hamming + combo_size
         b_distinct = bfp.select("simhash").distinct()
 
@@ -371,13 +330,8 @@ def incremental_simhash_dedup(
         # Direct dropped-id formulation (dedup.simhash_dropped_ids): same
         # banding, same greedy contract, about half the stages of deriving
         # the set from the pair list (no member×member expansion).
-        # max_dropped_frac=None: the skew check exists to catch FORCED-narrow
-        # keys, and combo_size was just auto-sized for this exact fingerprint
-        # population (16x margin) — re-measuring it here would only add two
-        # eager jobs per ingest.
         wb_dropped = simhash_dropped_ids(
-            bfp, id_col, max_hamming=max_hamming, max_bucket=max_bucket,
-            combo_size=combo_size, max_dropped_frac=None,
+            bfp, id_col, combo_size, max_hamming=max_hamming, max_bucket=max_bucket
         )
 
         # -- cross tier (drop any batch doc within range of a store doc) ------

@@ -9,14 +9,12 @@ Beyond-reference LLM-pipeline operators (SURVEY.md §7 P7). Design:
   Pandas UDFs interpret it — so scans stay columnar, predicate/column
   pruning works on the metadata, and nothing decodes until a UDF needs it.
 - **Raw format is REAL**: ``raw`` payloads are C-order uint8 arrays of
-  shape (height, width, channels) (× n_frames for video). Decode is
-  ``np.frombuffer`` + reshape; nearest-neighbor resize, channel features,
-  byte stats, and frame sampling below are complete implementations.
-- **Compressed decode is a STUB**: JPEG/PNG/audio codecs need libraries
-  this container doesn't ship; :func:`decode_compressed` raises
-  ``NotImplementedError`` unless PIL is importable. The Spark-side
-  plumbing (schemas, ``mapInPandas`` batch shapes, partitioning) is the
-  same either way and is what the tests pin down.
+  shape (height, width, channels) (× n_frames for video). Byte stats,
+  frame sampling and the perceptual hash below are complete
+  implementations over ``np.frombuffer`` views.
+- **Compressed formats are sniffed, not decoded**: the header parsers
+  read format and dims without a codec library; pixel decode of
+  JPEG/PNG needs one, and no operator here does it.
 - **Scale shape**: every operator is ``mapInPandas`` — one Arrow batch in,
   one out, no shuffle, no driver involvement; partition-parallel over
   however many partitions the scan produced. Per-row Python cost is a few
@@ -32,7 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -72,7 +69,7 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
         F.encode("text", "UTF-8").alias("payload"),
         F.struct(
             # width must be the BYTE count of the payload, not the character
-            # count — they differ on any non-ASCII text, and decode_raw
+            # count — they differ on any non-ASCII text, and a raw decode
             # reshapes by width*height*channels
             F.octet_length(F.encode("text", "UTF-8")).cast("int").alias("width"),
             F.lit(1).alias("height"),
@@ -86,12 +83,6 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Decode
 # ---------------------------------------------------------------------------
-
-def decode_raw(payload: bytes, height: int, width: int, channels: int) -> np.ndarray:
-    """REAL decode of the raw uint8 format: zero-copy frombuffer + reshape."""
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    return arr.reshape(height, width, channels)
-
 
 def sniff_image_dims(payload: bytes) -> tuple[str | None, int | None, int | None]:
     """REAL header-level metadata extraction for the four classic image
@@ -109,8 +100,7 @@ def sniff_image_dims(payload: bytes) -> tuple[str | None, int | None, int | None
       big-endian uint16 at +5/+7 inside it.
 
     Unknown or truncated payloads return ``(None, None, None)`` — the
-    ingest-hygiene contract (report, don't throw): full pixel decode
-    stays behind :func:`decode_compressed`'s loud PIL guard.
+    ingest-hygiene contract (report, don't throw).
     """
     import struct
 
@@ -195,8 +185,7 @@ def sniff_image_meta(df: DataFrame) -> DataFrame:
     """Ingest-time image metadata extraction over a media frame:
     :func:`sniff_image_dims` per payload in Arrow batches — map-only, no
     shuffle, bytes never leave the executor. This is the REAL
-    (library-free) half of compressed-image handling; pixel decode
-    remains :func:`decode_compressed`'s guarded path."""
+    (library-free) half of compressed-image handling."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -301,22 +290,6 @@ def sniff_audio_meta(df: DataFrame) -> DataFrame:
     return df.select("media_id", "payload").mapInPandas(gen, AUDIO_META_SCHEMA)
 
 
-def decode_compressed(payload: bytes):  # pragma: no cover - stub path
-    """STUB: compressed-image decode requires an image codec library that
-    is not available in this environment. The call either delegates to PIL
-    (when importable) or raises — by design, so the gap is loud."""
-    try:
-        import io
-
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "decode_compressed is a stub: no image codec library (PIL) in "
-            "this environment; store media in the raw uint8 format instead"
-        ) from exc
-    return np.asarray(Image.open(io.BytesIO(payload)))
-
-
 # ---------------------------------------------------------------------------
 # mapInPandas operators
 # ---------------------------------------------------------------------------
@@ -365,109 +338,6 @@ def byte_stats(df: DataFrame) -> DataFrame:
             )
 
     return df.select("media_id", "payload").mapInPandas(gen, BYTE_STATS_SCHEMA)
-
-
-CHANNEL_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("channel_means", ArrayType(DoubleType())),
-        StructField("channel_stds", ArrayType(DoubleType())),
-    ]
-)
-
-
-def channel_features(df: DataFrame, codec_col: str | None = None) -> DataFrame:
-    """Per-channel mean/std feature vector from image payloads — the
-    feature-extraction step of an image-dedup/quality pipeline.
-
-    Default path decodes the raw uint8 format (REAL, numpy reshape).
-    With ``codec_col``, rows whose codec is neither NULL nor ``'raw'``
-    decode through :func:`decode_compressed` — PIL behind an import
-    guard, so on a cluster image with Pillow installed PNG/JPEG payloads
-    feature-extract in the same Arrow batches, and without it the task
-    fails LOUDLY (NotImplementedError) instead of emitting garbage.
-    Compressed rows take their dims from the decoded array, not the
-    declared meta (the payload is authoritative for its own shape)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            means, stds = [], []
-            codecs = pdf[codec_col] if codec_col else None
-            for i, (p, h, w, c) in enumerate(
-                zip(pdf["payload"], pdf["height"], pdf["width"], pdf["channels"])
-            ):
-                codec = codecs.iloc[i] if codecs is not None else None
-                if codec not in (None, "raw"):
-                    img = np.asarray(decode_compressed(p), dtype=np.float64)
-                    if img.ndim == 2:  # grayscale decodes 2-D
-                        img = img[:, :, None]
-                else:
-                    img = decode_raw(p, int(h), int(w), int(c)).astype(np.float64)
-                means.append(img.mean(axis=(0, 1)).tolist())
-                stds.append(img.std(axis=(0, 1)).tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "channel_means": means,
-                    "channel_stds": stds,
-                }
-            )
-
-    flat = df.select(
-        "media_id",
-        "payload",
-        F.col("meta.height").alias("height"),
-        F.col("meta.width").alias("width"),
-        F.col("meta.channels").alias("channels"),
-        *([F.col(codec_col)] if codec_col else []),
-    )
-    return flat.mapInPandas(gen, CHANNEL_FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("height", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("channels", IntegerType()),
-    ]
-)
-
-
-def resize_nearest(df: DataFrame, out_height: int, out_width: int) -> DataFrame:
-    """REAL nearest-neighbor resize of raw images (pure numpy index
-    grids), emitting resized raw payloads + updated dims."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for p, h, w, c in zip(
-                pdf["payload"], pdf["height"], pdf["width"], pdf["channels"]
-            ):
-                img = decode_raw(p, int(h), int(w), int(c))
-                rows = (np.arange(out_height) * h // out_height).astype(np.int64)
-                cols = (np.arange(out_width) * w // out_width).astype(np.int64)
-                resized = img[rows][:, cols]
-                out.append(resized.tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "payload": out,
-                    "height": out_height,
-                    "width": out_width,
-                    "channels": pdf["channels"].values,
-                }
-            )
-
-    flat = df.select(
-        "media_id",
-        "payload",
-        F.col("meta.height").alias("height"),
-        F.col("meta.width").alias("width"),
-        F.col("meta.channels").alias("channels"),
-    )
-    return flat.mapInPandas(gen, RESIZED_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(

@@ -255,31 +255,10 @@ def merge_moment_state(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def serve_moments(state: DataFrame) -> DataFrame:
-    """Render a moment state into serving measures: count, avg,
-    population variance (``Σx²/n − (Σx/n)²``, clamped at 0 against
-    float cancellation), min, max. The decimal sums cast to double
-    FIRST, then one IEEE divide/multiply/subtract — the same fixed
-    arithmetic an oracle replays, so served values are deterministic."""
-    group_cols = [c for c in state.columns if c not in MOMENT_COLS]
-    mean = F.col("sum_m").cast("double") / F.col("n")
-    var = F.greatest(
-        F.col("sum_sq").cast("double") / F.col("n") - mean * mean,
-        F.lit(0.0),
-    )
-    return state.select(
-        *group_cols,
-        F.col("n").alias("cantidad_movimientos"),
-        F.when(F.col("n") > 0, mean).alias("promedio_medida"),
-        F.when(F.col("n") > 0, var).alias("varianza_medida"),
-        F.col("min_m").alias("min_medida"),
-        F.col("max_m").alias("max_medida"),
-    )
-
-
 def serve_moments_exact(state: DataFrame, frac_digits: int = 2) -> DataFrame:
-    """:func:`serve_moments` with a fully INTEGER derived-measure surface:
-    mean and population variance are emitted as BIGINT micro-units
+    """Render a moment state into serving measures (count, mean,
+    population variance, min, max) with a fully INTEGER derived-measure
+    surface: mean and variance are emitted as BIGINT micro-units
     (1e-6 of the measure's currency/unit), computed with decimal integer
     arithmetic and ONE integral division — no IEEE double ever touches
     the derived values, so the output is bit-identical across engines,

@@ -3,30 +3,20 @@ the last mile of a training-data pipeline (beyond-reference: the reference
 stops at per-row tensors, deeplearning/etl_to_tensor.py; an LLM corpus is
 served as packed sequences).
 
-Two packers with different contracts:
-
-- :func:`budgeted_chunks` — DETERMINISTIC sequential fill: documents are
-  laid on a line in a stable total order (typically the
-  ``seeded_shuffle`` order) and cut into ``budget``-token chunks; a
-  document belongs to the chunk its first token falls in. The assignment
-  is a pure function of (ids, token counts, seed) — engine-portable,
-  SQL-replayable (it is one cumulative sum), incremental-friendly — at
-  the cost of chunks overflowing by up to one document's tokens (the
-  standard "pack then truncate/roll over" serving contract).
-- :func:`greedy_pack` — best-fit-decreasing bin packing within each
-  serving shard: strictly respects the budget (oversized documents get a
-  singleton bin) and wastes less tail space, but the assignment depends
-  on shard composition, so it is shard-deterministic rather than
-  SQL-replayable. This is the packer to run per output shard AFTER the
-  global shuffle has fixed shard membership.
+:func:`budgeted_chunks` is a DETERMINISTIC sequential fill: documents
+are laid on a line in a stable total order (typically the
+``seeded_shuffle`` order) and cut into ``budget``-token chunks; a
+document belongs to the chunk its first token falls in. The assignment
+is a pure function of (ids, token counts, seed) — engine-portable,
+SQL-replayable (it is one cumulative sum), incremental-friendly — at the
+cost of chunks overflowing by up to one document's tokens (the standard
+"pack then truncate/roll over" serving contract).
 
 Scale design: the cumulative sum in :func:`budgeted_chunks` is the
 textbook two-phase distributed prefix sum — per-partition partial sums
 via a partition-local window after a range repartition, plus a tiny
 per-partition-offset table cumulated on the driver side of a broadcast —
 so no global single-partition window ever sees the corpus.
-:func:`greedy_pack` is ``applyInPandas`` per shard: shards are
-serving-sized (millions of tokens, not terabytes) by construction.
 """
 
 from __future__ import annotations
@@ -60,16 +50,6 @@ def _plan_size_bytes(df: DataFrame) -> int:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # pragma: no cover - stats failure => stay parallel
         return 1 << 62
-
-
-def _range_bucket_expr(
-    df: DataFrame, order_cols: list[str], n: int, seed: int = 42
-):
-    """Back-compat wrapper over :func:`_range_bucket_plan` (a handful of
-    tests and the module docstring reference this name): always returns a
-    Column — ``lit(0)`` when the adaptive plan collapsed to one bucket."""
-    bucket = _range_bucket_plan(df, order_cols, n, seed)
-    return F.lit(0) if bucket is None else bucket
 
 
 def _range_bucket_plan(
@@ -225,7 +205,7 @@ def distributed_cumsum(
     may be parallel LISTS: k measures cumulated over one shared order
     cost one bucket window + one offset broadcast, not k chained passes.
 
-    Two phases over a DETERMINISTIC range bucket (:func:`_range_bucket_expr`
+    Two phases over a DETERMINISTIC range bucket (:func:`_range_bucket_plan`
     — boundary literals frozen into the plan): (1) the window runs WITHIN
     each bucket — parallel, each task sorts its slice; (2) per-bucket
     totals (one tiny row per bucket) cumulate into prefix offsets with a
@@ -325,67 +305,6 @@ def chunk_stats(
     return packed.groupBy(chunk_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_col).cast("long").alias("total_tokens"),
-    )
-
-
-def greedy_pack(
-    df: DataFrame,
-    id_col: str,
-    token_col: str,
-    budget: int,
-    shard_col: str,
-    pack_col: str = "pack_id",
-) -> DataFrame:
-    """Best-fit-decreasing bin packing within each ``shard_col`` group.
-
-    Strict budget: no pack exceeds ``budget`` unless a single document
-    does (oversized documents get a singleton pack — the caller's
-    truncation policy applies downstream). Packs are numbered in opening
-    order per shard and returned with the shard, so global ids are the
-    (shard, pack) pair. Deterministic per shard: documents are processed
-    in (tokens desc, id) order and each lands in the FULLEST open pack
-    that still fits it (``bisect`` over the sorted load list —
-    O(n log n) per shard, same 11/9·OPT quality class as first-fit-
-    decreasing).
-
-    ``applyInPandas`` is the right tool, not a hand-rolled shuffle:
-    packing is inherently sequential WITHIN a shard and shards are
-    serving-sized; Spark parallelizes across shards.
-    """
-    import bisect
-
-    import pandas as pd
-
-    out_fields = df.select(shard_col, id_col, token_col).schema.fields
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(list(out_fields) + [StructField(pack_col, LongType())])
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            [token_col, id_col], ascending=[False, True]
-        ).reset_index(drop=True)
-        loads: list[list] = []  # sorted [load, pack_idx]
-        next_pack = 0
-        assign: list[int] = []
-        for t in pdf[token_col]:
-            t = int(t)
-            i = bisect.bisect_right(loads, [budget - t, float("inf")]) - 1
-            if i >= 0:
-                load, pi = loads.pop(i)
-                bisect.insort(loads, [load + t, pi])
-                assign.append(pi)
-            else:
-                bisect.insort(loads, [t, next_pack])
-                assign.append(next_pack)
-                next_pack += 1
-        pdf[pack_col] = pd.Series(assign, dtype="int64")
-        return pdf
-
-    return (
-        df.select(shard_col, id_col, token_col)
-        .groupBy(shard_col)
-        .applyInPandas(pack, out_schema)
     )
 
 

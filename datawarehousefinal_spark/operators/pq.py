@@ -25,11 +25,6 @@ Spark mapping — each stage is the tool Spark documents for its shape:
   ~partitions×Q×k candidate rows. The corpus vectors are never read at
   search time — that is the entire point at 100 TB.
 
-Composability: ``pq_encode`` runs fine on the ``assigned`` frame of
-:func:`similarity.build_ivf_index`; filtering codes to the query's
-``nprobe`` coarse cells before :func:`pq_topk` gives IVF-PQ (prune first,
-then table-lookup scoring) — the standard web-scale layout.
-
 Determinism: seeded rng + a sorted-sample training set make codebooks,
 codes, and top-k reproducible run-to-run (the registered query is a
 rows-only driver check; recall vs exact L2 is asserted in
@@ -114,17 +109,13 @@ def pq_encode(
     id_col: str,
     vec_col: str,
     codebooks: np.ndarray,
-    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Encode the corpus: ``(id_col, codes array<int>, *extra_cols)``,
-    one nearest codebook entry per subspace. One Arrow pass, argmin via
-    matmul, no shuffle; the output is the ~d×8/m-fold smaller searchable
-    index. ``extra_cols`` pass through untouched (e.g. the IVF
-    ``__centroid`` cell id for :func:`ivf_pq_topk`)."""
+    """Encode the corpus: ``(id_col, codes array<int>)``, one nearest
+    codebook entry per subspace. One Arrow pass, argmin via matmul, no
+    shuffle; the output is the ~d×8/m-fold smaller searchable index."""
     m, k, dsub = codebooks.shape
     out_schema = StructType(
         [corpus.schema[id_col], StructField("codes", ArrayType(IntegerType()))]
-        + [corpus.schema[c] for c in extra_cols]
     )
     books = np.ascontiguousarray(codebooks)
     cnorm = (books**2).sum(axis=2)  # (m, k)
@@ -139,14 +130,9 @@ def pq_encode(
                 sub = X[:, s * dsub : (s + 1) * dsub]
                 d2 = cnorm[s][None, :] - 2.0 * sub @ books[s].T
                 out[:, s] = d2.argmin(axis=1)
-            cols = {id_col: pdf[id_col], "codes": list(out)}
-            for c in extra_cols:
-                cols[c] = pdf[c]
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(out)})
 
-    base = corpus.select(
-        F.col(id_col), as_double_array(vec_col).alias("__v"), *extra_cols
-    )
+    base = corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v"))
     return base.mapInPandas(encode, schema=out_schema)
 
 
@@ -157,10 +143,9 @@ def pq_topk(
     vec_col: str,
     codebooks: np.ndarray,
     k: int = 5,
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """ADC top-k: for each query, the ``k`` encoded corpus vectors with
-    the smallest table-approximated squared L2 distance.
+    """ADC top-k: for each query, the ``k`` encoded corpus vectors other
+    than itself with the smallest table-approximated squared L2 distance.
 
     ``queries`` must be small (collected to build the m×k lookup tables —
     the same broadcast-side contract as ``cosine_topk``); ``encoded`` is
@@ -173,9 +158,62 @@ def pq_topk(
     Output: ``query_id, neighbor_id, pq_dist`` (ascending = nearest),
     ties broken on neighbor id.
     """
-    return _adc_topk(
-        encoded, queries, id_col, vec_col, codebooks, k, exclude_self,
-        cell_col=None, probes=None,
+    m = codebooks.shape[0]
+    qrows = [
+        (r[id_col], r["__v"])
+        for r in queries.select(
+            F.col(id_col), as_double_array(vec_col).alias("__v")
+        ).collect()
+    ]
+    id_type = encoded.schema[id_col].dataType
+    out_schema = StructType(
+        [
+            StructField("query_id", id_type),
+            StructField("neighbor_id", id_type),
+            StructField("pq_dist", DoubleType()),
+        ]
+    )
+    spark = encoded.sparkSession
+    if not qrows:
+        return spark.createDataFrame([], out_schema)
+    qids, _Q, tables = _adc_lookup_tables(qrows, codebooks)
+
+    def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        srange = np.arange(m)
+        for pdf in it:
+            if pdf.empty:
+                continue
+            C = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+            ids = pdf[id_col].to_numpy()
+            out_q, out_n, out_d = [], [], []
+            for qi, qid in enumerate(qids):
+                dist = tables[qi][srange[None, :], C].sum(axis=1)
+                dist = np.where(ids == qid, np.inf, dist)
+                top = min(k, len(dist))
+                # The global window breaks ties on (pq_dist, neighbor_id);
+                # the local cut must apply the SAME tie-break or which
+                # tied candidate survives would depend on partitioning
+                # (identical vectors produce bit-equal ADC distances).
+                # argpartition finds the k-th distance in O(n); every
+                # entry tied with it is kept for the id-ordered cut.
+                part = np.argpartition(dist, top - 1)[:top]
+                kth = dist[part].max()
+                cand = np.flatnonzero(dist <= kth)
+                order = cand[np.lexsort((ids[cand], dist[cand]))[:top]]
+                out_q.extend([qid] * top)
+                out_n.extend(ids[order])
+                out_d.extend(dist[order])
+            yield pd.DataFrame(
+                {"query_id": out_q, "neighbor_id": out_n, "pq_dist": out_d}
+            )
+
+    cand = encoded.mapInPandas(score, schema=out_schema)
+    cand = cand.filter(~F.col("pq_dist").eqNullSafe(float("inf")))
+    w = Window.partitionBy("query_id").orderBy("pq_dist", "neighbor_id")
+    return (
+        cand.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select("query_id", "neighbor_id", "pq_dist")
     )
 
 
@@ -201,97 +239,6 @@ def _adc_lookup_tables(
     return qids, Q, tables
 
 
-def _adc_topk(
-    encoded: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebooks: np.ndarray,
-    k: int,
-    exclude_self: bool,
-    cell_col: str | None,
-    probes: dict | None,
-) -> DataFrame:
-    """Shared ADC kernel: per-batch table-gather scoring + local top-k +
-    global top-k window. With ``cell_col``/``probes`` set (the IVF-PQ
-    path) each query only scores rows in its probed coarse cells."""
-    m = codebooks.shape[0]
-    qrows = [
-        (r[id_col], r["__v"])
-        for r in queries.select(
-            F.col(id_col), as_double_array(vec_col).alias("__v")
-        ).collect()
-    ]
-    id_type = encoded.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("query_id", id_type),
-            StructField("neighbor_id", id_type),
-            StructField("pq_dist", DoubleType()),
-        ]
-    )
-    spark = encoded.sparkSession
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
-    qids, _Q, tables = _adc_lookup_tables(qrows, codebooks)
-    probe_arrays = (
-        {q: np.asarray(sorted(cells)) for q, cells in probes.items()}
-        if probes is not None
-        else None
-    )
-
-    def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        srange = np.arange(m)
-        for pdf in it:
-            if pdf.empty:
-                continue
-            C = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            ids = pdf[id_col].to_numpy()
-            cells = pdf[cell_col].to_numpy() if cell_col is not None else None
-            out_q, out_n, out_d = [], [], []
-            for qi, qid in enumerate(qids):
-                if cells is not None:
-                    mask = np.isin(cells, probe_arrays[qid])
-                    if exclude_self:
-                        mask &= ids != qid
-                    if not mask.any():
-                        continue
-                    sub_ids = ids[mask]
-                    dist = tables[qi][srange[None, :], C[mask]].sum(axis=1)
-                else:
-                    sub_ids = ids
-                    dist = tables[qi][srange[None, :], C].sum(axis=1)
-                    if exclude_self:
-                        dist = np.where(ids == qid, np.inf, dist)
-                top = min(k, len(dist))
-                # The global window breaks ties on (pq_dist, neighbor_id);
-                # the local cut must apply the SAME tie-break or which
-                # tied candidate survives would depend on partitioning
-                # (identical vectors produce bit-equal ADC distances).
-                # argpartition finds the k-th distance in O(n); every
-                # entry tied with it is kept for the id-ordered cut.
-                part = np.argpartition(dist, top - 1)[:top]
-                kth = dist[part].max()
-                cand = np.flatnonzero(dist <= kth)
-                order = cand[np.lexsort((sub_ids[cand], dist[cand]))[:top]]
-                out_q.extend([qid] * top)
-                out_n.extend(sub_ids[order])
-                out_d.extend(dist[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "pq_dist": out_d}
-            )
-
-    cand = encoded.mapInPandas(score, schema=out_schema)
-    if exclude_self:
-        cand = cand.filter(~F.col("pq_dist").eqNullSafe(float("inf")))
-    w = Window.partitionBy("query_id").orderBy("pq_dist", "neighbor_id")
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "pq_dist")
-    )
-
-
 def pq_topk_rerank(
     encoded: DataFrame,
     corpus: DataFrame,
@@ -301,7 +248,6 @@ def pq_topk_rerank(
     codebooks: np.ndarray,
     k: int = 5,
     rerank: int = 50,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """ADC shortlist + exact re-rank — the standard two-tier PQ search
     (FAISS ``IndexRefineFlat``): :func:`pq_topk` retrieves ``rerank``
@@ -318,8 +264,7 @@ def pq_topk_rerank(
     Output: ``query_id, neighbor_id, dist`` (exact squared L2, ascending).
     """
     shortlist = pq_topk(
-        encoded, queries, id_col, vec_col, codebooks,
-        k=rerank, exclude_self=exclude_self,
+        encoded, queries, id_col, vec_col, codebooks, k=rerank
     ).select("query_id", "neighbor_id")
     return _exact_rerank(shortlist, corpus, queries, id_col, vec_col, k)
 
@@ -360,55 +305,6 @@ def _exact_rerank(
         .filter(F.col("__rn") <= k)
         .select("query_id", "neighbor_id", "dist")
     )
-
-
-def ivf_pq_topk(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebooks: np.ndarray,
-    k: int = 5,
-    nprobe: int = 4,
-    rerank: int = 50,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """IVF-PQ: the full FAISS-style web-scale layout — coarse-cell
-    pruning (IVF) on top of code-only ADC scoring (PQ) with exact
-    re-rank.
-
-    ``assigned``/``centroids`` come from
-    :func:`similarity.build_ivf_index`; the corpus is encoded once with
-    its ``__centroid`` cell id carried through
-    (``pq_encode(extra_cols=...)``). Per query the ``nprobe`` nearest
-    coarse cells are resolved driver-side against the tiny centroid
-    table, and the ADC kernel scores ONLY rows whose cell is probed —
-    at scale, with the encoded index written partitioned by cell, that
-    prune happens at the parquet scan. The ADC shortlist then re-ranks
-    exactly by id join, same as :func:`pq_topk_rerank`.
-
-    Output: ``query_id, neighbor_id, dist`` (exact squared L2).
-    """
-    enc = pq_encode(
-        assigned, id_col, vec_col, codebooks, extra_cols=("__centroid",)
-    )
-    crows = centroids.collect()
-    cids = np.asarray([r["__centroid"] for r in crows])
-    C = np.stack([np.asarray(r["__cvec"], dtype=np.float64) for r in crows])
-    probes: dict = {}
-    for r in queries.select(
-        F.col(id_col), as_double_array(vec_col).alias("__v")
-    ).collect():
-        qv = np.asarray(r["__v"], dtype=np.float64)
-        d2 = ((C - qv[None, :]) ** 2).sum(axis=1)
-        take = min(nprobe, len(cids))
-        probes[r[id_col]] = cids[np.argsort(d2)[:take]].tolist()
-    shortlist = _adc_topk(
-        enc, queries, id_col, vec_col, codebooks, rerank, exclude_self,
-        cell_col="__centroid", probes=probes,
-    ).select("query_id", "neighbor_id")
-    return _exact_rerank(shortlist, assigned, queries, id_col, vec_col, k)
 
 
 def pq_recon_error(

@@ -30,21 +30,17 @@ from pyspark.sql import functions as F
 def profile_table(
     df: DataFrame,
     columns: list[str] | None = None,
-    approx: bool = True,
 ) -> DataFrame:
-    """Per-column profile of ``df`` in one aggregation pass.
+    """Per-column profile of ``df``: exact counts, nulls and distincts.
 
     Output (one row per profiled column, ordered by column name):
     ``column, n_total, n_nulls, n_distinct, min_value, max_value`` —
     min/max cast to string so heterogeneous column types share one
     schema (the standard profiler shape).
 
-    ``approx=True`` (the default — this is the 100 TB path) uses
-    HyperLogLog sketches: constant per-column state, ~2% error, and the
-    whole profile stays a single map-side-combined aggregate. With
-    ``approx=False`` (oracle comparisons, exact-uniqueness checks) the
-    cheap statistics still run as that one pass, but exact distincts run
-    as a melt: every cell becomes a ``(col_idx, canonical_string)`` pair,
+    The cheap statistics run as one map-side-combined aggregation pass;
+    exact distincts run as a melt: every cell becomes a
+    ``(col_idx, canonical_string)`` pair,
     deduped with a map-side-combined two-stage DISTINCT and counted per
     column. That replicates rows n_cols× exactly like Spark's
     Expand-based multi-``countDistinct`` — same shuffle volume — but one
@@ -74,8 +70,6 @@ def profile_table(
             F.min(col).cast("string").alias(f"__mn_{i}"),
             F.max(col).cast("string").alias(f"__mx_{i}"),
         ]
-        if approx:
-            aggs.append(F.approx_count_distinct(col).alias(f"__nd_{i}"))
     wide = df.agg(*aggs)
     long = unpivot_single_row(
         wide,
@@ -84,45 +78,38 @@ def profile_table(
                 c,
                 F.lit(i).cast("int"),
                 (F.col("__total") - F.col(f"__nn_{i}")).cast("long"),
-                (
-                    F.col(f"__nd_{i}").cast("long")
-                    if approx
-                    else F.lit(None).cast("long")
-                ),
                 F.col(f"__mn_{i}"),
                 F.col(f"__mx_{i}"),
             )
             for i, c in enumerate(cols)
         ],
-        ["column", "__i", "n_nulls", "n_distinct", "min_value", "max_value"],
+        ["column", "__i", "n_nulls", "min_value", "max_value"],
         keep_cols=["__total"],
     )
-    if not approx:
-        cells = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("__i"),
-                    _qcol(c).cast("string").alias("__v"),
-                )
-                for i, c in enumerate(cols)
-            ]
-        )
-        dist = (
-            df.select(F.explode(cells).alias("__s"))
-            .select("__s.__i", "__s.__v")
-            .where(F.col("__v").isNotNull())
-            .distinct()
-            .groupBy("__i")
-            .agg(F.count(F.lit(1)).cast("long").alias("__nd"))
-        )
-        long = (
-            long.drop("n_distinct")
-            .join(dist, "__i", "left")
-            .withColumn(
-                "n_distinct", F.coalesce(F.col("__nd"), F.lit(0).cast("long"))
+    cells = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("__i"),
+                _qcol(c).cast("string").alias("__v"),
             )
-            .drop("__nd")
+            for i, c in enumerate(cols)
+        ]
+    )
+    dist = (
+        df.select(F.explode(cells).alias("__s"))
+        .select("__s.__i", "__s.__v")
+        .where(F.col("__v").isNotNull())
+        .distinct()
+        .groupBy("__i")
+        .agg(F.count(F.lit(1)).cast("long").alias("__nd"))
+    )
+    long = (
+        long.join(dist, "__i", "left")
+        .withColumn(
+            "n_distinct", F.coalesce(F.col("__nd"), F.lit(0).cast("long"))
         )
+        .drop("__nd")
+    )
     return long.select(
         F.col("column"),
         F.col("__total").cast("long").alias("n_total"),

@@ -76,15 +76,10 @@ def bloom_prune_join(
     fact_key: str,
     keys_key: str,
     bits: int = 1 << 20,
-    how: str = "inner",
 ) -> DataFrame:
-    """Exact ``fact ⋈ keys`` with the fact side bloom-pruned first. The
-    result equals the plain join (the exact join runs after the prune);
-    only the shuffle volume changes. ``how`` is restricted to join types
-    where pruning non-matching FACT rows is semantics-preserving."""
-    if how not in ("inner", "left_semi", "leftsemi"):
-        raise ValueError(
-            f"how must be 'inner' or 'left_semi' (prune drops fact rows), got {how!r}"
-        )
+    """Exact inner ``fact ⋈ keys`` with the fact side bloom-pruned first.
+    The result equals the plain join (the exact join runs after the
+    prune, and an inner join drops non-matching FACT rows anyway); only
+    the shuffle volume changes."""
     pruned = bloom_prune(fact, keys, fact_key, keys_key, bits)
-    return pruned.join(keys, pruned[fact_key] == keys[keys_key], how)
+    return pruned.join(keys, pruned[fact_key] == keys[keys_key])

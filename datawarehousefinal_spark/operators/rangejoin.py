@@ -11,9 +11,8 @@ candidate set is only the intervals overlapping the point's bucket.
 Bucket width tunes candidate density: ~the median interval width is a
 good default (each interval explodes to O(1) buckets and each point
 meets O(density) candidates). Degenerate inputs (an interval spanning
-the whole domain) explode to many buckets — cap with ``max_buckets_per
-_interval`` and route the offenders through a broadcast fallback if they
-are few.
+the whole domain) explode to many buckets — ``max_buckets_per_interval``
+refuses them loudly instead.
 """
 
 from __future__ import annotations
@@ -29,29 +28,15 @@ def bucketize_range_join(
     lo_col: str,
     hi_col: str,
     bucket_width: float,
-    how: str = "inner",
     max_buckets_per_interval: int = 10_000,
-    wide_strategy: str = "error",
 ) -> DataFrame:
-    """Equi-join ``points`` to every interval containing them.
+    """Inner equi-join of ``points`` to every interval containing them.
 
     Output: all point columns + all interval columns, one row per
-    (point, containing interval). ``how='inner'`` (default) drops
-    uncontained points; ``'left'`` keeps them with NULL interval columns.
-    Intervals are treated as closed: lo <= p <= hi.
-
-    Intervals spanning >= ``max_buckets_per_interval`` buckets are
-    handled per ``wide_strategy``: ``'error'`` (default — refuse loudly),
-    ``'broadcast'`` (join the offenders exactly via broadcast BETWEEN;
-    right only when they are few), ``'drop'`` (exclude them, accepting
-    missing matches — the caller owns the incompleteness).
+    (point, containing interval); uncontained points drop. Intervals are
+    treated as closed: lo <= p <= hi. Intervals spanning >=
+    ``max_buckets_per_interval`` buckets are refused loudly.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"bucketize_range_join supports inner/left, got {how!r}")
-    if wide_strategy not in ("error", "broadcast", "drop"):
-        raise ValueError(
-            f"wide_strategy must be error/broadcast/drop, got {wide_strategy!r}"
-        )
     clash = set(points.columns) & set(intervals.columns)
     if clash:
         raise ValueError(
@@ -63,47 +48,23 @@ def bucketize_range_join(
     hi_b = F.floor(F.col(hi_col) / bucket_width).cast("long")
     is_wide = (hi_b - lo_b) >= F.lit(max_buckets_per_interval)
 
-    if wide_strategy == "error":
-        # the guard must be LOUD: silently dropping an interval's matches
-        # makes the join quietly incomplete. The check is one tiny action
-        # over the (dim-sized) intervals frame.
-        n_wide = intervals.filter(is_wide).limit(1).count()
-        if n_wide:
-            raise ValueError(
-                f"interval(s) span >= {max_buckets_per_interval} buckets at "
-                f"width {bucket_width}; widen bucket_width, or pass "
-                f"wide_strategy='broadcast' (join the few offenders via "
-                f"broadcast BETWEEN) or 'drop' (accept missing matches)"
-            )
-    exploded = intervals.filter(~is_wide).withColumn(
+    # the guard must be LOUD: silently dropping an interval's matches
+    # makes the join quietly incomplete. The check is one tiny action
+    # over the (dim-sized) intervals frame.
+    if intervals.filter(is_wide).limit(1).count():
+        raise ValueError(
+            f"interval(s) span >= {max_buckets_per_interval} buckets at "
+            f"width {bucket_width}; widen bucket_width"
+        )
+    exploded = intervals.withColumn(
         "__bucket", F.explode(F.sequence(lo_b, hi_b))
     )
     contained: Column = (F.col(point_col) >= F.col(lo_col)) & (
         F.col(point_col) <= F.col(hi_col)
     )
-    # unique row id BEFORE any join: the left-mode anti-join below must
-    # identify matched point rows null-safely and without collapsing
-    # duplicate point rows — raw column equality does neither
-    pts = points.withColumn("__rid", F.monotonically_increasing_id())
-    matched = (
-        pts.withColumn("__bucket", p_bucket)
+    return (
+        points.withColumn("__bucket", p_bucket)
         .join(exploded, "__bucket")
         .filter(contained)
         .drop("__bucket")
     )
-    if wide_strategy == "broadcast":
-        # the few domain-spanning intervals join by plain BETWEEN against a
-        # broadcast — correct results at the cost of a scan × |wide|
-        matched = matched.unionByName(
-            pts.join(F.broadcast(intervals.filter(is_wide)), contained)
-        )
-    if how == "inner":
-        return matched.drop("__rid")
-    unmatched = pts.join(
-        matched.select("__rid"), "__rid", "left_anti"
-    )
-    for c in intervals.columns:
-        unmatched = unmatched.withColumn(
-            c, F.lit(None).cast(dict(intervals.dtypes)[c])
-        )
-    return matched.unionByName(unmatched).drop("__rid")

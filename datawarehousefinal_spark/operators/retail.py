@@ -33,30 +33,6 @@ from pyspark.sql import functions as F
 from datawarehousefinal_spark.materialize import materialized
 
 
-def basket_pairs(
-    baskets: DataFrame,
-    basket_col: str,
-    item_col: str,
-    max_basket: int = 200,
-) -> DataFrame:
-    """Distinct co-occurring item pairs per basket, item_a < item_b.
-
-    Self-join on the basket key with an inequality on the item — Spark
-    plans this as a shuffle hash join on ``basket_col`` (co-partitioned,
-    no cartesian); pair volume is quadratic only in the ITEMS OF ONE
-    BASKET, and baskets over ``max_basket`` distinct items are excluded
-    before the self-join rather than allowed to straggle (see
-    :func:`basket_lift` for how the exclusion keeps the metric
-    denominators consistent).
-
-    Output: one row per (basket, item_a, item_b).
-    """
-    items = baskets.select(basket_col, item_col).distinct()
-    return _pairs_from_items(
-        _cap_baskets(items, basket_col, max_basket), basket_col, item_col
-    )
-
-
 def _cap_baskets(
     items: DataFrame, basket_col: str, max_basket: int
 ) -> DataFrame:
@@ -72,11 +48,15 @@ def _cap_baskets(
 def _pairs_from_items(
     items: DataFrame, basket_col: str, item_col: str
 ) -> DataFrame:
-    """Pair enumeration over an already-distinct, already-capped
-    (basket, item) frame — split out so :func:`basket_lift` can
-    materialize that frame once and feed every consumer (basket count,
-    item counts, pairs) without re-running the upstream join or the
-    :func:`_cap_baskets` guard per consumer."""
+    """Distinct co-occurring item pairs per basket, item_a < item_b,
+    over an already-distinct, already-capped (basket, item) frame.
+
+    Self-join on the basket key with an inequality on the item — Spark
+    plans this as a shuffle hash join on ``basket_col`` (co-partitioned,
+    no cartesian); pair volume is quadratic only in the ITEMS OF ONE
+    BASKET. :func:`basket_lift` materializes the capped frame once and
+    feeds every consumer (basket count, item counts, pairs) without
+    re-running the upstream join or the :func:`_cap_baskets` guard."""
     a = items.select(basket_col, F.col(item_col).alias("item_a"))
     b = items.select(basket_col, F.col(item_col).alias("item_b"))
     return a.join(b, basket_col).filter(F.col("item_a") < F.col("item_b"))

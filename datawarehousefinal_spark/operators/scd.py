@@ -6,7 +6,7 @@ the warehouse-standard upgrade: each natural key keeps a row per
 attribute VERSION with a validity interval, so facts can join to the
 attribute values that were true at fact time.
 
-Both operators are pure window/column algebra — one shuffle on the
+The operators are pure window/column algebra — one shuffle on the
 natural key, no state, exactly re-playable in SQL (DuckDB oracle).
 """
 
@@ -171,41 +171,4 @@ def extract_changes(
                 for c in attr_cols
             ],
         )
-    )
-
-
-def scd2_lookup(
-    facts: DataFrame,
-    scd2_dim: DataFrame,
-    key_cols: list[str],
-    fact_ts_col: str,
-    attr_cols: list[str] | None = None,
-) -> DataFrame:
-    """Point-in-time attribute lookup: each fact row gets the dimension
-    attributes that were valid at its timestamp — the as-of join against
-    the version table (``valid_from <= fact_ts < valid_to``). Facts
-    earlier than the key's first version carry NULLs.
-
-    Implemented with :func:`operators.asof.asof_join` on ``valid_from``
-    (one shuffle, no interval explosion) — correct because SCD2 intervals
-    per key are disjoint and contiguous, so "the last version starting at
-    or before fact_ts" IS the containing interval.
-    """
-    from datawarehousefinal_spark.operators.asof import asof_join
-
-    if attr_cols is None:
-        attr_cols = [
-            c
-            for c in scd2_dim.columns
-            if c not in key_cols and c not in ("valid_from", "valid_to", "is_current")
-        ]
-    # asof joins on a shared timestamp column name: rename the DIM side's
-    # valid_from to the fact ts name (never the fact side — a fact frame
-    # that itself carries a 'valid_from' column, e.g. one derived from an
-    # SCD2 table, would end up with duplicate column names)
-    right = scd2_dim.select(
-        *key_cols, F.col("valid_from").alias(fact_ts_col), *attr_cols
-    )
-    return asof_join(
-        facts, right, key_cols, fact_ts_col, right_value_cols=attr_cols
     )

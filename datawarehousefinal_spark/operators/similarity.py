@@ -394,10 +394,10 @@ def ivf_topk(
     vec_col: str,
     k: int = 5,
     nprobe: int = 4,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k over an IVF index: each query scores only
-    the vectors assigned to its ``nprobe`` closest centroids.
+    the vectors assigned to its ``nprobe`` closest centroids, itself
+    excluded.
 
     Plan shape: queries × centroids is a tiny broadcast cross product;
     the (query, centroid) probe list broadcasts onto the assigned corpus
@@ -443,8 +443,7 @@ def ivf_topk(
         dot_product(as_double_array("__cv"), F.col("__qv"))
         / (neighbor_norm * F.col("__qn")),
     )
-    if exclude_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
         scored.withColumn("__rn", F.row_number().over(w))
@@ -561,7 +560,6 @@ def semantic_dedup_keep(
     id_col: str,
     vec_col: str,
     threshold: float,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style greedy semantic dedup: drop any row that has a
     SMALLER-id neighbor at cosine >= ``threshold``; keep the rest.
@@ -575,14 +573,12 @@ def semantic_dedup_keep(
     ``dedup_survivors`` (connected components) when transitive keep-one
     semantics are wanted.
 
-    ``pairs`` defaults to the exact quadratic ground truth (small
-    corpora / audits); at scale pass the LSH pair list
-    (:func:`hyperplane_lsh_near_dupes`) — the keep logic is identical:
-    an id-only DISTINCT (small: the dropped fraction) anti-joined
-    against the corpus, which itself never shuffles.
+    Pairs come from the exact quadratic ground truth
+    (:func:`embedding_pairs_exact`); the keep step is an id-only
+    DISTINCT (small: the dropped fraction) anti-joined against the
+    corpus, which itself never shuffles.
     """
-    if pairs is None:
-        pairs = embedding_pairs_exact(corpus, id_col, vec_col, threshold)
+    pairs = embedding_pairs_exact(corpus, id_col, vec_col, threshold)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return corpus.join(losers, id_col, "left_anti")
 

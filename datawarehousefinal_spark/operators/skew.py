@@ -10,8 +10,8 @@ tool when:
   (:func:`salted_join`);
 - an aggregation's combine step still concentrates one huge group on one
   reducer — e.g. ``collect_list``/``count_distinct``-style state that
-  partial aggregation cannot shrink (:func:`salted_aggregate` two-stage
-  decomposition).
+  partial aggregation cannot shrink (:func:`two_stage_distinct_count`,
+  where the value itself is the salt).
 
 Plain ``count/sum/min/max`` aggregations do NOT need salting in Spark:
 hash aggregation partial-combines map-side, so a skewed key contributes
@@ -21,7 +21,7 @@ for the residual cases, and each documents the cost it pays.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "__salt"
@@ -32,7 +32,6 @@ def salted_join(
     replicated: DataFrame,
     on: list[str],
     num_salts: int = 8,
-    how: str = "inner",
     seed: int = 42,
 ) -> DataFrame:
     """Join a skew-keyed ``big`` frame against ``replicated`` by salting.
@@ -44,49 +43,15 @@ def salted_join(
     Cost: ``replicated`` is shuffled ``num_salts``× larger — use only when
     it is far smaller than ``big`` yet above the broadcast threshold
     (below it, ``F.broadcast`` makes salting pointless). Row-level results
-    are identical to the plain join for ``inner``/``left`` joins (the salt
-    explode multiplies only the replicated side, and each big row matches
-    exactly its own salt).
+    are identical to the plain inner join (the salt explode multiplies
+    only the replicated side, and each big row matches exactly its own
+    salt).
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     b = big.withColumn(_SALT, (F.rand(seed) * num_salts).cast("int"))
     r = replicated.withColumn(
         _SALT, F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)))
     )
-    return b.join(r, on + [_SALT], how).drop(_SALT)
-
-
-def salted_aggregate(
-    df: DataFrame,
-    group_cols: list[str],
-    sum_cols: list[str] | None = None,
-    count: bool = True,
-    num_salts: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Two-stage (salted) aggregation: stage 1 aggregates on
-    ``group_cols + salt`` (spreading a hot group over ``num_salts``
-    reducers), stage 2 combines the per-salt partials.
-
-    Decomposable measures only: ``count`` and per-column ``sum`` (avg =
-    salted sum / salted count at the call site). Output columns:
-    ``n`` for the count, ``sum_<col>`` per sum column — identical values
-    to the plain ``groupBy`` (asserted in tests), two shuffles instead of
-    one: the price of never letting one reducer own a mega-group's state.
-    """
-    sum_cols = sum_cols or []
-    salted = df.withColumn(_SALT, (F.rand(seed) * num_salts).cast("int"))
-    partial_aggs: list[Column] = []
-    if count:
-        partial_aggs.append(F.count(F.lit(1)).alias("__pn"))
-    partial_aggs += [F.sum(c).alias(f"__ps_{c}") for c in sum_cols]
-    partial = salted.groupBy(*group_cols, _SALT).agg(*partial_aggs)
-    final_aggs: list[Column] = []
-    if count:
-        final_aggs.append(F.sum("__pn").alias("n"))
-    final_aggs += [F.sum(f"__ps_{c}").alias(f"sum_{c}") for c in sum_cols]
-    return partial.groupBy(*group_cols).agg(*final_aggs)
+    return b.join(r, on + [_SALT]).drop(_SALT)
 
 
 def two_stage_distinct_count(

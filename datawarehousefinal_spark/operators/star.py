@@ -1,26 +1,18 @@
-"""Star-schema ETL core (SURVEY.md §3.1): union of yearly sources →
-cleaning → dimension build → FK attach → null-safe filter split into the
-two fact tables.
+"""Star-schema ETL core (SURVEY.md §3.1): union of yearly sources and the
+null-safe filter split into the two fact tables.
 
-This is the batch re-expression of etl_final.ktr's whole dataflow
-(hops :494-605). The five per-row CombinationLookup round-trips become two
-batch phases (surrogate.py); the entrada/salida FilterRows split keeps
-Kettle's null routing: condition-false INCLUDING NULL goes to the false
-branch (SURVEY.md §7.4).
+Together with the dimension build and FK attach of surrogate.py this is
+the batch re-expression of etl_final.ktr's whole dataflow (hops
+:494-605). The entrada/salida FilterRows split keeps Kettle's null
+routing: condition-false INCLUDING NULL goes to the false branch
+(SURVEY.md §7.4).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from datawarehousefinal_spark.operators.surrogate import (
-    attach_surrogate_key,
-    build_dimension,
-)
 
 
 def union_sources(dfs: list[DataFrame]) -> DataFrame:
@@ -40,45 +32,3 @@ def filter_split(df: DataFrame, condition: Column) -> tuple[DataFrame, DataFrame
     true_df = df.filter(condition)
     false_df = df.filter(~condition | condition.isNull())
     return true_df, false_df
-
-
-@dataclass
-class DimensionSpec:
-    """One conformed dimension: its natural keys and surrogate-key name
-    (the reference's five dims, etl_final.ktr:2747-3009)."""
-
-    name: str
-    natural_keys: list[str]
-    id_col: str
-    extra_cols: list[str] = field(default_factory=list)
-
-
-@dataclass
-class StarSchema:
-    """Built star: dims keyed by name + the fact with FKs attached."""
-
-    dims: dict[str, DataFrame]
-    fact: DataFrame
-
-
-def build_star(
-    src: DataFrame,
-    dim_specs: list[DimensionSpec],
-    measures: list[str],
-) -> StarSchema:
-    """Build every dimension from the cleaned source, then attach all
-    surrogate keys to the fact rows.
-
-    One pass over the source per dimension for the distinct (Spark shares
-    the scan via the cached plan if ``src`` is cached); fact rows never
-    shuffle — every FK attach is a broadcast join. Output fact carries the
-    id columns plus ``measures``.
-    """
-    dims: dict[str, DataFrame] = {}
-    fact = src
-    for spec in dim_specs:
-        dim = build_dimension(src, spec.natural_keys, spec.id_col)
-        dims[spec.name] = dim
-        fact = attach_surrogate_key(fact, dim, spec.natural_keys, spec.id_col)
-    id_cols = [s.id_col for s in dim_specs]
-    return StarSchema(dims=dims, fact=fact.select(*id_cols, *measures))

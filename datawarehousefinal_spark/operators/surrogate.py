@@ -14,9 +14,7 @@ Batch design (deterministic, shuffle-minimal):
    natural keys (the distinct), one single-partition pass for the global
    row_number — acceptable because dimension *distinct* cardinality is tiny
    relative to fact volume even at 100 TB (dims are the small side of a
-   star by definition). For a genuinely huge dimension use
-   ``monotonically_increasing_id`` + zipWithIndex-style block arithmetic
-   instead (provided as ``assign_keys_distributed``).
+   star by definition).
 2. **merge**: incremental loads take only the *new* combos
    (``left_anti`` against the existing dim) and extend from ``max(id)``.
 3. **attach**: facts get their FK via broadcast join on the natural keys —
@@ -44,39 +42,6 @@ def build_dimension(src: DataFrame, natural_keys: list[str], id_col: str) -> Dat
     w = Window.orderBy(*order)
     return distinct.withColumn(id_col, F.row_number().over(w).cast("long")).select(
         id_col, *natural_keys
-    )
-
-
-def assign_keys_distributed(distinct: DataFrame, id_col: str, start: int = 1) -> DataFrame:
-    """Scale path for huge dimensions: dense ids without a single-partition
-    window and without leaving the JVM.
-
-    ``monotonically_increasing_id`` is ``partition_id << 33 | local_row``
-    where ``local_row`` is consecutive from 0 within each partition — so it
-    already encodes (partition, dense local offset). Per-partition counts
-    are a tiny aggregate (one row per partition); a cumulative sum over
-    that micro-frame yields each partition's global offset, broadcast back
-    onto the rows. The data rows themselves never shuffle, nothing crosses
-    the Python boundary, and ids come out dense ``start..start+n-1``.
-
-    Ids are deterministic for a fixed partitioning of ``distinct`` (like
-    any parallel assigner); use ``build_dimension`` when run-to-run stable
-    key VALUES are required.
-    """
-    tagged = distinct.withColumn("__mid", F.monotonically_increasing_id())
-    tagged = tagged.withColumn(
-        "__pid", F.shiftrightunsigned("__mid", 33)
-    ).withColumn("__local", F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)))
-    counts = tagged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "__off", F.coalesce(F.sum("__cnt").over(w), F.lit(0)).cast("long")
-    ).select("__pid", "__off")
-    return (
-        tagged.join(F.broadcast(offsets), "__pid")
-        .withColumn(id_col, (F.col("__off") + F.col("__local") + F.lit(start)).cast("long"))
-        .drop("__mid", "__pid", "__local", "__off")
-        .select(id_col, *distinct.columns)
     )
 
 

@@ -466,7 +466,6 @@ def bm25_index_append(
     batch: DataFrame,
     id_col: str,
     text_col: str,
-    dedup_ids: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Append a document batch to an existing BM25 index WITHOUT
     re-tokenizing the corpus — the retrieval analog of the incremental
@@ -478,16 +477,12 @@ def bm25_index_append(
     N and avgdl derive from doclens. With batch ids disjoint from the
     index (the ingest contract), the union of postings and doclens IS
     the from-scratch rebuild, value-for-value — hash-proven by the
-    oracled ``bm25_append_topk`` registry entry. ``dedup_ids=True``
-    drops batch docs whose id is already indexed (one anti-join against
-    the id-only doclens projection) for at-least-once ingest pipelines.
+    oracled ``bm25_append_topk`` registry entry.
 
     Cost: one tokenize pass over the BATCH only; the stored corpus
     index never moves — append the new posting rows to the
     term-partitioned store and the new doclens rows alongside.
     """
-    if dedup_ids:
-        batch = batch.join(doclens.select(id_col), id_col, "left_anti")
     new_p, new_d = bm25_build_index(batch, id_col, text_col)
     return postings.unionByName(new_p), doclens.unionByName(new_d)
 

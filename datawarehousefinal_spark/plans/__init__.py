@@ -12,8 +12,6 @@ from datawarehousefinal_spark.plans.audit import (  # noqa: F401
     assert_whole_stage_codegen,
     count_node,
     exchange_count,
-    optimized_plan,
     physical_plan,
-    scan_pushed_filters,
     scan_read_schemas,
 )

@@ -25,19 +25,10 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def scan_read_schemas(df: DataFrame) -> list[str]:
     """Every ``ReadSchema`` struct string in the plan, one per file scan —
     the ground truth for column pruning."""
     return re.findall(r"ReadSchema: (struct<[^\n]*)", physical_plan(df))
-
-
-def scan_pushed_filters(df: DataFrame) -> list[str]:
-    """Every ``PushedFilters`` list in the plan (as raw text)."""
-    return re.findall(r"PushedFilters: \[([^\]]*)\]", physical_plan(df))
 
 
 def count_node(df: DataFrame, node: str) -> int:
@@ -59,16 +50,6 @@ def assert_broadcast_join(df: DataFrame, min_count: int = 1) -> None:
     broadcast instead of shuffling the big side."""
     n = count_node(df, "BroadcastHashJoin")
     assert n >= min_count, f"expected >= {min_count} BroadcastHashJoin, found {n}"
-
-
-def assert_no_shuffle_join_of(df: DataFrame, table_hint: str) -> None:
-    """No SortMergeJoin/ShuffledHashJoin in a plan that mentions
-    ``table_hint`` — use when a specific join must stay broadcast."""
-    plan = physical_plan(df)
-    if table_hint in plan:
-        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, (
-            f"join involving {table_hint} shuffles"
-        )
 
 
 def assert_partial_aggregation(df: DataFrame) -> None:

@@ -85,3 +85,32 @@ _JACCARD_PAIRS_SQL = f"""
     FROM inter JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id
     WHERE c / (x.n + y.n - c) >= 0.9
 """
+
+
+# The post-CDC orders snapshot: the batch MERGE (etl.cdc_apply_changes) and
+# its foreachBatch stream (streaming.streaming_cdc_apply) answer to one oracle.
+_CDC_APPLY_ORACLE = """
+    WITH changes AS (
+      SELECT o_orderkey, 'U' AS op, 1 AS seq,
+             'U' AS o_orderstatus, o_totalprice * 1.1 AS o_totalprice
+      FROM orders WHERE o_orderkey % 7 = 0
+      UNION ALL
+      SELECT o_orderkey, 'D', 2, NULL, NULL
+      FROM orders WHERE o_orderkey % 11 = 0
+      UNION ALL
+      SELECT o_orderkey + 100000000, 'I', 1, 'N', 1.0
+      FROM orders WHERE o_orderkey % 13 = 0
+    ),
+    latest AS (
+      SELECT * FROM (
+        SELECT *, row_number() OVER (
+          PARTITION BY o_orderkey ORDER BY seq DESC, op DESC) AS rn
+        FROM changes) t
+      WHERE rn = 1
+    )
+    SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
+    WHERE o_orderkey NOT IN (SELECT o_orderkey FROM latest)
+    UNION ALL
+    SELECT o_orderkey, o_orderstatus, o_totalprice
+    FROM latest WHERE op <> 'D'
+    """

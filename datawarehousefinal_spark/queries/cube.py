@@ -38,9 +38,7 @@ def movements_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "cube_measures_by_dims",
-    oracle="""
+_NATION_SEGMENT_ORACLE = """
     SELECT n.n_name AS nacionalidad,
            c.c_mktsegment AS segmento,
            count(o.o_custkey) AS cantidad_movimientos,
@@ -49,7 +47,12 @@ def movements_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN customer c ON o.o_custkey = c.c_custkey
     LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY 1, 2
-    """,
+    """
+
+
+@query(
+    "cube_measures_by_dims",
+    oracle=_NATION_SEGMENT_ORACLE,
     # engines hash-partition groups differently → avg re-associates
     round_cols=("promedio_medida",),
 )
@@ -81,16 +84,7 @@ def cube_measures_by_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_cube_measures",
-    oracle="""
-    SELECT n.n_name AS nacionalidad,
-           c.c_mktsegment AS segmento,
-           count(o.o_custkey) AS cantidad_movimientos,
-           avg(o.o_totalprice) AS promedio_medida
-    FROM orders o
-    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-    GROUP BY 1, 2
-    """,
+    oracle=_NATION_SEGMENT_ORACLE,
     round_cols=("promedio_medida",),
 )
 def sql_cube_measures_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -98,7 +98,7 @@ def corpus_curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     with curate_corpus(
-        docs, min_quality=0.1, shingle_width=_W, near_dup_mode="transitive"
+        docs, min_quality=0.1, shingle_width=_W
     ) as (_curated, report):
         return local_result(report)
 
@@ -212,7 +212,7 @@ def training_pipeline_e2e_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sampled = deterministic_sample(docs, "doc_id", 0.5, seed=11)
     with curate_corpus(
-        sampled, min_quality=0.1, shingle_width=_W, near_dup_mode="transitive"
+        sampled, min_quality=0.1, shingle_width=_W
     ) as (curated, _report):
         tokens = curated.select(
             "doc_id",
@@ -285,8 +285,7 @@ def contamination_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     document plays the benchmark set; the rest is the training corpus.
     Per-train-doc count of distinct word 8-grams shared with the
     benchmark — the standard eval-hygiene pass. Gram keys are the gram
-    STRINGS here (hash_grams=False) so the whole pipeline is exactly
-    SQL-replayable; production uses the xxhash64 key path (8-byte keys)."""
+    strings, so the whole pipeline is exactly SQL-replayable."""
     from datawarehousefinal_spark.operators.contamination import (
         benchmark_grams,
         contamination_report,
@@ -295,10 +294,8 @@ def contamination_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 10 == 0)
     train = docs.filter(F.col("doc_id") % 10 != 0)
-    grams = benchmark_grams(bench, "text", _CONTAM_N, hash_grams=False)
-    return contamination_report(
-        train, grams, "doc_id", "text", _CONTAM_N, hash_grams=False
-    )
+    grams = benchmark_grams(bench, "text", _CONTAM_N)
+    return contamination_report(train, grams, "doc_id", "text", _CONTAM_N)
 
 
 _MIX_SHARES = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
@@ -465,14 +462,13 @@ def ngram_coverage_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     per document, how many of its distinct word 8-grams appear in at
     least one OTHER document — the diagnostic that catches stitched/
     templated documents no pairwise near-dup threshold flags. Gram keys
-    are the gram strings here (hash_grams=False) for exact SQL replay;
-    production uses xxhash64 keys. Reports only docs with n_shared >= 1
-    (the interesting tail)."""
+    are the gram strings, for exact SQL replay. Reports only docs with
+    n_shared >= 1 (the interesting tail)."""
     from datawarehousefinal_spark.operators.dedup import ngram_coverage
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return ngram_coverage(
-        docs, "doc_id", "text", n=_CONTAM_N, hash_grams=False, min_shared=1
+        docs, "doc_id", "text", n=_CONTAM_N, min_shared=1
     )
 
 

@@ -181,9 +181,9 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.9, shingle_width=_W)
 
 
-@query(
-    "near_dup_components",
-    oracle=f"""
+# Transitive closure of the Jaccard pairs: both component algorithms
+# answer to it.
+_COMPONENTS_SQL = f"""
     WITH RECURSIVE p AS (
         SELECT id_a, id_b FROM ({_JACCARD_PAIRS_SQL}) jp
     ),
@@ -199,8 +199,10 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT id AS doc_id, min(r)::BIGINT AS component
     FROM reach GROUP BY id
-    """,
-)
+    """
+
+
+@query("near_dup_components", oracle=_COMPONENTS_SQL)
 def near_dup_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup cluster resolution (operators/graph.
     connected_components): pair lists under-merge without the closure
@@ -223,26 +225,7 @@ def near_dup_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
 
 
-@query(
-    "near_dup_components_stars",
-    oracle=f"""
-    WITH RECURSIVE p AS (
-        SELECT id_a, id_b FROM ({_JACCARD_PAIRS_SQL}) jp
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM p
-        UNION ALL
-        SELECT id_b AS src, id_a AS dst FROM p
-    ),
-    reach(id, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
-    )
-    SELECT id AS doc_id, min(r)::BIGINT AS component
-    FROM reach GROUP BY id
-    """,
-)
+@query("near_dup_components_stars", oracle=_COMPONENTS_SQL)
 def near_dup_components_stars_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract as `near_dup_components`, resolved by the
     large-star/small-star contraction (graph.connected_components_stars)

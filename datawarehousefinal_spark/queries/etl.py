@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.queries import query
-from datawarehousefinal_spark.queries._shared import _norm_sql
+from datawarehousefinal_spark.queries._shared import _CDC_APPLY_ORACLE, _norm_sql
 from datawarehousefinal_spark.sources.testdata import load_table
 
 
@@ -848,34 +848,7 @@ def cdc_extract_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_changes(orders, changes, ["o_orderkey"])
 
 
-@query(
-    "cdc_apply_changes",
-    oracle="""
-    WITH changes AS (
-      SELECT o_orderkey, 'U' AS op, 1 AS seq,
-             'U' AS o_orderstatus, o_totalprice * 1.1 AS o_totalprice
-      FROM orders WHERE o_orderkey % 7 = 0
-      UNION ALL
-      SELECT o_orderkey, 'D', 2, NULL, NULL
-      FROM orders WHERE o_orderkey % 11 = 0
-      UNION ALL
-      SELECT o_orderkey + 100000000, 'I', 1, 'N', 1.0
-      FROM orders WHERE o_orderkey % 13 = 0
-    ),
-    latest AS (
-      SELECT * FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY o_orderkey ORDER BY seq DESC, op DESC) AS rn
-        FROM changes) t
-      WHERE rn = 1
-    )
-    SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-    WHERE o_orderkey NOT IN (SELECT o_orderkey FROM latest)
-    UNION ALL
-    SELECT o_orderkey, o_orderstatus, o_totalprice
-    FROM latest WHERE op <> 'D'
-    """,
-)
+@query("cdc_apply_changes", oracle=_CDC_APPLY_ORACLE)
 def cdc_apply_changes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC MERGE/upsert (scd.apply_changes — the write side of the
     snapshot_diff pair): a deterministic changeset updates every 7th

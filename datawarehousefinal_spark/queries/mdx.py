@@ -439,9 +439,7 @@ FROM [Movimientos]
 """
 
 
-@query(
-    "mdx_filter_having",
-    oracle="""
+_NATION_OVER_600_ORACLE = """
     SELECT n.n_name AS nacionalidad,
            count(o.o_custkey) AS cantidad_movimientos,
            avg(o.o_totalprice) AS promedio_medida
@@ -450,7 +448,12 @@ FROM [Movimientos]
     LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY 1
     HAVING count(o.o_custkey) > 600
-    """,
+    """
+
+
+@query(
+    "mdx_filter_having",
+    oracle=_NATION_OVER_600_ORACLE,
     # fact-path avg re-associates at sf0.01's multi-split scan — contract
     round_cols=("promedio_medida",),
 )
@@ -505,14 +508,7 @@ def mdx_children_drilldown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "mdx_aggregate_navigator",
-    # avg via the rollup's EXACT decimal sum-state: the oracle mirrors
-    # the serve contract (one exact decimal sum → one correctly-rounded
-    # double → one division) so the hash is partitioning-independent —
-    # plain avg() sums doubles in scan order, which differs from any
-    # re-associated sum by an ulp (the r12 incremental-rollup red).
-    oracle="""
+_MONTH_BUILDING_ORACLE = """
     SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
            CAST(month(o.o_orderdate) AS INTEGER) AS mes,
            count(o.o_custkey) AS cantidad_movimientos,
@@ -522,7 +518,17 @@ def mdx_children_drilldown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN customer c ON o.o_custkey = c.c_custkey
     WHERE c.c_mktsegment = 'BUILDING'
     GROUP BY 1, 2
-    """,
+    """
+
+
+@query(
+    "mdx_aggregate_navigator",
+    # avg via the rollup's EXACT decimal sum-state: the oracle mirrors
+    # the serve contract (one exact decimal sum → one correctly-rounded
+    # double → one division) so the hash is partitioning-independent —
+    # plain avg() sums doubles in scan order, which differs from any
+    # re-associated sum by an ulp (the r12 incremental-rollup red).
+    oracle=_MONTH_BUILDING_ORACLE,
 )
 def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AGGREGATE TABLES + NAVIGATOR (operators/aggnav.py) — Mondrian's
@@ -573,17 +579,7 @@ def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # addition differed from the oracle's scan-order avg() by one ulp
     # in 49/79 cells — the r12 driver red. Decimal states make
     # merge ≡ rebuild bit-identical, not approximately hashed.
-    oracle="""
-    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
-           CAST(month(o.o_orderdate) AS INTEGER) AS mes,
-           count(o.o_custkey) AS cantidad_movimientos,
-           CAST(sum(CAST(o.o_totalprice AS DECIMAL(20,4))) AS DOUBLE)
-             / count(o.o_totalprice) AS promedio_medida
-    FROM orders o
-    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-    WHERE c.c_mktsegment = 'BUILDING'
-    GROUP BY 1, 2
-    """,
+    oracle=_MONTH_BUILDING_ORACLE,
 )
 def incremental_aggregate_rollup_q(
     spark: SparkSession, sf_dir: str
@@ -684,16 +680,7 @@ FROM [Movimientos]
 
 @query(
     "mdx_order_members",
-    oracle="""
-    SELECT n.n_name AS nacionalidad,
-           count(o.o_custkey) AS cantidad_movimientos,
-           avg(o.o_totalprice) AS promedio_medida
-    FROM orders o
-    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-    LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-    GROUP BY 1
-    HAVING count(o.o_custkey) > 600
-    """,
+    oracle=_NATION_OVER_600_ORACLE,
     # fact-path avg re-associates at sf0.01's multi-split scan — contract
     round_cols=("promedio_medida",),
 )
@@ -1774,6 +1761,8 @@ WHERE ([Cliente].[Segmento].[BUILDING])
                        'NATION_4', 'NATION_5')
     GROUP BY 1
     """,
+    # the group's avg re-associates across engines at sf0.1 — contract
+    round_cols=("promedio_medida",),
 )
 def mdx_custom_group_member_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom AGGREGATE members — ``WITH MEMBER [Dim].[Level].[Name] AS
@@ -1988,17 +1977,7 @@ _ADVISOR_ROUTE_WORKLOAD = [
 @query(
     "advisor_materialized_route",
     # avg via the rollup's exact decimal sum-state (see module docstring)
-    oracle="""
-    SELECT CAST(year(o.o_orderdate) AS INTEGER) AS anio,
-           CAST(month(o.o_orderdate) AS INTEGER) AS mes,
-           count(o.o_custkey) AS cantidad_movimientos,
-           CAST(sum(CAST(o.o_totalprice AS DECIMAL(20,4))) AS DOUBLE)
-             / count(o.o_totalprice) AS promedio_medida
-    FROM orders o
-    LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-    WHERE c.c_mktsegment = 'BUILDING'
-    GROUP BY 1, 2
-    """,
+    oracle=_MONTH_BUILDING_ORACLE,
 )
 def advisor_materialized_route_q(
     spark: SparkSession, sf_dir: str

@@ -61,9 +61,7 @@ def image_meta_sniff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims derived from the doc id) are sniffed by the library-free
     header parser (multimodal.sniff_image_meta, Arrow-batched
     mapInPandas, bytes never leave the executor) and must reproduce the
-    planted (format, width, height) exactly. This is the REAL half of
-    compressed-image handling — pixel decode stays behind
-    decode_compressed's loud PIL guard."""
+    planted (format, width, height) exactly."""
     from datawarehousefinal_spark.operators.multimodal import (
         sniff_image_meta,
         synth_image_bytes,

@@ -147,16 +147,16 @@ def encoding_fallback_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return local_result(df)
 
 
-@query(
-    "parquet_sink_roundtrip",
-    oracle="""
+_YEAR_STATUS_TOTALS_ORACLE = """
     SELECT CAST(year(o_orderdate) AS INTEGER) AS anio,
            o_orderstatus,
            count(*) AS n,
            CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
     FROM orders GROUP BY 1, 2
-    """,
-)
+    """
+
+
+@query("parquet_sink_roundtrip", oracle=_YEAR_STATUS_TOTALS_ORACLE)
 def parquet_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8: partitioned snappy parquet sink (machineLearning.py:167-171) —
     aggregate, write partitionBy(anio) so downstream readers get partition
@@ -182,13 +182,13 @@ def parquet_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
 
 
-@query(
-    "zorder_sink_roundtrip",
-    oracle="""
+_STATUS_TOTALS_ORACLE = """
     SELECT o_orderstatus, count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
     FROM orders GROUP BY 1
-    """,
-)
+    """
+
+
+@query("zorder_sink_roundtrip", oracle=_STATUS_TOTALS_ORACLE)
 def zorder_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustered parquet sink (sources/layout.py): orders written
     along the Morton curve of (o_custkey, o_totalprice) — one range
@@ -210,12 +210,12 @@ def zorder_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
 
 
-@query(
-    "csv_sink_roundtrip",
-    oracle="""
+_STATUS_COUNTS_ORACLE = """
     SELECT o_orderstatus, count(*) AS n FROM orders GROUP BY 1
-    """,
-)
+    """
+
+
+@query("csv_sink_roundtrip", oracle=_STATUS_COUNTS_ORACLE)
 def csv_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9: CSV sink + typed re-scan (Datos/preprocessing.py:142-143)."""
     from pyspark.sql.types import (
@@ -244,12 +244,7 @@ def csv_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return local_result(read_csv_typed(spark, path, schema))
 
 
-@query(
-    "jdbc_roundtrip",
-    oracle="""
-    SELECT o_orderstatus, count(*) AS n FROM orders GROUP BY 1
-    """,
-)
+@query("jdbc_roundtrip", oracle=_STATUS_COUNTS_ORACLE)
 def jdbc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+S6 against a REAL database: batched JDBC write of the status
     aggregate into the Derby embedded engine (bundled in pyspark's jars —
@@ -299,12 +294,7 @@ def jdbc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             conn.close()
 
 
-@query(
-    "cache_roundtrip",
-    oracle="""
-    SELECT o_orderstatus, count(*) AS n FROM orders GROUP BY 1
-    """,
-)
+@query("cache_roundtrip", oracle=_STATUS_COUNTS_ORACLE)
 def cache_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3: parquet cache-or-build (machineLearning.py:132-173). First run
     builds + writes snappy parquet; later runs read the cache — either
@@ -440,13 +430,7 @@ def feature_cache_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).groupBy("feature_dim").agg(F.count(F.lit(1)).cast("long").alias("n_rows")))
 
 
-@query(
-    "compaction_roundtrip",
-    oracle="""
-    SELECT o_orderstatus, count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM orders GROUP BY 1
-    """,
-)
+@query("compaction_roundtrip", oracle=_STATUS_TOTALS_ORACLE)
 def compaction_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction end-to-end (sources.writers.compact_parquet):
     orders written deliberately fragmented (64 files — the
@@ -708,16 +692,7 @@ def dynamic_partition_pruning_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return local_result(joined)
 
 
-@query(
-    "orc_sink_roundtrip",
-    oracle="""
-    SELECT CAST(year(o_orderdate) AS INTEGER) AS anio,
-           o_orderstatus,
-           count(*) AS n,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM orders GROUP BY 1, 2
-    """,
-)
+@query("orc_sink_roundtrip", oracle=_YEAR_STATUS_TOTALS_ORACLE)
 def orc_sink_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink/scan roundtrip (the parquet_sink_roundtrip contract on
     Spark's second native columnar format): aggregate, write

@@ -174,9 +174,8 @@ def seeded_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     HASH-ordered sampler (curation.deterministic_sample_exact): the 100
     smallest md5(id:seed) rows — a pure function of (ids, seed), so
     DuckDB replays the exact row set and the driver hash-checks it
-    (the rand-ordered variant, dataset.seeded_sample_exact, keeps
-    reference parity and is pinned by pytest determinism tests; its
-    order is Spark-internal and can never be oracled)."""
+    (a rand-ordered sample's order is Spark-internal and can never be
+    oracled)."""
     from datawarehousefinal_spark.operators.curation import (
         deterministic_sample_exact,
     )
@@ -219,7 +218,7 @@ def table_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # approx=False ONLY because this feeds the DuckDB oracle's exact
     # count(DISTINCT ...); production profiling keeps the approx default
     # (HLL sketches - no Expand row replication).
-    return profile_table(orders, list(_PROFILE_COLS), approx=False)
+    return profile_table(orders, list(_PROFILE_COLS))
 
 
 @query(

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
-from datawarehousefinal_spark.queries._shared import _scratch_path
+from datawarehousefinal_spark.queries._shared import _CDC_APPLY_ORACLE, _scratch_path
 from datawarehousefinal_spark.sources.testdata import load_table
 
 
@@ -367,34 +367,7 @@ def streaming_late_data_drop_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
 
 
-@query(
-    "streaming_cdc_apply",
-    oracle="""
-    WITH changes AS (
-      SELECT o_orderkey, 'U' AS op, 1 AS seq,
-             'U' AS o_orderstatus, o_totalprice * 1.1 AS o_totalprice
-      FROM orders WHERE o_orderkey % 7 = 0
-      UNION ALL
-      SELECT o_orderkey, 'D', 2, NULL, NULL
-      FROM orders WHERE o_orderkey % 11 = 0
-      UNION ALL
-      SELECT o_orderkey + 100000000, 'I', 1, 'N', 1.0
-      FROM orders WHERE o_orderkey % 13 = 0
-    ),
-    latest AS (
-      SELECT * FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY o_orderkey ORDER BY seq DESC, op DESC) AS rn
-        FROM changes) t
-      WHERE rn = 1
-    )
-    SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-    WHERE o_orderkey NOT IN (SELECT o_orderkey FROM latest)
-    UNION ALL
-    SELECT o_orderkey, o_orderstatus, o_totalprice
-    FROM latest WHERE op <> 'D'
-    """,
-)
+@query("streaming_cdc_apply", oracle=_CDC_APPLY_ORACLE)
 def streaming_cdc_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MERGE end-to-end (streaming.foreach_batch_cdc_apply →
     scd.apply_changes): the orders snapshot bootstraps to parquet, the

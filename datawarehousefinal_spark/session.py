@@ -72,9 +72,9 @@ _DEFAULT_CONF: dict[str, str] = {
 
 
 @contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
+def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily set ``spark.sql.shuffle.partitions``, restoring the
-    previous value on exit (no-op when ``n`` is None).
+    previous value on exit.
 
     Two classes of work want a reducer count sized to their DATA rather
     than to the session default (which is sized to the cluster):
@@ -94,9 +94,6 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
     EXECUTED after it use the restored session value — callers must keep
     eager work (fits, ``start()``/``awaitTermination``) inside the scope.
     """
-    if n is None:
-        yield
-        return
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.conf.set(key, str(n))

@@ -2,9 +2,8 @@
 
 The reference reads six yearly CSVs with a declared 25-field schema
 (etl_final.ktr:606-921), falls back across encodings with per-file separators
-(Datos/preprocessing.py:91-121), repairs malformed rows through a second parse
-pass (Datos/preprocessing.py:152-187), and reads Parquet caches column-pruned
-(deeplearning/etl_to_tensor.py:29). Spark equivalents below; chunking and
+(Datos/preprocessing.py:91-121) and repairs malformed rows through a second
+parse pass (Datos/preprocessing.py:152-187). Spark equivalents below; chunking and
 encoding-fallback loops disappear because the scan is distributed and
 per-file options are explicit.
 """
@@ -271,20 +270,6 @@ def repair_json_rows(
     return fixed.select(
         F.from_json(F.col("__line"), schema).alias("r")
     ).select("r.*")
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S5: parquet scan (Catalyst prunes columns/filters pushed down)."""
-    return spark.read.parquet(path)
-
-
-def read_parquet_pruned(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:
-    """S5 column-pruned variant (deeplearning/etl_to_tensor.py:29).
-
-    The ``.select`` reaches the scan: `.explain` shows ReadSchema with only
-    the requested columns.
-    """
-    return spark.read.parquet(path).select(*columns)
 
 
 def read_parquet_evolving(

@@ -23,11 +23,6 @@ TABLES = (
     "embeddings",
 )
 
-# Tables small enough to broadcast in a star join at ANY scale factor
-# (region/nation are fixed-size; the others grow with sf but stay dim-sized
-# relative to the facts orders/lineitem).
-DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
-
 # Session confs that change how Parquet physical types map to Spark types,
 # so a schema inferred under one setting is wrong under another.
 _PARQUET_TYPE_CONFS = (
@@ -103,13 +98,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # zone (UTC, session.py) — identical instants, LTZ type.
             df = df.withColumn("ts", F.to_timestamp("ts"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    """Register each table as a temp view so ``spark.sql`` can be used."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

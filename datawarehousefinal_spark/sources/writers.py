@@ -26,79 +26,32 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_parquet_clustered(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    cluster_by: list[str],
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
-    compression: str = "snappy",
-) -> None:
-    """S8 at scale: partitioned parquet with WITHIN-FILE clustering.
-
-    ``repartitionByRange(partition_by + cluster_by)`` keeps each output
-    directory's rows in a CONTIGUOUS range of tasks (no tasks ×
-    partitions small-file explosion: a directory receives files only from
-    the tasks whose range overlaps it) while staying skew-safe — hashing
-    the partition columns alone would route each partition VALUE through
-    exactly one task, serializing a hot date or event type through one
-    core. ``sortWithinPartitions(partition_by + cluster_by)`` then lays
-    rows out in ``cluster_by`` order inside each file so parquet
-    row-group min/max stats become selective: a reader filtering on a
-    clustered column skips whole row groups instead of scanning them.
-    This is the data-layout half of predicate pushdown — pushdown prunes
-    row groups only when the layout makes the stats tight.
-    ``max_records_per_file`` caps file size for object-store-friendly
-    parallelism.
-    """
-    out = df.repartitionByRange(*partition_by, *cluster_by).sortWithinPartitions(
-        *partition_by, *cluster_by
-    )
-    writer = out.write.mode(mode).option("compression", compression)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(*partition_by).parquet(path)
-
-
 def compact_parquet(
     spark,
     path: str,
     target_partitions: int,
     out_path: str | None = None,
-    partition_by: list[str] | None = None,
     compression: str = "snappy",
 ) -> str:
     """Small-file compaction: rewrite a parquet dataset into
     ``target_partitions`` tasks' worth of evenly-sized files.
 
-    Streaming sinks and incremental appends (e.g. the foreachBatch dedup
-    store) accrete one-file-per-micro-batch datasets; at 100 TB the file
+    Streaming sinks and incremental appends accrete
+    one-file-per-micro-batch datasets; at 100 TB the file
     LISTING becomes the bottleneck before the data does. Writes to
     ``out_path`` (default ``path + "_compacted"``) rather than in place —
     an in-place rewrite that dies mid-job loses the dataset; callers
-    atomically swap directories after success.
-
-    For a Hive-partitioned dataset, pass its ``partition_by`` columns:
-    partition discovery surfaces them as ordinary data columns on read, so
-    an unpartitioned rewrite would FLATTEN the directory layout and break
-    both path-globbing readers and partition pruning. With ``partition_by``
-    the rewrite shuffles on those columns and re-emits the same
-    ``col=value`` directories.
+    atomically swap directories after success. The rewrite is
+    unpartitioned: a Hive-partitioned dataset would come back flattened.
     """
     out_path = out_path or path.rstrip("/") + "_compacted"
-    df = spark.read.parquet(path)
-    if partition_by:
-        out = df.repartition(target_partitions, *partition_by)
-        writer = out.write.mode("overwrite").option("compression", compression)
-        writer.partitionBy(*partition_by).parquet(out_path)
-    else:
-        (
-            df.repartition(target_partitions)
-            .write.mode("overwrite")
-            .option("compression", compression)
-            .parquet(out_path)
-        )
+    (
+        spark.read.parquet(path)
+        .repartition(target_partitions)
+        .write.mode("overwrite")
+        .option("compression", compression)
+        .parquet(out_path)
+    )
     return out_path
 
 
@@ -153,17 +106,12 @@ def write_jsonl(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    compression: str | None = None,
 ) -> None:
     """JSON-Lines sink — the interchange format LLM training corpora ship
     in (one JSON object per line; beyond-reference, no Kettle analog).
     Spark's json writer IS jsonl: one object per line, one file per
-    partition, splittable when uncompressed (use zstd/gzip per-file
-    compression only when the consumer doesn't need split points)."""
-    w = df.write.mode(mode)
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+    partition, uncompressed and therefore splittable."""
+    df.write.mode(mode).json(path)
 
 
 def write_jdbc(

@@ -1,12 +1,10 @@
 """Structured Streaming analogs of the batch operators (windowed counts,
-within-watermark dedup, foreachBatch dimension merge)."""
+within-watermark dedup, session windows, foreachBatch CDC and cube-merge
+sinks)."""
 
 from datawarehousefinal_spark.streaming.pipeline import (  # noqa: F401
-    foreach_batch_dim_merge,
-    foreach_batch_incremental_dedup,
     read_parquet_stream,
     run_to_memory,
     streaming_dedup,
     windowed_event_counts,
-    windowed_value_counts,
 )

@@ -4,16 +4,16 @@ The reference is a batch ETL (Kettle transformations run on a schedule —
 etl_final.ktr's yearly file loads; SURVEY.md §2.4), but the same
 semantics stream naturally: an events feed replaces the periodic re-read,
 watermarked windows replace the daily-counts re-aggregation (A4), and the
-lookup-or-insert dimension sink (S7, Kettle CombinationLookup) becomes a
-``foreachBatch`` incremental merge. Everything here is the micro-batch
+CDC upsert and cube maintenance become ``foreachBatch`` incremental
+merges. Everything here is the micro-batch
 analog of an existing batch operator, sharing its implementation where
 possible so batch and streaming can't drift.
 
 Scale notes: file-source streams list + read incrementally
 (``maxFilesPerTrigger``); watermarks bound state for the windowed
 aggregations and within-watermark dedup; ``foreachBatch`` reuses the
-batch planner per micro-batch, so the dim merge keeps its broadcast
-anti-join shape. Tests drive every operator with
+batch planner per micro-batch, so each sink keeps its batch plan shape.
+Tests drive every operator with
 ``trigger(availableNow=True)`` against real parquet batches.
 """
 
@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from datawarehousefinal_spark.materialize import materialized
 from datawarehousefinal_spark.session import scoped_shuffle_partitions
 
 
@@ -65,22 +64,6 @@ def windowed_event_counts(
         .groupBy(F.window(ts_col, window).alias("__w"))
         .agg(F.count(F.lit(1)).alias("movement_count"))
         .select(F.to_date("__w.start").alias("fecha"), "movement_count")
-    )
-
-
-def windowed_value_counts(
-    stream: DataFrame,
-    col: str,
-    ts_col: str = "ts",
-    window: str = "1 day",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """A5's value_counts per event-time window, watermark-bounded."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("__w"), F.col(col))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.to_date("__w.start").alias("fecha"), col, "n")
     )
 
 
@@ -211,61 +194,6 @@ def stream_static_enrich(
     )
 
 
-def foreach_batch_dim_merge(
-    dim_path: str,
-    natural_keys: list[str],
-    id_col: str,
-) -> Callable[[DataFrame, int], None]:
-    """S7 as a streaming sink: a ``foreachBatch`` function that merges each
-    micro-batch's new natural-key combinations into the parquet dimension
-    at ``dim_path`` (lookup-or-insert, surrogate ids continuing from the
-    current max — Kettle CombinationLookup, etl_final.ktr:2747+).
-
-    Reuses the batch ``build_dimension``/``merge_dimension`` (null-safe
-    anti-join) so streaming and batch dims can't drift. Parquet append per
-    batch; replay-idempotent at the key level (an already-seen combo never
-    gets a second id) though not transactionally exactly-once — that needs
-    a transactional table format this sandbox doesn't ship. Noted, not
-    hidden.
-    """
-    from datawarehousefinal_spark.operators.surrogate import (
-        build_dimension,
-        merge_dimension,
-    )
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        try:
-            existing = spark.read.parquet(dim_path)
-        except AnalysisException as e:
-            # ONLY a missing path means "first batch" — any other failure
-            # (IO error, corrupt footer, permissions) must propagate, or
-            # the overwrite branch below would destroy the accumulated
-            # dimension and re-number every surrogate id.
-            if hasattr(e, "getCondition"):
-                klass = e.getCondition() or ""
-            elif hasattr(e, "getErrorClass"):  # pre-4.0 name
-                klass = e.getErrorClass() or ""
-            else:
-                klass = ""
-            if "PATH_NOT_FOUND" not in klass and "PATH_NOT_FOUND" not in str(e):
-                raise
-            existing = None
-        if existing is None:
-            build_dimension(batch, natural_keys, id_col).write.mode(
-                "overwrite"
-            ).parquet(dim_path)
-        else:
-            merged = merge_dimension(existing, batch, natural_keys, id_col)
-            merged.join(existing.select(id_col), id_col, "left_anti").write.mode(
-                "append"
-            ).parquet(dim_path)
-
-    return _merge
-
-
 def foreach_batch_cdc_apply(
     snapshot_path: str,
     key_cols: list[str],
@@ -329,73 +257,6 @@ def foreach_batch_cdc_apply(
     return _apply
 
 
-def foreach_batch_incremental_dedup(
-    store_path: str,
-    survivors_path: str,
-    text_col: str,
-    order_cols: list[str],
-) -> Callable[[DataFrame, int], None]:
-    """Streaming ingest dedup: a ``foreachBatch`` sink that exact-dedups
-    each micro-batch against the content-hash store at ``store_path``,
-    appends the survivors to ``survivors_path``, and appends their hashes
-    to the store — the streaming face of
-    ``operators.incremental.incremental_exact_dedup`` (micro-batch =
-    ingest batch; the store is the only state, so state never lives in
-    the streaming engine and survives restarts for free).
-
-    Unlike ``dropDuplicatesWithinWatermark`` (bounded-horizon state held
-    BY the stream), the store remembers every document ever ingested —
-    a crawl re-fetching a page months later still dedups. A fully
-    completed micro-batch is replay-proof: the replay finds its hashes in
-    the store and contributes zero survivors.
-    """
-    from datawarehousefinal_spark.operators.incremental import (
-        exact_store,
-        incremental_exact_dedup,
-    )
-
-    def _dedup(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        try:
-            store = spark.read.parquet(store_path)
-        except AnalysisException as e:
-            if hasattr(e, "getCondition"):
-                klass = e.getCondition() or ""
-            elif hasattr(e, "getErrorClass"):  # pre-4.0 name
-                klass = e.getErrorClass() or ""
-            else:
-                klass = ""
-            if "PATH_NOT_FOUND" not in klass and "PATH_NOT_FOUND" not in str(e):
-                raise
-            store = exact_store(batch.limit(0), text_col)
-        survivors, _delta = incremental_exact_dedup(
-            batch, store, text_col, order_cols
-        )
-        # Persist: the dedup pipeline (window shuffle + store scan +
-        # anti-join) feeds both writes; unpersisted it would execute
-        # twice per micro-batch. The store delta is re-derived from the
-        # persisted survivors (their hashes are unique by construction,
-        # so exact_store over them equals the operator's delta) instead
-        # of from _delta, whose lineage would re-run the pipeline.
-        with materialized(survivors) as survivors:
-            # Survivors before delta: a crash between the writes leaves
-            # the store missing this batch's hashes, so the replay
-            # re-appends the same survivors — at-least-once on the
-            # survivor feed (downstream consumers dedup replays by
-            # content hash for free). Delta-first would instead LOSE
-            # documents: a store claiming hashes whose survivors never
-            # landed drops them on every future batch. Exactly-once needs
-            # a transactional table format this sandbox doesn't ship.
-            survivors.write.mode("append").parquet(survivors_path)
-            exact_store(survivors, text_col).write.mode("append").parquet(
-                store_path
-            )
-
-    return _dedup
-
-
 # State-partition count for locally-driven streaming queries. A stateful
 # streaming operator keeps one state-store instance PER shuffle partition,
 # and every micro-batch pays a per-instance open/commit (delta file write +
@@ -409,8 +270,7 @@ def foreach_batch_incremental_dedup(
 # the ten streaming faces (3-pass min-of subset; the per-instance
 # open/commit was the family's floor), and 32 → 4 was already ~8× less of
 # it. A production deployment sizes this to state volume / peak throughput
-# instead (e.g. total-executor-cores × 2) by passing ``state_partitions``
-# explicitly or ``None`` to inherit the session conf.
+# instead (e.g. total-executor-cores × 2).
 STATE_PARTITIONS_LOCAL = 1
 
 
@@ -418,14 +278,13 @@ def run_to_memory(
     stream_df: DataFrame,
     table_name: str,
     output_mode: str = "append",
-    state_partitions: int | None = STATE_PARTITIONS_LOCAL,
 ) -> None:
     """Drive a streaming DataFrame to completion over the data currently
     available (``trigger(availableNow=True)``) into an in-memory sink —
-    the test/debug harness for every operator above. ``state_partitions``
-    sizes the query's state stores (see :data:`STATE_PARTITIONS_LOCAL`)."""
+    the test/debug harness for every operator above. The query's state
+    stores are sized by :data:`STATE_PARTITIONS_LOCAL`."""
     spark = stream_df.sparkSession
-    with scoped_shuffle_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, STATE_PARTITIONS_LOCAL):
         (
             stream_df.writeStream.format("memory")
             .queryName(table_name)
@@ -440,8 +299,8 @@ def run_to_parquet(
     stream_df: DataFrame,
     out_path: str,
     checkpoint_path: str,
+    state_partitions: int,
     output_mode: str = "append",
-    state_partitions: int | None = None,
 ) -> None:
     """Drive a streaming DataFrame over the currently-available data into
     a parquet file sink with a durable checkpoint — the PRODUCTION sink
@@ -453,11 +312,9 @@ def run_to_parquet(
     dropped — which is what makes restart-resume testable.
     ``state_partitions`` sizes the state stores at FIRST start only —
     the checkpoint pins it FOREVER (later resumes reuse the original
-    count), so the production sink defaults to ``None`` = inherit the
-    session's shuffle-partition conf: a deployment that never passes
-    the parameter gets its cluster-sized parallelism, not a local-test
-    constant silently frozen into the checkpoint. Local harness
-    callers pass :data:`STATE_PARTITIONS_LOCAL` explicitly."""
+    count), so every caller must choose it: a local-test constant is
+    never silently frozen into a production checkpoint. Local harness
+    callers pass :data:`STATE_PARTITIONS_LOCAL`."""
     spark = stream_df.sparkSession
     with scoped_shuffle_partitions(spark, state_partitions):
         (
@@ -507,8 +364,6 @@ def read_cube_state(spark: SparkSession, state_path: str) -> DataFrame:
     appended delta state into the current cube state (one
     map-side-combined groupBy over |deltas|×|cells| tiny rows). Feed to
     :func:`operators.olap.serve_measures` for the count/avg columns."""
-    from datawarehousefinal_spark.operators.olap import merge_measure_state
-
     raw = spark.read.parquet(state_path)
     # merge_measure_state(x, empty-x) == fold of all rows: states are
     # row-wise mergeable, so one groupBy over the union IS the fold.

@@ -1,5 +1,4 @@
-"""Custom stateful streaming operators (applyInPandasWithState /
-session windows).
+"""Custom stateful streaming operators (applyInPandasWithState).
 
 These cover the part of the streaming surface that watermarked built-in
 aggregations can't express: arbitrary per-key state carried across
@@ -76,29 +75,5 @@ def stateful_running_totals(
             _STATE_SCHEMA,
             "append",
             GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def session_window_counts(
-    stream: DataFrame,
-    key_col: str,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Sessionization with the built-in ``session_window``: events for a
-    key closer than ``gap`` merge into one session; the watermark closes
-    (finalizes) sessions once event time passes. Output: key, session
-    start/end, event count."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col), F.session_window(ts_col, gap).alias("__w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.col("__w.start").alias("session_start"),
-            F.col("__w.end").alias("session_end"),
-            "n_events",
         )
     )

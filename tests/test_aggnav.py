@@ -822,20 +822,3 @@ def test_materialize_recommended_end_to_end(spark, tmp_path):
         assert "parquet" in plan.lower()
         assert "LocalTableScan" not in plan
         assert _sorted_rows(routed) == want
-
-
-def test_materialize_recommended_register_false_leaves_cube_alone(spark):
-    from datawarehousefinal_spark.operators.aggnav import (
-        materialize_recommended,
-    )
-
-    cube = _cube(spark)
-    tables = materialize_recommended(
-        cube, [_ALL_MEASURES_BY_YEAR], max_tables=1, register=False
-    )
-    assert tables and cube.aggregates == []
-    # the returned tables still serve through the explicit-list entry
-    got = _sorted_rows(
-        mdx_query_navigated(cube, _ALL_MEASURES_BY_YEAR, tables)
-    )
-    assert got == _sorted_rows(mdx_query(_cube(spark), _ALL_MEASURES_BY_YEAR))

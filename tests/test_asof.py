@@ -1,13 +1,12 @@
-"""As-of join unit tests: direction semantics, unmatched keys, collisions."""
+"""As-of join unit tests: backward semantics, unmatched keys, collisions."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
-from datawarehousefinal_spark.operators.asof import asof_join, latest_snapshot_per_key
+from datawarehousefinal_spark.operators.asof import asof_join
 
 
 def _ts(h):
@@ -17,7 +16,8 @@ def _ts(h):
 @pytest.fixture(scope="module")
 def frames(spark):
     left = spark.createDataFrame(
-        [(1, _ts(10), "a"), (1, _ts(12), "b"), (2, _ts(8), "c"), (3, _ts(9), "d")],
+        [(1, _ts(10), "a"), (1, _ts(12), "b"), (2, _ts(8), "c"), (3, _ts(9), "d"),
+         (1, _ts(11), "e")],
         ["k", "ts", "x"],
     )
     right = spark.createDataFrame(
@@ -30,16 +30,9 @@ def frames(spark):
 def test_backward_matches_most_recent_prior(spark, frames):
     left, right = frames
     out = {(r["k"], r["x"]): r["v"] for r in asof_join(left, right, ["k"], "ts").collect()}
-    assert out == {(1, "a"): 100.0, (1, "b"): 200.0, (2, "c"): None, (3, "d"): None}
-
-
-def test_forward_matches_next(spark, frames):
-    left, right = frames
-    out = {
-        (r["k"], r["x"]): r["v"]
-        for r in asof_join(left, right, ["k"], "ts", direction="forward").collect()
-    }
-    assert out == {(1, "a"): 200.0, (1, "b"): None, (2, "c"): 300.0, (3, "d"): None}
+    # "e" sits exactly on a right timestamp: the interval is closed
+    assert out == {(1, "a"): 100.0, (1, "b"): 200.0, (2, "c"): None, (3, "d"): None,
+                   (1, "e"): 200.0}
 
 
 def test_left_rows_always_survive(spark, frames):
@@ -51,15 +44,3 @@ def test_column_collision_raises(spark, frames):
     left, right = frames
     with pytest.raises(ValueError, match="collide"):
         asof_join(left, right.withColumnRenamed("v", "x"), ["k"], "ts")
-
-
-def test_bad_direction_raises(spark, frames):
-    left, right = frames
-    with pytest.raises(ValueError, match="backward/forward"):
-        asof_join(left, right, ["k"], "ts", direction="nearest")
-
-
-def test_latest_snapshot_per_key(spark, frames):
-    _, right = frames
-    snap = {(r["k"]): r["v"] for r in latest_snapshot_per_key(right, ["k"], "ts").collect()}
-    assert snap == {1: 200.0, 2: 300.0}

@@ -1,14 +1,11 @@
-"""Benchmark-decontamination operator tests: flagging, dropping, and
-hash-key/string-key path equivalence."""
+"""Benchmark-decontamination operator tests: flagging and empty-document
+hygiene."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.operators.contamination import (
     benchmark_grams,
     contamination_report,
-    decontaminate,
     word_ngrams,
 )
 
@@ -38,28 +35,9 @@ def test_contamination_flags_only_overlapping_doc(spark):
     assert rep[0]["n_grams"] > rep[0]["n_hits"]
 
 
-def test_decontaminate_drops_flagged(spark):
-    bench, train = _frames(spark)
-    out = decontaminate(train, bench, "doc_id", "text")
-    assert sorted(r["doc_id"] for r in out.collect()) == [2, 3]
-
-
-def test_hash_and_string_paths_agree(spark):
-    bench, train = _frames(spark)
-    a = contamination_report(
-        train, benchmark_grams(bench, "text", hash_grams=True),
-        "doc_id", "text", hash_grams=True,
-    )
-    b = contamination_report(
-        train, benchmark_grams(bench, "text", hash_grams=False),
-        "doc_id", "text", hash_grams=False,
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_short_document_whole_run_gram(spark):
     df = spark.createDataFrame([(1, "only three tokens")], ["i", "t"])
-    grams = df.select(word_ngrams("t", 8, hash_grams=False).alias("g")).first()["g"]
+    grams = df.select(word_ngrams("t", 8).alias("g")).first()["g"]
     assert grams == ["only three tokens"]
 
 
@@ -69,7 +47,7 @@ def test_empty_and_whitespace_docs_have_no_grams(spark):
     training doc as contaminated."""
     df = spark.createDataFrame([(1, ""), (2, "   \t  "), (3, "real text")], ["i", "t"])
     rows = {r["i"]: r["g"] for r in
-            df.select("i", word_ngrams("t", 8, hash_grams=False).alias("g")).collect()}
+            df.select("i", word_ngrams("t", 8).alias("g")).collect()}
     assert rows[1] == [] and rows[2] == []
     assert rows[3] == ["real text"]
     bench = spark.createDataFrame([(100, "")], ["doc_id", "text"])

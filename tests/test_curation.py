@@ -53,23 +53,6 @@ def test_split_deterministic_and_disjoint(spark, sf_dir):
     assert splits <= {"train", "val"} and "train" in splits
 
 
-def test_lang_filter_drops_disallowed(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the of and to in is that it was for on are as with " * 3),
-            (2, "el la de que y en un ser se no haber por con su para " * 3),
-        ],
-        ["doc_id", "text"],
-    )
-    with curate_corpus(
-        df, min_chars=5, min_quality=0.0, allowed_langs=["en"],
-        shingle_width=5,
-    ) as (curated, _):
-        rows = curated.collect()
-    assert [r["doc_id"] for r in rows] == [1]
-    assert rows[0]["lang_pred"] == "en"
-
-
 def test_curation_plan_not_quadratic(spark, sf_dir):
     from datawarehousefinal_spark.plans.audit import assert_no_cartesian
 
@@ -164,8 +147,8 @@ def test_seeded_shuffle_is_deterministic_permutation(spark):
 
 def test_funnel_transitive_mode_merges_chains(spark):
     """A near-dup CHAIN (A~B, B~C, but not A~C at the threshold): the
-    greedy store pass may keep both chain ends; transitive mode resolves
-    the connected component and keeps exactly one survivor."""
+    funnel resolves the connected component and keeps exactly one
+    survivor."""
     from datawarehousefinal_spark.operators.curation import curate_corpus
 
     base = " ".join(f"palabra{i} texto" for i in range(40))
@@ -176,18 +159,11 @@ def test_funnel_transitive_mode_merges_chains(spark):
         (4, "completely different content here entirely about spark"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    def survivors(mode):
-        with curate_corpus(
-            docs, min_chars=5, min_quality=0.0, near_dup_threshold=0.9,
-            near_dup_mode=mode,
-        ) as (curated, _):
-            return sorted(r["doc_id"] for r in curated.collect())
-
-    t_ids = survivors("transitive")
+    with curate_corpus(
+        docs, min_chars=5, min_quality=0.0, near_dup_threshold=0.9,
+    ) as (curated, _):
+        t_ids = sorted(r["doc_id"] for r in curated.collect())
     assert t_ids == [1, 4]  # whole chain collapses to its min id
-    g_ids = survivors("greedy")
-    assert 1 in g_ids and 4 in g_ids and 2 not in g_ids
-    assert set(t_ids) <= set(g_ids)  # transitive is never weaker
 
 
 # ---------------------------------------------------------------------------

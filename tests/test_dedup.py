@@ -58,24 +58,15 @@ def test_simhash_identical_texts_collide(spark):
 
 def test_simhash_recall_on_planted_pairs(spark, sf_dir):
     """Measured recall at the SHIPPED parameters (queries/dedup.py registers
-    max_hamming=8, combo_size=2): every Jaccard-planted pair measures
-    hamming <= 7 on this fixture, and block-combination candidate recall is
-    guaranteed for hamming <= 8, so recall must be complete."""
+    max_hamming=8; combo_size auto-sizes to 2 here): every Jaccard-planted
+    pair measures hamming <= 7 on this fixture, and block-combination
+    candidate recall is guaranteed for hamming <= 8, so recall must be
+    complete."""
     docs = _docs(spark, sf_dir)
     truth = _pair_set(ngram_jaccard_pairs(docs, "doc_id", "text", 0.9, W))
-    found = _pair_set(
-        simhash_near_dupes(docs, "doc_id", "text", 8, W, combo_size=2)
-    )
+    found = _pair_set(simhash_near_dupes(docs, "doc_id", "text", 8, W))
     assert truth
     assert truth <= found
-
-
-def test_simhash_guarantee_param_validation(spark):
-    df = spark.createDataFrame([(1, "abc")], ["id", "text"])
-    import pytest
-
-    with pytest.raises(ValueError, match="recall guarantee"):
-        simhash_near_dupes(df, "id", "text", max_hamming=3, num_blocks=4, combo_size=2)
 
 
 def test_lsh_banding_param_validation(spark):
@@ -159,8 +150,7 @@ def test_simhash_cross_cluster_expansion_capped_by_reps(spark):
     rows = [(i, t1) for i in range(15)] + [(100 + i, t2) for i in range(15)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     out = simhash_near_dupes(
-        docs, "doc_id", "text", max_hamming=12, combo_size=2,
-        exact_pair_cap=10,
+        docs, "doc_id", "text", max_hamming=12, exact_pair_cap=10,
     ).collect()
     cross = [(r["id_a"], r["id_b"]) for r in out if r["hamming"] > 0]
     # reps are min ids: 0 and 100 — at most rep-level cross pairs
@@ -187,16 +177,13 @@ def test_auto_combo_size_ladder():
     assert _auto_combo_size(1_000_000_000, 8, 1000) == 5
 
 
-def test_simhash_crowding_raises_loudly_then_auto_scales(spark):
+def test_simhash_crowding_auto_scales(spark):
     """The round-3 scale-recall cliff, reproduced at 50K DISTINCT
     fingerprints: 2-block keys at max_hamming=8 are ~13 bits (~7K buckets),
     so a tight max_bucket would have silently dropped most banding entries
-    and degraded recall to the hamming-0 tier. The operator must instead
-    (a) RAISE loudly when combo_size is forced too narrow, and (b) widen
-    the keys itself under auto combo_size so planted near-pairs surface."""
+    and degraded recall to the hamming-0 tier. The operator must widen
+    the keys itself so planted near-pairs surface."""
     import random
-
-    import pytest
 
     from datawarehousefinal_spark.operators.dedup import (
         simhash_near_dupes_from_fingerprints,
@@ -215,14 +202,7 @@ def test_simhash_crowding_raises_loudly_then_auto_scales(spark):
         planted.append((src_id, n + k))
     fp_df = spark.createDataFrame(fps, ["doc_id", "simhash"]).persist()
 
-    # (a) forced-narrow keys: ~7 distinct fps per bucket on average, so a
-    # max_bucket of 5 drops the vast majority of entries -> loud error.
-    with pytest.raises(RuntimeError, match="skew guard"):
-        simhash_near_dupes_from_fingerprints(
-            fp_df, "doc_id", max_hamming=8, max_bucket=5, combo_size=2
-        ).collect()
-
-    # (b) auto combo_size widens to 3-block keys (~17.5 bits) for this
+    # auto combo_size widens to 3-block keys (~17.5 bits) for this
     # population and the planted hamming-3 pairs all surface.
     out = simhash_near_dupes_from_fingerprints(
         fp_df, "doc_id", max_hamming=8, max_bucket=5
@@ -233,24 +213,10 @@ def test_simhash_crowding_raises_loudly_then_auto_scales(spark):
     fp_df.unpersist()
 
 
-def test_ngram_coverage_shapes_agree(spark, sf_dir):
-    """window and join formulations must produce identical reports (the
-    join shape exists for boilerplate-gram skew; semantics are one)."""
-    from datawarehousefinal_spark.operators.dedup import ngram_coverage
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    a = sorted(map(tuple, ngram_coverage(docs, "doc_id", "text", via="window").collect()))
-    b = sorted(map(tuple, ngram_coverage(docs, "doc_id", "text", via="join").collect()))
-    assert a == b and len(a) > 0
-    # planted near-dups must surface with high coverage
-    top = max(r[3] for r in a)
-    assert top >= 0.9
-
-
 def test_ngram_coverage_auto_shape_switch(spark, sf_dir):
-    """via='auto' probes max gram doc-frequency and flips to the join
-    shape (AQE-splittable) when a gram is hot enough to serialize one
-    window task — and the chosen shape shows in the physical plan."""
+    """The probe of max gram doc-frequency flips to the join shape
+    (AQE-splittable) when a gram is hot enough to serialize one window
+    task — and the chosen shape shows in the physical plan."""
     from datawarehousefinal_spark.operators.dedup import ngram_coverage
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -260,19 +226,20 @@ def test_ngram_coverage_auto_shape_switch(spark, sf_dir):
 
     # Uniform corpus, generous threshold: auto keeps the window shape.
     win = ngram_coverage(
-        docs, "doc_id", "text", via="auto",
-        hot_gram_df=10**9, probe_fraction=1.0,
+        docs, "doc_id", "text", hot_gram_df=10**9, probe_fraction=1.0
     )
     assert "Window" in plan(win)
     # Same corpus, threshold of 1: every shared gram counts as hot —
     # auto must pick the join shape (no Window operator in the plan).
     join = ngram_coverage(
-        docs, "doc_id", "text", via="auto",
-        hot_gram_df=1, probe_fraction=1.0,
+        docs, "doc_id", "text", hot_gram_df=1, probe_fraction=1.0
     )
     assert "Window" not in plan(join)
-    # and the two auto outcomes agree value-for-value
-    assert sorted(map(tuple, win.collect())) == sorted(map(tuple, join.collect()))
+    # and the two shapes agree value-for-value
+    a = sorted(map(tuple, win.collect()))
+    assert a == sorted(map(tuple, join.collect())) and len(a) > 0
+    # planted near-dups must surface with high coverage
+    assert max(r[3] for r in a) >= 0.9
 
 
 # ---------------------------------------------------------------------------

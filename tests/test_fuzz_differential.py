@@ -82,7 +82,7 @@ def test_scalar_surface_agrees_with_duckdb_on_hostile_strings(spark):
             count_ipv4("s").alias("ni"),
             scrub_pii("s").alias("masked"),
             whitespace_tokens("s").alias("toks"),
-            word_ngrams("s", n=3, hash_grams=False).alias("grams"),
+            word_ngrams("s", n=3).alias("grams"),
         ).collect()
     }
 

@@ -81,13 +81,10 @@ def test_resolve_duplicates_keeps_one_per_cluster(spark):
     pairs = spark.createDataFrame(
         [(1, 4), (4, 7), (2, 5)], ["id_a", "id_b"]  # {1,4,7} and {2,5}
     )
-    with resolve_duplicates(
-        docs, pairs, "doc_id", component_col="cluster"
-    ) as out:
-        rows = {r["doc_id"]: r["cluster"] for r in out.collect()}
+    with resolve_duplicates(docs, pairs, "doc_id") as out:
+        rows = {r["doc_id"]: r["text"] for r in out.collect()}
     assert sorted(rows) == [0, 1, 2, 3, 6, 8, 9]  # 4,7,5 dropped
-    assert rows[1] == 1 and rows[2] == 2          # reps keep their cluster id
-    assert rows[0] == 0 and rows[9] == 9          # singletons untouched
+    assert rows[0] == "doc 0" and rows[9] == "doc 9"  # singletons untouched
 
 
 def test_stars_matches_propagation_on_random_graph(spark):

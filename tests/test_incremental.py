@@ -170,10 +170,13 @@ def test_incremental_simhash_contract(spark, sf_dir):
     H = 8  # matches the registered simhash query's threshold
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     corpus, batch = _split_halves(docs)
-    from datawarehousefinal_spark.operators.incremental import empty_simhash_store
+    from pyspark.sql.types import LongType, StructField, StructType
 
+    empty = spark.createDataFrame(
+        [], StructType([corpus.schema["doc_id"], StructField("simhash", LongType())])
+    )
     with incremental_simhash_dedup(
-        corpus, empty_simhash_store(corpus, "doc_id"), "doc_id", "text",
+        corpus, empty, "doc_id", "text",
         max_hamming=H, shingle_width=W,
     ) as (_, store), incremental_simhash_dedup(
         batch, store, "doc_id", "text", max_hamming=H, shingle_width=W,

@@ -112,35 +112,16 @@ def test_simhash_dropped_ids_matches_pair_derivation(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     fp = simhash(docs, "doc_id", "text", 5).persist()
     try:
+        # the pair path auto-sizes combo_size to 2 at this size
         pairs = simhash_near_dupes_from_fingerprints(
-            fp, "doc_id", max_hamming=8, combo_size=2,
-            exact_pair_cap=10**6, max_dropped_frac=None,
+            fp, "doc_id", max_hamming=8, exact_pair_cap=10**6
         )
         expected = {r["id_b"] for r in pairs.select("id_b").distinct().collect()}
         got = {
             r["doc_id"]
-            for r in simhash_dropped_ids(
-                fp, "doc_id", max_hamming=8, combo_size=2, max_dropped_frac=None
-            ).collect()
+            for r in simhash_dropped_ids(fp, "doc_id", 2, max_hamming=8).collect()
         }
         assert expected, "fixture should contain planted near-dups"
         assert got == expected
     finally:
         fp.unpersist()
-
-
-def test_simhash_dropped_ids_loud_drop_guard(spark):
-    """max_dropped_frac wiring is shared with the pair path: force a
-    narrow key space (combo over 64 one-bit... not expressible — instead
-    force max_bucket=0 so EVERY bucket is over-full) and expect the loud
-    RuntimeError rather than a silent empty result."""
-    import pytest
-
-    rows = [(i, f"document number {i} with shared boilerplate text") for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fp = simhash(df, "doc_id", "text", 5)
-    with pytest.raises(RuntimeError, match="skew guard"):
-        simhash_dropped_ids(
-            fp, "doc_id", max_hamming=3, combo_size=2,
-            max_bucket=0, max_dropped_frac=0.05,
-        ).collect()

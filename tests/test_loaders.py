@@ -147,36 +147,6 @@ def test_events_micros_match_duckdb(spark, oracle_sf_dir):
     assert spark_rows == duck_rows
 
 
-def test_write_parquet_clustered_layout(spark, sf_dir, tmp_path):
-    """One file per partition dir, rows sorted by the cluster column
-    inside each file (tight row-group min/max stats)."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from datawarehousefinal_spark.sources.writers import write_parquet_clustered
-
-    events = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "clustered")
-    write_parquet_clustered(
-        events, out, partition_by=["event_type"], cluster_by=["ts"]
-    )
-    part_dirs = glob.glob(f"{out}/event_type=*")
-    n_types = events.select("event_type").distinct().count()
-    assert len(part_dirs) == n_types
-    # Range partitioning bounds total files by the shuffle partition count
-    # (each directory only receives files from its contiguous task range)
-    # instead of tasks x partitions.
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    all_files = glob.glob(f"{out}/event_type=*/*.parquet")
-    assert 0 < len(all_files) <= n_shuffle + n_types
-    for f in all_files:
-        ts = [r["ts"] for r in spark.read.parquet(f).select("ts").collect()]
-        assert ts == sorted(ts)  # tight row-group min/max stats
-    # nothing lost in the rewrite
-    assert spark.read.parquet(out).count() == events.count()
-
-
 def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
     import glob
 
@@ -189,32 +159,6 @@ def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
 
     out = compact_parquet(spark, frag, target_partitions=2)
     assert len(glob.glob(f"{out}/*.parquet")) == 2
-    assert spark.read.parquet(out).count() == events.count()
-
-
-def test_compact_parquet_preserves_partition_layout(spark, sf_dir, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from datawarehousefinal_spark.sources.writers import compact_parquet
-
-    events = load_table(spark, sf_dir, "events")
-    frag = str(tmp_path / "frag_part")
-    # fragmented partitioned dataset: several appends, one file each per dir
-    for i in range(4):
-        events.filter(F.pmod("event_id", F.lit(4)) == i).coalesce(1).write.mode(
-            "append"
-        ).partitionBy("event_type").parquet(frag)
-    n_types = events.select("event_type").distinct().count()
-    assert len(glob.glob(f"{frag}/event_type=*/*.parquet")) == 4 * n_types
-
-    out = compact_parquet(
-        spark, frag, target_partitions=n_types, partition_by=["event_type"]
-    )
-    # same col=value directory layout, fewer files, nothing lost
-    assert len(glob.glob(f"{out}/event_type=*")) == n_types
-    assert len(glob.glob(f"{out}/event_type=*/*.parquet")) < 4 * n_types
     assert spark.read.parquet(out).count() == events.count()
 
 

@@ -11,19 +11,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.ml.pipelines import (
-    classification_metrics,
     classifier_zoo,
     confusion_matrix_df,
     default_param_grids,
-    drop_ml_id_columns,
     fit_kmeans,
     fit_preprocess,
     grid_search_cv,
     impute_most_frequent,
-    kmeans_scan,
     linear_trend_forecast,
-    pca_project_2d,
-    per_class_auc,
     regression_forecast,
     split_feature_types,
 )
@@ -58,14 +53,6 @@ def test_split_feature_types(blobs):
     assert categorical == ["color"]
 
 
-def test_drop_ml_id_columns(spark):
-    df = spark.createDataFrame(
-        [(1, 2, "f", "2018/6/27", 3.0)],
-        ["id_persona", "id_fecha", "source_fact", "dim_fecha_fecha_completa", "x"],
-    )
-    assert drop_ml_id_columns(df).columns == ["x"]
-
-
 def test_impute_most_frequent(spark):
     df = spark.createDataFrame(
         [("a",), ("a",), ("b",), (None,), (None,)], ["c"]
@@ -94,18 +81,6 @@ def test_onehot_unknown_is_all_zeros(spark, blobs):
         assert all(vec[i] == 0.0 for i in (2, 3, 4))
 
 
-def test_kmeans_scan_structupe(blobs):
-    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
-        scan = kmeans_scan(feats, k_values=range(2, 5))
-        assert [s["k"] for s in scan] == [2, 3, 4]
-        for s in scan:
-            assert -1.0 <= s["silhouette"] <= 1.0
-            assert s["inertia"] >= 0.0
-        # three planted blobs → k=3 silhouette beats k=2
-        by_k = {s["k"]: s["silhouette"] for s in scan}
-        assert by_k[3] > by_k[2]
-
-
 def test_fit_kmeans_clusters_nonempty(blobs):
     with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
         _km, pred = fit_kmeans(feats, k=3)
@@ -122,25 +97,15 @@ def test_fit_kmeans_clusters_nonempty(blobs):
         assert purity >= 0.95 * pred.count()
 
 
-def test_pca_projection(blobs):
-    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
-        out = pca_project_2d(feats)
-        row = out.select("PC1", "PC2").first()
-        assert math.isfinite(row["PC1"]) and math.isfinite(row["PC2"])
-        assert out.count() == blobs.count()
-
-
 def test_classifier_zoo_trains_and_separates(blobs):
     with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
         weighted = attach_class_weights(feats, "label")
-        zoo = classifier_zoo(weight_col="weight", mlp_layers=[5, 16, 3])
-        assert set(zoo) == {
-            "RandomForest", "LogisticRegression", "SVM", "DeepLearning_MLP"
-        }
+        zoo = classifier_zoo(weight_col="weight")
+        assert set(zoo) == {"RandomForest", "LogisticRegression", "SVM"}
         for name, est in zoo.items():
             fitted = est.fit(weighted)
             pred = fitted.transform(weighted)
-            acc = classification_metrics(pred)["accuracy"]
+            acc = pred.filter(F.col("label") == F.col("prediction")).count() / pred.count()
             assert acc >= 0.9, (name, acc)  # blobs are trivially separable
 
 
@@ -162,23 +127,10 @@ def test_metrics_identities(spark):
         [(0.0, 0.0), (0.0, 0.0), (1.0, 1.0), (1.0, 0.0), (2.0, 2.0)],
         ["label", "prediction"],
     )
-    m = classification_metrics(pred)
-    assert m["accuracy"] == pytest.approx(4 / 5)
     cm = confusion_matrix_df(pred)
     assert cm.agg(F.sum("n")).first()[0] == 5
     diag = cm.filter(F.col("label") == F.col("prediction")).agg(F.sum("n")).first()[0]
     assert diag == 4
-
-
-def test_per_class_auc(blobs):
-    with fit_preprocess(blobs, exclude=("id", "label")) as (_model, feats):
-        zoo = classifier_zoo(weight_col=None)
-        pred = zoo["LogisticRegression"].fit(feats).transform(feats)
-        aucs = per_class_auc(pred, "label")
-        assert set(aucs) == {0, 1, 2}
-        for c, auc in aucs.items():
-            assert 0.0 <= auc <= 1.0
-            assert auc >= 0.99  # separable blobs → near-perfect ROC
 
 
 def test_regression_forecast_structupe(spark):

@@ -1,21 +1,16 @@
-"""Multimodal operator tests: the raw format's decode/resize/frame-sample
-are REAL (numpy) and verified on handcrafted pixels; the compressed-decode
-stub must fail loudly; batch shape and partitioning must be preserved."""
+"""Multimodal operator tests: the raw format's byte stats, frame sampling
+and perceptual hash are REAL (numpy) and verified on handcrafted pixels;
+batch shape and partitioning must be preserved."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     byte_stats,
-    channel_features,
-    decode_compressed,
-    decode_raw,
     media_from_documents,
-    resize_nearest,
     sample_frames,
 )
 from datawarehousefinal_spark.sources.testdata import load_table
@@ -41,22 +36,6 @@ def images(spark):
     return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(5)
 
 
-def test_decode_raw_roundtrip():
-    arr = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
-    assert np.array_equal(decode_raw(arr.tobytes(), 2, 4, 3), arr)
-
-
-def test_decode_compressed_is_loud_stub():
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL available here; stub path not reachable")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError, match="stub"):
-        decode_compressed(b"\xff\xd8\xff")
-
-
 def test_byte_stats_matches_numpy(images):
     out = {r["media_id"]: r for r in byte_stats(images).collect()}
     assert len(out) == 20  # row count preserved across 5 partitions
@@ -66,27 +45,6 @@ def test_byte_stats_matches_numpy(images):
         assert out[mid]["n_bytes"] == a.size
         assert out[mid]["mean_byte"] == pytest.approx(float(a.mean()))
         assert out[mid]["std_byte"] == pytest.approx(float(a.std()))
-
-
-def test_channel_features_shape(images):
-    rows = channel_features(images).collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert len(r["channel_means"]) == 3
-        assert len(r["channel_stds"]) == 3
-        assert all(0.0 <= m <= 255.0 for m in r["channel_means"])
-
-
-def test_resize_nearest_known_pixels(spark):
-    # 4x4 single-channel image with distinct quadrant values
-    arr = np.array(
-        [[1, 1, 2, 2], [1, 1, 2, 2], [3, 3, 4, 4], [3, 3, 4, 4]], dtype=np.uint8
-    ).reshape(4, 4, 1)
-    df = spark.createDataFrame([_image_row(7, arr)], MEDIA_SCHEMA)
-    out = resize_nearest(df, 2, 2).collect()[0]
-    resized = np.frombuffer(bytes(out["payload"]), dtype=np.uint8).reshape(2, 2)
-    assert np.array_equal(resized, np.array([[1, 2], [3, 4]]))
-    assert (out["height"], out["width"], out["channels"]) == (2, 2, 1)
 
 
 def test_sample_frames(spark):
@@ -137,7 +95,6 @@ def test_byte_stats_empty_payload_yields_nulls(spark):
 
 def test_media_width_is_byte_count_for_non_ascii(spark):
     from datawarehousefinal_spark.operators.multimodal import (
-        channel_features,
         media_from_documents,
     )
 
@@ -147,73 +104,6 @@ def test_media_width_is_byte_count_for_non_ascii(spark):
     payloads = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
     for mid in (1, 2):
         assert metas[mid]["width"] == len(payloads[mid])  # bytes, not chars
-    # decode path must not crash on the multi-byte payloads
-    assert channel_features(media).count() == 2
-
-
-def _tiny_png(arr):
-    """Minimal pure-Python PNG writer (8-bit RGB, no filters) so the
-    compressed-decode path has a fixture without needing an encoder lib."""
-    import struct
-    import zlib
-
-    h, w, _ = arr.shape
-
-    def chunk(tag, data):
-        c = tag + data
-        return struct.pack(">I", len(data)) + c + struct.pack(">I", zlib.crc32(c))
-
-    raw = b"".join(b"\x00" + arr[r].tobytes() for r in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_decode_compressed_png_roundtrip_with_pil():
-    """Real codec round-trip — runs wherever Pillow is installed, skips
-    loudly (not silently-green) where it isn't."""
-    pytest.importorskip("PIL")
-    arr = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    assert np.array_equal(decode_compressed(_tiny_png(arr)), arr)
-
-
-def test_channel_features_codec_dispatch(spark):
-    """The codec_col plumbing: raw rows decode regardless of PIL; a
-    compressed row either decodes (PIL present) or fails LOUDLY with the
-    stub's message — never silently wrong."""
-    arr = np.full((2, 3, 3), 7, dtype=np.uint8)
-    rows = [
-        (1, arr.tobytes(), "raw", 2, 3, 3),
-        (2, _tiny_png(arr), "png", 2, 3, 3),
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id long, payload binary, codec string, h int, w int, c int"
-    ).select(
-        "media_id",
-        "payload",
-        "codec",
-        F.struct(
-            F.col("w").alias("width"),
-            F.col("h").alias("height"),
-            F.col("c").alias("channels"),
-            F.lit(1).alias("n_frames"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ).alias("meta"),
-    )
-    raw_only = channel_features(df.filter("codec = 'raw'"), codec_col="codec")
-    assert raw_only.collect()[0]["channel_means"] == [7.0, 7.0, 7.0]
-    both = channel_features(df, codec_col="codec")
-    try:
-        import PIL  # noqa: F401
-
-        got = {r["media_id"]: r["channel_means"] for r in both.collect()}
-        assert got[2] == [7.0, 7.0, 7.0]
-    except ImportError:
-        with pytest.raises(Exception, match="decode_compressed is a stub"):
-            both.collect()
 
 
 def test_sniff_image_dims_four_formats_and_garbage():

@@ -1,5 +1,5 @@
 """Sequence-packing tests: distributed prefix sum vs the single-window
-truth, sequential-fill chunk invariants, and strict-budget greedy packing."""
+truth and sequential-fill chunk invariants."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from datawarehousefinal_spark.operators.packing import (
     budgeted_chunks,
     chunk_stats,
     distributed_cumsum,
-    greedy_pack,
 )
 
 
@@ -109,32 +108,3 @@ def test_range_bucket_plan_collapses_for_tiny_frames(spark):
         ).collect()
     }
     assert {r["id"]: r["cum"] for r in out.collect()} == truth
-
-
-def test_greedy_pack_strict_budget_and_determinism(spark):
-    rng = random.Random(5)
-    rows = [(i % 4, i, rng.randint(50, 900)) for i in range(800)]
-    rows.append((0, 9001, 5000))  # oversized doc -> singleton pack
-    df = spark.createDataFrame(rows, ["shard", "id", "toks"])
-    out = greedy_pack(df, "id", "toks", budget=2048, shard_col="shard")
-    rows_out = out.collect()
-    assert len(rows_out) == len(rows)
-    loads: dict[tuple, int] = {}
-    members: dict[tuple, list] = {}
-    for r in rows_out:
-        key = (r["shard"], r["pack_id"])
-        loads[key] = loads.get(key, 0) + r["toks"]
-        members.setdefault(key, []).append(r["id"])
-    for key, load in loads.items():
-        if load > 2048:  # only the oversized singleton may exceed
-            assert members[key] == [9001], (key, members[key])
-    # deterministic across runs and input partitioning
-    again = greedy_pack(
-        df.repartition(11), "id", "toks", budget=2048, shard_col="shard"
-    )
-    a = sorted((r["shard"], r["id"], r["pack_id"]) for r in rows_out)
-    b = sorted((r["shard"], r["id"], r["pack_id"]) for r in again.collect())
-    assert a == b
-    # fill quality: average non-singleton pack is reasonably full (BFD)
-    normal = [l for k, l in loads.items() if members[k] != [9001]]
-    assert sum(normal) / len(normal) >= 0.7 * 2048

@@ -5,7 +5,6 @@ from __future__ import annotations
 from datawarehousefinal_spark.functions.pii import (
     count_emails,
     count_ipv4,
-    scrub_phones,
     scrub_pii,
 )
 
@@ -34,12 +33,3 @@ def test_scrub_pii_masks_emails_and_ips(spark):
     assert "1.2" in rows[2]["m"]  # short dotted numbers are not IPs
     assert (rows[3]["ne"], rows[3]["ni"]) == (2, 1)
     assert rows[3]["m"] == "two mails <EMAIL> <EMAIL> and ip <IP>"
-
-
-def test_scrub_phones_after_pii(spark):
-    df = spark.createDataFrame(
-        [(1, "call +1 (555) 123-4567 or write a@b.com from 10.1.1.1")], ["i", "t"]
-    )
-    masked = df.select(scrub_phones(scrub_pii("t")).alias("m")).first()["m"]
-    assert "<EMAIL>" in masked and "<IP>" in masked and "<PHONE>" in masked
-    assert "555" not in masked

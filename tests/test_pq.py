@@ -125,53 +125,6 @@ def test_rerank_plan_no_cartesian(emb, books):
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
 
 
-def test_ivf_pq_recall_on_clustered_corpus(spark):
-    """The composed web-scale layout (coarse-cell prune + ADC + exact
-    re-rank) on clustered geometry — IVF's design point (the parquet
-    fixture is near-random, which says nothing about cell pruning)."""
-    from tests.test_similarity import _clustered_vectors
-
-    from datawarehousefinal_spark.operators.pq import ivf_pq_topk
-    from datawarehousefinal_spark.operators.similarity import build_ivf_index
-
-    corpus = _clustered_vectors(spark)  # 8 clusters x 40, dim 16
-    books = train_pq_codebooks(
-        corpus, "embedding", m=4, codes=32, sample_rows=320
-    )
-    assigned, centroids = build_ivf_index(corpus, "vec_id", "embedding", 8)
-    queries = corpus.filter(F.col("vec_id") % 40 == 0)  # one per cluster
-    res = ivf_pq_topk(
-        assigned, centroids, queries, "vec_id", "embedding", books,
-        k=5, nprobe=2, rerank=30,
-    ).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-
-    rows = corpus.select("vec_id", as_double_array("embedding").alias("v")).collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    X = np.stack([np.array(r["v"]) for r in rows])
-    hits = total = 0
-    for q in sorted(by_q):
-        exact = _exact_topk(ids, X, q, 5)
-        hits += len(exact & by_q[q])
-        total += 5
-    assert total == 8 * 5
-    assert hits / total >= 0.9, (hits, total)
-
-
-def test_pq_encode_extra_cols_passthrough(spark, emb, books):
-    from datawarehousefinal_spark.operators.similarity import build_ivf_index
-
-    assigned, _ = build_ivf_index(emb, "vec_id", "embedding", 4)
-    enc = pq_encode(
-        assigned, "vec_id", "embedding", books, extra_cols=("__centroid",)
-    )
-    rows = enc.limit(10).collect()
-    assert all(r["__centroid"] is not None for r in rows)
-    assert all(len(r["codes"]) == 8 for r in rows)
-
-
 def test_pq_recon_error_exact_fixture(spark):
     from datawarehousefinal_spark.operators.pq import pq_recon_error
 

@@ -1,5 +1,5 @@
 """Bucketized range join: parity with the naive BETWEEN join, plan shape,
-left semantics."""
+the wide-interval guard."""
 
 from __future__ import annotations
 
@@ -43,16 +43,6 @@ def test_plan_is_hash_join_not_nested_loop(spark, pts_bands):
     assert_no_cartesian(out)
 
 
-def test_left_keeps_uncontained_points(spark, pts_bands):
-    pts, bands = pts_bands
-    narrow = bands.filter(F.col("band_id") < 2)  # covers p < 125 only
-    out = bucketize_range_join(pts, narrow, "p", "lo", "hi", 50.0, how="left")
-    matched_pids = {r["pid"] for r in out.filter(F.col("band_id").isNotNull()).collect()}
-    all_pids = {r["pid"] for r in out.collect()}
-    assert all_pids == {r["pid"] for r in pts.collect()}
-    assert out.filter(F.col("band_id").isNull()).count() == len(all_pids - matched_pids)
-
-
 def test_collision_raises(spark, pts_bands):
     pts, bands = pts_bands
     with pytest.raises(ValueError, match="collide"):
@@ -72,36 +62,3 @@ def test_degenerate_interval_error_by_default(spark, pts_bands):
         bucketize_range_join(
             pts, wide, "p", "lo", "hi", 50.0, max_buckets_per_interval=100
         )
-    # drop strategy: the offender is excluded, the rest still match
-    dropped = bucketize_range_join(
-        pts, wide, "p", "lo", "hi", 50.0,
-        max_buckets_per_interval=100, wide_strategy="drop",
-    )
-    assert dropped.filter(F.col("band_id") == 99).count() == 0
-    assert dropped.count() > 0
-    # broadcast strategy: exact results, wide interval matches every point
-    bc = bucketize_range_join(
-        pts, wide, "p", "lo", "hi", 50.0,
-        max_buckets_per_interval=100, wide_strategy="broadcast",
-    )
-    assert bc.filter(F.col("band_id") == 99).count() == pts.count()
-    naive = pts.join(
-        wide, (F.col("p") >= F.col("lo")) & (F.col("p") <= F.col("hi"))
-    ).count()
-    assert bc.count() == naive
-
-
-def test_left_null_safe_with_null_point_attrs(spark):
-    """Matched rows with NULL attribute columns must not duplicate into the
-    NULL-padded unmatched branch (the anti-join is row-id based)."""
-    pts = spark.createDataFrame(
-        [(1, 10.0, None), (2, 10.0, "t"), (3, 9999.0, None)],
-        ["pid", "p", "tag"],
-    )
-    bands = spark.createDataFrame([(0, 0.0, 100.0)], ["band_id", "lo", "hi"])
-    out = bucketize_range_join(
-        pts, bands, "p", "lo", "hi", 50.0, how="left"
-    ).collect()
-    assert len(out) == 3
-    by_pid = {r["pid"]: r["band_id"] for r in out}
-    assert by_pid == {1: 0, 2: 0, 3: None}

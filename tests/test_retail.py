@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from datawarehousefinal_spark.operators.graph import pagerank, triangle_count
 from datawarehousefinal_spark.operators.retail import (
     basket_lift,
-    basket_pairs,
     decile_lift,
     deterministic_ntile,
     rfm_scores,
@@ -35,15 +34,14 @@ def test_basket_lift_exact_values(spark):
     assert ab["confidence_ab"] == pytest.approx(2 / 3)
     ac = out[("a", "c")]
     assert ac["n_ab"] == 1 and ac["lift"] == pytest.approx(4 * 1 / (3 * 1))
-
-
-def test_basket_pairs_max_basket_guard(spark):
-    rows = [(1, f"i{k}") for k in range(10)] + [(2, "x"), (2, "y")]
-    df = spark.createDataFrame(rows, ["basket", "item"])
-    pairs = basket_pairs(df, "basket", "item", max_basket=5).collect()
-    # basket 1 (10 items) dropped entirely; basket 2 contributes 1 pair
-    assert len(pairs) == 1
-    assert pairs[0]["basket"] == 2
+    # a basket over max_basket distinct items leaves the WHOLE analysis:
+    # no pairs of its own, and no change to n or the item counts
+    big = df.unionByName(
+        spark.createDataFrame([(5, f"i{k}") for k in range(10)], ["basket", "item"])
+    )
+    with basket_lift(big, "basket", "item", min_support=1, max_basket=5) as lift:
+        capped = {(r["item_a"], r["item_b"]): r["lift"] for r in lift.collect()}
+    assert capped == {k: r["lift"] for k, r in out.items()}
 
 
 def test_deterministic_ntile_sizes_and_stability(spark):

@@ -7,7 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from datawarehousefinal_spark.operators.scd import scd2_from_history, scd2_lookup
+from datawarehousefinal_spark.operators.scd import scd2_from_history
 
 
 def _ts(d):
@@ -49,28 +49,6 @@ def test_one_current_version_per_key(spark, history):
     scd = scd2_from_history(history, ["uid"], ["attr"], "ts")
     cur = scd.filter(F.col("is_current")).groupBy("uid").count().collect()
     assert all(r["count"] == 1 for r in cur)
-
-
-def test_point_in_time_lookup(spark, history):
-    scd = scd2_from_history(history, ["uid"], ["attr"], "ts")
-    facts = spark.createDataFrame(
-        [(1, _ts(2)), (1, _ts(3)), (1, _ts(4)), (1, _ts(6)),
-         (2, _ts(5)), (3, _ts(1)), (9, _ts(1))],
-        ["uid", "fact_ts"],
-    )
-    out = {
-        (r["uid"], r["fact_ts"]): r["attr"]
-        for r in scd2_lookup(facts, scd, ["uid"], "fact_ts").collect()
-    }
-    assert out == {
-        (1, _ts(2)): "a",   # inside first 'a' version
-        (1, _ts(3)): "b",   # boundary: new version starts at its ts
-        (1, _ts(4)): "b",
-        (1, _ts(6)): "a",   # current version
-        (2, _ts(5)): "x",
-        (3, _ts(1)): None,  # NULL attribute version
-        (9, _ts(1)): None,  # unknown key
-    }
 
 
 def test_apply_changes_upsert_delete_latest_wins(spark):

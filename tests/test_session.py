@@ -65,10 +65,3 @@ def test_scoped_shuffle_partitions_restores_on_raise(spark):
             assert spark.conf.get(_KEY) == "3"
             raise RuntimeError("inside")
     assert spark.conf.get(_KEY) == prev
-
-
-def test_scoped_shuffle_partitions_none_changes_nothing(spark):
-    prev = spark.conf.get(_KEY)
-    with scoped_shuffle_partitions(spark, None):
-        assert spark.conf.get(_KEY) == prev
-    assert spark.conf.get(_KEY) == prev

@@ -374,10 +374,7 @@ def test_embedding_centroids_ignore_null_vectors(spark):
 
 
 def test_semantic_dedup_keep_rule_and_injected_pairs(spark):
-    from datawarehousefinal_spark.operators.similarity import (
-        embedding_pairs_exact,
-        semantic_dedup_keep,
-    )
+    from datawarehousefinal_spark.operators.similarity import semantic_dedup_keep
 
     rows = [
         (1, [1.0, 0.0]),
@@ -392,15 +389,6 @@ def test_semantic_dedup_keep_rule_and_injected_pairs(spark):
         for r in semantic_dedup_keep(df, "vec_id", "embedding", 0.999).collect()
     )
     assert kept == [1, 3, 5]
-    # scale path: identical keep logic over an injected pair list
-    pairs = embedding_pairs_exact(df, "vec_id", "embedding", 0.999)
-    kept2 = sorted(
-        r["vec_id"]
-        for r in semantic_dedup_keep(
-            df, "vec_id", "embedding", 0.999, pairs=pairs
-        ).collect()
-    )
-    assert kept2 == kept
 
 
 def test_prototypicality_prune_drops_most_prototypical(spark):

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.operators.skew import (
-    salted_aggregate,
     salted_join,
     two_stage_distinct_count,
 )
@@ -42,34 +41,6 @@ def test_salted_join_equals_plain_join(spark, skewed, lookup):
     assert sorted(map(tuple, plain.collect())) == sorted(
         map(tuple, salted.collect())
     )
-
-
-def test_salted_join_left_keeps_unmatched(spark, skewed, lookup):
-    partial_lookup = lookup.filter(F.col("k") != "HOT")
-    out = salted_join(skewed, partial_lookup, ["k"], num_salts=4, how="left")
-    assert out.count() == skewed.count()
-    assert out.filter(F.col("grp").isNull()).count() == skewed.filter(
-        F.col("k") == "HOT"
-    ).count()
-
-
-def test_salted_join_rejects_unsupported_how(skewed, lookup):
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_join(skewed, lookup, ["k"], how="full")
-
-
-def test_salted_aggregate_equals_plain(spark, skewed):
-    plain = {
-        (r["k"], r["n"], r["s"])
-        for r in skewed.groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
-        .collect()
-    }
-    salted = {
-        (r["k"], r["n"], r["sum_v"])
-        for r in salted_aggregate(skewed, ["k"], sum_cols=["v"]).collect()
-    }
-    assert salted == plain
 
 
 def test_two_stage_distinct_count_equals_count_distinct(spark, skewed):

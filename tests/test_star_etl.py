@@ -1,7 +1,7 @@
 """Golden end-to-end star ETL test (SURVEY.md §5.2-5.3): synthesize the
 reference's 25-column ESI shape (FIXTURES.md §1), run the full
-union → clean → build_star → filter_split → denormalize pipeline, and
-assert the warehouse invariants the reference never tested:
+union → clean → dimension build + FK attach → filter_split → denormalize
+pipeline, and assert the warehouse invariants the reference never tested:
 
 - dimension cardinalities == distinct natural-key combos
 - surrogate keys dense and unique
@@ -22,11 +22,10 @@ from datawarehousefinal_spark.functions.cleaning import (
 from datawarehousefinal_spark.functions.dates import concat_date_nonpadded
 from datawarehousefinal_spark.functions.textnorm import normalize_text
 from datawarehousefinal_spark.operators.dataset import denormalize, union_with_provenance
-from datawarehousefinal_spark.operators.star import (
-    DimensionSpec,
-    build_star,
-    filter_split,
-    union_sources,
+from datawarehousefinal_spark.operators.star import filter_split, union_sources
+from datawarehousefinal_spark.operators.surrogate import (
+    attach_surrogate_key,
+    build_dimension,
 )
 
 MONTHS = ["enero", "febrero", "marzo", "abril", "mayo", "junio"]
@@ -70,16 +69,13 @@ def _yearly_source(spark, year: int, n: int):
     )
 
 
+# (dimension name, natural keys, surrogate-key column)
 DIM_SPECS = [
-    DimensionSpec("dim_persona", ["sex_migr", "nac_migr"], "id_persona"),
-    DimensionSpec("dim_transporte", ["via_tran"], "id_transporte"),
-    DimensionSpec("dim_frontera", ["jef_migr", "pro_jefm", "can_jefm"], "id_frontera"),
-    DimensionSpec("dim_ocupacion", ["ocu_class", "ocu_migr"], "id_ocupacion"),
-    DimensionSpec(
-        "dim_fecha",
-        ["anio_movi", "mes_movi", "dia_movi", "fecha_completa"],
-        "id_fecha",
-    ),
+    ("dim_persona", ["sex_migr", "nac_migr"], "id_persona"),
+    ("dim_transporte", ["via_tran"], "id_transporte"),
+    ("dim_frontera", ["jef_migr", "pro_jefm", "can_jefm"], "id_frontera"),
+    ("dim_ocupacion", ["ocu_class", "ocu_migr"], "id_ocupacion"),
+    ("dim_fecha", ["anio_movi", "mes_movi", "dia_movi", "fecha_completa"], "id_fecha"),
 ]
 
 
@@ -100,41 +96,43 @@ def star(spark):
         )
     ).cache()
 
-    schema = build_star(cleaned, DIM_SPECS, measures=["edad", "tip_movi"])
-    entrada, salida = filter_split(
-        schema.fact, F.col("tip_movi") == "entrada"
-    )
+    dims, fact = {}, cleaned
+    for name, keys, id_col in DIM_SPECS:
+        dims[name] = build_dimension(cleaned, keys, id_col)
+        fact = attach_surrogate_key(fact, dims[name], keys, id_col)
+    fact = fact.select(*[s[2] for s in DIM_SPECS], "edad", "tip_movi")
+    entrada, salida = filter_split(fact, F.col("tip_movi") == "entrada")
     return {
         "raw": raw,
         "cleaned": cleaned,
-        "schema": schema,
+        "dims": dims,
         "fact_inmigrante": entrada.drop("tip_movi"),
         "fact_emigrante": salida.drop("tip_movi"),
     }
 
 
 def test_dim_cardinalities(star):
-    cleaned, dims = star["cleaned"], star["schema"].dims
-    for spec in DIM_SPECS:
-        expected = cleaned.select(*spec.natural_keys).distinct().count()
-        assert dims[spec.name].count() == expected, spec.name
+    cleaned, dims = star["cleaned"], star["dims"]
+    for name, keys, _ in DIM_SPECS:
+        expected = cleaned.select(*keys).distinct().count()
+        assert dims[name].count() == expected, name
 
 
 def test_surrogate_keys_dense_unique(star):
-    for spec in DIM_SPECS:
-        dim = star["schema"].dims[spec.name]
-        ids = sorted(r[spec.id_col] for r in dim.select(spec.id_col).collect())
-        assert ids == list(range(1, len(ids) + 1)), spec.name
+    for name, _, id_col in DIM_SPECS:
+        dim = star["dims"][name]
+        ids = sorted(r[id_col] for r in dim.select(id_col).collect())
+        assert ids == list(range(1, len(ids) + 1)), name
 
 
 def test_no_orphan_fks(star):
     for fact_name in ("fact_inmigrante", "fact_emigrante"):
         fact = star[fact_name]
         n = fact.count()
-        for spec in DIM_SPECS:
-            dim = star["schema"].dims[spec.name]
-            joined = fact.join(dim.select(spec.id_col), spec.id_col, "inner").count()
-            assert joined == n, (fact_name, spec.name)
+        for name, _, id_col in DIM_SPECS:
+            dim = star["dims"][name]
+            joined = fact.join(dim.select(id_col), id_col, "inner").count()
+            assert joined == n, (fact_name, name)
 
 
 def test_split_partitions_input(star):
@@ -149,10 +147,7 @@ def test_split_partitions_input(star):
 
 
 def test_denormalized_dataset_shape(star):
-    dims = {
-        spec.name: (star["schema"].dims[spec.name], spec.id_col)
-        for spec in DIM_SPECS
-    }
+    dims = {name: (star["dims"][name], id_col) for name, _, id_col in DIM_SPECS}
     wide = union_with_provenance(
         {
             "fact_inmigrante": denormalize(star["fact_inmigrante"], dims),

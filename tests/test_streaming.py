@@ -4,14 +4,12 @@ streaming results equal their batch counterparts."""
 
 from __future__ import annotations
 
-import os
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.streaming import (
-    foreach_batch_dim_merge,
     read_parquet_stream,
     run_to_memory,
     streaming_dedup,
@@ -82,58 +80,6 @@ def test_streaming_dedup_collapses_replays(spark, sf_dir, event_stream_dir, tmp_
     assert out.select("event_id").distinct().count() == n_distinct
 
 
-def test_foreach_batch_dim_merge_incremental(spark, sf_dir, tmp_path):
-    from datawarehousefinal_spark.sources.testdata import load_table
-
-    dim_path = str(tmp_path / "dim_event_type")
-    merge = foreach_batch_dim_merge(dim_path, ["event_type"], "id_event_type")
-
-    events = load_table(spark, sf_dir, "events")
-    types = [r[0] for r in events.select("event_type").distinct().collect()]
-    first, rest = sorted(types)[:2], sorted(types)[2:]
-
-    merge(events.filter(F.col("event_type").isin(first)), 0)
-    dim1 = spark.read.parquet(dim_path)
-    assert dim1.count() == len(first)
-
-    merge(events, 1)  # replay everything: old keys must keep their ids
-    dim2 = spark.read.parquet(dim_path)
-    assert dim2.count() == len(types)
-    ids = sorted(r["id_event_type"] for r in dim2.collect())
-    assert ids == list(range(1, len(types) + 1))
-    # ids of the first batch unchanged by the second merge
-    old = {r["event_type"]: r["id_event_type"] for r in dim1.collect()}
-    new = {r["event_type"]: r["id_event_type"] for r in dim2.collect()}
-    for k, v in old.items():
-        assert new[k] == v
-
-
-def test_foreach_batch_runs_inside_real_stream(spark, sf_dir, event_stream_dir, tmp_path):
-    dim_path = str(tmp_path / "dim_stream")
-    ckpt = str(tmp_path / "ckpt")
-    stream = read_parquet_stream(
-        spark, event_stream_dir, _schema(spark, sf_dir), max_files_per_trigger=1
-    )
-    (
-        stream.writeStream.foreachBatch(
-            foreach_batch_dim_merge(dim_path, ["event_type"], "id_event_type")
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    dim = spark.read.parquet(dim_path)
-    n_types = (
-        spark.read.parquet(event_stream_dir)
-        .select("event_type")
-        .distinct()
-        .count()
-    )
-    assert dim.count() == n_types
-    assert dim.select("id_event_type").distinct().count() == n_types
-
-
 def test_stateful_running_totals_carry_across_batches(spark, sf_dir, event_stream_dir):
     """applyInPandasWithState keeps per-key state across micro-batches:
     with maxFilesPerTrigger=1 the three arrival batches process
@@ -180,7 +126,7 @@ def test_stateful_running_totals_carry_across_batches(spark, sf_dir, event_strea
 
 
 def test_session_window_counts_complete_mode(spark, sf_dir, event_stream_dir):
-    from datawarehousefinal_spark.streaming.stateful import session_window_counts
+    from datawarehousefinal_spark.streaming.pipeline import session_window_counts
 
     stream = read_parquet_stream(spark, event_stream_dir, _schema(spark, sf_dir))
     name = f"sw_{uuid.uuid4().hex[:8]}"
@@ -196,66 +142,10 @@ def test_session_window_counts_complete_mode(spark, sf_dir, event_stream_dir):
     out = spark.table(name)
     rows = out.collect()
     assert len(rows) > 0
-    assert out.filter(F.col("session_end") <= F.col("session_start")).count() == 0
     # session event counts partition the input
     assert sum(r["n_events"] for r in rows) == spark.read.parquet(
         event_stream_dir
     ).count()
-
-
-def test_foreach_batch_incremental_dedup_stream(spark, sf_dir, tmp_path):
-    """Store-backed streaming ingest dedup: two arrival batches (originals,
-    then normalized copies + genuinely new docs) must land exactly one
-    survivor per distinct content, and a full replay with a fresh
-    checkpoint must add zero survivors (the store is the state)."""
-    from datawarehousefinal_spark.operators.incremental import exact_store
-    from datawarehousefinal_spark.sources.testdata import load_table
-    from datawarehousefinal_spark.streaming import (
-        foreach_batch_incremental_dedup,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = str(tmp_path / "docs_stream")
-    docs.coalesce(1).write.mode("append").parquet(d)
-    copies = docs.filter(F.col("doc_id") < 10).select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat(F.lit("  "), F.upper("text"), F.lit(" ")).alias("text"),
-    )
-    news = docs.filter((F.col("doc_id") >= 10) & (F.col("doc_id") < 20)).select(
-        (F.col("doc_id") + 20000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" v2-"), F.col("doc_id")).alias("text"),
-    )
-    copies.unionByName(news).coalesce(1).write.mode("append").parquet(d)
-
-    store_path = str(tmp_path / "hash_store")
-    surv_path = str(tmp_path / "survivors")
-    sink = foreach_batch_incremental_dedup(
-        store_path, surv_path, "text", ["doc_id"]
-    )
-    stream = read_parquet_stream(spark, d, docs.schema, max_files_per_trigger=1)
-    (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt1"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    expected = exact_store(docs, "text").count() + news.count()
-    surv = spark.read.parquet(surv_path)
-    assert surv.count() == expected
-    assert spark.read.parquet(store_path).count() == expected
-
-    # full replay, fresh checkpoint: every content is already in the store
-    (
-        read_parquet_stream(spark, d, docs.schema)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    assert spark.read.parquet(surv_path).count() == expected
 
 
 def test_foreach_batch_cube_merge_matches_batch(spark, sf_dir, event_stream_dir, tmp_path):

@@ -180,8 +180,7 @@ def test_bm25_index_path_matches_adhoc(spark, sf_dir):
 def test_bm25_index_append_equals_rebuild(spark, sf_dir):
     """Appending a batch to the index (tokenizing only the batch) must
     reproduce the from-scratch rebuild exactly — every BM25 statistic is
-    a mergeable state over disjoint doc sets. dedup_ids=True makes
-    at-least-once ingest idempotent."""
+    a mergeable state over disjoint doc sets."""
     from pyspark.sql import functions as F
 
     from datawarehousefinal_spark.operators.textstats import (
@@ -210,10 +209,6 @@ def test_bm25_index_append_equals_rebuild(spark, sf_dir):
         for r in bm25_topk_from_index(fp, fd, "doc_id", terms, k=10).collect()
     ]
     assert merged == rebuilt and len(merged) == 10
-    # replaying the SAME batch with dedup_ids=True changes nothing
-    p3, d3 = bm25_index_append(p2, d2, batch, "doc_id", "text", dedup_ids=True)
-    assert d3.count() == d2.count()
-    assert p3.count() == p2.count()
 
 
 # ---------------------------------------------------------------------------
