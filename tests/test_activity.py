@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
+
 from datawarehousefinal_spark.operators.analytics import (
     cumulative_new_users,
     new_vs_returning_daily,
@@ -224,3 +226,11 @@ def test_concurrent_intervals_sweep(spark):
     # 1/10 (1); 1/4 and 1/11 close to zero and are filtered
     assert out == {"2024-01-01": 1, "2024-01-02": 2,
                    "2024-01-03": 1, "2024-01-10": 1}
+
+
+def test_phrase_search_rejects_empty_phrase(spark):
+    from datawarehousefinal_spark.operators.textstats import phrase_search
+
+    df = spark.createDataFrame([(1, "table scan")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="non-empty"):
+        phrase_search(df, "doc_id", "text", [])

@@ -202,3 +202,12 @@ def test_conversion_attribution_epochs_and_carries(spark):
     c = out[7]  # immediate repeat purchase: empty epoch
     assert c["first_touch_type"] is None and c["n_touches"] == 0
     assert out[8]["first_touch_type"] is None and out[8]["n_touches"] == 0
+
+
+def test_funnel_step_timing_needs_two_steps(funnel_events):
+    from datawarehousefinal_spark.operators.behavior import funnel_step_timing
+
+    with pytest.raises(ValueError, match="at least two steps"):
+        funnel_step_timing(
+            funnel_events, "user_id", "ts", "event_type", ["signup"]
+        )

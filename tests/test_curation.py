@@ -4,6 +4,8 @@ determinism, and plan hygiene."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.operators.curation import curate_corpus
@@ -447,3 +449,17 @@ def test_unimax_allocation_validates(spark):
         unimax_allocation(df, "g", budget=0)
     with pytest.raises(ValueError):
         unimax_allocation(df, "g", budget=5, epoch_cap=0.0)
+
+
+@pytest.mark.parametrize("fraction", [-0.1, 1.5])
+def test_stratified_exact_rejects_fraction_outside_unit_interval(spark, fraction):
+    from datawarehousefinal_spark.operators.curation import (
+        stratified_sample_exact,
+        stratified_split_exact,
+    )
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], ["doc_id", "source"])
+    with pytest.raises(ValueError, match="fraction"):
+        stratified_sample_exact(df, "doc_id", "source", fraction)
+    with pytest.raises(ValueError, match="fraction"):
+        stratified_split_exact(df, "doc_id", "source", fraction)

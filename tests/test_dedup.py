@@ -3,6 +3,8 @@ exact-dedup invariants, and non-quadratic plan shape."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.operators.dedup import (
@@ -436,3 +438,11 @@ def test_simhash_near_dupes_sf01_misses_only_beyond_max_hamming(
         (a, b): bin((fps[a] ^ fps[b]) & (2**64 - 1)).count("1") for a, b in missed
     }
     assert all(h > 8 for h in far.values()), far
+
+
+def test_line_dedup_rejects_unknown_keep(spark):
+    from datawarehousefinal_spark.operators.dedup import line_dedup
+
+    df = spark.createDataFrame([(1, "a\nb")], ["id", "text"])
+    with pytest.raises(ValueError, match="keep must be"):
+        line_dedup(df, "id", "text", keep="last")

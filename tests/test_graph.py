@@ -165,3 +165,12 @@ def test_components_release_their_checkpoints(spark):
         assert set(jsc.getPersistentRDDs().keySet().toArray()) - before
     assert set(_comp(connected_components_stars(chain)).values()) == {0}
     assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+
+
+def test_pagerank_rejects_zero_iterations(spark):
+    from datawarehousefinal_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
+    with pytest.raises(ValueError, match="iterations >= 1"):
+        with pagerank(edges, "src", "dst", iterations=0):
+            pass

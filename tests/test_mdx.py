@@ -3,6 +3,8 @@ equivalence of the translated plan against hand-written aggregations."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -3173,3 +3175,308 @@ def test_mdx_custom_member_property_is_loud(spark):
             "DIMENSION PROPERTIES NOT_A_PROPERTY ON ROWS FROM [Toy]",
             cube,
         )
+
+
+# -- parser and planner guards: one malformed query per MdxError branch -------
+
+
+def _guard_cube(spark, kind):
+    toy, hier = _toy_cube(spark), _hier_cube(spark)
+    return {
+        "toy": toy,
+        "hier": hier,
+        # a one-level hierarchy: its top level is also its leaf
+        "leaf": dataclasses.replace(toy, hierarchies={"Persona": ["Pais"]}),
+        # Dia is a declared level outside the declared hierarchy
+        "anio_mes": dataclasses.replace(
+            hier, hierarchies={"Fecha": ["Anio", "Mes"]}
+        ),
+        "bad_agg": dataclasses.replace(
+            toy, measures={"Total": ("mode", "medida", "m")}
+        ),
+    }[kind]
+
+
+_SEL = "SELECT {[Measures].[Total]} ON COLUMNS, "
+
+
+@pytest.mark.parametrize(
+    "kind,bad,match",
+    [
+        pytest.param(
+            "leaf",
+            _SEL + "{[Persona].[Pais].[AR].Children} ON ROWS FROM [Toy]",
+            "leaf of its hierarchy",
+            id="children_of_leaf",
+        ),
+        pytest.param(
+            "anio_mes",
+            _SEL + "DESCENDANTS([Fecha].[Dia].[5], [Fecha].[Mes]) "
+            "ON ROWS FROM [Toy]",
+            r"\[Fecha\]\.\[Dia\] is not in the declared hierarchy",
+            id="descendants_anchor_off_hierarchy",
+        ),
+        pytest.param(
+            "hier",
+            _SEL + "DESCENDANTS([Fecha].[Anio].[2024], [Fecha].[Semana]) "
+            "ON ROWS FROM [Toy]",
+            r"\[Fecha\]\.\[Semana\] is not in the declared hierarchy",
+            id="descendants_target_off_hierarchy",
+        ),
+        pytest.param(
+            "hier",
+            _SEL + "DESCENDANTS([Fecha].[Anio], [Fecha].[Mes]) "
+            "ON ROWS FROM [Toy]",
+            "DESCENDANTS needs a .* anchor",
+            id="descendants_anchor_not_member",
+        ),
+        pytest.param(
+            "hier",
+            _SEL + "DESCENDANTS([Fecha].[Anio].[2024], [Fecha].[Mes].[1]) "
+            "ON ROWS FROM [Toy]",
+            "DESCENDANTS target must be",
+            id="descendants_target_is_member",
+        ),
+        pytest.param(
+            "bad_agg",
+            _SEL + "{[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "unsupported aggregator 'mode'",
+            id="unsupported_aggregator",
+        ),
+        pytest.param(
+            "toy",
+            _SEL + "{[Persona].[Pais].Members} ON ROWS FROM [Toy] ~",
+            "unexpected character",
+            id="unexpected_character",
+        ),
+        pytest.param(
+            "toy",
+            "SELECT {[Measures].[Total]} ON ROWS, "
+            "{[Persona].[Pais].Members} ON COLUMNS FROM [Toy]",
+            "expected 'COLUMNS', got 'ROWS'",
+            id="axis_keyword_out_of_order",
+        ),
+        pytest.param(
+            "toy",
+            _SEL + "{[Persona].[Pais].Parent} ON ROWS FROM [Toy]",
+            "Members, Children or CurrentMember, got 'Parent'",
+            id="unknown_member_function",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Measures].[A] AS '[Persona].[Pais] * 2' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "expected a .Measures...Name. reference",
+            id="calc_operand_not_a_measure",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[A] AS '([Measures].[Total] * 2, "
+            "PARALLELPERIOD([Fecha].[Anio], 1))' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Fecha].[Anio].Members} ON ROWS FROM [Toy]",
+            "a tuple must pair",
+            id="tuple_of_expression",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[A] AS "
+            "'SUM(PERIODSTODATE([Fecha].[Anio].[2024]), [Measures].[Total])' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Fecha].[Mes].Members} ON ROWS FROM [Toy]",
+            "PERIODSTODATE needs a",
+            id="periodstodate_of_member",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Measures].[R] AS 'RANK([Persona].[Pais].Members, "
+            "[Persona].[Pais].Members, [Measures].[Total])' "
+            "SELECT {[Measures].[R]} ON COLUMNS, "
+            "{[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "RANK's first argument",
+            id="rank_without_currentmember",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[A] AS "
+            "'(CLOSINGPERIOD([Fecha].[Mes].[1]), [Measures].[Total])' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Fecha].[Anio].Members} ON ROWS FROM [Toy]",
+            "OPENINGPERIOD/CLOSINGPERIOD needs a",
+            id="closingperiod_of_member",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[A] AS "
+            "'(PARALLELPERIOD([Fecha].[Anio].[2024], 1), [Measures].[Total])' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Fecha].[Anio].Members} ON ROWS FROM [Toy]",
+            "PARALLELPERIOD needs a",
+            id="parallelperiod_of_member",
+        ),
+        pytest.param(
+            "toy",
+            _SEL + "EXCEPT({[Persona].[Pais].Members}, "
+            "CROSSJOIN({[Persona].[Pais].[AR]}, {[Fecha].[Anio].[2024]})) "
+            "ON ROWS FROM [Toy]",
+            "EXCEPT's second argument",
+            id="except_removes_a_crossjoin",
+        ),
+        pytest.param(
+            "toy",
+            _SEL + "{[Persona].[Pais].[AR].[X]} ON ROWS FROM [Toy]",
+            "rows axis items must be",
+            id="rows_item_four_segments",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Persona].[Pais].[G] AS "
+            "'AGGREGATE({[Persona].[Pais].[AR]})' "
+            "MEMBER [Persona].[Pais].[G] AS "
+            "'AGGREGATE({[Persona].[Pais].[BR]})' "
+            + _SEL + "{[Persona].[Pais].[G]} ON ROWS FROM [Toy]",
+            "declared twice",
+            id="custom_member_declared_twice",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Persona].[Pais].[G] AS "
+            "'AGGREGATE({[Persona].[Pais].[AR]}) [x]' "
+            + _SEL + "{[Persona].[Pais].[G]} ON ROWS FROM [Toy]",
+            "trailing tokens in custom member body",
+            id="custom_member_trailing_tokens",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Persona].[Pais].[G] AS "
+            "'AGGREGATE({[Persona].[Pais].[AR], [Persona].[Pais].[AR]})' "
+            + _SEL + "{[Persona].[Pais].[G]} ON ROWS FROM [Toy]",
+            r"AGGREGATE body names \[AR\] twice",
+            id="aggregate_body_repeats_member",
+        ),
+        pytest.param(
+            "toy",
+            _SEL + "{[Persona].[Pais].Members} DIMENSION PROPERTIES 5 "
+            "ON ROWS FROM [Toy]",
+            "expects a property name",
+            id="dimension_properties_number",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Measures].[A].Members AS '1' "
+            + _SEL + "{[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "WITH MEMBER declares",
+            id="with_member_of_members",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Persona].[A] AS '1' "
+            + _SEL + "{[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "two-segment WITH MEMBER",
+            id="with_member_outside_measures",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Measures].[A] AS "
+            "'[Measures].[Total] [Measures].[Total]' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "trailing tokens in calculated member body",
+            id="calc_body_trailing_tokens",
+        ),
+        pytest.param(
+            "toy",
+            "WITH SET S AS '{[Persona].[Pais].Members}' "
+            + _SEL + "{[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "WITH SET needs a",
+            id="with_set_unbracketed_name",
+        ),
+        pytest.param(
+            "toy",
+            "WITH SET [S] AS '{[Persona].[Pais].Members} [x]' "
+            + _SEL + "[S] ON ROWS FROM [Toy]",
+            "trailing tokens in named set body",
+            id="named_set_trailing_tokens",
+        ),
+        pytest.param(
+            "toy",
+            "SELECT CROSSJOIN({[Measures].[Total]}, {[Measures].[Cantidad]}) "
+            "ON COLUMNS, {[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "COLUMNS axis must be",
+            id="columns_axis_crossjoin",
+        ),
+        pytest.param(
+            "toy",
+            _SEL + "{[Fecha].[Anio].Members} ON ROWS FROM [Toy] "
+            "WHERE {([Persona].[Pais].Members)}",
+            "slicer-tuple members",
+            id="slicer_tuple_of_members",
+        ),
+        pytest.param(
+            "toy",
+            "WITH MEMBER [Persona].[Pais].[G] AS "
+            "'AGGREGATE({[Persona].[Pais].[AR], [Persona].[Pais].[BR]})' "
+            + _SEL + "{[Fecha].[Anio].Members} ON ROWS FROM [Toy] "
+            "WHERE {([Persona].[Pais].[G], [Cliente].[Seg].[A])}",
+            "inside a compound-slicer tuple",
+            id="slicer_tuple_custom_member",
+        ),
+        pytest.param(
+            "toy",
+            _SEL + "{[Fecha].[Anio].Members} ON ROWS FROM [Toy] "
+            "WHERE {[Persona].[Pais].Members}",
+            "set-slicer members",
+            id="set_slicer_of_members",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[C] AS '[Measures].[Total] * 2' "
+            "MEMBER [Measures].[A] AS 'SUM(LASTPERIODS(2, "
+            "[Fecha].[Anio].CurrentMember), [Measures].[C])' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Fecha].[Anio].Members} ON ROWS FROM [Toy]",
+            "LASTPERIODS aggregates BASE measures only",
+            id="lastperiods_of_calc_member",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[A] AS 'SUM(LASTPERIODS(2, "
+            "[Fecha].[Anio].CurrentMember), [Measures].[Total])' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Fecha].[(All)], [Fecha].[Anio].Members} ON ROWS FROM [Toy]",
+            "LASTPERIODS needs a single-grain rows axis",
+            id="lastperiods_over_all_lattice",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[A] AS 'SUM(LASTPERIODS(2, "
+            "[Fecha].[Dia].CurrentMember), [Measures].[Total])' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Fecha].[Dia].Members} ON ROWS FROM [Toy]",
+            "more than one level below the hierarchy top",
+            id="lastperiods_two_levels_down",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[A] AS 'SUM(LASTPERIODS(2, "
+            "[Persona].[Pais].CurrentMember), [Measures].[Total])' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Persona].[Pais].Members} ON ROWS FROM [Toy]",
+            "LASTPERIODS needs integer-keyed levels",
+            id="lastperiods_string_level",
+        ),
+        pytest.param(
+            "hier",
+            "WITH MEMBER [Measures].[A] AS "
+            "'([Measures].[Total], PARALLELPERIOD([Fecha].[Dia], 1))' "
+            "SELECT {[Measures].[A]} ON COLUMNS, "
+            "{[Fecha].[Dia].Members} ON ROWS FROM [Toy]",
+            "shifts more than one level below",
+            id="parallelperiod_two_levels_down",
+        ),
+    ],
+)
+def test_mdx_guard_errors_are_loud(spark, kind, bad, match):
+    with pytest.raises(MdxError, match=match):
+        mdx_query(_guard_cube(spark, kind), bad).collect()

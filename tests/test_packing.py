@@ -3,6 +3,8 @@ truth and sequential-fill chunk invariants."""
 
 from __future__ import annotations
 
+import pytest
+
 import random
 
 from pyspark.sql import Window
@@ -108,3 +110,9 @@ def test_range_bucket_plan_collapses_for_tiny_frames(spark):
         ).collect()
     }
     assert {r["id"]: r["cum"] for r in out.collect()} == truth
+
+
+def test_distributed_cumsum_rejects_mismatched_column_lists(spark):
+    df = spark.createDataFrame([(1, 2, 3)], ["id", "a", "b"])
+    with pytest.raises(ValueError, match="must match"):
+        distributed_cumsum(df, ["id"], ["a", "b"], ["cum_a"])

@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_drift_report_identity_and_shift(spark):
@@ -123,3 +124,16 @@ def test_embedding_profile_flags_and_norms(spark):
     assert r["n_nonfinite"] == 2
     assert abs(r["avg_norm"] - 2.5) < 1e-9
     assert r["min_norm"] == 0.0 and abs(r["max_norm"] - 5.0) < 1e-9
+
+
+def test_histogram_and_drift_reject_zero_bins(spark):
+    from datawarehousefinal_spark.operators.profile import (
+        drift_report,
+        value_histogram,
+    )
+
+    df = spark.range(0, 10).selectExpr("cast(id as double) as v")
+    with pytest.raises(ValueError, match="bins must be >= 1"):
+        value_histogram(df, "v", bins=0)
+    with pytest.raises(ValueError, match="bins must be >= 1"):
+        drift_report(df, df, numeric_cols=["v"], bins=0)

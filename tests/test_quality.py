@@ -99,3 +99,11 @@ def test_row_rules_quoted_names_and_odd_columns(spark):
     odd = df.withColumnRenamed("a", "weird.col'name")
     prof = {r["column"]: r["n_nulls"] for r in profile_table(odd).collect()}
     assert prof == {"weird.col'name": 0, "b": 1}
+
+
+def test_row_rule_report_needs_a_rule(spark):
+    df = spark.createDataFrame([(1,)], "id long")
+    with pytest.raises(ValueError, match="at least one rule"):
+        row_rule_report(df, {})
+    with pytest.raises(ValueError, match="at least one rule"):
+        dq_report(df)
