@@ -289,12 +289,22 @@ the hierarchy top (ragged cycles).
 Execution model: the cube definition supplies a DENORMALIZED star
 builder (broadcast dim joins — the same star the SQL serving path
 registers) plus level→column and measure→aggregate mappings; the
-translated query is one ``groupBy(levels).agg(measures)`` over the
-slicer-filtered star, followed by at most a projection (calculated
-members), a HAVING filter, and a top-n. At 100 TB that is exactly the
+translated query is one ``groupBy(levels).agg(measures)`` (one GROUPING
+SETS aggregate when the axis carries ``(All)`` members) over the
+slicer-filtered star. Time-intelligence members then attach to the
+aggregate's cells as hidden columns, one per spec and measure, in the
+fixed family order PARALLELPERIOD, PERIODSTODATE, LASTPERIODS,
+OPENING/CLOSINGPERIOD, RANK (``_TI_FAMILIES``): a LEFT self-join on
+shifted period keys for PARALLELPERIOD, a window over the cells for
+the rest. When the axis dices a column a value moves along, the value
+comes from a re-aggregation without those dices (one per dropped-dice
+set, shared across specs), LEFT-joined back on the grouping keys.
+After that come at most a projection (calculated members), HAVING
+filters, sorts and top-n or Pareto cuts. At 100 TB that is exactly the
 hand-written plan: slicer predicates push through the star's dim
 joins, the fact shuffles once on the grouping keys, aggregates
-partially combine map-side, and TopCount is a TakeOrderedAndProject
+partially combine map-side, the time-intelligence joins and windows
+see group-count-many cells, and TopCount is a TakeOrderedAndProject
 over group-count-many rows.
 """
 
@@ -302,7 +312,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -488,22 +498,16 @@ class CubeDef:
                     f"level [{dim}].[{target}] is not in the declared "
                     f"hierarchy {hlevels} on cube [{self.name}]"
                 )
-            ai = lowers.index(anchor.lower())
-            ti = lowers.index(target.lower())
-            if ai > 0:
+            if lowers.index(anchor.lower()) > 0:
                 raise MdxError(
                     f"a member of [{dim}].[{anchor}] is ambiguous "
                     "without its ancestor chain — DESCENDANTS anchors "
                     f"on the hierarchy's top level ([{dim}]."
                     f"[{hlevels[0]}]) only"
                 )
-            if ti <= ai:
-                raise MdxError(
-                    f"DESCENDANTS target [{dim}].[{target}] must sit "
-                    f"BELOW the anchor level [{dim}].[{anchor}] in "
-                    f"hierarchy {hlevels}"
-                )
-            return hlevels[ti]
+            # the target sits below the top-level anchor: parse_set
+            # answers a target at the anchor's own level with the member
+            return hlevels[lowers.index(target.lower())]
         raise MdxError(
             f"DESCENDANTS needs a declared hierarchy for dimension "
             f"[{dim}] on cube [{self.name}]"
@@ -614,6 +618,15 @@ def _tokenize(text: str) -> list[tuple[str, str]]:
             out.append(("punct", m.group("punct")))
         pos = m.end()
     return out
+
+
+# the period functions of a measure tuple
+_PERIOD_FNS = ("PARALLELPERIOD", "OPENINGPERIOD", "CLOSINGPERIOD")
+# rows-axis wrappers that cut the set by a measure: (tag, inner, n, measure)
+_MEASURE_CUTS = (
+    "topcount", "bottomcount",
+    "toppercent", "bottompercent", "topsum", "bottomsum",
+)
 
 
 class _Parser:
@@ -770,57 +783,29 @@ class _Parser:
             return ("num", float(val) if "." in val else int(val))
         if kind == "punct" and val == "(":
             self.next()
-            # tuple with the period function first: '(' PARALLELPERIOD/
-            # OPENINGPERIOD/CLOSINGPERIOD(...) ',' [Measures].[M] ')' —
-            # Mondrian accepts either member order
+            # a time-intelligence tuple pairs a [Measures] reference with
+            # PARALLELPERIOD/OPENINGPERIOD/CLOSINGPERIOD(...); Mondrian
+            # accepts either member order
             pk, pv = self.peek()
-            if pk == "word" and pv.upper() == "PARALLELPERIOD":
-                self.next()
-                dim, level, k = self._parallelperiod_args()
+            if pk == "word" and pv.upper() in _PERIOD_FNS:
+                family, dim, level, params = self._period_fn()
                 self.expect_punct(",")
                 measure = self.measure_ref()
-                self.expect_punct(")")
-                return ("pp", measure, dim, level, k)
-            if pk == "word" and pv.upper() in (
-                "OPENINGPERIOD", "CLOSINGPERIOD"
-            ):
-                which = "opening" if pv.upper()[0] == "O" else "closing"
-                self.next()
-                dim, level = self._boundaryperiod_args()
-                self.expect_punct(",")
-                measure = self.measure_ref()
-                self.expect_punct(")")
-                return ("bp", measure, dim, level, which)
-            node = self.calc_expr()
-            if self.peek() == ("punct", ","):
-                # tuple: '(' [Measures].[M] ',' <periodfn>(...) ')' —
-                # the time-intelligence shape (measure at a shifted or
-                # boundary period); anything else after a comma is
-                # unsupported
+            else:
+                node = self.calc_expr()
+                if self.peek() != ("punct", ","):
+                    self.expect_punct(")")
+                    return node
                 if node[0] != "ref":
                     raise MdxError(
                         "a tuple must pair a [Measures] reference with "
                         "PARALLELPERIOD/OPENINGPERIOD/CLOSINGPERIOD(...)"
                     )
                 self.next()
-                wk, wv = self.next()
-                if wk != "word" or wv.upper() not in (
-                    "PARALLELPERIOD", "OPENINGPERIOD", "CLOSINGPERIOD"
-                ):
-                    raise MdxError(
-                        "expected PARALLELPERIOD, OPENINGPERIOD or "
-                        f"CLOSINGPERIOD in the tuple, got {wv!r}"
-                    )
-                if wv.upper() == "PARALLELPERIOD":
-                    dim, level, k = self._parallelperiod_args()
-                    self.expect_punct(")")
-                    return ("pp", node[1], dim, level, k)
-                which = "opening" if wv.upper()[0] == "O" else "closing"
-                dim, level = self._boundaryperiod_args()
-                self.expect_punct(")")
-                return ("bp", node[1], dim, level, which)
+                family, dim, level, params = self._period_fn()
+                measure = node[1]
             self.expect_punct(")")
-            return node
+            return ("ti", family, measure, dim, level, params)
         if kind == "word" and val.upper() in ("SUM", "AVG"):
             # SUM(PERIODSTODATE([Dim].[Level]), [Measures].[M]) — the
             # running-total (YTD) shape (argless YTD() would need a
@@ -839,27 +824,16 @@ class _Parser:
                     )
                 self.next()
                 self.expect_punct("(")
-                segs, suffix = self.member_path()
-                if len(segs) != 2 or suffix:
-                    raise MdxError(
-                        "PERIODSTODATE needs a [Dim].[Level] reference, "
-                        f"got {segs}"
-                    )
+                dim, level = self._level_ref("PERIODSTODATE")
                 self.expect_punct(")")
                 self.expect_punct(",")
                 measure = self.measure_ref()
                 self.expect_punct(")")
-                return ("ptd", measure, segs[0], segs[1])
+                return ("ti", "ptd", measure, dim, level, ())
             if k2 == "word" and v2.upper() == "LASTPERIODS":
                 self.next()
                 self.expect_punct("(")
-                nkind, nval = self.next()
-                if nkind != "num" or "." in nval or int(nval) < 1:
-                    raise MdxError(
-                        "LASTPERIODS count must be a positive integer, "
-                        f"got {nval!r}"
-                    )
-                n = int(nval)
+                n = self._positive_int("LASTPERIODS count")
                 self.expect_punct(",")
                 segs, suffix = self.member_path()
                 if len(segs) != 2 or suffix != "currentmember":
@@ -871,7 +845,7 @@ class _Parser:
                 self.expect_punct(",")
                 measure = self.measure_ref()
                 self.expect_punct(")")
-                return ("lp", measure, segs[0], segs[1], n, outer)
+                return ("ti", "lp", measure, segs[0], segs[1], (n, outer))
             raise MdxError(
                 f"{outer.upper()}(...) takes PERIODSTODATE(...) or "
                 f"LASTPERIODS(...) as its set argument, got {v2!r}"
@@ -905,43 +879,49 @@ class _Parser:
             self.expect_punct(",")
             measure = self.measure_ref()
             self.expect_punct(")")
-            return ("rank", measure, segs[0], segs[1])
+            return ("ti", "rank", measure, segs[0], segs[1], ())
         if kind == "seg":
             return ("ref", self.measure_ref())
         raise MdxError(f"expected a measure expression, got {val!r}")
 
-    def _boundaryperiod_args(self) -> tuple[str, str]:
-        """The ``([Dim].[Level])`` argument of OPENINGPERIOD /
-        CLOSINGPERIOD (opening paren through closing paren)."""
-        self.expect_punct("(")
-        segs, suffix = self.member_path()
-        if len(segs) != 2 or suffix:
-            raise MdxError(
-                "OPENINGPERIOD/CLOSINGPERIOD needs a [Dim].[Level] "
-                f"reference, got {segs}"
-            )
-        self.expect_punct(")")
-        return segs[0], segs[1]
-
-    def _parallelperiod_args(self) -> tuple[str, str, int]:
-        """The ``([Dim].[Level], n)`` argument list of PARALLELPERIOD
-        (opening paren through closing paren)."""
-        self.expect_punct("(")
-        segs, suffix = self.member_path()
-        if len(segs) != 2 or suffix:
-            raise MdxError(
-                "PARALLELPERIOD needs a [Dim].[Level] reference, "
-                f"got {segs}"
-            )
-        self.expect_punct(",")
+    def _positive_int(self, what: str) -> int:
         nkind, nval = self.next()
         if nkind != "num" or "." in nval or int(nval) < 1:
             raise MdxError(
-                "PARALLELPERIOD lag must be a positive integer, "
-                f"got {nval!r}"
+                f"{what} must be a positive integer, got {nval!r}"
             )
+        return int(nval)
+
+    def _level_ref(self, fn: str) -> tuple[str, str]:
+        """The ``[Dim].[Level]`` argument of ``fn``."""
+        segs, suffix = self.member_path()
+        if len(segs) != 2 or suffix:
+            raise MdxError(
+                f"{fn} needs a [Dim].[Level] reference, got {segs}"
+            )
+        return segs[0], segs[1]
+
+    def _period_fn(self) -> tuple[str, str, str, tuple]:
+        """The period half of a measure tuple, ``PARALLELPERIOD(
+        [Dim].[Level], k)`` or ``OPENINGPERIOD/CLOSINGPERIOD(
+        [Dim].[Level])``, as (family, dim, level, params)."""
+        kind, val = self.next()
+        fn = val.upper() if kind == "word" else ""
+        if fn not in _PERIOD_FNS:
+            raise MdxError(
+                "expected PARALLELPERIOD, OPENINGPERIOD or "
+                f"CLOSINGPERIOD in the tuple, got {val!r}"
+            )
+        self.expect_punct("(")
+        if fn == "PARALLELPERIOD":
+            dim, level = self._level_ref(fn)
+            self.expect_punct(",")
+            lag = self._positive_int("PARALLELPERIOD lag")
+            self.expect_punct(")")
+            return "pp", dim, level, (lag,)
+        dim, level = self._level_ref("OPENINGPERIOD/CLOSINGPERIOD")
         self.expect_punct(")")
-        return segs[0], segs[1], int(nval)
+        return "bp", dim, level, (fn,)
 
     # set := '{' path (',' path)* '}' | CROSSJOIN '(' set ',' set ')'
     #      | [NamedSet]
@@ -986,8 +966,6 @@ class _Parser:
                         f"ONE level, got both {level_key} and {key}"
                     )
                 not_items.append((segs, "not"))
-            if not not_items:
-                raise MdxError("EXCEPT removed no members")
             return [("set", list(base[0][1]) + not_items)]
         if kind == "word" and val.upper() == "CROSSJOIN":
             self.next()
@@ -1095,13 +1073,7 @@ class _Parser:
             n = 1  # Mondrian's documented default count
             if self.peek() == ("punct", ","):
                 self.next()
-                nkind, nval = self.next()
-                if nkind != "num" or "." in nval or int(nval) < 1:
-                    raise MdxError(
-                        f"{tag.upper()} count must be a positive "
-                        f"integer, got {nval!r}"
-                    )
-                n = int(nval)
+                n = self._positive_int(f"{tag.upper()} count")
             self.expect_punct(")")
             return (tag, inner, n)
         if kind == "word" and val.upper() in ("TOPCOUNT", "BOTTOMCOUNT"):
@@ -1110,16 +1082,11 @@ class _Parser:
             self.expect_punct("(")
             inner = self.parse_rows_axis()
             self.expect_punct(",")
-            nkind, nval = self.next()
-            if nkind != "num" or "." in nval or int(nval) < 1:
-                raise MdxError(
-                    f"{tag.upper()} count must be a positive integer, "
-                    f"got {nval!r}"
-                )
+            n = self._positive_int(f"{tag.upper()} count")
             self.expect_punct(",")
             measure = self.measure_ref()
             self.expect_punct(")")
-            return (tag, inner, int(nval), measure)
+            return (tag, inner, n, measure)
         if kind == "word" and val.upper() in (
             "TOPPERCENT", "BOTTOMPERCENT", "TOPSUM", "BOTTOMSUM"
         ):
@@ -1928,17 +1895,11 @@ def parse_mdx(text: str, cube: CubeDef) -> MdxSelect:
     # unwrap TOPCOUNT/BOTTOMCOUNT/ORDER/FILTER/HEAD/TAIL (outermost-
     # first) down to the set nodes
     wrappers: list[tuple] = []
-    while rows_node[0] in (
-        "topcount", "bottomcount", "order", "filter", "head", "tail",
-        "toppercent", "bottompercent", "topsum", "bottomsum",
-    ):
+    while rows_node[0] in (*_MEASURE_CUTS, "order", "filter", "head", "tail"):
         if rows_node[0] in ("head", "tail"):
             tag, inner, n = rows_node
             wrappers.append((tag, n))
-        elif rows_node[0] in (
-            "topcount", "bottomcount",
-            "toppercent", "bottompercent", "topsum", "bottomsum",
-        ):
+        elif rows_node[0] in _MEASURE_CUTS:
             tag, inner, n, measure = rows_node
             if not cube.has_measure(measure) and (
                 measure.lower() not in known_calc
@@ -2222,44 +2183,12 @@ def _validate_refs(expr, cube: CubeDef, calc_members: dict) -> None:
                 f"expression references unknown measure "
                 f"[Measures].[{name}] on cube [{cube.name}]"
             )
-    elif kind == "pp":
-        _, name, dim, level, _k = expr
+    elif kind == "ti":
+        _, family, name, dim, level, _params = expr
         if not cube.has_measure(name):
+            fam = _TI_FAMILIES[family]
             raise MdxError(
-                "PARALLELPERIOD tuples shift BASE measures only; "
-                f"[Measures].[{name}] is not one on cube [{cube.name}]"
-            )
-        cube.level_column(dim, level)  # loud on unknown level
-    elif kind == "ptd":
-        _, name, dim, level = expr
-        if not cube.has_measure(name):
-            raise MdxError(
-                "PERIODSTODATE sums BASE measures only; "
-                f"[Measures].[{name}] is not one on cube [{cube.name}]"
-            )
-        cube.level_column(dim, level)  # loud on unknown level
-    elif kind == "lp":
-        _, name, dim, level, _n, _agg = expr
-        if not cube.has_measure(name):
-            raise MdxError(
-                "LASTPERIODS aggregates BASE measures only; "
-                f"[Measures].[{name}] is not one on cube [{cube.name}]"
-            )
-        cube.level_column(dim, level)  # loud on unknown level
-    elif kind == "bp":
-        _, name, dim, level, _which = expr
-        if not cube.has_measure(name):
-            raise MdxError(
-                "OPENINGPERIOD/CLOSINGPERIOD tuples read BASE measures "
-                f"only; [Measures].[{name}] is not one on cube "
-                f"[{cube.name}]"
-            )
-        cube.level_column(dim, level)  # loud on unknown level
-    elif kind == "rank":
-        _, name, dim, level = expr
-        if not cube.has_measure(name):
-            raise MdxError(
-                "RANK orders by BASE measures only; "
+                f"{fam.fn} {fam.reads} BASE measures only; "
                 f"[Measures].[{name}] is not one on cube [{cube.name}]"
             )
         cube.level_column(dim, level)  # loud on unknown level
@@ -2270,29 +2199,23 @@ def _validate_refs(expr, cube: CubeDef, calc_members: dict) -> None:
         _validate_refs(expr[1], cube, calc_members)
 
 
-def _collect_base_refs(expr, cube: CubeDef, calc_members: dict, out: list):
-    """Base measures an expression (transitively) depends on, in
-    first-encounter order."""
+def _measure_leaves(expr, cube: CubeDef, calc_members: dict):
+    """The base-measure references and time-intelligence nodes an
+    expression evaluates, in order, calculated-member references followed
+    into their definitions."""
     kind = expr[0]
-    if kind == "ref":
-        name = expr[1]
-        if cube.has_measure(name):
-            if name.lower() not in {m.lower() for m in out}:
-                out.append(name)
-        else:
-            for k, sub in calc_members.items():
-                if k.lower() == name.lower():
-                    _collect_base_refs(sub, cube, calc_members, out)
-                    break
-    elif kind in ("pp", "ptd", "lp", "bp", "rank"):
-        name = expr[1]
-        if name.lower() not in {m.lower() for m in out}:
-            out.append(name)
+    if kind == "ti" or (kind == "ref" and cube.has_measure(expr[1])):
+        yield expr
+    elif kind == "ref":
+        for k, sub in calc_members.items():
+            if k.lower() == expr[1].lower():
+                yield from _measure_leaves(sub, cube, calc_members)
+                break
     elif kind == "bin":
-        _collect_base_refs(expr[2], cube, calc_members, out)
-        _collect_base_refs(expr[3], cube, calc_members, out)
+        yield from _measure_leaves(expr[2], cube, calc_members)
+        yield from _measure_leaves(expr[3], cube, calc_members)
     elif kind == "neg":
-        _collect_base_refs(expr[1], cube, calc_members, out)
+        yield from _measure_leaves(expr[1], cube, calc_members)
 
 
 def _build_expr(expr, cube: CubeDef, calc_members: dict) -> Column:
@@ -2305,16 +2228,8 @@ def _build_expr(expr, cube: CubeDef, calc_members: dict) -> Column:
         return F.lit(expr[1])
     if kind == "neg":
         return -_build_expr(expr[1], cube, calc_members)
-    if kind == "pp":
-        return F.col(_pp_alias(expr, cube))
-    if kind == "ptd":
-        return F.col(_ptd_alias(expr, cube))
-    if kind == "lp":
-        return F.col(_lp_alias(expr, cube))
-    if kind == "bp":
-        return F.col(_bp_alias(expr, cube))
-    if kind == "rank":
-        return F.col(_rank_alias(expr, cube))
+    if kind == "ti":
+        return F.col(_ti_alias(expr, cube))
     if kind == "ref":
         name = expr[1]
         if cube.has_measure(name):
@@ -2347,425 +2262,6 @@ _CMP = {
 }
 
 
-def _pp_alias(expr, cube: CubeDef) -> str:
-    """Deterministic output column for a ``("pp", measure, dim, level,
-    k)`` tuple — one per (shift spec, measure), shared by every
-    expression referencing the same shifted value."""
-    _, name, dim, level, k = expr
-    safe = re.sub(r"[^a-z0-9]+", "_", f"{dim}_{level}".lower())
-    return f"__pp_{safe}_{k}_{cube.measure_alias(name)}"
-
-
-def _collect_specs(
-    expr, cube: CubeDef, calc_members: dict, out: dict, kind, key_fn, alias_fn
-):
-    """Generic time-intelligence spec gatherer: walk an expression AST
-    (following calculated-member references), and for every node of
-    ``kind`` record ``key_fn(node)`` → (node, {alias: measure_name}) in
-    ``out`` — one shared traversal for the pp/ptd/lp families, so the
-    reference-resolution rules can never drift between them. Each
-    spec's measure map lets its join/window compute ONCE, projecting
-    every measure it needs."""
-    k = expr[0]
-    if k == kind:
-        out.setdefault(key_fn(expr), (expr, {}))[1][
-            alias_fn(expr, cube)
-        ] = expr[1]
-    elif k == "ref" and not cube.has_measure(expr[1]):
-        for cname, sub in calc_members.items():
-            if cname.lower() == expr[1].lower():
-                _collect_specs(
-                    sub, cube, calc_members, out, kind, key_fn, alias_fn
-                )
-                break
-    elif k == "bin":
-        _collect_specs(
-            expr[2], cube, calc_members, out, kind, key_fn, alias_fn
-        )
-        _collect_specs(
-            expr[3], cube, calc_members, out, kind, key_fn, alias_fn
-        )
-    elif k == "neg":
-        _collect_specs(
-            expr[1], cube, calc_members, out, kind, key_fn, alias_fn
-        )
-
-
-def _collect_pp_specs(expr, cube: CubeDef, calc_members: dict, out: dict):
-    """PARALLELPERIOD specs, keyed ``(dim, level, k)``."""
-    _collect_specs(
-        expr, cube, calc_members, out, "pp",
-        lambda e: (e[2].lower(), e[3].lower(), e[4]), _pp_alias,
-    )
-
-
-def _ptd_alias(expr, cube: CubeDef) -> str:
-    """Deterministic output column for a ``("ptd", measure, dim,
-    level)`` tuple — one per (anchor level, measure)."""
-    _, name, dim, level = expr
-    safe = re.sub(r"[^a-z0-9]+", "_", f"{dim}_{level}".lower())
-    return f"__ptd_{safe}_{cube.measure_alias(name)}"
-
-
-def _collect_ptd_specs(expr, cube: CubeDef, calc_members: dict, out: dict):
-    """PERIODSTODATE specs, keyed by anchor ``(dim, level)``."""
-    _collect_specs(
-        expr, cube, calc_members, out, "ptd",
-        lambda e: (e[2].lower(), e[3].lower()), _ptd_alias,
-    )
-
-
-def _collect_wrapper_specs(sel: MdxSelect, cube: CubeDef, collect, out):
-    """Run a spec collector over every expression a wrapper can carry —
-    shared by the PARALLELPERIOD and PERIODSTODATE gatherers."""
-    for w in sel.wrappers:
-        if w[0] in (
-            "topcount", "bottomcount",
-            "toppercent", "bottompercent", "topsum", "bottomsum",
-        ):
-            collect(("ref", w[2]), cube, sel.calc_members, out)
-        elif w[0] == "order":
-            collect(w[1], cube, sel.calc_members, out)
-        elif w[0] == "filter":
-            for e in _cond_exprs(w[1]):
-                collect(e, cube, sel.calc_members, out)
-
-
-def _attach_periods_to_date(
-    out: DataFrame,
-    sel: MdxSelect,
-    cube: CubeDef,
-    filtered_cols: set,
-    agg_excluding: Callable[[frozenset], DataFrame],
-) -> DataFrame:
-    """Compute ``SUM(PERIODSTODATE([Dim].[Level]), [Measures].[M])``
-    columns — running totals within each anchor-level member, the YTD
-    gesture — as a WINDOW over the aggregate's cells: partition by the
-    anchor's chain plus every non-hierarchy grouping column, order by
-    the hierarchy's deeper axis columns, running-sum the measure.
-    Cell×cell work (the window runs over months-many rows, never the
-    fact), exactly the SQL ``SUM() OVER (PARTITION BY .. ORDER BY ..)``
-    an analyst would write — which is the oracle shape.
-
-    Like PARALLELPERIOD, the tuple reads the CUBE, not the axis
-    selection: a dice on the ORDERING columns (``mes = 6`` with a YTD
-    member) would silently drop the earlier periods from the running
-    sum, so the window is then computed over a re-aggregation WITHOUT
-    those dices and LEFT-joined back onto the axis cells (dices on the
-    anchor/partition columns are harmless — a partition is summed only
-    within itself — and stay applied).
-    """
-    specs: dict = {}
-    for name in sel.columns:
-        if not cube.has_measure(name):
-            expr = next(
-                v for k, v in sel.calc_members.items()
-                if k.lower() == name.lower()
-            )
-            _collect_ptd_specs(expr, cube, sel.calc_members, specs)
-    _collect_wrapper_specs(sel, cube, _collect_ptd_specs, specs)
-    if not specs:
-        return out
-    if len(sel.grouping_sets) != 1 or not sel.grouping_sets[0]:
-        raise MdxError(
-            "PERIODSTODATE needs a single-grain rows axis — over an "
-            "[(All)] lattice the running sum would mix grains"
-        )
-    gcols = sel.grouping_sets[0]
-    for (_dl, _ll), (expr0, aliases) in specs.items():
-        dim, level = expr0[2], expr0[3]
-        chain = cube.level_chain(dim, level)
-        for c in chain:
-            if c not in gcols:
-                raise MdxError(
-                    f"PERIODSTODATE anchors [{dim}].[{level}] but its "
-                    f"key column {c!r} is not on the rows axis"
-                )
-        # deeper levels of the SAME hierarchy present on the axis, in
-        # hierarchy order — the running-sum ordering
-        hlevels = next(
-            (
-                lv
-                for hd, lv in cube.hierarchies.items()
-                if hd.lower() == dim.lower()
-            ),
-            [],
-        )
-        anchor_idx = next(
-            (
-                i
-                for i, lv in enumerate(hlevels)
-                if lv.lower() == level.lower()
-            ),
-            None,
-        )
-        order_cols = (
-            [
-                cube.level_column(dim, lv)
-                for lv in hlevels[anchor_idx + 1 :]
-                if cube.level_column(dim, lv) in gcols
-            ]
-            if anchor_idx is not None
-            else []
-        )
-        if not order_cols:
-            raise MdxError(
-                f"PERIODSTODATE([{dim}].[{level}]) needs a level BELOW "
-                f"[{level}] from the same declared hierarchy on the "
-                "rows axis to order the running sum"
-            )
-        part_cols = [c for c in gcols if c not in order_cols]
-        w = (
-            Window.partitionBy(*part_cols).orderBy(
-                *[F.col(c).asc() for c in order_cols]
-            )
-            if part_cols
-            else Window.orderBy(*[F.col(c).asc() for c in order_cols])
-        )
-        if not (filtered_cols & set(order_cols)):
-            for alias, m in aliases.items():
-                out = out.withColumn(
-                    alias, F.sum(cube.measure_alias(m)).over(w)
-                )
-            continue
-        base = agg_excluding(frozenset(order_cols))
-        ytd = base.select(
-            *[F.col(c).alias(f"__ptdk_{c}") for c in gcols],
-            *[
-                F.sum(cube.measure_alias(m)).over(w).alias(a)
-                for a, m in aliases.items()
-            ],
-        )
-        cond = None
-        for c in gcols:
-            term = F.col(c) == F.col(f"__ptdk_{c}")
-            cond = term if cond is None else cond & term
-        out = out.join(ytd, cond, "left").drop(
-            *[f"__ptdk_{c}" for c in gcols]
-        )
-    return out
-
-
-def _lp_alias(expr, cube: CubeDef) -> str:
-    """Deterministic output column for a ``("lp", measure, dim, level,
-    n, agg)`` tuple — one per (level, n, agg, measure)."""
-    _, name, dim, level, n, agg = expr
-    safe = re.sub(r"[^a-z0-9]+", "_", f"{dim}_{level}".lower())
-    return f"__lp_{safe}_{n}_{agg}_{cube.measure_alias(name)}"
-
-
-def _collect_lp_specs(expr, cube: CubeDef, calc_members: dict, out: dict):
-    """LASTPERIODS specs, keyed ``(dim, level, n, agg)``."""
-    _collect_specs(
-        expr, cube, calc_members, out, "lp",
-        lambda e: (e[2].lower(), e[3].lower(), e[4], e[5]), _lp_alias,
-    )
-
-
-def _attach_last_periods(
-    out: DataFrame,
-    sel: MdxSelect,
-    cube: CubeDef,
-    filtered_cols: set,
-    agg_excluding: Callable[[frozenset], DataFrame],
-) -> DataFrame:
-    """Compute ``SUM/AVG(LASTPERIODS(n, [Dim].[Level].CurrentMember),
-    [Measures].[M])`` columns — trailing-window rolling totals and
-    moving averages — as a RANGE window over the aggregate's cells:
-    order by the level's LINEARIZED period key (the level column at
-    the hierarchy top; ``anio*period + (mes-1)`` one level below, so a
-    3-month trailing window crosses December→January by plain integer
-    range), partition by the grouping columns OUTSIDE the hierarchy,
-    frame ``RANGE BETWEEN n-1 PRECEDING AND CURRENT ROW``. RANGE (not
-    ROWS) makes calendar gaps behave like Mondrian's empty periods: a
-    missing month contributes nothing but still consumes its slot.
-
-    Reads the CUBE like the other time-intelligence tuples: a dice on
-    ANY of the level's chain columns (the window runs across years, so
-    a year dice corrupts January's trailing window too) recomputes the
-    window over the undiced aggregation and LEFT-joins it back.
-    """
-    specs: dict = {}
-    for name in sel.columns:
-        if not cube.has_measure(name):
-            expr = next(
-                v for k, v in sel.calc_members.items()
-                if k.lower() == name.lower()
-            )
-            _collect_lp_specs(expr, cube, sel.calc_members, specs)
-    _collect_wrapper_specs(sel, cube, _collect_lp_specs, specs)
-    if not specs:
-        return out
-    if len(sel.grouping_sets) != 1 or not sel.grouping_sets[0]:
-        raise MdxError(
-            "LASTPERIODS needs a single-grain rows axis — over an "
-            "[(All)] lattice the trailing window would mix grains"
-        )
-    gcols = sel.grouping_sets[0]
-    dtypes = dict(out.dtypes)
-    _AGG = {"sum": F.sum, "avg": F.avg}
-    for (_dl, _ll, n, agg), (expr0, aliases) in specs.items():
-        dim, level = expr0[2], expr0[3]
-        chain = cube.level_chain(dim, level)
-        if len(chain) > 2:
-            raise MdxError(
-                f"LASTPERIODS([{dim}].[{level}]) is more than one level "
-                "below the hierarchy top — such cycles are ragged and "
-                "the window key would be fabricated"
-            )
-        for c in chain:
-            if c not in gcols:
-                raise MdxError(
-                    f"LASTPERIODS windows [{dim}].[{level}] but its key "
-                    f"column {c!r} is not on the rows axis"
-                )
-            if dtypes.get(c) not in _INT_TYPES:
-                raise MdxError(
-                    f"LASTPERIODS needs integer-keyed levels; "
-                    f"{c!r} is {dtypes.get(c)}"
-                )
-        if len(chain) == 1:
-            lin = F.col(chain[0])
-        else:
-            period = cube.level_period(dim, level)
-            lin = F.col(chain[0]) * period + (F.col(chain[1]) - 1)
-        part_cols = [c for c in gcols if c not in chain]
-        w = (
-            Window.partitionBy(*part_cols)
-            if part_cols
-            else Window.partitionBy()
-        ).orderBy(lin.asc()).rangeBetween(-(n - 1), 0)
-        if not (filtered_cols & set(chain)):
-            for alias, m in aliases.items():
-                out = out.withColumn(
-                    alias, _AGG[agg](cube.measure_alias(m)).over(w)
-                )
-            continue
-        base = agg_excluding(frozenset(chain))
-        rolled = base.select(
-            *[F.col(c).alias(f"__lpk_{c}") for c in gcols],
-            *[
-                _AGG[agg](cube.measure_alias(m)).over(w).alias(a)
-                for a, m in aliases.items()
-            ],
-        )
-        cond = None
-        for c in gcols:
-            term = F.col(c) == F.col(f"__lpk_{c}")
-            cond = term if cond is None else cond & term
-        out = out.join(rolled, cond, "left").drop(
-            *[f"__lpk_{c}" for c in gcols]
-        )
-    return out
-
-
-def _bp_alias(expr, cube: CubeDef) -> str:
-    """Deterministic output column for a ``("bp", measure, dim, level,
-    which)`` tuple — one per (level, opening/closing, measure)."""
-    _, name, dim, level, which = expr
-    safe = re.sub(r"[^a-z0-9]+", "_", f"{dim}_{level}".lower())
-    return f"__bp_{safe}_{which}_{cube.measure_alias(name)}"
-
-
-def _collect_bp_specs(expr, cube: CubeDef, calc_members: dict, out: dict):
-    """OPENINGPERIOD/CLOSINGPERIOD specs, keyed ``(dim, level,
-    which)``."""
-    _collect_specs(
-        expr, cube, calc_members, out, "bp",
-        lambda e: (e[2].lower(), e[3].lower(), e[4]), _bp_alias,
-    )
-
-
-def _attach_boundary_periods(
-    out: DataFrame,
-    sel: MdxSelect,
-    cube: CubeDef,
-    filtered_cols: set,
-    agg_excluding: Callable[[frozenset], DataFrame],
-) -> DataFrame:
-    """Compute ``([Measures].[M], OPENINGPERIOD/CLOSINGPERIOD(
-    [Dim].[Level]))`` columns — the measure at the FIRST/LAST sibling
-    period under the current cell's ancestor (the "vs January" /
-    "vs year-end" gesture): for each cell, ``min_by/max_by(measure,
-    level_key)`` over a window partitioned by the level's ancestor
-    chain plus every non-hierarchy grouping column. Cell×cell, never a
-    second fact scan — the SQL shape is ``first_value() OVER
-    (PARTITION BY anio ORDER BY mes [DESC])``, which is the oracle.
-
-    "First/last" means the first/last PRESENT period: this translator's
-    members are value-keyed (an absent January is not a member — the
-    same enumeration ``.Members`` uses everywhere), so a year whose
-    data starts in February opens at February, where a
-    dimension-table-backed Mondrian would return January's empty cell.
-
-    Reads the CUBE like the other time-intelligence tuples: a dice on
-    the level's OWN column (``{[Fecha].[Mes].[6]}`` with a
-    vs-January member) would make June its own "opening period", so
-    the boundary is then computed over a re-aggregation WITHOUT that
-    dice and LEFT-joined back. Dices on the ancestors are harmless
-    (a partition is read only within itself) and stay applied.
-    """
-    specs: dict = {}
-    for name in sel.columns:
-        if not cube.has_measure(name):
-            expr = next(
-                v for k, v in sel.calc_members.items()
-                if k.lower() == name.lower()
-            )
-            _collect_bp_specs(expr, cube, sel.calc_members, specs)
-    _collect_wrapper_specs(sel, cube, _collect_bp_specs, specs)
-    if not specs:
-        return out
-    if len(sel.grouping_sets) != 1 or not sel.grouping_sets[0]:
-        raise MdxError(
-            "OPENINGPERIOD/CLOSINGPERIOD need a single-grain rows axis "
-            "— over an [(All)] lattice the boundary would mix grains"
-        )
-    gcols = sel.grouping_sets[0]
-    for (_dl, _ll, which), (expr0, aliases) in specs.items():
-        dim, level = expr0[2], expr0[3]
-        chain = cube.level_chain(dim, level)
-        for c in chain:
-            if c not in gcols:
-                raise MdxError(
-                    f"{which.upper()}PERIOD anchors [{dim}].[{level}] "
-                    f"but its key column {c!r} is not on the rows axis"
-                )
-        child = chain[-1]
-        part_cols = [c for c in gcols if c != child]
-        w = (
-            Window.partitionBy(*part_cols)
-            if part_cols
-            else Window.partitionBy()
-        )
-        pick = F.min_by if which == "opening" else F.max_by
-        if child not in filtered_cols:
-            for alias, m in aliases.items():
-                out = out.withColumn(
-                    alias,
-                    pick(F.col(cube.measure_alias(m)), F.col(child)).over(w),
-                )
-            continue
-        base = agg_excluding(frozenset({child}))
-        bnd = base.select(
-            *[F.col(c).alias(f"__bpk_{c}") for c in gcols],
-            *[
-                pick(F.col(cube.measure_alias(m)), F.col(child))
-                .over(w)
-                .alias(a)
-                for a, m in aliases.items()
-            ],
-        )
-        cond = None
-        for c in gcols:
-            term = F.col(c) == F.col(f"__bpk_{c}")
-            cond = term if cond is None else cond & term
-        out = out.join(bnd, cond, "left").drop(
-            *[f"__bpk_{c}" for c in gcols]
-        )
-    return out
-
-
 def _disjunction_pred(src: DataFrame, disjunction: list) -> Column:
     """The compound-slicer predicate: OR of per-tuple ANDs, each term
     an equality against the member coerced to the column's type — ONE
@@ -2781,226 +2277,251 @@ def _disjunction_pred(src: DataFrame, disjunction: list) -> Column:
     return pred
 
 
-def _rank_alias(expr, cube: CubeDef) -> str:
-    """Deterministic output column for a ``("rank", measure, dim,
-    level)`` expression — one per (level, measure)."""
-    _, name, dim, level = expr
-    safe = re.sub(r"[^a-z0-9]+", "_", f"{dim}_{level}".lower())
-    return f"__rank_{safe}_{cube.measure_alias(name)}"
+# -- time intelligence --------------------------------------------------------
+# A time-intelligence member parses to ("ti", family, measure, dim, level,
+# params), params being what the family's MDX form takes beyond the level:
+#   pp    ([M], PARALLELPERIOD([D].[L], k))                 (k,)
+#   ptd   SUM(PERIODSTODATE([D].[L]), [M])                  ()
+#   lp    SUM|AVG(LASTPERIODS(n, [D].[L].CurrentMember), [M])
+#                                                           (n, "sum"|"avg")
+#   bp    ([M], OPENINGPERIOD|CLOSINGPERIOD([D].[L]))       (function name,)
+#   rank  RANK([D].[L].CurrentMember, [D].[L].Members, [M]) ()
+# Every distinct (family, level, params) is a SPEC, computed once over the
+# aggregate's cells — cell×cell, never a second fact scan — and attached
+# as one hidden column per measure (execute_select), before the wrappers
+# evaluate. Each family's value moves ALONG some grouping columns (the
+# shifted key, the window's order or rank set) and is read per partition
+# of the others. It reads the CUBE, not the axis selection: a dice on an
+# along column would hide the cells the value needs, so the value is then
+# computed over a re-aggregation WITHOUT those dices and LEFT-joined back
+# (dices on the other columns are harmless and stay applied).
 
-
-def _collect_rank_specs(expr, cube: CubeDef, calc_members: dict, out: dict):
-    """RANK specs, keyed ``(dim, level)``."""
-    _collect_specs(
-        expr, cube, calc_members, out, "rank",
-        lambda e: (e[2].lower(), e[3].lower()), _rank_alias,
-    )
-
-
-def _attach_ranks(
-    out: DataFrame,
-    sel: MdxSelect,
-    cube: CubeDef,
-    filtered_cols: set,
-    agg_excluding: Callable[[frozenset], DataFrame],
-) -> DataFrame:
-    """Compute ``RANK([Dim].[Level].CurrentMember,
-    [Dim].[Level].Members, [Measures].[M])`` columns — the cell's
-    1-based position among the level's members by the measure
-    descending (the league-table gesture): ``F.rank()`` over a window
-    partitioned by the grouping columns OUTSIDE the level's chain,
-    ordered by the measure desc. Equal values share a rank
-    (competition ranking, SQL RANK() — both engines agree, so no
-    tie-break is needed for determinism). Cell×cell, never the fact.
-
-    Reads the CUBE like the other attach families: ``.Members`` is the
-    level's FULL member set, so a dice on any chain column ("show 1997
-    and its rank among all years") recomputes the rank over a
-    re-aggregation WITHOUT the chain dices and LEFT-joins it back;
-    dices outside the chain (a segment slicer) stay applied — the rank
-    is read within the slicer context, Mondrian's evaluation order.
-    The ONE restriction that survives the recompute is a FROM
-    (SELECT ...) sub-select: a sub-select defines the SUBCUBE, and a
-    set enumeration like ``.Members`` shrinks with it (a year that is
-    3rd overall but 2nd inside the sub-select ranks 2nd) — unlike the
-    coordinate-shift families (PARALLELPERIOD & co), which read past
-    the sub-select exactly as they read past dices."""
-    specs: dict = {}
-    for name in sel.columns:
-        if not cube.has_measure(name):
-            expr = next(
-                v for k, v in sel.calc_members.items()
-                if k.lower() == name.lower()
-            )
-            _collect_rank_specs(expr, cube, sel.calc_members, specs)
-    _collect_wrapper_specs(sel, cube, _collect_rank_specs, specs)
-    if not specs:
-        return out
-    if len(sel.grouping_sets) != 1 or not sel.grouping_sets[0]:
-        raise MdxError(
-            "RANK needs a single-grain rows axis — over an [(All)] "
-            "lattice the ranking would mix grains"
-        )
-    gcols = sel.grouping_sets[0]
-    # only AXIS dices force the recompute: a sub-select restriction is
-    # the subcube and the ranked .Members shrinks with it, so ranking
-    # the already-restricted cells directly IS the subcube rank
-    dice_cols = (
-        set(sel.member_filters)
-        | set(sel.slicer_filters)
-        | set(sel.exclude_filters)
-        | {c for terms in sel.slicer_disjunction for c, _v in terms}
-    )
-    for (_dl, _ll), (expr0, aliases) in specs.items():
-        dim, level = expr0[2], expr0[3]
-        chain = cube.level_chain(dim, level)
-        for c in chain:
-            if c not in gcols:
-                raise MdxError(
-                    f"RANK ranks [{dim}].[{level}] members but its key "
-                    f"column {c!r} is not on the rows axis"
-                )
-        part_cols = [c for c in gcols if c not in chain]
-        def _w(m):
-            key = F.col(cube.measure_alias(m)).desc()
-            return (
-                Window.partitionBy(*part_cols).orderBy(key)
-                if part_cols
-                else Window.orderBy(key)
-            )
-        if not (dice_cols & set(chain)):
-            for alias, m in aliases.items():
-                out = out.withColumn(alias, F.rank().over(_w(m)))
-            continue
-        base = agg_excluding(frozenset(chain), True)
-        ranked = base.select(
-            *[F.col(c).alias(f"__rkk_{c}") for c in gcols],
-            *[
-                F.rank().over(_w(m)).alias(a)
-                for a, m in aliases.items()
-            ],
-        )
-        cond = None
-        for c in gcols:
-            term = F.col(c) == F.col(f"__rkk_{c}")
-            cond = term if cond is None else cond & term
-        out = out.join(ranked, cond, "left").drop(
-            *[f"__rkk_{c}" for c in gcols]
-        )
-    return out
-
-
+_TI_KEY = "__tik_"  # prefix of the right side's keys in a join-back
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
-def _join_parallel_periods(
-    out: DataFrame,
-    sel: MdxSelect,
-    cube: CubeDef,
-    filtered_cols: set,
-    agg_excluding: Callable[[frozenset], DataFrame],
-) -> DataFrame:
-    """LEFT-join the aggregate to itself on period-shifted keys, once
-    per distinct PARALLELPERIOD spec — the Spark-first execution of the
-    time-intelligence tuple: the shifted value is read from ANOTHER CELL
-    of an aggregate at the same grain (cells are tiny at any fact scale;
-    the join is cell×cell and broadcastable), never from a second fact
-    scan. A missing prior cell yields NULL, which propagates through the
-    calculated expression — MDX empty-cell semantics and SQL NULL
-    arithmetic agree, so the oracle is a plain self-LEFT-JOIN.
+def _ti_alias(expr, cube: CubeDef) -> str:
+    """Deterministic output column of a time-intelligence node: one per
+    (spec, measure), shared by every expression that references the
+    same value."""
+    _, family, name, dim, level, params = expr
+    safe = re.sub(r"[^a-z0-9]+", "_", f"{dim}_{level}".lower())
+    tail = "".join(f"{p}_" for p in params)
+    return f"__{family}_{safe}_{tail}{cube.measure_alias(name)}"
 
-    The join's RIGHT side is ``out`` itself — UNLESS the query dices the
-    shifted level's columns (a rows-axis member pick, slicer, or
-    sub-select on the time dimension: ``rows {[Fecha].[Anio].[2025]}``
-    with a YoY member). Mondrian evaluates the shifted tuple against the
-    CUBE, not against the axis selection — the prior-period cell exists
-    even when the axis excludes it — so the right side is then rebuilt
-    by ``agg_excluding(shift columns)``: the same aggregation with the
-    dices on the shifted columns removed (all other filters kept — the
-    slicer context applies to the prior period too). One extra scan+agg,
-    only in the diced case.
 
-    Shift depth: the hierarchy TOP level (integer-keyed exact ``anio -
-    k`` — year-over-year), or ONE level below it when the child level
-    declares a fixed cycle in ``CubeDef.period_lengths`` (a 1..12 month
-    key — month-over-month, the wrap linearized as ``anio*12 + (mes-1)
-    - k``; January's prior month lands in the previous year's December
-    by plain integer arithmetic, no CASE fabrication). Deeper levels
-    (ragged cycles — days-per-month) stay loud refusals.
-    """
+def _ti_specs(sel: MdxSelect, cube: CubeDef) -> dict:
+    """The time-intelligence specs a SELECT evaluates, as ``{family:
+    {(dim, level, *params): (node, {alias: measure})}}`` in
+    first-reference order: one join or window per spec, projecting every
+    measure it needs."""
     specs: dict = {}
-    for name in sel.columns:
-        if not cube.has_measure(name):
-            expr = next(
-                v for k, v in sel.calc_members.items()
-                if k.lower() == name.lower()
-            )
-            _collect_pp_specs(expr, cube, sel.calc_members, specs)
-    _collect_wrapper_specs(sel, cube, _collect_pp_specs, specs)
-    if not specs:
-        return out
-    if len(sel.grouping_sets) != 1 or not sel.grouping_sets[0]:
+    for expr in _select_exprs(sel):
+        for node in _measure_leaves(expr, cube, sel.calc_members):
+            if node[0] == "ti":
+                _, family, name, dim, level, params = node
+                key = (dim.lower(), level.lower(), *params)
+                spec = specs.setdefault(family, {}).setdefault(key, (node, {}))
+                spec[1][_ti_alias(node, cube)] = name
+    return specs
+
+
+def _period_key(cube: CubeDef, dim, level, chain, prefix="") -> Column:
+    """A level's integer period key: the column itself at the hierarchy
+    top, ``top*period + (child-1)`` one level below it (the cycle
+    ``CubeDef.period_lengths`` declares), so January shifts or windows
+    back into the prior December by plain integer arithmetic."""
+    if len(chain) == 1:
+        return F.col(prefix + chain[0])
+    top, sub = chain
+    return F.col(prefix + top) * cube.level_period(dim, level) + (
+        F.col(prefix + sub) - 1
+    )
+
+
+def _window(part_cols: list, *order: Column):
+    return (
+        Window.partitionBy(*part_cols).orderBy(*order)
+        if part_cols
+        else Window.orderBy(*order)
+    )
+
+
+def _ytd_order(cube: CubeDef, dim, level, chain, gcols) -> list[str]:
+    """PERIODSTODATE runs along the deeper levels of the anchor's
+    hierarchy that are on the axis, in hierarchy order."""
+    hlevels = next(
+        (lv for d, lv in cube.hierarchies.items() if d.lower() == dim.lower()),
+        [],
+    )
+    order_cols = [
+        cube.level_column(dim, lv)
+        for lv in hlevels[len(chain) :]
+        if cube.level_column(dim, lv) in gcols
+    ]
+    if not order_cols:
         raise MdxError(
-            "PARALLELPERIOD needs a single-grain rows axis — over an "
-            "[(All)] lattice the shifted tuple would mix grains"
+            f"PERIODSTODATE([{dim}].[{level}]) needs a level BELOW "
+            f"[{level}] from the same declared hierarchy on the "
+            "rows axis to order the running sum"
         )
-    gcols = sel.grouping_sets[0]
-    dtypes = dict(out.dtypes)
-    for (_dl, _ll, k), (expr0, aliases) in specs.items():
-        dim, level = expr0[2], expr0[3]
-        chain = cube.level_chain(dim, level)
-        if len(chain) > 2:
-            raise MdxError(
-                f"PARALLELPERIOD([{dim}].[{level}]) shifts more than "
-                "one level below the hierarchy top — such cycles are "
-                "ragged (days-per-month) and the wrap arithmetic would "
-                "be fabricated"
-            )
-        for col in chain:
-            if col not in gcols:
-                raise MdxError(
-                    f"PARALLELPERIOD shifts [{dim}].[{level}] but its "
-                    f"key column {col!r} is not on the rows axis"
-                )
-            if dtypes.get(col) not in _INT_TYPES:
-                raise MdxError(
-                    f"PARALLELPERIOD needs integer-keyed levels; "
-                    f"{col!r} is {dtypes.get(col)}"
-                )
-        if len(chain) == 1:
-            shift_key = F.col(chain[0]) - F.lit(k)
-            right_key = F.col(f"__ppr_{chain[0]}")
-        else:
-            period = cube.level_period(dim, level)
-            top, sub = chain
-            shift_key = (
-                F.col(top) * period + (F.col(sub) - 1) - F.lit(k)
-            )
-            right_key = (
-                F.col(f"__ppr_{top}") * period
-                + (F.col(f"__ppr_{sub}") - 1)
-            )
-        base = (
-            agg_excluding(frozenset(chain))
-            if filtered_cols & set(chain)
-            else out
+    return order_cols
+
+
+# Column builders: (cube, dim, level, params, chain, along, part_cols) ->
+# (measure -> value Column, shifted-join condition or None for a window).
+
+
+def _pp_shift(cube, dim, level, params, chain, along, part_cols):
+    """The measure of the cell ``k`` periods earlier: a LEFT self-join
+    of the aggregate on the shifted period key (a missing prior cell is
+    NULL, MDX's empty cell)."""
+    (k,) = params
+    shifted = _period_key(cube, dim, level, chain) - F.lit(k)
+    cond = shifted == _period_key(cube, dim, level, chain, _TI_KEY)
+    return (lambda m: F.col(cube.measure_alias(m))), cond
+
+
+def _ytd_window(cube, dim, level, params, chain, along, part_cols):
+    """Running sum from the anchor member's first period to the cell."""
+    w = _window(part_cols, *[F.col(c).asc() for c in along])
+    return (lambda m: F.sum(cube.measure_alias(m)).over(w)), None
+
+
+def _trailing_window(cube, dim, level, params, chain, along, part_cols):
+    """SUM/AVG over ``RANGE n-1 PRECEDING .. CURRENT ROW`` of the period
+    key: a missing period adds nothing but still takes its slot."""
+    n, agg = params
+    key = _period_key(cube, dim, level, chain)
+    w = Window.partitionBy(*part_cols).orderBy(key.asc()).rangeBetween(
+        -(n - 1), 0
+    )
+    fn = F.sum if agg == "sum" else F.avg
+    return (lambda m: fn(cube.measure_alias(m)).over(w)), None
+
+
+def _boundary_window(cube, dim, level, params, chain, along, part_cols):
+    """The measure at the first/last PRESENT sibling period under the
+    cell's ancestor (members are value-keyed: a year whose data starts
+    in February opens at February)."""
+    pick = F.min_by if params[0] == "OPENINGPERIOD" else F.max_by
+    w = Window.partitionBy(*part_cols)
+    return (
+        lambda m: pick(F.col(cube.measure_alias(m)), F.col(along[0])).over(w)
+    ), None
+
+
+def _rank_window(cube, dim, level, params, chain, along, part_cols):
+    """``RANK()`` by the measure descending: equal values share a rank
+    (competition ranking, as in SQL)."""
+    return (
+        lambda m: F.rank().over(
+            _window(part_cols, F.col(cube.measure_alias(m)).desc())
         )
-        right = base.select(
-            *[F.col(c).alias(f"__ppr_{c}") for c in gcols],
-            *[
-                F.col(cube.measure_alias(m)).alias(a)
-                for a, m in aliases.items()
-            ],
-        )
-        cond = shift_key == right_key
-        for c in gcols:
-            if c in chain:
-                continue
-            cond = cond & (F.col(c) == F.col(f"__ppr_{c}"))
-        out = out.join(right, cond, "left").drop(
-            *[f"__ppr_{c}" for c in gcols]
-        )
-    return out
+    ), None
+
+
+class _TiFamily(NamedTuple):
+    """What differs between the time-intelligence families; the attach
+    loop in :func:`execute_select` does the rest."""
+
+    fn: str  # the MDX function, in messages
+    reads: str  # "<fn> <reads> BASE measures only"
+    lattice: str  # the refusal over an [(All)] lattice
+    uses: str  # "<uses> but its key column ... is not on the rows axis"
+    # integer-keyed families: the refusal below the hierarchy's second level
+    ragged: str | None
+    # (cube, dim, level, chain, gcols) -> the columns the value moves
+    # along: their dice forces the recompute, the rest partition it
+    along: Callable
+    # the recompute keeps FROM (SELECT ...) restrictions: a set
+    # enumeration like RANK's .Members shrinks with the subcube, where
+    # the coordinate shifts read past it as they read past dices
+    keep_subcube: bool
+    build: Callable  # the column builder above
+
+
+def _chain(cube, dim, level, chain, gcols):
+    return chain
+
+
+# in attach order
+_TI_FAMILIES = {
+    "pp": _TiFamily(
+        fn="PARALLELPERIOD",
+        reads="tuples shift",
+        lattice="PARALLELPERIOD needs a single-grain rows axis — over an "
+        "[(All)] lattice the shifted tuple would mix grains",
+        uses="PARALLELPERIOD shifts [{dim}].[{level}]",
+        ragged="shifts more than one level below the hierarchy top — such "
+        "cycles are ragged (days-per-month) and the wrap arithmetic would "
+        "be fabricated",
+        along=_chain,
+        keep_subcube=False,
+        build=_pp_shift,
+    ),
+    "ptd": _TiFamily(
+        fn="PERIODSTODATE",
+        reads="sums",
+        lattice="PERIODSTODATE needs a single-grain rows axis — over an "
+        "[(All)] lattice the running sum would mix grains",
+        uses="PERIODSTODATE anchors [{dim}].[{level}]",
+        ragged=None,
+        along=_ytd_order,
+        keep_subcube=False,
+        build=_ytd_window,
+    ),
+    "lp": _TiFamily(
+        fn="LASTPERIODS",
+        reads="aggregates",
+        lattice="LASTPERIODS needs a single-grain rows axis — over an "
+        "[(All)] lattice the trailing window would mix grains",
+        uses="LASTPERIODS windows [{dim}].[{level}]",
+        ragged="is more than one level below the hierarchy top — such "
+        "cycles are ragged and the window key would be fabricated",
+        along=_chain,
+        keep_subcube=False,
+        build=_trailing_window,
+    ),
+    "bp": _TiFamily(
+        fn="OPENINGPERIOD/CLOSINGPERIOD",
+        reads="tuples read",
+        lattice="OPENINGPERIOD/CLOSINGPERIOD need a single-grain rows axis "
+        "— over an [(All)] lattice the boundary would mix grains",
+        uses="{0} anchors [{dim}].[{level}]",
+        ragged=None,
+        along=lambda cube, dim, level, chain, gcols: chain[-1:],
+        keep_subcube=False,
+        build=_boundary_window,
+    ),
+    "rank": _TiFamily(
+        fn="RANK",
+        reads="orders by",
+        lattice="RANK needs a single-grain rows axis — over an [(All)] "
+        "lattice the ranking would mix grains",
+        uses="RANK ranks [{dim}].[{level}] members",
+        ragged=None,
+        along=_chain,
+        keep_subcube=True,
+        build=_rank_window,
+    ),
+}
+
+
+def _select_exprs(sel: MdxSelect):
+    """Every measure expression a SELECT evaluates over its cells: the
+    COLUMNS-axis members as references, then what the rows-axis wrappers
+    carry, outermost first (HEAD/TAIL cut in member order and carry
+    none)."""
+    for name in sel.columns:
+        yield ("ref", name)
+    for w in sel.wrappers:
+        if w[0] in _MEASURE_CUTS:
+            yield ("ref", w[2])
+        elif w[0] == "order":
+            yield w[1]
+        elif w[0] == "filter":
+            yield from _cond_exprs(w[1])
 
 
 def needed_base_measures(sel: MdxSelect, cube: CubeDef) -> list[str]:
@@ -3008,32 +2529,11 @@ def needed_base_measures(sel: MdxSelect, cube: CubeDef) -> list[str]:
     plus the transitive dependencies of calculated members on the axis
     plus TOPCOUNT/FILTER wrapper references, in first-need order."""
     needed: list[str] = []
-    for name in sel.columns:
-        if cube.has_measure(name):
+    for expr in _select_exprs(sel):
+        for node in _measure_leaves(expr, cube, sel.calc_members):
+            name = node[2] if node[0] == "ti" else node[1]
             if name.lower() not in {m.lower() for m in needed}:
                 needed.append(name)
-        else:
-            expr = next(
-                v for k, v in sel.calc_members.items()
-                if k.lower() == name.lower()
-            )
-            _collect_base_refs(expr, cube, sel.calc_members, needed)
-    for w in sel.wrappers:
-        if w[0] in ("head", "tail"):
-            continue  # natural-order cuts reference no measure
-        if w[0] in (
-            "topcount", "bottomcount",
-            "toppercent", "bottompercent", "topsum", "bottomsum",
-        ):
-            ref = ("ref", w[2])
-        elif w[0] == "order":
-            ref = w[1]
-        else:
-            exprs = list(_cond_exprs(w[1]))
-            ref = exprs[0]
-            for e in exprs[1:]:
-                ref = ("bin", "+", ref, e)
-        _collect_base_refs(ref, cube, sel.calc_members, needed)
     if not needed:
         raise MdxError("query selects no base measures to aggregate")
     return needed
@@ -3143,22 +2643,15 @@ def execute_select(
         return src
 
     out = aggregate(filtered(source))
-
-    # time-intelligence tuples: shifted-period values join in from other
-    # cells of an aggregate at the same grain BEFORE wrappers evaluate
-    # (FILTER/ORDER may reference them). When the shifted columns are
-    # diced, the prior-period cells come from a re-aggregation WITHOUT
-    # those dices (Mondrian evaluates the shifted tuple against the
-    # cube, not the axis selection).
-    filtered_cols = {col for col, _, _, _ in filters} | dis_cols
     _excl_cache: dict = {}
 
     def agg_excluding(
         skip: frozenset, keep_subcube: bool = False
     ) -> DataFrame:
         # memoized per (skip-set, subcube flavor): two diced time-intel
-        # specs on the same chain (YoY + 2-year growth) share ONE
-        # re-aggregation instead of scanning the fact once each
+        # specs along the same columns (YoY + 2-year growth, or YTD +
+        # closing month) share ONE re-aggregation instead of scanning the
+        # fact once each
         key = (skip, keep_subcube)
         if key not in _excl_cache:
             _excl_cache[key] = aggregate(
@@ -3166,24 +2659,70 @@ def execute_select(
             )
         return _excl_cache[key]
 
-    out = _join_parallel_periods(
-        out, sel, cube, filtered_cols, agg_excluding
-    )
-    # running-total (PERIODSTODATE) and trailing-window (LASTPERIODS)
-    # tuples: windows over the aggregate's cells, attached before
-    # wrappers for the same reason
-    out = _attach_periods_to_date(
-        out, sel, cube, filtered_cols, agg_excluding
-    )
-    out = _attach_last_periods(
-        out, sel, cube, filtered_cols, agg_excluding
-    )
-    out = _attach_boundary_periods(
-        out, sel, cube, filtered_cols, agg_excluding
-    )
-    out = _attach_ranks(
-        out, sel, cube, filtered_cols, agg_excluding
-    )
+    # time intelligence (see _TI_FAMILIES): each spec's values attach as
+    # columns BEFORE the wrappers evaluate (FILTER/ORDER may reference
+    # them) — families in table order, specs in first-reference order. A
+    # query without such members makes no DataFrame call here.
+    specs = _ti_specs(sel, cube)
+    for family, fam in _TI_FAMILIES.items():
+        if family not in specs:
+            continue
+        if len(sel.grouping_sets) != 1 or not sel.grouping_sets[0]:
+            raise MdxError(fam.lattice)
+        gcols = sel.grouping_sets[0]
+        dtypes = dict(out.dtypes) if fam.ragged else {}
+        # the dices a recompute drops
+        droppable = dis_cols | {
+            col
+            for col, _, _, is_sub in filters
+            if not (fam.keep_subcube and is_sub)
+        }
+        for expr, aliases in specs[family].values():
+            _, _, _, dim, level, params = expr
+            chain = cube.level_chain(dim, level)
+            if fam.ragged and len(chain) > 2:
+                raise MdxError(f"{fam.fn}([{dim}].[{level}]) {fam.ragged}")
+            for c in chain:
+                if c not in gcols:
+                    raise MdxError(
+                        f"{fam.uses.format(*params, dim=dim, level=level)} "
+                        f"but its key column {c!r} is not on the rows axis"
+                    )
+                if fam.ragged and dtypes.get(c) not in _INT_TYPES:
+                    raise MdxError(
+                        f"{fam.fn} needs integer-keyed levels; "
+                        f"{c!r} is {dtypes.get(c)}"
+                    )
+            along = fam.along(cube, dim, level, chain, gcols)
+            value, shift = fam.build(
+                cube, dim, level, params, chain, along,
+                [c for c in gcols if c not in along],
+            )
+            diced = bool(droppable & set(along))
+            if shift is None and not diced:
+                for alias, m in aliases.items():
+                    out = out.withColumn(alias, value(m))
+                continue
+            # join the values back: from a re-aggregation without the
+            # along dices, or (an undiced shift) from the aggregate itself
+            base = (
+                agg_excluding(frozenset(along), fam.keep_subcube)
+                if diced
+                else out
+            )
+            right = base.select(
+                *[F.col(c).alias(_TI_KEY + c) for c in gcols],
+                *[value(m).alias(a) for a, m in aliases.items()],
+            )
+            cond = shift
+            for c in gcols:
+                if shift is not None and c in along:
+                    continue  # matched by the shifted key
+                term = F.col(c) == F.col(_TI_KEY + c)
+                cond = term if cond is None else cond & term
+            out = out.join(right, cond, "left").drop(
+                *[_TI_KEY + c for c in gcols]
+            )
 
     def resolve(name: str) -> Column:
         return _build_expr(("ref", name), cube, sel.calc_members)
@@ -3227,9 +2766,12 @@ def execute_select(
                     .limit(n)
                     .orderBy(*sort_cols(order))
                 )
-        elif w[0] in (
-            "toppercent", "bottompercent", "topsum", "bottomsum"
-        ):
+        elif w[0] in ("topcount", "bottomcount"):
+            tag, n, measure = w
+            key = resolve(measure)
+            prevailing = [(key, tag == "topcount")] + natural
+            out = out.orderBy(*sort_cols(prevailing)).limit(n)
+        else:
             # the Pareto cut: keep the shortest prefix of the
             # (measure-ordered) set whose running total reaches the
             # threshold, INCLUDING the crossing member — a row survives
@@ -3298,11 +2840,6 @@ def execute_select(
                 )
             )
             prevailing = [(key, desc)] + natural
-        else:
-            tag, n, measure = w
-            key = resolve(measure)
-            prevailing = [(key, tag == "topcount")] + natural
-            out = out.orderBy(*sort_cols(prevailing)).limit(n)
 
     final = [F.col(c) for c in sel.group_cols]
     for name in sel.columns:

@@ -964,9 +964,9 @@ def mdx_parallelperiod_yoy_diced_q(
     member still subtracts 1996. Mondrian evaluates the shifted tuple
     against the CUBE, not the axis selection, so the translator builds
     the self-join's right side from a re-aggregation WITHOUT the dice
-    on the shifted column (operators/mdx.py:_join_parallel_periods;
-    the segment slicer stays applied — the prior period lives in the
-    same slicer context). The oracle mirrors this exactly: the per-year
+    on the shifted column (operators/mdx.py, the "pp" entry of
+    _TI_FAMILIES; the segment slicer stays applied — the prior period
+    lives in the same slicer context). The oracle mirrors this exactly: the per-year
     CTE is NOT filtered to 1997, only the outer SELECT is. Before the
     round-12 fix this shape served a silent NULL. 100 TB: the diced
     case costs one extra scan+agg of the sliced fact — the price of a
@@ -1720,7 +1720,7 @@ def mdx_rank_league_table_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal values share a rank (competition ranking), which is exactly
     SQL ``RANK()`` — the oracle's window. The translator compiles the
     member to ``F.rank()`` over the aggregated cells (operators/mdx.py
-    _attach_ranks), partitioned by any grouping columns outside the
+    _rank_window), partitioned by any grouping columns outside the
     ranked level's chain; a dice on the ranked level re-ranks over the
     UNDICED aggregation and joins back (a single picked year still
     reports its rank among all years — cube context, pinned by test).

@@ -1,11 +1,14 @@
 """Dead-code guard (no Spark): every top-level function and class of the
 package outside ``queries/`` must be referenced from code that can run it.
 
-A reference is an ``ast.Name``, an ``ast.Attribute`` or an imported name in
-the package itself or in the scripts that drive it (``bench.py``,
-``__spark_entry__.py``, ``profile_faces.py``, ``perfbench/``). Mentions in
-docstrings and comments do not count, nor do ``__init__`` re-exports and
-``__all__`` entries, nor a definition's references to itself.
+A reference is an ``ast.Name`` or an imported name in the package itself or
+in the scripts that drive it (``bench.py``, ``__spark_entry__.py``,
+``profile_faces.py``, ``perfbench/``), or an ``ast.Attribute`` whose base an
+import binds to the defining module (``olap.cube_all`` after ``from
+datawarehousefinal_spark.operators import olap``): ``F.trim`` does not vouch
+for a package ``trim``. Mentions in docstrings and comments do not count,
+nor do ``__init__`` re-exports and ``__all__`` entries, nor a definition's
+references to itself.
 """
 
 from __future__ import annotations
@@ -32,20 +35,68 @@ def _py_files(top: str) -> list[str]:
     return sorted(out)
 
 
-def _references(path: str) -> list[tuple[str | None, str]]:
-    """(owning top-level definition or None, referenced name) pairs."""
+def _module_name(path: str, root: str) -> str:
+    """Dotted module name of ``path``, a file under the directory ``root``
+    that holds its top-level package."""
+    parts = os.path.splitext(os.path.relpath(path, root))[0].split(os.sep)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _import_bindings(tree: ast.Module, module: str) -> dict[str, set[str]]:
+    """Names the file's imports bind (in any scope) -> the dotted names
+    they stand for: ``import a.b`` binds ``a``, ``import a.b as x`` and
+    ``from a import b as x`` bind ``x``, relative imports resolve against
+    ``module``."""
+    bound = defaultdict(set)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    bound[a.asname].add(a.name)
+                else:
+                    top = a.name.split(".", 1)[0]
+                    bound[top].add(top)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                pkg = module.split(".")[: -node.level]
+                base = ".".join(pkg + ([node.module] if node.module else []))
+            for a in node.names:
+                bound[a.asname or a.name].add(f"{base}.{a.name}")
+    return bound
+
+
+def _attribute_base(node: ast.Attribute) -> list[str] | None:
+    """``a.b`` of ``a.b.c`` as ["a", "b"]; None unless the base is a dotted
+    name."""
+    parts, value = [], node.value
+    while isinstance(value, ast.Attribute):
+        parts.insert(0, value.attr)
+        value = value.value
+    return [value.id] + parts if isinstance(value, ast.Name) else None
+
+
+def _references(path: str, root: str) -> list[tuple]:
+    """(owning top-level definition or None, referenced name, module)
+    triples. The module is the one an attribute's base is imported as, and
+    None for a bare or imported name."""
     tree = ast.parse(open(path, encoding="utf-8").read(), path)
     reexport = os.path.basename(path) == "__init__.py"
+    bound = _import_bindings(tree, _module_name(path, root))
     refs = []
     for stmt in tree.body:
         owner = getattr(stmt, "name", None)
         for node in ast.walk(stmt):
             if isinstance(node, ast.Name):
-                refs.append((owner, node.id))
+                refs.append((owner, node.id, None))
             elif isinstance(node, ast.Attribute):
-                refs.append((owner, node.attr))
+                base = _attribute_base(node)
+                for mod in bound.get(base[0], ()) if base else ():
+                    full = ".".join([mod] + base[1:])
+                    refs.append((owner, node.attr, full))
             elif isinstance(node, (ast.Import, ast.ImportFrom)) and not reexport:
-                refs += [(owner, a.name.rsplit(".", 1)[-1]) for a in node.names]
+                refs += [(owner, a.name.rsplit(".", 1)[-1], None)
+                         for a in node.names]
     return refs
 
 
@@ -55,18 +106,20 @@ def _unreferenced(
     """Top-level definitions of ``pkg`` (outside ``queries/``) that no file
     in ``callers`` references; ``tests_dir`` may only vouch for the
     modules in TESTED_BY_DESIGN."""
-    used = defaultdict(set)  # name -> {(file, owner)}
+    root = os.path.dirname(pkg)
+    used = defaultdict(set)  # (module or None, name) -> {(file, owner)}
     for path in callers:
-        for owner, name in _references(path):
-            used[name].add((path, owner))
-    tested = {name for path in _py_files(tests_dir)
-              for _owner, name in _references(path)}
+        for owner, name, mod in _references(path, root):
+            used[mod, name].add((path, owner))
+    tested = {(mod, name) for path in _py_files(tests_dir)
+              for _owner, name, mod in _references(path, root)}
 
     dead = []
     for path in _py_files(pkg):
         rel = os.path.relpath(path, pkg)
         if rel.startswith("queries" + os.sep):
             continue
+        module = _module_name(path, root)
         tree = ast.parse(open(path, encoding="utf-8").read(), path)
         for stmt in tree.body:
             if not isinstance(
@@ -74,9 +127,12 @@ def _unreferenced(
             ):
                 continue
             name = stmt.name
-            if used[name] - {(path, name)} or name in GENERATORS:
+            refs = used[None, name] | used[module, name]
+            if refs - {(path, name)} or name in GENERATORS:
                 continue
-            if rel in TESTED_BY_DESIGN and name in tested:
+            if rel in TESTED_BY_DESIGN and (
+                (None, name) in tested or (module, name) in tested
+            ):
                 continue
             dead.append(f"{rel}::{name}")
     return dead
@@ -123,6 +179,22 @@ def test_guard_counts_name_attribute_and_import_references(tmp_path):
                      "ops.by_attr\nops.caller()\n",
     })
     assert dead == ["ops.py::unused"]
+
+
+def test_guard_counts_attributes_only_through_the_defining_module(tmp_path):
+    dead = _dead_in(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/textnorm.py": "def trim(): pass\n"
+                           "def strip(): pass\n"
+                           "def fold(): pass\n",
+        "pkg/ops.py": "from pyspark.sql import functions as F\n"
+                      "from pkg import textnorm as tn\n"
+                      "from . import textnorm\n"
+                      "def run(c):\n"
+                      "    return F.trim(c), tn.strip(c), textnorm.fold(c)\n",
+        "driver.py": "import pkg.ops\npkg.ops.run\n",
+    })
+    assert dead == ["textnorm.py::trim"]
 
 
 def test_guard_ignores_docstring_mentions_and_self_reference(tmp_path):

@@ -2247,6 +2247,19 @@ def test_mdx_descendants_at_own_level_is_the_member(spark):
     assert [(r["anio"], r["sum_medida"]) for r in rows] == [(2024, 60.0)]
 
 
+def test_mdx_descendants_at_own_level_below_top_is_the_member(spark):
+    # a below-top anchor is refused by CubeDef.descendant_level, but a
+    # target at the anchor's own level never gets there: it is {m}
+    q = (
+        "SELECT {[Measures].[Total]} ON COLUMNS, %s ON ROWS FROM [Toy]"
+    )
+    desc = mdx_query(
+        _hier_cube(spark), q % "DESCENDANTS([Fecha].[Mes].[1], [Fecha].[Mes])"
+    ).collect()
+    member = mdx_query(_hier_cube(spark), q % "{[Fecha].[Mes].[1]}").collect()
+    assert desc and sorted(map(tuple, desc)) == sorted(map(tuple, member))
+
+
 def test_mdx_descendants_in_crossjoin_branch(spark):
     rows = mdx_query(
         _hier_cube(spark),
@@ -3225,6 +3238,13 @@ _SEL = "SELECT {[Measures].[Total]} ON COLUMNS, "
         ),
         pytest.param(
             "hier",
+            _SEL + "DESCENDANTS([Fecha].[Mes].[1], [Fecha].[Anio]) "
+            "ON ROWS FROM [Toy]",
+            "ambiguous without its ancestor chain",
+            id="descendants_target_above_anchor",
+        ),
+        pytest.param(
+            "hier",
             _SEL + "DESCENDANTS([Fecha].[Anio], [Fecha].[Mes]) "
             "ON ROWS FROM [Toy]",
             "DESCENDANTS needs a .* anchor",
@@ -3322,6 +3342,13 @@ _SEL = "SELECT {[Measures].[Total]} ON COLUMNS, "
             "ON ROWS FROM [Toy]",
             "EXCEPT's second argument",
             id="except_removes_a_crossjoin",
+        ),
+        pytest.param(
+            "toy",
+            _SEL + "EXCEPT({[Persona].[Pais].Members}, {}) "
+            "ON ROWS FROM [Toy]",
+            r"expected \[segment\], got '\}'",
+            id="except_removes_an_empty_set",
         ),
         pytest.param(
             "toy",

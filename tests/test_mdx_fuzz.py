@@ -426,6 +426,90 @@ def test_mdx_time_intelligence_agrees_with_independent_sql(spark, seed):
     )
 
 
+# -- every time-intelligence family in one query -----------------------------
+# YoY, YTD, a 2-month rolling sum, a closing-period value and a rank ride
+# one SELECT: the families attach one after another onto the same
+# aggregate, and the diced ones share the cube-context re-aggregations.
+
+_MULTI_TI_MEMBERS = (
+    "WITH MEMBER [Measures].[Yoy] AS '[Measures].[Total] - "
+    "([Measures].[Total], PARALLELPERIOD([Fecha].[Anio], 1))' "
+    "MEMBER [Measures].[Ytd] AS "
+    "'SUM(PERIODSTODATE([Fecha].[Anio]), [Measures].[Total])' "
+    "MEMBER [Measures].[Roll] AS "
+    "'SUM(LASTPERIODS(2, [Fecha].[Mes].CurrentMember), "
+    "[Measures].[Cantidad])' "
+    "MEMBER [Measures].[Cierre] AS "
+    "'([Measures].[Total], CLOSINGPERIOD([Fecha].[Mes]))' "
+    "MEMBER [Measures].[Puesto] AS 'RANK([Fecha].[Mes].CurrentMember, "
+    "[Fecha].[Mes].Members, [Measures].[Cantidad])' "
+)
+
+
+def _render_multi_ti_mdx(dice_mes, slicer) -> str:
+    rows = (
+        "{[Fecha].[Mes].Members}"
+        if dice_mes is None
+        else f"{{[Fecha].[Mes].[{dice_mes}]}}"
+    )
+    q = (
+        f"{_MULTI_TI_MEMBERS}SELECT {{[Measures].[Total], "
+        "[Measures].[Cantidad], [Measures].[Yoy], [Measures].[Ytd], "
+        "[Measures].[Roll], [Measures].[Cierre], [Measures].[Puesto]} "
+        f"ON COLUMNS, {rows} ON ROWS FROM [Fuzz]"
+    )
+    if slicer:
+        q += f" WHERE ([Cliente].[Seg].[{slicer}])"
+    return q
+
+
+def _render_multi_ti_sql(dice_mes, slicer) -> str:
+    where = f"WHERE seg = '{slicer}'" if slicer else ""
+    sql = (
+        "WITH per AS (SELECT anio, mes, sum(medida) AS sum_medida, "
+        f"count(medida) AS n FROM star {where} GROUP BY anio, mes) "
+        "SELECT a.anio, a.mes, a.sum_medida, a.n, "
+        "a.sum_medida - b.sum_medida AS yoy, "
+        "sum(a.sum_medida) OVER (PARTITION BY a.anio ORDER BY a.mes) "
+        "AS ytd, "
+        "sum(a.n) OVER (ORDER BY a.anio * 12 + (a.mes - 1) "
+        "RANGE BETWEEN 1 PRECEDING AND CURRENT ROW) AS roll, "
+        "first_value(a.sum_medida) OVER (PARTITION BY a.anio "
+        "ORDER BY a.mes DESC) AS cierre, "
+        "rank() OVER (ORDER BY a.n DESC) AS puesto "
+        "FROM per a LEFT JOIN per b ON b.anio = a.anio - 1 "
+        "AND b.mes = a.mes"
+    )
+    if dice_mes is not None:
+        # every family reads the cube: the dice filters the result only
+        sql = f"SELECT * FROM ({sql}) WHERE mes = {dice_mes}"
+    return sql
+
+
+_MULTI_TI_CASES = [
+    (dice, slicer) for dice in (None, 2, 3) for slicer in (None, "X")
+]
+
+
+@pytest.mark.parametrize("dice_mes,slicer", _MULTI_TI_CASES)
+def test_mdx_all_time_intelligence_families_in_one_query(
+    spark, dice_mes, slicer
+):
+    mdx = _render_multi_ti_mdx(dice_mes, slicer)
+    sql = _render_multi_ti_sql(dice_mes, slicer)
+    got = _norm([tuple(r) for r in mdx_query(_cube(spark), mdx).collect()])
+    con = duckdb.connect()
+    try:
+        con.register("star", _PDF)
+        want = _norm(con.execute(sql).fetchall())
+    finally:
+        con.close()
+    assert got, f"empty result\nMDX: {mdx}"
+    assert got == want, (
+        f"MDX: {mdx}\nSQL: {sql}\ngot {got}\nwant {want}"
+    )
+
+
 # -- custom-group battery ------------------------------------------------------
 # WITH MEMBER [Dim].[Level].[Name] AS 'AGGREGATE({...})' — the remap
 # must agree with an independently-written CASE ... GROUP BY, under
