@@ -27,19 +27,18 @@ mechanism Spark-first:
   medians don't combine — so a query needing one routes to a table
   only at EXACT grain (no re-fold), falls back to the fact otherwise,
   and incremental ingest refuses the cube loudly.
-- :func:`mdx_query_navigated` runs the query against the chosen
-  rollup through the same execution core as the fact path
+- The front door routes: tables registered on ``CubeDef.aggregates``
+  (``dataclasses.replace(cube, aggregates=[...])``) make plain
+  ``mdx_query`` consult the navigator on EVERY query — Mondrian's
+  deployment shape, where ``<AggName>`` declarations live on the
+  schema and clients never address aggregates explicitly. The chosen
+  rollup runs through the same execution core as the fact path
   (operators/mdx.py:execute_select) — calculated members, TOPCOUNT,
   FILTER, hasAll grouping-set lattices all work unchanged, because
   the only thing that differs is how a base measure aggregates
   (re-fold the states instead of folding the fact). No covering
-  table → the fact star answers, exactly Mondrian's fallback.
-- Front-door registration (round 12): appending tables to
-  ``CubeDef.aggregates`` makes plain ``mdx_query`` consult the
-  navigator on EVERY query — Mondrian's deployment shape, where
-  ``<AggName>`` declarations live on the schema and clients never
-  address aggregates explicitly. ``mdx_query_navigated`` remains the
-  explicit-list variant (and what the oracled faces pin).
+  table → the fact star answers, exactly Mondrian's fallback; a
+  caller that must route passes a ``star_builder`` that raises.
 - :func:`ingest_into_aggregate` maintains a rollup INCREMENTALLY: a
   batch of new star rows folds into the existing cells at O(batch +
   touched cells) — the fact is never re-read — because every stored
@@ -69,7 +68,6 @@ from datawarehousefinal_spark.operators.mdx import (
     CubeDef,
     MdxError,
     MdxSelect,
-    execute_select,
     needed_base_measures,
     parse_mdx,
 )
@@ -187,7 +185,7 @@ def materialize_aggregate(
     grain = grain_columns(cube, levels)
     states = [s for _a, _n, s in _state_columns(cube)]
     star = source if source is not None else cube.star_builder(*star_args)
-    rollup = star.groupBy(*grain).agg(*states)
+    pcol = None
     if partition_by is not None:
         if path is None:
             raise MdxError(
@@ -208,10 +206,26 @@ def materialize_aggregate(
                 f"partition_by column {pcol!r} is not part of the "
                 f"grain {grain}"
             )
-        rollup.write.mode("overwrite").partitionBy(pcol).parquet(path)
-        rollup = rollup.sparkSession.read.parquet(path)
-    elif path is not None:
-        rollup.write.mode("overwrite").parquet(path)
+    return _rollup(star, grain, states, name, path, pcol)
+
+
+def _rollup(
+    star: DataFrame,
+    grain: tuple[str, ...],
+    states: list[Column],
+    name: str | None,
+    path: str | None,
+    pcol: str | None = None,
+) -> AggTable:
+    """The aggregate table of ``star``'s ``states`` at ``grain``; with
+    ``path``, written to parquet (partitioned by ``pcol``) and served
+    from the read-back."""
+    rollup = star.groupBy(*grain).agg(*states)
+    if path is not None:
+        writer = rollup.write.mode("overwrite")
+        if pcol is not None:
+            writer = writer.partitionBy(pcol)
+        writer.parquet(path)
         rollup = rollup.sparkSession.read.parquet(path)
     return AggTable(
         name=name or f"agg_{'_'.join(grain)}", grain=grain, table=rollup
@@ -328,14 +342,7 @@ def choose_aggregate(
         # a custom AGGREGATE member merges grain cells even at "exact"
         # grain — overlapping distinct sets would re-fold; fact only
         return None
-    required = set(sel.group_cols)
-    required.update(sel.member_filters)
-    required.update(sel.exclude_filters)
-    required.update(sel.slicer_filters)
-    required.update(col for col, _vals in sel.subselect_filters)
-    required.update(
-        c for terms in sel.slicer_disjunction for c, _v in terms
-    )
+    required = set(sel.group_cols) | sel.dice_columns()
     best: AggTable | None = None
     for agg in aggs:
         if not required <= set(agg.grain):
@@ -348,24 +355,6 @@ def choose_aggregate(
         if best is None or len(agg.grain) < len(best.grain):
             best = agg
     return best
-
-
-def mdx_query_navigated(
-    cube: CubeDef, mdx: str, aggs: list[AggTable], *star_args
-) -> DataFrame:
-    """Run an MDX SELECT through the aggregate navigator: answer from
-    the smallest covering rollup (re-folding its mergeable states), or
-    from the fact star when no table covers — Mondrian's aggregate-
-    table semantics, same answer either way (the oracled face pins
-    hash-equality of the two paths)."""
-    sel = parse_mdx(mdx, cube)
-    chosen = choose_aggregate(cube, sel, aggs)
-    if chosen is None:
-        star = cube.star_builder(*star_args)
-        return execute_select(sel, cube, star, cube.measure_agg)
-    return execute_select(
-        sel, cube, chosen.table, lambda m: reagg_expr(cube, m)
-    )
 
 
 @dataclass
@@ -415,17 +404,10 @@ def recommend_aggregates(
     kilobyte rollups instead of the fact — the measured version of
     the navigator's promise."""
     sels = [parse_mdx(q, cube) for q in workload]
-    needed_cols: list[tuple[str, ...]] = []
-    for sel in sels:
-        req = set(sel.group_cols)
-        req.update(sel.member_filters)
-        req.update(sel.exclude_filters)
-        req.update(sel.slicer_filters)
-        req.update(col for col, _v in sel.subselect_filters)
-        req.update(
-            c for terms in sel.slicer_disjunction for c, _v in terms
-        )
-        needed_cols.append(tuple(sorted(req)))
+    needed_cols = [
+        tuple(sorted(set(sel.group_cols) | sel.dice_columns()))
+        for sel in sels
+    ]
     candidates = sorted({cols for cols in needed_cols if cols})
     if not candidates:
         return []
@@ -514,13 +496,11 @@ def materialize_recommended(
     states = [s for _a, _n, s in _state_columns(cube)]
     tables: list[AggTable] = []
     for rec in recs:
-        rollup = star.groupBy(*rec.grain).agg(*states)
         name = f"agg_{'_'.join(rec.grain)}"
+        path = None
         if path_prefix is not None:
             path = f"{path_prefix.rstrip('/')}/{name}"
-            rollup.write.mode("overwrite").parquet(path)
-            rollup = rollup.sparkSession.read.parquet(path)
-        table = AggTable(name=name, grain=rec.grain, table=rollup)
+        table = _rollup(star, rec.grain, states, name, path)
         tables.append(table)
         cube.aggregates.append(table)
     return tables

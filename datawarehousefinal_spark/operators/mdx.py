@@ -629,6 +629,39 @@ _MEASURE_CUTS = (
 )
 
 
+def _one_level(items, shape: str, who: str, why: str = ""):
+    """Yield the segments of each explicit member in ``items``, loud on
+    any other item (``shape``) or on members of a second level
+    (``who`` must all belong to ONE level, ``why`` explains)."""
+    level_key = None
+    for segs, suffix in items:
+        if len(segs) != 3 or suffix:
+            raise MdxError(f"{shape}, got {segs}")
+        key = (segs[0].lower(), segs[1].lower())
+        if level_key is None:
+            level_key = key
+        elif key != level_key:
+            raise MdxError(
+                f"{who} must all belong to ONE level, got both "
+                f"{level_key} and {key}{why}"
+            )
+        yield segs
+
+
+def _custom_group(custom_members: dict, segs) -> tuple | None:
+    """The (display name, underlying members) of the declared custom
+    AGGREGATE member ``[Dim].[Level].[Name]`` names, else None."""
+    key = (segs[0].lower(), segs[1].lower())
+    return custom_members.get(key, {}).get(segs[2].lower())
+
+
+def _members_of(custom_members: dict, segs) -> list[str]:
+    """A member reference's filter values: a custom AGGREGATE member's
+    underlying members, else the member value itself."""
+    cm = _custom_group(custom_members, segs)
+    return list(cm[1]) if cm is not None else [segs[2]]
+
+
 class _Parser:
     def __init__(
         self,
@@ -648,17 +681,6 @@ class _Parser:
         self.custom_members = (
             custom_members if custom_members is not None else {}
         )
-
-    def expand_custom(self, segs: list[str]) -> list[str]:
-        """A member reference's filter values: the underlying members
-        when it names a declared custom AGGREGATE group, else the
-        member value itself."""
-        cm = self.custom_members.get((segs[0].lower(), segs[1].lower()))
-        if cm:
-            rec = cm.get(segs[2].lower())
-            if rec:
-                return list(rec[1])
-        return [segs[2]]
 
     def peek(self):
         return self.toks[self.i] if self.i < len(self.toks) else ("eof", "")
@@ -746,6 +768,49 @@ class _Parser:
                 "members — not a plausible level range"
             )
         return [(segs1[:2] + [str(v)], None) for v in range(a, b + 1)]
+
+    def member_or_range(self) -> list:
+        """One set item: a member path, or the members of an ``a:b``
+        range."""
+        m = self.member_path()
+        if self.peek() == ("punct", ":"):
+            return self._expand_member_range(m)
+        return [m]
+
+    def member_tuple(self, what: str):
+        """``( [Dim].[Level].[member], ... )``: yields each member's
+        segments as it parses (``what`` names them in the error)."""
+        self.expect_punct("(")
+        while True:
+            segs, suffix = self.member_path()
+            if len(segs) != 3 or suffix:
+                raise MdxError(
+                    f"{what} must be [Dim].[Level].[member], got {segs}"
+                )
+            yield segs
+            if self.peek() != ("punct", ","):
+                break
+            self.next()
+        self.expect_punct(")")
+
+    def as_body(self, what: str, parse: Callable):
+        """``AS <body>``, the body quoted (classic Mondrian) or bare:
+        ``parse`` reads it from a sub-parser over the quoted text, which
+        must hold nothing else, or from this parser. Named sets and
+        custom groups declared so far stay visible (definition-order
+        scoping)."""
+        self.expect_word("AS")
+        kind, val = self.peek()
+        if kind != "quote":
+            return parse(self)
+        self.next()
+        sub = _Parser(_tokenize(val), self.named_sets, self.custom_members)
+        out = parse(sub)
+        if sub.peek()[0] != "eof":
+            raise MdxError(
+                f"trailing tokens in {what} body from {sub.peek()[1]!r}"
+            )
+        return out
 
     def measure_ref(self) -> str:
         """A [Measures].[Name] path; returns Name."""
@@ -949,23 +1014,15 @@ class _Parser:
                 raise MdxError(
                     "EXCEPT's second argument must be a plain member set"
                 )
-            level_key = None
-            not_items = []
-            for segs, suffix in excl[0][1]:
-                if len(segs) != 3 or suffix:
-                    raise MdxError(
-                        "EXCEPT removes explicit [Dim].[Level].[member] "
-                        f"members only, got {segs}"
-                    )
-                key = (segs[0].lower(), segs[1].lower())
-                if level_key is None:
-                    level_key = key
-                elif key != level_key:
-                    raise MdxError(
-                        "EXCEPT's removed members must all belong to "
-                        f"ONE level, got both {level_key} and {key}"
-                    )
-                not_items.append((segs, "not"))
+            not_items = [
+                (segs, "not")
+                for segs in _one_level(
+                    excl[0][1],
+                    "EXCEPT removes explicit [Dim].[Level].[member] "
+                    "members only",
+                    "EXCEPT's removed members",
+                )
+            ]
             return [("set", list(base[0][1]) + not_items)]
         if kind == "word" and val.upper() == "CROSSJOIN":
             self.next()
@@ -1039,19 +1096,10 @@ class _Parser:
                 f"[NamedSet] reference — got {segs}"
             )
         self.expect_punct("{")
-        items: list = []
-
-        def one_item():
-            m = self.member_path()
-            if self.peek() == ("punct", ":"):
-                items.extend(self._expand_member_range(m))
-            else:
-                items.append(m)
-
-        one_item()
+        items = self.member_or_range()
         while self.peek() == ("punct", ","):
             self.next()
-            one_item()
+            items.extend(self.member_or_range())
         self.expect_punct("}")
         return [("set", items)]
 
@@ -1194,12 +1242,38 @@ def _rec(display: tuple) -> dict:
     }
 
 
+def _set_nodes(nodes):
+    """The item lists of a set AST's member sets, CROSSJOIN branches
+    left first."""
+    for node in nodes:
+        if node[0] == "crossjoin":
+            yield from _set_nodes(node[1])
+            yield from _set_nodes(node[2])
+        else:
+            yield node[1]
+
+
+def _all_member(segs, suffix, cube: CubeDef, where: str = "") -> bool:
+    """Whether a set item is the hasAll grand-total member,
+    hierarchy-qualified ([Dim].[(All)]) or level-qualified
+    ([Dim].[Level].[(All)]). Its path must exist: [Nope].[(All)] and
+    [Fecha].[NoLevel].[(All)] are typos, not no-ops."""
+    if suffix or segs[-1].lower() != "(all)" or len(segs) not in (2, 3):
+        return False
+    if len(segs) == 3:
+        cube.level_column(segs[0], segs[1])
+    elif not cube.has_dimension(segs[0]):
+        raise MdxError(
+            f"unknown dimension [{segs[0]}]{where} on cube [{cube.name}]"
+        )
+    return True
+
+
 def _refuse_custom_anchor(custom_members: dict, segs, fn: str) -> None:
     """A custom AGGREGATE member has no position in the hierarchy, so
     drilling it (Children/DESCENDANTS) would dice the parent column by
     the synthetic name — a silent empty result. Loud instead."""
-    cm = custom_members.get((segs[0].lower(), segs[1].lower()), {})
-    if segs[2].lower() in cm:
+    if _custom_group(custom_members, segs) is not None:
         raise MdxError(
             f"custom AGGREGATE member [{segs[2]}] cannot anchor a "
             f"{fn} drill — it is not a hierarchy member; drill its "
@@ -1207,7 +1281,7 @@ def _refuse_custom_anchor(custom_members: dict, segs, fn: str) -> None:
         )
 
 
-def _rows_axis(node_list, cube: CubeDef, custom_members: dict | None = None):
+def _rows_axis(node_list, cube: CubeDef, custom_members: dict):
     """Flatten the rows-axis set AST into (group_columns,
     member_filters, grouping_alternatives): every crossjoin branch and
     set item contributes its level's column; explicit member sets
@@ -1218,215 +1292,176 @@ def _rows_axis(node_list, cube: CubeDef, custom_members: dict | None = None):
     grouping-set lattice the query answers. An explicit member naming
     a declared custom AGGREGATE group contributes its UNDERLYING
     members to the dice and a (name, values) remap entry instead."""
-    custom_members = custom_members or {}
     group_cols: list[str] = []
     filters: dict[str, list] = {}
     excludes: dict[str, list] = {}
     custom_groups: dict[str, list] = {}
     alternatives: list[list[list[str]]] = []
 
-    def walk(nodes):
-        for node in nodes:
-            if node[0] == "crossjoin":
-                walk(node[1])
-                walk(node[2])
-                continue
-            _, items = node
-            # per level: explicit members, whether .Members appeared (a
-            # set is a UNION — .Members absorbs any explicit member of
-            # the same level, so the dice filter must then be dropped),
-            # and Children drills that land on the level (keyed by
-            # parent column → parent members).
-            # keyed case-insensitively (like every other member lookup);
-            # each record remembers its first-seen display spelling
-            by_level: dict[tuple[str, str], dict] = {}
-            has_all = False
-            for segs, suffix in items:
-                # the hasAll grand-total member, hierarchy-qualified
-                # ([Dim].[(All)]) or level-qualified ([Dim].[Level].[(All)])
-                if not suffix and segs[-1].lower() == "(all)" and (
-                    len(segs) in (2, 3)
-                ):
-                    if len(segs) == 3:
-                        cube.level_column(segs[0], segs[1])  # validate
-                    else:
-                        dim_key = segs[0].lower() + "."
-                        if not any(
-                            k.lower().startswith(dim_key)
-                            for k in cube.levels
-                        ):
-                            raise MdxError(
-                                f"unknown dimension [{segs[0]}] on cube "
-                                f"[{cube.name}]"
-                            )
-                    has_all = True
-                elif len(segs) == 2 and suffix == "members":
-                    by_level.setdefault(
-                        (segs[0].lower(), segs[1].lower()),
-                        _rec((segs[0], segs[1])),
-                    )["members"] = True
-                elif len(segs) == 3 and suffix == "children":
-                    # [Dim].[Level].[member].Children → the next level
-                    # of the declared hierarchy, diced to the parent
-                    _refuse_custom_anchor(
-                        custom_members, segs, "Children"
-                    )
+    for items in _set_nodes(node_list):
+        # per level: explicit members, whether .Members appeared (a
+        # set is a UNION — .Members absorbs any explicit member of
+        # the same level, so the dice filter must then be dropped),
+        # and Children drills that land on the level (keyed by
+        # parent column → parent members).
+        # keyed case-insensitively (like every other member lookup);
+        # each record remembers its first-seen display spelling
+        by_level: dict[tuple[str, str], dict] = {}
+        has_all = False
+        for segs, suffix in items:
+            if _all_member(segs, suffix, cube):
+                has_all = True
+            elif len(segs) == 2 and suffix == "members":
+                by_level.setdefault(
+                    (segs[0].lower(), segs[1].lower()),
+                    _rec((segs[0], segs[1])),
+                )["members"] = True
+            elif (len(segs), suffix) in ((3, "children"), (4, "descendants")):
+                # [Dim].[Level].[member].Children → the next level of the
+                # declared hierarchy, diced to the parent;
+                # DESCENDANTS(anchor member, target level) → the target
+                # level's ancestor chain, diced to the anchor (any depth)
+                if suffix == "children":
+                    _refuse_custom_anchor(custom_members, segs, "Children")
                     child = cube.child_level(segs[0], segs[1])
-                    rec = by_level.setdefault(
-                        (segs[0].lower(), child.lower()),
-                        _rec((segs[0], child)),
-                    )
-                    parent_col = cube.level_column(segs[0], segs[1])
-                    rec["parents"].setdefault(parent_col, []).append(
-                        segs[2]
-                    )
-                elif len(segs) == 4 and suffix == "descendants":
-                    # DESCENDANTS(anchor member, target level): group by
-                    # the target level's ancestor chain, diced to the
-                    # anchor — Children's machinery, any depth
-                    _refuse_custom_anchor(
-                        custom_members, segs, "DESCENDANTS"
-                    )
-                    child = cube.descendant_level(segs[0], segs[1], segs[3])
-                    rec = by_level.setdefault(
-                        (segs[0].lower(), child.lower()),
-                        _rec((segs[0], child)),
-                    )
-                    parent_col = cube.level_column(segs[0], segs[1])
-                    rec["parents"].setdefault(parent_col, []).append(
-                        segs[2]
-                    )
-                elif len(segs) == 3 and not suffix:
-                    rec = by_level.setdefault(
-                        (segs[0].lower(), segs[1].lower()),
-                        _rec((segs[0], segs[1])),
-                    )
-                    cm = custom_members.get(
-                        (segs[0].lower(), segs[1].lower()), {}
-                    ).get(segs[2].lower())
-                    if cm is not None:
-                        rec["groups"].append(cm)
-                    else:
-                        rec["vals"].append(segs[2])
-                elif len(segs) == 3 and suffix == "not":
-                    # an EXCEPT-removed member of this level
-                    by_level.setdefault(
-                        (segs[0].lower(), segs[1].lower()),
-                        _rec((segs[0], segs[1])),
-                    )["excl"].append(segs[2])
                 else:
+                    _refuse_custom_anchor(custom_members, segs, "DESCENDANTS")
+                    child = cube.descendant_level(segs[0], segs[1], segs[3])
+                rec = by_level.setdefault(
+                    (segs[0].lower(), child.lower()),
+                    _rec((segs[0], child)),
+                )
+                parent_col = cube.level_column(segs[0], segs[1])
+                rec["parents"].setdefault(parent_col, []).append(
+                    segs[2]
+                )
+            elif len(segs) == 3 and not suffix:
+                rec = by_level.setdefault(
+                    (segs[0].lower(), segs[1].lower()),
+                    _rec((segs[0], segs[1])),
+                )
+                cm = _custom_group(custom_members, segs)
+                if cm is not None:
+                    rec["groups"].append(cm)
+                else:
+                    rec["vals"].append(segs[2])
+            elif len(segs) == 3 and suffix == "not":
+                # an EXCEPT-removed member of this level
+                by_level.setdefault(
+                    (segs[0].lower(), segs[1].lower()),
+                    _rec((segs[0], segs[1])),
+                )["excl"].append(segs[2])
+            else:
+                raise MdxError(
+                    "rows axis items must be [Dim].[Level].Members, "
+                    "[Dim].[Level].[member](.Children) or "
+                    f"[Dim].[(All)], got {segs}"
+                )
+        set_cols: list[str] = []
+        for _key, sel in by_level.items():
+            dim, level = sel["display"]
+            if sel["excl"] and not (
+                sel["members"] or sel["vals"] or sel["parents"]
+            ):
+                raise MdxError(
+                    f"EXCEPT removes members of [{dim}].[{level}], "
+                    "a level the set does not select"
+                )
+            # hierarchy-aware member key: the level's ancestor-chain
+            # columns (single column when no hierarchy is declared)
+            chain = cube.level_chain(dim, level)
+            for col in chain:
+                if col in group_cols:
+                    # the same Mondrian error: a hierarchy may appear
+                    # in only one axis set — a duplicate (including a
+                    # child level whose ancestor chain overlaps a
+                    # level already selected) would emit duplicated
+                    # grouping columns (doubled rows)
                     raise MdxError(
-                        "rows axis items must be [Dim].[Level].Members, "
-                        "[Dim].[Level].[member](.Children) or "
-                        f"[Dim].[(All)], got {segs}"
+                        f"level [{dim}].[{level}] (chain {chain}) "
+                        "overlaps a level already on the rows axis"
                     )
-            set_cols: list[str] = []
-            for _key, sel in by_level.items():
-                dim, level = sel["display"]
-                if sel["excl"] and not (
-                    sel["members"] or sel["vals"] or sel["parents"]
-                ):
+                set_cols.append(col)
+                group_cols.append(col)
+            if sel["vals"] and sel["parents"]:
+                # {[Anio].[1997].Children, [Mes].[6]} is a UNION of
+                # months-of-1997 with month-6-of-all-years — not a
+                # conjunction of column filters; refuse loudly
+                # rather than dice to their intersection.
+                raise MdxError(
+                    f"set mixes a Children/DESCENDANTS drill into "
+                    f"[{dim}].[{level}] with an explicit member "
+                    "dice of the same level — a union this "
+                    "translator cannot express as filters"
+                )
+            groups = sel["groups"]
+            if groups:
+                if sel["members"] or sel["parents"]:
+                    # Mondrian calculated members are NOT in
+                    # .Members — showing both every real member AND
+                    # the group would need the underlying rows
+                    # twice, which a single column remap cannot do
                     raise MdxError(
-                        f"EXCEPT removes members of [{dim}].[{level}], "
-                        "a level the set does not select"
+                        f"a custom AGGREGATE member of [{dim}]."
+                        f"[{level}] cannot combine with that "
+                        "level's .Members or a Children drill — "
+                        "the underlying rows would have to appear "
+                        "in two members at once"
                     )
-                # hierarchy-aware member key: the level's ancestor-chain
-                # columns (single column when no hierarchy is declared)
-                chain = cube.level_chain(dim, level)
-                for col in chain:
-                    if col in group_cols:
-                        # the same Mondrian error: a hierarchy may appear
-                        # in only one axis set — a duplicate (including a
-                        # child level whose ancestor chain overlaps a
-                        # level already selected) would emit duplicated
-                        # grouping columns (doubled rows)
-                        raise MdxError(
-                            f"level [{dim}].[{level}] (chain {chain}) "
-                            "overlaps a level already on the rows axis"
-                        )
-                    set_cols.append(col)
-                    group_cols.append(col)
-                if sel["vals"] and sel["parents"]:
-                    # {[Anio].[1997].Children, [Mes].[6]} is a UNION of
-                    # months-of-1997 with month-6-of-all-years — not a
-                    # conjunction of column filters; refuse loudly
-                    # rather than dice to their intersection.
+                if sel["excl"]:
                     raise MdxError(
-                        f"set mixes a Children/DESCENDANTS drill into "
-                        f"[{dim}].[{level}] with an explicit member "
-                        "dice of the same level — a union this "
-                        "translator cannot express as filters"
+                        "EXCEPT over a set containing custom "
+                        "AGGREGATE members is not supported"
                     )
-                groups = sel["groups"]
-                if groups:
-                    if sel["members"] or sel["parents"]:
-                        # Mondrian calculated members are NOT in
-                        # .Members — showing both every real member AND
-                        # the group would need the underlying rows
-                        # twice, which a single column remap cannot do
+                under = {
+                    v for _disp, gvals in groups for v in gvals
+                }
+                for v in sel["vals"]:
+                    if v in under:
                         raise MdxError(
-                            f"a custom AGGREGATE member of [{dim}]."
-                            f"[{level}] cannot combine with that "
-                            "level's .Members or a Children drill — "
-                            "the underlying rows would have to appear "
-                            "in two members at once"
+                            f"member [{v}] appears both bare and "
+                            "inside a custom AGGREGATE member — "
+                            "its rows cannot be in two members at "
+                            "once"
                         )
-                    if sel["excl"]:
-                        raise MdxError(
-                            "EXCEPT over a set containing custom "
-                            "AGGREGATE members is not supported"
-                        )
-                    under = {
-                        v for _disp, gvals in groups for v in gvals
-                    }
-                    for v in sel["vals"]:
-                        if v in under:
-                            raise MdxError(
-                                f"member [{v}] appears both bare and "
-                                "inside a custom AGGREGATE member — "
-                                "its rows cannot be in two members at "
-                                "once"
-                            )
-                    filters.setdefault(chain[-1], []).extend(
-                        sorted(under)
-                    )
-                    custom_groups.setdefault(chain[-1], []).extend(
-                        groups
-                    )
-                excl = sel["excl"]
-                if sel["members"]:
-                    # .Members is the whole level: it absorbs explicit
-                    # dices and Children restrictions — but EXCEPT still
-                    # removes its named members (a NOT-IN dice)
-                    if excl:
-                        excludes.setdefault(chain[-1], []).extend(excl)
-                    continue
-                vals = sel["vals"]
-                if excl and vals:
-                    # EXCEPT over an explicit member list subtracts at
-                    # parse time (exact member-name matching)
-                    vals = [v for v in vals if v not in set(excl)]
-                    if not vals:
-                        raise MdxError(
-                            f"EXCEPT removed every member of "
-                            f"[{dim}].[{level}] — an empty set"
-                        )
-                elif excl:
-                    # Children drill minus named children: NOT-IN dice
+                filters.setdefault(chain[-1], []).extend(
+                    sorted(under)
+                )
+                custom_groups.setdefault(chain[-1], []).extend(
+                    groups
+                )
+            excl = sel["excl"]
+            if sel["members"]:
+                # .Members is the whole level: it absorbs explicit
+                # dices and Children restrictions — but EXCEPT still
+                # removes its named members (a NOT-IN dice)
+                if excl:
                     excludes.setdefault(chain[-1], []).extend(excl)
-                if vals:
-                    # the dice filters on the level's OWN column; its
-                    # ancestors stay grouping-only (visual totals per
-                    # ancestor cell)
-                    filters.setdefault(chain[-1], []).extend(vals)
-                for parent_col, parent_vals in sel["parents"].items():
-                    filters.setdefault(parent_col, []).extend(parent_vals)
-            opts = [set_cols]
-            if has_all and set_cols:
-                opts.append([])
-            alternatives.append(opts)
-
-    walk(node_list)
+                continue
+            vals = sel["vals"]
+            if excl and vals:
+                # EXCEPT over an explicit member list subtracts at
+                # parse time (exact member-name matching)
+                vals = [v for v in vals if v not in set(excl)]
+                if not vals:
+                    raise MdxError(
+                        f"EXCEPT removed every member of "
+                        f"[{dim}].[{level}] — an empty set"
+                    )
+            elif excl:
+                # Children drill minus named children: NOT-IN dice
+                excludes.setdefault(chain[-1], []).extend(excl)
+            if vals:
+                # the dice filters on the level's OWN column; its
+                # ancestors stay grouping-only (visual totals per
+                # ancestor cell)
+                filters.setdefault(chain[-1], []).extend(vals)
+            for parent_col, parent_vals in sel["parents"].items():
+                filters.setdefault(parent_col, []).extend(parent_vals)
+        opts = [set_cols]
+        if has_all and set_cols:
+            opts.append([])
+        alternatives.append(opts)
     return group_cols, filters, excludes, alternatives, custom_groups
 
 
@@ -1437,7 +1472,8 @@ class MdxSelect:
     ``columns`` preserves COLUMNS-axis order; each name is a base
     measure or a key of ``calc_members`` (ordered definition ASTs).
     ``wrappers`` lists rows-axis TOPCOUNT/FILTER nodes outermost-first
-    (execution applies them innermost-first)."""
+    (execution applies them innermost-first). The five restriction
+    fields are read through :meth:`dices` only."""
 
     columns: list[str]
     calc_members: dict[str, tuple]
@@ -1466,9 +1502,94 @@ class MdxSelect:
     # the same column AND together — nested sub-select intersection)
     subselect_filters: list = field(default_factory=list)
 
+    def dices(self) -> list[Dice]:
+        """The restrictions applied BEFORE aggregation, in application
+        order: sub-select, slicer and rows-axis IN dices, the EXCEPT
+        NOT-IN dices, then the compound slicer."""
+        out = [Dice((c,), v, "in", True) for c, v in self.subselect_filters]
+        out += [
+            Dice((c,), v, "in")
+            for c, v in (
+                *self.slicer_filters.items(), *self.member_filters.items()
+            )
+        ]
+        out += [
+            Dice((c,), v, "except") for c, v in self.exclude_filters.items()
+        ]
+        if self.slicer_disjunction:
+            cols = dict.fromkeys(
+                c for terms in self.slicer_disjunction for c, _v in terms
+            )
+            out.append(Dice(tuple(cols), self.slicer_disjunction, "or"))
+        return out
+
+    def dice_columns(self) -> set[str]:
+        """Every column a dice filters."""
+        return {c for d in self.dices() for c in d.cols}
+
+
+class Dice(NamedTuple):
+    """One restriction a SELECT applies BEFORE aggregation."""
+
+    # the diced column, or every column of a compound slicer
+    cols: tuple[str, ...]
+    # member values, or a compound slicer's [(column, member), ...] tuples
+    members: list
+    # "in", "except" (NOT IN that keeps NULL-keyed members) or "or" (a
+    # compound slicer: rows matching ANY tuple survive)
+    kind: str
+    # a FROM (SELECT ...) restriction: it defines the SUBCUBE, within
+    # which set enumerations (RANK's .Members) evaluate even where
+    # coordinate shifts (PARALLELPERIOD & co) read past axis dices
+    subcube: bool = False
+
+
+def apply_dices(
+    src: DataFrame,
+    dices: list[Dice],
+    skip: frozenset = frozenset(),
+    keep_subcube: bool = False,
+) -> DataFrame:
+    """Filter ``src`` by ``dices`` in order, each member coerced to its
+    column's type. A time-intelligence recompute reads the cube past the
+    dices on ``skip`` columns (subcube dices stay when
+    ``keep_subcube``)."""
+    for d in dices:
+        if skip.intersection(d.cols) and not (keep_subcube and d.subcube):
+            if d.kind == "or":
+                # one leg of an OR cannot be dropped without changing
+                # the other legs' meaning — loud, never a wrong context
+                raise MdxError(
+                    "time intelligence shifts/windows a column that a "
+                    "compound (tuple-set) slicer also filters — the "
+                    "cube-context recompute cannot drop one leg of an "
+                    "OR; dice that column on the rows axis or a plain "
+                    "slicer instead"
+                )
+            continue
+        if d.kind == "or":
+            pred = None
+            for terms in d.members:
+                t = None
+                for c, v in terms:
+                    eq = F.col(c) == F.lit(_coerce_members(src, c, [v])[0])
+                    t = eq if t is None else t & eq
+                pred = t if pred is None else pred | t
+            src = src.filter(pred)
+            continue
+        (col,) = d.cols
+        pred = F.col(col).isin(_coerce_members(src, col, d.members))
+        # an EXCEPT dice: NULL-keyed members are real members — removing
+        # [B] never removes them (isin is NULL on NULL input, and a bare
+        # ~NULL would silently drop the row)
+        src = src.filter(
+            F.col(col).isNull() | ~pred if d.kind == "except" else pred
+        )
+    return src
+
 
 def _collect_subselect_members(
-    nodes, cube: CubeDef, out: list, custom_members: dict | None = None
+    nodes, cube: CubeDef, out: list, custom_members: dict
 ) -> None:
     """Flatten a sub-select axis set into (level column, members)
     filters. Explicit members restrict (a custom AGGREGATE member
@@ -1476,67 +1597,40 @@ def _collect_subselect_members(
     select everything, hence restrict nothing (validated, then
     ignored); anything else — Children drills, wrapper functions —
     is outside the sub-select subset and raises."""
-    custom_members = custom_members or {}
     per_level: dict[str, list] = {}
-
-    def walk(ns):
-        for node in ns:
-            if node[0] == "crossjoin":
-                walk(node[1])
-                walk(node[2])
-                continue
-            _, items = node
-            for segs, suffix in items:
-                if not suffix and segs[-1].lower() == "(all)" and (
-                    len(segs) in (2, 3)
-                ):
-                    # the grand total: restricts nothing — but the
-                    # path must exist (same loud-on-unknown contract
-                    # as .Members and explicit members; [Nope].[(All)]
-                    # and [Fecha].[NoLevel].[(All)] are typos, not
-                    # no-ops — the rows axis validates identically)
-                    if len(segs) == 3:
-                        cube.level_column(segs[0], segs[1])
-                    elif not cube.has_dimension(segs[0]):
-                        raise MdxError(
-                            f"unknown dimension [{segs[0]}] in "
-                            f"sub-select on cube [{cube.name}]"
-                        )
-                    continue
-                if (
-                    len(segs) == 2
-                    and not suffix
-                    and segs[0].lower() == "measures"
-                ):
-                    # Excel sub-selects restrict the measure space too;
-                    # measures are explicit on the outer COLUMNS axis
-                    # here, so this restricts nothing — validate, ignore
-                    if not cube.has_measure(segs[1]):
-                        raise MdxError(
-                            f"unknown measure [Measures].[{segs[1]}] in "
-                            f"sub-select on cube [{cube.name}]"
-                        )
-                    continue
-                if len(segs) == 2 and suffix == "members":
-                    cube.level_column(segs[0], segs[1])  # validate only
-                    continue
-                if len(segs) == 3 and not suffix:
-                    col = cube.level_column(segs[0], segs[1])
-                    cm = custom_members.get(
-                        (segs[0].lower(), segs[1].lower()), {}
-                    ).get(segs[2].lower())
-                    per_level.setdefault(col, []).extend(
-                        cm[1] if cm is not None else [segs[2]]
+    for items in _set_nodes(nodes):
+        for segs, suffix in items:
+            if _all_member(segs, suffix, cube, " in sub-select"):
+                continue  # the grand total restricts nothing
+            if (
+                len(segs) == 2
+                and not suffix
+                and segs[0].lower() == "measures"
+            ):
+                # Excel sub-selects restrict the measure space too;
+                # measures are explicit on the outer COLUMNS axis
+                # here, so this restricts nothing — validate, ignore
+                if not cube.has_measure(segs[1]):
+                    raise MdxError(
+                        f"unknown measure [Measures].[{segs[1]}] in "
+                        f"sub-select on cube [{cube.name}]"
                     )
-                    continue
-                raise MdxError(
-                    "sub-select items must be explicit "
-                    "[Dim].[Level].[member] members (or .Members / "
-                    f"[(All)] / [Measures].[M], which restrict "
-                    f"nothing), got {segs}"
+                continue
+            if len(segs) == 2 and suffix == "members":
+                cube.level_column(segs[0], segs[1])  # validate only
+                continue
+            if len(segs) == 3 and not suffix:
+                col = cube.level_column(segs[0], segs[1])
+                per_level.setdefault(col, []).extend(
+                    _members_of(custom_members, segs)
                 )
-
-    walk(nodes)
+                continue
+            raise MdxError(
+                "sub-select items must be explicit "
+                "[Dim].[Level].[member] members (or .Members / "
+                f"[(All)] / [Measures].[M], which restrict "
+                f"nothing), got {segs}"
+            )
     out.extend(per_level.items())
 
 
@@ -1588,28 +1682,26 @@ def _parse_from_clause(p: _Parser, cube: CubeDef) -> list:
             # the slice, AND-composed with the axis items — the same
             # visual-totals semantics, parsed like the outer slicer
             p.next()
-            p.expect_punct("(")
-            per: dict[str, list] = {}
-            while True:
-                segs, suffix = p.member_path()
-                if len(segs) != 3 or suffix:
-                    raise MdxError(
-                        "sub-select WHERE members must be "
-                        f"[Dim].[Level].[member], got {segs}"
-                    )
-                col = cube.level_column(segs[0], segs[1])
-                per.setdefault(col, []).extend(p.expand_custom(segs))
-                if p.peek() == ("punct", ","):
-                    p.next()
-                    continue
-                break
-            p.expect_punct(")")
-            filters.extend(per.items())
+            filters.extend(
+                _tuple_dices(p, cube, "sub-select WHERE members").items()
+            )
         p.expect_punct(")")
         return inner + filters
     raise MdxError(
         f"expected [CubeName] or a (SELECT ...) sub-select, got {val!r}"
     )
+
+
+def _tuple_dices(p: _Parser, cube: CubeDef, what: str) -> dict[str, list]:
+    """A ``( [Dim].[Level].[member], ... )`` restriction as IN dices,
+    level column → members. A custom AGGREGATE member slices as its
+    underlying member union — no remap needed off the axis."""
+    dices: dict[str, list] = {}
+    for segs in p.member_tuple(what):
+        col = cube.level_column(segs[0], segs[1])
+        members = _members_of(p.custom_members, segs)
+        dices.setdefault(col, []).extend(members)
+    return dices
 
 
 def _parse_custom_group_member(p: _Parser, cube: CubeDef, segs) -> None:
@@ -1625,7 +1717,7 @@ def _parse_custom_group_member(p: _Parser, cube: CubeDef, segs) -> None:
     key); two groups on one level may not overlap (a row can map to
     only one member) and a group may not shadow one of its own
     underlying values. Registered on the parser; axis/slicer/
-    sub-select references expand through ``expand_custom``."""
+    sub-select references expand through ``_members_of``."""
     dim, level, gname = segs
     chain = cube.level_chain(dim, level)  # loud on unknown level
     if len(chain) != 1:
@@ -1639,19 +1731,9 @@ def _parse_custom_group_member(p: _Parser, cube: CubeDef, segs) -> None:
         raise MdxError(
             f"custom member [{dim}].[{level}].[{gname}] declared twice"
         )
-    p.expect_word("AS")
-    kind, val = p.peek()
-    if kind == "quote":
-        p.next()
-        sub = _Parser(_tokenize(val))
-        vals = _parse_aggregate_body(sub, dim, level)
-        if sub.peek()[0] != "eof":
-            raise MdxError(
-                f"trailing tokens in custom member body from "
-                f"{sub.peek()[1]!r}"
-            )
-    else:
-        vals = _parse_aggregate_body(p, dim, level)
+    vals = p.as_body(
+        "custom member", lambda q: _parse_aggregate_body(q, dim, level)
+    )
     taken: dict[str, str] = {}
     for _other_key, (other_display, other_vals) in reg.items():
         for v in other_vals:
@@ -1680,13 +1762,7 @@ def _parse_aggregate_body(p: _Parser, dim: str, level: str) -> list[str]:
     p.expect_punct("{")
     vals: list[str] = []
     while True:
-        m = p.member_path()
-        items = (
-            p._expand_member_range(m)
-            if p.peek() == ("punct", ":")
-            else [m]
-        )
-        for segs, suffix in items:
+        for segs, suffix in p.member_or_range():
             if (
                 len(segs) != 3
                 or suffix
@@ -1805,19 +1881,7 @@ def parse_mdx(text: str, cube: CubeDef) -> MdxSelect:
                         f"calculated member [Measures].[{name}] collides "
                         "with an existing measure"
                     )
-                p.expect_word("AS")
-                kind, val = p.peek()
-                if kind == "quote":
-                    p.next()
-                    sub = _Parser(_tokenize(val))
-                    expr = sub.calc_expr()
-                    if sub.peek()[0] != "eof":
-                        raise MdxError(
-                            f"trailing tokens in calculated member body "
-                            f"from {sub.peek()[1]!r}"
-                        )
-                else:
-                    expr = p.calc_expr()
+                expr = p.as_body("calculated member", _Parser.calc_expr)
                 _validate_refs(expr, cube, calc_members)
                 calc_members[name] = expr
                 continue
@@ -1832,21 +1896,7 @@ def parse_mdx(text: str, cube: CubeDef) -> MdxSelect:
                     raise MdxError(
                         f"named set [{sname}] declared twice"
                     )
-                p.expect_word("AS")
-                kind, val = p.peek()
-                if kind == "quote":
-                    p.next()
-                    # share named_sets: earlier sets are referencable
-                    # from later bodies (definition-order scoping)
-                    sub = _Parser(_tokenize(val), p.named_sets)
-                    nodes = sub.parse_set()
-                    if sub.peek()[0] != "eof":
-                        raise MdxError(
-                            f"trailing tokens in named set body "
-                            f"from {sub.peek()[1]!r}"
-                        )
-                else:
-                    nodes = p.parse_set()
+                nodes = p.as_body("named set", _Parser.parse_set)
                 p.named_sets[sname.lower()] = nodes
                 continue
             break
@@ -1980,39 +2030,14 @@ def parse_mdx(text: str, cube: CubeDef) -> MdxSelect:
             p.next()
             tuples: list[list] = []
             singles: list = []
-
-            def one_member(into: list):
-                m = p.member_path()
-                if p.peek() == ("punct", ":"):
-                    into.extend(p._expand_member_range(m))
-                else:
-                    into.append(m)
-
-            def one_slicer_item():
+            while True:
                 if p.peek() == ("punct", "("):
-                    p.next()
-                    terms: list = []
-                    while True:
-                        segs, suffix = p.member_path()
-                        if len(segs) != 3 or suffix:
-                            raise MdxError(
-                                "slicer-tuple members must be "
-                                f"[Dim].[Level].[member], got {segs}"
-                            )
-                        terms.append(segs)
-                        if p.peek() == ("punct", ","):
-                            p.next()
-                            continue
-                        break
-                    p.expect_punct(")")
-                    tuples.append(terms)
+                    tuples.append(list(p.member_tuple("slicer-tuple members")))
                 else:
-                    one_member(singles)
-
-            one_slicer_item()
-            while p.peek() == ("punct", ","):
+                    singles.extend(p.member_or_range())
+                if p.peek() != ("punct", ","):
+                    break
                 p.next()
-                one_slicer_item()
             p.expect_punct("}")
             if tuples and singles:
                 raise MdxError(
@@ -2024,7 +2049,7 @@ def parse_mdx(text: str, cube: CubeDef) -> MdxSelect:
                 for terms in tuples:
                     seen_cols: dict[str, str] = {}
                     for segs in terms:
-                        if p.expand_custom(segs) != [segs[2]]:
+                        if _custom_group(p.custom_members, segs):
                             raise MdxError(
                                 f"custom AGGREGATE member [{segs[2]}] "
                                 "inside a compound-slicer tuple is not "
@@ -2058,49 +2083,20 @@ def parse_mdx(text: str, cube: CubeDef) -> MdxSelect:
                         )
                     slicer_disjunction.clear()
             else:
-                level_key = None
-                for segs, suffix in singles:
-                    if len(segs) != 3 or suffix:
-                        raise MdxError(
-                            "set-slicer members must be "
-                            f"[Dim].[Level].[member], got {segs}"
-                        )
-                    key = (segs[0].lower(), segs[1].lower())
-                    if level_key is None:
-                        level_key = key
-                    elif key != level_key:
-                        raise MdxError(
-                            "set-slicer members must all belong to ONE "
-                            f"level, got both {level_key} and {key} — a "
-                            "mixed-level slicer set is a union of "
-                            "slices, not a filter conjunction (tuples "
-                            "over the same levels express the "
-                            "cross-level multi-select)"
-                        )
+                for segs in _one_level(
+                    singles,
+                    "set-slicer members must be [Dim].[Level].[member]",
+                    "set-slicer members",
+                    " — a mixed-level slicer set is a union of slices, "
+                    "not a filter conjunction (tuples over the same "
+                    "levels express the cross-level multi-select)",
+                ):
                     col = cube.level_column(segs[0], segs[1])
                     slicer_filters.setdefault(col, []).extend(
-                        p.expand_custom(segs)
+                        _members_of(p.custom_members, segs)
                     )
         else:
-            p.expect_punct("(")
-            while True:
-                segs, suffix = p.member_path()
-                if len(segs) != 3 or suffix:
-                    raise MdxError(
-                        f"slicer members must be [Dim].[Level].[member], "
-                        f"got {segs}"
-                    )
-                col = cube.level_column(segs[0], segs[1])
-                # a custom AGGREGATE member slices as its underlying
-                # member union — no remap needed off the axis
-                slicer_filters.setdefault(col, []).extend(
-                    p.expand_custom(segs)
-                )
-                if p.peek() == ("punct", ","):
-                    p.next()
-                    continue
-                break
-            p.expect_punct(")")
+            slicer_filters = _tuple_dices(p, cube, "slicer members")
     if p.peek()[0] != "eof":
         raise MdxError(f"trailing tokens from {p.peek()[1]!r}")
 
@@ -2260,21 +2256,6 @@ _CMP = {
     "=": Column.__eq__,
     "<>": Column.__ne__,
 }
-
-
-def _disjunction_pred(src: DataFrame, disjunction: list) -> Column:
-    """The compound-slicer predicate: OR of per-tuple ANDs, each term
-    an equality against the member coerced to the column's type — ONE
-    builder shared by the aggregation path and drillthrough, so
-    coercion/NULL fixes can never drift between them."""
-    pred = None
-    for terms in disjunction:
-        t = None
-        for c, v in terms:
-            eq = F.col(c) == F.lit(_coerce_members(src, c, [v])[0])
-            t = eq if t is None else t & eq
-        pred = t if pred is None else pred | t
-    return pred
 
 
 # -- time intelligence --------------------------------------------------------
@@ -2553,25 +2534,7 @@ def execute_select(
     ``agg_expr_for`` (the only thing that differs between the fact and
     an aggregate table), then apply wrappers and project the COLUMNS
     axis."""
-    # (column, values, negated, is_subcube): sub-select restrictions
-    # are flagged — they define the SUBCUBE, and set enumerations
-    # (RANK's .Members) evaluate within it even where coordinate
-    # shifts (PARALLELPERIOD & co) read past axis dices
-    filters = (
-        [(col, vals, False, True) for col, vals in sel.subselect_filters]
-        + [
-            (col, vals, False, False)
-            for col, vals in (
-                *sel.slicer_filters.items(),
-                *sel.member_filters.items(),
-            )
-        ]
-        + [
-            (col, vals, True, False)
-            for col, vals in sel.exclude_filters.items()
-        ]
-    )
-
+    dices = sel.dices()
     needed = needed_base_measures(sel, cube)
     aggs = [agg_expr_for(m) for m in needed]
 
@@ -2587,41 +2550,12 @@ def execute_select(
             *aggs
         )
 
-    dis_cols = {
-        c for terms in sel.slicer_disjunction for c, _v in terms
-    }
-
     def filtered(
         src: DataFrame,
         skip: frozenset = frozenset(),
         keep_subcube: bool = False,
     ) -> DataFrame:
-        for col, vals, neg, is_sub in filters:
-            if col in skip and not (keep_subcube and is_sub):
-                continue
-            pred = F.col(col).isin(_coerce_members(src, col, vals))
-            if neg:
-                # an EXCEPT dice: NULL-keyed members are real members —
-                # removing [B] never removes them (isin is NULL on NULL
-                # input, and a bare ~NULL would silently drop the row)
-                src = src.filter(F.col(col).isNull() | ~pred)
-            else:
-                src = src.filter(pred)
-        if sel.slicer_disjunction:
-            if skip & dis_cols:
-                # a time-intel recompute wants this column undiced, but
-                # one leg of an OR cannot be dropped without changing
-                # the other legs' meaning — loud, never a wrong context
-                raise MdxError(
-                    "time intelligence shifts/windows a column that a "
-                    "compound (tuple-set) slicer also filters — the "
-                    "cube-context recompute cannot drop one leg of an "
-                    "OR; dice that column on the rows axis or a plain "
-                    "slicer instead"
-                )
-            src = src.filter(
-                _disjunction_pred(src, sel.slicer_disjunction)
-            )
+        src = apply_dices(src, dices, skip, keep_subcube)
         # custom AGGREGATE members: remap the level column AFTER the
         # dice (which selects the groups' underlying rows plus any bare
         # members) — CASE col IN (...) THEN 'Name' ELSE col, one
@@ -2672,10 +2606,11 @@ def execute_select(
         gcols = sel.grouping_sets[0]
         dtypes = dict(out.dtypes) if fam.ragged else {}
         # the dices a recompute drops
-        droppable = dis_cols | {
-            col
-            for col, _, _, is_sub in filters
-            if not (fam.keep_subcube and is_sub)
+        droppable = {
+            c
+            for d in dices
+            if not (fam.keep_subcube and d.subcube)
+            for c in d.cols
         }
         for expr, aliases in specs[family].values():
             _, _, _, dim, level, params = expr
@@ -2903,12 +2838,13 @@ def mdx_drillthrough(cube: CubeDef, mdx: str, *star_args) -> DataFrame:
     numbers behind it). The inner SELECT parses exactly like a query —
     calculated members and wrappers are refused (they have no row-level
     meaning) — and every restriction that would have applied BEFORE
-    aggregation (slicer, rows-axis member dices, sub-select filters)
-    filters the star; ``.Members`` selections restrict nothing, as in
-    aggregation. Returned columns are the cube's level columns plus
-    each measure's source column, in declaration order — the columns a
-    cell is made of. MAXROWS caps the result via ``limit`` (an
-    arbitrary-but-bounded sample, like Mondrian's).
+    aggregation (the SELECT's dices, through the same
+    :func:`apply_dices`) filters the star; ``.Members`` selections
+    restrict nothing, as in aggregation. Returned columns are the
+    cube's level columns plus each measure's source column, in
+    declaration order — the columns a cell is made of. MAXROWS caps
+    the result via ``limit`` (an arbitrary-but-bounded sample, like
+    Mondrian's).
 
     100 TB: drillthrough is a filtered SCAN, no shuffle at all — the
     dices push through the star's broadcast joins into the fact scan,
@@ -2930,22 +2866,7 @@ def mdx_drillthrough(cube: CubeDef, mdx: str, *star_args) -> DataFrame:
             "and TOPCOUNT/ORDER/FILTER/HEAD/TAIL have no row-level "
             "meaning here"
         )
-    star = cube.star_builder(*star_args)
-    for col, vals in (
-        *sel.subselect_filters,
-        *sel.slicer_filters.items(),
-        *sel.member_filters.items(),
-    ):
-        star = star.filter(
-            F.col(col).isin(_coerce_members(star, col, vals))
-        )
-    for col, vals in sel.exclude_filters.items():
-        pred = F.col(col).isin(_coerce_members(star, col, vals))
-        star = star.filter(F.col(col).isNull() | ~pred)
-    if sel.slicer_disjunction:
-        star = star.filter(
-            _disjunction_pred(star, sel.slicer_disjunction)
-        )
+    star = apply_dices(cube.star_builder(*star_args), sel.dices())
     cols: list[str] = []
     for c in cube.levels.values():
         if c not in cols:

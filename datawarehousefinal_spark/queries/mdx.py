@@ -4,6 +4,8 @@ plans, plus the aggregate advisor.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -547,10 +549,8 @@ def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB fact is a few thousand rows; every dashboard drill at or
     above month grain reads kilobytes, and materialization costs one
     map-side-combined shuffle, amortized over every routed query."""
-    from datawarehousefinal_spark.operators.aggnav import (
-        materialize_aggregate,
-        mdx_query_navigated,
-    )
+    from datawarehousefinal_spark.operators.aggnav import materialize_aggregate
+    from datawarehousefinal_spark.operators.mdx import mdx_query
 
     cube = _movimientos_cube(spark, sf_dir)
     with _scratch_path("mdx_aggnav", sf_dir) as path:
@@ -565,8 +565,9 @@ def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         decoy = materialize_aggregate(
             cube, ["Fecha.Dia", "Cliente.Segmento"], name="agg_dia_segmento"
         )
-        out = mdx_query_navigated(
-            cube, _MDX_MONTH_STATEMENT, [decoy, rollup]
+        out = mdx_query(
+            dataclasses.replace(cube, aggregates=[decoy, rollup]),
+            _MDX_MONTH_STATEMENT,
         )
         return local_result(out)
 
@@ -598,15 +599,10 @@ def incremental_aggregate_rollup_q(
     is O(batch + touched cells); in production the merged cells land
     as a MERGE INTO / partition overwrite on the lakehouse rollup."""
     from datawarehousefinal_spark.operators.aggnav import (
-        choose_aggregate,
         ingest_into_aggregate,
         materialize_aggregate,
-        reagg_expr,
     )
-    from datawarehousefinal_spark.operators.mdx import (
-        execute_select,
-        parse_mdx,
-    )
+    from datawarehousefinal_spark.operators.mdx import mdx_query
 
     cube = _movimientos_cube(spark, sf_dir)
     star = cube.star_builder()
@@ -619,15 +615,18 @@ def incremental_aggregate_rollup_q(
         name="agg_mes_segmento",
     )
     merged = ingest_into_aggregate(cube, rollup, delta)
-    sel = parse_mdx(_MDX_MONTH_STATEMENT, cube)
-    chosen = choose_aggregate(cube, sel, [merged])
-    if chosen is None:
+
+    def unrouted():
         raise RuntimeError(
             "navigator failed to route to the merged rollup — the face "
             "would silently prove nothing"
         )
-    return execute_select(
-        sel, cube, chosen.table, lambda m: reagg_expr(cube, m)
+
+    return mdx_query(
+        dataclasses.replace(
+            cube, aggregates=[merged], star_builder=unrouted
+        ),
+        _MDX_MONTH_STATEMENT,
     )
 
 
@@ -1295,10 +1294,8 @@ def mdx_navigator_partition_pruned_q(
     collapses the fact to cells, the partitioning makes a diced read
     touch only the diced cells' files. Result is a ``local_result`` so
     the driver's hash pass never re-reads the scratch rollup."""
-    from datawarehousefinal_spark.operators.aggnav import (
-        materialize_aggregate,
-        mdx_query_navigated,
-    )
+    from datawarehousefinal_spark.operators.aggnav import materialize_aggregate
+    from datawarehousefinal_spark.operators.mdx import mdx_query
     from datawarehousefinal_spark.plans.audit import physical_plan
 
     cube = _movimientos_cube(spark, sf_dir)
@@ -1309,7 +1306,10 @@ def mdx_navigator_partition_pruned_q(
             path=path,
             partition_by="Fecha.Anio",
         )
-        out = mdx_query_navigated(cube, _MDX_NAV_PRUNED_STATEMENT, [agg])
+        out = mdx_query(
+            dataclasses.replace(cube, aggregates=[agg]),
+            _MDX_NAV_PRUNED_STATEMENT,
+        )
         plan = physical_plan(out)
         # bracket-scoped check: "anio" must appear INSIDE the
         # PartitionFilters list itself — a substring scan past the bracket

@@ -48,8 +48,9 @@ def media_byte_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "image_meta_sniff",
     oracle="""
     SELECT doc_id AS media_id,
-           CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
-                           WHEN 2 THEN 'bmp' ELSE 'jpeg' END AS format,
+           CASE (doc_id // 50) % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
+                                   WHEN 2 THEN 'bmp' ELSE 'jpeg' END
+               AS format,
            CAST(doc_id % 37 + 1 AS INTEGER) AS width,
            CAST(doc_id % 11 + 1 AS INTEGER) AS height
     FROM documents WHERE doc_id % 50 = 0
@@ -61,7 +62,9 @@ def image_meta_sniff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims derived from the doc id) are sniffed by the library-free
     header parser (multimodal.sniff_image_meta, Arrow-batched
     mapInPandas, bytes never leave the executor) and must reproduce the
-    planted (format, width, height) exactly."""
+    planted (format, width, height) exactly. The kept ids are the
+    multiples of 50, so the format cycles on ``id // 50``: ``id % 4``
+    would only ever pick PNG and BMP."""
     from datawarehousefinal_spark.operators.multimodal import (
         sniff_image_meta,
         synth_image_bytes,
@@ -76,7 +79,7 @@ def image_meta_sniff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
     rows = [
-        (i, synth_image_bytes(fmts[i % 4], i % 37 + 1, i % 11 + 1))
+        (i, synth_image_bytes(fmts[(i // 50) % 4], i % 37 + 1, i % 11 + 1))
         for i in ids
     ]
     media = spark.createDataFrame(rows, "media_id long, payload binary")

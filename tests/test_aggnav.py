@@ -5,13 +5,14 @@ rollups serve without touching the fact."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
 from datawarehousefinal_spark.operators.aggnav import (
     choose_aggregate,
     grain_columns,
     materialize_aggregate,
-    mdx_query_navigated,
 )
 from datawarehousefinal_spark.operators.mdx import (
     CubeDef,
@@ -78,7 +79,9 @@ def _sorted_rows(df):
 def test_reagg_matches_direct_for_all_aggregators(spark):
     cube = _cube(spark)
     agg = materialize_aggregate(cube, ["Fecha.Mes", "Persona.Pais"])
-    got = mdx_query_navigated(cube, _ALL_MEASURES_BY_YEAR, [agg])
+    got = mdx_query(
+        dataclasses.replace(cube, aggregates=[agg]), _ALL_MEASURES_BY_YEAR
+    )
     want = mdx_query(cube, _ALL_MEASURES_BY_YEAR)
     assert _sorted_rows(got) == _sorted_rows(want)
     # the avg is the correct 2024 value 40.0 (160/4), NOT the
@@ -125,7 +128,7 @@ def test_navigator_requires_filter_columns_in_grain(spark):
         "{[Fecha].[Anio].Members} ON ROWS FROM [Toy] "
         "WHERE ([Persona].[Pais].[AR])"
     )
-    got = mdx_query_navigated(cube, q, [years_only])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[years_only]), q)
     want = mdx_query(cube, q)
     assert _sorted_rows(got) == _sorted_rows(want)
 
@@ -138,7 +141,7 @@ def test_member_dice_routes_and_filters_before_reagg(spark):
         "CROSSJOIN({[Fecha].[Anio].Members}, {[Persona].[Pais].[AR]}) "
         "ON ROWS FROM [Toy]"
     )
-    got = mdx_query_navigated(cube, q, [agg])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
     want = mdx_query(cube, q)
     assert _sorted_rows(got) == _sorted_rows(want)
 
@@ -152,7 +155,7 @@ def test_all_lattice_through_rollup(spark):
         "{[Persona].[Pais].[(All)], [Persona].[Pais].Members}) ON ROWS "
         "FROM [Toy]"
     )
-    got = mdx_query_navigated(cube, q, [agg])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
     want = mdx_query(cube, q)
     assert _sorted_rows(got) == _sorted_rows(want)
 
@@ -167,7 +170,7 @@ def test_topcount_and_calc_member_through_rollup(spark):
         "TOPCOUNT({[Persona].[Pais].Members}, 1, [Measures].[Ticket]) "
         "ON ROWS FROM [Toy]"
     )
-    got = mdx_query_navigated(cube, q, [agg])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
     want = mdx_query(cube, q)
     assert _sorted_rows(got) == _sorted_rows(want)
 
@@ -181,7 +184,9 @@ def test_parquet_rollup_serves_without_the_fact(spark, tmp_path):
     )
     # the rollup is smaller than the fact and lives in parquet
     assert agg.table.count() < cube.star_builder().count()
-    got = mdx_query_navigated(cube, _ALL_MEASURES_BY_YEAR, [agg])
+    got = mdx_query(
+        dataclasses.replace(cube, aggregates=[agg]), _ALL_MEASURES_BY_YEAR
+    )
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "parquet" in plan.lower()
     # the toy fact is an in-memory LocalTableScan; a navigated plan
@@ -335,7 +340,7 @@ def test_partitioned_rollup_prunes_at_the_scan(spark, tmp_path):
         "{[Fecha].[Mes].Members} ON ROWS FROM [Toy] "
         "WHERE ([Fecha].[Anio].[2024])"
     )
-    got = mdx_query_navigated(cube, q, [agg])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     # the dice reached the partition column, not just a post-scan filter
@@ -417,7 +422,7 @@ def test_time_intelligence_through_rollup(spark):
                {[Fecha].[Mes].[2]} ON ROWS FROM [Toy]
         """,
     ):
-        got = mdx_query_navigated(cube, q, [agg])
+        got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
         want = mdx_query(cube2, q)
         assert _sorted_rows(got) == _sorted_rows(want), q
 
@@ -479,7 +484,7 @@ def test_distinct_count_navigator_exact_grain_serves(spark):
     )
     sel = parse_mdx(q, cube)
     assert choose_aggregate(cube, sel, [agg]).name == "by_year"
-    got = mdx_query_navigated(cube, q, [agg])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
     want = mdx_query(cube, q)
     assert _sorted_rows(got) == _sorted_rows(want)
 
@@ -497,7 +502,7 @@ def test_distinct_count_navigator_refuses_coarser_grain(spark):
     # year query over a month-grain table would re-fold overlapping
     # distinct sets — the navigator must fall back to the fact
     assert choose_aggregate(cube, sel, [fine]) is None
-    got = mdx_query_navigated(cube, q, [fine])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[fine]), q)
     assert {(r["anio"], r["clientes_distintos"]) for r in got.collect()} == {
         (2024, 3), (2025, 1),
     }
@@ -548,7 +553,7 @@ def test_distinct_count_exact_grain_with_dice_and_slicer(spark):
     )
     sel = parse_mdx(q, cube)
     assert choose_aggregate(cube, sel, [agg]).name == "by_month"
-    got = mdx_query_navigated(cube, q, [agg])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
     want = mdx_query(cube, q)
     assert _sorted_rows(got) == _sorted_rows(want)
 
@@ -606,7 +611,7 @@ def test_median_navigator_exact_grain_serves(spark):
     )
     sel = parse_mdx(q, cube)
     assert choose_aggregate(cube, sel, [agg]).name == "by_year"
-    got = mdx_query_navigated(cube, q, [agg])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
     want = mdx_query(cube, q)
     assert _sorted_rows(got) == _sorted_rows(want)
 
@@ -621,7 +626,7 @@ def test_median_navigator_refuses_coarser_grain(spark):
     sel = parse_mdx(q, cube)
     # the median-of-medians re-fold would answer 52.5 for 2024
     assert choose_aggregate(cube, sel, [fine]) is None
-    got = mdx_query_navigated(cube, q, [fine])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[fine]), q)
     assert {(r["anio"], r["mediana_medida"]) for r in got.collect()} == {
         (2024, 20.0), (2025, 40.0),
     }
@@ -762,7 +767,6 @@ def test_advisor_materialized_picks_serve_the_workload(spark):
     # cube, and every workload query answers identically to the fact
     from datawarehousefinal_spark.operators.aggnav import (
         materialize_aggregate,
-        mdx_query_navigated,
         recommend_aggregates,
     )
 
@@ -788,7 +792,7 @@ def test_advisor_materialized_picks_serve_the_workload(spark):
         for i, r in enumerate(recs)
     ]
     for q in _advisor_workload():
-        got = mdx_query_navigated(cube, q, tables)
+        got = mdx_query(dataclasses.replace(cube, aggregates=tables), q)
         want = mdx_query(cube, q)
         assert _sorted_rows(got) == _sorted_rows(want)
 

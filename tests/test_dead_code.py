@@ -1,14 +1,16 @@
 """Dead-code guard (no Spark): every top-level function and class of the
-package outside ``queries/`` must be referenced from code that can run it.
+package must be referenced from code that can run it. In ``queries/`` the
+rule also covers module constants, and exempts the ``@query``-registered
+faces (the registry runs them).
 
 A reference is an ``ast.Name`` or an imported name in the package itself or
 in the scripts that drive it (``bench.py``, ``__spark_entry__.py``,
-``profile_faces.py``, ``perfbench/``), or an ``ast.Attribute`` whose base an
-import binds to the defining module (``olap.cube_all`` after ``from
-datawarehousefinal_spark.operators import olap``): ``F.trim`` does not vouch
-for a package ``trim``. Mentions in docstrings and comments do not count,
-nor do ``__init__`` re-exports and ``__all__`` entries, nor a definition's
-references to itself.
+``profile_faces.py``, ``perfbench/``), or an ``ast.Attribute`` (or a
+``getattr`` with a literal name) whose base an import binds to the defining
+module (``olap.cube_all`` after ``from datawarehousefinal_spark.operators
+import olap``): ``F.trim`` does not vouch for a package ``trim``. Mentions
+in docstrings and comments do not count, nor do ``__init__`` re-exports and
+``__all__`` entries, nor a definition's references to itself.
 """
 
 from __future__ import annotations
@@ -66,14 +68,29 @@ def _import_bindings(tree: ast.Module, module: str) -> dict[str, set[str]]:
     return bound
 
 
-def _attribute_base(node: ast.Attribute) -> list[str] | None:
-    """``a.b`` of ``a.b.c`` as ["a", "b"]; None unless the base is a dotted
-    name."""
-    parts, value = [], node.value
-    while isinstance(value, ast.Attribute):
-        parts.insert(0, value.attr)
-        value = value.value
-    return [value.id] + parts if isinstance(value, ast.Name) else None
+def _dotted(node: ast.expr) -> list[str] | None:
+    """``a.b.c`` as ["a", "b", "c"]; None unless it is a dotted name."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.insert(0, node.attr)
+        node = node.value
+    return [node.id] + parts if isinstance(node, ast.Name) else None
+
+
+def _attribute(node: ast.AST) -> tuple[list[str] | None, str] | None:
+    """(dotted base, attribute name) of ``a.b.c`` or of ``getattr(a.b,
+    "c", ...)``; None for any other node."""
+    if isinstance(node, ast.Attribute):
+        return _dotted(node.value), node.attr
+    if (
+        isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "getattr"
+        and len(node.args) >= 2
+        and isinstance(node.args[1], ast.Constant)
+        and isinstance(node.args[1].value, str)
+    ):
+        return _dotted(node.args[0]), node.args[1].value
+    return None
 
 
 def _references(path: str, root: str) -> list[tuple]:
@@ -85,27 +102,62 @@ def _references(path: str, root: str) -> list[tuple]:
     bound = _import_bindings(tree, _module_name(path, root))
     refs = []
     for stmt in tree.body:
-        owner = getattr(stmt, "name", None)
+        owner = getattr(stmt, "name", None) or next(_constants(stmt), None)
         for node in ast.walk(stmt):
+            attribute = _attribute(node)
             if isinstance(node, ast.Name):
                 refs.append((owner, node.id, None))
-            elif isinstance(node, ast.Attribute):
-                base = _attribute_base(node)
+            elif attribute is not None:
+                base, attr = attribute
                 for mod in bound.get(base[0], ()) if base else ():
                     full = ".".join([mod] + base[1:])
-                    refs.append((owner, node.attr, full))
+                    refs.append((owner, attr, full))
             elif isinstance(node, (ast.Import, ast.ImportFrom)) and not reexport:
                 refs += [(owner, a.name.rsplit(".", 1)[-1], None)
                          for a in node.names]
     return refs
 
 
+def _constants(stmt: ast.stmt):
+    """The non-dunder names a top-level assignment binds."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    else:
+        return
+    for t in targets:
+        if isinstance(t, ast.Name) and not t.id.startswith("__"):
+            yield t.id
+
+
+def _registered(stmt: ast.stmt) -> bool:
+    """Whether a definition is decorated ``@query(...)``."""
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in getattr(stmt, "decorator_list", ())
+    )
+
+
+def _definitions(tree: ast.Module, in_queries: bool):
+    """The top-level names the guard checks: functions and classes, plus
+    module constants in ``queries/``, minus its registered faces."""
+    for stmt in tree.body:
+        if isinstance(
+            stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            if not (in_queries and _registered(stmt)):
+                yield stmt.name
+        elif in_queries:
+            yield from _constants(stmt)
+
+
 def _unreferenced(
     pkg: str, callers: list[str], tests_dir: str
 ) -> list[str]:
-    """Top-level definitions of ``pkg`` (outside ``queries/``) that no file
-    in ``callers`` references; ``tests_dir`` may only vouch for the
-    modules in TESTED_BY_DESIGN."""
+    """Top-level definitions of ``pkg`` that no file in ``callers``
+    references; ``tests_dir`` may only vouch for the modules in
+    TESTED_BY_DESIGN."""
     root = os.path.dirname(pkg)
     used = defaultdict(set)  # (module or None, name) -> {(file, owner)}
     for path in callers:
@@ -117,16 +169,9 @@ def _unreferenced(
     dead = []
     for path in _py_files(pkg):
         rel = os.path.relpath(path, pkg)
-        if rel.startswith("queries" + os.sep):
-            continue
         module = _module_name(path, root)
         tree = ast.parse(open(path, encoding="utf-8").read(), path)
-        for stmt in tree.body:
-            if not isinstance(
-                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                continue
-            name = stmt.name
+        for name in _definitions(tree, rel.startswith("queries" + os.sep)):
             refs = used[None, name] | used[module, name]
             if refs - {(path, name)} or name in GENERATORS:
                 continue
@@ -197,6 +242,18 @@ def test_guard_counts_attributes_only_through_the_defining_module(tmp_path):
     assert dead == ["textnorm.py::trim"]
 
 
+def test_guard_counts_getattr_with_a_literal_name(tmp_path):
+    dead = _dead_in(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/ops.py": "def by_getattr(): pass\n"
+                      "def by_computed_name(): pass\n",
+        "driver.py": "import pkg.ops as ops\n"
+                     "getattr(ops, 'by_getattr')()\n"
+                     "getattr(ops, 'by_' + 'computed_name')()\n",
+    })
+    assert dead == ["ops.py::by_computed_name"]
+
+
 def test_guard_ignores_docstring_mentions_and_self_reference(tmp_path):
     dead = _dead_in(tmp_path, {
         "pkg/__init__.py": "",
@@ -233,11 +290,24 @@ def test_guard_lets_tests_vouch_for_plan_asserts_only(tmp_path):
     assert dead == ["ops.py::test_only", "plans/audit.py::assert_unused"]
 
 
-def test_guard_skips_query_modules(tmp_path):
+def test_guard_checks_query_helpers_but_not_registered_faces(tmp_path):
     dead = _dead_in(tmp_path, {
         "pkg/__init__.py": "",
-        "pkg/queries/faces.py": "def registered_face(): pass\n",
+        "pkg/queries/__init__.py": "def query(name, oracle=None):\n"
+                                   "    return lambda fn: fn\n",
+        "pkg/queries/faces.py": "from pkg.queries import query\n"
+                                "_SQL = 'SELECT 1'\n"
+                                "_UNUSED_SQL = 'SELECT 2'\n"
+                                "def _helper(): pass\n"
+                                "def _unused_helper(): pass\n"
+                                "@query('face', oracle=_SQL)\n"
+                                "def registered_face():\n"
+                                "    return _helper()\n",
         "pkg/ops.py": "class Orphan: pass\n",
         "driver.py": "",
     })
-    assert dead == ["ops.py::Orphan"]
+    assert dead == [
+        "ops.py::Orphan",
+        "queries/faces.py::_UNUSED_SQL",
+        "queries/faces.py::_unused_helper",
+    ]

@@ -1811,6 +1811,69 @@ def test_mdx_drillthrough_errors_are_loud(spark, bad):
         mdx_drillthrough(_toy_cube(spark), bad).collect()
 
 
+def _null_member_cube(spark):
+    # one NULL-keyed pais row: a real member that EXCEPT must keep
+    def star():
+        return spark.createDataFrame(
+            [
+                (2024, 1, "AR", "A", 10.0),
+                (2024, 1, None, "A", 7.0),
+                (2024, 2, "BR", "B", 3.0),
+                (2024, 3, "CL", "A", 6.0),
+                (2025, 1, "AR", "B", 40.0),
+                (2025, 2, "CL", "A", 50.0),
+                (2025, 3, "BR", "B", 8.0),
+            ],
+            "anio int, mes int, pais string, seg string, medida double",
+        )
+
+    return dataclasses.replace(_toy_cube(spark), star_builder=star)
+
+
+_DRILL_PAIS_ROWS = (
+    "SELECT {[Measures].[Cantidad]} ON COLUMNS, {[Persona].[Pais].Members} "
+    "ON ROWS "
+)
+
+
+@pytest.mark.parametrize(
+    "select",
+    [
+        # EXCEPT over .Members: a NOT-IN dice that keeps the NULL member
+        "SELECT {[Measures].[Cantidad]} ON COLUMNS, "
+        "EXCEPT({[Persona].[Pais].Members}, {[Persona].[Pais].[BR]}) "
+        "ON ROWS FROM [Toy]",
+        # sub-select restriction
+        _DRILL_PAIS_ROWS
+        + "FROM (SELECT {[Fecha].[Anio].[2024]} ON COLUMNS FROM [Toy])",
+        # compound (tuple-set) slicer: OR of ANDs
+        _DRILL_PAIS_ROWS
+        + "FROM [Toy] WHERE {([Fecha].[Anio].[2024], [Cliente].[Seg].[A]), "
+        "([Fecha].[Anio].[2025], [Cliente].[Seg].[B])}",
+        # set slicer: one level's members OR together
+        _DRILL_PAIS_ROWS
+        + "FROM [Toy] WHERE {[Fecha].[Mes].[1], [Fecha].[Mes].[3]}",
+    ],
+    ids=["except_members", "subselect", "compound_slicer", "set_slicer"],
+)
+def test_mdx_drillthrough_rows_match_cell_counts(spark, select):
+    # drillthrough applies exactly the dices the aggregation applies: the
+    # fact rows behind each member number that member's count cell
+    from collections import Counter
+
+    from datawarehousefinal_spark.operators.mdx import mdx_drillthrough
+
+    cube = _null_member_cube(spark)
+    drilled = Counter(
+        r["pais"]
+        for r in mdx_drillthrough(cube, "DRILLTHROUGH " + select).collect()
+    )
+    cells = {r["pais"]: r["n"] for r in mdx_query(cube, select).collect()}
+    assert drilled == cells
+    if "EXCEPT" in select:
+        assert cells[None] == 1 and "BR" not in cells
+
+
 def test_mdx_subselect_unknown_level_all_is_loud(spark):
     # [Fecha].[NoSuchLevel].[(All)] — the 3-segment form must validate
     # the LEVEL, not just the dimension (review finding, round 12)
@@ -2435,7 +2498,6 @@ def test_mdx_compound_slicer_navigator_requires_columns(spark):
     from datawarehousefinal_spark.operators.aggnav import (
         choose_aggregate,
         materialize_aggregate,
-        mdx_query_navigated,
     )
 
     cube = _toy_cube(spark)
@@ -2456,7 +2518,7 @@ def test_mdx_compound_slicer_navigator_requires_columns(spark):
         cube, ["Fecha.Anio", "Persona.Pais", "Cliente.Seg"], name="cov"
     )
     assert choose_aggregate(cube, sel, [covering]).name == "cov"
-    got = mdx_query_navigated(cube, q, [covering])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[covering]), q)
     want = mdx_query(cube, q)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
@@ -2810,7 +2872,6 @@ def test_mdx_custom_group_crossjoin_and_wrapper(spark):
 def test_mdx_custom_group_navigator_routes_and_matches(spark):
     from datawarehousefinal_spark.operators.aggnav import (
         materialize_aggregate,
-        mdx_query_navigated,
     )
 
     cube = _toy_cube(spark)
@@ -2823,7 +2884,7 @@ def test_mdx_custom_group_navigator_routes_and_matches(spark):
         FROM [Toy]
     """
     agg = materialize_aggregate(cube, ["Persona.Pais"], name="by_pais")
-    got = mdx_query_navigated(cube, q, [agg])
+    got = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q)
     want = mdx_query(cube, q)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
@@ -2902,7 +2963,6 @@ def test_mdx_custom_group_distinct_count_skips_rollup(spark):
     from datawarehousefinal_spark.operators.aggnav import (
         choose_aggregate,
         materialize_aggregate,
-        mdx_query_navigated,
     )
 
     def star():
@@ -2932,7 +2992,7 @@ def test_mdx_custom_group_distinct_count_skips_rollup(spark):
     agg = materialize_aggregate(cube, ["Persona.Pais"], name="by_pais")
     sel = parse_mdx(q, cube)
     assert choose_aggregate(cube, sel, [agg]) is None
-    rows = mdx_query_navigated(cube, q, [agg]).collect()
+    rows = mdx_query(dataclasses.replace(cube, aggregates=[agg]), q).collect()
     # C1 appears in both AR and BR: the true group distinct is 2, the
     # state re-fold would say 3
     assert [(r["pais"], r["clientes"]) for r in rows] == [("Mercosur", 2)]
