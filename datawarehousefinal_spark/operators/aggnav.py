@@ -9,13 +9,14 @@ Schema_Trabajo_Final.xml:56-91). This module re-expresses that
 mechanism Spark-first:
 
 - :func:`materialize_aggregate` groups the cube's star once at a
-  declared grain and stores MERGEABLE MEASURE STATES, not final
+  declared grain (one SQL GROUP BY over the star's statement) and
+  stores MERGEABLE MEASURE STATES, not final
   values — ``count`` → a per-cell count, ``sum`` → a per-cell sum,
   ``avg`` → BOTH (sum, count), ``min``/``max`` → per-cell min/max —
   because a coarser query must re-aggregate cells, and an average of
   averages is wrong. Written to parquet when a path is given (the
-  production shape: build once, serve forever), else kept as a
-  DataFrame.
+  production shape: build once, serve forever), else kept as SQL
+  that the serving statement inlines.
 - :func:`choose_aggregate` is the navigator: a parsed MDX SELECT is
   answerable from an aggregate table iff every grouping column AND
   every filter column (slicer + member dices — they must apply before
@@ -32,8 +33,8 @@ mechanism Spark-first:
   ``mdx_query`` consult the navigator on EVERY query — Mondrian's
   deployment shape, where ``<AggName>`` declarations live on the
   schema and clients never address aggregates explicitly. The chosen
-  rollup runs through the same execution core as the fact path
-  (operators/mdx.py:execute_select) — calculated members, TOPCOUNT,
+  rollup runs through the same SQL compile as the fact path
+  (operators/mdx.py:compile_select) — calculated members, TOPCOUNT,
   FILTER, hasAll grouping-set lattices all work unchanged, because
   the only thing that differs is how a base measure aggregates
   (re-fold the states instead of folding the fact). No covering
@@ -61,8 +62,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from datawarehousefinal_spark.operators.mdx import (
     CubeDef,
@@ -71,38 +71,45 @@ from datawarehousefinal_spark.operators.mdx import (
     needed_base_measures,
     parse_mdx,
 )
+from datawarehousefinal_spark.operators.relation import Rel, ident
 
 
 @dataclass
 class AggTable:
     """A materialized rollup of a cube's star: ``grain`` is the star
-    columns it groups by; ``table`` carries one row per grain cell with
+    columns it groups by; ``rel`` carries one row per grain cell with
     the mergeable state columns of EVERY cube measure (see
     :func:`_state_columns`)."""
 
     name: str
     grain: tuple[str, ...]
-    table: DataFrame
+    rel: Rel | None
+
+    @property
+    def table(self) -> DataFrame:
+        """The rollup's cells as a DataFrame."""
+        return self.rel.df()
 
 
-def _state_columns(cube: CubeDef) -> list[tuple[str, str, Column]]:
-    """(measure_alias, state_name, state_agg) triples for every cube
-    measure — the per-cell mergeable states an aggregate table stores.
-    ``avg`` stores two states (sum + count); the others one."""
-    out: list[tuple[str, str, Column]] = []
+def _state_columns(cube: CubeDef) -> list[tuple[str, str]]:
+    """(state_name, state_agg SQL) pairs for every cube measure — the
+    per-cell mergeable states an aggregate table stores. ``avg`` stores
+    two states (sum + count); the others one."""
+    out: list[tuple[str, str]] = []
     seen: set[str] = set()
 
-    def add(alias: str, kind: str, agg: Column):
+    def add(alias: str, kind: str, agg: str):
         name = f"{alias}__{kind}"
         if name not in seen:
             seen.add(name)
-            out.append((alias, name, agg.alias(name)))
+            out.append((name, f"{agg} AS {ident(name)}"))
 
     for _mname, (agg, col, alias) in cube.measures.items():
+        c = ident(col)
         if agg == "count":
-            add(alias, "cnt", F.count(col))
+            add(alias, "cnt", f"count({c})")
         elif agg == "sum":
-            add(alias, "sum", F.sum(col))
+            add(alias, "sum", f"sum({c})")
         elif agg == "avg":
             # EXACT decimal sum-state, not double: double addition is not
             # associative, so a merged/re-folded rollup's avg differed
@@ -113,23 +120,23 @@ def _state_columns(cube: CubeDef) -> list[tuple[str, str, Column]]:
             # merge ≡ rebuild becomes bit-identical; reagg_expr casts
             # the exact sum to double once at serve (correctly rounded
             # in both Spark and DuckDB) and divides.
-            add(alias, "sum", F.sum(F.col(col).cast("decimal(20,4)")))
-            add(alias, "cnt", F.count(col))
+            add(alias, "sum", f"sum(CAST({c} AS DECIMAL(20,4)))")
+            add(alias, "cnt", f"count({c})")
         elif agg == "min":
-            add(alias, "min", F.min(col))
+            add(alias, "min", f"min({c})")
         elif agg == "max":
-            add(alias, "max", F.max(col))
+            add(alias, "max", f"max({c})")
         elif agg == "distinct-count":
             # a NON-mergeable state: two cells' distinct counts don't
             # combine (the value sets may overlap). Stored so an
             # EXACT-grain query serves precomputed; the navigator never
             # routes a coarser query here (choose_aggregate), and
             # incremental ingest refuses the cube (_merge_exprs).
-            add(alias, "dcnt", F.count_distinct(col))
+            add(alias, "dcnt", f"count(DISTINCT {c})")
         elif agg == "median":
             # the other NON-mergeable state: two cells' medians don't
             # combine either — same exact-grain-only treatment
-            add(alias, "med", F.median(col))
+            add(alias, "med", f"median({c})")
         else:
             raise MdxError(f"unsupported aggregator {agg!r}")
     return out
@@ -161,7 +168,7 @@ def materialize_aggregate(
     *star_args,
     path: str | None = None,
     name: str | None = None,
-    source: DataFrame | None = None,
+    source: Rel | DataFrame | None = None,
     partition_by: str | None = None,
 ) -> AggTable:
     """Build the rollup of ``cube``'s star at the grain of ``levels``
@@ -183,8 +190,9 @@ def materialize_aggregate(
     once a rollup itself has grown to millions of cells. Requires
     ``path`` (partitioning is a storage property)."""
     grain = grain_columns(cube, levels)
-    states = [s for _a, _n, s in _state_columns(cube)]
-    star = source if source is not None else cube.star_builder(*star_args)
+    star = Rel.of(
+        source if source is not None else cube.star_builder(*star_args)
+    )
     pcol = None
     if partition_by is not None:
         if path is None:
@@ -206,41 +214,50 @@ def materialize_aggregate(
                 f"partition_by column {pcol!r} is not part of the "
                 f"grain {grain}"
             )
-    return _rollup(star, grain, states, name, path, pcol)
+    return _rollup(cube, star, grain, name, path, pcol)
+
+
+def _states_at(cube: CubeDef, star: Rel, grain: tuple[str, ...]) -> Rel:
+    """``star`` grouped at ``grain`` into every measure's states."""
+    keys = ", ".join(ident(c) for c in grain)
+    states = ", ".join(s for _n, s in _state_columns(cube))
+    return star.derive(
+        f"SELECT {keys}, {states}\nFROM {{rel}}\nGROUP BY {keys}"
+    )
 
 
 def _rollup(
-    star: DataFrame,
+    cube: CubeDef,
+    star: Rel,
     grain: tuple[str, ...],
-    states: list[Column],
     name: str | None,
     path: str | None,
     pcol: str | None = None,
 ) -> AggTable:
-    """The aggregate table of ``star``'s ``states`` at ``grain``; with
+    """The aggregate table of ``star``'s states at ``grain``; with
     ``path``, written to parquet (partitioned by ``pcol``) and served
     from the read-back."""
-    rollup = star.groupBy(*grain).agg(*states)
+    rollup = _states_at(cube, star, grain)
     if path is not None:
-        writer = rollup.write.mode("overwrite")
+        writer = rollup.df().write.mode("overwrite")
         if pcol is not None:
             writer = writer.partitionBy(pcol)
         writer.parquet(path)
-        rollup = rollup.sparkSession.read.parquet(path)
+        rollup = Rel.of(star.spark.read.parquet(path))
     return AggTable(
-        name=name or f"agg_{'_'.join(grain)}", grain=grain, table=rollup
+        name=name or f"agg_{'_'.join(grain)}", grain=grain, rel=rollup
     )
 
 
-_STATE_FOLD = {"cnt": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
+_STATE_FOLD = {"cnt": "sum", "sum": "sum", "min": "min", "max": "max"}
 
 
-def _merge_exprs(cube: CubeDef) -> list[Column]:
+def _merge_exprs(cube: CubeDef) -> list[str]:
     """How two rollups' state columns combine into one: counts and sums
     re-SUM, min/max re-fold — the same mergeability that makes the
     states query-safe makes them ingest-safe."""
     out = []
-    for _alias, sname, _agg in _state_columns(cube):
+    for sname, _agg in _state_columns(cube):
         kind = sname.rsplit("__", 1)[1]
         if kind in ("dcnt", "med"):
             raise MdxError(
@@ -252,12 +269,12 @@ def _merge_exprs(cube: CubeDef) -> list[Column]:
                 "sketch store (operators/sketches.py: HLL for "
                 "distincts, KLL for quantiles)."
             )
-        out.append(_STATE_FOLD[kind](sname).alias(sname))
+        out.append(f"{_STATE_FOLD[kind]}({ident(sname)}) AS {ident(sname)}")
     return out
 
 
 def ingest_into_aggregate(
-    cube: CubeDef, agg: AggTable, star_delta: DataFrame
+    cube: CubeDef, agg: AggTable, star_delta: Rel | DataFrame
 ) -> AggTable:
     """Incremental rollup maintenance: fold a batch of NEW star rows
     into an existing aggregate table without rebuilding it — the
@@ -272,26 +289,33 @@ def ingest_into_aggregate(
     becomes a MERGE INTO / partition overwrite of the touched cells on
     the lakehouse table; the state algebra here is exactly what that
     writer folds."""
-    states = [s for _a, _n, s in _state_columns(cube)]
-    delta = star_delta.groupBy(*agg.grain).agg(*states)
-    merged = (
-        agg.table.unionByName(delta)
-        .groupBy(*agg.grain)
-        .agg(*_merge_exprs(cube))
+    merge = _merge_exprs(cube)  # loud on non-mergeable states
+    delta = _states_at(cube, Rel.of(star_delta), agg.grain)
+    cols = ", ".join(
+        ident(c) for c in (*agg.grain, *(n for n, _s in _state_columns(cube)))
     )
-    return AggTable(name=agg.name, grain=agg.grain, table=merged)
+    keys = ", ".join(ident(c) for c in agg.grain)
+    merged = Rel(
+        delta.spark,
+        f"SELECT {keys}, {', '.join(merge)}\nFROM (\n"
+        f"SELECT {cols} FROM (\n{agg.rel.sql}\n)\nUNION ALL\n"
+        f"SELECT {cols} FROM (\n{delta.sql}\n)\n)\nGROUP BY {keys}",
+        agg.rel.frames + delta.frames,
+    )
+    return AggTable(name=agg.name, grain=agg.grain, rel=merged)
 
 
-def reagg_expr(cube: CubeDef, measure_name: str) -> Column:
+def reagg_expr(cube: CubeDef, measure_name: str) -> str:
     """The re-aggregation of a base measure over aggregate-table cells:
     fold the mergeable states — counts and sums re-SUM, min/max re-fold,
     and avg divides the re-summed sum by the re-summed count (never an
     average of averages)."""
     agg, _col, alias = cube.measure_def(measure_name)
+    out = ident(alias)
     if agg == "count":
-        return F.sum(f"{alias}__cnt").alias(alias)
+        return f"sum({ident(alias + '__cnt')}) AS {out}"
     if agg == "sum":
-        return F.sum(f"{alias}__sum").alias(alias)
+        return f"sum({ident(alias + '__sum')}) AS {out}"
     if agg == "avg":
         # exact decimal re-sum → ONE correctly-rounded double conversion
         # → ONE IEEE division: bit-identical in Spark and DuckDB no
@@ -300,21 +324,21 @@ def reagg_expr(cube: CubeDef, measure_name: str) -> Column:
         # one-ulp driver red). Oracles of rollup-served avg faces use
         # the matching CAST(sum(CAST(x AS DECIMAL(20,4))) AS DOUBLE)/count.
         return (
-            F.sum(f"{alias}__sum").cast("double")
-            / F.sum(f"{alias}__cnt")
-        ).alias(alias)
+            f"CAST(sum({ident(alias + '__sum')}) AS DOUBLE) / "
+            f"sum({ident(alias + '__cnt')}) AS {out}"
+        )
     if agg == "min":
-        return F.min(f"{alias}__min").alias(alias)
+        return f"min({ident(alias + '__min')}) AS {out}"
     if agg == "max":
-        return F.max(f"{alias}__max").alias(alias)
+        return f"max({ident(alias + '__max')}) AS {out}"
     if agg == "distinct-count":
         # valid ONLY at exact grain (one table row per output cell —
         # max of a singleton is the value itself); choose_aggregate
         # never routes a coarser query to this expression
-        return F.max(f"{alias}__dcnt").alias(alias)
+        return f"max({ident(alias + '__dcnt')}) AS {out}"
     if agg == "median":
         # same exact-grain-only singleton serve
-        return F.max(f"{alias}__med").alias(alias)
+        return f"max({ident(alias + '__med')}) AS {out}"
     raise MdxError(f"unsupported aggregator {agg!r}")
 
 
@@ -375,7 +399,7 @@ def recommend_aggregates(
     workload: list[str],
     *star_args,
     max_tables: int = 3,
-    source: DataFrame | None = None,
+    source: Rel | DataFrame | None = None,
 ) -> list[AggRecommendation]:
     """The aggregate ADVISOR — Mondrian AggGen's role, Spark-first:
     given the MDX queries a deployment actually runs, pick the
@@ -412,14 +436,17 @@ def recommend_aggregates(
     if not candidates:
         return []
 
-    star = source if source is not None else cube.star_builder(*star_args)
-    counts_row = star.agg(
-        F.count(F.lit(1)).alias("__fact_rows"),
-        *[
-            F.count_distinct(*cols).alias(f"__cand_{i}")
-            for i, cols in enumerate(candidates)
-        ],
-    ).collect()[0]
+    star = Rel.of(
+        source if source is not None else cube.star_builder(*star_args)
+    )
+    distincts = "".join(
+        f", count(DISTINCT {', '.join(ident(c) for c in cols)}) "
+        f"AS `__cand_{i}`"
+        for i, cols in enumerate(candidates)
+    )
+    counts_row = star.derive(
+        f"SELECT count(1) AS `__fact_rows`{distincts} FROM {{rel}}"
+    ).df().collect()[0]
     fact_rows = counts_row["__fact_rows"]
     cells = {
         cols: counts_row[f"__cand_{i}"]
@@ -427,7 +454,7 @@ def recommend_aggregates(
     }
 
     def covers(grain: tuple[str, ...], sel: MdxSelect) -> bool:
-        stub = AggTable(name="__stub", grain=grain, table=None)
+        stub = AggTable(name="__stub", grain=grain, rel=None)
         return choose_aggregate(cube, sel, [stub]) is not None
 
     cover_map = {
@@ -492,15 +519,14 @@ def materialize_recommended(
     pick, bounded by ``max_tables`` — the same cost as answering each
     picked grain's query once, amortized over every routed query."""
     recs = recommend_aggregates(cube, workload, *star_args, max_tables=max_tables)
-    star = cube.star_builder(*star_args)
-    states = [s for _a, _n, s in _state_columns(cube)]
+    star = Rel.of(cube.star_builder(*star_args))
     tables: list[AggTable] = []
     for rec in recs:
         name = f"agg_{'_'.join(rec.grain)}"
         path = None
         if path_prefix is not None:
             path = f"{path_prefix.rstrip('/')}/{name}"
-        table = _rollup(star, rec.grain, states, name, path)
+        table = _rollup(cube, star, rec.grain, name, path)
         tables.append(table)
         cube.aggregates.append(table)
     return tables

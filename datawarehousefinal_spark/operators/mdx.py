@@ -5,9 +5,9 @@ whose query language is MDX (Schema_Trabajo_Final.xml:56-91 declares
 the cubes; clients send ``SELECT ... ON COLUMNS, ... ON ROWS FROM
 [Cube] WHERE (...)``). The engine's OLAP surface re-expressed those
 cubes as DataFrame/SQL plans (operators/olap.py); this module closes
-the last front-door gap by translating the MDX subset those cubes
-actually serve into the same plans — so a Mondrian client's query text
-runs unchanged.
+the last front-door gap by compiling the MDX subset those cubes
+actually serve into one SQL statement over the same star — so a
+Mondrian client's query text runs unchanged.
 
 Supported subset (the shapes the reference schema can answer):
 
@@ -286,26 +286,36 @@ Deliberately out of scope (the schema never exercises them):
 ``PARALLELPERIOD``/``LASTPERIODS`` anchored more than one level below
 the hierarchy top (ragged cycles).
 
-Execution model: the cube definition supplies a DENORMALIZED star
-builder (broadcast dim joins — the same star the SQL serving path
-registers) plus level→column and measure→aggregate mappings; the
-translated query is one ``groupBy(levels).agg(measures)`` (one GROUPING
-SETS aggregate when the axis carries ``(All)`` members) over the
-slicer-filtered star. Time-intelligence members then attach to the
-aggregate's cells as hidden columns, one per spec and measure, in the
-fixed family order PARALLELPERIOD, PERIODSTODATE, LASTPERIODS,
-OPENING/CLOSINGPERIOD, RANK (``_TI_FAMILIES``): a LEFT self-join on
-shifted period keys for PARALLELPERIOD, a window over the cells for
-the rest. When the axis dices a column a value moves along, the value
-comes from a re-aggregation without those dices (one per dropped-dice
-set, shared across specs), LEFT-joined back on the grouping keys.
-After that come at most a projection (calculated members), HAVING
-filters, sorts and top-n or Pareto cuts. At 100 TB that is exactly the
-hand-written plan: slicer predicates push through the star's dim
-joins, the fact shuffles once on the grouping keys, aggregates
-partially combine map-side, the time-intelligence joins and windows
-see group-count-many cells, and TopCount is a TakeOrderedAndProject
-over group-count-many rows.
+Execution model: every query compiles to ONE ``spark.sql`` statement
+(:func:`compile_mdx`; :func:`mdx_query` runs it), the way Mondrian turns
+MDX into SQL strings. The cube definition supplies a DENORMALIZED star
+(a SQL relation over the session's fixture views,
+``sources/testdata.fixture_views``, with broadcast hints on the dims —
+or any DataFrame, read through a view named for the one statement) plus
+level→column and measure→aggregate mappings. The statement nests its
+stages as subqueries: the star; its cells, one GROUP BY (GROUPING
+SETS when the axis carries ``(All)`` members) under one WHERE that ANDs
+the SELECT's dices (:meth:`MdxSelect.dices`), custom groups remapped by a
+CASE before grouping; then time-intelligence values attached to the
+cells as hidden columns, one per spec and measure, in the fixed family
+order PARALLELPERIOD, PERIODSTODATE, LASTPERIODS, OPENING/CLOSINGPERIOD,
+RANK (``_TI_FAMILIES``): a LEFT self-join on shifted period keys for
+PARALLELPERIOD, a window over the cells for the rest. When the axis
+dices a column a value moves along, the value comes from a
+re-aggregation without those dices (one per dropped-dice set, shared
+across specs), LEFT-joined back on the grouping keys. After that come
+the wrappers, innermost first — FILTER as WHERE, ORDER, TOPCOUNT,
+BOTTOMCOUNT, HEAD and TAIL as ORDER BY / LIMIT, the Pareto cuts as two
+windows and a filter — and a final projection of the COLUMNS axis with
+calculated members inlined. Member values are bound as named parameters
+(``:m0``, ...), never pasted into the SQL text; identifiers are
+backtick-quoted. Spark analyzes the whole plan in one JVM call; a plan
+built one Column at a time costs a py4j round trip per expression node.
+At 100 TB the plan is exactly the hand-written one: slicer predicates push
+through the star's dim joins, the fact shuffles once on the grouping
+keys, aggregates partially combine map-side, the time-intelligence
+joins and windows see group-count-many cells, and TopCount is a
+TakeOrderedAndProject over group-count-many rows.
 """
 
 from __future__ import annotations
@@ -314,8 +324,9 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from datawarehousefinal_spark.operators.relation import Rel, ident
 
 
 class MdxError(ValueError):
@@ -324,25 +335,25 @@ class MdxError(ValueError):
     declare — loud, never a silent wrong answer."""
 
 
-_AGG_FNS = {
-    "count": F.count,
+_AGG_SQL = {
+    "count": "count({})",
     # Mondrian's aggregator="distinct-count" (its XML spelling): exact
     # COUNT(DISTINCT col). On the fact path it is a plain two-phase
     # distinct aggregate; on the aggregate-table path it is special —
     # distinct counts are NOT mergeable across cells, so the navigator
     # serves them from a rollup only at EXACT grain (operators/aggnav)
-    "distinct-count": F.count_distinct,
+    "distinct-count": "count(DISTINCT {})",
     # exact interpolated median (Spark's sort-based median = DuckDB's
     # median/quantile_cont(0.5), the oracle shape). The other
     # non-mergeable aggregator: two cells' medians don't combine, so
     # the navigator applies the same exact-grain rule; the mergeable
     # approximate alternative at any grain is the KLL sketch store
     # (operators/sketches.py)
-    "median": F.median,
-    "sum": F.sum,
-    "avg": F.avg,
-    "min": F.min,
-    "max": F.max,
+    "median": "median({})",
+    "sum": "sum({})",
+    "avg": "avg({})",
+    "min": "min({})",
+    "max": "max({})",
 }
 
 
@@ -370,7 +381,9 @@ class CubeDef:
     """
 
     name: str
-    star_builder: Callable[..., DataFrame]
+    # the denormalized star: a Rel (SQL over the fixture views) or a
+    # DataFrame, which the statement reads through a per-call view
+    star_builder: Callable[..., Rel | DataFrame]
     levels: dict[str, str] = field(default_factory=dict)
     measures: dict[str, tuple[str, str, str]] = field(default_factory=dict)
     hierarchies: dict[str, list[str]] = field(default_factory=dict)
@@ -525,12 +538,13 @@ class CubeDef:
             f"unknown measure [Measures].[{name}] on cube [{self.name}]"
         )
 
-    def measure_agg(self, name: str):
+    def measure_agg(self, name: str) -> str:
+        """The SQL aggregate of a measure over the fact star."""
         agg, col, alias = self.measure_def(name)
-        fn = _AGG_FNS.get(agg)
+        fn = _AGG_SQL.get(agg)
         if fn is None:
             raise MdxError(f"unsupported aggregator {agg!r}")
-        return fn(col).alias(alias)
+        return f"{fn.format(ident(col))} AS {ident(alias)}"
 
     def measure_alias(self, name: str) -> str:
         return self.measure_def(name)[2]
@@ -548,7 +562,7 @@ def _calc_alias(name: str) -> str:
 _NUMERIC_PREFIXES = ("tinyint", "smallint", "int", "bigint", "long")
 
 
-def _coerce_members(source: DataFrame, col: str, vals: list[str]) -> list:
+def _coerce_members(dtypes: dict, col: str, vals: list[str]) -> list:
     """Member names arrive as bracketed TEXT; coerce them to the level
     COLUMN's type before filtering — by the schema, never by the
     member's spelling. ``[Fecha].[Anio].[1997]`` against an INT column
@@ -559,7 +573,7 @@ def _coerce_members(source: DataFrame, col: str, vals: list[str]) -> list:
     engine cast rules otherwise). A member that cannot coerce to a
     numeric level's type is a loud error: it could never match, and
     letting it through would silently drop the dice."""
-    dtype = dict(source.dtypes).get(col, "")
+    dtype = dtypes.get(col, "")
     if dtype.startswith(_NUMERIC_PREFIXES):
         out = []
         for v in vals:
@@ -1544,50 +1558,6 @@ class Dice(NamedTuple):
     subcube: bool = False
 
 
-def apply_dices(
-    src: DataFrame,
-    dices: list[Dice],
-    skip: frozenset = frozenset(),
-    keep_subcube: bool = False,
-) -> DataFrame:
-    """Filter ``src`` by ``dices`` in order, each member coerced to its
-    column's type. A time-intelligence recompute reads the cube past the
-    dices on ``skip`` columns (subcube dices stay when
-    ``keep_subcube``)."""
-    for d in dices:
-        if skip.intersection(d.cols) and not (keep_subcube and d.subcube):
-            if d.kind == "or":
-                # one leg of an OR cannot be dropped without changing
-                # the other legs' meaning — loud, never a wrong context
-                raise MdxError(
-                    "time intelligence shifts/windows a column that a "
-                    "compound (tuple-set) slicer also filters — the "
-                    "cube-context recompute cannot drop one leg of an "
-                    "OR; dice that column on the rows axis or a plain "
-                    "slicer instead"
-                )
-            continue
-        if d.kind == "or":
-            pred = None
-            for terms in d.members:
-                t = None
-                for c, v in terms:
-                    eq = F.col(c) == F.lit(_coerce_members(src, c, [v])[0])
-                    t = eq if t is None else t & eq
-                pred = t if pred is None else pred | t
-            src = src.filter(pred)
-            continue
-        (col,) = d.cols
-        pred = F.col(col).isin(_coerce_members(src, col, d.members))
-        # an EXCEPT dice: NULL-keyed members are real members — removing
-        # [B] never removes them (isin is NULL on NULL input, and a bare
-        # ~NULL would silently drop the row)
-        src = src.filter(
-            F.col(col).isNull() | ~pred if d.kind == "except" else pred
-        )
-    return src
-
-
 def _collect_subselect_members(
     nodes, cube: CubeDef, out: list, custom_members: dict
 ) -> None:
@@ -2148,20 +2118,17 @@ def _cond_exprs(cond):
         yield cond[3]
 
 
-def _build_cond(cond, cube: CubeDef, calc_members: dict) -> Column:
-    """Compile a FILTER condition tree to a boolean Column."""
-    if cond[0] == "and":
-        return _build_cond(cond[1], cube, calc_members) & _build_cond(
-            cond[2], cube, calc_members
-        )
-    if cond[0] == "or":
-        return _build_cond(cond[1], cube, calc_members) | _build_cond(
-            cond[2], cube, calc_members
+def _build_cond(cond, cube: CubeDef, calc_members: dict) -> str:
+    """Compile a FILTER condition tree to a boolean SQL expression."""
+    if cond[0] in ("and", "or"):
+        return (
+            f"({_build_cond(cond[1], cube, calc_members)} "
+            f"{cond[0].upper()} {_build_cond(cond[2], cube, calc_members)})"
         )
     _tag, op, left, right = cond
-    return _CMP[op](
-        _build_expr(left, cube, calc_members),
-        _build_expr(right, cube, calc_members),
+    return (
+        f"({_build_expr(left, cube, calc_members)} {op} "
+        f"{_build_expr(right, cube, calc_members)})"
     )
 
 
@@ -2214,48 +2181,40 @@ def _measure_leaves(expr, cube: CubeDef, calc_members: dict):
         yield from _measure_leaves(expr[1], cube, calc_members)
 
 
-def _build_expr(expr, cube: CubeDef, calc_members: dict) -> Column:
-    """Compile a calculated-member AST to a post-aggregation Column:
-    base measure refs become their agg output columns, calc refs inline
-    their definitions (solve-order 0: everything is one projection
-    over one aggregate)."""
+def _num(value) -> str:
+    """A number as a SQL literal of the type a Python literal has in
+    Spark: an int stays INT (BIGINT past 32 bits), a float is a DOUBLE
+    (a bare ``2.5`` would be a DECIMAL in Spark SQL)."""
+    return f"{value!r}D" if isinstance(value, float) else str(int(value))
+
+
+def _build_expr(expr, cube: CubeDef, calc_members: dict) -> str:
+    """Compile a calculated-member AST to a post-aggregation SQL
+    expression: base measure refs become their agg output columns, calc
+    refs inline their definitions (solve-order 0: everything is one
+    projection over one aggregate)."""
     kind = expr[0]
     if kind == "num":
-        return F.lit(expr[1])
+        return _num(expr[1])
     if kind == "neg":
-        return -_build_expr(expr[1], cube, calc_members)
+        return f"(- {_build_expr(expr[1], cube, calc_members)})"
     if kind == "ti":
-        return F.col(_ti_alias(expr, cube))
+        return ident(_ti_alias(expr, cube))
     if kind == "ref":
         name = expr[1]
         if cube.has_measure(name):
-            return F.col(cube.measure_alias(name))
+            return ident(cube.measure_alias(name))
         for k, sub in calc_members.items():
             if k.lower() == name.lower():
                 return _build_expr(sub, cube, calc_members)
         raise MdxError(f"unknown measure reference [{name}]")
     op, left, right = expr[1], expr[2], expr[3]
-    lc = _build_expr(left, cube, calc_members)
-    rc = _build_expr(right, cube, calc_members)
-    if op == "+":
-        return lc + rc
-    if op == "-":
-        return lc - rc
-    if op == "*":
-        return lc * rc
-    if op == "/":
-        return lc / rc
-    raise MdxError(f"unsupported operator {op!r}")
-
-
-_CMP = {
-    "<": Column.__lt__,
-    "<=": Column.__le__,
-    ">": Column.__gt__,
-    ">=": Column.__ge__,
-    "=": Column.__eq__,
-    "<>": Column.__ne__,
-}
+    if op not in ("+", "-", "*", "/"):
+        raise MdxError(f"unsupported operator {op!r}")
+    return (
+        f"({_build_expr(left, cube, calc_members)} {op} "
+        f"{_build_expr(right, cube, calc_members)})"
+    )
 
 
 # -- time intelligence --------------------------------------------------------
@@ -2269,7 +2228,7 @@ _CMP = {
 #   rank  RANK([D].[L].CurrentMember, [D].[L].Members, [M]) ()
 # Every distinct (family, level, params) is a SPEC, computed once over the
 # aggregate's cells — cell×cell, never a second fact scan — and attached
-# as one hidden column per measure (execute_select), before the wrappers
+# as one hidden column per measure (compile_select), before the wrappers
 # evaluate. Each family's value moves ALONG some grouping columns (the
 # shifted key, the window's order or rank set) and is read per partition
 # of the others. It reads the CUBE, not the axis selection: a dice on an
@@ -2307,25 +2266,31 @@ def _ti_specs(sel: MdxSelect, cube: CubeDef) -> dict:
     return specs
 
 
-def _period_key(cube: CubeDef, dim, level, chain, prefix="") -> Column:
+def _period_key(cube: CubeDef, dim, level, chain, prefix="") -> str:
     """A level's integer period key: the column itself at the hierarchy
     top, ``top*period + (child-1)`` one level below it (the cycle
     ``CubeDef.period_lengths`` declares), so January shifts or windows
     back into the prior December by plain integer arithmetic."""
     if len(chain) == 1:
-        return F.col(prefix + chain[0])
+        return ident(prefix + chain[0])
     top, sub = chain
-    return F.col(prefix + top) * cube.level_period(dim, level) + (
-        F.col(prefix + sub) - 1
-    )
-
-
-def _window(part_cols: list, *order: Column):
     return (
-        Window.partitionBy(*part_cols).orderBy(*order)
-        if part_cols
-        else Window.orderBy(*order)
+        f"({ident(prefix + top)} * {cube.level_period(dim, level)} + "
+        f"({ident(prefix + sub)} - 1))"
     )
+
+
+def _window(part_cols: list, order: str = "", frame: str = "") -> str:
+    """A window spec: ``PARTITION BY`` the columns, then ``order`` and
+    ``frame`` when given."""
+    parts = []
+    if part_cols:
+        parts.append("PARTITION BY " + ", ".join(ident(c) for c in part_cols))
+    if order:
+        parts.append("ORDER BY " + order)
+    if frame:
+        parts.append(frame)
+    return "(" + " ".join(parts) + ")"
 
 
 def _ytd_order(cube: CubeDef, dim, level, chain, gcols) -> list[str]:
@@ -2349,8 +2314,8 @@ def _ytd_order(cube: CubeDef, dim, level, chain, gcols) -> list[str]:
     return order_cols
 
 
-# Column builders: (cube, dim, level, params, chain, along, part_cols) ->
-# (measure -> value Column, shifted-join condition or None for a window).
+# SQL builders: (cube, dim, level, params, chain, along, part_cols) ->
+# (measure -> value expression, shifted-join condition or None for a window).
 
 
 def _pp_shift(cube, dim, level, params, chain, along, part_cols):
@@ -2358,37 +2323,39 @@ def _pp_shift(cube, dim, level, params, chain, along, part_cols):
     of the aggregate on the shifted period key (a missing prior cell is
     NULL, MDX's empty cell)."""
     (k,) = params
-    shifted = _period_key(cube, dim, level, chain) - F.lit(k)
-    cond = shifted == _period_key(cube, dim, level, chain, _TI_KEY)
-    return (lambda m: F.col(cube.measure_alias(m))), cond
+    shifted = f"({_period_key(cube, dim, level, chain)} - {_num(k)})"
+    cond = f"{shifted} = {_period_key(cube, dim, level, chain, _TI_KEY)}"
+    return (lambda m: ident(cube.measure_alias(m))), cond
 
 
 def _ytd_window(cube, dim, level, params, chain, along, part_cols):
     """Running sum from the anchor member's first period to the cell."""
-    w = _window(part_cols, *[F.col(c).asc() for c in along])
-    return (lambda m: F.sum(cube.measure_alias(m)).over(w)), None
+    w = _window(part_cols, ", ".join(f"{ident(c)} ASC" for c in along))
+    return (lambda m: f"sum({ident(cube.measure_alias(m))}) OVER {w}"), None
 
 
 def _trailing_window(cube, dim, level, params, chain, along, part_cols):
     """SUM/AVG over ``RANGE n-1 PRECEDING .. CURRENT ROW`` of the period
     key: a missing period adds nothing but still takes its slot."""
     n, agg = params
-    key = _period_key(cube, dim, level, chain)
-    w = Window.partitionBy(*part_cols).orderBy(key.asc()).rangeBetween(
-        -(n - 1), 0
+    start = f"{n - 1} PRECEDING" if n > 1 else "CURRENT ROW"
+    w = _window(
+        part_cols,
+        f"{_period_key(cube, dim, level, chain)} ASC",
+        f"RANGE BETWEEN {start} AND CURRENT ROW",
     )
-    fn = F.sum if agg == "sum" else F.avg
-    return (lambda m: fn(cube.measure_alias(m)).over(w)), None
+    return (lambda m: f"{agg}({ident(cube.measure_alias(m))}) OVER {w}"), None
 
 
 def _boundary_window(cube, dim, level, params, chain, along, part_cols):
     """The measure at the first/last PRESENT sibling period under the
     cell's ancestor (members are value-keyed: a year whose data starts
     in February opens at February)."""
-    pick = F.min_by if params[0] == "OPENINGPERIOD" else F.max_by
-    w = Window.partitionBy(*part_cols)
+    pick = "min_by" if params[0] == "OPENINGPERIOD" else "max_by"
+    w = _window(part_cols)
     return (
-        lambda m: pick(F.col(cube.measure_alias(m)), F.col(along[0])).over(w)
+        lambda m: f"{pick}({ident(cube.measure_alias(m))}, "
+        f"{ident(along[0])}) OVER {w}"
     ), None
 
 
@@ -2396,15 +2363,14 @@ def _rank_window(cube, dim, level, params, chain, along, part_cols):
     """``RANK()`` by the measure descending: equal values share a rank
     (competition ranking, as in SQL)."""
     return (
-        lambda m: F.rank().over(
-            _window(part_cols, F.col(cube.measure_alias(m)).desc())
-        )
+        lambda m: "rank() OVER "
+        + _window(part_cols, f"{ident(cube.measure_alias(m))} DESC")
     ), None
 
 
 class _TiFamily(NamedTuple):
     """What differs between the time-intelligence families; the attach
-    loop in :func:`execute_select` does the rest."""
+    loop in :func:`compile_select` does the rest."""
 
     fn: str  # the MDX function, in messages
     reads: str  # "<fn> <reads> BASE measures only"
@@ -2419,7 +2385,7 @@ class _TiFamily(NamedTuple):
     # enumeration like RANK's .Members shrinks with the subcube, where
     # the coordinate shifts read past it as they read past dices
     keep_subcube: bool
-    build: Callable  # the column builder above
+    build: Callable  # the SQL builder above
 
 
 def _chain(cube, dim, level, chain, gcols):
@@ -2520,91 +2486,186 @@ def needed_base_measures(sel: MdxSelect, cube: CubeDef) -> list[str]:
     return needed
 
 
-def execute_select(
+def _once(fn: Callable[[], dict]) -> Callable[[], dict]:
+    """``fn``, called at most once: a source's column types cost an
+    analysis, paid only by a SELECT whose members need coercing."""
+    memo: list = []
+
+    def get() -> dict:
+        if not memo:
+            memo.append(fn())
+        return memo[0]
+
+    return get
+
+
+class _Params:
+    """The named parameters of one statement: every member value is bound
+    to a ``:m<i>`` marker, never pasted into the SQL text."""
+
+    def __init__(self):
+        self.values: dict = {}
+
+    def __call__(self, value) -> str:
+        name = f"m{len(self.values)}"
+        self.values[name] = value
+        return ":" + name
+
+
+def _dice_preds(
+    dices: list[Dice],
+    dtypes: Callable[[], dict],
+    bind: _Params,
+    skip: frozenset = frozenset(),
+    keep_subcube: bool = False,
+) -> list[str]:
+    """The predicates of ``dices`` in order, each member coerced to its
+    column's type and bound as a parameter. A time-intelligence
+    recompute reads the cube past the dices on ``skip`` columns (subcube
+    dices stay when ``keep_subcube``)."""
+    preds = []
+    for d in dices:
+        if skip.intersection(d.cols) and not (keep_subcube and d.subcube):
+            if d.kind == "or":
+                # one leg of an OR cannot be dropped without changing
+                # the other legs' meaning — loud, never a wrong context
+                raise MdxError(
+                    "time intelligence shifts/windows a column that a "
+                    "compound (tuple-set) slicer also filters — the "
+                    "cube-context recompute cannot drop one leg of an "
+                    "OR; dice that column on the rows axis or a plain "
+                    "slicer instead"
+                )
+            continue
+        if d.kind == "or":
+            preds.append("(" + " OR ".join(
+                "(" + " AND ".join(
+                    f"{ident(c)} = "
+                    f"{bind(_coerce_members(dtypes(), c, [v])[0])}"
+                    for c, v in terms
+                ) + ")"
+                for terms in d.members
+            ) + ")")
+            continue
+        (col,) = d.cols
+        vals = _coerce_members(dtypes(), col, d.members)
+        pred = (
+            f"{ident(col)} IN ({', '.join(bind(v) for v in vals)})"
+            if vals else "FALSE"
+        )
+        # an EXCEPT dice: NULL-keyed members are real members — removing
+        # [B] never removes them (IN is NULL on NULL input, and a bare
+        # NOT NULL would silently drop the row)
+        preds.append(
+            f"({ident(col)} IS NULL OR NOT {pred})"
+            if d.kind == "except" else pred
+        )
+    return preds
+
+
+def _sub(sql: str) -> str:
+    """``sql`` as a parenthesized subquery. The statement nests its
+    stages: Spark analyzes nested subqueries faster than the same stages
+    as common table expressions, and a stage read twice (a
+    time-intelligence self-join) plans the same either way."""
+    return f"(\n{sql}\n)"
+
+
+def compile_select(
     sel: MdxSelect,
     cube: CubeDef,
-    source: DataFrame,
-    agg_expr_for: Callable[[str], Column],
-) -> DataFrame:
-    """The execution core shared by :func:`mdx_query` (aggregate the
-    fact star) and the aggregate navigator (re-aggregate a materialized
-    rollup, operators/aggnav.py): filter ``source`` by slicer and
-    rows-axis member dices (BEFORE aggregation), group by the rows-axis
-    grouping sets, aggregate each needed base measure via
-    ``agg_expr_for`` (the only thing that differs between the fact and
-    an aggregate table), then apply wrappers and project the COLUMNS
-    axis."""
+    source: Rel,
+    agg_sql_for: Callable[[str], str],
+) -> tuple[Rel, dict]:
+    """The SQL compile shared by :func:`mdx_query` (aggregate the fact
+    star) and the aggregate navigator (re-aggregate a materialized
+    rollup, operators/aggnav.py): ONE statement that filters ``source``
+    by the SELECT's dices (BEFORE aggregation), groups by the rows-axis
+    grouping sets, aggregates each needed base measure via
+    ``agg_sql_for`` (the only thing that differs between the fact and an
+    aggregate table), attaches time-intelligence values, applies the
+    wrappers and projects the COLUMNS axis. Returns the statement and
+    its parameter bindings."""
+    bind = _Params()
+    dtypes = _once(source.dtypes)
     dices = sel.dices()
     needed = needed_base_measures(sel, cube)
-    aggs = [agg_expr_for(m) for m in needed]
-
-    def aggregate(src: DataFrame) -> DataFrame:
-        if len(sel.grouping_sets) == 1 and sel.grouping_sets[0]:
-            return src.groupBy(*sel.grouping_sets[0]).agg(*aggs)
+    aggs = ", ".join(agg_sql_for(m) for m in needed)
+    single = len(sel.grouping_sets) == 1 and bool(sel.grouping_sets[0])
+    keys = sel.grouping_sets[0] if single else sel.group_cols
+    key_sql = ", ".join(ident(c) for c in keys)
+    if single:
+        group_by = key_sql
+    else:
         # grouping sets even for the degenerate all-only axis ([[]]):
         # the () grouping set is a KEYED group that emits zero rows on
-        # empty input, where groupBy() is a global aggregate that would
-        # fabricate an All cell — the NON-EMPTY-is-a-no-op invariant
-        # (module docstring) holds only on this plan.
-        return src.groupingSets(sel.grouping_sets, *sel.group_cols).agg(
-            *aggs
-        )
+        # empty input, where a global aggregate would fabricate an All
+        # cell — the NON-EMPTY-is-a-no-op invariant (module docstring)
+        # holds only on this plan.
+        group_by = "GROUPING SETS (" + ", ".join(
+            "(" + ", ".join(ident(c) for c in gs) + ")"
+            for gs in sel.grouping_sets
+        ) + ")"
+    src = _sub(source.sql)
 
-    def filtered(
-        src: DataFrame,
-        skip: frozenset = frozenset(),
-        keep_subcube: bool = False,
-    ) -> DataFrame:
-        src = apply_dices(src, dices, skip, keep_subcube)
-        # custom AGGREGATE members: remap the level column AFTER the
-        # dice (which selects the groups' underlying rows plus any bare
-        # members) — CASE col IN (...) THEN 'Name' ELSE col, one
-        # Catalyst projection, no union. String-keyed levels only: a
-        # numeric column cannot carry the synthetic name.
-        for col, groups in sel.custom_groups.items():
-            dtype = dict(src.dtypes).get(col, "")
-            if dtype != "string":
-                raise MdxError(
-                    "custom AGGREGATE members need a string-keyed "
-                    f"level; column {col!r} is {dtype or 'missing'}"
-                )
-            expr = F.col(col)
-            for display, gvals in groups:
-                expr = F.when(
-                    F.col(col).isin(list(gvals)), F.lit(display)
-                ).otherwise(expr)
-            src = src.withColumn(col, expr)
-        return src
+    def aggregate(
+        skip: frozenset = frozenset(), keep_subcube: bool = False
+    ) -> str:
+        preds = _dice_preds(dices, dtypes, bind, skip, keep_subcube)
+        where = f"\nWHERE {' AND '.join(preds)}" if preds else ""
+        rows = src
+        if sel.custom_groups:
+            # custom AGGREGATE members: remap the level column AFTER the
+            # dice (which selects the groups' underlying rows plus any
+            # bare members) — CASE col IN (...) THEN 'Name' ELSE col, one
+            # projection, no union. String-keyed levels only: a numeric
+            # column cannot carry the synthetic name.
+            remap = {}
+            for col, groups in sel.custom_groups.items():
+                dtype = dtypes().get(col, "")
+                if dtype != "string":
+                    raise MdxError(
+                        "custom AGGREGATE members need a string-keyed "
+                        f"level; column {col!r} is {dtype or 'missing'}"
+                    )
+                expr = ident(col)
+                for display, gvals in groups:
+                    members = ", ".join(bind(v) for v in gvals)
+                    expr = (
+                        f"CASE WHEN {ident(col)} IN ({members}) "
+                        f"THEN {bind(display)} ELSE {expr} END"
+                    )
+                remap[col] = f"{expr} AS {ident(col)}"
+            cols = ", ".join(remap.get(c, ident(c)) for c in dtypes())
+            rows = f"(SELECT {cols} FROM {src}{where})"
+            where = ""
+        select = f"{key_sql}, {aggs}" if keys else aggs
+        return f"SELECT {select}\nFROM {rows}{where}\nGROUP BY {group_by}"
 
-    out = aggregate(filtered(source))
-    _excl_cache: dict = {}
+    out = aggregate()
+    cols = list(keys) + [cube.measure_alias(m) for m in needed]
+    recomputed: dict = {}
 
-    def agg_excluding(
-        skip: frozenset, keep_subcube: bool = False
-    ) -> DataFrame:
-        # memoized per (skip-set, subcube flavor): two diced time-intel
-        # specs along the same columns (YoY + 2-year growth, or YTD +
-        # closing month) share ONE re-aggregation instead of scanning the
-        # fact once each
+    def agg_excluding(skip: frozenset, keep_subcube: bool = False) -> str:
+        # one per (skip-set, subcube flavor): two diced time-intel specs
+        # along the same columns (YoY + 2-year growth, or YTD + closing
+        # month) share ONE re-aggregation instead of scanning the fact
+        # once each
         key = (skip, keep_subcube)
-        if key not in _excl_cache:
-            _excl_cache[key] = aggregate(
-                filtered(source, skip, keep_subcube)
-            )
-        return _excl_cache[key]
+        if key not in recomputed:
+            recomputed[key] = aggregate(skip, keep_subcube)
+        return recomputed[key]
 
     # time intelligence (see _TI_FAMILIES): each spec's values attach as
     # columns BEFORE the wrappers evaluate (FILTER/ORDER may reference
-    # them) — families in table order, specs in first-reference order. A
-    # query without such members makes no DataFrame call here.
+    # them) — families in table order, specs in first-reference order.
     specs = _ti_specs(sel, cube)
     for family, fam in _TI_FAMILIES.items():
         if family not in specs:
             continue
-        if len(sel.grouping_sets) != 1 or not sel.grouping_sets[0]:
+        if not single:
             raise MdxError(fam.lattice)
-        gcols = sel.grouping_sets[0]
-        dtypes = dict(out.dtypes) if fam.ragged else {}
+        gcols = keys
         # the dices a recompute drops
         droppable = {
             c
@@ -2623,20 +2684,23 @@ def execute_select(
                         f"{fam.uses.format(*params, dim=dim, level=level)} "
                         f"but its key column {c!r} is not on the rows axis"
                     )
-                if fam.ragged and dtypes.get(c) not in _INT_TYPES:
+                if fam.ragged and dtypes().get(c) not in _INT_TYPES:
                     raise MdxError(
                         f"{fam.fn} needs integer-keyed levels; "
-                        f"{c!r} is {dtypes.get(c)}"
+                        f"{c!r} is {dtypes().get(c)}"
                     )
             along = fam.along(cube, dim, level, chain, gcols)
             value, shift = fam.build(
                 cube, dim, level, params, chain, along,
                 [c for c in gcols if c not in along],
             )
+            values = ", ".join(
+                f"{value(m)} AS {ident(a)}" for a, m in aliases.items()
+            )
             diced = bool(droppable & set(along))
             if shift is None and not diced:
-                for alias, m in aliases.items():
-                    out = out.withColumn(alias, value(m))
+                out = f"SELECT *, {values}\nFROM {_sub(out)}"
+                cols += aliases
                 continue
             # join the values back: from a re-aggregation without the
             # along dices, or (an undiced shift) from the aggregate itself
@@ -2645,21 +2709,25 @@ def execute_select(
                 if diced
                 else out
             )
-            right = base.select(
-                *[F.col(c).alias(_TI_KEY + c) for c in gcols],
-                *[value(m).alias(a) for a, m in aliases.items()],
+            right = ", ".join(
+                f"{ident(c)} AS {ident(_TI_KEY + c)}" for c in gcols
             )
-            cond = shift
-            for c in gcols:
-                if shift is not None and c in along:
-                    continue  # matched by the shifted key
-                term = F.col(c) == F.col(_TI_KEY + c)
-                cond = term if cond is None else cond & term
-            out = out.join(right, cond, "left").drop(
-                *[_TI_KEY + c for c in gcols]
+            conds = [shift] if shift is not None else []
+            conds += [
+                f"{ident(c)} = {ident(_TI_KEY + c)}"
+                for c in gcols
+                # a shifted column is matched by the shifted key
+                if shift is None or c not in along
+            ]
+            cols += aliases
+            out = (
+                f"SELECT {', '.join(ident(c) for c in cols)}\n"
+                f"FROM {_sub(out)}\n"
+                f"LEFT JOIN (SELECT {right}, {values} FROM {_sub(base)})\n"
+                f"ON {' AND '.join(conds)}"
             )
 
-    def resolve(name: str) -> Column:
+    def resolve(name: str) -> str:
         return _build_expr(("ref", name), cube, sel.calc_members)
 
     # wrappers were collected outermost-first; execute innermost-first.
@@ -2669,43 +2737,44 @@ def execute_select(
     # the first n of the ORDERED set (Mondrian Head/Tail preserve the
     # given set order), not the n smallest-keyed members. With no
     # prevailing order the set order is the natural one (keys asc).
-    natural = [(F.col(c), False) for c in sel.group_cols]
+    natural = [(ident(c), False) for c in sel.group_cols]
     prevailing: list | None = None
 
-    def sort_cols(pairs, invert=False):
-        return [
-            e.asc() if d == invert else e.desc() for e, d in pairs
-        ]
+    def order_by(pairs, invert=False) -> str:
+        return "ORDER BY " + ", ".join(
+            f"{e} {'ASC' if d == invert else 'DESC'}" for e, d in pairs
+        )
 
     for w in reversed(sel.wrappers):
         if w[0] == "filter":
-            out = out.filter(
-                _build_cond(w[1], cube, sel.calc_members)
-            )
+            cond = _build_cond(w[1], cube, sel.calc_members)
+            out = f"SELECT * FROM {_sub(out)} WHERE {cond}"
         elif w[0] == "order":
             _tag, expr, desc = w
             key = _build_expr(expr, cube, sel.calc_members)
             prevailing = [(key, desc)] + natural
-            out = out.orderBy(*sort_cols(prevailing))
+            out = f"SELECT * FROM {_sub(out)} {order_by(prevailing)}"
         elif w[0] in ("head", "tail"):
             tag, n = w
             order = prevailing if prevailing is not None else natural
             if tag == "head":
-                out = out.orderBy(*sort_cols(order)).limit(n)
+                out = f"SELECT * FROM {_sub(out)} {order_by(order)} LIMIT {n}"
             else:
                 # last n of the set order = first n of its inverse;
                 # re-sort back so TAIL PRESERVES the set order (a
                 # Mondrian client reads the rows in order)
                 out = (
-                    out.orderBy(*sort_cols(order, invert=True))
-                    .limit(n)
-                    .orderBy(*sort_cols(order))
+                    f"SELECT * FROM (SELECT * FROM {_sub(out)} "
+                    f"{order_by(order, invert=True)} LIMIT {n}) "
+                    f"{order_by(order)}"
                 )
         elif w[0] in ("topcount", "bottomcount"):
             tag, n, measure = w
             key = resolve(measure)
             prevailing = [(key, tag == "topcount")] + natural
-            out = out.orderBy(*sort_cols(prevailing)).limit(n)
+            out = (
+                f"SELECT * FROM {_sub(out)} {order_by(prevailing)} LIMIT {n}"
+            )
         else:
             # the Pareto cut: keep the shortest prefix of the
             # (measure-ordered) set whose running total reaches the
@@ -2716,34 +2785,20 @@ def execute_select(
             tag, threshold, measure = w
             key = resolve(measure)
             desc = tag in ("toppercent", "topsum")
-            order = [(F.col("__cut_key"), desc)] + natural
-            w_all = Window.partitionBy()
-            tmp = (
-                out.withColumn("__cut_key", key)
-                .withColumn(
-                    "__cut_prev",
-                    F.coalesce(
-                        F.sum("__cut_key").over(
-                            Window.orderBy(*sort_cols(order)).rowsBetween(
-                                Window.unboundedPreceding, -1
-                            )
-                        ),
-                        F.lit(0),
-                    ),
-                )
-                .withColumn(
-                    "__cut_rn",
-                    F.row_number().over(
-                        Window.orderBy(*sort_cols(order))
-                    ),
-                )
-                .withColumn("__cut_min", F.min("__cut_key").over(w_all))
-                .withColumn(
-                    "__cut_thresh",
-                    F.lit(threshold / 100.0) * F.sum("__cut_key").over(w_all)
-                    if tag.endswith("percent")
-                    else F.lit(float(threshold)),
-                )
+            order = order_by([("`__cut_key`", desc)] + natural)
+            thresh = (
+                f"{_num(threshold / 100.0)} * sum(`__cut_key`) OVER ()"
+                if tag.endswith("percent")
+                else _num(float(threshold))
+            )
+            keyed = f"SELECT *, {key} AS `__cut_key` FROM {_sub(out)}"
+            cut = (
+                "SELECT *, coalesce(sum(`__cut_key`) OVER ("
+                f"{order} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+                "), 0) AS `__cut_prev`, "
+                f"row_number() OVER ({order}) AS `__cut_rn`, "
+                "min(`__cut_key`) OVER () AS `__cut_min`, "
+                f"{thresh} AS `__cut_thresh`\nFROM {_sub(keyed)}"
             )
             # a negative cell value makes running sums non-monotonic:
             # the "prefix below threshold" rows are no longer a prefix,
@@ -2754,60 +2809,35 @@ def execute_select(
             # cut, where threshold = 0 and the strict prefix test
             # alone would return an empty set instead of the crossing
             # member).
-            keep = F.when(
-                F.col("__cut_min") < 0,
-                F.raise_error(
-                    F.lit(
-                        f"{tag.upper()} over negative cell values — "
-                        "the running-prefix cut is undefined"
-                    )
-                ).cast("boolean"),
-            ).otherwise(
-                (F.col("__cut_prev") < F.col("__cut_thresh"))
-                | (F.col("__cut_rn") == 1)
+            keep = (
+                "CASE WHEN `__cut_min` < 0 THEN CAST(raise_error("
+                f"'{tag.upper()} over negative cell values — the "
+                "running-prefix cut is undefined') AS BOOLEAN) ELSE "
+                "(`__cut_prev` < `__cut_thresh` OR `__cut_rn` = 1) END"
             )
             out = (
-                tmp.filter(keep)
-                .orderBy(*sort_cols(order))
-                .drop(
-                    "__cut_key", "__cut_prev", "__cut_rn",
-                    "__cut_min", "__cut_thresh",
-                )
+                f"SELECT {', '.join(ident(c) for c in cols)} FROM {_sub(cut)} "
+                f"WHERE {keep} {order}"
             )
             prevailing = [(key, desc)] + natural
 
-    final = [F.col(c) for c in sel.group_cols]
+    final = [ident(c) for c in sel.group_cols]
     for name in sel.columns:
         if cube.has_measure(name):
-            final.append(F.col(cube.measure_alias(name)))
+            final.append(ident(cube.measure_alias(name)))
         else:
-            final.append(resolve(name).alias(_calc_alias(name)))
-    return out.select(*final)
+            final.append(f"{resolve(name)} AS {ident(_calc_alias(name))}")
+    if final != [ident(c) for c in cols]:
+        # else the last stage already projects the COLUMNS axis
+        out = f"SELECT {', '.join(final)}\nFROM {_sub(out)}"
+    return Rel(source.spark, out, source.frames), bind.values
 
 
-def mdx_query(cube: CubeDef, mdx: str, *star_args) -> DataFrame:
-    """Run an MDX [WITH ...] SELECT against a cube: build the star,
-    apply slicer and rows-axis member filters (both BEFORE aggregation
-    — they reach the scans through the star's broadcast joins), group
-    by the rows-axis level columns, aggregate every base measure the
-    COLUMNS axis / calculated members / wrappers need, then project
-    calculated members, apply FILTER (a HAVING over group-count-many
-    rows) and TOPCOUNT (ORDER BY measure DESC, keys LIMIT n — a
-    TakeOrderedAndProject, never a fact-sized sort) innermost-first.
-    A rows axis without ``(All)`` members is a plain groupBy; with
-    them, the grouping-set lattice runs as ONE Expand + HashAggregate
-    (All cells carry NULL in their level columns, the Spark rollup
-    convention). Either way: one shuffle, partial aggregation, no
-    driver-side evaluation.
-
-    A cube with registered ``aggregates`` (CubeDef.aggregates) routes
-    through the aggregate navigator FIRST: the smallest rollup whose
-    grain covers the query's grouping and filter columns answers by
-    re-folding its mergeable states, and the fact star is only built
-    when nothing covers — Mondrian's deployment shape, where aggregate
-    tables are schema declarations and every client query benefits
-    without addressing them. At 100 TB this is the difference between
-    a dashboard drill reading kilobytes and re-scanning the fact."""
+def compile_mdx(cube: CubeDef, mdx: str, *star_args) -> tuple[Rel, dict]:
+    """The statement :func:`mdx_query` runs for ``mdx``, with its
+    parameter bindings — what a Mondrian SQL log shows. A cube with
+    registered ``aggregates`` answers from the navigator's pick when one
+    covers the query, else from the fact star."""
     sel = parse_mdx(mdx, cube)
     if cube.aggregates:
         from datawarehousefinal_spark.operators.aggnav import (
@@ -2817,11 +2847,38 @@ def mdx_query(cube: CubeDef, mdx: str, *star_args) -> DataFrame:
 
         chosen = choose_aggregate(cube, sel, cube.aggregates)
         if chosen is not None:
-            return execute_select(
-                sel, cube, chosen.table, lambda m: reagg_expr(cube, m)
+            return compile_select(
+                sel, cube, chosen.rel, lambda m: reagg_expr(cube, m)
             )
-    star = cube.star_builder(*star_args)
-    return execute_select(sel, cube, star, cube.measure_agg)
+    star = Rel.of(cube.star_builder(*star_args))
+    return compile_select(sel, cube, star, cube.measure_agg)
+
+
+def mdx_query(cube: CubeDef, mdx: str, *star_args) -> DataFrame:
+    """Run an MDX [WITH ...] SELECT against a cube as ONE SQL statement
+    (:func:`compile_mdx`): filter the star by slicer and rows-axis member
+    dices (both BEFORE aggregation — they reach the scans through the
+    star's broadcast joins), group by the rows-axis level columns,
+    aggregate every base measure the COLUMNS axis / calculated members /
+    wrappers need, then project calculated members, apply FILTER (a
+    HAVING over group-count-many rows) and TOPCOUNT (ORDER BY measure
+    DESC, keys LIMIT n — a TakeOrderedAndProject, never a fact-sized
+    sort) innermost-first. A rows axis without ``(All)`` members is a
+    plain GROUP BY; with them, the grouping-set lattice runs as ONE
+    Expand + HashAggregate (All cells carry NULL in their level columns,
+    the Spark rollup convention). Either way: one shuffle, partial
+    aggregation, no driver-side evaluation.
+
+    A cube with registered ``aggregates`` (CubeDef.aggregates) routes
+    through the aggregate navigator FIRST: the smallest rollup whose
+    grain covers the query's grouping and filter columns answers by
+    re-folding its mergeable states, and the fact star is only built
+    when nothing covers — Mondrian's deployment shape, where aggregate
+    tables are schema declarations and every client query benefits
+    without addressing them. At 100 TB this is the difference between
+    a dashboard drill reading kilobytes and re-scanning the fact."""
+    rel, params = compile_mdx(cube, mdx, *star_args)
+    return rel.df(params)
 
 
 _DRILLTHROUGH_RE = re.compile(
@@ -2838,13 +2895,12 @@ def mdx_drillthrough(cube: CubeDef, mdx: str, *star_args) -> DataFrame:
     numbers behind it). The inner SELECT parses exactly like a query —
     calculated members and wrappers are refused (they have no row-level
     meaning) — and every restriction that would have applied BEFORE
-    aggregation (the SELECT's dices, through the same
-    :func:`apply_dices`) filters the star; ``.Members`` selections
-    restrict nothing, as in aggregation. Returned columns are the
-    cube's level columns plus each measure's source column, in
-    declaration order — the columns a cell is made of. MAXROWS caps
-    the result via ``limit`` (an arbitrary-but-bounded sample, like
-    Mondrian's).
+    aggregation (the SELECT's dices, compiled like a query's) filters
+    the star; ``.Members`` selections restrict nothing, as in
+    aggregation. Returned columns are the cube's level columns plus each
+    measure's source column, in declaration order — the columns a cell
+    is made of. MAXROWS caps the result via ``LIMIT`` (an
+    arbitrary-but-bounded sample, like Mondrian's).
 
     100 TB: drillthrough is a filtered SCAN, no shuffle at all — the
     dices push through the star's broadcast joins into the fact scan,
@@ -2866,7 +2922,9 @@ def mdx_drillthrough(cube: CubeDef, mdx: str, *star_args) -> DataFrame:
             "and TOPCOUNT/ORDER/FILTER/HEAD/TAIL have no row-level "
             "meaning here"
         )
-    star = apply_dices(cube.star_builder(*star_args), sel.dices())
+    star = Rel.of(cube.star_builder(*star_args))
+    bind = _Params()
+    preds = _dice_preds(sel.dices(), _once(star.dtypes), bind)
     cols: list[str] = []
     for c in cube.levels.values():
         if c not in cols:
@@ -2874,5 +2932,9 @@ def mdx_drillthrough(cube: CubeDef, mdx: str, *star_args) -> DataFrame:
     for _agg, src, _alias in cube.measures.values():
         if src not in cols:
             cols.append(src)
-    out = star.select(*cols)
-    return out.limit(maxrows) if maxrows is not None else out
+    sql = f"SELECT {', '.join(ident(c) for c in cols)} FROM {{rel}}"
+    if preds:
+        sql += f" WHERE {' AND '.join(preds)}"
+    if maxrows is not None:
+        sql += f" LIMIT {maxrows}"
+    return star.derive(sql).df(bind.values)

@@ -12,6 +12,8 @@ from contextlib import contextmanager
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.functions.textnorm import _ACCENTED, _PLAIN
+from datawarehousefinal_spark.operators.relation import Rel
+from datawarehousefinal_spark.sources.testdata import fixture_views
 
 
 def _norm_sql(expr: str) -> str:
@@ -21,6 +23,21 @@ def _norm_sql(expr: str) -> str:
         f"trim(regexp_replace(translate(lower({expr}), "
         f"'{_ACCENTED}', '{_PLAIN}'), '\\s+', ' ', 'g'))"
     )
+
+
+def _movimientos_star(spark, sf_dir: str) -> Rel:
+    """The Movimientos star (orders with their customer and nation,
+    dims broadcast) as SQL over the fixture views: the reference's
+    Fecha, Persona.Nacionalidad and Cliente.Segmento levels plus the
+    measures' columns."""
+    o, c, n = fixture_views(spark, sf_dir, "orders", "customer", "nation")
+    return Rel(spark, f"""SELECT /*+ BROADCAST(c, n) */
+  year(o.o_orderdate) AS anio, month(o.o_orderdate) AS mes,
+  dayofmonth(o.o_orderdate) AS dia, n.n_name AS nacionalidad,
+  c.c_mktsegment AS segmento, o.o_custkey, o.o_totalprice
+FROM {o} o
+LEFT JOIN {c} c ON o.o_custkey = c.c_custkey
+LEFT JOIN {n} n ON c.c_nationkey = n.n_nationkey""")
 
 
 @contextmanager

@@ -9,8 +9,10 @@ from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.operators import olap
+from datawarehousefinal_spark.operators.relation import Rel
 from datawarehousefinal_spark.queries import query
-from datawarehousefinal_spark.sources.testdata import load_table
+from datawarehousefinal_spark.queries._shared import _movimientos_star
+from datawarehousefinal_spark.sources.testdata import fixture_views, load_table
 
 
 @query(
@@ -59,27 +61,16 @@ _NATION_SEGMENT_ORACLE = """
 def cube_measures_by_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2 over a 2-dim slice of the star join (J3 Mondrian slice/dice).
 
-    Counts the fact FK like Mondrian's count(id_persona). Dims broadcast;
-    the fact table shuffles once, on the grouping keys.
+    Counts the fact FK like Mondrian's count(id_persona), as one SQL
+    statement over the Movimientos star. Dims broadcast; the fact table
+    shuffles once, on the grouping keys.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    star = orders.join(
-        F.broadcast(customer), orders.o_custkey == customer.c_custkey, "left"
-    ).join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
-    out = olap.cube_measures(
-        star.select(
-            F.col("n_name").alias("nacionalidad"),
-            F.col("c_mktsegment").alias("segmento"),
-            F.col("o_custkey"),
-            F.col("o_totalprice"),
-        ),
-        group_cols=["nacionalidad", "segmento"],
-        count_col="o_custkey",
-        avg_col="o_totalprice",
-    ).withColumnsRenamed({"promedio_edades": "promedio_medida"})
-    return out
+    return _movimientos_star(spark, sf_dir).derive(
+        "SELECT nacionalidad, segmento,"
+        " count(o_custkey) AS cantidad_movimientos,"
+        " avg(o_totalprice) AS promedio_medida"
+        " FROM {rel} GROUP BY nacionalidad, segmento"
+    ).df()
 
 
 @query(
@@ -378,16 +369,13 @@ def grouping_sets_measures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLs portably."""
     from datawarehousefinal_spark.operators.olap import grouping_sets_measures
 
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.year("o_orderdate").alias("anio"),
-        "o_orderstatus",
-        "o_orderpriority",
-        "o_custkey",
-        "o_totalprice",
-    )
+    (orders,) = fixture_views(spark, sf_dir, "orders")
     return grouping_sets_measures(
-        spark,
-        orders,
+        Rel(
+            spark,
+            "SELECT year(o_orderdate) AS anio, o_orderstatus, "
+            f"o_orderpriority, o_custkey, o_totalprice FROM {orders}",
+        ),
         [["anio", "o_orderstatus"], ["o_orderstatus", "o_orderpriority"], []],
         "o_custkey",
         "o_totalprice",

@@ -7,12 +7,15 @@ from __future__ import annotations
 import dataclasses
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.materialize import local_result
 from datawarehousefinal_spark.queries import query
-from datawarehousefinal_spark.queries._shared import _scratch_path
-from datawarehousefinal_spark.sources.testdata import load_table
+from datawarehousefinal_spark.operators.relation import Rel
+from datawarehousefinal_spark.queries._shared import (
+    _movimientos_star,
+    _scratch_path,
+)
+from datawarehousefinal_spark.sources.testdata import fixture_views
 
 
 _MDX_STATEMENT = """
@@ -36,35 +39,9 @@ def _movimientos_cube(spark: SparkSession, sf_dir: str):
     count(fk) "Cantidad Movimientos" + avg "Promedio Medida")."""
     from datawarehousefinal_spark.operators.mdx import CubeDef
 
-    def star_builder():
-        orders = load_table(spark, sf_dir, "orders")
-        customer = load_table(spark, sf_dir, "customer")
-        nation = load_table(spark, sf_dir, "nation")
-        return (
-            orders.join(
-                F.broadcast(customer),
-                orders["o_custkey"] == customer["c_custkey"],
-                "left",
-            )
-            .join(
-                F.broadcast(nation),
-                customer["c_nationkey"] == nation["n_nationkey"],
-                "left",
-            )
-            .select(
-                F.year("o_orderdate").alias("anio"),
-                F.month("o_orderdate").alias("mes"),
-                F.dayofmonth("o_orderdate").alias("dia"),
-                F.col("n_name").alias("nacionalidad"),
-                F.col("c_mktsegment").alias("segmento"),
-                "o_custkey",
-                "o_totalprice",
-            )
-        )
-
     return CubeDef(
         name="Movimientos",
-        star_builder=star_builder,
+        star_builder=lambda: _movimientos_star(spark, sf_dir),
         levels={
             "Fecha.Anio": "anio",
             "Fecha.Mes": "mes",
@@ -193,45 +170,17 @@ def _envios_cube(spark: SparkSession, sf_dir: str):
     from datawarehousefinal_spark.operators.mdx import CubeDef
 
     def star_builder():
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_suppkey",
-            "l_shipdate", "l_quantity",
+        li, p, s, n = fixture_views(
+            spark, sf_dir, "lineitem", "part", "supplier", "nation"
         )
-        part = load_table(spark, sf_dir, "part").select(
-            "p_partkey", "p_brand"
-        )
-        supp = load_table(spark, sf_dir, "supplier").select(
-            "s_suppkey", "s_nationkey"
-        )
-        nation = load_table(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name"
-        )
-        return (
-            li.join(
-                F.broadcast(part),
-                li["l_partkey"] == part["p_partkey"],
-                "left",
-            )
-            .join(
-                F.broadcast(supp),
-                li["l_suppkey"] == supp["s_suppkey"],
-                "left",
-            )
-            .join(
-                F.broadcast(nation),
-                supp["s_nationkey"] == nation["n_nationkey"],
-                "left",
-            )
-            .select(
-                F.year("l_shipdate").alias("anio"),
-                F.month("l_shipdate").alias("mes"),
-                F.dayofmonth("l_shipdate").alias("dia"),
-                F.col("p_brand").alias("marca"),
-                F.col("n_name").alias("nacion"),
-                "l_orderkey",
-                "l_quantity",
-            )
-        )
+        return Rel(spark, f"""SELECT /*+ BROADCAST(p, s, n) */
+  year(l.l_shipdate) AS anio, month(l.l_shipdate) AS mes,
+  dayofmonth(l.l_shipdate) AS dia, p.p_brand AS marca, n.n_name AS nacion,
+  l.l_orderkey, l.l_quantity
+FROM {li} l
+LEFT JOIN {p} p ON l.l_partkey = p.p_partkey
+LEFT JOIN {s} s ON l.l_suppkey = s.s_suppkey
+LEFT JOIN {n} n ON s.s_nationkey = n.n_nationkey""")
 
     return CubeDef(
         name="Envios",
@@ -606,8 +555,8 @@ def incremental_aggregate_rollup_q(
 
     cube = _movimientos_cube(spark, sf_dir)
     star = cube.star_builder()
-    base = star.filter(F.col("dia") % 2 == 0)
-    delta = star.filter(F.col("dia") % 2 == 1)
+    base = star.derive("SELECT * FROM {rel} WHERE dia % 2 = 0")
+    delta = star.derive("SELECT * FROM {rel} WHERE dia % 2 = 1")
     rollup = materialize_aggregate(
         cube,
         ["Fecha.Mes", "Cliente.Segmento"],
@@ -1463,7 +1412,7 @@ def mdx_toppercent_pareto_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     before it is still below the threshold. The translator compiles
     this to two window functions over the aggregated cells (running
     prefix sum in measure-desc/key-asc order + grand total) and one
-    filter (operators/mdx.py execute_select); the oracle spells the
+    filter (operators/mdx.py compile_select); the oracle spells the
     identical windows. Ties break by the grouping key ascending (the
     same documented determinism TOPCOUNT uses); counts are exact
     BIGINT and 0.6*total is the same IEEE double on both engines —
@@ -1719,7 +1668,7 @@ def mdx_rank_league_table_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mondrian's 3-arg Rank sorts the set descending by the measure;
     equal values share a rank (competition ranking), which is exactly
     SQL ``RANK()`` — the oracle's window. The translator compiles the
-    member to ``F.rank()`` over the aggregated cells (operators/mdx.py
+    member to ``rank()`` over the aggregated cells (operators/mdx.py
     _rank_window), partitioned by any grouping columns outside the
     ranked level's chain; a dice on the ranked level re-ranks over the
     UNDICED aggregation and joins back (a single picked year still

@@ -1,14 +1,19 @@
 """Loaders for the driver-generated TPC-H-ish parquet tables (TESTDATA.md).
 
 One parquet file per table under ``/root/testdata/sf{0.001,0.01,0.1}``.
+:func:`load_table` builds a DataFrame; :func:`fixture_views` names the
+session temp views that SQL statements read the same tables through.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from datawarehousefinal_spark.operators.relation import ident
 
 TABLES = (
     "region",
@@ -32,6 +37,25 @@ _PARQUET_TYPE_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
 _schemas: dict[tuple, StructType] = {}
+# (JVM session, file key) -> the name of the temp view over that file
+_views: dict[tuple, str] = {}
+FIXTURE_VIEW_PREFIX = "__fixture_"
+_view_ids = itertools.count()
+
+
+def _file_key(spark: SparkSession, path: str, confs: tuple | None = None):
+    """The identity of the fixture file at ``path`` under the session's
+    Parquet type confs, or None when the file is missing."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None  # not cached: Spark raises its own PATH_NOT_FOUND
+    if confs is None:
+        conf = spark.conf
+        confs = tuple(conf.get(c) for c in _PARQUET_TYPE_CONFS)
+    return (
+        os.path.realpath(path), st.st_mtime_ns, st.st_size, st.st_ino, confs
+    )
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -44,18 +68,7 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     The key is the file's identity and the confs read at call time, so an
     overwritten file or a changed conf infers again.
     """
-    try:
-        st = os.stat(path)
-    except FileNotFoundError:
-        key = None  # not cached: Spark raises its own PATH_NOT_FOUND below
-    else:
-        key = (
-            os.path.realpath(path),
-            st.st_mtime_ns,
-            st.st_size,
-            st.st_ino,
-            tuple(spark.conf.get(c) for c in _PARQUET_TYPE_CONFS),
-        )
+    key = _file_key(spark, path)
     schema = _schemas.get(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
@@ -65,7 +78,7 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _pin_confs(spark: SparkSession, name: str) -> None:
     # events.parquet's ts column has shipped in two physical layouts across
     # fixture generations: INT64 TIMESTAMP(NANOS) (which Spark only reads
     # with nanosAsLong set, surfacing long nanos) and TIMESTAMP(MICROS,
@@ -82,6 +95,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # fixtures (zone-independent epoch micros). Pin UTC here, not just
         # in our session factory, so both layouts agree on any session.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixture table ``name`` as a fresh DataFrame: every call builds
+    a new relation, so Column-reference self-joins of two loads work."""
+    _pin_confs(spark, name)
     df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
@@ -98,3 +117,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # zone (UTC, session.py) — identical instants, LTZ type.
             df = df.withColumn("ts", F.to_timestamp("ts"))
     return df
+
+
+def fixture_views(spark: SparkSession, sf_dir: str, *names: str) -> list[str]:
+    """Backtick-quoted names of session temp views over the fixture
+    tables ``names``, for SQL statements to read.
+
+    Each file is resolved (read with :func:`load_table`, registered as a
+    view) once per JVM session, and looked up by the same key as the
+    schema cache: an overwritten file or a changed Parquet type conf
+    registers a new view. Only the resolved relation is kept, never rows
+    or a query plan. A new or restarted session is a new JVM session
+    object, so it registers its own views and never reads a view another
+    session holds. Two ``spark.table`` reads of one view share attribute
+    ids, which breaks Column-reference self-joins; SQL self-joins are
+    fine, because table aliases re-instance the relation.
+    """
+    for name in names:
+        _pin_confs(spark, name)
+    conf = spark.conf
+    confs = tuple(conf.get(c) for c in _PARQUET_TYPE_CONFS)
+    session = spark._jsparkSession._target_id
+    out = []
+    for name in names:
+        path = f"{sf_dir}/{name}.parquet"
+        key = _file_key(spark, path, confs)
+        view = _views.get((session, key)) if key is not None else None
+        if view is None:
+            view = f"{FIXTURE_VIEW_PREFIX}{name}_{next(_view_ids)}"
+            load_table(spark, sf_dir, name).createOrReplaceTempView(view)
+            if key is not None:
+                _views[(session, key)] = view
+        out.append(ident(view))
+    return out

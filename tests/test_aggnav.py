@@ -699,7 +699,7 @@ def test_advisor_recommends_covering_grains(spark):
     for i, q in enumerate(_advisor_workload()):
         sel = parse_mdx(q, cube)
         stubs = [
-            AggTable(name=f"s{j}", grain=r.grain, table=None)
+            AggTable(name=f"s{j}", grain=r.grain, rel=None)
             for j, r in enumerate(recs)
             if i in r.covers
         ]

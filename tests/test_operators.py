@@ -230,7 +230,7 @@ def test_grouping_sets_single_expand_plan_and_sets(spark):
         "k1 string, k2 string, k3 string, fk int, m double",
     )
     out = grouping_sets_measures(
-        spark, df, [["k1", "k2"], ["k2", "k3"], []], "fk", "m"
+        df, [["k1", "k2"], ["k2", "k3"], []], "fk", "m"
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Expand") == 1
